@@ -98,16 +98,15 @@ object SynthQueries {
     * derived from the data, not a local-mode constant: largest segment
     * over the session's parallelism, floored at 64 KiB (below which
     * per-task open/seek cost dominates — the same rationale as
-    * [[graft.sources.WarcDataSource.TargetSplitBytes]]).
+    * [[graft.sources.WarcDataSource.TargetSplitBytes]]). Segments are
+    * listed through [[graft.sources.ArchiveFs]] (the Hadoop FileSystem
+    * the WARC reader uses), so any scheme the session can read works,
+    * not only local paths.
     */
-  private def warcCdxTarget(dir: String, s: SparkSession): Long = {
-    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    val maxSeg =
-      try ls.filter { p =>
-        val n = p.toString
-        n.endsWith(".warc") || n.endsWith(".warc.gz")
-      }.mapToLong(p => java.nio.file.Files.size(p)).max.orElse(0L)
-      finally ls.close()
+  private[graft] def warcCdxTarget(dir: String, s: SparkSession): Long = {
+    val maxSeg = graft.sources.ArchiveFs.listWithLen(dir).collect {
+      case (p, len) if p.endsWith(".warc") || p.endsWith(".warc.gz") => len
+    }.maxOption.getOrElse(0L)
     math.max(65536L, maxSeg / s.sparkContext.defaultParallelism)
   }
 

@@ -26,6 +26,18 @@ object SynthCli {
   private val flagNames = Set("-fast")
 
   def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder()
+      .withExtensions(new graft.expr.GraftExtensions)
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try run(spark, args) finally spark.stop()
+  }
+
+  /** Parse `args` and write the output on `spark`, which stays open. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     // flags take no value, so pair key/value with an explicit walk —
     // a fixed sliding(2,2) would mis-pair everything after a flag
     val opts = scala.collection.mutable.Map.empty[String, String]
@@ -47,14 +59,6 @@ object SynthCli {
     val schema = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(schemaPath)),
       java.nio.charset.StandardCharsets.UTF_8)
-
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.expr.GraftExtensions)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val df =
       if (flags.contains("-fast")) Synth.dataFrameAuto(spark, schema, count, seed, threads)
@@ -80,6 +84,5 @@ object SynthCli {
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"[synth-cli] wrote $count rows as $format to $output in $secs%.2f s " +
       f"(${count / math.max(secs, 1e-9)}%.0f rows/s)")
-    spark.stop()
   }
 }

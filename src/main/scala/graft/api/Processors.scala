@@ -152,32 +152,29 @@ object Processors {
     *     backslash each escaped by a backslash.
     *
     * No header row (the reference's printDelimited emits values only).
-    * Scan-side codegen'd expressions, embarrassingly parallel.
+    * One codegen'd [[graft.expr.DelimitedLine]] renders the whole line:
+    * DOUBLE_QUOTE writes string, integral, boolean and floating-point
+    * cells directly, byte-identical to Jackson; every other type keeps
+    * the `to_json(array(c))` text with its brackets stripped. OPTIMISTIC
+    * and BACK_SLASH render `cast(c as string)`. Scan-side and
+    * embarrassingly parallel.
     */
   def toDelimited(df: DataFrame, sep: String, quote: String): DataFrame = {
-    val parts: Seq[Column] = df.schema.fields.toSeq.map { f =>
+    import graft.expr.DelimitedLine
+    import org.apache.spark.sql.graftbridge.PlanBridge
+    val cells: Seq[(Column, DelimitedLine.Encoding)] = df.schema.fields.toSeq.map { f =>
       val c = col(f.name)
       quote match {
-        case "DOUBLE_QUOTE" =>
-          // JSON rendering via to_json over a 1-element array, outer
-          // brackets stripped — strings get spec-exact JSON escaping,
-          // numbers print bare, null prints `null`, matching JsonNode
-          // toString
-          val j = to_json(array(c))
-          j.substr(lit(2), length(j) - lit(2))
-        case "OPTIMISTIC" =>
-          coalesce(c.cast("string"), lit("null"))
-        case "BACK_SLASH" =>
-          coalesce(regexp_replace(c.cast("string"),
-            "([,\\t\\s\\\\])", "\\\\$1"), lit("null"))
+        case "DOUBLE_QUOTE" if DelimitedLine.rendersJson(f.dataType) => (c, DelimitedLine.Json)
+        case "DOUBLE_QUOTE" => (to_json(array(c)), DelimitedLine.JsonArrayItem)
+        case "OPTIMISTIC" => (c.cast("string"), DelimitedLine.Text)
+        case "BACK_SLASH" => (c.cast("string"), DelimitedLine.BackSlash)
         case other => throw new IllegalArgumentException(
           s"unknown quote mode '$other' (DOUBLE_QUOTE|BACK_SLASH|OPTIMISTIC)")
       }
     }
-    val sepd = parts.zipWithIndex.flatMap { case (p, i) =>
-      if (i == 0) Seq(p) else Seq(lit(sep), p)
-    }
-    df.select(concat(sepd: _*).as("line"))
+    val line = DelimitedLine(cells.map(c => PlanBridge.expression(c._1)), sep, cells.map(_._2))
+    df.select(PlanBridge.column(line).as("line"))
   }
 
   /** XML rendering as an expression (no spark-xml in the jar set): one

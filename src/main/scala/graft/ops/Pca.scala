@@ -4,9 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Principal component analysis over an embedding column, built the way
-  * it scales to 100 TB: the ONLY distributed pass is a d×d Gram-matrix
-  * aggregation (map-side combinable sums — shuffle volume is
-  * partitions × d rows regardless of corpus size), the O(d³)
+  * it scales to 100 TB: the fit's distributed passes are aggregations
+  * (the d×d Gram matrix, the column sums) whose map-side combinable sums
+  * shuffle partitions × d rows regardless of corpus size; the Gram pass
+  * first spreads the input over `defaultParallelism` partitions with one
+  * round-robin exchange, which moves each vector once. The O(d³)
   * eigensolve runs driver-side on the d×d result (d = 64 here; bounded
   * by the embedding width, never the corpus), and the projection is a
   * scan-side broadcast dot product.

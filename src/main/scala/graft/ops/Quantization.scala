@@ -360,9 +360,11 @@ object Quantization {
     * q_i = round(x_i · 1e6) (micro-quantized, the q54 convention) and
     * sign(j, i) = 1 − 2·(xxhash64(j, i) & 1). The "matrix" is never
     * materialized — each sign is re-derived from the hash on both use
-    * and replay, so the projection is a pure scan-side codegen'd
-    * expression: no shuffle, no UDF, no broadcast, and bit-exact in any
-    * engine with the same hash (the q74 oracle).
+    * and replay, so the projection is a codegen'd expression: no UDF, no
+    * broadcast, and bit-exact in any engine with the same hash (the q74
+    * oracle). It runs after one round-robin exchange that spreads the
+    * input over `defaultParallelism` partitions; there is no other
+    * shuffle.
     *
     * Why it matters at 100 TB: clustering / dedup / ANN prefilters on
     * the 8-dim projection touch 8× fewer bytes than the 64-dim corpus,

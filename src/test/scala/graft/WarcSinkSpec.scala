@@ -159,4 +159,20 @@ class WarcSinkSpec extends AnyFunSuite {
     }
     assert(e.getMessage != null)
   }
+
+  test("warcCdxTarget lists segments through the Hadoop FileSystem (file: URI directory)") {
+    val dir = java.nio.file.Files.createTempDirectory("warc_cdx_target")
+    def write(name: String, bytes: Int): Unit =
+      java.nio.file.Files.write(dir.resolve(name), new Array[Byte](bytes))
+    write("a.warc.gz", 1000000)
+    write("b.warc", 300000)
+    write("a.warc.gz.cdx", 5000000) // sidecars and other files are not segments
+    val want = 1000000L / spark.sparkContext.defaultParallelism
+    assert(want > 65536L)
+    assert(SynthQueries.warcCdxTarget(dir.toUri.toString, spark) == want)
+    assert(SynthQueries.warcCdxTarget(dir.toString, spark) == want)
+    // no segments: the 64 KiB floor
+    val empty = java.nio.file.Files.createTempDirectory("warc_cdx_empty")
+    assert(SynthQueries.warcCdxTarget(empty.toUri.toString, spark) == 65536L)
+  }
 }
