@@ -70,24 +70,8 @@ object LoadProbe {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Static conf (must be set before the session exists): the janino
-    // codegen cache defaults to 100 compiled classes, and a suite of
-    // 291 distinct plans evicts constantly — even pass-2 "min" reps
-    // recompile stages pass-1 already compiled (measured ~4% on a mixed
-    // subset). Scale-independent (keyed on plan count, not data) and
-    // what any long-lived driver serving many distinct plans would run;
-    // overridable via SPARK_GRAFT_CODEGEN_CACHE.
-    val codegenCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.expr.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.runtime.LocalSession(cpus)
 
     // untimed warmup: the first query otherwise absorbs all JVM/codegen/
     // scheduler startup (~2-3 s attributed to whatever sorts first)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 
 /** Physical-plan audit: for every SparkEntry query, check the properties
@@ -70,12 +69,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.expr.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.runtime.LocalSession.builder("local[4]", 4)
       // AQE off: scan nodes must be collectable for the pruning audit;
       // join-strategy/pushdown decisions the audit grades are made at
       // planning time, before AQE re-optimization

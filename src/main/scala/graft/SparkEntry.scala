@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{PipelineQueries, Queries, QueryDef}
+import graft.runtime.BuildOnce
 import scala.util.chaining._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -402,53 +403,6 @@ object SynthQueries {
       : QueryDef =
     QueryDef(name, (s, d) => annPin(fn(s, d)),
       graft.queries.PinOracles.sql.get(name))
-
-  /** ANN disk indexes, built ONCE per (query, corpus) in this JVM and
-    * reused by later invocations. Build (k-means fits + partitioned
-    * index write) and serve (probe the index) are different operations
-    * with different 100 TB cost models — an index is built once and
-    * served millions of times — so a bench rep that re-fits and
-    * rewrites the index per invocation times the wrong thing (r6 graded
-    * g67/g86/g91/g107 "weak" for exactly this). The build time is
-    * printed once to stderr so a bench run still surfaces it.
-    */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Drop all memoized index directories so the next invocation
-    * REBUILDS them. ClusterParityCheck calls this between its two
-    * masters: without the reset, the local-cluster pass would serve the
-    * index the local[32] pass built, and a topology-dependent bug in
-    * the index WRITE path could never surface.
-    */
-  private[graft] def clearIndexCache(): Unit = indexCache.clear()
-
-  /** Same build-once contract for DRIVER-SIDE fits (k-means centroids,
-    * PQ codebooks) used by the in-memory ANN queries: the model is fit
-    * once per (query, corpus) in this JVM and reused, so bench reps
-    * time encoding+serving, not repeated training. Build time printed
-    * once to stderr, mirroring [[cachedIndexDir]].
-    */
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private def cachedFit(key: String)(fit: => AnyRef): AnyRef =
-    fitCache.computeIfAbsent(key, { _ =>
-      val t0 = System.nanoTime()
-      val r = fit
-      System.err.println(
-        f"[graft] $key fit: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    })
-  private def cachedIndexDir(queryName: String, sfDir: String)(
-      build: String => Unit): String =
-    indexCache.computeIfAbsent(s"$queryName|$sfDir", { _ =>
-      val dir = java.nio.file.Files.createTempDirectory(queryName).toString
-      val t0 = System.nanoTime()
-      build(dir)
-      System.err.println(
-        f"[graft] $queryName index build: ${(System.nanoTime() - t0) / 1e9}%.2f s -> $dir")
-      dir
-    })
 
   def defs: Seq[QueryDef] = Seq(
     // pinned to the interpreter path as the baseline for g53 (the canned
@@ -1277,9 +1231,9 @@ object SynthQueries {
     // the serving triples instead of recording no_oracle rows.
     annPinDef("g49_ann_ivf")((s, d) => {
       val vecs = s.read.parquet(s"$d/embeddings.parquet")
-      val centroids = cachedFit(s"g49|$d") {
+      val centroids = BuildOnce("g49", d) {
         graft.ops.Similarity.fitCentroids(vecs, "embedding", 16)
-      }.asInstanceOf[Array[Array[Double]]]
+      }
       graft.ops.Similarity.ivfTopK(vecs,
         vecs.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", 10, centroids,
         nProbe = 4)
@@ -1291,7 +1245,7 @@ object SynthQueries {
     // PartitionFilters plan shape are pinned in OpsSpec.
     annPinDef("g67_ann_ivf_disk")((s, d) => {
       val vecs = s.read.parquet(s"$d/embeddings.parquet")
-      val dir = cachedIndexDir("g67_ivf", d) { dir =>
+      val dir = BuildOnce.dir("g67_ivf", d) { dir =>
         val centroids = graft.ops.Similarity.fitCentroids(vecs, "embedding", 16)
         graft.ops.Similarity.writeIvfIndex(vecs, "vec_id", "embedding", dir, centroids)
       }
@@ -1306,7 +1260,7 @@ object SynthQueries {
     // 100 TB
     annPinDef("g86_ann_ivf_quant")((s, d) => {
       val vecs = s.read.parquet(s"$d/embeddings.parquet")
-      val dir = cachedIndexDir("g86_ivfq", d) { dir =>
+      val dir = BuildOnce.dir("g86_ivfq", d) { dir =>
         val centroids = graft.ops.Similarity.fitCentroids(vecs, "embedding", 16)
         graft.ops.Quantization.writeQuantizedIvfIndex(
           vecs, "vec_id", "embedding", dir, centroids)
@@ -1347,9 +1301,9 @@ object SynthQueries {
     // force, scored by m table lookups per candidate
     annPinDef("g89_ann_pq")((s, d) => {
       val vecs = s.read.parquet(s"$d/embeddings.parquet")
-      val cbs = cachedFit(s"g89|$d") {
+      val cbs = BuildOnce("g89", d) {
         graft.ops.Pq.fitCodebooks(vecs, "embedding", m = 8, k = 64)
-      }.asInstanceOf[Array[Array[Array[Double]]]]
+      }
       graft.ops.Pq.adcTopK(
         graft.ops.Pq.encode(vecs, "vec_id", "embedding", cbs),
         vecs.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", cbs, 10)
@@ -1362,7 +1316,7 @@ object SynthQueries {
     // plan by ScaleOpsSpec.
     annPinDef("g91_ann_ivfpq")((s, d) => {
       val vecs = s.read.parquet(s"$d/embeddings.parquet")
-      val dir = cachedIndexDir("g91_ivfpq", d) { dir =>
+      val dir = BuildOnce.dir("g91_ivfpq", d) { dir =>
         val centroids = graft.ops.Similarity.fitCentroids(vecs, "embedding", 16)
         val cbs = graft.ops.Pq.fitCodebooks(vecs, "embedding", m = 8, k = 64)
         graft.ops.Pq.writePqIvfIndex(vecs, "vec_id", "embedding", dir, centroids, cbs)
@@ -1377,7 +1331,7 @@ object SynthQueries {
     // encoding pinned in ScaleOpsSpec.
     annPinDef("g107_ann_residual_pq")((s, d) => {
       val vecs = s.read.parquet(s"$d/embeddings.parquet")
-      val dir = cachedIndexDir("g107_rpq", d) { dir =>
+      val dir = BuildOnce.dir("g107_rpq", d) { dir =>
         val centroids = graft.ops.Similarity.fitCentroids(vecs, "embedding", 16)
         val cbs = graft.ops.Pq.fitResidualCodebooks(vecs, "embedding", centroids,
           m = 8, k = 64)
@@ -1399,7 +1353,7 @@ object SynthQueries {
     QueryDef("g110_ann_hash_ivf",
       (s, d) => {
         val vecs = s.read.parquet(s"$d/embeddings.parquet")
-        val dir = cachedIndexDir("g110_hivf", d) { dir =>
+        val dir = BuildOnce.dir("g110_hivf", d) { dir =>
           graft.ops.Quantization.writeHashIvfIndex(vecs, "vec_id", "embedding", dir, 8)
         }
         graft.ops.Quantization.hashIvfTopKFromIndex(dir,
@@ -1423,7 +1377,7 @@ object SynthQueries {
     QueryDef("g114_stream_ann_serve",
       (s, d) => streamScoped(s) {
         val vecs = s.read.parquet(s"$d/embeddings.parquet")
-        val dir = cachedIndexDir("g110_hivf", d) { dir =>
+        val dir = BuildOnce.dir("g110_hivf", d) { dir =>
           graft.ops.Quantization.writeHashIvfIndex(vecs, "vec_id", "embedding", dir, 8)
         }
         val q = vecs.filter(col("vec_id") % 50 === 0)
@@ -1465,7 +1419,7 @@ object SynthQueries {
     QueryDef("g115_ann_index_append",
       (s, d) => {
         val vecs = s.read.parquet(s"$d/embeddings.parquet")
-        val dir = cachedIndexDir("g115_hivf_app", d) { dir =>
+        val dir = BuildOnce.dir("g115_hivf_app", d) { dir =>
           graft.ops.Quantization.writeHashIvfIndex(
             vecs.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", dir, 8)
           graft.ops.Quantization.appendToHashIvfIndex(
@@ -1488,13 +1442,13 @@ object SynthQueries {
     QueryDef("g127_ann_index_delete",
       (s, d) => {
         val vecs = s.read.parquet(s"$d/embeddings.parquet")
-        val dir = cachedIndexDir("g127_hivf_del", d) { dir =>
+        val dir = BuildOnce.dir("g127_hivf_del", d) { dir =>
           graft.ops.Quantization.writeHashIvfIndex(
             vecs, "vec_id", "embedding", dir, 8)
           graft.ops.Quantization.deleteFromHashIvfIndex(dir,
             vecs.filter(col("vec_id") % 5 === 1).select("vec_id"))
         }
-        val dir2 = cachedIndexDir("g127_hivf_cmp", d) { d2 =>
+        val dir2 = BuildOnce.dir("g127_hivf_cmp", d) { d2 =>
           graft.ops.Quantization.compactHashIvfIndex(s, dir, d2)
         }
         val queries = vecs.filter(col("vec_id") % 50 === 0)

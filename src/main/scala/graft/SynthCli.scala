@@ -26,13 +26,7 @@ object SynthCli {
   private val flagNames = Set("-fast")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.expr.GraftExtensions)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runtime.LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     try run(spark, args) finally spark.stop()
   }
 

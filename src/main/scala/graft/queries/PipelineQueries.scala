@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.runtime.BuildOnce
 
 /** Training-data pipeline operators over the `documents` and `embeddings`
   * tables: deduplication, text analysis, similarity search. Written
@@ -4769,7 +4770,6 @@ object PipelineQueries {
     */
   private object WarcFixture {
     import graft.sources.WarcIo
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val Epoch: Long = java.time.Instant.parse("2025-01-01T00:00:00Z").getEpochSecond
 
     def uuidOf(seed: String): String = {
@@ -4788,8 +4788,7 @@ object PipelineQueries {
     def body404(id: Long): String = s"not found: $id"
 
     def dir(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("warc_fixture").toString
+      BuildOnce.dir("warc_fixture", sfDir) { out =>
         val rows = docs(s, sfDir)
           .select(col("doc_id"), col("text"), messyUrlCol.as("url"))
           .repartition(8, pmod(col("doc_id"), lit(8L)))
@@ -4838,9 +4837,7 @@ object PipelineQueries {
           WarcIo.writeRecord(fos, "warcinfo", uuidOf(s"w:$p"),
             "2025-01-01T00:00:00Z", null, "application/warc-fields", block)
         } finally fos.close()
-        System.err.println(s"[graft] warc fixture for $sfDir -> $out")
-        out
-      })
+      }
   }
 
   /** The oracle-side dashed-uuid record id (md5 of the same seed). */
@@ -5234,14 +5231,12 @@ object PipelineQueries {
     * constant (q150 already oracles per-record dates).
     */
   private[graft] object WarcSinkFixture {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val UriPrefix = "https://w"
     def uriCol: org.apache.spark.sql.Column =
       concat(lit(UriPrefix), pmod(col("doc_id"), lit(5L)).cast("string"),
         lit(".example.com/d/"), col("doc_id").cast("string"))
     def dir(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("warc_sink").toString
+      BuildOnce.dir("warc_sink", sfDir) { out =>
         val isMeta = col("doc_id") % 9 === 0
         val metaJson = concat(lit("{\"k\":"), col("doc_id").cast("string"), lit("}"))
         docs(s, sfDir).select(
@@ -5259,9 +5254,7 @@ object PipelineQueries {
             when(isMeta, metaJson).otherwise(col("text")).cast("binary").as("payload"))
           .repartition(4, pmod(col("doc_id"), lit(4L)))
           .write.format("warc").mode("append").option("path", out).save()
-        System.err.println(s"[graft] warc sink fixture for $sfDir -> $out")
-        out
-      })
+      }
     /** The oracle-side reconstruction of every written field. */
     def oracleSelect(whereSql: String): String =
       s"""SELECT 'urn:graft:' || CAST(doc_id AS VARCHAR) AS record_id,
@@ -5618,10 +5611,8 @@ object PipelineQueries {
     * rig g130.
     */
   private[graft] object LinkWarcFixture {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def dir(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("link_warc").toString
+      BuildOnce.dir("link_warc", sfDir) { out =>
         val did = col("doc_id")
         docs(s, sfDir).select(
             concat(lit("urn:link:"), did.cast("string")).as("record_id"),
@@ -5634,9 +5625,7 @@ object PipelineQueries {
             linkFixtureHtml(did).cast("binary").as("payload"))
           .repartition(4, pmod(did, lit(4L)))
           .write.format("warc").mode("append").option("path", out).save()
-        System.err.println(s"[graft] link warc fixture for $sfDir -> $out")
-        out
-      })
+      }
   }
 
   /** The 6 per-doc candidate URLs after resolve+canonicalize, as SQL
@@ -6165,10 +6154,8 @@ object PipelineQueries {
     * id ≡ 15 mod 18 has both, and the pointer must win).
     */
   private[graft] object RevisitFixture {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def dir(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("warc_revisit").toString
+      BuildOnce.dir("warc_revisit", sfDir) { out =>
         val id = col("doc_id")
         val c = pmod(id, lit(40L))
         val isRev = id % 3 === 0 && id > 0
@@ -6199,9 +6186,7 @@ object PipelineQueries {
               .otherwise(lit(null).cast("string")).as("warc_profile"))
           .repartition(4, pmod(id, lit(4L)))
           .write.format("warc").mode("append").option("path", out).save()
-        System.err.println(s"[graft] warc revisit fixture for $sfDir -> $out")
-        out
-      })
+      }
   }
 
   /** Revisit resolution — crawl-dedup replay over a sink round-trip:
@@ -6266,10 +6251,8 @@ object PipelineQueries {
     */
   private[graft] object RevisitStreamFixture {
     import graft.sources.WarcIo
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def dir(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("warc_rvstream").toString
+      BuildOnce.dir("warc_rvstream", sfDir) { out =>
         docs(s, sfDir).select(col("doc_id"))
           .repartition(2, pmod(col("doc_id"), lit(2L)))
           .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
@@ -6304,9 +6287,7 @@ object PipelineQueries {
               ()
             }
           }
-        System.err.println(s"[graft] warc revisit stream fixture for $sfDir -> $out")
-        out
-      })
+      }
   }
 
   /** HTTP wire framings the q180 fixture stores verbatim, built
@@ -6319,11 +6300,9 @@ object PipelineQueries {
     */
   private[graft] object HttpDecodeFixture {
     import graft.sources.WarcIo
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def textOf(id: Long): String = s"payload-$id-" + "x" * (id % 50).toInt
     def dir(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val out = java.nio.file.Files.createTempDirectory("warc_http").toString
+      BuildOnce.dir("warc_http", sfDir) { out =>
         val rows = docs(s, sfDir).select(col("doc_id"))
           .repartition(4, pmod(col("doc_id"), lit(4L)))
         rows.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
@@ -6387,9 +6366,7 @@ object PipelineQueries {
             ()
           }
         }
-        System.err.println(s"[graft] warc http-decode fixture for $sfDir -> $out")
-        out
-      })
+      }
   }
 
   /** HTTP entity decoding at the WARC read seam: chunked framing

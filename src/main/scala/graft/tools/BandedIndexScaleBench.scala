@@ -31,11 +31,7 @@ object BandedIndexScaleBench {
       .split(",").map(_.trim.toLong).toSeq
     val windowOrd = args.lift(1).map(_.toLong).getOrElse(65536L)
     val maxHamming = 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.runtime.LocalSession.builder("local[32]", 8)
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()

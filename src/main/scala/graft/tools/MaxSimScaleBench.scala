@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-curve experiment for late-interaction reranking (q143's
@@ -19,14 +18,8 @@ object MaxSimScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scales = args.lift(1).getOrElse("1,10").split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.runtime.LocalSession(cpus)
 
     val nDocs0 = spark.read.parquet(s"$sfDir/documents.parquet").count()
 
@@ -50,7 +43,7 @@ object MaxSimScaleBench {
         .select(col("id").as("doc_id"),
           explode(sequence(lit(0L), lit(7L))).as("t"))
         .select(col("doc_id"), vec(col("doc_id") * 8 + col("t")).as("dv"))
-        .repartition(cpus.toInt).persist()
+        .repartition(cpus).persist()
       val corpusToks = dToks.count() // materialize OUTSIDE the timing
       val candToks = dToks.join(
         cands.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")

@@ -65,12 +65,7 @@ object ParityHarness {
       "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
       "sun.security.action", "sun.util.calendar")
       .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED").mkString(" ")
-    val b = SparkSession.builder()
-      .withExtensions(new graft.expr.GraftExtensions)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b = graft.runtime.LocalSession.builder(master, 32)
     val b2 =
       if (master.startsWith("local-cluster")) b
         // forked executor JVMs need the graft classes (task closures and
@@ -90,14 +85,14 @@ object ParityHarness {
   /** Run every named query under a fresh session and digest it.
     * `onSession` lets a caller attach listeners (the fault tool's
     * chaos injector) before the first query runs. Each pass rebuilds
-    * its own ANN indexes — the index WRITE path must be exercised
-    * under the perturbed topology/conf/fault regime too, not just the
-    * serve.
+    * every [[graft.runtime.BuildOnce]] value (ANN indexes, fits, WARC
+    * fixtures) — the WRITE paths must be exercised under the perturbed
+    * topology/conf/fault regime too, not just the serve.
     */
   def runPass(master: String, confs: Map[String, String], sfDir: String,
       names: Seq[String], onSession: SparkContext => Unit = _ => ())
       : Map[String, Either[String, Digest]] = {
-    graft.SynthQueries.clearIndexCache()
+    graft.runtime.BuildOnce.clear()
     val spark = session(master, confs)
     onSession(spark.sparkContext)
     try {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -25,18 +24,8 @@ object QueryProfile {
     val tag = if (args.length > 2) args(2) else "profile"
     val planDir = if (args.length > 3) Some(args(3)) else None
     val reps = sys.env.getOrElse("QP_REPS", "3").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.expr.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench's session (see Bench.scala on the codegen cache)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.runtime.LocalSession(cpus)
 
     val all = graft.SparkEntry.queries.toSeq.sortBy(_._1)
     val queries = sel match {

@@ -10,6 +10,9 @@ import org.apache.spark.sql.functions._
   */
 object XxhStringRef {
   def main(args: Array[String]): Unit = {
+    // Plain Spark on purpose, not graft.runtime.LocalSession: this is the
+    // reference DuckXxHash replays, so no graft extension or setting may
+    // touch the hashes it prints.
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._

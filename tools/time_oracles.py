@@ -3,6 +3,11 @@
 driver's gate conditions (single connection over the sf views).
 
 Usage: time_oracles.py ORACLE_JSON SFDIR [threads]
+
+ORACLE_JSON is the oracle_sql.json that `graft.Verify SFDIR OUTDIR` writes
+into OUTDIR. Verify writes it before any query runs, so the file is
+complete as soon as it appears; a name list as Verify's third argument
+limits it to those queries.
 """
 import json
 import os
