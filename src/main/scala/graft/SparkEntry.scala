@@ -11,16 +11,6 @@ object SparkEntry {
   private def allDefs: Seq[QueryDef] =
     Queries.relational ++ PipelineQueries.pipeline ++ SynthQueries.defs
 
-  /** First .parquet part file in `dir`, closing the directory stream
-    * (Files.list pins an fd until closed; the streaming replays call
-    * this once per micro-batch source file, per bench rep).
-    */
-  private[graft] def firstParquet(dir: java.nio.file.Path): java.nio.file.Path = {
-    val ls = java.nio.file.Files.list(dir)
-    try ls.filter(p => p.toString.endsWith(".parquet")).findFirst.get
-    finally ls.close()
-  }
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Queries.q02_join_regions.fn(spark, "/root/testdata/sf0.001")
@@ -45,35 +35,45 @@ object SparkEntry {
 object SynthQueries {
   import graft.api.{CannedSources, Processors}
   import graft.synth.Synth
+  import graft.queries.EventTs
+  import graft.streaming.StreamFiles
   import org.apache.spark.sql.functions.{base64, col, to_json}
-  import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
+  import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
+  import org.apache.spark.sql.types.{ArrayType, BinaryType, LongType, MapType,
+    StructType}
 
   private def q(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, None)
 
-  /** The driver's checker canonicalizes results through pandas
-    * `sort_values`, which crashes on struct/array/map cells (unhashable
-    * ndarray/dict). Project every nested column through `to_json` (and
-    * binary through base64) so each gNN row reports a real `spark_rows`
-    * instead of a checker error. Values are unchanged — JSON is just the
-    * stable scalar encoding of the nested payload.
+  /** Scope for one bounded streaming replay (`rig` is its query tag,
+    * e.g. "g55"): the body gets a [[StreamScope]] for its staging dirs
+    * and memory sinks.
+    *
+    * Shuffle partitions are pinned to 8 inside the scope: stateful
+    * operators clone one state-store instance per shuffle partition and
+    * commit each of them every micro-batch, so the session's
+    * one-partition-per-core default (32 on the bench host) pays that
+    * many store commits per batch for kilobyte-scale state — measured
+    * at 32 partitions as 3x the whole query time on the interval joins.
+    * 8 is right for a single-JVM replay; on a real cluster the stateful
+    * shuffle should track executor count instead (set before the query
+    * first starts — state partitioning is fixed at the first run).
+    *
+    * On exit, success or failure, the scope restores the previous
+    * partition count so batch queries keep the session default, drops
+    * every `_sink_` memory-sink view, and deletes every dir the body
+    * staged through `dir`. A rig whose result reads a staged dir (a
+    * parquet sink, a `foreachBatch` output) must therefore return it
+    * [[materialized]]; memory-sink tables already hold their rows in the
+    * driver.
     */
-  /** Scope for the bounded streaming replays: stateful operators clone
-    * one state-store instance per shuffle partition and checkpoint each
-    * of them every micro-batch, so the default 32 partitions pay 32
-    * store commits per batch for kilobyte-scale state — measured 3x the
-    * whole query time on the interval joins. 8 is right for a
-    * single-JVM replay; on a real cluster the stateful shuffle should
-    * track executor count instead (set before the query first starts —
-    * state partitioning is fixed at the first run). The previous value
-    * is restored after the streaming part completes so batch queries
-    * keep the session default.
-    */
-  private def streamScoped(s: SparkSession)(f: => DataFrame): DataFrame = {
+  private def streamScoped(s: SparkSession, rig: String)(
+      f: StreamScope => DataFrame): DataFrame = {
     val key = "spark.sql.shuffle.partitions"
     val old = s.conf.get(key)
+    val scope = new StreamScope(s, rig)
     s.conf.set(key, "8")
-    try f finally {
+    try f(scope) finally {
       s.conf.set(key, old)
       // Memory-sink hygiene: every streaming replay registers a fresh
       // uuid-named memory sink holding its full result in driver memory,
@@ -86,7 +86,105 @@ object SynthQueries {
       s.catalog.listTables().collect().foreach { t =>
         if (t.name.contains("_sink_")) s.catalog.dropTempView(t.name)
       }
+      scope.staged.foreach(StreamFiles.deleteTree)
     }
+  }
+
+  /** What a [[streamScoped]] body stages and drains through. */
+  private final class StreamScope(s: SparkSession, rig: String) {
+    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+    /** A fresh temp dir `<rig>_<name>...`, deleted when the scope exits. */
+    def dir(name: String): java.nio.file.Path = {
+      val p = java.nio.file.Files.createTempDirectory(s"${rig}_$name")
+      staged += p
+      p
+    }
+
+    /** A fresh memory-sink name; the `_sink_` infix is what the scope
+      * drops on exit.
+      */
+    def sinkName: String =
+      s"${rig}_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
+
+    /** Runs `df` to completion into a fresh memory sink under
+      * Trigger.AvailableNow and returns the sink table. `minBatches`
+      * pins how many micro-batches read input (the multi-batch rigs'
+      * cross-batch proofs); `check` sees the finished query's progress.
+      */
+    def drain(df: DataFrame, mode: String, minBatches: Int = 0,
+        check: Array[StreamingQueryProgress] => Unit = _ => ()): DataFrame = {
+      val name = sinkName
+      val q = df.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      require(batches >= minBatches,
+        s"expected >= $minBatches micro-batches with input, got $batches")
+      check(q.recentProgress)
+      s.table(name)
+    }
+
+    /** events.parquet as a bounded file stream: the raw table (read
+      * through [[eventsRaw]]) and the staged stream with `ts` normalized
+      * to BIGINT nanos. The file-stream source only accepts directories
+      * (it anchors its listing at a basePath directory), so the single
+      * file is exposed through a symlink in a staged dir. With
+      * `sentinelS`, a [[sentinelRow]] that many seconds past the last
+      * event is staged beside it as `z_sentinel.parquet`; its watermark
+      * advance lets the trailing no-data micro-batch flush every real
+      * window, session or timer.
+      */
+    def events(d: String, sentinelS: Option[Long] = None)
+        : (DataFrame, DataFrame) = {
+      import org.apache.spark.sql.functions.max
+      val evRaw = eventsRaw(s, d)
+      val streamDir = dir("events")
+      java.nio.file.Files.createSymbolicLink(
+        streamDir.resolve("a_events.parquet"),
+        java.nio.file.Paths.get(s"$d/events.parquet"))
+      sentinelS.foreach { secs =>
+        val maxNs = EventTs.toNanos(evRaw).agg(max("ts")).collect()(0).getLong(0)
+        StreamFiles.writeOne(sentinelRow(evRaw, maxNs + secs * 1000000000L),
+          streamDir, "z_sentinel")
+      }
+      (evRaw, EventTs.toNanos(
+        s.readStream.schema(evRaw.schema).parquet(streamDir.toString)))
+    }
+  }
+
+  /** `df`'s rows pinned as a driver-side frame: a result that outlives
+    * the staged dirs it was read from, or a small dimension that must
+    * not be recomputed per micro-batch.
+    */
+  private def materialized(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** The raw events table. `ts` ships as TIMESTAMP(NANOS) or
+    * timestamp[us] depending on the testdata generation; nanosAsLong
+    * makes the NANOS variant readable (as BIGINT) — see
+    * [[graft.queries.EventTs]].
+    */
+  private def eventsRaw(s: SparkSession, d: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s.read.parquet(s"$d/events.parquet")
+  }
+
+  /** One far-future sentinel event at `sentinelNs` on an out-of-band
+    * key (-1), with `ts` in the RAW file type (long nanos or timestamp
+    * micros), because the stream reads with the raw schema.
+    */
+  private def sentinelRow(evRaw: DataFrame, sentinelNs: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{lit, timestamp_micros}
+    val sentinelTs = evRaw.schema("ts").dataType match {
+      case LongType => lit(sentinelNs)
+      case t => timestamp_micros(lit(sentinelNs / 1000L)).cast(t)
+    }
+    evRaw.limit(1).select(
+      lit(-1L).as("event_id"), sentinelTs.as("ts"), lit(-1L).as("user_id"),
+      lit("sentinel").as("event_type"), lit(0.0).as("value"),
+      lit("").as("props"))
   }
 
   /** CDX split target for a rig-written WARC directory: every segment
@@ -146,50 +244,25 @@ object SynthQueries {
     */
   private def eventThirdFiles(s: SparkSession, d: String)
       : Seq[(String, DataFrame)] = {
-    import org.apache.spark.sql.functions.{lit, max, min, timestamp_micros}
-    val evRaw = s.read.parquet(s"$d/events.parquet")
-    val ev = graft.queries.EventTs.toNanos(evRaw)
+    import org.apache.spark.sql.functions.{lit, max, min, unix_micros}
+    val evRaw = eventsRaw(s, d)
+    val ev = EventTs.toNanos(evRaw)
     val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
       .toSeq.map(_.asInstanceOf[Long]).toArray
     // split the RAW rows by their normalized-ns timestamp (the raw ts
     // type varies by testdata generation — see EventTs)
     val tsNs = evRaw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => col("ts")
-      case _ => org.apache.spark.sql.functions.unix_micros(
-        col("ts").cast("timestamp")) * lit(1000L)
+      case LongType => col("ts")
+      case _ => unix_micros(col("ts").cast("timestamp")) * lit(1000L)
     }
     val t1 = minNs + (maxNs - minNs) / 3
     val t2 = minNs + 2L * (maxNs - minNs) / 3
-    val sentinelNs = maxNs + 36000L * 1000000000L
-    val sentinelTs = evRaw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => lit(sentinelNs)
-      case t => timestamp_micros(lit(sentinelNs / 1000L)).cast(t)
-    }
     Seq(
       "a_third0" -> evRaw.where(tsNs <= t1),
       "b_third1" -> evRaw.where(tsNs > t1 && tsNs <= t2),
       "c_third2" -> evRaw.where(tsNs > t2),
-      "d_sentinel" -> evRaw.limit(1).select(
-        lit(-1L).as("event_id"), sentinelTs.as("ts"), lit(-1L).as("user_id"),
-        lit("sentinel").as("event_type"), lit(0.0).as("value"),
-        lit("").as("props")))
+      "d_sentinel" -> sentinelRow(evRaw, maxNs + 36000L * 1000000000L))
   }
-
-  /** Materialize one split file into `streamDir` as a single parquet
-    * part named `sub.parquet` (one file = one maxFilesPerTrigger
-    * batch). Delegates to the shared [[graft.streaming.StreamFiles]]
-    * (also used by the specs and scale benches — one copy of the
-    * staging/cleanup dance).
-    */
-  private def writeStreamFile(df: DataFrame, streamDir: java.nio.file.Path,
-      sub: String): Unit =
-    graft.streaming.StreamFiles.writeOne(df, streamDir, sub)
-
-  /** Recursive delete, best-effort — see
-    * [[graft.streaming.StreamFiles.deleteTree]].
-    */
-  private def deleteTree(root: java.nio.file.Path): Unit =
-    graft.streaming.StreamFiles.deleteTree(root)
 
   /** The per-user event-type count stream over a split directory: file
     * source (one file per trigger) -> watermarked event time ->
@@ -218,6 +291,13 @@ object SynthQueries {
       .toDF("user_id", "event_type", "n")
   }
 
+  /** The driver's checker canonicalizes results through pandas
+    * `sort_values`, which crashes on struct/array/map cells (unhashable
+    * ndarray/dict). Project every nested column through `to_json` (and
+    * binary through base64) so each gNN row reports a real `spark_rows`
+    * instead of a checker error. Values are unchanged — JSON is just the
+    * stable scalar encoding of the nested payload.
+    */
   private def checkerSafe(df: DataFrame): DataFrame =
     df.select(df.schema.fields.toSeq.map { f =>
       f.dataType match {
@@ -1375,36 +1455,32 @@ object SynthQueries {
     // of appending duplicates — idempotent even if the sink batch is
     // re-executed.
     QueryDef("g114_stream_ann_serve",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g114") { st =>
         val vecs = s.read.parquet(s"$d/embeddings.parquet")
         val dir = BuildOnce.dir("g110_hivf", d) { dir =>
           graft.ops.Quantization.writeHashIvfIndex(vecs, "vec_id", "embedding", dir, 8)
         }
         val q = vecs.filter(col("vec_id") % 50 === 0)
-        val streamDir = java.nio.file.Files.createTempDirectory("g114_queries")
-        def writeOne(df: org.apache.spark.sql.DataFrame, sub: String): Unit = {
-          val tmpOut = java.nio.file.Files.createTempDirectory(s"g114_$sub")
-          df.repartition(1).write.mode("overwrite").parquet(tmpOut.toString)
-          val part = SparkEntry.firstParquet(tmpOut)
-          java.nio.file.Files.move(part, streamDir.resolve(s"$sub.parquet"))
-        }
-        writeOne(q.filter(col("vec_id") % 100 === 0), "a")
-        writeOne(q.filter(col("vec_id") % 100 =!= 0), "b")
-        val outDir = java.nio.file.Files.createTempDirectory("g114_out").toString
+        val streamDir = st.dir("queries")
+        StreamFiles.writeMany(Seq(
+          "a" -> q.filter(col("vec_id") % 100 === 0),
+          "b" -> q.filter(col("vec_id") % 100 =!= 0)), streamDir)
+        val outDir = st.dir("out").toString
         val sq = s.readStream.schema(q.schema)
           .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
           .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
+          .foreachBatch { (batch: DataFrame, bid: Long) =>
             graft.ops.Quantization.hashIvfTopKFromIndex(dir, batch,
               "vec_id", "embedding", 10, numClusters = 8, nProbe = 2)
               .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
           }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .trigger(Trigger.AvailableNow())
           .start()
         sq.awaitTermination()
         // `batch=N` subdirs surface as a discovered partition column;
-        // drop it — the oracle sees the union of batches, not the split
-        s.read.parquet(outDir).drop("batch")
+        // drop it — the oracle sees the union of batches, not the split.
+        // Materialized: the scope deletes outDir on return.
+        materialized(s.read.parquet(outDir).drop("batch"))
       },
       Some(HashIvfOracle.sql)),
 
@@ -1520,35 +1596,19 @@ object SynthQueries {
     // the same readStream → watermark → window → writeStream pipeline a
     // live source would use — only the trigger bounds it.
     QueryDef("g55_stream_counts",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g55") { st =>
         import org.apache.spark.sql.functions.{count, expr, lit, timestamp_micros,
           unix_timestamp, window}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val name = "g55_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
         // ts is bigint NANOS; integer `div` keeps precision (a double
         // division would lose micros above 2^53)
-        // the file-stream source only accepts directories (it anchors its
-        // listing at a basePath directory); events.parquet is a single
-        // file, so expose it through a temp directory symlink
-        val streamDir = java.nio.file.Files.createTempDirectory("g55_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        val counts = graft.queries.EventTs.toNanos(
-          s.readStream.schema(schema).parquet(streamDir.toString))
+        val counts = st.events(d)._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"),
             col("event_type"), col("n"))
-        val q = counts.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        st.drain(counts, "complete")
       },
       Some("""SELECT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT) AS bucket_s,
         event_type, count(*) AS n FROM events GROUP BY 1, 2""")),
@@ -1559,47 +1619,17 @@ object SynthQueries {
     // fires in the trailing no-data micro-batch); the emitted sessions
     // must hash-match DuckDB's batch gap-sessionization
     QueryDef("g57_stream_sessions",
-      (s, d) => streamScoped(s) {
-        import org.apache.spark.sql.functions.{expr, lit, max, timestamp_micros}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val ev = graft.queries.EventTs.toNanos(evRaw)
+      (s, d) => streamScoped(s, "g57") { st =>
+        import org.apache.spark.sql.functions.{expr, timestamp_micros}
         val gapSeconds = 1800L
-        val maxNs = ev.agg(max("ts")).collect()(0).getLong(0)
-        val streamDir = java.nio.file.Files.createTempDirectory("g57_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("a_events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        // sentinel on an out-of-band key, 10 gaps past the last event;
-        // its ts must be written in the RAW file type (long nanos or
-        // timestamp micros) because the stream reads with the raw schema
-        val sentinelNs = maxNs + 10L * gapSeconds * 1000000000L
-        val sentinelTs = evRaw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType => lit(sentinelNs)
-          case t => timestamp_micros(lit(sentinelNs / 1000L)).cast(t)
-        }
-        val tmpOut = java.nio.file.Files.createTempDirectory("g57_sentinel")
-        evRaw.limit(1).select(
-          lit(-1L).as("event_id"), sentinelTs.as("ts"), lit(-1L).as("user_id"),
-          lit("sentinel").as("event_type"), lit(0.0).as("value"), lit("").as("props"))
-          .repartition(1).write.mode("overwrite").parquet(tmpOut.toString)
-        val part = SparkEntry.firstParquet(tmpOut)
-        java.nio.file.Files.move(part, streamDir.resolve("z_sentinel.parquet"))
-
-        val stream = graft.queries.EventTs.toNanos(
-          s.readStream.schema(evRaw.schema).parquet(streamDir.toString))
+        // sentinel 10 gaps past the last event
+        val stream = st.events(d, Some(10L * gapSeconds))._2
           .select(col("user_id").as("key"),
             timestamp_micros(expr("ts div 1000")).as("event_time"))
         val sessions = graft.streaming.Sessionize.sessions(stream, gapSeconds)
-        val name = "g57_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = sessions.filter(col("key") >= 0)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name).select(col("key"), col("startMs").as("start_ms"),
-          col("endMs").as("end_ms"), col("nEvents").as("n_events"))
+        st.drain(sessions.filter(col("key") >= 0).toDF(), "append")
+          .select(col("key"), col("startMs").as("start_ms"),
+            col("endMs").as("end_ms"), col("nEvents").as("n_events"))
       },
       Some("""WITH e AS (
           SELECT user_id AS key, epoch_ns(ts) // 1000000 AS t FROM events),
@@ -1625,18 +1655,10 @@ object SynthQueries {
     // regime and must hash-match DuckDB's batch counts ranked
     // (cnt desc, item asc).
     QueryDef("g88_stream_freq",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g88") { st =>
         import org.apache.spark.sql.functions.{call_function, expr, lit,
           posexplode, timestamp_micros, unix_timestamp, window}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val streamDir = java.nio.file.Files.createTempDirectory("g88_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        val name = "g88_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = graft.queries.EventTs.toNanos(
-          s.readStream.schema(schema).parquet(streamDir.toString))
+        val freq = st.events(d)._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           .groupBy(window(col("event_time"), "1 hour"))
@@ -1645,12 +1667,7 @@ object SynthQueries {
             posexplode(col("freq")).as(Seq("p", "f")))
           .select(col("bucket_s"), (col("p") + 1).cast("long").as("rnk"),
             col("f.item").as("item"), col("f.cnt").as("cnt"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        st.drain(freq, "complete")
       },
       Some("""WITH c AS (
           SELECT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT) AS bucket_s,
@@ -1674,31 +1691,18 @@ object SynthQueries {
     // on both sides (Spark's double->long cast truncates, DuckDB's
     // rounds — floor() pins them to the same integer).
     QueryDef("g92_stream_quantiles",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g92") { st =>
         import org.apache.spark.sql.functions.{call_function, ceil, expr, floor,
           lit, timestamp_micros, unix_timestamp, window}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val streamDir = java.nio.file.Files.createTempDirectory("g92_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        val name = "g92_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = graft.queries.EventTs.toNanos(
-          s.readStream.schema(schema).parquet(streamDir.toString))
+        val sketches = st.events(d)._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withColumn("v_us", floor(col("value") * lit(1000000d)).cast("long"))
           .withWatermark("event_time", "1 hour")
           .groupBy(window(col("event_time"), "1 hour"))
           .agg(call_function("quantile_sketch", col("v_us"), lit(256)).as("qs"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"), col("qs"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         import graft.ops.Sketches
-        s.table(name)
+        st.drain(sketches, "complete")
           .withColumn("__W", Sketches.summaryWeight(col("qs")))
           .withColumn("__t50", ceil(col("__W") * lit(0.5)).cast("long"))
           .withColumn("__t90", ceil(col("__W") * lit(0.9)).cast("long"))
@@ -1726,30 +1730,17 @@ object SynthQueries {
     // estimator returns its size) — the bounded replay must equal
     // DuckDB's batch count(DISTINCT) per bucket.
     QueryDef("g93_stream_distinct",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g93") { st =>
         import org.apache.spark.sql.functions.{call_function, expr, lit,
           timestamp_micros, unix_timestamp, window, xxhash64}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val streamDir = java.nio.file.Files.createTempDirectory("g93_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        val name = "g93_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = graft.queries.EventTs.toNanos(
-          s.readStream.schema(schema).parquet(streamDir.toString))
+        val distinct = st.events(d)._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           .groupBy(window(col("event_time"), "1 hour"))
           .agg(call_function("kmv_sketch", xxhash64(col("user_id")), lit(256)).as("kmv"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"),
             graft.ops.Sketches.kmvEstimate(col("kmv"), 256).as("n_users"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        st.drain(distinct, "complete")
       },
       Some("""SELECT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT) AS bucket_s,
           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
@@ -1765,18 +1756,11 @@ object SynthQueries {
     // truncated before comparing — flooring the difference instead
     // would disagree by 1 around sub-unit remainders.
     QueryDef("g81_stream_interval_join",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g81") { st =>
         import org.apache.spark.sql.functions.{expr, timestamp_micros, unix_millis}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val streamDir = java.nio.file.Files.createTempDirectory("g81_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
+        val src = st.events(d)._2
         def side(kind: String, idAs: String, userAs: String, tAs: String) =
-          graft.queries.EventTs.toNanos(
-            s.readStream.schema(schema).parquet(streamDir.toString))
-            .filter(col("event_type") === kind)
+          src.filter(col("event_type") === kind)
             .select(col("event_id").as(idAs), col("user_id").as(userAs),
               timestamp_micros(expr("ts div 1000")).as(tAs))
             .withWatermark(tAs, "1 hour")
@@ -1787,13 +1771,7 @@ object SynthQueries {
             col("ct") <= col("vt") + expr("INTERVAL 24 HOURS"))
           .select(col("view_id"), col("click_id"),
             (unix_millis(col("ct")) - unix_millis(col("vt"))).as("lag_ms"))
-        val name = "g81_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = joined.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        st.drain(joined, "append")
       },
       Some("""WITH e AS (SELECT event_id, user_id, event_type,
                 epoch_ns(ts) // 1000 AS us FROM events)
@@ -1811,30 +1789,17 @@ object SynthQueries {
     // DuckDB re-deriving every register from the batch table matches
     // bit-for-bit regardless of cardinality.
     QueryDef("g96_stream_hll",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g96") { st =>
         import org.apache.spark.sql.functions.{call_function, expr, lit,
           posexplode, timestamp_micros, unix_timestamp, window, xxhash64}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val streamDir = java.nio.file.Files.createTempDirectory("g96_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        val name = "g96_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = graft.queries.EventTs.toNanos(
-          s.readStream.schema(schema).parquet(streamDir.toString))
+        val sketches = st.events(d)._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           .groupBy(window(col("event_time"), "1 hour"))
           .agg(call_function("hll_sketch",
             xxhash64(col("user_id")), lit(6)).as("hll"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"), col("hll"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        st.drain(sketches, "complete")
           .select(col("bucket_s"), posexplode(col("hll")).as(Seq("reg", "register")))
           .select(col("bucket_s"), col("reg").cast("long").as("reg"),
             col("register").cast("long").as("register"))
@@ -1875,23 +1840,16 @@ object SynthQueries {
     // never shuffle for the join. Bounded AvailableNow replay == the
     // identical batch join+GROUP BY in DuckDB.
     QueryDef("g97_stream_enrich",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g97") { st =>
         import org.apache.spark.sql.functions.{broadcast, count, expr, lit,
           pmod, timestamp_micros, unix_timestamp, window}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val streamDir = java.nio.file.Files.createTempDirectory("g97_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
+        val (evRaw, stream) = st.events(d)
         // static dimension: user -> cohort (derived batch-side)
         val dim = broadcast(
-          graft.queries.EventTs.toNanos(s.read.parquet(s"$d/events.parquet"))
+          EventTs.toNanos(evRaw)
             .select(col("user_id")).distinct()
             .withColumn("cohort", pmod(col("user_id"), lit(7L))))
-        val name = "g97_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = graft.queries.EventTs.toNanos(
-          s.readStream.schema(schema).parquet(streamDir.toString))
+        val counts = stream
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           .join(dim, "user_id") // stream-static: static side broadcast
@@ -1899,12 +1857,7 @@ object SynthQueries {
           .agg(count(lit(1)).as("n"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"),
             col("cohort"), col("n"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        st.drain(counts, "complete")
       },
       Some("""SELECT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT) AS bucket_s,
           user_id % 7 AS cohort, CAST(count(*) AS BIGINT) AS n
@@ -1918,17 +1871,9 @@ object SynthQueries {
     // output projects the KEY SET per hour bucket — deterministic — and
     // the oracle is DuckDB's batch DISTINCT.
     QueryDef("g98_stream_dedup",
-      (s, d) => streamScoped(s) {
-        import org.apache.spark.sql.functions.{expr, lit, timestamp_micros}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val streamDir = java.nio.file.Files.createTempDirectory("g98_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        val name = "g98_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = graft.queries.EventTs.toNanos(
-          s.readStream.schema(schema).parquet(streamDir.toString))
+      (s, d) => streamScoped(s, "g98") { st =>
+        import org.apache.spark.sql.functions.{expr, timestamp_micros}
+        val keys = st.events(d)._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           // dedup key: (user, type, hour bucket) — duplicates exist
@@ -1936,12 +1881,7 @@ object SynthQueries {
           .withColumn("bucket_s", expr("ts div 3600000000000 * 3600"))
           .dropDuplicatesWithinWatermark("user_id", "event_type", "bucket_s")
           .select(col("bucket_s"), col("user_id"), col("event_type"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        st.drain(keys, "append")
       },
       Some("""SELECT DISTINCT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT)
           AS bucket_s, user_id, event_type
@@ -1956,16 +1896,9 @@ object SynthQueries {
     // AvailableNow replay == the identical batch interval join in
     // DuckDB (micros arithmetic on both sides).
     QueryDef("g99_stream_interval_join",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g99") { st =>
         import org.apache.spark.sql.functions.{expr, timestamp_micros}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val streamDir = java.nio.file.Files.createTempDirectory("g99_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        val src = graft.queries.EventTs.toNanos(
-          s.readStream.schema(schema).parquet(streamDir.toString))
+        val src = st.events(d)._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
         val views = src.filter(col("event_type") === "view")
           .select(col("user_id").as("v_user"), expr("ts div 1000").as("v_us"),
@@ -1975,18 +1908,12 @@ object SynthQueries {
           .select(col("user_id").as("p_user"), expr("ts div 1000").as("p_us"),
             col("event_time").as("p_time"))
           .withWatermark("p_time", "1 hour")
-        val name = "g99_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = views.join(buys,
+        val joined = views.join(buys,
           col("v_user") === col("p_user") &&
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 30 MINUTES"))
           .select(col("v_user").as("user_id"), col("v_us"), col("p_us"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        st.drain(joined, "append")
       },
       Some("""WITH e AS (SELECT user_id, event_type,
             epoch_ns(ts) // 1000 AS us FROM events)
@@ -2004,32 +1931,11 @@ object SynthQueries {
     // flushes ALL unmatched rows; the bounded replay then equals the
     // batch LEFT JOIN in DuckDB, nulls included.
     QueryDef("g100_stream_outer_join",
-      (s, d) => streamScoped(s) {
-        import org.apache.spark.sql.functions.{expr, lit, max, timestamp_micros}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val maxNs = graft.queries.EventTs.toNanos(evRaw)
-          .agg(max("ts")).collect()(0).getLong(0)
-        val streamDir = java.nio.file.Files.createTempDirectory("g100_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("a_events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
+      (s, d) => streamScoped(s, "g100") { st =>
+        import org.apache.spark.sql.functions.{expr, timestamp_micros}
         // sentinel 2 h past the last event: watermark (1 h delay) ends
         // past every view's 30-minute join window
-        val sentinelNs = maxNs + 2L * 3600L * 1000000000L
-        val sentinelTs = evRaw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType => lit(sentinelNs)
-          case t => timestamp_micros(lit(sentinelNs / 1000L)).cast(t)
-        }
-        val tmpOut = java.nio.file.Files.createTempDirectory("g100_sentinel")
-        evRaw.limit(1).select(
-          lit(-1L).as("event_id"), sentinelTs.as("ts"), lit(-1L).as("user_id"),
-          lit("sentinel").as("event_type"), lit(0.0).as("value"), lit("").as("props"))
-          .repartition(1).write.mode("overwrite").parquet(tmpOut.toString)
-        val part = SparkEntry.firstParquet(tmpOut)
-        java.nio.file.Files.move(part, streamDir.resolve("z_sentinel.parquet"))
-        val src = graft.queries.EventTs.toNanos(
-          s.readStream.schema(evRaw.schema).parquet(streamDir.toString))
+        val src = st.events(d, Some(2L * 3600L))._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
         // sentinel rides BOTH sides so each side's watermark advances
         val views = src.filter(col("event_type").isin("view", "sentinel"))
@@ -2040,19 +1946,13 @@ object SynthQueries {
           .select(col("user_id").as("p_user"), expr("ts div 1000").as("p_us"),
             col("event_time").as("p_time"))
           .withWatermark("p_time", "1 hour")
-        val name = "g100_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = views.join(buys,
+        val joined = views.join(buys,
           col("v_user") === col("p_user") &&
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 30 MINUTES"),
           "leftOuter")
           .select(col("v_user").as("user_id"), col("v_us"), col("p_us"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name).filter(col("user_id") >= 0)
+        st.drain(joined, "append").filter(col("user_id") >= 0)
       },
       Some("""WITH e AS (SELECT user_id, event_type,
             epoch_ns(ts) // 1000 AS us FROM events)
@@ -2075,32 +1975,10 @@ object SynthQueries {
     // Instead it flows through: its own window ends 10 h past the
     // final watermark, so append mode never emits it — self-excluding.
     QueryDef("g101_stream_dedup_counts",
-      (s, d) => streamScoped(s) {
-        import org.apache.spark.sql.functions.{count, expr, lit, max,
+      (s, d) => streamScoped(s, "g101") { st =>
+        import org.apache.spark.sql.functions.{count, expr, lit,
           timestamp_micros, unix_timestamp, window}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val ev = graft.queries.EventTs.toNanos(evRaw)
-        val maxNs = ev.agg(max("ts")).collect()(0).getLong(0)
-        val streamDir = java.nio.file.Files.createTempDirectory("g101_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("a_events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        val sentinelNs = maxNs + 36000L * 1000000000L
-        val sentinelTs = evRaw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType => lit(sentinelNs)
-          case t => timestamp_micros(lit(sentinelNs / 1000L)).cast(t)
-        }
-        val tmpOut = java.nio.file.Files.createTempDirectory("g101_sentinel")
-        evRaw.limit(1).select(
-          lit(-1L).as("event_id"), sentinelTs.as("ts"), lit(-1L).as("user_id"),
-          lit("sentinel").as("event_type"), lit(0.0).as("value"), lit("").as("props"))
-          .repartition(1).write.mode("overwrite").parquet(tmpOut.toString)
-        val part = SparkEntry.firstParquet(tmpOut)
-        java.nio.file.Files.move(part, streamDir.resolve("z_sentinel.parquet"))
-        val name = "g101_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = graft.queries.EventTs.toNanos(
-          s.readStream.schema(evRaw.schema).parquet(streamDir.toString))
+        val counts = st.events(d, Some(36000L))._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           .withColumn("bucket_s", expr("ts div 3600000000000 * 3600"))
@@ -2109,12 +1987,7 @@ object SynthQueries {
           .agg(count(lit(1)).as("n_unique"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"),
             col("n_unique"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        st.drain(counts, "append")
       },
       Some("""SELECT bucket_s, CAST(count(*) AS BIGINT) AS n_unique FROM (
           SELECT DISTINCT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT)
@@ -2131,61 +2004,23 @@ object SynthQueries {
     // user's flush timer; its own timer sits past the final watermark,
     // so it self-excludes.
     QueryDef("g102_stream_tws_profile",
-      (s, d) => streamScoped(s) {
-        import org.apache.spark.sql.functions.{expr, lit, max, timestamp_micros}
+      (s, d) => streamScoped(s, "g102")(st => withRocksDb(s) {
+        import org.apache.spark.sql.functions.{expr, timestamp_micros}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val oldProv = s.conf.getOption(provKey)
-        s.conf.set(provKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val evRaw = s.read.parquet(s"$d/events.parquet")
-          val ev = graft.queries.EventTs.toNanos(evRaw)
-          val maxNs = ev.agg(max("ts")).collect()(0).getLong(0)
-          val streamDir = java.nio.file.Files.createTempDirectory("g102_events")
-          java.nio.file.Files.createSymbolicLink(
-            streamDir.resolve("a_events.parquet"),
-            java.nio.file.Paths.get(s"$d/events.parquet"))
-          val sentinelNs = maxNs + 36000L * 1000000000L
-          val sentinelTs = evRaw.schema("ts").dataType match {
-            case org.apache.spark.sql.types.LongType => lit(sentinelNs)
-            case t => timestamp_micros(lit(sentinelNs / 1000L)).cast(t)
-          }
-          val tmpOut = java.nio.file.Files.createTempDirectory("g102_sentinel")
-          evRaw.limit(1).select(
-            lit(-1L).as("event_id"), sentinelTs.as("ts"), lit(-1L).as("user_id"),
-            lit("sentinel").as("event_type"), lit(0.0).as("value"), lit("").as("props"))
-            .repartition(1).write.mode("overwrite").parquet(tmpOut.toString)
-          val part = SparkEntry.firstParquet(tmpOut)
-          java.nio.file.Files.move(part, streamDir.resolve("z_sentinel.parquet"))
-          val name = "g102_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-          import s.implicits._
-          val src = graft.queries.EventTs.toNanos(
-            s.readStream.schema(evRaw.schema).parquet(streamDir.toString))
-            .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-            .withWatermark("event_time", "1 hour")
-            .select(col("user_id").cast("long").as("uid"),
-              expr("ts div 1000000").as("ts_ms"), col("event_type"))
-            .as[(Long, Long, String)]
-          val q = src.groupByKey(_._1)
-            .transformWithState(new graft.streaming.TypeCountProcessor,
-              TimeMode.EventTime(), OutputMode.Append(),
-              implicitly[org.apache.spark.sql.Encoder[(Long, String, Long)]])
-            .toDF("user_id", "event_type", "n")
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          s.table(name).filter(col("user_id") >= 0)
-        } finally {
-          oldProv match {
-            case Some(p) => s.conf.set(provKey, p)
-            case None => s.conf.unset(provKey)
-          }
-        }
-      },
+        import s.implicits._
+        val profiles = st.events(d, Some(36000L))._2
+          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+          .withWatermark("event_time", "1 hour")
+          .select(col("user_id").cast("long").as("uid"),
+            expr("ts div 1000000").as("ts_ms"), col("event_type"))
+          .as[(Long, Long, String)]
+          .groupByKey(_._1)
+          .transformWithState(new graft.streaming.TypeCountProcessor,
+            TimeMode.EventTime(), OutputMode.Append(),
+            implicitly[org.apache.spark.sql.Encoder[(Long, String, Long)]])
+          .toDF("user_id", "event_type", "n")
+        st.drain(profiles, "append").filter(col("user_id") >= 0)
+      }),
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         FROM events GROUP BY user_id, event_type""")),
 
@@ -2199,32 +2034,10 @@ object SynthQueries {
     // (windows [t, t+gap) merge only when they OVERLAP), end = last
     // event + gap.
     QueryDef("g103_stream_session_window",
-      (s, d) => streamScoped(s) {
-        import org.apache.spark.sql.functions.{count, expr, lit, max,
+      (s, d) => streamScoped(s, "g103") { st =>
+        import org.apache.spark.sql.functions.{count, expr, lit,
           session_window, timestamp_micros, unix_timestamp}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val ev = graft.queries.EventTs.toNanos(evRaw)
-        val maxNs = ev.agg(max("ts")).collect()(0).getLong(0)
-        val streamDir = java.nio.file.Files.createTempDirectory("g103_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("a_events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        val sentinelNs = maxNs + 36000L * 1000000000L
-        val sentinelTs = evRaw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType => lit(sentinelNs)
-          case t => timestamp_micros(lit(sentinelNs / 1000L)).cast(t)
-        }
-        val tmpOut = java.nio.file.Files.createTempDirectory("g103_sentinel")
-        evRaw.limit(1).select(
-          lit(-1L).as("event_id"), sentinelTs.as("ts"), lit(-1L).as("user_id"),
-          lit("sentinel").as("event_type"), lit(0.0).as("value"), lit("").as("props"))
-          .repartition(1).write.mode("overwrite").parquet(tmpOut.toString)
-        val part = SparkEntry.firstParquet(tmpOut)
-        java.nio.file.Files.move(part, streamDir.resolve("z_sentinel.parquet"))
-        val name = "g103_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = graft.queries.EventTs.toNanos(
-          s.readStream.schema(evRaw.schema).parquet(streamDir.toString))
+        val sessions = st.events(d, Some(36000L))._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           .groupBy(col("user_id"), session_window(col("event_time"), "30 minutes"))
@@ -2233,12 +2046,7 @@ object SynthQueries {
             unix_timestamp(col("session_window.start")).as("start_s"),
             unix_timestamp(col("session_window.end")).as("end_s"),
             col("n_events"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name).filter(col("user_id") >= 0)
+        st.drain(sessions, "append").filter(col("user_id") >= 0)
       },
       Some("""WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS us FROM events),
         o AS (SELECT user_id, us,
@@ -2261,33 +2069,12 @@ object SynthQueries {
     // contents, so the hash-match also proves the manifest commit
     // protocol delivered every finalized window exactly once.
     QueryDef("g104_stream_file_sink",
-      (s, d) => streamScoped(s) {
-        import org.apache.spark.sql.functions.{count, expr, lit, max,
+      (s, d) => streamScoped(s, "g104") { st =>
+        import org.apache.spark.sql.functions.{count, expr, lit,
           timestamp_micros, unix_timestamp, window}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val ev = graft.queries.EventTs.toNanos(evRaw)
-        val maxNs = ev.agg(max("ts")).collect()(0).getLong(0)
-        val streamDir = java.nio.file.Files.createTempDirectory("g104_events")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("a_events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        val sentinelNs = maxNs + 36000L * 1000000000L
-        val sentinelTs = evRaw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType => lit(sentinelNs)
-          case t => timestamp_micros(lit(sentinelNs / 1000L)).cast(t)
-        }
-        val tmpOut = java.nio.file.Files.createTempDirectory("g104_sentinel")
-        evRaw.limit(1).select(
-          lit(-1L).as("event_id"), sentinelTs.as("ts"), lit(-1L).as("user_id"),
-          lit("sentinel").as("event_type"), lit(0.0).as("value"), lit("").as("props"))
-          .repartition(1).write.mode("overwrite").parquet(tmpOut.toString)
-        val part = SparkEntry.firstParquet(tmpOut)
-        java.nio.file.Files.move(part, streamDir.resolve("z_sentinel.parquet"))
-        val sinkDir = java.nio.file.Files.createTempDirectory("g104_sink").toString
-        val ckptDir = java.nio.file.Files.createTempDirectory("g104_ckpt").toString
-        val q = graft.queries.EventTs.toNanos(
-          s.readStream.schema(evRaw.schema).parquet(streamDir.toString))
+        val sinkDir = st.dir("sink").toString
+        val ckptDir = st.dir("ckpt").toString
+        val q = st.events(d, Some(36000L))._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
@@ -2298,12 +2085,14 @@ object SynthQueries {
           .option("path", sinkDir)
           .option("checkpointLocation", ckptDir)
           .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
         // read back through the _spark_metadata manifest; the sentinel's
-        // own window never flushed, so only real buckets are on disk
-        s.read.parquet(sinkDir).filter(col("event_type") =!= "sentinel")
+        // own window never flushed, so only real buckets are on disk.
+        // Materialized: the scope deletes sinkDir on return.
+        materialized(
+          s.read.parquet(sinkDir).filter(col("event_type") =!= "sentinel"))
       },
       Some("""SELECT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT)
           AS bucket_s, event_type, count(*) AS n
@@ -2344,61 +2133,23 @@ object SynthQueries {
     // state is O(K) per user at any stream length — flushed ranked by
     // an event-time timer. Same sentinel/RocksDB scaffolding as g102.
     QueryDef("g106_stream_tws_latestk",
-      (s, d) => streamScoped(s) {
-        import org.apache.spark.sql.functions.{expr, lit, max, timestamp_micros}
+      (s, d) => streamScoped(s, "g106")(st => withRocksDb(s) {
+        import org.apache.spark.sql.functions.{expr, timestamp_micros}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val oldProv = s.conf.getOption(provKey)
-        s.conf.set(provKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val evRaw = s.read.parquet(s"$d/events.parquet")
-          val ev = graft.queries.EventTs.toNanos(evRaw)
-          val maxNs = ev.agg(max("ts")).collect()(0).getLong(0)
-          val streamDir = java.nio.file.Files.createTempDirectory("g106_events")
-          java.nio.file.Files.createSymbolicLink(
-            streamDir.resolve("a_events.parquet"),
-            java.nio.file.Paths.get(s"$d/events.parquet"))
-          val sentinelNs = maxNs + 36000L * 1000000000L
-          val sentinelTs = evRaw.schema("ts").dataType match {
-            case org.apache.spark.sql.types.LongType => lit(sentinelNs)
-            case t => timestamp_micros(lit(sentinelNs / 1000L)).cast(t)
-          }
-          val tmpOut = java.nio.file.Files.createTempDirectory("g106_sentinel")
-          evRaw.limit(1).select(
-            lit(-1L).as("event_id"), sentinelTs.as("ts"), lit(-1L).as("user_id"),
-            lit("sentinel").as("event_type"), lit(0.0).as("value"), lit("").as("props"))
-            .repartition(1).write.mode("overwrite").parquet(tmpOut.toString)
-          val part = SparkEntry.firstParquet(tmpOut)
-          java.nio.file.Files.move(part, streamDir.resolve("z_sentinel.parquet"))
-          val name = "g106_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-          import s.implicits._
-          val src = graft.queries.EventTs.toNanos(
-            s.readStream.schema(evRaw.schema).parquet(streamDir.toString))
-            .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-            .withWatermark("event_time", "1 hour")
-            .select(col("user_id").cast("long").as("uid"),
-              expr("ts div 1000000").as("ts_ms"), col("event_id").cast("long"))
-            .as[(Long, Long, Long)]
-          val q = src.groupByKey(_._1)
-            .transformWithState(new graft.streaming.LatestKProcessor(3),
-              TimeMode.EventTime(), OutputMode.Append(),
-              implicitly[org.apache.spark.sql.Encoder[(Long, Long, Long, Long)]])
-            .toDF("user_id", "rnk", "event_id", "ts_ms")
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          s.table(name).filter(col("user_id") >= 0)
-        } finally {
-          oldProv match {
-            case Some(p) => s.conf.set(provKey, p)
-            case None => s.conf.unset(provKey)
-          }
-        }
-      },
+        import s.implicits._
+        val latest = st.events(d, Some(36000L))._2
+          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+          .withWatermark("event_time", "1 hour")
+          .select(col("user_id").cast("long").as("uid"),
+            expr("ts div 1000000").as("ts_ms"), col("event_id").cast("long"))
+          .as[(Long, Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(new graft.streaming.LatestKProcessor(3),
+            TimeMode.EventTime(), OutputMode.Append(),
+            implicitly[org.apache.spark.sql.Encoder[(Long, Long, Long, Long)]])
+          .toDF("user_id", "rnk", "event_id", "ts_ms")
+        st.drain(latest, "append").filter(col("user_id") >= 0)
+      }),
       Some("""SELECT user_id, CAST(rnk AS BIGINT) AS rnk, event_id,
           CAST(epoch_ns(ts) // 1000000 AS BIGINT) AS ts_ms
         FROM (SELECT user_id, event_id, ts, row_number() OVER
@@ -2414,20 +2165,18 @@ object SynthQueries {
     // oracle is the identical batch GROUP BY — cross-batch state merge
     // has to be exact for the hash to survive.
     QueryDef("g108_stream_multibatch",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g108") { st =>
         import org.apache.spark.sql.functions.{count, expr, lit, timestamp_micros,
           unix_timestamp, window}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val streamDir = java.nio.file.Files.createTempDirectory("g108_events")
+        val evRaw = eventsRaw(s, d)
+        val streamDir = st.dir("events")
         // two halves by event id parity — both halves span the whole
         // timeline, so most windows receive rows from BOTH batches
         evRaw.filter(col("event_id") % 2 === 0).repartition(1)
           .write.parquet(streamDir.resolve("h0").toString)
         evRaw.filter(col("event_id") % 2 === 1).repartition(1)
           .write.parquet(streamDir.resolve("h1").toString)
-        val name = "g108_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val counts = graft.queries.EventTs.toNanos(
+        val counts = EventTs.toNanos(
           s.readStream.schema(evRaw.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(streamDir.toString + "/h*"))
@@ -2437,14 +2186,7 @@ object SynthQueries {
           .agg(count(lit(1)).as("n"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"),
             col("event_type"), col("n"))
-        val q = counts.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        require(batches >= 2, s"expected >= 2 data micro-batches, got $batches")
-        s.table(name)
+        st.drain(counts, "complete", minBatches = 2)
       },
       Some("""SELECT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT)
           AS bucket_s, event_type, count(*) AS n
@@ -2460,24 +2202,13 @@ object SynthQueries {
     // batch-2 remainder — and the per-(user, type) counts split into
     // two rows, so the batch GROUP BY oracle hash-catches the defect.
     QueryDef("g111_stream_tws_multibatch",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val streamDir = java.nio.file.Files.createTempDirectory("g111_events")
+      (s, d) => streamScoped(s, "g111")(st => withRocksDb(s) {
+        val streamDir = st.dir("events")
         // four single-file triggers, processed in write order (thirds +
         // sentinel — see eventThirdFiles for why thirds)
-        graft.streaming.StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
-        val name = "g111_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = typeCountStream(s, streamDir, evRaw.schema)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        require(batches >= 4, s"expected >= 4 micro-batches, got $batches")
-        deleteTree(streamDir) // result lives in the memory sink
-        s.table(name).filter(col("user_id") >= 0)
+        StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
+        st.drain(typeCountStream(s, streamDir, eventsRaw(s, d).schema), "append",
+          minBatches = 4).filter(col("user_id") >= 0)
       }),
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         FROM events GROUP BY user_id, event_type""")),
@@ -2498,12 +2229,11 @@ object SynthQueries {
     // ONLY the two new files, so a silent full-reprocess cannot pass
     // even if it were numerically idempotent.
     QueryDef("g116_stream_restart_recovery",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val streamDir = java.nio.file.Files.createTempDirectory("g116_events")
-        val ckptDir = java.nio.file.Files.createTempDirectory("g116_ckpt").toString
-        val outDir = java.nio.file.Files.createTempDirectory("g116_out").toString
+      (s, d) => streamScoped(s, "g116")(st => withRocksDb(s) {
+        val evRaw = eventsRaw(s, d)
+        val streamDir = st.dir("events")
+        val ckptDir = st.dir("ckpt").toString
+        val outDir = st.dir("out").toString
         val files = eventThirdFiles(s, d)
         def runIncarnation(): Long = {
           val q = typeCountStream(s, streamDir, evRaw.schema)
@@ -2511,7 +2241,7 @@ object SynthQueries {
             .option("path", outDir)
             .option("checkpointLocation", ckptDir)
             .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .trigger(Trigger.AvailableNow())
             .start()
           q.awaitTermination()
           q.recentProgress.map(_.numInputRows).sum
@@ -2526,28 +2256,22 @@ object SynthQueries {
         // sentinel's trailing batch performs the final flush.
         val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
         val oldNoData = s.conf.get(noDataKey)
-        graft.streaming.StreamFiles.writeMany(files.take(2), streamDir)
+        StreamFiles.writeMany(files.take(2), streamDir)
         s.conf.set(noDataKey, "false")
         val rows1 = try runIncarnation() finally s.conf.set(noDataKey, oldNoData)
         require(rows1 > 0L, "phase 1 processed no rows")
         // phase 2: the last third + sentinel land; a NEW query resumes
         // from the checkpoint
         val tailRows = files(2)._2.count() + 1L
-        graft.streaming.StreamFiles.writeMany(files.drop(2), streamDir)
+        StreamFiles.writeMany(files.drop(2), streamDir)
         val rows2 = runIncarnation()
         require(rows2 == tailRows,
           s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
             s"expected exactly the new files' $tailRows")
         // the report is (user, type)-dimension-sized by design —
-        // materialize it, then delete the three temp trees (split
-        // files, RocksDB checkpoint, sink); without this every suite
-        // rep leaks a full checkpoint tree
-        val res = s.read.parquet(outDir).filter(col("user_id") >= 0)
-        val out = s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
-        Seq(streamDir, java.nio.file.Paths.get(ckptDir),
-          java.nio.file.Paths.get(outDir)).foreach(deleteTree)
-        out
+        // materialized, because the scope deletes the three staged trees
+        // (split files, RocksDB checkpoint, sink) on return
+        materialized(s.read.parquet(outDir).filter(col("user_id") >= 0))
       }),
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         FROM events GROUP BY user_id, event_type""")),
@@ -2565,12 +2289,11 @@ object SynthQueries {
     // agg, a dimension-sized broadcast for the baseline, no second
     // stateful operator.
     QueryDef("g117_stream_drift",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g117") { st =>
         import org.apache.spark.sql.functions.{abs, broadcast, coalesce,
           count, expr, lit, max, min, timestamp_micros, unix_timestamp, window}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val ev = graft.queries.EventTs.toNanos(evRaw)
+        val evRaw = eventsRaw(s, d)
+        val ev = EventTs.toNanos(evRaw)
         val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
           .toSeq.map(_.asInstanceOf[Long]).toArray
         val midNs = (minNs + maxNs) / 2
@@ -2581,10 +2304,9 @@ object SynthQueries {
           .groupBy("event_type").agg(count(lit(1)).as("nb"))
           .select(col("event_type"),
             expr(s"nb * 3600000L div ${spanS}L").as("expected_milli"))
-        val streamDir = java.nio.file.Files.createTempDirectory("g117_events")
-        graft.streaming.StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
-        val name = "g117_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val windowed = graft.queries.EventTs.toNanos(
+        val streamDir = st.dir("events")
+        StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
+        val windowed = EventTs.toNanos(
           s.readStream.schema(evRaw.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(streamDir.toString))
@@ -2608,15 +2330,8 @@ object SynthQueries {
               .as("delta_milli"))
           .withColumn("alarm",
             (col("delta_milli") * 2L > col("expected_milli")).cast("int"))
-        val q = windowed.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        require(batches >= 4, s"expected >= 4 micro-batches, got $batches")
-        deleteTree(streamDir)
-        s.table(name).filter(col("event_type") =!= "sentinel")
+        st.drain(windowed, "append", minBatches = 4)
+          .filter(col("event_type") =!= "sentinel")
       },
       Some("""WITH mm AS (SELECT min(epoch_ns(ts)) AS mn, max(epoch_ns(ts)) AS mx
             FROM events),
@@ -2649,14 +2364,13 @@ object SynthQueries {
     // algebraic form the processor folds incrementally). Runs on
     // RocksDB state across four watermark-advancing micro-batches.
     QueryDef("g118_stream_cusum",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g118")(st => withRocksDb(s) {
         import org.apache.spark.sql.functions.{expr, lit, max, min, round,
           sum, timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val ev = graft.queries.EventTs.toNanos(evRaw)
+        val evRaw = eventsRaw(s, d)
+        val ev = EventTs.toNanos(evRaw)
         val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
           .toSeq.map(_.asInstanceOf[Long]).toArray
         val midNs = (minNs + maxNs) / 2
@@ -2666,10 +2380,9 @@ object SynthQueries {
           .agg(sum(round(col("value") * 1000000).cast("long")).as("sv"),
             org.apache.spark.sql.functions.count(lit(1)).as("nv"))
           .select(expr("sv div nv")).collect()(0).getLong(0)
-        val streamDir = java.nio.file.Files.createTempDirectory("g118_events")
-        graft.streaming.StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
-        val name = "g118_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val scored = graft.queries.EventTs.toNanos(
+        val streamDir = st.dir("events")
+        StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
+        val scored = EventTs.toNanos(
           s.readStream.schema(evRaw.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(streamDir.toString))
@@ -2689,15 +2402,8 @@ object SynthQueries {
               (String, Long, Long, Long, Long, Long, Long, Long)]])
           .toDF("event_type", "n", "max_s", "alarm_idx", "alarm_ts",
             "max_sn", "alarm_n_idx", "alarm_n_ts")
-        val q = scored.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        require(batches >= 4, s"expected >= 4 micro-batches, got $batches")
-        deleteTree(streamDir)
-        s.table(name).filter(col("event_type") =!= "sentinel")
+        st.drain(scored, "append", minBatches = 4)
+          .filter(col("event_type") =!= "sentinel")
       }),
       Some(cusumOracleSql)),
 
@@ -2713,14 +2419,13 @@ object SynthQueries {
     // (prefix sum + running min/max) is associative-resumable across a
     // REAL query restart, not just CusumSpec's batch-split unit test.
     QueryDef("g125_stream_cusum_restart",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g125")(st => withRocksDb(s) {
         import org.apache.spark.sql.functions.{expr, lit, min => fmin,
           max => fmax, round, sum, timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val ev = graft.queries.EventTs.toNanos(evRaw)
+        val evRaw = eventsRaw(s, d)
+        val ev = EventTs.toNanos(evRaw)
         val Array(minNs, maxNs) = ev.agg(fmin("ts"), fmax("ts")).collect()(0)
           .toSeq.map(_.asInstanceOf[Long]).toArray
         val midNs = (minNs + maxNs) / 2
@@ -2729,12 +2434,12 @@ object SynthQueries {
           .agg(sum(round(col("value") * 1000000).cast("long")).as("sv"),
             org.apache.spark.sql.functions.count(lit(1)).as("nv"))
           .select(expr("sv div nv")).collect()(0).getLong(0)
-        val streamDir = java.nio.file.Files.createTempDirectory("g125_events")
-        val ckptDir = java.nio.file.Files.createTempDirectory("g125_ckpt").toString
-        val outDir = java.nio.file.Files.createTempDirectory("g125_out").toString
+        val streamDir = st.dir("events")
+        val ckptDir = st.dir("ckpt").toString
+        val outDir = st.dir("out").toString
         val files = eventThirdFiles(s, d)
         def runIncarnation(): Long = {
-          val scored = graft.queries.EventTs.toNanos(
+          val scored = EventTs.toNanos(
             s.readStream.schema(evRaw.schema)
               .option("maxFilesPerTrigger", "1")
               .parquet(streamDir.toString))
@@ -2758,30 +2463,25 @@ object SynthQueries {
             .option("path", outDir)
             .option("checkpointLocation", ckptDir)
             .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .trigger(Trigger.AvailableNow())
             .start()
           q.awaitTermination()
           q.recentProgress.map(_.numInputRows).sum
         }
         val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
         val oldNoData = s.conf.get(noDataKey)
-        graft.streaming.StreamFiles.writeMany(files.take(2), streamDir)
+        StreamFiles.writeMany(files.take(2), streamDir)
         s.conf.set(noDataKey, "false")
         val rows1 = try runIncarnation() finally s.conf.set(noDataKey, oldNoData)
         require(rows1 > 0L, "phase 1 processed no rows")
         val tailRows = files(2)._2.count() + 1L
-        graft.streaming.StreamFiles.writeMany(files.drop(2), streamDir)
+        StreamFiles.writeMany(files.drop(2), streamDir)
         val rows2 = runIncarnation()
         require(rows2 == tailRows,
           s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
             s"expected exactly the new files' $tailRows")
-        val res = s.read.parquet(outDir)
-          .filter(col("event_type") =!= "sentinel")
-        val out = s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
-        Seq(streamDir, java.nio.file.Paths.get(ckptDir),
-          java.nio.file.Paths.get(outDir)).foreach(deleteTree)
-        out
+        materialized(s.read.parquet(outDir)
+          .filter(col("event_type") =!= "sentinel"))
       }),
       Some(cusumOracleSql)),
 
@@ -2796,21 +2496,19 @@ object SynthQueries {
     // nonnegative in this feed, so DuckDB's floor-div // equals the
     // processor's Math.floorDiv on the reference sum.
     QueryDef("g123_stream_cusum_adaptive",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g123")(st => withRocksDb(s) {
         import org.apache.spark.sql.functions.{expr, lit, max, min, round,
           timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val ev = graft.queries.EventTs.toNanos(evRaw)
+        val evRaw = eventsRaw(s, d)
+        val ev = EventTs.toNanos(evRaw)
         val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
           .toSeq.map(_.asInstanceOf[Long]).toArray
         val t2 = minNs + 2L * (maxNs - minNs) / 3
-        val streamDir = java.nio.file.Files.createTempDirectory("g123_events")
-        graft.streaming.StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
-        val name = "g123_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val scored = graft.queries.EventTs.toNanos(
+        val streamDir = st.dir("events")
+        StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
+        val scored = EventTs.toNanos(
           s.readStream.schema(evRaw.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(streamDir.toString))
@@ -2831,15 +2529,8 @@ object SynthQueries {
               (String, Long, Long, Long, Long, Long, Long, Long)]])
           .toDF("event_type", "n", "max_s", "alarm_idx", "alarm_ts",
             "max_sn", "alarm_n_idx", "alarm_n_ts")
-        val q = scored.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        require(batches >= 4, s"expected >= 4 micro-batches, got $batches")
-        deleteTree(streamDir)
-        val out = s.table(name).filter(col("event_type") =!= "sentinel")
+        val out = st.drain(scored, "append", minBatches = 4)
+          .filter(col("event_type") =!= "sentinel")
         val negAlarms = out.filter(col("alarm_n_idx") >= 0).count()
         require(negAlarms > 0, "the rig must exercise the downward alarm")
         out
@@ -2906,7 +2597,7 @@ object SynthQueries {
     // bit, and the first-seen attribution (min id per signature — the
     // id-ordered splits make arrival order the id order) in SQL.
     QueryDef("g119_stream_image_dedup",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g119")(st => withRocksDb(s) {
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.functions.lit
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -2935,15 +2626,14 @@ object SynthQueries {
         }
         // three id-ordered files: both duplicate generations arrive
         // AFTER their originals, so first-seen attribution is decidable
-        val streamDir = java.nio.file.Files.createTempDirectory("g119_imgs")
+        val streamDir = st.dir("imgs")
         val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
           .collect()(0).getLong(0) / 2
         Seq(
           "a_low" -> fixture.filter(col("id") <= half),
           "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
           "c_dups" -> fixture.filter(col("id") >= 10000000L)
-        ).pipe(fs => graft.streaming.StreamFiles.writeMany(fs, streamDir))
-        val name = "g119_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
+        ).pipe(fs => StreamFiles.writeMany(fs, streamDir))
         val hashed = graft.ops.ImageDedup.dHash(
           s.readStream.schema(fixture.schema)
             .option("maxFilesPerTrigger", "1")
@@ -2955,15 +2645,7 @@ object SynthQueries {
             TimeMode.None(), OutputMode.Append(),
             implicitly[org.apache.spark.sql.Encoder[(Long, Long, Long)]])
           .toDF("id", "dhash", "dup_of")
-        val q = hashed.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        require(batches >= 3, s"expected >= 3 micro-batches, got $batches")
-        deleteTree(streamDir)
-        s.table(name)
+        st.drain(hashed, "append", minBatches = 3)
       }),
       Some {
         graft.queries.PipelineQueries.dhashOracleChain(
@@ -3002,12 +2684,10 @@ object SynthQueries {
     // drop (a require pins numRowsDroppedByWatermark > 0), and the
     // trailing-hour windows stay unflushed exactly as in production.
     QueryDef("g120_stream_late_data",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g120") { st =>
         import org.apache.spark.sql.functions.{count, expr, lit, max, min,
           pmod, timestamp_micros, unix_timestamp, window, xxhash64}
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val evRaw = s.read.parquet(s"$d/events.parquet")
-        val ev = graft.queries.EventTs.toNanos(evRaw)
+        val ev = EventTs.toNanos(eventsRaw(s, d))
         val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
           .toSeq.map(_.asInstanceOf[Long]).toArray
         val t1 = minNs + (maxNs - minNs) / 3
@@ -3018,12 +2698,11 @@ object SynthQueries {
           .withColumn("__file",
             (org.apache.spark.sql.functions.when(col("ts") <= t1, 1)
               .when(col("ts") <= t2, 2).otherwise(3)) + col("__disp") * 2)
-        val streamDir = java.nio.file.Files.createTempDirectory("g120_events")
-        graft.streaming.StreamFiles.writeMany((1 to 5).map { k =>
+        val streamDir = st.dir("events")
+        StreamFiles.writeMany((1 to 5).map { k =>
           s"${('a' + k - 1).toChar}_f$k" -> tagged.filter(col("__file") === k)
             .drop("__disp", "__file")
         }, streamDir)
-        val name = "g120_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
         val counts = s.readStream
           .schema(tagged.drop("__disp", "__file").schema)
           .option("maxFilesPerTrigger", "1")
@@ -3034,18 +2713,11 @@ object SynthQueries {
           .agg(count(lit(1)).as("n"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"),
             col("event_type"), col("n"))
-        val q = counts.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        require(batches >= 5, s"expected >= 5 micro-batches, got $batches")
-        val dropped = q.recentProgress
-          .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-        require(dropped > 0L, "the rig must actually exercise the drop path")
-        deleteTree(streamDir)
-        s.table(name)
+        st.drain(counts, "append", minBatches = 5, check = progress => {
+          val dropped = progress
+            .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
+          require(dropped > 0L, "the rig must actually exercise the drop path")
+        })
       },
       Some {
         import graft.queries.DuckXxHash._
@@ -3098,18 +2770,14 @@ object SynthQueries {
     // every hash bit, every band key, each bucket's min-id survivor,
     // and the verify-and-merge rule in SQL.
     QueryDef("g122_stream_banded_dedup",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g122")(st => withRocksDb(s) {
         import org.apache.spark.sql.Row
-        import org.apache.spark.sql.functions.{array, coalesce, explode, lit,
-          min => fmin, shiftright, when}
+        import org.apache.spark.sql.functions.{coalesce, explode, lit,
+          min => fmin, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-          StructType}
+        import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
         import s.implicits._
         val maxHamming = 3
-        val nBands = maxHamming + 1
-        val bandBits = 64 / nBands
-        val mask = (1L << bandBits) - 1
         val ids = s.read.parquet(s"$d/documents.parquet")
           .select(col("doc_id").cast("long").as("base_id"))
         val rig = ids
@@ -3131,15 +2799,14 @@ object SynthQueries {
               .hashCorpusPng(r.getLong(0), r.getInt(2), r.getInt(3)))
           }
         }
-        val streamDir = java.nio.file.Files.createTempDirectory("g122_imgs")
+        val streamDir = st.dir("imgs")
         val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
           .collect()(0).getLong(0) / 2
         Seq(
           "a_low" -> fixture.filter(col("id") <= half),
           "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
           "c_dups" -> fixture.filter(col("id") >= 10000000L)
-        ).pipe(fs => graft.streaming.StreamFiles.writeMany(fs, streamDir))
-        val name = "g122_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
+        ).pipe(fs => StreamFiles.writeMany(fs, streamDir))
         val hashed = graft.ops.ImageDedup.dHash(
           s.readStream.schema(fixture.schema)
             .option("maxFilesPerTrigger", "1")
@@ -3161,16 +2828,8 @@ object SynthQueries {
             TimeMode.None(), OutputMode.Append(),
             implicitly[org.apache.spark.sql.Encoder[(Long, Long)]])
           .toDF("id", "cand")
-        val q = decided.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        require(batches >= 3, s"expected >= 3 micro-batches, got $batches")
-        deleteTree(streamDir)
         // merge the per-band emissions: min matched survivor, else -1
-        s.table(name).groupBy("id")
+        st.drain(decided, "append", minBatches = 3).groupBy("id")
           .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
             .as("dup_of"))
       }),
@@ -3217,15 +2876,12 @@ object SynthQueries {
     // re-arrives later with 1-3 bits flipped, and the oracle replays
     // min-verifying-earlier-member over ALL bucket members in SQL.
     QueryDef("g124_stream_banded_index",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
-        import org.apache.spark.sql.functions.{array, coalesce, explode, expr,
-          lit, min => fmin, pmod, shiftright, when, xxhash64}
+      (s, d) => streamScoped(s, "g124")(st => withRocksDb(s) {
+        import org.apache.spark.sql.functions.{coalesce, explode, expr,
+          lit, min => fmin, pmod, when, xxhash64}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
         val maxHamming = 3
-        val nBands = maxHamming + 1
-        val bandBits = 64 / nBands
-        val mask = (1L << bandBits) - 1
         val ids = s.read.parquet(s"$d/documents.parquet")
           .select(col("doc_id").cast("long").as("base_id"))
         val base = ids.select(col("base_id").as("id"),
@@ -3242,15 +2898,14 @@ object SynthQueries {
             xxhash64(col("base_id")).bitwiseXOR(col("fl")).as("sig"))
         val fixture = base.unionByName(twins)
           .select(col("id"), (col("id") * 1000000L).as("ts"), col("sig"))
-        val streamDir = java.nio.file.Files.createTempDirectory("g124_sigs")
+        val streamDir = st.dir("sigs")
         val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
           .collect()(0).getLong(0) / 2
         Seq(
           "a_low" -> fixture.filter(col("id") <= half),
           "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
           "c_dups" -> fixture.filter(col("id") >= 10000000L)
-        ).pipe(fs => graft.streaming.StreamFiles.writeMany(fs, streamDir))
-        val name = "g124_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
+        ).pipe(fs => StreamFiles.writeMany(fs, streamDir))
         val banded = s.readStream.schema(fixture.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(streamDir.toString)
@@ -3267,15 +2922,7 @@ object SynthQueries {
             TimeMode.None(), OutputMode.Append(),
             implicitly[org.apache.spark.sql.Encoder[(Long, Long)]])
           .toDF("id", "cand")
-        val q = decided.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        require(batches >= 3, s"expected >= 3 micro-batches, got $batches")
-        deleteTree(streamDir)
-        s.table(name).groupBy("id")
+        st.drain(decided, "append", minBatches = 3).groupBy("id")
           .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
             .as("dup_of"))
       }),
@@ -3293,7 +2940,7 @@ object SynthQueries {
     // watermark/sentinel machinery: the processor runs TimeMode.None
     // and emits per arrival.
     QueryDef("g126_stream_index_restart",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g126")(st => withRocksDb(s) {
         import org.apache.spark.sql.functions.{coalesce, explode, expr, lit,
           min => fmin, pmod, when, xxhash64}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -3315,9 +2962,9 @@ object SynthQueries {
             xxhash64(col("base_id")).bitwiseXOR(col("fl")).as("sig"))
         val fixture = base.unionByName(twins)
           .select(col("id"), (col("id") * 1000000L).as("ts"), col("sig"))
-        val streamDir = java.nio.file.Files.createTempDirectory("g126_sigs")
-        val ckptDir = java.nio.file.Files.createTempDirectory("g126_ckpt").toString
-        val outDir = java.nio.file.Files.createTempDirectory("g126_out").toString
+        val streamDir = st.dir("sigs")
+        val ckptDir = st.dir("ckpt").toString
+        val outDir = st.dir("out").toString
         val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
           .collect()(0).getLong(0) / 2
         def runIncarnation(): Long = {
@@ -3340,13 +2987,13 @@ object SynthQueries {
             .option("path", outDir)
             .option("checkpointLocation", ckptDir)
             .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .trigger(Trigger.AvailableNow())
             .start()
           q.awaitTermination()
           q.recentProgress.map(_.numInputRows).sum
         }
         // phase 1: the base corpus only (two id-ordered files)
-        graft.streaming.StreamFiles.writeMany(
+        StreamFiles.writeMany(
           Seq("a_low" -> fixture.filter(col("id") <= half),
             "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L)),
           streamDir)
@@ -3354,20 +3001,15 @@ object SynthQueries {
         require(rows1 > 0L, "phase 1 processed no rows")
         // phase 2: the twins land; a NEW query resumes from the checkpoint
         val twinRows = fixture.filter(col("id") >= 10000000L).count()
-        writeStreamFile(fixture.filter(col("id") >= 10000000L), streamDir,
+        StreamFiles.writeOne(fixture.filter(col("id") >= 10000000L), streamDir,
           "c_dups")
         val rows2 = runIncarnation()
         require(rows2 == twinRows,
           s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
             s"expected exactly the twins' $twinRows")
-        val res = s.read.parquet(outDir).groupBy("id")
+        materialized(s.read.parquet(outDir).groupBy("id")
           .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
-            .as("dup_of"))
-        val out = s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
-        Seq(streamDir, java.nio.file.Paths.get(ckptDir),
-          java.nio.file.Paths.get(outDir)).foreach(deleteTree)
-        out
+            .as("dup_of")))
       }),
       // the SAME oracle as g124: a restarted index must attribute
       // identically to the uninterrupted run
@@ -3405,10 +3047,9 @@ object SynthQueries {
     // would swap in the banded/bounded-window index family
     // (g124/g128).
     QueryDef("g130_stream_discovery",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g130") { st =>
         val dir = graft.queries.PipelineQueries.LinkWarcFixture.dir(s, d)
-        val name = "g130_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
+        val name = st.sinkName
         val q = s.readStream.format("warc")
           .option("filesPerBatch", "1")
           // intra-segment parallelism via the CDX sidecars (see
@@ -3449,7 +3090,7 @@ object SynthQueries {
     // fetch_at_s = (rank-1) * delay — the prefix-sum the carried state
     // must equal over the FULL sequence.
     QueryDef("g131_stream_frontier",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g131")(st => withRocksDb(s) {
         import org.apache.spark.sql.functions.{concat, lit, max => fmax, pmod}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
@@ -3478,9 +3119,9 @@ object SynthQueries {
           "a_first" -> cand.filter(col("id") <= t1),
           "b_second" -> cand.filter(col("id") > t1 && col("id") <= t2),
           "c_third" -> cand.filter(col("id") > t2))
-        val streamDir = java.nio.file.Files.createTempDirectory("g131_cand")
-        val ckptDir = java.nio.file.Files.createTempDirectory("g131_ckpt").toString
-        val outDir = java.nio.file.Files.createTempDirectory("g131_out").toString
+        val streamDir = st.dir("cand")
+        val ckptDir = st.dir("ckpt").toString
+        val outDir = st.dir("out").toString
         def runIncarnation(): Long = {
           val scheduled = s.readStream.schema(cand.schema)
             .option("maxFilesPerTrigger", "1")
@@ -3496,29 +3137,24 @@ object SynthQueries {
             .option("path", outDir)
             .option("checkpointLocation", ckptDir)
             .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .trigger(Trigger.AvailableNow())
             .start()
           q.awaitTermination()
           q.recentProgress.map(_.numInputRows).sum
         }
         val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
         val oldNoData = s.conf.get(noDataKey)
-        graft.streaming.StreamFiles.writeMany(files.take(2), streamDir)
+        StreamFiles.writeMany(files.take(2), streamDir)
         s.conf.set(noDataKey, "false")
         val rows1 = try runIncarnation() finally s.conf.set(noDataKey, oldNoData)
         require(rows1 > 0L, "phase 1 processed no rows")
         val tailRows = files(2)._2.count()
-        writeStreamFile(files(2)._2, streamDir, files(2)._1)
+        StreamFiles.writeOne(files(2)._2, streamDir, files(2)._1)
         val rows2 = runIncarnation()
         require(rows2 == tailRows,
           s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
             s"expected exactly the new file's $tailRows")
-        val res = s.read.parquet(outDir)
-        val out = s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
-        Seq(streamDir, java.nio.file.Paths.get(ckptDir),
-          java.nio.file.Paths.get(outDir)).foreach(deleteTree)
-        out
+        materialized(s.read.parquet(outDir))
       }),
       Some("""WITH c AS (SELECT doc_id,
             (doc_id % 7) % 4 + 1 + (doc_id // 7) % 3 AS delay_s
@@ -3540,9 +3176,9 @@ object SynthQueries {
     // splits inside each batch, and every sample member must arrive
     // exactly once with its exact size.
     QueryDef("g132_stream_wds_ingest",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g132") { st =>
         import org.apache.spark.sql.functions.{concat, lit, lpad, pmod}
-        val outDir = java.nio.file.Files.createTempDirectory("g132_wds").toString
+        val outDir = st.dir("wds").toString
         def gen(parity: Int): Unit = {
           val base = s.read.parquet(s"$d/documents.parquet")
             .select(col("doc_id").cast("long").as("doc_id"))
@@ -3565,8 +3201,7 @@ object SynthQueries {
             .option("path", outDir).option("targetShardBytes", "8388608").save()
         }
         gen(0); gen(1)
-        val name = "g132_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
+        val name = st.sinkName
         val q = s.readStream.format("wds")
           .option("manifestOnly", "true").option("filesPerBatch", "2")
           .option("splitTargetBytes", "4194304")
@@ -3606,12 +3241,12 @@ object SynthQueries {
     // suffices, the bounded/windowed variants (BandedFirstSeen /
     // BandedWindowIndex, g124/g126/g128) are the capped alternatives.
     QueryDef("g133_stream_crawl_loop",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g133")(st => withRocksDb(s) {
         import org.apache.spark.sql.functions.{ascii, broadcast, concat,
           explode, lit, pmod, substring, xxhash64}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        val warcDir = java.nio.file.Files.createTempDirectory("g133_warc").toString
+        val warcDir = st.dir("warc").toString
         val did = col("doc_id")
         def writeGen(g: Long): Long = {
           val pages = s.read.parquet(s"$d/documents.parquet")
@@ -3660,10 +3295,9 @@ object SynthQueries {
             (pmod(ascii(substring(col("host"), 2, 1)), lit(3)) + 1).cast("long"))
         // O(hosts) rows — pin them as a literal frame so each
         // micro-batch's broadcast costs nothing to recompute
-        val delayDim = s.createDataFrame(
-          java.util.Arrays.asList(delayDf.collect(): _*), delayDf.schema)
-        val ckptDir = java.nio.file.Files.createTempDirectory("g133_ckpt").toString
-        val outDir = java.nio.file.Files.createTempDirectory("g133_out").toString
+        val delayDim = materialized(delayDf)
+        val ckptDir = st.dir("ckpt").toString
+        val outDir = st.dir("out").toString
         def runIncarnation(): Long = {
           val scheduled = s.readStream.format("warc")
             .option("manifestOnly", "true").option("filesPerBatch", "1")
@@ -3734,11 +3368,7 @@ object SynthQueries {
           .join(candBatch.select(col("curl"), xxhash64(col("curl")).as("id")),
             Seq("id"))
           .select(col("curl"), col("host"), col("seq"), col("fetch_at_s"))
-        val out = s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
-        Seq(java.nio.file.Paths.get(warcDir), java.nio.file.Paths.get(ckptDir),
-          java.nio.file.Paths.get(outDir)).foreach(deleteTree)
-        out
+        materialized(res)
       }),
       Some {
         import graft.queries.DuckXxHash._
@@ -3774,13 +3404,13 @@ object SynthQueries {
     // clustered+sorted distribution on the streaming write path too
     // (spread pinned both here and in WdsSpec).
     QueryDef("g134_stream_warc_to_wds",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g134") { st =>
         import org.apache.spark.sql.functions.{array, concat, countDistinct,
           explode, lit, md5, pmod, struct, when}
         val did = col("doc_id")
-        val warcDir = java.nio.file.Files.createTempDirectory("g134_warc").toString
-        val outDir = java.nio.file.Files.createTempDirectory("g134_wds").toString
-        val ckptDir = java.nio.file.Files.createTempDirectory("g134_ckpt").toString
+        val warcDir = st.dir("warc").toString
+        val outDir = st.dir("wds").toString
+        val ckptDir = st.dir("ckpt").toString
         def writeGen(g: Long): Unit =
           s.read.parquet(s"$d/documents.parquet")
             .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -3833,11 +3463,7 @@ object SynthQueries {
         val res = back.join(spread, Seq("key"))
           .select(col("key"), col("ext"), col("size"),
             md5(col("payload")).as("payload_md5"), col("shard_spread"))
-        val out = s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
-        Seq(warcDir, outDir, ckptDir)
-          .foreach(p => deleteTree(java.nio.file.Paths.get(p)))
-        out
+        materialized(res)
       },
       Some("""WITH p AS (SELECT doc_id, text,
             'https://w' || CAST(doc_id % 5 AS VARCHAR) || '.example.com/d/' ||
@@ -3867,14 +3493,14 @@ object SynthQueries {
     // scheduled (require-pinned per turn) — the feedback edge is load-
     // bearing, not decorative.
     QueryDef("g135_stream_crawl_feedback",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g135")(st => withRocksDb(s) {
         import org.apache.spark.sql.functions.{array, ascii, broadcast,
           concat, explode, lit, md5, pmod, substring, when, xxhash64}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        val warcDir = java.nio.file.Files.createTempDirectory("g135_warc").toString
-        val ckptDir = java.nio.file.Files.createTempDirectory("g135_ckpt").toString
-        val outDir = java.nio.file.Files.createTempDirectory("g135_out").toString
+        val warcDir = st.dir("warc").toString
+        val ckptDir = st.dir("ckpt").toString
+        val outDir = st.dir("out").toString
         val did = col("doc_id")
         def urlOf(dep: Int, j: org.apache.spark.sql.Column) =
           concat(lit("https://h"), pmod(j, lit(5L)).cast("string"),
@@ -3895,7 +3521,7 @@ object SynthQueries {
                 .otherwise(urlOf(2, col("j"))))
             .select(col("curl"), col("depth"), col("j"),
               xxhash64(col("curl")).as("id"))
-          s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+          materialized(df)
         }
         val dcount = uni.groupBy("depth").count().as[(Long, Long)]
           .collect().toMap
@@ -3905,8 +3531,7 @@ object SynthQueries {
           .distinct()
           .withColumn("delay_s",
             (pmod(ascii(substring(col("host"), 2, 1)), lit(3)) + 1).cast("long"))
-        val delayDim = s.createDataFrame(
-          java.util.Arrays.asList(delayDf.collect(): _*), delayDf.schema)
+        val delayDim = materialized(delayDf)
         def linkPage(target: org.apache.spark.sql.Column,
             hrefs: Seq[org.apache.spark.sql.Column]) = {
           val body =
@@ -4023,11 +3648,7 @@ object SynthQueries {
         val res = s.read.parquet(outDir)
           .join(uni.select(col("curl"), col("id")), Seq("id"))
           .select(col("curl"), col("host"), col("seq"), col("fetch_at_s"))
-        val out = s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
-        Seq(warcDir, ckptDir, outDir)
-          .foreach(p => deleteTree(java.nio.file.Paths.get(p)))
-        out
+        materialized(res)
       }),
       Some {
         import graft.queries.DuckXxHash._
@@ -4066,13 +3687,12 @@ object SynthQueries {
     // because each digest has exactly one original, so the resolved
     // set replays as a plain relational join.
     QueryDef("g136_stream_revisit",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g136")(st => withRocksDb(s) {
         import org.apache.spark.sql.functions.md5
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
         val dir = graft.queries.PipelineQueries.RevisitStreamFixture.dir(s, d)
-        val name = "g136_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
+        val name = st.sinkName
         val q = s.readStream.format("warc")
           .option("filesPerBatch", "1")
           .load(dir)
@@ -4107,11 +3727,10 @@ object SynthQueries {
         FROM refs JOIN d o ON refs.ref = o.id""")),
 
     QueryDef("g129_stream_warc_ingest",
-      (s, d) => streamScoped(s) {
+      (s, d) => streamScoped(s, "g129") { st =>
         import org.apache.spark.sql.functions.md5
         val warcDir = graft.queries.PipelineQueries.WarcSinkFixture.dir(s, d)
-        val name = "g129_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
+        val name = st.sinkName
         val q = s.readStream.format("warc")
           .option("filesPerBatch", "1")
           .load(warcDir)
@@ -4131,7 +3750,7 @@ object SynthQueries {
         FROM documents WHERE doc_id % 9 <> 0 AND doc_id % 7 <> 0""")),
 
     QueryDef("g128_stream_index_window",
-      (s, d) => streamScoped(s)(withRocksDb(s) {
+      (s, d) => streamScoped(s, "g128")(st => withRocksDb(s) {
         import org.apache.spark.sql.functions.{coalesce, explode, expr, lit,
           min => fmin, pmod, when, xxhash64, max => fmax}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -4156,14 +3775,13 @@ object SynthQueries {
             xxhash64(col("base_id")).bitwiseXOR(col("fl")).as("sig"))
         val fixture = base.unionByName(twins)
           .select(col("id"), col("ord"), col("sig"))
-        val streamDir = java.nio.file.Files.createTempDirectory("g128_sigs")
+        val streamDir = st.dir("sigs")
         val half = maxId / 2
         Seq(
           "a_low" -> fixture.filter(col("id") <= half),
           "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
           "c_dups" -> fixture.filter(col("id") >= 10000000L)
-        ).pipe(fs => graft.streaming.StreamFiles.writeMany(fs, streamDir))
-        val name = "g128_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
+        ).pipe(fs => StreamFiles.writeMany(fs, streamDir))
         val banded = s.readStream.schema(fixture.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(streamDir.toString)
@@ -4180,15 +3798,7 @@ object SynthQueries {
             TimeMode.None(), OutputMode.Append(),
             implicitly[org.apache.spark.sql.Encoder[(Long, Long)]])
           .toDF("id", "cand")
-        val q = decided.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        require(batches >= 3, s"expected >= 3 micro-batches, got $batches")
-        deleteTree(streamDir)
-        s.table(name).groupBy("id")
+        st.drain(decided, "append", minBatches = 3).groupBy("id")
           .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
             .as("dup_of"))
       }),

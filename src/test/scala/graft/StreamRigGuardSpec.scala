@@ -1,0 +1,36 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps the streaming-rig fold from growing back: the events symlink,
+  * the nanosAsLong read and the AvailableNow memory-sink drain each
+  * live in one helper of `SynthQueries` (SparkEntry.scala).
+  */
+class StreamRigGuardSpec extends AnyFunSuite {
+
+  private lazy val sparkEntry: String = {
+    val f = new java.io.File("src/main/scala/graft/SparkEntry.scala")
+    assert(f.isFile, s"expected source file at ${f.getAbsolutePath}")
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+  }
+
+  private def occurrences(needle: String): Int =
+    java.util.regex.Pattern.quote(needle).r.findAllMatchIn(sparkEntry).size
+
+  test("events are staged through one symlink helper") {
+    val n = occurrences("createSymbolicLink")
+    assert(n <= 1, s"$n createSymbolicLink sites; stage events through StreamScope.events")
+  }
+
+  test("nanosAsLong is set in one place") {
+    val n = occurrences("spark.sql.legacy.parquet.nanosAsLong")
+    assert(n <= 1, s"$n nanosAsLong sites; read events through eventsRaw")
+  }
+
+  test("memory sinks go through the one drain") {
+    // the drain plus the four processAllAvailable rigs (g129, g130, g132,
+    // g136), whose custom sources the AvailableNow wrapper cannot drive
+    val n = occurrences("""format("memory")""")
+    assert(n <= 5, s"$n memory-sink sites; drain through StreamScope.drain")
+  }
+}
