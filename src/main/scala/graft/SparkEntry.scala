@@ -36,7 +36,7 @@ object SynthQueries {
   import graft.api.{CannedSources, Processors}
   import graft.synth.Synth
   import graft.queries.EventTs
-  import graft.streaming.StreamFiles
+  import graft.streaming.{LocalCheckpointFileManager, StreamFiles}
   import org.apache.spark.sql.functions.{base64, col, to_json}
   import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
   import org.apache.spark.sql.types.{ArrayType, BinaryType, LongType, MapType,
@@ -59,10 +59,23 @@ object SynthQueries {
     * shuffle should track executor count instead (set before the query
     * first starts — state partitioning is fixed at the first run).
     *
+    * Checkpoints are committed through
+    * [[graft.streaming.LocalCheckpointFileManager]], pinned inside the
+    * scope. Spark's default manager for a local path forks `readlink`
+    * twice per side of every rename, for each file and its `.crc`, and
+    * Hadoop's local FileSystem forks `chmod` for every file and dir it
+    * creates when libhadoop is absent. Those forks, not the writes, were
+    * the ~40 ms WAL/offset/commit floor of every micro-batch: one 10-s
+    * `stream_ingest` bench run (g122 on RocksDB state) started 2,437
+    * `readlink` and 874 `chmod` processes, 2.5 CPU-s of children. With
+    * the pin the same run starts no `readlink` and 190 `chmod` (RocksDB
+    * SST uploads and fixture writes, outside the manager), 0.2 CPU-s.
+    * Other schemes keep Spark's default manager.
+    *
     * On exit, success or failure, the scope restores the previous
-    * partition count so batch queries keep the session default, drops
-    * every `_sink_` memory-sink view, and deletes every dir the body
-    * staged through `dir`. A rig whose result reads a staged dir (a
+    * partition count and checkpoint manager so batch queries keep the
+    * session defaults, drops every `_sink_` memory-sink view, and
+    * deletes every dir the body staged through `dir`. A rig whose result reads a staged dir (a
     * parquet sink, a `foreachBatch` output) must therefore return it
     * [[materialized]]; memory-sink tables already hold their rows in the
     * driver.
@@ -71,10 +84,14 @@ object SynthQueries {
       f: StreamScope => DataFrame): DataFrame = {
     val key = "spark.sql.shuffle.partitions"
     val old = s.conf.get(key)
+    val fmKey = LocalCheckpointFileManager.ConfKey
+    val oldFm = s.conf.getOption(fmKey)
     val scope = new StreamScope(s, rig)
     s.conf.set(key, "8")
+    s.conf.set(fmKey, classOf[LocalCheckpointFileManager].getName)
     try f(scope) finally {
       s.conf.set(key, old)
+      oldFm.fold(s.conf.unset(fmKey))(s.conf.set(fmKey, _))
       // Memory-sink hygiene: every streaming replay registers a fresh
       // uuid-named memory sink holding its full result in driver memory,
       // and nothing ever dropped them — N bench reps retained N result

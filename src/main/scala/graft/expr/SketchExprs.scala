@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native sketch primitives for the dedup family. Each replaces a
   * higher-order-function chain (transform/aggregate lambdas) that Spark

@@ -48,9 +48,6 @@ object Constraints {
   /** Run every rule; returns (rule, violations) — one bigint row each. */
   def validate(df: DataFrame, rules: Seq[Rule]): DataFrame = {
     require(rules.nonEmpty, "no rules")
-    val spark = df.sparkSession
-    import spark.implicits._
-
     val rowLocal: Seq[(String, Column)] = rules.collect {
       case NotNull(n, c) => n -> col(c).isNull
       case InRange(n, c, lo, hi) =>

@@ -42,21 +42,39 @@ object BuildOnce {
   def apply[T <: AnyRef](name: String, sfDir: String)(build: => T): T =
     once(name, sfDir)(build)(_ => "")
 
+  /** Every dir [[dir]] created and no [[clear]] has deleted yet. */
+  private val dirs = ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+
+  /** Deletes what [[clear]] did not, when the JVM exits. */
+  private lazy val deleteOnExit: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteDirs()))
+
+  private def deleteDirs(): Unit = dirs.forEach { d =>
+    graft.streaming.StreamFiles.deleteTree(d)
+    dirs.remove(d)
+  }
+
   /** A fresh temp directory (prefix `name`) filled by `write`, once per
-    * (name, sfDir); returns its path.
+    * (name, sfDir); returns its path. The dir lives until [[clear]] or
+    * the end of the JVM, whichever comes first.
     */
   def dir(name: String, sfDir: String)(write: String => Unit): String =
     once(name, sfDir) {
-      val d = java.nio.file.Files.createTempDirectory(name).toString
-      write(d)
-      d
+      deleteOnExit
+      val d = java.nio.file.Files.createTempDirectory(name)
+      dirs.add(d)
+      write(d.toString)
+      d.toString
     }(d => s" -> $d")
 
   /** Forget every memoized value, so the next call of each key rebuilds
-    * it. The parity harness calls this between passes: without it, a
-    * pass under a new master would serve what the previous master
-    * built, and a topology-dependent bug in a build's write path could
-    * never surface.
+    * it, and delete the dirs [[dir]] built. The parity harness calls
+    * this between passes: without it, a pass under a new master would
+    * serve what the previous master built, and a topology-dependent bug
+    * in a build's write path could never surface.
     */
-  def clear(): Unit = cells.clear()
+  def clear(): Unit = {
+    cells.clear()
+    deleteDirs()
+  }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{InputStream, OutputStream}
+import java.io.OutputStream
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._

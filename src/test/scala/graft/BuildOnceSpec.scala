@@ -69,4 +69,14 @@ class BuildOnceSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(d2, "marker")))
     assert(new java.io.File(d2).getName.startsWith("spec_clear"))
   }
+
+  test("clear() deletes the dirs dir(key) built") {
+    val d = BuildOnce.dir("spec_clear_deletes", "sf") { d =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d, "sub"))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(d, "sub", "f"), "x")
+    }
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(d, "sub", "f")))
+    BuildOnce.clear()
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
+  }
 }
