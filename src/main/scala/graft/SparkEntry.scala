@@ -1338,8 +1338,8 @@ object SynthQueries {
     // the disk-backed IVF index: corpus written partitioned by cluster
     // id, probes read back through parquet partition pruning (only the
     // probed directories are listed) — the storage-layout form of g49's
-    // runtime probe filter. The disk==memory equivalence and the
-    // PartitionFilters plan shape are pinned in OpsSpec.
+    // runtime probe filter, served by the graft.ops.Ivf core. The
+    // disk==memory equivalence and the pruned scan are pinned in OpsSpec.
     annPinDef("g67_ann_ivf_disk")((s, d) => {
       val vecs = s.read.parquet(s"$d/embeddings.parquet")
       val dir = BuildOnce.dir("g67_ivf", d) { dir =>
@@ -1350,9 +1350,9 @@ object SynthQueries {
         vecs.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", 10, nProbe = 4)
     }),
 
-    // quantized IVF disk index (the quantized scoring kernel itself is
-    // bit-oracled by q68, the partition-pruned scan shape by the g67
-    // family's plan test): probed directories are the only ones opened
+    // quantized IVF disk index on the Ivf core (the int8 scorer itself
+    // is bit-oracled by q68, the pruned scan pinned in ScaleOpsSpec):
+    // probed directories are the only ones opened
     // AND hold int8 codes — a fraction of a fraction of the bytes at
     // 100 TB
     annPinDef("g86_ann_ivf_quant")((s, d) => {
@@ -1407,10 +1407,10 @@ object SynthQueries {
     }),
 
     // IVF-PQ disk index: all three 100 TB ANN levers stacked — probed
-    // directories are the only ones opened, rows inside are
-    // ~40x-compressed PQ codes, and serving is table-lookup ADC. Scores
-    // proven identical to the g89 kernel and the pruning proven in the
-    // plan by ScaleOpsSpec.
+    // directories are the only ones opened (the Ivf core), rows inside
+    // are ~40x-compressed PQ codes, and the scorer is table-lookup ADC.
+    // Scores proven identical to the g89 kernel and the pruned scan
+    // pinned by ScaleOpsSpec.
     annPinDef("g91_ann_ivfpq")((s, d) => {
       val vecs = s.read.parquet(s"$d/embeddings.parquet")
       val dir = BuildOnce.dir("g91_ivfpq", d) { dir =>
@@ -1439,14 +1439,15 @@ object SynthQueries {
         vecs.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", 10, nProbe = 4)
     }),
 
-    // the hash-IVF disk index: the g67/g86/g91 serving shape with a FULL
-    // hash-match oracle. Coarse assignment + probe choice are exact
+    // the hash-IVF disk index: the Ivf serving core of g67/g86/g91 with
+    // a FULL hash-match oracle. Coarse assignment + probe choice are exact
     // BIGINT dots against hash-derived pseudo-centroids (the q54
     // convention), codes are the bit-oracled q68 int8 quantization, so
     // the entire index lifecycle — build, rout, prune, score, rank —
     // replays bit-for-bit in DuckDB. This is the family's end-to-end
     // correctness anchor; the float-k-means variants (g67/g86/g91/g107)
-    // share the serve path but can't be cross-engine-hashed.
+    // serve through the same Ivf core with other probe expansions and
+    // scorers, but can't be cross-engine-hashed.
     QueryDef("g110_ann_hash_ivf",
       (s, d) => {
         val vecs = s.read.parquet(s"$d/embeddings.parquet")

@@ -63,7 +63,7 @@ object Bloom {
     *
     * The collect is bounded by m/64 rows BY CONSTRUCTION (group key is
     * the word index), independent of build-side cardinality — the
-    * legitimate-collect contract of Similarity.ivfTopKFromIndex.
+    * legitimate-collect contract of the IVF probe step (Ivf.scan).
     */
   def buildBits(build: DataFrame, keyCol: String, m: Int, k: Int): Array[Long] = {
     validate(m, k)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al., TPAMI 2011) — the third ANN
@@ -22,30 +21,24 @@ import org.apache.spark.sql.functions._
 object Pq {
 
   /** Plain (non-spherical) L2 k-means on a driver-side sample of each
-    * subspace. Sampling contract is Similarity.fitCentroids': a
-    * corpus-wide `.sample()`, never `limit()` (first-partitions bias);
-    * the collect is bounded by sampleSize. Empty clusters respawn on
-    * the farthest point, ties break deterministically by index.
-    * Returns codebooks[m][k][d/m].
+    * subspace, over [[Ivf.sample]]'s bounded corpus-wide sample. Empty
+    * clusters respawn on the farthest point, ties break deterministically
+    * by index. Returns codebooks[m][k][d/m].
     */
   def fitCodebooks(vectors: DataFrame, vecCol: String, m: Int, k: Int,
       iters: Int = 10, sampleSize: Int = 10000, seed: Long = 42L): Array[Array[Array[Double]]] = {
     require(m >= 1 && k >= 2, s"need m >= 1 subspaces and k >= 2 codewords: $m, $k")
-    val total = vectors.count()
-    val base = vectors.select(unitize(col(vecCol).cast("array<double>")).as("u"))
-    val sampled =
-      if (total <= sampleSize) base
-      else base.sample(withReplacement = false,
-        math.min(1.0, 1.1 * sampleSize / total), seed)
-    val sample = sampled.limit(sampleSize).collect().map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "empty corpus")
-    val d = sample.head.length
+    fitSubspaces(Ivf.sample(vectors, vecCol, sampleSize, seed), m, k, iters, seed)
+  }
+
+  /** One [[kmeans]] per subspace of `pts` (subspace s seeded seed + s). */
+  private def fitSubspaces(pts: Array[Array[Double]], m: Int, k: Int, iters: Int,
+      seed: Long): Array[Array[Array[Double]]] = {
+    require(pts.nonEmpty, "empty corpus")
+    val d = pts.head.length
     require(d % m == 0, s"dim $d not divisible by m=$m")
     val sub = d / m
-    Array.tabulate(m) { s =>
-      val pts = sample.map(v => v.slice(s * sub, (s + 1) * sub))
-      kmeans(pts, k, iters, seed + s)
-    }
+    Array.tabulate(m)(s => kmeans(pts.map(_.slice(s * sub, (s + 1) * sub)), k, iters, seed + s))
   }
 
   private def kmeans(pts: Array[Array[Double]], k: Int, iters: Int,
@@ -60,8 +53,8 @@ object Pq {
       var j = 0
       while (j < n) {
         val p = pts(j)
-        val c = nearestL2(centers, p)
-        dists(j) = distL2(centers(c), p)
+        val c = Ivf.nearest(centers, p)
+        dists(j) = Ivf.distL2(centers(c), p)
         counts(c) += 1
         var i = 0
         while (i < p.length) { sums(c)(i) += p(i); i += 1 }
@@ -85,46 +78,22 @@ object Pq {
     centers
   }
 
-  private def distL2(a: Array[Double], b: Array[Double]): Double = {
-    var (d2, i) = (0d, 0)
-    while (i < a.length) { val t = a(i) - b(i); d2 += t * t; i += 1 }
-    d2
-  }
-
-  private def nearestL2(centers: Array[Array[Double]], p: Array[Double]): Int = {
-    var (best, bestD) = (0, Double.MaxValue)
-    var c = 0
-    while (c < centers.length) {
-      var (d2, i) = (0d, 0)
-      while (i < p.length) { val t = p(i) - centers(c)(i); d2 += t * t; i += 1 }
-      if (d2 < bestD) { best = c; bestD = d2 }
-      c += 1
-    }
-    best
-  }
-
-  private def unitize(v: Column): Column = {
-    val norm = sqrt(aggregate(v, lit(0d), (acc, x) => acc + x * x))
-    transform(v, x => when(norm === 0d, lit(0d)).otherwise(x / norm))
-  }
-
   /** Encode the corpus: (idCol, codes array<int> of length m) — per
     * subspace, the nearest codeword id. Broadcast-codebook scan-side
     * map; the encoded table is the thing you keep hot at 100 TB.
     */
   def encode(df: DataFrame, idCol: String, vecCol: String,
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val spark = df.sparkSession
-    val cb = spark.sparkContext.broadcast(codebooks)
-    val enc = udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      val norm = math.sqrt(arr.map(x => x * x).sum)
-      val u = if (norm == 0d) arr else arr.map(_ / norm)
-      val m = cb.value.length
-      val sub = u.length / m
-      Array.tabulate(m)(s => nearestL2(cb.value(s), u.slice(s * sub, (s + 1) * sub)))
-    }
+    val cb = df.sparkSession.sparkContext.broadcast(codebooks)
+    val enc = udf((v: Seq[Double]) => codesOf(cb.value, Ivf.unit(v.toArray)))
     df.select(col(idCol), enc(col(vecCol).cast("array<double>")).as("codes"))
+  }
+
+  /** Per subspace of `x`, the nearest codeword id. */
+  private def codesOf(codebooks: Array[Array[Array[Double]]], x: Array[Double]): Array[Int] = {
+    val sub = x.length / codebooks.length
+    Array.tabulate(codebooks.length)(s =>
+      Ivf.nearest(codebooks(s), x.slice(s * sub, (s + 1) * sub)))
   }
 
   /** ADC top-k: each query's m×k inner-product table is flattened to a
@@ -135,90 +104,57 @@ object Pq {
     */
   def adcTopK(encoded: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, codebooks: Array[Array[Array[Double]]], topK: Int): DataFrame = {
-    val k = codebooks.head.length
-    val tableOf = adcTable(codebooks)
     val q = broadcast(queries
       .select(col(idCol).as("qid"),
-        tableOf(col(vecCol).cast("array<double>")).as("tab")))
-    val score = aggregate(
+        adcTable(codebooks)(col(vecCol).cast("array<double>")).as("tab")))
+    Ivf.rank(encoded.select(col(idCol).as("id"), col("codes"))
+      .join(q, col("id") =!= col("qid")), adcScore(codebooks), topK)
+  }
+
+  /** The ADC scorer: m lookups of a candidate's `codes` into the
+    * query's `tab`, summed as integer micros.
+    */
+  private def adcScore(codebooks: Array[Array[Array[Double]]]): Column = {
+    val k = codebooks.head.length
+    aggregate(
       zip_with(col("codes"), sequence(lit(0), lit(codebooks.length - 1)),
         (c, s) => element_at(col("tab"), s * k + c + 1)),
       lit(0L), (acc, x) => acc + x)
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("id"))
-    encoded.select(col(idCol).as("id"), col("codes"))
-      .join(q, col("id") =!= col("qid"))
-      .withColumn("score", score)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= topK)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"),
-        col("id").as("neighbor"), col("score"))
   }
 
   // ------------------------------------------------------ IVF-PQ index
 
   /** Persist an IVF-PQ index — the faiss-style recipe with ALL THREE
     * 100 TB ANN levers stacked: coarse clusters become parquet
-    * PARTITIONS (probing prunes whole directories, the g67/g86
-    * contract), rows inside hold only the m PQ codes (~40× smaller
-    * than float64), and serving scores by table lookup. Codebooks and
-    * centroids persist as constant-size metadata tables beside the
-    * codes.
+    * PARTITIONS (probing prunes whole directories, the [[Ivf]] layout),
+    * rows inside hold only the m PQ codes (~40× smaller than float64),
+    * and serving scores by table lookup. Codebooks and centroids
+    * persist as constant-size metadata tables beside the codes.
     */
   def writePqIvfIndex(vectors: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]]): Unit = {
-    val spark = vectors.sparkSession
     val assigned = Similarity.assignClusters(vectors, vecCol, centroids)
-    encode(assigned, idCol, vecCol, codebooks)
-      .join(assigned.select(col(idCol), col("cluster")), idCol)
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/vectors")
-    Similarity.writeCentroidTable(spark, centroids, path)
-    import spark.implicits._
-    codebooks.zipWithIndex.flatMap { case (cb, s) =>
-      cb.zipWithIndex.map { case (w, c) => (s, c, w.toSeq) }
-    }.toSeq.toDF("s", "c", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    writeIndex(encode(assigned, idCol, vecCol, codebooks)
+      .join(assigned.select(col(idCol), col("cluster")), idCol), path, centroids, codebooks)
   }
 
-  /** Top-k from an IVF-PQ disk index: probe clusters driver-side
-    * (bounded collects — nlist centroids, nProbe ids per query), scan
-    * ONLY the probed code directories, ADC-score against the broadcast
-    * per-query tables. Same ranking kernel as [[adcTopK]], so the two
+  /** The IVF-PQ layout: code rows plus both metadata tables. */
+  private def writeIndex(rows: DataFrame, path: String, centroids: Array[Array[Double]],
+      codebooks: Array[Array[Array[Double]]]): Unit = {
+    Ivf.writeVectors(rows, path)
+    Ivf.writeCentroids(rows.sparkSession, centroids, path)
+    Ivf.writeCodebooks(rows.sparkSession, codebooks, path)
+  }
+
+  /** Top-k from an IVF-PQ disk index: the [[Ivf]] probe step (only the
+    * probed code directories are opened) with the ADC scorer against
+    * broadcast per-query tables. Same scorer as [[adcTopK]], so the two
     * paths agree exactly on shared candidates.
     */
   def pqIvfTopKFromIndex(indexPath: String, queries: DataFrame,
-      idCol: String, vecCol: String, topK: Int, nProbe: Int = 2): DataFrame = {
-    val spark = queries.sparkSession
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .orderBy("cluster").collect().map(_.getSeq[Double](1).toArray)
-    val cbRows = spark.read.parquet(s"$indexPath/codebooks").collect()
-    val m = cbRows.map(_.getInt(0)).max + 1
-    val k = cbRows.map(_.getInt(1)).max + 1
-    val codebooks = Array.ofDim[Array[Double]](m, k)
-    cbRows.foreach(r => codebooks(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-    val tableOf = adcTable(codebooks)
-    val qq = queries
-      .select(col(idCol).as("qid"),
-        tableOf(col(vecCol).cast("array<double>")).as("tab"),
-        explode(Similarity.probeIds(spark, centroids, nProbe)(
-          col(vecCol).cast("array<double>"))).as("probe"))
-    val probed = qq.select("probe").distinct().collect().map(_.getInt(0))
-    val corpus = spark.read.parquet(s"$indexPath/vectors")
-      .filter(col("cluster").isin(probed.map(Integer.valueOf): _*))
-      .select(col(idCol).as("id"), col("codes"), col("cluster"))
-    val score = aggregate(
-      zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
-        (c, s) => element_at(col("tab"), s * k + c + 1)),
-      lit(0L), (acc, x) => acc + x)
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("id"))
-    corpus.join(broadcast(qq),
-      col("cluster") === col("probe") && col("id") =!= col("qid"))
-      .withColumn("score", score)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= topK)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"),
-        col("id").as("neighbor"), col("score"))
-  }
+      idCol: String, vecCol: String, topK: Int, nProbe: Int = 2): DataFrame =
+    serveAdc(indexPath, queries, idCol, vecCol, topK, nProbe, residual = false)
 
   // ------------------------------------- residual IVF-PQ (faiss proper)
 
@@ -233,25 +169,15 @@ object Pq {
       centroids: Array[Array[Double]], m: Int, k: Int, iters: Int = 10,
       sampleSize: Int = 10000, seed: Long = 42L): Array[Array[Array[Double]]] = {
     require(m >= 1 && k >= 2, s"need m >= 1 subspaces and k >= 2 codewords: $m, $k")
-    val total = vectors.count()
-    val base = vectors.select(unitize(col(vecCol).cast("array<double>")).as("u"))
-    val sampled =
-      if (total <= sampleSize) base
-      else base.sample(withReplacement = false,
-        math.min(1.0, 1.1 * sampleSize / total), seed)
-    val sample = sampled.limit(sampleSize).collect().map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "empty corpus")
-    val d = sample.head.length
-    require(d % m == 0, s"dim $d not divisible by m=$m")
-    val sub = d / m
-    val residuals = sample.map { u =>
-      val c = centroids(nearestL2(centroids, u))
-      Array.tabulate(d)(i => u(i) - c(i))
-    }
-    Array.tabulate(m) { s =>
-      val pts = residuals.map(r => r.slice(s * sub, (s + 1) * sub))
-      kmeans(pts, k, iters, seed + s)
-    }
+    fitSubspaces(Ivf.sample(vectors, vecCol, sampleSize, seed).map(residualOf(centroids, _)._2),
+      m, k, iters, seed)
+  }
+
+  /** unit(v) − its nearest centroid, with that centroid's id. */
+  private def residualOf(centroids: Array[Array[Double]],
+      u: Array[Double]): (Int, Array[Double]) = {
+    val c = Ivf.nearest(centroids, u)
+    (c, Array.tabulate(u.length)(i => u(i) - centroids(c)(i)))
   }
 
   /** Persist a RESIDUAL IVF-PQ index: same layout as
@@ -261,29 +187,16 @@ object Pq {
   def writeResidualPqIvfIndex(vectors: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]]): Unit = {
-    val spark = vectors.sparkSession
-    val cs = spark.sparkContext.broadcast(centroids)
-    val cb = spark.sparkContext.broadcast(codebooks)
+    val sc = vectors.sparkSession.sparkContext
+    val cs = sc.broadcast(centroids)
+    val cb = sc.broadcast(codebooks)
     val enc = udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      val norm = math.sqrt(arr.map(x => x * x).sum)
-      val u = if (norm == 0d) arr else arr.map(_ / norm)
-      val c = nearestL2(cs.value, u)
-      val cen = cs.value(c)
-      val r = Array.tabulate(u.length)(i => u(i) - cen(i))
-      val m = cb.value.length
-      val sub = u.length / m
-      (c, Array.tabulate(m)(s => nearestL2(cb.value(s), r.slice(s * sub, (s + 1) * sub))))
+      val (c, r) = residualOf(cs.value, Ivf.unit(v.toArray))
+      (c, codesOf(cb.value, r))
     }
-    vectors.select(col(idCol), enc(col(vecCol).cast("array<double>")).as("e"))
-      .select(col(idCol), col("e._1").as("cluster"), col("e._2").as("codes"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/vectors")
-    Similarity.writeCentroidTable(spark, centroids, path)
-    import spark.implicits._
-    codebooks.zipWithIndex.flatMap { case (cbk, s) =>
-      cbk.zipWithIndex.map { case (w, c) => (s, c, w.toSeq) }
-    }.toSeq.toDF("s", "c", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    writeIndex(vectors.select(col(idCol), enc(col(vecCol).cast("array<double>")).as("e"))
+      .select(col(idCol), col("e._1").as("cluster"), col("e._2").as("codes")),
+      path, centroids, codebooks)
   }
 
   /** Top-k from a residual IVF-PQ index: per (query, probed cluster)
@@ -293,54 +206,30 @@ object Pq {
     * the only ones opened.
     */
   def residualPqIvfTopKFromIndex(indexPath: String, queries: DataFrame,
-      idCol: String, vecCol: String, topK: Int, nProbe: Int = 2): DataFrame = {
+      idCol: String, vecCol: String, topK: Int, nProbe: Int = 2): DataFrame =
+    serveAdc(indexPath, queries, idCol, vecCol, topK, nProbe, residual = true)
+
+  /** Both IVF-PQ serves: the [[Ivf]] probe step, then the ADC scorer,
+    * plus bias = ⟨unit(q), centroid_probe⟩ micros when `residual`.
+    */
+  private def serveAdc(indexPath: String, queries: DataFrame, idCol: String,
+      vecCol: String, topK: Int, nProbe: Int, residual: Boolean): DataFrame = {
     val spark = queries.sparkSession
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .orderBy("cluster").collect().map(_.getSeq[Double](1).toArray)
-    val cbRows = spark.read.parquet(s"$indexPath/codebooks").collect()
-    val m = cbRows.map(_.getInt(0)).max + 1
-    val k = cbRows.map(_.getInt(1)).max + 1
-    val codebooks = Array.ofDim[Array[Double]](m, k)
-    cbRows.foreach(r => codebooks(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-    val tableOf = adcTable(codebooks)
-    val cs = spark.sparkContext.broadcast(centroids)
-    // nProbe (probe, bias) pairs per query: bias = ⟨unit(q), centroid⟩ micros
-    val probeBias = udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      val norm = math.sqrt(arr.map(x => x * x).sum)
-      val u = if (norm == 0d) arr else arr.map(_ / norm)
-      cs.value.indices.map { c =>
-        var (d2, i) = (0d, 0)
-        while (i < u.length) { val t = u(i) - cs.value(c)(i); d2 += t * t; i += 1 }
-        (c, d2)
-      }.sortBy(_._2).take(nProbe).map { case (c, _) =>
-        var (dot, i) = (0d, 0)
-        while (i < u.length) { dot += u(i) * cs.value(c)(i); i += 1 }
-        (c, math.floor(dot * 1e6 + 0.5).toLong)
+    val centroids = Ivf.readCentroids(spark, indexPath)
+    val codebooks = Ivf.readCodebooks(spark, indexPath)
+    val qv = col(vecCol).cast("array<double>")
+    val probed = queries.select(col(idCol).as("qid"), adcTable(codebooks)(qv).as("tab"),
+      Ivf.probe(centroids, nProbe)(qv).as("probe"), qv.as("qv"))
+    val q =
+      if (!residual) probed.drop("qv")
+      else {
+        val cs = spark.sparkContext.broadcast(centroids)
+        val bias = udf((v: Seq[Double], c: Int) => dotMicros(Ivf.unit(v.toArray), 0, cs.value(c)))
+        probed.select(col("qid"), col("tab"), col("probe"),
+          bias(col("qv"), col("probe")).as("bias"))
       }
-    }
-    val qq = queries
-      .select(col(idCol).as("qid"),
-        tableOf(col(vecCol).cast("array<double>")).as("tab"),
-        explode(probeBias(col(vecCol).cast("array<double>"))).as("pb"))
-      .select(col("qid"), col("tab"), col("pb._1").as("probe"),
-        col("pb._2").as("bias"))
-    val probed = qq.select("probe").distinct().collect().map(_.getInt(0))
-    val corpus = spark.read.parquet(s"$indexPath/vectors")
-      .filter(col("cluster").isin(probed.map(Integer.valueOf): _*))
-      .select(col(idCol).as("id"), col("codes"), col("cluster"))
-    val score = col("bias") + aggregate(
-      zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
-        (c, s) => element_at(col("tab"), s * k + c + 1)),
-      lit(0L), (acc, x) => acc + x)
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("id"))
-    corpus.join(broadcast(qq),
-      col("cluster") === col("probe") && col("id") =!= col("qid"))
-      .withColumn("score", score)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= topK)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"),
-        col("id").as("neighbor"), col("score"))
+    val score = if (residual) col("bias") + adcScore(codebooks) else adcScore(codebooks)
+    Ivf.rank(Ivf.scan(indexPath, q, Seq(col(idCol).as("id"), col("codes"))), score, topK)
   }
 
   /** The per-query ADC table as a UDF: tab[s·k + c] = ⟨q_s, cb_s[c]⟩ in
@@ -350,17 +239,17 @@ object Pq {
   private def adcTable(codebooks: Array[Array[Array[Double]]]) = {
     val k = codebooks.head.length
     udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      val norm = math.sqrt(arr.map(x => x * x).sum)
-      val u = if (norm == 0d) arr else arr.map(_ / norm)
-      val m = codebooks.length
-      val sub = u.length / m
-      (for (s <- 0 until m; c <- 0 until k) yield {
-        val cw = codebooks(s)(c)
-        var (dot, i) = (0d, 0)
-        while (i < sub) { dot += u(s * sub + i) * cw(i); i += 1 }
-        math.floor(dot * 1e6 + 0.5).toLong
-      }).toArray
+      val u = Ivf.unit(v.toArray)
+      val sub = u.length / codebooks.length
+      (for (s <- codebooks.indices; c <- 0 until k)
+        yield dotMicros(u, s * sub, codebooks(s)(c))).toArray
     }
+  }
+
+  /** ⟨x[off, off + |w|), w⟩ as integer micros, floor(dot·10⁶ + 0.5). */
+  private def dotMicros(x: Array[Double], off: Int, w: Array[Double]): Long = {
+    var (dot, i) = (0d, 0)
+    while (i < w.length) { dot += x(off + i) * w(i); i += 1 }
+    math.floor(dot * 1e6 + 0.5).toLong
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scalar int8 quantization of embedding columns — the standard memory
@@ -34,8 +33,9 @@ object Quantization {
     * PERFORMANCE TRAP: `vec` must be an ATTRIBUTE, not a composed tree.
     * The max-abs aggregate is referenced inside the transform lambda and
     * Catalyst does not CSE inside lambda bodies, so a composed input
-    * (e.g. `int8Codes(unitize(v))`) re-evaluates the whole input tree
-    * per element — measured O(d³)/row, 60× slower than the staged form.
+    * (e.g. `int8Codes` of an inline unit-normalize) re-evaluates the
+    * whole input tree per element — measured O(d³)/row, 60× slower than
+    * the staged form.
     * Table-level callers should use [[quantize]]/[[quantizeUnit]],
     * which stage every aggregate as its own projection.
     */
@@ -64,9 +64,10 @@ object Quantization {
     * (norm, max-abs) is materialized as its OWN projection attribute
     * before any lambda references it. Catalyst does not common-
     * subexpression-eliminate inside lambda bodies, so the composed form
-    * `int8Codes(unitize(v))` re-evaluates the norm aggregate for every
-    * element of every enclosing transform — O(d³) per row, measured at
-    * 48 ms/row (97 s for a 2 000-row corpus) vs ~50 µs/row staged.
+    * (int8 codes of an inline unit-normalize) re-evaluates the norm
+    * aggregate for every element of every enclosing transform — O(d³)
+    * per row, measured at 48 ms/row (97 s for a 2 000-row corpus) vs
+    * ~50 µs/row staged.
     * CollapseProject will not re-inline the attributes: the aggregates
     * are non-cheap and referenced more than once. Formulas are
     * unchanged — bit-identical codes, just evaluated once each.
@@ -94,15 +95,6 @@ object Quantization {
             floor(x * lit(127d) / col("__m") + lit(0.5d)).cast("long"))).as("codes") +:
         floor(col("__m") * lit(1e6) + lit(0.5d)).cast("long").as("scale_micro") +:
         keep: _*)
-  }
-
-  /** Unit-normalize (zero vectors stay zero). sqrt and division are
-    * correctly-rounded IEEE ops and the norm accumulates in index order,
-    * so the unit vector is still bit-identical across engines.
-    */
-  def unitize(v: Column): Column = {
-    val n = sqrt(aggregate(v, lit(0d), (acc, x) => acc + x * x))
-    transform(v, x => when(n === 0d, lit(0d)).otherwise(x / n))
   }
 
   /** Quantize for COSINE serving: unit-normalize first, then int8. A raw
@@ -145,7 +137,7 @@ object Quantization {
       .select(col(idCol).as("id"), col("codes"), col("scale_micro"))
     val q = broadcast(quantizeUnit(queries, idCol, vecCol)
       .select(col(idCol).as("qid"), col("codes").as("qcodes")))
-    rankQuantized(v.join(q, col("id") =!= col("qid")), k)
+    Ivf.rank(v.join(q, col("id") =!= col("qid")), int8Score(vectors.sparkSession), k)
   }
 
   /** Integer dot product: the native fused-loop `int_dot` expression
@@ -159,61 +151,42 @@ object Quantization {
     if (spark.catalog.functionExists("int_dot")) call_function("int_dot", a, b)
     else aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, z) => acc + z)
 
-  /** Shared ranking tail: rescaled integer dot, rank desc with id
-    * tiebreak — exact integer arithmetic end to end.
+  /** The int8 scorer: rescaled integer dot of (codes, qcodes) — exact
+    * integer arithmetic end to end.
     */
-  private def rankQuantized(joined: DataFrame, k: Int): DataFrame = {
-    val dot = intDot(joined.sparkSession, col("codes"), col("qcodes"))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("id"))
-    joined
-      .withColumn("score", dot * col("scale_micro"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("id").as("neighbor"), col("score"))
-  }
+  private def int8Score(spark: SparkSession): Column =
+    intDot(spark, col("codes"), col("qcodes")) * col("scale_micro")
 
   /** Persist a QUANTIZED IVF index: int8 codes + micro-scale, written
     * partitioned by cluster id. Combines the two 100 TB ANN levers:
     * probing prunes to ~nProbe/nCentroids of the PARTITIONS
-    * (directories that are never opened — same storage contract as
-    * [[Similarity.writeIvfIndex]]), and each probed partition is ~4×
+    * (directories that are never opened — the [[Ivf]] layout), and each probed partition is ~4×
     * smaller than its float32 form (8× vs float64), so the scan reads
     * a fraction of a fraction. Serving is asymmetric: queries quantize
     * at query time against the same centroid table.
     */
   def writeQuantizedIvfIndex(vectors: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Array[Array[Double]]): Unit = {
-    quantizeStaged(Similarity.assignClusters(vectors, vecCol, centroids),
-      idCol, vecCol, unit = true, extra = Seq("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/vectors")
-    Similarity.writeCentroidTable(vectors.sparkSession, centroids, path)
+    Ivf.writeVectors(quantizeStaged(Similarity.assignClusters(vectors, vecCol, centroids),
+      idCol, vecCol, unit = true, extra = Seq("cluster")), path)
+    Ivf.writeCentroids(vectors.sparkSession, centroids, path)
   }
 
-  /** Top-k from a quantized disk index: probe clusters driver-side (the
-    * bounded centroid/probe collects — see [[Similarity.ivfTopKFromIndex]]),
-    * then scan ONLY the probed directories of int8 codes and rank by the
-    * rescaled integer dot. Same recall contract as float IVF (the probe
-    * set is computed from the float query against float centroids;
-    * only candidate scoring is quantized).
+  /** Top-k from a quantized disk index: the [[Ivf]] probe step (only
+    * the probed directories of int8 codes are opened) with the int8
+    * scorer. Same recall contract as float IVF (the probe set is
+    * computed from the float query against float centroids; only
+    * candidate scoring is quantized).
     */
   def quantizedIvfTopKFromIndex(indexPath: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 2): DataFrame = {
     val spark = queries.sparkSession
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .orderBy("cluster").collect().map(_.getSeq[Double](1).toArray)
-    val qq = quantizeUnit(queries, idCol, vecCol)
-      .select(col(idCol).as("qid"), col("codes").as("qcodes"))
-      .join(queries.select(col(idCol).as("qid"), col(vecCol).as("__qv")), "qid")
-      .withColumn("probe",
-        explode(Similarity.probeIds(spark, centroids, nProbe)(col("__qv").cast("array<double>"))))
-      .select(col("qid"), col("qcodes"), col("probe"))
-    val probed = qq.select("probe").distinct().collect().map(_.getInt(0))
-    val corpus = spark.read.parquet(s"$indexPath/vectors")
-      .filter(col("cluster").isin(probed.map(Integer.valueOf): _*))
-      .select(col(idCol).as("id"), col("codes"), col("scale_micro"), col("cluster"))
-    val joined = corpus.join(broadcast(qq),
-      col("cluster") === col("probe") && col("id") =!= col("qid"))
-    rankQuantized(joined, k)
+    val centroids = Ivf.readCentroids(spark, indexPath)
+    val q = quantizeUnitKeep(queries, idCol, vecCol, Seq(vecCol))
+      .select(col(idCol).as("qid"), col("codes").as("qcodes"),
+        Ivf.probe(centroids, nProbe)(col(vecCol)).as("probe"))
+    Ivf.rank(Ivf.scan(indexPath, q,
+      Seq(col(idCol).as("id"), col("codes"), col("scale_micro"))), int8Score(spark), k)
   }
 
   /** Deterministic integer IVF index: coarse assignment by hash-derived
@@ -240,9 +213,8 @@ object Quantization {
       vecCol: String, path: String, numClusters: Int, mode: String): Unit = {
     val assigned = SemanticDedup.hashClusterAssign(vectors, idCol, vecCol, numClusters)
       .select(col(idCol), col("cluster"))
-    quantizeUnit(vectors, idCol, vecCol)
-      .join(assigned, idCol)
-      .write.mode(mode).partitionBy("cluster").parquet(s"$path/vectors")
+    Ivf.writeVectors(quantizeUnit(vectors, idCol, vecCol).join(assigned, idCol),
+      path, mode)
   }
 
   /** Incrementally grow a [[writeHashIvfIndex]] index: route the new
@@ -277,18 +249,11 @@ object Quantization {
     */
   def compactHashIvfIndex(spark: SparkSession, path: String,
       destPath: String): Unit = {
-    val base = spark.read.parquet(s"$path/vectors")
+    val base = Ivf.readVectors(spark, path)
     // compaction is ALSO when tombstones become physical: the compacted
     // copy carries no tombstone directory and no deleted row — the
     // delete/compact lifecycle of an LSM index at directory granularity
-    val kept = tombstonesOf(spark, path) match {
-      case Some(tomb) => base.join(broadcast(tomb),
-        tomb.columns.toSeq, "left_anti")
-      case None => base
-    }
-    kept.repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$destPath/vectors")
+    Ivf.writeVectors(live(spark, path)(base).repartition(col("cluster")), destPath)
   }
 
   /** Delete rows from a [[writeHashIvfIndex]] index WITHOUT rewriting
@@ -307,20 +272,23 @@ object Quantization {
     ids.write.mode("append").parquet(s"$path/tombstones")
   }
 
-  /** The index's live tombstone set, None when nothing was deleted. */
-  private def tombstonesOf(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(s"$path/tombstones").distinct())
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
+  /** Drop the index's tombstoned rows (broadcast anti-join against the
+    * [[deleteFromHashIvfIndex]] set); identity when nothing was deleted.
+    */
+  private def live(spark: SparkSession, path: String): DataFrame => DataFrame =
+    try {
+      val tomb = spark.read.parquet(s"$path/tombstones").distinct()
+      _.join(broadcast(tomb), tomb.columns.toSeq, "left_anti")
+    } catch { case _: org.apache.spark.sql.AnalysisException => identity }
 
   /** Serve from a [[writeHashIvfIndex]] index: probe the nProbe best
     * pseudo-centroids per query (exact integer ranking,
-    * [[SemanticDedup.hashClusterProbes]]), scan ONLY the probed
-    * directories (driver-collected probe set → PartitionFilters, the
-    * [[quantizedIvfTopKFromIndex]] shape), rank candidates by the
-    * rescaled integer dot. Probe choice, candidate set, scores, and
-    * ranking are ALL exact integers — the one ANN serving path whose
-    * end-to-end output an independent engine can hash-match (the float-
-    * k-means variants share this serve shape but not the replayability).
+    * [[SemanticDedup.hashClusterProbes]]), then the [[Ivf]] probe step
+    * over the live (untombstoned) rows with the int8 scorer. Probe
+    * choice, candidate set, scores, and ranking are ALL exact integers —
+    * the one ANN serving path whose end-to-end output an independent
+    * engine can hash-match (the float-k-means variants share this serve
+    * core but not the replayability).
     */
   def hashIvfTopKFromIndex(indexPath: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, numClusters: Int,
@@ -332,25 +300,13 @@ object Quantization {
     val probes = SemanticDedup.hashClusterProbes(
       queries, idCol, vecCol, numClusters, nProbe)
       .select(col(idCol).as("qid"), col("probe").cast("int").as("probe"))
-    val qq = broadcast(quantizeUnit(queries, idCol, vecCol)
+    val q = quantizeUnit(queries, idCol, vecCol)
       .select(col(idCol).as("qid"), col("codes").as("qcodes"))
-      .join(probes, "qid"))
-    // BOUNDED collect: at most min(numClusters, |queries|·nProbe) ids —
-    // driver-side so the isin() lands in PartitionFilters
-    val probed = qq.select("probe").distinct().collect().map(_.getInt(0))
-    val base = spark.read.parquet(s"$indexPath/vectors")
-      .filter(col("cluster").isin(probed.map(Integer.valueOf): _*))
-    // deleted rows stay invisible between compactions: broadcast
-    // anti-join against the tombstone set ([[deleteFromHashIvfIndex]])
-    val live = tombstonesOf(spark, indexPath) match {
-      case Some(tomb) => base.join(broadcast(tomb),
-        tomb.columns.toSeq, "left_anti")
-      case None => base
-    }
-    val corpus = live
-      .select(col(idCol).as("id"), col("codes"), col("scale_micro"), col("cluster"))
-    rankQuantized(corpus.join(qq,
-      col("cluster") === col("probe") && col("id") =!= col("qid")), k)
+      .join(probes, "qid")
+    // deleted rows stay invisible between compactions
+    Ivf.rank(Ivf.scan(indexPath, q,
+      Seq(col(idCol).as("id"), col("codes"), col("scale_micro")),
+      live(spark, indexPath)), int8Score(spark), k)
   }
 
   // -------------------------------------- JL random projection (±1 signs)

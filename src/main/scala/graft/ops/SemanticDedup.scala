@@ -34,16 +34,16 @@ object SemanticDedup {
     // multiply-adds per row) over the cluster even when the input is
     // one small file — a single-file scan is ONE partition (the
     // Dedup.minHashSignatures spread). hashClusterProbes stays
-    // unspread: its callers pass dimension-sized QUERY batches where an
-    // extra exchange (per serve micro-batch) would cost more than it
-    // parallelizes.
+    // unspread: its caller, the hash-IVF serve on the Ivf core, passes
+    // dimension-sized QUERY batches where an extra exchange (per serve
+    // micro-batch) would cost more than it parallelizes.
     scoredTopN(
       vectors.repartition(vectors.sparkSession.sparkContext.defaultParallelism),
       idCol, vecCol, k, 1)
       .select(col(idCol), col("c").as("cluster"), col("score"))
 
   /** The nProbe best pseudo-centroids per vector — the deterministic
-    * probe expansion for the hash-IVF serving path
+    * probe expansion of the hash-IVF serve on the [[Ivf]] core
     * ([[Quantization.hashIvfTopKFromIndex]]): same exact-integer scores
     * as [[hashClusterAssign]] (rank 1 IS the assigned cluster), so the
     * probe choice replays bit-for-bit cross-engine.

@@ -42,8 +42,7 @@ object Similarity {
     val v = vectors.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     val q = broadcast(queries
       .select(col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qv")))
-    val joined = v.join(q, col("id") =!= col("qid"))
-    rankTopK(joined.withColumn("cosine", cosine(joined, col("v"), col("qv"))), k)
+    rankCosine(v.join(q, col("id") =!= col("qid")), k)
   }
 
   /** Hard-negative mining for contrastive training: for each query
@@ -61,9 +60,12 @@ object Similarity {
       col(vecCol).cast("array<double>").as("v"), col(labelCol).as("lbl"))
     val q = broadcast(queries.select(col(idCol).as("qid"),
       col(vecCol).cast("array<double>").as("qv"), col(labelCol).as("qlbl")))
-    val joined = v.join(q, col("id") =!= col("qid") && col("lbl") =!= col("qlbl"))
-    rankTopK(joined.withColumn("cosine", cosine(joined, col("v"), col("qv"))), k)
+    rankCosine(v.join(q, col("id") =!= col("qid") && col("lbl") =!= col("qlbl")), k)
   }
+
+  /** Score (v, qv) candidate pairs by [[cosine]] and rank them. */
+  private def rankCosine(joined: DataFrame, k: Int): DataFrame =
+    rankTopK(joined.withColumn("cosine", cosine(joined, col("v"), col("qv"))), k)
 
   /** Rank the k best candidates per query from (qid, id, cosine) rows,
     * emitting (qid, rnk, neighbor, cosine) in rank order.
@@ -92,21 +94,6 @@ object Similarity {
         .select(col("qid"), col("rnk"), col("id").as("neighbor"), col("cosine"))
     }
 
-  /** Unit-normalize in place (zero vectors stay zero). The IVF index
-    * serves COSINE queries, so clustering must happen on the unit
-    * sphere: L2 k-means on raw vectors partitions by magnitude as much
-    * as by direction, and a query's nearest-centroid probe then misses
-    * the clusters holding its true cosine neighbors. On the sphere,
-    * L2-nearest ≡ cosine-nearest (|a-b|² = 2 - 2·cos for unit a, b).
-    */
-  private def unit(x: Array[Double]): Array[Double] = {
-    var s = 0.0; var i = 0
-    while (i < x.length) { s += x(i) * x(i); i += 1 }
-    val n = math.sqrt(s)
-    if (n > 0) { i = 0; while (i < x.length) { x(i) /= n; i += 1 } }
-    x
-  }
-
   /** Spherical k-means on a driver-side sample — centroids are a tiny
     * broadcastable table (nCentroids × dim doubles), fit and kept on
     * the unit sphere. Good enough to build an IVF index; a production
@@ -114,18 +101,7 @@ object Similarity {
     */
   def fitCentroids(vectors: DataFrame, vecCol: String, nCentroids: Int,
       iters: Int = 8, sampleSize: Int = 10000, seed: Long = 42L): Array[Array[Double]] = {
-    // a corpus-wide random sample, NOT limit(): limit takes the first
-    // partitions in order, so at scale the fit would only ever see the
-    // leading shard of the corpus (first-partitions bias). The fraction
-    // overshoots by 10% then trims to keep the collect bounded.
-    val total = vectors.count()
-    val base = vectors.select(col(vecCol).cast("array<double>"))
-    val sampled =
-      if (total <= sampleSize) base
-      else base.sample(withReplacement = false,
-        math.min(1.0, 1.1 * sampleSize / total), seed)
-    val sample = sampled.limit(sampleSize).collect()
-      .map(r => unit(r.getSeq[Double](0).toArray))
+    val sample = Ivf.sample(vectors, vecCol, sampleSize, seed)
     require(sample.length >= nCentroids, "need at least nCentroids sample vectors")
     val rng = graft.runtime.Rng.forKey(seed, sample.length.toLong)
     var centroids = rng.ints(0, sample.length).distinct().limit(nCentroids)
@@ -134,7 +110,7 @@ object Similarity {
       val sums = Array.fill(nCentroids)(new Array[Double](sample.head.length))
       val counts = new Array[Int](nCentroids)
       sample.foreach { x =>
-        val c = nearest(centroids, x)
+        val c = Ivf.nearest(centroids, x)
         counts(c) += 1
         var i = 0
         while (i < x.length) { sums(c)(i) += x(i); i += 1 }
@@ -142,24 +118,10 @@ object Similarity {
       // re-normalize the mean: spherical k-means keeps centroids unit so
       // the assignment metric stays cosine-equivalent
       centroids = sums.zip(counts).zipWithIndex.map { case ((s, n), i) =>
-        if (n == 0) centroids(i) else unit(s.map(_ / n))
+        if (n == 0) centroids(i) else Ivf.unit(s.map(_ / n))
       }
     }
     centroids
-  }
-
-  private def nearest(cs: Array[Array[Double]], x: Array[Double]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < cs.length) {
-      var d = 0.0
-      var i = 0
-      while (i < x.length) { val t = cs(c)(i) - x(i); d += t * t; i += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
   }
 
   /** The centroid matrix as a plan-time literal — dimension-sized
@@ -215,8 +177,8 @@ object Similarity {
     * former stable sortBy. Query-side only (broadcast-sized input), so
     * the HOF composition is not on the corpus hot path.
     */
-  private[graft] def probeIds(spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[Array[Double]], nProbe: Int): Column => Column = { vIn =>
+  private[graft] def probeIds(centroids: Array[Array[Double]],
+      nProbe: Int): Column => Column = { vIn =>
     val v = vIn.cast("array<double>")
     val nrm = sqrt(aggregate(v, lit(0d), (acc, x) => acc + x * x))
     val u = transform(v, x => when(nrm > 0d, x / nrm).otherwise(x))
@@ -229,12 +191,6 @@ object Similarity {
     transform(slice(ranked, 1, nProbe), s => s.getField("c"))
   }
 
-  /** Shared probe-join-rank tail of both IVF paths. */
-  private def ivfRank(assigned: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    val joined = assigned.join(q, col("cluster") === col("probe") && col("id") =!= col("qid"))
-    rankTopK(joined.withColumn("cosine", cosine(joined, col("v"), col("qv"))), k)
-  }
-
   /** IVF top-k: probe only the `nProbe` clusters nearest to each query —
     * the scan shrinks by ~nCentroids/nProbe. Exactness is traded for
     * recall, the standard IVF contract.
@@ -245,12 +201,16 @@ object Similarity {
     val assigned = assignClusters(vectors, vecCol, centroids)
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"),
         col("cluster"))
-    val probes = probeIds(vectors.sparkSession, centroids, nProbe)
-    val q = broadcast(queries
-      .select(col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("probe", explode(probes(col("qv")))))
-    ivfRank(assigned, q, k)
+    rankCosine(Ivf.probeJoin(assigned, probedQueries(queries, idCol, vecCol,
+      centroids, nProbe)), k)
   }
+
+  /** (qid, qv, probe): one row per query and probed centroid. */
+  private def probedQueries(queries: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]], nProbe: Int): DataFrame =
+    queries
+      .select(col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qv"))
+      .withColumn("probe", Ivf.probe(centroids, nProbe)(col("qv")))
 
   /** Persist the IVF index: the corpus written PARTITIONED BY cluster id
     * plus the centroid table. This turns probing into a storage-layout
@@ -263,54 +223,19 @@ object Similarity {
     */
   def writeIvfIndex(vectors: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Array[Array[Double]]): Unit = {
-    assignClusters(vectors, vecCol, centroids)
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/vectors")
-    writeCentroidTable(vectors.sparkSession, centroids, path)
+    Ivf.writeVectors(assignClusters(vectors, vecCol, centroids), path)
+    Ivf.writeCentroids(vectors.sparkSession, centroids, path)
   }
 
-  /** The index's centroid metadata table (nlist rows — constant size). */
-  private[ops] def writeCentroidTable(
-      spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[Array[Double]], path: String): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cluster",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("centroid",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType))))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(centroids.zipWithIndex.map { case (c, i) =>
-        org.apache.spark.sql.Row(i, c.toSeq)
-      }: _*)
-    spark.createDataFrame(rows, schema).repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** IVF top-k against a disk index written by [[writeIvfIndex]]. The
-    * probe set is collected driver-side (queries are broadcast-sized by
-    * contract), so the cluster restriction lands in the scan's
-    * PartitionFilters — Spark lists only the probed directories; the
-    * other clusters are never opened.
+  /** IVF top-k against a disk index written by [[writeIvfIndex]]: the
+    * [[Ivf]] probe step (only the probed cluster directories are
+    * opened) with the float cosine scorer.
     */
   def ivfTopKFromIndex(indexPath: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int = 2): DataFrame = {
-    val spark = queries.sparkSession
-    // BOUNDED collect: the centroid table has exactly `nlist` rows (k-means
-    // cluster count, typically 100s-1000s) — constant in corpus size, so
-    // this is index-metadata loading, not a collect-in-the-hot-path
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .orderBy("cluster").collect().map(_.getSeq[Double](1).toArray)
-    val probes = probeIds(spark, centroids, nProbe)
-    val q0 = queries
-      .select(col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("probe", explode(probes(col("qv"))))
-    // BOUNDED collect: at most min(nlist, |queries|·nProbe) distinct probe
-    // ids — needed driver-side so the isin() lands in PartitionFilters
-    val probed = q0.select("probe").distinct().collect().map(_.getInt(0))
-    val assigned = spark.read.parquet(s"$indexPath/vectors")
-      .filter(col("cluster").isin(probed.map(Integer.valueOf): _*))
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"),
-        col("cluster"))
-    ivfRank(assigned, broadcast(q0), k)
+    val centroids = Ivf.readCentroids(queries.sparkSession, indexPath)
+    val q = probedQueries(queries, idCol, vecCol, centroids, nProbe)
+    rankCosine(Ivf.scan(indexPath, q,
+      Seq(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))), k)
   }
 }

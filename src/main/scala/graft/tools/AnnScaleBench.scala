@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-curve experiment for the ANN family: replicate the sf0.1
@@ -87,7 +87,7 @@ object AnnScaleBench {
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       val perQueryProbes = queries
         .select(col("vec_id"),
-          explode(graft.ops.Similarity.probeIds(spark, centroids, nProbe)(
+          explode(graft.ops.Similarity.probeIds(centroids, nProbe)(
             col("embedding").cast("array<double>"))).as("p"))
         .collect().map(r => r.getLong(0) -> r.getInt(1))
       val perQueryScanned = perQueryProbes.groupBy(_._1)
@@ -123,13 +123,6 @@ object AnnScaleBench {
     }
     spark.stop()
   }
-
-  private def probedOf(spark: SparkSession, dir: String, queries: DataFrame,
-      centroids: Array[Array[Double]], nProbe: Int): Seq[Integer] =
-    queries
-      .select(explode(graft.ops.Similarity.probeIds(spark, centroids, nProbe)(
-        col("embedding").cast("array<double>"))).as("p"))
-      .distinct().collect().map(r => Integer.valueOf(r.getInt(0))).toSeq
 
   private def dirBytes(d: java.io.File): Long =
     if (d.isFile) d.length()

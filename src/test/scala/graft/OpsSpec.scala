@@ -519,22 +519,23 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("disk IVF index: partition-pruned probes match the in-memory path") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_index").toString
-    val centroids = Similarity.fitCentroids(embs, "embedding", 16)
-    Similarity.writeIvfIndex(embs, "vec_id", "embedding", dir, centroids)
-    val queries = embs.filter($"vec_id" % 100 === 0)
-    val mem = Similarity.ivfTopK(embs, queries, "vec_id", "embedding", 10,
-      centroids, nProbe = 4)
-      .collect().map(_.toString).sorted
-    val disk = Similarity.ivfTopKFromIndex(dir, queries, "vec_id", "embedding", 10,
-      nProbe = 4)
-    assert(disk.collect().map(_.toString).sorted.toSeq == mem.toSeq)
-    // the probe restriction must reach the scan as a PartitionFilter —
-    // at scale this is what keeps unprobed cluster directories unread
-    val plan = disk.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      (plan.contains("INSET") || plan.contains(" IN (")), plan.take(2000))
+    IvfTestKit.withTempDirs { tmp =>
+      val dir = tmp("ivf_index")
+      val centroids = Similarity.fitCentroids(embs, "embedding", 16)
+      Similarity.writeIvfIndex(embs, "vec_id", "embedding", dir, centroids)
+      val queries = embs.filter($"vec_id" % 100 === 0)
+      val mem = Similarity.ivfTopK(embs, queries, "vec_id", "embedding", 10,
+        centroids, nProbe = 4)
+        .collect().map(_.toString).sorted
+      val disk = Similarity.ivfTopKFromIndex(dir, queries, "vec_id", "embedding", 10,
+        nProbe = 4)
+      assert(disk.collect().map(_.toString).sorted.toSeq == mem.toSeq)
+      // the probe restriction must reach the scan as a PartitionFilter —
+      // at scale this is what keeps unprobed cluster directories unread
+      IvfTestKit.assertPrunedScan(disk, dir)
+    }
   }
+
 
   test("connected components assigns min-id cluster across chained pairs") {
     // 1-2, 2-3 chain plus isolated pair 10-11: clusters {1,2,3}->1, {10,11}->10

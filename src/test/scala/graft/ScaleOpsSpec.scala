@@ -434,125 +434,127 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("quantized IVF disk index: pruned scan, recall vs exact, integer scores match q68 kernel") {
-    import graft.ops.{Quantization, Similarity}
-    val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val queries = df.filter(col("vec_id") % 50 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("ivfq_test").toString
-    val centroids = Similarity.fitCentroids(df, "embedding", 8)
-    Quantization.writeQuantizedIvfIndex(df, "vec_id", "embedding", dir, centroids)
-    val res = Quantization.quantizedIvfTopKFromIndex(
-      dir, queries, "vec_id", "embedding", 10, nProbe = 4)
-    // the scan must prune: the plan's partition filters restrict cluster
-    val scan = res.queryExecution.executedPlan.toString()
-    assert(scan.contains("PartitionFilters") && scan.contains("cluster"),
-      s"no partition pruning in plan:\n$scan")
-    val got = res.collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
-    // scores must be EXACTLY the q68 integer kernel's values for the
-    // same (query, neighbor) pairs — quantization is identical, only the
-    // candidate set shrinks to the probed clusters
-    val full = Quantization.int8TopK(df, queries, "vec_id", "embedding", 500)
-      .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(3)).toMap
-    got.foreach { case (qid, nb, score) =>
-      assert(full((qid, nb)) == score, s"score drift for ($qid,$nb)")
+    IvfTestKit.withTempDirs { tmp =>
+      import graft.ops.{Quantization, Similarity}
+      val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      val queries = df.filter(col("vec_id") % 50 === 0)
+      val dir = tmp("ivfq_test")
+      val centroids = Similarity.fitCentroids(df, "embedding", 8)
+      Quantization.writeQuantizedIvfIndex(df, "vec_id", "embedding", dir, centroids)
+      val res = Quantization.quantizedIvfTopKFromIndex(
+        dir, queries, "vec_id", "embedding", 10, nProbe = 4)
+      // the scan must prune: the plan's partition filters restrict cluster
+      IvfTestKit.assertPrunedScan(res, dir)
+      val got = res.collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
+      // scores must be EXACTLY the q68 integer kernel's values for the
+      // same (query, neighbor) pairs — quantization is identical, only the
+      // candidate set shrinks to the probed clusters
+      val full = Quantization.int8TopK(df, queries, "vec_id", "embedding", 500)
+        .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(3)).toMap
+      got.foreach { case (qid, nb, score) =>
+        assert(full((qid, nb)) == score, s"score drift for ($qid,$nb)")
+      }
+      // recall@10 vs exact cosine: 4 of 8 probes on a small corpus
+      val exact = Similarity.bruteForceTopK(df, queries, "vec_id", "embedding", 10)
+        .collect().map(r => r.getLong(0) -> r.getLong(2))
+        .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
+      val byQ = got.groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
+      val recall = exact.keys.toSeq.map(q =>
+        (exact(q) intersect byQ.getOrElse(q, Set.empty)).size.toDouble / 10).sum / exact.size
+      assert(recall >= 0.5, s"recall@10 $recall < 0.5")
     }
-    // recall@10 vs exact cosine: 4 of 8 probes on a small corpus
-    val exact = Similarity.bruteForceTopK(df, queries, "vec_id", "embedding", 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(2))
-      .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
-    val byQ = got.groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
-    val recall = exact.keys.toSeq.map(q =>
-      (exact(q) intersect byQ.getOrElse(q, Set.empty)).size.toDouble / 10).sum / exact.size
-    assert(recall >= 0.5, s"recall@10 $recall < 0.5")
   }
 
   test("hash-IVF disk index: pruned scan, probe-1 is the assigned cluster, scores replay the int8 kernel") {
-    import graft.ops.{Quantization, SemanticDedup}
-    val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val queries = df.filter(col("vec_id") % 50 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("hivf_test").toString
-    Quantization.writeHashIvfIndex(df, "vec_id", "embedding", dir, 8)
-    val res = Quantization.hashIvfTopKFromIndex(
-      dir, queries, "vec_id", "embedding", 10, numClusters = 8, nProbe = 2)
-    val plan = res.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters") && plan.contains("cluster"),
-      s"no partition pruning in plan:\n$plan")
-    // a vector's best probe must be its own assigned cluster (same
-    // score table — rank 1 of probes == the argmax of assignment)
-    val assign = SemanticDedup.hashClusterAssign(df, "vec_id", "embedding", 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val probes = SemanticDedup.hashClusterProbes(df, "vec_id", "embedding", 8, 2)
-      .filter(col("rn") === 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(probes == assign.map { case (id, c) => id -> c })
-    // serve scores are EXACTLY the q68 integer kernel's values — the
-    // index only shrinks the candidate set, never the arithmetic
-    val got = res.collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
-    val full = Quantization.int8TopK(df, queries, "vec_id", "embedding", 500)
-      .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(3)).toMap
-    got.foreach { case (qid, nb, score) =>
-      assert(full((qid, nb)) == score, s"score drift for ($qid,$nb)")
+    IvfTestKit.withTempDirs { tmp =>
+      import graft.ops.{Quantization, SemanticDedup}
+      val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      val queries = df.filter(col("vec_id") % 50 === 0)
+      val dir = tmp("hivf_test")
+      Quantization.writeHashIvfIndex(df, "vec_id", "embedding", dir, 8)
+      val res = Quantization.hashIvfTopKFromIndex(
+        dir, queries, "vec_id", "embedding", 10, numClusters = 8, nProbe = 2)
+      IvfTestKit.assertPrunedScan(res, dir)
+      // a vector's best probe must be its own assigned cluster (same
+      // score table — rank 1 of probes == the argmax of assignment)
+      val assign = SemanticDedup.hashClusterAssign(df, "vec_id", "embedding", 8)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val probes = SemanticDedup.hashClusterProbes(df, "vec_id", "embedding", 8, 2)
+        .filter(col("rn") === 1)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(probes == assign.map { case (id, c) => id -> c })
+      // serve scores are EXACTLY the q68 integer kernel's values — the
+      // index only shrinks the candidate set, never the arithmetic
+      val got = res.collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
+      val full = Quantization.int8TopK(df, queries, "vec_id", "embedding", 500)
+        .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(3)).toMap
+      got.foreach { case (qid, nb, score) =>
+        assert(full((qid, nb)) == score, s"score drift for ($qid,$nb)")
+      }
     }
   }
 
   test("hash-IVF append: build-then-append serves identically to build-on-union") {
-    import graft.ops.Quantization
-    val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val queries = df.filter(col("vec_id") % 50 === 0)
-    val unionDir = java.nio.file.Files.createTempDirectory("hivf_union").toString
-    Quantization.writeHashIvfIndex(df, "vec_id", "embedding", unionDir, 8)
-    val appDir = java.nio.file.Files.createTempDirectory("hivf_app").toString
-    Quantization.writeHashIvfIndex(
-      df.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", appDir, 8)
-    Quantization.appendToHashIvfIndex(
-      df.filter(col("vec_id") % 3 === 0), "vec_id", "embedding", appDir, 8)
-    def serve(dir: String) = Quantization.hashIvfTopKFromIndex(
-      dir, queries, "vec_id", "embedding", 10, numClusters = 8, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    assert(serve(appDir) == serve(unionDir),
-      "appended index diverged from union-built index")
+    IvfTestKit.withTempDirs { tmp =>
+      import graft.ops.Quantization
+      val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      val queries = df.filter(col("vec_id") % 50 === 0)
+      val unionDir = tmp("hivf_union")
+      Quantization.writeHashIvfIndex(df, "vec_id", "embedding", unionDir, 8)
+      val appDir = tmp("hivf_app")
+      Quantization.writeHashIvfIndex(
+        df.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", appDir, 8)
+      Quantization.appendToHashIvfIndex(
+        df.filter(col("vec_id") % 3 === 0), "vec_id", "embedding", appDir, 8)
+      def serve(dir: String) = Quantization.hashIvfTopKFromIndex(
+        dir, queries, "vec_id", "embedding", 10, numClusters = 8, nProbe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toSet
+      assert(serve(appDir) == serve(unionDir),
+        "appended index diverged from union-built index")
 
-    // compaction: repeated appends accumulate files; the compacted copy
-    // has ONE file per cluster partition and serves identically
-    def parquetCount(dir: String): Int = {
-      val files = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "vectors"))
-      try walk.forEach(p => if (p.toString.endsWith(".parquet")) files += p)
-      finally walk.close()
-      files.size
-    }
-    val before = parquetCount(appDir)
-    val compactDir = java.nio.file.Files.createTempDirectory("hivf_cmp").toString
-    Quantization.compactHashIvfIndex(spark, appDir, compactDir)
-    val clusters = {
-      import scala.jdk.CollectionConverters._
-      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(compactDir, "vectors"))
-      try ls.iterator().asScala.count(_.getFileName.toString.startsWith("cluster="))
-      finally ls.close()
-    }
-    assert(parquetCount(compactDir) == clusters,
-      s"expected 1 file per cluster, got ${parquetCount(compactDir)} for $clusters clusters")
-    assert(parquetCount(compactDir) < before, "compaction did not reduce file count")
-    assert(serve(compactDir) == serve(unionDir), "compacted index diverged")
+      // compaction: repeated appends accumulate files; the compacted copy
+      // has ONE file per cluster partition and serves identically
+      def parquetCount(dir: String): Int = {
+        val files = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "vectors"))
+        try walk.forEach(p => if (p.toString.endsWith(".parquet")) files += p)
+        finally walk.close()
+        files.size
+      }
+      val before = parquetCount(appDir)
+      val compactDir = tmp("hivf_cmp")
+      Quantization.compactHashIvfIndex(spark, appDir, compactDir)
+      val clusters = {
+        import scala.jdk.CollectionConverters._
+        val ls = java.nio.file.Files.list(java.nio.file.Paths.get(compactDir, "vectors"))
+        try ls.iterator().asScala.count(_.getFileName.toString.startsWith("cluster="))
+        finally ls.close()
+      }
+      assert(parquetCount(compactDir) == clusters,
+        s"expected 1 file per cluster, got ${parquetCount(compactDir)} for $clusters clusters")
+      assert(parquetCount(compactDir) < before, "compaction did not reduce file count")
+      assert(serve(compactDir) == serve(unionDir), "compacted index diverged")
 
-    // delete lifecycle: tombstoned ids vanish from serving immediately
-    // (anti-join) and physically after compaction; a rebuilt index on
-    // the shrunk corpus serves identically to both
-    val delIds = df.filter(col("vec_id") % 5 === 1).select("vec_id")
-    Quantization.deleteFromHashIvfIndex(appDir, delIds)
-    val rebuiltDir = java.nio.file.Files.createTempDirectory("hivf_reb").toString
-    Quantization.writeHashIvfIndex(
-      df.filter(col("vec_id") % 5 =!= 1), "vec_id", "embedding", rebuiltDir, 8)
-    val afterDelete = serve(appDir)
-    assert(afterDelete == serve(rebuiltDir),
-      "tombstone anti-join diverged from a rebuild on the shrunk corpus")
-    assert(afterDelete.forall(_._3 % 5 != 1), "a deleted id was served")
-    val compact2 = java.nio.file.Files.createTempDirectory("hivf_cmp2").toString
-    Quantization.compactHashIvfIndex(spark, appDir, compact2)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(compact2, "tombstones")),
-      "compaction must not carry tombstones forward")
-    assert(serve(compact2) == afterDelete, "post-compaction serving diverged")
+      // delete lifecycle: tombstoned ids vanish from serving immediately
+      // (anti-join) and physically after compaction; a rebuilt index on
+      // the shrunk corpus serves identically to both
+      val delIds = df.filter(col("vec_id") % 5 === 1).select("vec_id")
+      Quantization.deleteFromHashIvfIndex(appDir, delIds)
+      val rebuiltDir = tmp("hivf_reb")
+      Quantization.writeHashIvfIndex(
+        df.filter(col("vec_id") % 5 =!= 1), "vec_id", "embedding", rebuiltDir, 8)
+      val afterDelete = serve(appDir)
+      assert(afterDelete == serve(rebuiltDir),
+        "tombstone anti-join diverged from a rebuild on the shrunk corpus")
+      assert(afterDelete.forall(_._3 % 5 != 1), "a deleted id was served")
+      val compact2 = tmp("hivf_cmp2")
+      Quantization.compactHashIvfIndex(spark, appDir, compact2)
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(compact2, "tombstones")),
+        "compaction must not carry tombstones forward")
+      assert(serve(compact2) == afterDelete, "post-compaction serving diverged")
+    }
   }
 
   test("jl projection: bit-exact vs local XXH64 replay, planted near-pairs stay near") {
@@ -634,35 +636,35 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("ivf-pq disk index: pruned scan, scores identical to the adc kernel, recall holds") {
-    import graft.ops.{Pq, Similarity}
-    val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val queries = df.filter(col("vec_id") % 50 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_test").toString
-    val centroids = Similarity.fitCentroids(df, "embedding", 8)
-    val cbs = Pq.fitCodebooks(df, "embedding", m = 8, k = 64)
-    Pq.writePqIvfIndex(df, "vec_id", "embedding", dir, centroids, cbs)
-    val res = Pq.pqIvfTopKFromIndex(dir, queries, "vec_id", "embedding", 10, nProbe = 4)
-    val plan = res.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters") && plan.contains("cluster"),
-      s"no partition pruning in plan:\n$plan")
-    val got = res.collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
-    // scores must EXACTLY match the full adc kernel on shared pairs —
-    // probing only shrinks the candidate set, never changes a score
-    val full = Pq.adcTopK(Pq.encode(df, "vec_id", "embedding", cbs),
-      queries, "vec_id", "embedding", cbs, 500)
-      .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(3)).toMap
-    got.foreach { case (qid, nb, score) =>
-      assert(full((qid, nb)) == score, s"score drift for ($qid,$nb)")
+    IvfTestKit.withTempDirs { tmp =>
+      import graft.ops.{Pq, Similarity}
+      val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      val queries = df.filter(col("vec_id") % 50 === 0)
+      val dir = tmp("ivfpq_test")
+      val centroids = Similarity.fitCentroids(df, "embedding", 8)
+      val cbs = Pq.fitCodebooks(df, "embedding", m = 8, k = 64)
+      Pq.writePqIvfIndex(df, "vec_id", "embedding", dir, centroids, cbs)
+      val res = Pq.pqIvfTopKFromIndex(dir, queries, "vec_id", "embedding", 10, nProbe = 4)
+      IvfTestKit.assertPrunedScan(res, dir)
+      val got = res.collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
+      // scores must EXACTLY match the full adc kernel on shared pairs —
+      // probing only shrinks the candidate set, never changes a score
+      val full = Pq.adcTopK(Pq.encode(df, "vec_id", "embedding", cbs),
+        queries, "vec_id", "embedding", cbs, 500)
+        .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(3)).toMap
+      got.foreach { case (qid, nb, score) =>
+        assert(full((qid, nb)) == score, s"score drift for ($qid,$nb)")
+      }
+      // recall@10 vs exact cosine at 4/8 probes and 48-bit codes: the
+      // compounded loss must still beat chance by an order of magnitude
+      val exact = Similarity.bruteForceTopK(df, queries, "vec_id", "embedding", 10)
+        .collect().map(r => r.getLong(0) -> r.getLong(2))
+        .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
+      val byQ = got.groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
+      val recall = exact.keys.toSeq.map(q =>
+        (exact(q) intersect byQ.getOrElse(q, Set.empty)).size.toDouble / 10).sum / exact.size
+      assert(recall >= 0.3, s"recall@10 $recall < 0.3")
     }
-    // recall@10 vs exact cosine at 4/8 probes and 48-bit codes: the
-    // compounded loss must still beat chance by an order of magnitude
-    val exact = Similarity.bruteForceTopK(df, queries, "vec_id", "embedding", 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(2))
-      .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
-    val byQ = got.groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
-    val recall = exact.keys.toSeq.map(q =>
-      (exact(q) intersect byQ.getOrElse(q, Set.empty)).size.toDouble / 10).sum / exact.size
-    assert(recall >= 0.3, s"recall@10 $recall < 0.3")
   }
 
   test("pca: orthonormal components, descending eigenvalues, planted low-rank subspace recovered") {
@@ -857,68 +859,65 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("residual ivf-pq: wins on clustered data, pruned plan, deterministic") {
-    import graft.ops.{Pq, Similarity}
-    import spark.implicits._
-    // planted structure — the residual premise: 8 true centers, points
-    // = center + small noise, so the coarse quantizer explains most of
-    // the energy and PQ bits should be spent on the residual
-    val rnd = new scala.util.Random(11)
-    def unit(v: Array[Double]) = { val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n) }
-    val centers = Array.fill(8)(unit(Array.fill(64)(rnd.nextGaussian())))
-    val pts = (0L until 400L).map { i =>
-      val c = centers((i % 8).toInt)
-      (i, unit(Array.tabulate(64)(j => c(j) + 0.08 * rnd.nextGaussian()))
-        .map(_.toFloat).toSeq)
-    }
-    val df = pts.toDF("vec_id", "embedding")
-    val queries = df.filter(col("vec_id") % 25 === 0)
-    val centroids = Similarity.fitCentroids(df, "embedding", 8)
-    def recallOf(residual: Boolean): Double = {
-      val dir = java.nio.file.Files.createTempDirectory(
-        if (residual) "pq_resid" else "pq_plain").toString
-      if (residual) {
-        val cbs = Pq.fitResidualCodebooks(df, "embedding", centroids, m = 8, k = 64)
-        Pq.writeResidualPqIvfIndex(df, "vec_id", "embedding", dir, centroids, cbs)
-      } else {
-        val cbs = Pq.fitCodebooks(df, "embedding", m = 8, k = 64)
-        Pq.writePqIvfIndex(df, "vec_id", "embedding", dir, centroids, cbs)
+    IvfTestKit.withTempDirs { tmp =>
+      import graft.ops.{Pq, Similarity}
+      import spark.implicits._
+      // planted structure — the residual premise: 8 true centers, points
+      // = center + small noise, so the coarse quantizer explains most of
+      // the energy and PQ bits should be spent on the residual
+      val rnd = new scala.util.Random(11)
+      def unit(v: Array[Double]) = { val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n) }
+      val centers = Array.fill(8)(unit(Array.fill(64)(rnd.nextGaussian())))
+      val pts = (0L until 400L).map { i =>
+        val c = centers((i % 8).toInt)
+        (i, unit(Array.tabulate(64)(j => c(j) + 0.08 * rnd.nextGaussian()))
+          .map(_.toFloat).toSeq)
       }
-      val res =
-        if (residual) Pq.residualPqIvfTopKFromIndex(dir, queries, "vec_id", "embedding", 10, nProbe = 2)
-        else Pq.pqIvfTopKFromIndex(dir, queries, "vec_id", "embedding", 10, nProbe = 2)
-      if (residual) {
-        val plan = res.queryExecution.executedPlan.toString()
-        assert(plan.contains("PartitionFilters") && plan.contains("cluster"),
-          s"no partition pruning in residual plan:\n$plan")
+      val df = pts.toDF("vec_id", "embedding")
+      val queries = df.filter(col("vec_id") % 25 === 0)
+      val centroids = Similarity.fitCentroids(df, "embedding", 8)
+      def recallOf(residual: Boolean): Double = {
+        val dir = tmp(if (residual) "pq_resid" else "pq_plain")
+        if (residual) {
+          val cbs = Pq.fitResidualCodebooks(df, "embedding", centroids, m = 8, k = 64)
+          Pq.writeResidualPqIvfIndex(df, "vec_id", "embedding", dir, centroids, cbs)
+        } else {
+          val cbs = Pq.fitCodebooks(df, "embedding", m = 8, k = 64)
+          Pq.writePqIvfIndex(df, "vec_id", "embedding", dir, centroids, cbs)
+        }
+        val res =
+          if (residual) Pq.residualPqIvfTopKFromIndex(dir, queries, "vec_id", "embedding", 10, nProbe = 2)
+          else Pq.pqIvfTopKFromIndex(dir, queries, "vec_id", "embedding", 10, nProbe = 2)
+        IvfTestKit.assertPrunedScan(res, dir)
+        val got = res.collect().map(r => r.getLong(0) -> r.getLong(2))
+          .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
+        val exact = Similarity.bruteForceTopK(df, queries, "vec_id", "embedding", 10)
+          .collect().map(r => r.getLong(0) -> r.getLong(2))
+          .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
+        exact.keys.toSeq.map(q =>
+          (exact(q) intersect got.getOrElse(q, Set.empty)).size.toDouble / 10)
+          .sum / exact.size
       }
-      val got = res.collect().map(r => r.getLong(0) -> r.getLong(2))
-        .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
-      val exact = Similarity.bruteForceTopK(df, queries, "vec_id", "embedding", 10)
-        .collect().map(r => r.getLong(0) -> r.getLong(2))
-        .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
-      exact.keys.toSeq.map(q =>
-        (exact(q) intersect got.getOrElse(q, Set.empty)).size.toDouble / 10)
-        .sum / exact.size
+      val plain = recallOf(residual = false)
+      val resid = recallOf(residual = true)
+      // identical bits (8x6 = 48), identical probes: the residual encoding
+      // must beat the raw encoding when the coarse structure is real
+      assert(resid > plain, s"residual recall $resid !> plain $plain")
+      // near-identical within-cluster neighbors cap ANY fixed-bit ADC
+      // ranking; the margin over raw encoding is the claim, the floor is
+      // sanity (10x chance: 10 of 400)
+      assert(resid >= 0.35, s"residual recall floor: $resid")
+      // determinism: a repartitioned corpus produces the identical ranking
+      val dir2 = tmp("pq_resid2")
+      val cbs2 = Pq.fitResidualCodebooks(df.repartition(7), "embedding", centroids, m = 8, k = 64)
+      Pq.writeResidualPqIvfIndex(df.repartition(7), "vec_id", "embedding", dir2, centroids, cbs2)
+      val a = Pq.residualPqIvfTopKFromIndex(dir2, queries, "vec_id", "embedding", 10, nProbe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      val dir3 = tmp("pq_resid3")
+      Pq.writeResidualPqIvfIndex(df, "vec_id", "embedding", dir3, centroids, cbs2)
+      val b = Pq.residualPqIvfTopKFromIndex(dir3, queries, "vec_id", "embedding", 10, nProbe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(a == b)
     }
-    val plain = recallOf(residual = false)
-    val resid = recallOf(residual = true)
-    // identical bits (8x6 = 48), identical probes: the residual encoding
-    // must beat the raw encoding when the coarse structure is real
-    assert(resid > plain, s"residual recall $resid !> plain $plain")
-    // near-identical within-cluster neighbors cap ANY fixed-bit ADC
-    // ranking; the margin over raw encoding is the claim, the floor is
-    // sanity (10x chance: 10 of 400)
-    assert(resid >= 0.35, s"residual recall floor: $resid")
-    // determinism: a repartitioned corpus produces the identical ranking
-    val dir2 = java.nio.file.Files.createTempDirectory("pq_resid2").toString
-    val cbs2 = Pq.fitResidualCodebooks(df.repartition(7), "embedding", centroids, m = 8, k = 64)
-    Pq.writeResidualPqIvfIndex(df.repartition(7), "vec_id", "embedding", dir2, centroids, cbs2)
-    val a = Pq.residualPqIvfTopKFromIndex(dir2, queries, "vec_id", "embedding", 10, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val dir3 = java.nio.file.Files.createTempDirectory("pq_resid3").toString
-    Pq.writeResidualPqIvfIndex(df, "vec_id", "embedding", dir3, centroids, cbs2)
-    val b = Pq.residualPqIvfTopKFromIndex(dir3, queries, "vec_id", "embedding", 10, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(a == b)
   }
 }
