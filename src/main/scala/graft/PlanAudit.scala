@@ -1,12 +1,19 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan audit: for every SparkEntry query, check the properties
   * that matter at 100 TB — broadcast joins where a side is dimension-
   * sized, no cartesian products anywhere, filter/column pushdown reaching
   * the parquet scans, and whole-stage codegen coverage. Prints one line
   * per query plus a summary; exits nonzero if a hard rule breaks.
+  *
+  * It also takes a construction census: the Spark jobs each query's
+  * `fn(spark, sf)` starts before anything runs it, and how many of those
+  * are parquet schema inference, with their call sites in the summary.
   *
   * Hard rules:
   *   - no CartesianProduct / BroadcastNestedLoopJoin unless the query
@@ -67,6 +74,49 @@ object PlanAudit {
         (path, f.requiredSchema.length, f.relation.dataSchema.length)
     }
 
+  /** The Spark jobs a block started, and the call sites of those that
+    * were parquet schema inference.
+    */
+  final case class Census(jobs: Int, inferenceSites: Seq[String]) {
+    def inference: Int = inferenceSites.size
+  }
+
+  /** Parquet schema inference: the one-stage footer-reading job
+    * (`parallelize` + `mapPartitions`) that a `read.parquet` without a
+    * given schema starts, named after the `parquet` call.
+    */
+  private def isInference(st: StageInfo): Boolean =
+    st.name.startsWith("parquet at ") &&
+      st.rddInfos.map(_.name).sorted == Seq("MapPartitionsRDD", "ParallelCollectionRDD")
+
+  /** `f`'s value and the jobs started under a job tag set around it,
+    * counted after the listener bus drains. Job tags are inheritable
+    * local properties, so the jobs of threads `f` starts (a streaming
+    * query's micro-batches) count too.
+    */
+  def census[T](spark: SparkSession)(f: => T): (T, Census) = {
+    val sc = spark.sparkContext
+    val tag = s"graft-census-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) {
+          jobs.incrementAndGet()
+          j.stageInfos.find(isInference)
+            .foreach(st => sites.add(st.name.stripPrefix("parquet at ")))
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      val r = try f finally sc.removeJobTag(tag)
+      org.apache.spark.sql.graftbridge.PlanBridge.drainListeners(sc)
+      (r, Census(jobs.get, sites.asScala.toSeq))
+    } finally sc.removeSparkListener(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = graft.runtime.LocalSession.builder("local[4]", 4)
@@ -78,9 +128,12 @@ object PlanAudit {
     spark.sparkContext.setLogLevel("ERROR")
 
     var hardFailures = List.empty[String]
+    var censuses = List.empty[Census]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val qe: QueryExecution = fn(spark, sfDir).queryExecution
+        val (df, built) = census(spark)(fn(spark, sfDir))
+        censuses ::= built
+        val qe: QueryExecution = df.queryExecution
         val plan = qe.executedPlan.toString()
         val cartesian = plan.contains("CartesianProduct")
         val nestedLoop = plan.contains("BroadcastNestedLoopJoin")
@@ -107,13 +160,18 @@ object PlanAudit {
             || (fullScans.nonEmpty && !fullScanAllowed(name)))
           hardFailures ::= name
         println(f"$name%-24s scans=$scans bhj=$broadcasts smj=$sortMerge " +
-          f"codegen=$codegenSpans$flags")
+          f"codegen=$codegenSpans jobs=${built.jobs} infer=${built.inference}$flags")
       } catch {
         case e: Exception =>
           hardFailures ::= name
           println(f"$name%-24s PLAN FAILED: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}")
       }
     }
+    val sites = censuses.flatMap(_.inferenceSites).groupBy(identity)
+      .map { case (site, n) => s"$site x${n.size}" }.toSeq.sorted
+    println(s"== construction: ${censuses.map(_.jobs).sum} jobs, " +
+      s"${censuses.map(_.inference).sum} parquet schema inference " +
+      s"(${sites.mkString(", ")})")
     println(s"== hard failures: ${hardFailures.size} ${hardFailures.mkString(",")}")
     spark.stop()
     if (hardFailures.nonEmpty) sys.exit(1)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{PipelineQueries, Queries, QueryDef}
-import graft.runtime.BuildOnce
+import graft.runtime.{BuildOnce, Tables}
 import scala.util.chaining._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -41,9 +41,6 @@ object SynthQueries {
   import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
   import org.apache.spark.sql.types.{ArrayType, BinaryType, LongType, MapType,
     StructType}
-
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 
   /** Scope for one bounded streaming replay (`rig` is its query tag,
     * e.g. "g55"): the body gets a [[StreamScope]] for its staging dirs
@@ -143,7 +140,7 @@ object SynthQueries {
     }
 
     /** events.parquet as a bounded file stream: the raw table (read
-      * through [[eventsRaw]]) and the staged stream with `ts` normalized
+      * through [[Tables.read]]) and the staged stream with `ts` normalized
       * to BIGINT nanos. The file-stream source only accepts directories
       * (it anchors its listing at a basePath directory), so the single
       * file is exposed through a symlink in a staged dir. With
@@ -155,7 +152,7 @@ object SynthQueries {
     def events(d: String, sentinelS: Option[Long] = None)
         : (DataFrame, DataFrame) = {
       import org.apache.spark.sql.functions.max
-      val evRaw = eventsRaw(s, d)
+      val evRaw = Tables.read(s, d, "events")
       val streamDir = dir("events")
       java.nio.file.Files.createSymbolicLink(
         streamDir.resolve("a_events.parquet"),
@@ -177,16 +174,6 @@ object SynthQueries {
   private def materialized(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
-
-  /** The raw events table. `ts` ships as TIMESTAMP(NANOS) or
-    * timestamp[us] depending on the testdata generation; nanosAsLong
-    * makes the NANOS variant readable (as BIGINT) — see
-    * [[graft.queries.EventTs]].
-    */
-  private def eventsRaw(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$d/events.parquet")
-  }
 
   /** One far-future sentinel event at `sentinelNs` on an out-of-band
     * key (-1), with `ts` in the RAW file type (long nanos or timestamp
@@ -262,7 +249,7 @@ object SynthQueries {
   private def eventThirdFiles(s: SparkSession, d: String)
       : Seq[(String, DataFrame)] = {
     import org.apache.spark.sql.functions.{lit, max, min, unix_micros}
-    val evRaw = eventsRaw(s, d)
+    val evRaw = Tables.read(s, d, "events")
     val ev = EventTs.toNanos(evRaw)
     val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
       .toSeq.map(_.asInstanceOf[Long]).toArray
@@ -590,7 +577,7 @@ object SynthQueries {
     QueryDef("g43_removefields",
       (s, d) => {
         import org.apache.spark.sql.functions.{round, struct}
-        val o = s.read.parquet(s"$d/orders.parquet")
+        val o = Tables.read(s, d, "orders")
           .select(col("o_orderkey"),
             struct(col("o_orderstatus").as("status"),
               struct(col("o_orderdate").cast("string").as("dropme"),
@@ -611,7 +598,7 @@ object SynthQueries {
       (s, d) => {
         import org.apache.spark.sql.functions.{coalesce, explode_outer, lit}
         val tx = Processors.transactions(
-          s.read.parquet(s"$d/orders.parquet").select("o_orderkey"), "o_orderkey")
+          Tables.read(s, d, "orders").select("o_orderkey"), "o_orderkey")
         tx.select(col("o_orderkey"), explode_outer(col("transactions")).as("tx"))
           .select(col("o_orderkey"),
             coalesce(col("tx.seq"), lit(-1L)).as("seq"),
@@ -1165,7 +1152,7 @@ object SynthQueries {
     QueryDef("g59_salted_agg",
       (s, d) => {
         import org.apache.spark.sql.functions.{count, lit, round, sum}
-        val li = s.read.parquet(s"$d/lineitem.parquet")
+        val li = Tables.read(s, d, "lineitem")
         graft.ops.Skew.saltedAgg(li, "l_returnflag", salts = 16,
           "cnt" -> count(lit(1)),
           "qty_cents" -> sum(round(col("l_quantity") * 100).cast("long")))
@@ -1175,9 +1162,9 @@ object SynthQueries {
         FROM lineitem GROUP BY l_returnflag""")),
     QueryDef("g60_salted_join",
       (s, d) => {
-        val orders = s.read.parquet(s"$d/orders.parquet")
+        val orders = Tables.read(s, d, "orders")
           .select(col("o_custkey").as("custkey"), col("o_orderkey"))
-        val cust = s.read.parquet(s"$d/customer.parquet")
+        val cust = Tables.read(s, d, "customer")
           .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
         graft.ops.Skew.saltedJoin(orders, cust, "custkey", salts = 8)
           .select(col("o_orderkey"), col("custkey"), col("c_mktsegment"))
@@ -1282,7 +1269,7 @@ object SynthQueries {
     // comes from the SAME chooseBanding call the operator makes.
     QueryDef("g46_minhash_lsh",
       (s, d) => graft.ops.Dedup.minHashLsh(
-        s.read.parquet(s"$d/documents.parquet"), "doc_id", "text", threshold = 0.7),
+        Tables.read(s, d, "documents"), "doc_id", "text", threshold = 0.7),
       Some(MinHashLshOracle.sql)),
     // maxHamming 3 = 4 bands of 16 bits: selective buckets. Larger
     // distances keep recall 1.0 (pigeonhole banding) but the narrower
@@ -1294,7 +1281,7 @@ object SynthQueries {
     // replayed in DuckDB including the arithmetic-shift band keys.
     QueryDef("g47_simhash_pairs",
       (s, d) => graft.ops.Dedup.simHashPairs(
-        s.read.parquet(s"$d/documents.parquet"), "doc_id", "text", maxHamming = 3),
+        Tables.read(s, d, "documents"), "doc_id", "text", maxHamming = 3),
       Some(SimHashOracle.sql)),
     // the raw corpus is random vectors (max pairwise cosine ~0.5, no true
     // near-dups), so near-dup detection is exercised against a
@@ -1311,7 +1298,7 @@ object SynthQueries {
     QueryDef("g48_embed_neardup",
       (s, d) => {
         import org.apache.spark.sql.functions.{lit, pmod, transform, xxhash64}
-        val base = s.read.parquet(s"$d/embeddings.parquet")
+        val base = Tables.read(s, d, "embeddings")
         val perturbed = base
           .withColumn("vec_id", col("vec_id") + lit(1000000L))
           .withColumn("embedding", transform(col("embedding"), (x, i) =>
@@ -1327,7 +1314,7 @@ object SynthQueries {
     // facts of the sf0.01 gate corpus, so the driver gate hash-checks
     // the serving triples instead of recording no_oracle rows.
     annPinDef("g49_ann_ivf")((s, d) => {
-      val vecs = s.read.parquet(s"$d/embeddings.parquet")
+      val vecs = Tables.read(s, d, "embeddings")
       val centroids = BuildOnce("g49", d) {
         graft.ops.Similarity.fitCentroids(vecs, "embedding", 16)
       }
@@ -1341,7 +1328,7 @@ object SynthQueries {
     // runtime probe filter, served by the graft.ops.Ivf core. The
     // disk==memory equivalence and the pruned scan are pinned in OpsSpec.
     annPinDef("g67_ann_ivf_disk")((s, d) => {
-      val vecs = s.read.parquet(s"$d/embeddings.parquet")
+      val vecs = Tables.read(s, d, "embeddings")
       val dir = BuildOnce.dir("g67_ivf", d) { dir =>
         val centroids = graft.ops.Similarity.fitCentroids(vecs, "embedding", 16)
         graft.ops.Similarity.writeIvfIndex(vecs, "vec_id", "embedding", dir, centroids)
@@ -1356,7 +1343,7 @@ object SynthQueries {
     // AND hold int8 codes — a fraction of a fraction of the bytes at
     // 100 TB
     annPinDef("g86_ann_ivf_quant")((s, d) => {
-      val vecs = s.read.parquet(s"$d/embeddings.parquet")
+      val vecs = Tables.read(s, d, "embeddings")
       val dir = BuildOnce.dir("g86_ivfq", d) { dir =>
         val centroids = graft.ops.Similarity.fitCentroids(vecs, "embedding", 16)
         graft.ops.Quantization.writeQuantizedIvfIndex(
@@ -1377,7 +1364,7 @@ object SynthQueries {
     // the full compress+decompress per row).
     QueryDef("g90_compress_signal",
       (s, d) => graft.ops.TextAnalysis.compressionSignals(
-        s.read.parquet(s"$d/documents.parquet"), "doc_id", "text")
+        Tables.read(s, d, "documents"), "doc_id", "text")
         .select(col("doc_id"), col("n_bytes"), col("crc_rt")),
       Some {
         import graft.queries.DuckXxHash._
@@ -1397,7 +1384,7 @@ object SynthQueries {
     // floats — ~40× less candidate memory traffic than float brute
     // force, scored by m table lookups per candidate
     annPinDef("g89_ann_pq")((s, d) => {
-      val vecs = s.read.parquet(s"$d/embeddings.parquet")
+      val vecs = Tables.read(s, d, "embeddings")
       val cbs = BuildOnce("g89", d) {
         graft.ops.Pq.fitCodebooks(vecs, "embedding", m = 8, k = 64)
       }
@@ -1412,7 +1399,7 @@ object SynthQueries {
     // Scores proven identical to the g89 kernel and the pruned scan
     // pinned by ScaleOpsSpec.
     annPinDef("g91_ann_ivfpq")((s, d) => {
-      val vecs = s.read.parquet(s"$d/embeddings.parquet")
+      val vecs = Tables.read(s, d, "embeddings")
       val dir = BuildOnce.dir("g91_ivfpq", d) { dir =>
         val centroids = graft.ops.Similarity.fitCentroids(vecs, "embedding", 16)
         val cbs = graft.ops.Pq.fitCodebooks(vecs, "embedding", m = 8, k = 64)
@@ -1427,7 +1414,7 @@ object SynthQueries {
     // integer bias to the same ADC lookups. A/B superiority over raw
     // encoding pinned in ScaleOpsSpec.
     annPinDef("g107_ann_residual_pq")((s, d) => {
-      val vecs = s.read.parquet(s"$d/embeddings.parquet")
+      val vecs = Tables.read(s, d, "embeddings")
       val dir = BuildOnce.dir("g107_rpq", d) { dir =>
         val centroids = graft.ops.Similarity.fitCentroids(vecs, "embedding", 16)
         val cbs = graft.ops.Pq.fitResidualCodebooks(vecs, "embedding", centroids,
@@ -1450,7 +1437,7 @@ object SynthQueries {
     // scorers, but can't be cross-engine-hashed.
     QueryDef("g110_ann_hash_ivf",
       (s, d) => {
-        val vecs = s.read.parquet(s"$d/embeddings.parquet")
+        val vecs = Tables.read(s, d, "embeddings")
         val dir = BuildOnce.dir("g110_hivf", d) { dir =>
           graft.ops.Quantization.writeHashIvfIndex(vecs, "vec_id", "embedding", dir, 8)
         }
@@ -1474,7 +1461,7 @@ object SynthQueries {
     // re-executed.
     QueryDef("g114_stream_ann_serve",
       (s, d) => streamScoped(s, "g114") { st =>
-        val vecs = s.read.parquet(s"$d/embeddings.parquet")
+        val vecs = Tables.read(s, d, "embeddings")
         val dir = BuildOnce.dir("g110_hivf", d) { dir =>
           graft.ops.Quantization.writeHashIvfIndex(vecs, "vec_id", "embedding", dir, 8)
         }
@@ -1512,7 +1499,7 @@ object SynthQueries {
     // hash match.
     QueryDef("g115_ann_index_append",
       (s, d) => {
-        val vecs = s.read.parquet(s"$d/embeddings.parquet")
+        val vecs = Tables.read(s, d, "embeddings")
         val dir = BuildOnce.dir("g115_hivf_app", d) { dir =>
           graft.ops.Quantization.writeHashIvfIndex(
             vecs.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", dir, 8)
@@ -1535,7 +1522,7 @@ object SynthQueries {
     // vanished wrongly breaks one leg's hash.
     QueryDef("g127_ann_index_delete",
       (s, d) => {
-        val vecs = s.read.parquet(s"$d/embeddings.parquet")
+        val vecs = Tables.read(s, d, "embeddings")
         val dir = BuildOnce.dir("g127_hivf_del", d) { dir =>
           graft.ops.Quantization.writeHashIvfIndex(
             vecs, "vec_id", "embedding", dir, 8)
@@ -1565,7 +1552,7 @@ object SynthQueries {
     QueryDef("g113_strhash_bits",
       (s, d) => {
         import org.apache.spark.sql.functions.{explode, lit, lower, split, trim, xxhash64}
-        val docs = s.read.parquet(s"$d/documents.parquet")
+        val docs = Tables.read(s, d, "documents")
         val toks = docs.select(col("doc_id"),
           split(lower(trim(col("text"))), "\\s+").as("w"))
         val sh = toks
@@ -1585,7 +1572,7 @@ object SynthQueries {
     // converges to) -> one canonical survivor per cluster.
     QueryDef("g52_dedup_decision",
       (s, d) => graft.ops.Clusters.dedupDecision(
-        s.read.parquet(s"$d/documents.parquet"), "doc_id", "text", threshold = 0.8),
+        Tables.read(s, d, "documents"), "doc_id", "text", threshold = 0.8),
       Some(MinHashLshOracle.decisionSql)),
 
     // distributed BPE merge learning (tokenizer FITTING, not just
@@ -1602,7 +1589,7 @@ object SynthQueries {
       (s, d) => {
         import s.implicits._
         graft.ops.BpeTrainer.learnMerges(
-          s.read.parquet(s"$d/documents.parquet"), "text", nMerges = 10)
+          Tables.read(s, d, "documents"), "text", nMerges = 10)
           .toDF("rank", "left", "right", "pair_count")
       },
       graft.queries.PinOracles.sql.get("g94_bpe_merges")),
@@ -2125,7 +2112,7 @@ object SynthQueries {
       (s, d) => {
         import org.apache.spark.sql.functions.{count, length, lit, sum}
         import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-        val docsDf = s.read.parquet(s"$d/documents.parquet")
+        val docsDf = Tables.read(s, d, "documents")
           .select(col("doc_id"), col("lang"), col("text"))
         val dir = java.nio.file.Files.createTempDirectory("g105_shards").toString
         docsDf.write.format("graft-shards").mode("append")
@@ -2186,7 +2173,7 @@ object SynthQueries {
       (s, d) => streamScoped(s, "g108") { st =>
         import org.apache.spark.sql.functions.{count, expr, lit, timestamp_micros,
           unix_timestamp, window}
-        val evRaw = eventsRaw(s, d)
+        val evRaw = Tables.read(s, d, "events")
         val streamDir = st.dir("events")
         // two halves by event id parity — both halves span the whole
         // timeline, so most windows receive rows from BOTH batches
@@ -2225,7 +2212,7 @@ object SynthQueries {
         // four single-file triggers, processed in write order (thirds +
         // sentinel — see eventThirdFiles for why thirds)
         StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
-        st.drain(typeCountStream(s, streamDir, eventsRaw(s, d).schema), "append",
+        st.drain(typeCountStream(s, streamDir, Tables.read(s, d, "events").schema), "append",
           minBatches = 4).filter(col("user_id") >= 0)
       }),
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
@@ -2248,7 +2235,7 @@ object SynthQueries {
     // even if it were numerically idempotent.
     QueryDef("g116_stream_restart_recovery",
       (s, d) => streamScoped(s, "g116")(st => withRocksDb(s) {
-        val evRaw = eventsRaw(s, d)
+        val evRaw = Tables.read(s, d, "events")
         val streamDir = st.dir("events")
         val ckptDir = st.dir("ckpt").toString
         val outDir = st.dir("out").toString
@@ -2310,7 +2297,7 @@ object SynthQueries {
       (s, d) => streamScoped(s, "g117") { st =>
         import org.apache.spark.sql.functions.{abs, broadcast, coalesce,
           count, expr, lit, max, min, timestamp_micros, unix_timestamp, window}
-        val evRaw = eventsRaw(s, d)
+        val evRaw = Tables.read(s, d, "events")
         val ev = EventTs.toNanos(evRaw)
         val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
           .toSeq.map(_.asInstanceOf[Long]).toArray
@@ -2387,7 +2374,7 @@ object SynthQueries {
           sum, timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        val evRaw = eventsRaw(s, d)
+        val evRaw = Tables.read(s, d, "events")
         val ev = EventTs.toNanos(evRaw)
         val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
           .toSeq.map(_.asInstanceOf[Long]).toArray
@@ -2442,7 +2429,7 @@ object SynthQueries {
           max => fmax, round, sum, timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        val evRaw = eventsRaw(s, d)
+        val evRaw = Tables.read(s, d, "events")
         val ev = EventTs.toNanos(evRaw)
         val Array(minNs, maxNs) = ev.agg(fmin("ts"), fmax("ts")).collect()(0)
           .toSeq.map(_.asInstanceOf[Long]).toArray
@@ -2519,7 +2506,7 @@ object SynthQueries {
           timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        val evRaw = eventsRaw(s, d)
+        val evRaw = Tables.read(s, d, "events")
         val ev = EventTs.toNanos(evRaw)
         val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
           .toSeq.map(_.asInstanceOf[Long]).toArray
@@ -2622,7 +2609,7 @@ object SynthQueries {
         import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
           StructType}
         import s.implicits._
-        val ids = s.read.parquet(s"$d/documents.parquet")
+        val ids = Tables.read(s, d, "documents")
           .select(col("doc_id").cast("long").as("base_id"))
         val rig = ids
           .select(col("base_id"), col("base_id").as("id"), lit(0).as("shift"))
@@ -2705,7 +2692,7 @@ object SynthQueries {
       (s, d) => streamScoped(s, "g120") { st =>
         import org.apache.spark.sql.functions.{count, expr, lit, max, min,
           pmod, timestamp_micros, unix_timestamp, window, xxhash64}
-        val ev = EventTs.toNanos(eventsRaw(s, d))
+        val ev = Tables.events(s, d)
         val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
           .toSeq.map(_.asInstanceOf[Long]).toArray
         val t1 = minNs + (maxNs - minNs) / 3
@@ -2796,7 +2783,7 @@ object SynthQueries {
         import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
         import s.implicits._
         val maxHamming = 3
-        val ids = s.read.parquet(s"$d/documents.parquet")
+        val ids = Tables.read(s, d, "documents")
           .select(col("doc_id").cast("long").as("base_id"))
         val rig = ids
           .select(col("base_id"), col("base_id").as("id"),
@@ -2900,7 +2887,7 @@ object SynthQueries {
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
         val maxHamming = 3
-        val ids = s.read.parquet(s"$d/documents.parquet")
+        val ids = Tables.read(s, d, "documents")
           .select(col("doc_id").cast("long").as("base_id"))
         val base = ids.select(col("base_id").as("id"),
           xxhash64(col("base_id")).as("sig"))
@@ -2964,7 +2951,7 @@ object SynthQueries {
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
         val maxHamming = 3
-        val ids = s.read.parquet(s"$d/documents.parquet")
+        val ids = Tables.read(s, d, "documents")
           .select(col("doc_id").cast("long").as("base_id"))
         val base = ids.select(col("base_id").as("id"),
           xxhash64(col("base_id")).as("sig"))
@@ -3112,7 +3099,7 @@ object SynthQueries {
         import org.apache.spark.sql.functions.{concat, lit, max => fmax, pmod}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        val cand = s.read.parquet(s"$d/documents.parquet")
+        val cand = Tables.read(s, d, "documents")
           .select(col("doc_id").cast("long").as("doc_id"))
           .filter(pmod(col("doc_id"), lit(11L)) =!= 0) // robots-gated out
           .select(
@@ -3198,7 +3185,7 @@ object SynthQueries {
         import org.apache.spark.sql.functions.{concat, lit, lpad, pmod}
         val outDir = st.dir("wds").toString
         def gen(parity: Int): Unit = {
-          val base = s.read.parquet(s"$d/documents.parquet")
+          val base = Tables.read(s, d, "documents")
             .select(col("doc_id").cast("long").as("doc_id"))
             .filter(pmod(col("doc_id"), lit(2L)) === parity)
             .select(col("doc_id"),
@@ -3267,7 +3254,7 @@ object SynthQueries {
         val warcDir = st.dir("warc").toString
         val did = col("doc_id")
         def writeGen(g: Long): Long = {
-          val pages = s.read.parquet(s"$d/documents.parquet")
+          val pages = Tables.read(s, d, "documents")
             .select(col("doc_id").cast("long").as("doc_id"))
             .filter(pmod(did, lit(3L)) === g)
           pages.select(
@@ -3291,7 +3278,7 @@ object SynthQueries {
         // id -> curl join, and the delay dim feeds a STREAM-STATIC
         // join, where an unmaterialized static side would re-derive
         // this whole extract pipeline EVERY micro-batch
-        val candBatch = s.read.parquet(s"$d/documents.parquet")
+        val candBatch = Tables.read(s, d, "documents")
           .select(col("doc_id").cast("long").as("doc_id"))
           // spread the HTML render + link extraction over the cluster:
           // a single-file scan is ONE partition (one parquet row group
@@ -3430,7 +3417,7 @@ object SynthQueries {
         val outDir = st.dir("wds").toString
         val ckptDir = st.dir("ckpt").toString
         def writeGen(g: Long): Unit =
-          s.read.parquet(s"$d/documents.parquet")
+          Tables.read(s, d, "documents")
             .select(col("doc_id").cast("long").as("doc_id"), col("text"))
             .filter(pmod(did, lit(2L)) === g)
             .select(
@@ -3523,7 +3510,7 @@ object SynthQueries {
         def urlOf(dep: Int, j: org.apache.spark.sql.Column) =
           concat(lit("https://h"), pmod(j, lit(5L)).cast("string"),
             lit(s".example.com/d$dep/"), j.cast("string"))
-        val seeds = s.read.parquet(s"$d/documents.parquet")
+        val seeds = Tables.read(s, d, "documents")
           .select(did.cast("long").as("i")).filter(pmod(col("i"), lit(7L)) === 0)
         val d1 = seeds.select(explode(array(col("i") * 2, col("i") * 2 + 1))
           .as("j")).select(col("j"), lit(1L).as("depth"))
@@ -3775,7 +3762,7 @@ object SynthQueries {
         import s.implicits._
         val maxHamming = 3
         val windowOrd = 500L
-        val ids = s.read.parquet(s"$d/documents.parquet")
+        val ids = Tables.read(s, d, "documents")
           .select(col("doc_id").cast("long").as("base_id"))
         val maxId = ids.agg(fmax("base_id")).collect()(0).getLong(0)
         val base = ids.select(col("base_id").as("id"),
@@ -3853,7 +3840,7 @@ object SynthQueries {
       (s, d) => {
         import org.apache.spark.sql.functions.element_at
         val assets = graft.ops.Multimodal.asAsset(
-          s.read.parquet(s"$d/documents.parquet")
+          Tables.read(s, d, "documents")
             .select(col("doc_id"), col("text").cast("binary").as("payload")),
           "payload", "image", "png")
         val frames = graft.ops.Multimodal.sampleFrames(

@@ -222,7 +222,6 @@ object Pdf {
         // `n g R` lookahead — a reference only when BOTH follow
         val save = p
         ws()
-        val d = p
         var gDigits = 0
         while (peek >= '0' && peek <= '9') { p += 1; gDigits += 1 }
         if (gDigits > 0) {

@@ -958,7 +958,6 @@ object Vp8 {
   private def filterMbNormal(p: Array[Byte], stride: Int, x: Int, y: Int,
       size: Int, mbLim: Int, subLim: Int, interior: Int, hevT: Int,
       inner: Boolean): Unit = {
-    def px(i: Int): Int = p(i) & 0xff
     // vertical edges (filter across columns)
     def vEdge(ex: Int, mbEdge: Boolean): Unit = {
       val lim = if (mbEdge) mbLim else subLim
@@ -1011,11 +1010,11 @@ object Vp8 {
     val sq0 = q0 - 128; val sq1 = q1 - 128; val sq2 = q2 - 128
     if (!mbEdge) {
       // subblock filter (§15.3): common adjust, outer taps only on hev
-      var a = sClamp((if (hev) sClamp(sp1 - sq1) else 0) + 3 * (sq0 - sp0))
+      val a = sClamp((if (hev) sClamp(sp1 - sq1) else 0) + 3 * (sq0 - sp0))
       val f1 = sClamp(a + 4) >> 3
       val f2 = sClamp(a + 3) >> 3
-      var nq0 = sq0 - f1
-      var np0 = sp0 + f2
+      val nq0 = sq0 - f1
+      val np0 = sp0 + f2
       p(o) = clamp255(sClamp(nq0) + 128).toByte
       p(o - step) = clamp255(sClamp(np0) + 128).toByte
       if (!hev) {

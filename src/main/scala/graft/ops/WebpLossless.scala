@@ -735,7 +735,6 @@ object WebpLossless {
         dFreq(prefixEncode(1 + 120)._1) += 1
     }
     if (dFreq.forall(_ == 0)) dFreq(0) = 1 // the code must still exist
-    val bw = new BitWriter()
     // container-less VP8L payload first
     val pw = new BitWriter()
     pw.writeBits(0x2f, 8)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * which physical type the driver's generator wrote:
   *
   *  - `TIMESTAMP(NANOS)` parquet (rounds 1-5): Spark 4 cannot represent
-  *    nanosecond timestamps, so the session sets
+  *    nanosecond timestamps, so [[graft.runtime.Tables]] sets
   *    `spark.sql.legacy.parquet.nanosAsLong=true` and the column arrives
   *    as LongType nanos already — pass through.
   *  - `timestamp[us] isAdjustedToUTC=false` (round 6 regeneration):

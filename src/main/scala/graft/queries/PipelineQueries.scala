@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.runtime.BuildOnce
+import graft.runtime.{BuildOnce, Tables}
 
 /** Training-data pipeline operators over the `documents` and `embeddings`
   * tables: deduplication, text analysis, similarity search. Written
@@ -12,11 +12,6 @@ import graft.runtime.BuildOnce
   * all-pairs), and ANN broadcasts the small query side.
   */
 object PipelineQueries {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-  private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
 
   // ------------------------------------------------------------------ dedup
 
@@ -27,7 +22,7 @@ object PipelineQueries {
   val q20_dedup_exact = QueryDef(
     "q20_dedup_exact",
     (s, d) =>
-      docs(s, d)
+      Tables.read(s, d, "documents")
         .groupBy(md5(lower(col("text"))).as("fp"))
         .agg(min("doc_id").as("keeper"), count(lit(1)).as("n_copies")),
     Some("""SELECT md5(lower(text)) AS fp, min(doc_id) AS keeper, count(*) AS n_copies
@@ -41,7 +36,7 @@ object PipelineQueries {
     "q21_dedup_survivors",
     (s, d) => {
       val w = Window.partitionBy(md5(lower(col("text")))).orderBy("doc_id")
-      docs(s, d)
+      Tables.read(s, d, "documents")
         .select(col("doc_id"), row_number().over(w).as("rn"))
         .filter(col("rn") === 1)
         .select("doc_id")
@@ -57,7 +52,7 @@ object PipelineQueries {
   val q22_fingerprint = QueryDef(
     "q22_fingerprint",
     (s, d) =>
-      docs(s, d)
+      Tables.read(s, d, "documents")
         .select(col("doc_id"),
           md5(regexp_replace(lower(col("text")), "\\s+", " ")).as("fp")),
     Some("""SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
@@ -78,7 +73,7 @@ object PipelineQueries {
   val q23_ngram_jaccard = QueryDef(
     "q23_ngram_jaccard",
     (s, d) =>
-      graft.ops.Dedup.exactShinglePairs(docs(s, d), "doc_id", "text")
+      graft.ops.Dedup.exactShinglePairs(Tables.read(s, d, "documents"), "doc_id", "text")
         .select(col("a"), col("b"),
           floor(col("common") * 1000000L / (col("na") + col("nb") - col("common")))
             .cast("long").as("jaccard_ppm")),
@@ -108,7 +103,7 @@ object PipelineQueries {
   val q24_token_count = QueryDef(
     "q24_token_count",
     (s, d) =>
-      docs(s, d)
+      Tables.read(s, d, "documents")
         .select(col("doc_id"),
           (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1)
             .cast("long").as("n_tokens"),
@@ -126,7 +121,7 @@ object PipelineQueries {
     (s, d) => {
       val nTok = length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1
       val nLetters = length(regexp_replace(col("text"), " ", ""))
-      docs(s, d)
+      Tables.read(s, d, "documents")
         .select(col("doc_id"),
           length(col("text")).cast("long").as("len_chars"),
           nTok.cast("long").as("n_tokens"),
@@ -151,7 +146,7 @@ object PipelineQueries {
       def occ(word: String) =
         ((length(padded) - length(regexp_replace(padded, s" $word ", " "))) /
           (word.length + 1)).cast("long")
-      docs(s, d)
+      Tables.read(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           occ("the").as("n_the"), occ("a").as("n_a"), occ("of").as("n_of"))
     },
@@ -179,7 +174,7 @@ object PipelineQueries {
       // otherwise — both accumulate dot and norms in index order, and
       // sqrt(nx)·sqrt(ny) equals the oracle's precomputed-norm product
       // bit-for-bit, so ranks never move between lowerings.
-      val e = embs(s, d)
+      val e = Tables.read(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val q = broadcast(
         e.filter(col("vec_id") % 50 === 0)
@@ -212,7 +207,7 @@ object PipelineQueries {
   val q28_embed_label_stats = QueryDef(
     "q28_embed_label_stats",
     (s, d) =>
-      embs(s, d)
+      Tables.read(s, d, "embeddings")
         .select(col("label"),
           round(element_at(col("embedding").cast("array<double>"), 1) * 1000000)
             .cast("long").as("d1_micro"))
@@ -231,7 +226,7 @@ object PipelineQueries {
   val q29_bpe_tokens = QueryDef(
     "q29_bpe_tokens",
     (s, d) =>
-      docs(s, d).select(col("doc_id"),
+      Tables.read(s, d, "documents").select(col("doc_id"),
         graft.ops.TextAnalysis.bpeTokenCount(col("text")).cast("long").as("n_bpe")),
     Some("""SELECT doc_id,
       cast(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS n_bpe
@@ -244,7 +239,7 @@ object PipelineQueries {
   val q30_langid_guess = QueryDef(
     "q30_langid_guess",
     (s, d) =>
-      docs(s, d).select(col("doc_id"), col("lang"),
+      Tables.read(s, d, "documents").select(col("doc_id"), col("lang"),
         graft.ops.TextAnalysis.langIdGuess(col("text")).as("guess")),
     Some("""SELECT doc_id, lang,
       CASE
@@ -268,7 +263,8 @@ object PipelineQueries {
     "q31_multimodal_bytes",
     (s, d) =>
       graft.ops.Multimodal.asAsset(
-        docs(s, d).select(col("doc_id"), col("text").cast("binary").as("payload")),
+        Tables.read(s, d, "documents")
+          .select(col("doc_id"), col("text").cast("binary").as("payload")),
         "payload", "image", "png")
         .select(col("doc_id"), col("payload_meta.modality"),
           col("payload_meta.n_bytes")),
@@ -277,11 +273,6 @@ object PipelineQueries {
   )
 
   // -------------------------------------------------- temporal join family
-
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    EventTs.toNanos(s.read.parquet(s"$dir/events.parquet"))
-  }
 
   /** As-of join (graft.ops.AsOfJoin): for each click, the user's most
     * recent error at-or-before it. Spark lacks the operator; the lowering
@@ -292,7 +283,7 @@ object PipelineQueries {
   val q32_asof_join = QueryDef(
     "q32_asof_join",
     (s, d) => {
-      val ev = events(s, d)
+      val ev = Tables.events(s, d)
       val clicks = ev.filter(col("event_type") === "click")
         .select("user_id", "event_id", "ts")
       val errors = ev.filter(col("event_type") === "error")
@@ -314,7 +305,7 @@ object PipelineQueries {
   val q33_range_pairs = QueryDef(
     "q33_range_pairs",
     (s, d) => {
-      val ev = events(s, d).select("user_id", "event_id", "ts")
+      val ev = Tables.events(s, d).select("user_id", "event_id", "ts")
       graft.ops.AsOfJoin.rangePairs(ev, ev.withColumnRenamed("event_id", "eid2"),
         "user_id", "ts", "ts", lit(60L * 1000000000L))
         .select(col("l.user_id"), col("l.event_id").as("a"), col("r.eid2").as("b"))
@@ -332,8 +323,8 @@ object PipelineQueries {
   val q34_rollup = QueryDef(
     "q34_rollup",
     (s, d) => {
-      s.read.parquet(s"$d/lineitem.parquet").createOrReplaceTempView("li_rollup")
-      s.read.parquet(s"$d/supplier.parquet").createOrReplaceTempView("sup_rollup")
+      Tables.read(s, d, "lineitem").createOrReplaceTempView("li_rollup")
+      Tables.read(s, d, "supplier").createOrReplaceTempView("sup_rollup")
       s.sql("""SELECT coalesce(s_name, 'ALL') AS sn,
           coalesce(l_returnflag, 'ALL') AS rf,
           count(*) AS cnt,
@@ -362,7 +353,7 @@ object PipelineQueries {
       (s, d) =>
         // coalesce pins null-text behavior: Spark would keep a null-score
         // row while DuckDB's unnest(NULL) would drop the doc entirely
-        docs(s, d).select(col("doc_id"),
+        Tables.read(s, d, "documents").select(col("doc_id"),
           graft.ops.TextAnalysis.unigramScore(coalesce(col("text"), lit("")))
             .as("lm_milli")),
       Some(s"""WITH lex(w, lp) AS (VALUES $lexValues),
@@ -395,7 +386,7 @@ object PipelineQueries {
         // the cluster even when the input is one small file
         // (single-file scan = ONE partition; the
         // Dedup.minHashSignatures spread, same rationale)
-        val scored = docs(s, d)
+        val scored = Tables.read(s, d, "documents")
           .repartition(s.sparkContext.defaultParallelism)
           .select(col("doc_id"),
           graft.ops.TextAnalysis.unigramScore(coalesce(col("text"), lit("")))
@@ -446,7 +437,7 @@ object PipelineQueries {
     val weights = Seq(0.8, 0.1, 0.1)
     QueryDef(
       "q45_hash_split",
-      (s, d) => graft.ops.Sampling.hashSplit(docs(s, d), "doc_id", weights)
+      (s, d) => graft.ops.Sampling.hashSplit(Tables.read(s, d, "documents"), "doc_id", weights)
         .select(col("doc_id"), col("split")),
       Some {
         import DuckXxHash._
@@ -478,7 +469,7 @@ object PipelineQueries {
     QueryDef(
       "q46_seq_packing",
       (s, d) => {
-        val withToks = docs(s, d).select(col("doc_id"),
+        val withToks = Tables.read(s, d, "documents").select(col("doc_id"),
           (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1)
             .cast("long").as("n_tokens"))
         graft.ops.Packing.packSequences(withToks, "doc_id", "n_tokens",
@@ -518,7 +509,8 @@ object PipelineQueries {
     val k = 50
     QueryDef(
       "q47_stratified_k",
-      (s, d) => graft.ops.Sampling.stratifiedFixedK(docs(s, d), "doc_id", "lang", k)
+      (s, d) => graft.ops.Sampling.stratifiedFixedK(Tables.read(s, d, "documents"),
+        "doc_id", "lang", k)
         .select(col("doc_id"), col("lang")),
       Some {
         import DuckXxHash._
@@ -543,7 +535,7 @@ object PipelineQueries {
     val shares = Seq("src0" -> 500000L, "src1" -> 300000L, "src2" -> 200000L)
     QueryDef(
       "q48_source_remix",
-      (s, d) => graft.ops.Sampling.remixSources(docs(s, d), "doc_id", "source",
+      (s, d) => graft.ops.Sampling.remixSources(Tables.read(s, d, "documents"), "doc_id", "source",
         shares.toMap)
         .select(col("doc_id"), col("source")),
       Some {
@@ -576,7 +568,8 @@ object PipelineQueries {
     */
   val q49_repetition = QueryDef(
     "q49_repetition",
-    (s, d) => graft.ops.TextAnalysis.repetitionSignals(docs(s, d), "doc_id", "text"),
+    (s, d) => graft.ops.TextAnalysis.repetitionSignals(Tables.read(s, d, "documents"),
+      "doc_id", "text"),
     Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
       base AS (SELECT doc_id, len(w) AS n_tokens, len(list_distinct(w)) AS n_distinct FROM w),
       bg AS (SELECT doc_id, unnest([w[i] || ' ' || w[i+1]
@@ -603,7 +596,7 @@ object PipelineQueries {
   val q50_contamination = QueryDef(
     "q50_contamination",
     (s, d) => {
-      val all = docs(s, d)
+      val all = Tables.read(s, d, "documents")
       graft.ops.Contamination.ngramHits(
         all.filter(col("doc_id") % 97 =!= 0),
         all.filter(col("doc_id") % 97 === 0),
@@ -641,7 +634,7 @@ object PipelineQueries {
         when(id % 2 === 0,
           concat(lit(" call 555-"), lpad((id % 1000).cast("string"), 3, "0"), lit("-0199")))
           .otherwise(lit("")))
-      val withPii = docs(s, d).select(id, pii.as("__t"))
+      val withPii = Tables.read(s, d, "documents").select(id, pii.as("__t"))
       withPii.select((col("doc_id") +:
         graft.ops.TextAnalysis.piiCounts(col("__t"))) :+
         md5(graft.ops.TextAnalysis.scrubPii(col("__t"))).as("scrub_fp"): _*)
@@ -676,7 +669,7 @@ object PipelineQueries {
   val q52_event_quantiles = QueryDef(
     "q52_event_quantiles",
     (s, d) => {
-      val ev = events(s, d).select(col("event_type"), col("event_id"),
+      val ev = Tables.events(s, d).select(col("event_type"), col("event_id"),
         round(col("value") * 1000000).cast("long").as("v_micro"))
       graft.ops.Quantiles.exactQuantiles(ev, "event_type",
         col("v_micro"), col("event_id"), Seq(50, 90, 99))
@@ -713,7 +706,7 @@ object PipelineQueries {
   val q53_curation_funnel = QueryDef(
     "q53_curation_funnel",
     (s, d) => {
-      val all = docs(s, d)
+      val all = Tables.read(s, d, "documents")
       val surv = graft.ops.Dedup.exact(all, "text", "doc_id")
       val tok = surv.select(col("source"),
         graft.ops.TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"))
@@ -762,7 +755,8 @@ object PipelineQueries {
     QueryDef(
       "q54_cluster_assign",
       (s, d) =>
-        graft.ops.SemanticDedup.hashClusterAssign(embs(s, d), "vec_id", "embedding", k),
+        graft.ops.SemanticDedup.hashClusterAssign(Tables.read(s, d, "embeddings"),
+          "vec_id", "embedding", k),
       Some {
         import DuckXxHash._
         val ch = chain("e",
@@ -801,7 +795,7 @@ object PipelineQueries {
     */
   val q55_heavy_hitters = QueryDef(
     "q55_heavy_hitters",
-    (s, d) => docs(s, d)
+    (s, d) => Tables.read(s, d, "documents")
       .select(explode(split(lower(col("text")), " ")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("tok"))
@@ -821,7 +815,7 @@ object PipelineQueries {
   val q56_distinctive_terms = QueryDef(
     "q56_distinctive_terms",
     (s, d) => {
-      val tok = docs(s, d)
+      val tok = Tables.read(s, d, "documents")
         .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
       val tf = tok.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
       val df = tf.groupBy("tok").agg(count(lit(1)).as("df"))
@@ -862,7 +856,8 @@ object PipelineQueries {
     (s, d) => {
       // already localCheckpointed by exactShinglePairs — safe to reuse
       // three ways without re-running the shingle join
-      val pairs = graft.ops.Dedup.exactShinglePairs(docs(s, d), "doc_id", "text")
+      val pairs = graft.ops.Dedup.exactShinglePairs(Tables.read(s, d, "documents"),
+        "doc_id", "text")
         .select("a", "b")
       val tri = pairs.as("e1")
         .join(pairs.as("e2"), col("e1.b") === col("e2.a"))
@@ -899,7 +894,7 @@ object PipelineQueries {
   val q58_cohort_retention = QueryDef(
     "q58_cohort_retention",
     (s, d) => {
-      val ev = events(s, d).select(col("user_id"),
+      val ev = Tables.events(s, d).select(col("user_id"),
         to_date(timestamp_micros(expr("ts div 1000"))).as("day"))
       val cohort = ev.groupBy("user_id").agg(min("day").as("cohort_day"))
       ev.join(cohort, "user_id")
@@ -928,7 +923,7 @@ object PipelineQueries {
   val q59_event_funnel = QueryDef(
     "q59_event_funnel",
     (s, d) => {
-      val ev = events(s, d).select(col("user_id"), col("event_type"), col("ts"))
+      val ev = Tables.events(s, d).select(col("user_id"), col("event_type"), col("ts"))
       val v = ev.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts").as("t_view"))
       val c = ev.filter(col("event_type") === "click").join(v, "user_id")
@@ -966,7 +961,7 @@ object PipelineQueries {
   val q60_event_transitions = QueryDef(
     "q60_event_transitions",
     (s, d) => {
-      val ev = events(s, d).select(col("user_id"), col("event_type"),
+      val ev = Tables.events(s, d).select(col("user_id"), col("event_type"),
         col("ts"), col("event_id"))
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       ev.withColumn("prev", lag("event_type", 1).over(w))
@@ -990,7 +985,7 @@ object PipelineQueries {
   val q61_embedding_outliers = QueryDef(
     "q61_embedding_outliers",
     (s, d) => {
-      val n2 = embs(s, d).select(col("label"), col("vec_id"),
+      val n2 = Tables.read(s, d, "embeddings").select(col("label"), col("vec_id"),
         aggregate(
           transform(col("embedding").cast("array<double>"),
             x => round(x * 1000000).cast("long")),
@@ -1028,7 +1023,7 @@ object PipelineQueries {
     */
   val q62_span_dedup = QueryDef(
     "q62_span_dedup",
-    (s, d) => graft.ops.SpanDedup.spanDedupReport(docs(s, d), "doc_id", "text"),
+    (s, d) => graft.ops.SpanDedup.spanDedupReport(Tables.read(s, d, "documents"), "doc_id", "text"),
     Some("""WITH d AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ws
                FROM documents),
       t AS (SELECT doc_id,
@@ -1065,7 +1060,7 @@ object PipelineQueries {
     */
   val q63_winnow_sketch = QueryDef(
     "q63_winnow_sketch",
-    (s, d) => graft.ops.Winnowing.fingerprints(docs(s, d), "doc_id", "text"),
+    (s, d) => graft.ops.Winnowing.fingerprints(Tables.read(s, d, "documents"), "doc_id", "text"),
     Some("""WITH w AS (SELECT doc_id, string_split(lower(coalesce(text, '')), ' ') AS ws
                FROM documents),
       words AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS pos,
@@ -1092,7 +1087,7 @@ object PipelineQueries {
   val q65_winnow_pairs = QueryDef(
     "q65_winnow_pairs",
     (s, d) => {
-      val fps = graft.ops.Winnowing.fingerprints(docs(s, d), "doc_id", "text")
+      val fps = graft.ops.Winnowing.fingerprints(Tables.read(s, d, "documents"), "doc_id", "text")
       val capped = fps
         .withColumn("__df", count(lit(1)).over(Window.partitionBy("fp")))
         .filter(col("__df") <= 64)
@@ -1135,7 +1130,7 @@ object PipelineQueries {
     */
   val q66_det_shuffle = QueryDef(
     "q66_det_shuffle",
-    (s, d) => graft.ops.Sampling.deterministicShuffle(docs(s, d), "doc_id", 8)
+    (s, d) => graft.ops.Sampling.deterministicShuffle(Tables.read(s, d, "documents"), "doc_id", 8)
       .select(col("doc_id"), col("shard"), col("pos")),
     Some {
       import DuckXxHash._
@@ -1167,7 +1162,7 @@ object PipelineQueries {
       // cluster even when the input is one small file (single-file scan
       // = ONE partition; the Dedup.minHashSignatures spread, same
       // rationale)
-      embs(s, d)
+      Tables.read(s, d, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"),
           posexplode(graft.ops.Quantization.int8Codes(v)).as(Seq("i", "q")))
@@ -1195,7 +1190,7 @@ object PipelineQueries {
   val q68_quantized_ann = QueryDef(
     "q68_quantized_ann",
     (s, d) => {
-      val e = embs(s, d)
+      val e = Tables.read(s, d, "embeddings")
       graft.ops.Quantization.int8TopK(
         e, e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", 10)
     },
@@ -1236,7 +1231,7 @@ object PipelineQueries {
     val k = 32
     QueryDef(
       "q69_kmv_sketch",
-      (s, d) => graft.ops.Sketches.kmvSketch(events(s, d), "event_type", "user_id", k)
+      (s, d) => graft.ops.Sketches.kmvSketch(Tables.events(s, d), "event_type", "user_id", k)
         .select(col("event_type"), posexplode(col("kmv")).as(Seq("p", "h")))
         .select(col("event_type"), (col("p") + 1).cast("long").as("rnk"), col("h")),
       Some {
@@ -1268,7 +1263,7 @@ object PipelineQueries {
     QueryDef(
       "q70_semantic_dedup",
       (s, d) => {
-        val e = embs(s, d)
+        val e = Tables.read(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
         val planted = e.filter(col("vec_id") % 25 === 0)
           .select((col("vec_id") + 100000L).as("vec_id"),
@@ -1343,7 +1338,7 @@ object PipelineQueries {
     val cap = 32
     QueryDef(
       "q71_freq_sketch",
-      (s, d) => graft.ops.Sketches.freqSketch(docs(s, d), "lang", "source", cap)
+      (s, d) => graft.ops.Sketches.freqSketch(Tables.read(s, d, "documents"), "lang", "source", cap)
         .select(col("lang"), posexplode(col("freq")).as(Seq("p", "f")))
         .select(col("lang"), (col("p") + 1).cast("long").as("rnk"),
           col("f.item").as("item"), col("f.cnt").as("cnt")),
@@ -1370,7 +1365,7 @@ object PipelineQueries {
     QueryDef(
       "q72_boilerplate",
       (s, d) => graft.ops.TextAnalysis.removeBoilerplateChunks(
-        docs(s, d), "doc_id", "text", ct, maxDf),
+        Tables.read(s, d, "documents"), "doc_id", "text", ct, maxDf),
       Some(
         s"""WITH nc AS (SELECT doc_id, t, CAST(ceil(len(t) / $ct.0) AS BIGINT) AS n
           FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
@@ -1406,7 +1401,7 @@ object PipelineQueries {
     QueryDef(
       "q73_zorder_key",
       (s, d) => {
-        val ev = events(s, d)
+        val ev = Tables.events(s, d)
         val x = col("user_id").bitwiseAND(lit(255L))
         val y = expr("ts div 1000000000").bitwiseAND(lit(255L))
         ev.select(col("event_id"),
@@ -1434,7 +1429,8 @@ object PipelineQueries {
     val dims = 8
     QueryDef(
       "q74_jl_project",
-      (s, d) => graft.ops.Quantization.jlProject(embs(s, d), "vec_id", "embedding", dims),
+      (s, d) => graft.ops.Quantization.jlProject(Tables.read(s, d, "embeddings"),
+        "vec_id", "embedding", dims),
       Some {
         import DuckXxHash._
         val ch = chain("e0",
@@ -1467,7 +1463,7 @@ object PipelineQueries {
     */
   val q75_pca_gram = QueryDef(
     "q75_pca_gram",
-    (s, d) => graft.ops.Pca.gramMicro(embs(s, d), "embedding"),
+    (s, d) => graft.ops.Pca.gramMicro(Tables.read(s, d, "embeddings"), "embedding"),
     Some(
       """WITH comp AS (SELECT vec_id, unnest(generate_series(1, len(vq))) AS i,
           unnest(vq) AS x
@@ -1487,7 +1483,7 @@ object PipelineQueries {
   val q76_incremental_dedup = QueryDef(
     "q76_incremental_dedup",
     (s, d) => {
-      val all = docs(s, d)
+      val all = Tables.read(s, d, "documents")
       val history = all.filter(col("doc_id") % 3 === 0)
         .select(graft.ops.TextAnalysis.fingerprint(col("text")).as("fp"))
       graft.ops.Dedup.incrementalDecision(
@@ -1516,7 +1512,7 @@ object PipelineQueries {
   val q77_best_survivor = QueryDef(
     "q77_best_survivor",
     (s, d) => graft.ops.Dedup.exactBestSurvivor(
-      docs(s, d), "text", "doc_id", "n_chars"),
+      Tables.read(s, d, "documents"), "text", "doc_id", "n_chars"),
     Some("""WITH f AS (SELECT doc_id, n_chars,
         md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
       FROM documents)
@@ -1572,8 +1568,8 @@ object PipelineQueries {
   val q78_bloom_prune = QueryDef(
     "q78_bloom_prune",
     (s, d) => {
-      val orders = s.read.parquet(s"$d/orders.parquet")
-      val li = s.read.parquet(s"$d/lineitem.parquet")
+      val orders = Tables.read(s, d, "orders")
+      val li = Tables.read(s, d, "lineitem")
       val bits = graft.ops.Bloom.buildBits(
         orders.filter(col("o_orderpriority") === "1-URGENT"), "o_orderkey",
         m = 16384, k = 4)
@@ -1606,7 +1602,7 @@ object PipelineQueries {
       "q79_quantile_sketch",
       (s, d) => {
         import graft.ops.Sketches
-        val sk = Sketches.quantileSketch(docs(s, d), "lang", "n_chars", cap)
+        val sk = Sketches.quantileSketch(Tables.read(s, d, "documents"), "lang", "n_chars", cap)
           .withColumn("__W", Sketches.summaryWeight(col("qsketch")))
           .withColumn("__t50", ceil(col("__W") * lit(0.5)).cast("long"))
           .withColumn("__t90", ceil(col("__W") * lit(0.9)).cast("long"))
@@ -1643,7 +1639,7 @@ object PipelineQueries {
     val wSum = weights.map(_._2).sum
     QueryDef(
       "q80_budget_mix",
-      (s, d) => graft.ops.Sampling.budgetMix(docs(s, d), "doc_id", "source",
+      (s, d) => graft.ops.Sampling.budgetMix(Tables.read(s, d, "documents"), "doc_id", "source",
         "n_chars", weights.toMap, budget)
         .select(col("doc_id"), col("source"), col("thr_ppm"),
           col("u_ppm"), col("keep")),
@@ -1683,7 +1679,7 @@ object PipelineQueries {
     (s, d) => {
       val nTok = length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1
       val nLetters = length(regexp_replace(col("text"), " ", ""))
-      docs(s, d)
+      Tables.read(s, d, "documents")
         .select(col("lang"), col("doc_id"),
           floor(nLetters * 1000.0 / nTok).cast("long").as("score"))
         .groupBy("lang")
@@ -1720,7 +1716,7 @@ object PipelineQueries {
       "q82_sketch_overlap",
       (s, d) => {
         import graft.ops.Sketches
-        val sk = Sketches.kmvSketch(events(s, d), "event_type", "user_id", k)
+        val sk = Sketches.kmvSketch(Tables.events(s, d), "event_type", "user_id", k)
         val a = sk.select(col("event_type").as("type_a"), col("kmv").as("__ka"))
         val b = sk.select(col("event_type").as("type_b"), col("kmv").as("__kb"))
         a.join(broadcast(b), col("type_a") < col("type_b"))
@@ -1757,7 +1753,7 @@ object PipelineQueries {
   val q83_snapshot_diff = QueryDef(
     "q83_snapshot_diff",
     (s, d) => {
-      val all = docs(s, d)
+      val all = Tables.read(s, d, "documents")
       val oldSnap = all.filter(col("doc_id") % 7 =!= 0)
       val newSnap = all.filter(col("doc_id") % 10 =!= 0)
         .withColumn("text", when(col("doc_id") % 5 === 1,
@@ -1796,7 +1792,7 @@ object PipelineQueries {
     val wBits = 64 - p // remaining bits after register routing
     QueryDef(
       "q84_hll_sketch",
-      (s, d) => graft.ops.Sketches.hllSketch(events(s, d), "event_type", "user_id", p)
+      (s, d) => graft.ops.Sketches.hllSketch(Tables.events(s, d), "event_type", "user_id", p)
         .select(col("event_type"), posexplode(col("hll")).as(Seq("reg", "register")))
         .select(col("event_type"), col("reg").cast("long").as("reg"),
           col("register").cast("long").as("register")),
@@ -1842,7 +1838,7 @@ object PipelineQueries {
     QueryDef(
       "q85_priority_sample",
       (s, d) => graft.ops.Sampling.prioritySample(
-        docs(s, d).select(col("doc_id"),
+        Tables.read(s, d, "documents").select(col("doc_id"),
           greatest(col("n_chars"), lit(1L)).as("w")),
         "doc_id", "w", k),
       Some {
@@ -1879,7 +1875,7 @@ object PipelineQueries {
     QueryDef(
       "q86_group_split",
       (s, d) => graft.ops.Sampling.groupHashSplit(
-        docs(s, d).withColumn("src_id",
+        Tables.read(s, d, "documents").withColumn("src_id",
           expr("CAST(substr(source, 4) AS BIGINT)")),
         "src_id", weights)
         .select(col("doc_id"), col("src_id"), col("split")),
@@ -1915,7 +1911,7 @@ object PipelineQueries {
   val q87_hard_negatives = QueryDef(
     "q87_hard_negatives",
     (s, d) => {
-      val e = embs(s, d)
+      val e = Tables.read(s, d, "embeddings")
       graft.ops.Similarity.hardNegatives(
         e, e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", "label", 10)
         .select(col("qid"), col("rnk").cast("long").as("rnk"), col("neighbor"))
@@ -1948,7 +1944,7 @@ object PipelineQueries {
     QueryDef(
       "q88_pagerank",
       (s, d) => {
-        val cnt = events(s, d).groupBy("user_id", "event_type")
+        val cnt = Tables.events(s, d).groupBy("user_id", "event_type")
           .agg(count(lit(1)).as("w"))
         // tiny dimension: one id per event type, alphabetical — the
         // window is over a handful of rows, never the event stream
@@ -2002,7 +1998,7 @@ object PipelineQueries {
   val q89_corpus_profile = QueryDef(
     "q89_corpus_profile",
     (s, d) => {
-      val base = docs(s, d).select(col("source"), col("lang"), col("doc_id"),
+      val base = Tables.read(s, d, "documents").select(col("source"), col("lang"), col("doc_id"),
         col("n_chars"),
         graft.ops.TextAnalysis.fingerprint(col("text")).as("fp"),
         (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1)
@@ -2046,7 +2042,7 @@ object PipelineQueries {
   val q90_merge_upsert = QueryDef(
     "q90_merge_upsert",
     (s, d) => {
-      val all = docs(s, d).select(col("doc_id"), col("text"), col("lang"),
+      val all = Tables.read(s, d, "documents").select(col("doc_id"), col("text"), col("lang"),
         col("source"), col("n_chars"))
       val base = all.filter(col("doc_id") % 7 =!= 0)
       val upserts = all.filter(col("doc_id") % 5 === 1 && col("doc_id") % 11 =!= 0)
@@ -2091,7 +2087,7 @@ object PipelineQueries {
   val q91_asof_native = QueryDef(
     "q91_asof_native",
     (s, d) => {
-      val ev = events(s, d)
+      val ev = Tables.events(s, d)
       val clicks = ev.filter(col("event_type") === "click")
         .select("user_id", "event_id", "ts")
       val errors = ev.filter(col("event_type") === "error")
@@ -2117,7 +2113,7 @@ object PipelineQueries {
   val q92_unicode_norm = QueryDef(
     "q92_unicode_norm",
     (s, d) => {
-      val planted = docs(s, d).select(col("doc_id"),
+      val planted = Tables.read(s, d, "documents").select(col("doc_id"),
         concat(col("text"),
           lit(" cafe\u0301 \ufb01le\u00a0end \u0002ctl")).as("text"))
       planted
@@ -2150,7 +2146,8 @@ object PipelineQueries {
     val n = 32
     QueryDef(
       "q93_feature_hash",
-      (s, d) => graft.ops.TextAnalysis.featureHash(docs(s, d), "doc_id", "text", n)
+      (s, d) => graft.ops.TextAnalysis.featureHash(Tables.read(s, d, "documents"),
+        "doc_id", "text", n)
         .select(col("doc_id"), posexplode(col("features")).as(Seq("bucket", "weight")))
         .select(col("doc_id"), col("bucket").cast("long").as("bucket"),
           col("weight").cast("long").as("weight")),
@@ -2180,7 +2177,7 @@ object PipelineQueries {
     */
   val q94_inverted_index = QueryDef(
     "q94_inverted_index",
-    (s, d) => graft.ops.TextAnalysis.invertedIndex(docs(s, d), "doc_id", "text")
+    (s, d) => graft.ops.TextAnalysis.invertedIndex(Tables.read(s, d, "documents"), "doc_id", "text")
       .select(col("term"), col("df"), col("tf"),
         element_at(col("postings"), 1)("doc").as("first_doc"),
         element_at(col("postings"), 1)("pos").as("first_pos")),
@@ -2214,9 +2211,10 @@ object PipelineQueries {
     QueryDef(
       "q95_classifier_gram",
       (s, d) => {
-        val feats = graft.ops.TextAnalysis.featureHash(docs(s, d), "doc_id", "text", n)
+        val feats = graft.ops.TextAnalysis.featureHash(Tables.read(s, d, "documents"),
+          "doc_id", "text", n)
         val labeled = feats.join(
-          docs(s, d).select(col("doc_id"),
+          Tables.read(s, d, "documents").select(col("doc_id"),
             (col("lang") === "en").cast("long").as("y")), "doc_id")
         graft.ops.LinearModel.normalEquations(labeled, "features", "y")
       },
@@ -2254,7 +2252,8 @@ object PipelineQueries {
     val (ck, st) = (64, 32)
     QueryDef(
       "q96_rag_chunks",
-      (s, d) => graft.ops.TextAnalysis.chunkDocuments(docs(s, d), "doc_id", "text", ck, st)
+      (s, d) => graft.ops.TextAnalysis.chunkDocuments(Tables.read(s, d, "documents"),
+        "doc_id", "text", ck, st)
         .select(col("doc_id"), col("chunk_id"), col("start_tok"), col("n_toks"),
           md5(col("chunk_text")).as("fp")),
       Some(s"""WITH lists AS (SELECT doc_id,
@@ -2284,7 +2283,8 @@ object PipelineQueries {
     val v = 512
     QueryDef(
       "q97_token_ids",
-      (s, d) => graft.ops.TextAnalysis.encodeTokenIds(docs(s, d), "doc_id", "text", v),
+      (s, d) => graft.ops.TextAnalysis.encodeTokenIds(Tables.read(s, d, "documents"),
+        "doc_id", "text", v),
       Some(s"""WITH lists AS (SELECT doc_id,
             list_filter(string_split_regex(lower(text), '\\s+'),
               t -> length(t) > 0) AS l
@@ -2312,7 +2312,7 @@ object PipelineQueries {
     */
   val q98_setsim_join = QueryDef(
     "q98_setsim_join",
-    (s, d) => graft.ops.SetSimJoin.jaccardJoin(docs(s, d), "doc_id", "text",
+    (s, d) => graft.ops.SetSimJoin.jaccardJoin(Tables.read(s, d, "documents"), "doc_id", "text",
       tauPpm = 500000L),
     Some("""WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
       sh AS (SELECT DISTINCT doc_id,
@@ -2341,7 +2341,7 @@ object PipelineQueries {
   val q99_bm25_scores = QueryDef(
     "q99_bm25_scores",
     (s, d) => {
-      val corpus = docs(s, d)
+      val corpus = Tables.read(s, d, "documents")
       val qterms = corpus.filter(col("doc_id") % 50 === 0)
         .select(col("doc_id").as("qid"),
           explode(array_distinct(slice(split(lower(col("text")), " "), 1, 3)))
@@ -2385,7 +2385,7 @@ object PipelineQueries {
     "q100_hybrid_rrf",
     (s, d) => {
       import graft.ops.{Retrieval, Similarity}
-      val corpus = docs(s, d)
+      val corpus = Tables.read(s, d, "documents")
       val qterms = corpus.filter(col("doc_id") % 50 === 0)
         .select(col("doc_id").as("qid"),
           explode(array_distinct(slice(split(lower(col("text")), " "), 1, 3)))
@@ -2394,7 +2394,7 @@ object PipelineQueries {
         Retrieval.bm25(corpus, "doc_id", "text", qterms)
           .select(col("qid"), col("doc_id").as("id"), col("score_micro")),
         10, "score_micro", "id")
-      val e = embs(s, d)
+      val e = Tables.read(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val q = broadcast(e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("v").as("qv")))
@@ -2458,7 +2458,7 @@ object PipelineQueries {
   val q101_fuzzy_names = QueryDef(
     "q101_fuzzy_names",
     (s, d) => graft.ops.FuzzyJoin.editDistanceJoin(
-      s.read.parquet(s"$d/part.parquet"), "p_name", k = 2),
+      Tables.read(s, d, "part"), "p_name", k = 2),
     Some("""WITH n AS (SELECT DISTINCT p_name AS s FROM part)
       SELECT a.s AS a, b.s AS b,
         CAST(levenshtein(a.s, b.s) AS BIGINT) AS dist
@@ -2477,8 +2477,8 @@ object PipelineQueries {
     "q102_quality_gate",
     (s, d) => {
       import graft.ops.Constraints._
-      val li = s.read.parquet(s"$d/lineitem.parquet")
-      val ord = s.read.parquet(s"$d/orders.parquet")
+      val li = Tables.read(s, d, "lineitem")
+      val ord = Tables.read(s, d, "orders")
       validate(li, Seq(
         NotNull("qty_not_null", "l_quantity"),
         InRange("qty_in_1_25", "l_quantity", 1, 25),
@@ -2526,7 +2526,7 @@ object PipelineQueries {
   val q103_batch_sessions = QueryDef(
     "q103_batch_sessions",
     (s, d) => graft.ops.Sessions.sessionStats(
-      events(s, d).select("user_id", "event_id", "ts"),
+      Tables.events(s, d).select("user_id", "event_id", "ts"),
       "user_id", "ts", "event_id", gapUnits = 1800000000000L)
       .select(col("user_id"), col("session_id"), col("n_events"),
         col("start_ts").as("start_ns"), col("end_ts").as("end_ns")),
@@ -2585,7 +2585,7 @@ object PipelineQueries {
     "q105_classifier_eval",
     (s, d) => {
       val scored = graft.ops.Quantization.quantizeUnitKeep(
-        embs(s, d).withColumn("y", (col("label") % 2).cast("long")),
+        Tables.read(s, d, "embeddings").withColumn("y", (col("label") % 2).cast("long")),
         "vec_id", "embedding", Seq("y"))
         .select(col("vec_id"), col("y"),
           graft.ops.Eval.fixedLinearScore(col("codes")).as("s"))
@@ -2624,7 +2624,7 @@ object PipelineQueries {
     "q106_calibration",
     (s, d) => {
       val scored = graft.ops.Quantization.quantizeUnitKeep(
-        embs(s, d).withColumn("y", (col("label") % 2).cast("long")),
+        Tables.read(s, d, "embeddings").withColumn("y", (col("label") % 2).cast("long")),
         "vec_id", "embedding", Seq("y"))
         .select(col("vec_id"), col("y"),
           graft.ops.Eval.fixedLinearScore(col("codes")).as("s"))
@@ -2647,7 +2647,8 @@ object PipelineQueries {
     */
   val q107_pmi_bigrams = QueryDef(
     "q107_pmi_bigrams",
-    (s, d) => graft.ops.Collocations.pmiBigrams(docs(s, d), "text", minCount = 5L),
+    (s, d) => graft.ops.Collocations.pmiBigrams(Tables.read(s, d, "documents"),
+      "text", minCount = 5L),
     Some("""WITH toks AS (SELECT list_filter(
           string_split_regex(lower(trim(coalesce(text, ''))), '\s+'),
           t -> length(t) > 0) AS w FROM documents),
@@ -2676,7 +2677,7 @@ object PipelineQueries {
     (s, d) => {
       import s.implicits._
       graft.ops.Phonetic.soundexBlockJoin(
-        s.read.parquet(s"$d/part.parquet")
+        Tables.read(s, d, "part")
           .select(explode(split(col("p_name"), " ")).as("w"))
           .union(graft.ops.Phonetic.sampleNames.toDF("w")), "w")
     },
@@ -2707,7 +2708,7 @@ object PipelineQueries {
       val lo = java.time.LocalDate.parse("1997-01-01").toEpochDay
       val hi = java.time.LocalDate.parse("1997-12-31").toEpochDay
       (s, d) => {
-        val li = s.read.parquet(s"$d/lineitem.parquet")
+        val li = Tables.read(s, d, "lineitem")
         val day = datediff(col("l_shipdate").cast("date"),
           lit("1970-01-01").cast("date")).cast("long")
         graft.ops.ZoneMap.pruneReport(li, Seq(
@@ -2743,7 +2744,7 @@ object PipelineQueries {
   val q104_scd2_versions = QueryDef(
     "q104_scd2_versions",
     (s, d) => graft.ops.Sessions.scd2(
-      events(s, d).select("user_id", "event_id", "event_type", "ts"),
+      Tables.events(s, d).select("user_id", "event_id", "event_type", "ts"),
       "user_id", "event_type", "ts", "event_id")
       .select(col("user_id"), col("event_type"),
         col("valid_from").as("valid_from_ns"),
@@ -2775,7 +2776,7 @@ object PipelineQueries {
       val band = when(centsBal < 0L, lit("DEBT"))
         .when(centsBal < 500000L, lit("LOW")).otherwise(lit("HIGH"))
       graft.ops.Privacy.kAnonymityAudit(
-        s.read.parquet(s"$d/customer.parquet").withColumn("bal_band", band),
+        Tables.read(s, d, "customer").withColumn("bal_band", band),
         Seq("c_nationkey", "c_mktsegment"), col("bal_band"), k = 10, l = 3)
     },
     Some("""WITH c AS (SELECT c_nationkey, c_mktsegment,
@@ -2807,9 +2808,9 @@ object PipelineQueries {
       (s, d) => {
         val tok = graft.ops.Privacy.pseudonymizeKey(col("c_custkey"), salt)
         val otok = graft.ops.Privacy.pseudonymizeKey(col("o_custkey"), salt)
-        val cust = s.read.parquet(s"$d/customer.parquet")
+        val cust = Tables.read(s, d, "customer")
           .select(tok.as("cust_token"))
-        val perCust = s.read.parquet(s"$d/orders.parquet")
+        val perCust = Tables.read(s, d, "orders")
           .groupBy(otok.as("cust_token")).agg(count(lit(1)).as("n_orders"))
         cust.join(perCust, Seq("cust_token"), "left")
           .select(col("cust_token"),
@@ -2843,7 +2844,7 @@ object PipelineQueries {
     QueryDef(
       "q112_dp_counts",
       (s, d) => graft.ops.Privacy.dpNoisyCounts(
-        s.read.parquet(s"$d/customer.parquet"), "c_nationkey", seed = seed),
+        Tables.read(s, d, "customer"), "c_nationkey", seed = seed),
       Some {
         import DuckXxHash._
         val ths = graft.ops.Privacy.geometricThresholds(1.0, 20)
@@ -2877,7 +2878,7 @@ object PipelineQueries {
   val q113_mmr_diversify = QueryDef(
     "q113_mmr_diversify",
     (s, d) => {
-      val e = embs(s, d)
+      val e = Tables.read(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val q = broadcast(e.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("qid"), col("v").as("qv")))
@@ -2952,7 +2953,7 @@ object PipelineQueries {
     (s, d) => {
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-      val base = docs(s, d).select(col("doc_id"))
+      val base = Tables.read(s, d, "documents").select(col("doc_id"))
       val outSchema = StructType(Seq(StructField("doc_id", LongType),
         StructField("payload", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
@@ -2996,7 +2997,7 @@ object PipelineQueries {
     (s, d) => {
       val k = 8192
       val keys = Seq("event_type", "day")
-      val ev = events(s, d).select(col("event_type"), col("event_id"),
+      val ev = Tables.events(s, d).select(col("event_type"), col("event_id"),
         col("user_id"), expr("ts div 86400000000000").as("day"),
         round(col("value") * 1000000).cast("long").as("v_micro"))
       def slice(pred: org.apache.spark.sql.Column) = graft.ops.IncrementalAgg.summarize(
@@ -3026,7 +3027,7 @@ object PipelineQueries {
   val q116_mad_outliers = QueryDef(
     "q116_mad_outliers",
     (s, d) => {
-      val ev = events(s, d).select(col("event_type"), col("event_id"),
+      val ev = Tables.events(s, d).select(col("event_type"), col("event_id"),
         round(col("value") * 1000000).cast("long").as("v_micro"))
       graft.ops.Robust.madOutlierReport(ev, "event_type",
         col("v_micro"), col("event_id"))
@@ -3062,7 +3063,7 @@ object PipelineQueries {
   val q117_ohlc = QueryDef(
     "q117_ohlc",
     (s, d) => {
-      val ev = events(s, d).select(col("event_type"),
+      val ev = Tables.events(s, d).select(col("event_type"),
         expr("ts div 86400000000000").as("day"), col("ts"), col("event_id"),
         round(col("value") * 1000000).cast("long").as("v_micro"))
       graft.ops.TimeSeries.ohlc(ev, Seq("event_type", "day"),
@@ -3097,7 +3098,7 @@ object PipelineQueries {
   val q118_aes_roundtrip = QueryDef(
     "q118_aes_roundtrip",
     (s, d) =>
-      s.read.parquet(s"$d/customer.parquet").select(col("c_custkey"),
+      Tables.read(s, d, "customer").select(col("c_custkey"),
         length(expr("aes_encrypt(c_name, '0123456789abcdef', 'ECB')"))
           .as("ct_len"),
         (expr("CAST(aes_decrypt(aes_encrypt(c_name, '0123456789abcdef', 'ECB'), " +
@@ -3119,7 +3120,7 @@ object PipelineQueries {
     "q119_json_props",
     (s, d) => {
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val ev = events(s, d)
+      val ev = Tables.events(s, d)
       val k = from_json(col("props"),
         StructType(Seq(StructField("k", LongType))))("k")
       val k2 = get_json_object(col("props"), "$.k").cast("long")
@@ -3147,7 +3148,7 @@ object PipelineQueries {
   val q120_table_profile = QueryDef(
     "q120_table_profile",
     (s, d) => graft.ops.Stats.tableProfile(
-      s.read.parquet(s"$d/customer.parquet")),
+      Tables.read(s, d, "customer")),
     Some {
       val cols = Seq("c_custkey" -> false, "c_name" -> true,
         "c_nationkey" -> false, "c_acctbal" -> false, "c_mktsegment" -> true)
@@ -3176,7 +3177,7 @@ object PipelineQueries {
   val q121_record_linkage = QueryDef(
     "q121_record_linkage",
     (s, d) => {
-      val cust = s.read.parquet(s"$d/customer.parquet")
+      val cust = Tables.read(s, d, "customer")
       val a = cust.select(col("c_custkey").as("a_key"), col("c_name").as("a_name"),
         col("c_mktsegment").as("a_seg"),
         expr("CAST(round(c_acctbal * 100) AS BIGINT) div 100000").as("a_band"),
@@ -3237,7 +3238,7 @@ object PipelineQueries {
   val q122_label_propagation = QueryDef(
     "q122_label_propagation",
     (s, d) => {
-      val te = events(s, d).select(col("user_id"), col("event_type")).distinct()
+      val te = Tables.events(s, d).select(col("user_id"), col("event_type")).distinct()
       val ty = te.select(col("event_type")).distinct()
         .withColumn("tid", -row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy(col("event_type")))
@@ -3283,7 +3284,7 @@ object PipelineQueries {
   val q123_cm_sketch = QueryDef(
     "q123_cm_sketch",
     (s, d) => graft.ops.Sketches.cmSketchRows(
-      events(s, d), col("user_id"), width = 64, depth = 2),
+      Tables.events(s, d), col("user_id"), width = 64, depth = 2),
     Some {
       import DuckXxHash._
       val ch = chain("s0", s"SELECT ${unsigned("user_id")} AS v FROM events")
@@ -3311,7 +3312,7 @@ object PipelineQueries {
   val q124_schema_evolution = QueryDef(
     "q124_schema_evolution",
     (s, d) => {
-      val base = s.read.parquet(s"$d/customer.parquet")
+      val base = Tables.read(s, d, "customer")
       val dir = java.nio.file.Files.createTempDirectory("q124_evo").toString
       base.filter(col("c_custkey") % 2 === 0)
         .select(col("c_custkey"), col("c_mktsegment"))
@@ -3351,7 +3352,7 @@ object PipelineQueries {
       val w = Window
         .partitionBy(graft.ops.TextAnalysis.fingerprint(col("text")))
         .orderBy("doc_id")
-      docs(s, d)
+      Tables.read(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("text"), tok.as("tok"))
         .withColumn("rn", row_number().over(w))
         .groupBy("lang")
@@ -3388,7 +3389,7 @@ object PipelineQueries {
   val q126_interval_union = QueryDef(
     "q126_interval_union",
     (s, d) => {
-      val iv = events(s, d).select(col("user_id"),
+      val iv = Tables.events(s, d).select(col("user_id"),
         expr("ts div 1000000000").as("st"))
         .withColumn("en", col("st") + 300L)
       val w = Window.partitionBy("user_id").orderBy("st", "en")
@@ -3432,7 +3433,7 @@ object PipelineQueries {
     (s, d) => {
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val tricky = concat(col("c_name"), lit(", \"x\"\n tail"))
-      val src = s.read.parquet(s"$d/customer.parquet")
+      val src = Tables.read(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), tricky.as("payload"))
       val dir = java.nio.file.Files.createTempDirectory("q127_csv").toString
       src.write.mode("overwrite").option("header", "true").csv(dir)
@@ -3458,7 +3459,7 @@ object PipelineQueries {
   val q128_time_weighted = QueryDef(
     "q128_time_weighted",
     (s, d) => {
-      val ev = events(s, d).select(col("event_type"), col("event_id"),
+      val ev = Tables.events(s, d).select(col("event_type"), col("event_id"),
         expr("ts div 1000000000").as("t_s"),
         round(col("value") * 1000000).cast("long").as("v"))
       graft.ops.TimeSeries.trapezoidArea(ev, Seq("event_type"),
@@ -3484,7 +3485,7 @@ object PipelineQueries {
   val q129_winsorize = QueryDef(
     "q129_winsorize",
     (s, d) => {
-      val ev = events(s, d).select(col("event_type"), col("event_id"),
+      val ev = Tables.events(s, d).select(col("event_type"), col("event_id"),
         round(col("value") * 1000000).cast("long").as("v"))
       graft.ops.Robust.winsorize(ev, "event_type", col("v"), col("event_id"), 5, 95)
         .groupBy("event_type")
@@ -3517,7 +3518,7 @@ object PipelineQueries {
   val q130_impute = QueryDef(
     "q130_impute",
     (s, d) => {
-      val ev = events(s, d).select(col("event_type"), col("event_id"),
+      val ev = Tables.events(s, d).select(col("event_type"), col("event_id"),
         when(col("event_id") % 7 === 0, lit(null))
           .otherwise(round(col("value") * 1000000).cast("long")).as("v"))
       graft.ops.Robust.imputeMedian(ev, "event_type", col("v"), col("event_id"))
@@ -3553,7 +3554,7 @@ object PipelineQueries {
   val q131_trend = QueryDef(
     "q131_trend",
     (s, d) => {
-      val ev = events(s, d).select(col("event_type"),
+      val ev = Tables.events(s, d).select(col("event_type"),
         expr("ts div 3600000000000").as("t_h"),
         round(col("value") * 1000).cast("long").as("y"))
       val mins = ev.groupBy("event_type").agg(min(col("t_h")).as("t0"))
@@ -3596,7 +3597,7 @@ object PipelineQueries {
   val q132_join_size = QueryDef(
     "q132_join_size",
     (s, d) => {
-      val ev = events(s, d)
+      val ev = Tables.events(s, d)
       def half(parity: Int) = graft.ops.Sketches.cmSketchRows(
         ev.filter(col("event_id") % 2 === parity), col("user_id"),
         width = 64, depth = 2)
@@ -3653,7 +3654,7 @@ object PipelineQueries {
   val q133_source_overlap = QueryDef(
     "q133_source_overlap",
     (s, d) => {
-      val fps = docs(s, d).select(col("source"),
+      val fps = Tables.read(s, d, "documents").select(col("source"),
         graft.ops.TextAnalysis.fingerprint(col("text")).as("fp")).distinct()
       fps.as("a").join(fps.as("b"),
           col("a.fp") === col("b.fp") && col("a.source") < col("b.source"))
@@ -3682,7 +3683,7 @@ object PipelineQueries {
       val w = Window
         .partitionBy(graft.ops.TextAnalysis.fingerprint(col("text")))
         .orderBy("doc_id")
-      val flagged = docs(s, d)
+      val flagged = Tables.read(s, d, "documents")
         .select(col("doc_id"), col("source"),
           row_number().over(w).as("rn"),
           first("source").over(w).as("surv_source"))
@@ -3718,7 +3719,7 @@ object PipelineQueries {
   val q135_vocab_drift = QueryDef(
     "q135_vocab_drift",
     (s, d) => {
-      val toks = docs(s, d)
+      val toks = Tables.read(s, d, "documents")
         .filter(col("source").isin("src0", "src1"))
         .select(col("source"),
           explode(filter(
@@ -3761,7 +3762,7 @@ object PipelineQueries {
   val q136_balanced_shards = QueryDef(
     "q136_balanced_shards",
     (s, d) => graft.ops.Sampling.byteBalancedShards(
-      docs(s, d), "doc_id", octet_length(coalesce(col("text"), lit(""))),
+      Tables.read(s, d, "documents"), "doc_id", octet_length(coalesce(col("text"), lit(""))),
       targetBytes = 65536L, nBuckets = 64),
     Some("""WITH b AS (SELECT doc_id,
           CAST(strlen(coalesce(text, '')) AS BIGINT) AS bytes,
@@ -3786,7 +3787,7 @@ object PipelineQueries {
   val q137_source_drift = QueryDef(
     "q137_source_drift",
     (s, d) => {
-      val all = docs(s, d)
+      val all = Tables.read(s, d, "documents")
       val aSnap = all.filter(col("doc_id") % 7 =!= 0)
       val bSnap = all.filter(col("doc_id") % 10 =!= 0)
         .filter(col("source") =!= "src1")
@@ -3829,7 +3830,7 @@ object PipelineQueries {
   val q138_length_drift = QueryDef(
     "q138_length_drift",
     (s, d) => {
-      val all = docs(s, d)
+      val all = Tables.read(s, d, "documents")
         .withColumn("len", octet_length(coalesce(col("text"), lit(""))).cast("long"))
       val aSnap = all.filter(col("doc_id") % 7 =!= 0)
       val bSnap = all.filter(col("doc_id") % 10 =!= 0)
@@ -3876,7 +3877,7 @@ object PipelineQueries {
   val q139_drift_summary = QueryDef(
     "q139_drift_summary",
     (s, d) => {
-      val all = docs(s, d)
+      val all = Tables.read(s, d, "documents")
       val aSnap = all.filter(col("doc_id") % 7 =!= 0)
       val bSnap = all.filter(col("doc_id") % 10 =!= 0)
         .filter(col("source") =!= "src1")
@@ -3921,7 +3922,7 @@ object PipelineQueries {
   val q140_changepoint = QueryDef(
     "q140_changepoint",
     (s, d) => {
-      val ev = events(s, d).select(col("event_type"), col("ts"), col("event_id"),
+      val ev = Tables.events(s, d).select(col("event_type"), col("ts"), col("event_id"),
         round(col("value") * 1000000).cast("long").as("v_micro"))
       graft.ops.TimeSeries.cusumChangepoint(ev, "event_type",
         col("ts"), col("event_id"), col("v_micro"))
@@ -3965,7 +3966,7 @@ object PipelineQueries {
     (s, d) => {
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-      val ids = docs(s, d).select(col("doc_id").cast("long").as("base_id"))
+      val ids = Tables.read(s, d, "documents").select(col("doc_id").cast("long").as("base_id"))
       val rig = ids
         .select(col("base_id"), col("base_id").as("id"), lit(0).as("shift"))
         .unionAll(ids.filter(col("base_id") % 10 === 0)
@@ -4139,7 +4140,7 @@ object PipelineQueries {
     "q142_url_canonical",
     (s, d) => {
       val url = messyUrlCol
-      docs(s, d).select(col("doc_id"), url.as("url"))
+      Tables.read(s, d, "documents").select(col("doc_id"), url.as("url"))
         .select(col("doc_id"), col("url"),
           graft.ops.UrlOps.canonicalizeUrl(col("url")).as("canon"),
           graft.ops.UrlOps.registrableDomain(
@@ -4200,7 +4201,7 @@ object PipelineQueries {
       def vec(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         array((0 until 4).map(j =>
           pmod(xxhash64(key, lit(j.toLong)), lit(17L)) - 8L): _*)
-      val base = docs(s, d).select(col("doc_id"))
+      val base = Tables.read(s, d, "documents").select(col("doc_id"))
       val dToks = base
         .select(col("doc_id"), explode(sequence(lit(0L), lit(7L))).as("t"))
         .select(col("doc_id"), vec(col("doc_id") * 8 + col("t")).as("dv"))
@@ -4266,7 +4267,7 @@ object PipelineQueries {
       // the cluster even when the input is one small file (single-file
       // scan = ONE partition; the Dedup.minHashSignatures spread, same
       // rationale — the exchange carries two longs per row)
-      val rig = docs(s, d).select(col("doc_id").cast("long").as("base_id"),
+      val rig = Tables.read(s, d, "documents").select(col("doc_id").cast("long").as("base_id"),
         pmod(xxhash64(col("doc_id").cast("long")), lit(8L)).cast("int").as("kind"))
         .repartition(s.sparkContext.defaultParallelism)
       val outSchema = StructType(Seq(StructField("base_id", LongType),
@@ -4386,7 +4387,7 @@ object PipelineQueries {
       // domain) — the dedup gate must drop the copy while the domain
       // rollup still counts its fetch, which is exactly the
       // crawl-dedup accounting a real pipeline needs
-      val base = docs(s, d).select(col("doc_id"), col("text"))
+      val base = Tables.read(s, d, "documents").select(col("doc_id"), col("text"))
       val crawled = base.unionAll(base.filter(col("doc_id") % 3 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
       crawlPipeline(crawled)
@@ -4452,7 +4453,7 @@ object PipelineQueries {
           "2&frac12; w&hellip; bad: &fake; &#xZZ; &# &#1114112; & end</p>"),
         links, lit("</body></html>"))
       graft.ops.HtmlExtract.extractStats(
-        docs(s, d).select(col("doc_id"), html.as("html")), "doc_id", "html")
+        Tables.read(s, d, "documents").select(col("doc_id"), html.as("html")), "doc_id", "html")
     },
     Some {
       val links = (0 until 3).map(k =>
@@ -4523,7 +4524,7 @@ object PipelineQueries {
         lit("<html><head><title> Doc "), did, lit(" </title>"), robots, canon,
         lit("</head><body><p>body</p></body></html>"))
       graft.ops.HtmlExtract.metaSignals(
-        docs(s, d).select(col("doc_id"), html.as("html")), "doc_id", "html")
+        Tables.read(s, d, "documents").select(col("doc_id"), html.as("html")), "doc_id", "html")
     },
     Some {
       """WITH h AS (SELECT doc_id,
@@ -4575,7 +4576,7 @@ object PipelineQueries {
   val q148_extract_pipeline = QueryDef(
     "q148_extract_pipeline",
     (s, d) => {
-      val base = docs(s, d).select(col("doc_id"), col("text"))
+      val base = Tables.read(s, d, "documents").select(col("doc_id"), col("text"))
       val crawled = base.unionAll(base.filter(col("doc_id") % 3 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
       val did = col("doc_id").cast("string")
@@ -4731,7 +4732,7 @@ object PipelineQueries {
       val path = when(variant === 0, concat(lit("/p/"), pathn.cast("string")))
         .when(variant === 1, concat(lit("/private/x"), pathn.cast("string")))
         .otherwise(concat(lit("/private/ok"), pathn.cast("string")))
-      docs(s, d).select(col("doc_id"),
+      Tables.read(s, d, "documents").select(col("doc_id"),
         call_function("robots_allowed", rules, lit("GraftBot/1.0"), path)
           .cast("int").as("allowed"))
     },
@@ -4789,7 +4790,7 @@ object PipelineQueries {
 
     def dir(s: SparkSession, sfDir: String): String =
       BuildOnce.dir("warc_fixture", sfDir) { out =>
-        val rows = docs(s, sfDir)
+        val rows = Tables.read(s, sfDir, "documents")
           .select(col("doc_id"), col("text"), messyUrlCol.as("url"))
           .repartition(8, pmod(col("doc_id"), lit(8L)))
         rows.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
@@ -5048,7 +5049,7 @@ object PipelineQueries {
       // files on every 64th doc) over the cluster even when the input
       // is one small file (single-file scan = ONE partition; the
       // Dedup.minHashSignatures spread, same rationale)
-      docs(s, d).select(col("doc_id"))
+      Tables.read(s, d, "documents").select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"),
         call_function("robots_allowed", rules, agent, lit("/private/x"))
@@ -5107,7 +5108,7 @@ object PipelineQueries {
       // the cluster even when the input is one small file (single-file
       // scan = ONE partition; the Dedup.minHashSignatures spread, same
       // rationale — the exchange carries one long per row)
-      val rig = docs(s, d).filter(col("doc_id") % 4 === 0)
+      val rig = Tables.read(s, d, "documents").filter(col("doc_id") % 4 === 0)
         .select(col("doc_id").cast("long").as("base_id"))
         .repartition(s.sparkContext.defaultParallelism)
       val outSchema = StructType(Seq(StructField("doc_id", LongType),
@@ -5193,7 +5194,8 @@ object PipelineQueries {
     */
   val q154_exact_substr = QueryDef(
     "q154_exact_substr",
-    (s, d) => graft.ops.ExactSubstrDedup.report(docs(s, d), "doc_id", "text", 8),
+    (s, d) => graft.ops.ExactSubstrDedup.report(Tables.read(s, d, "documents"),
+      "doc_id", "text", 8),
     Some("""WITH d AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ws
                FROM documents),
       t AS (SELECT doc_id, ws,
@@ -5239,7 +5241,7 @@ object PipelineQueries {
       BuildOnce.dir("warc_sink", sfDir) { out =>
         val isMeta = col("doc_id") % 9 === 0
         val metaJson = concat(lit("{\"k\":"), col("doc_id").cast("string"), lit("}"))
-        docs(s, sfDir).select(
+        Tables.read(s, sfDir, "documents").select(
             concat(lit("urn:graft:"), col("doc_id").cast("string")).as("record_id"),
             when(isMeta, lit("metadata")).otherwise(lit("response")).as("warc_type"),
             uriCol.as("target_uri"),
@@ -5311,7 +5313,7 @@ object PipelineQueries {
     (s, d) => {
       val dir = WarcSinkFixture.dir(s, d)
       val cdx = graft.sources.WarcRandomAccess.cdx(s, dir)
-      val wanted = docs(s, d).filter(col("doc_id") % 20 === 0)
+      val wanted = Tables.read(s, d, "documents").filter(col("doc_id") % 20 === 0)
         .select(WarcSinkFixture.uriCol.as("target_uri"))
       val hits = cdx.join(broadcast(wanted), "target_uri")
         .select("segment", "offset", "length")
@@ -5335,7 +5337,7 @@ object PipelineQueries {
   val q157_frontier_schedule = QueryDef(
     "q157_frontier_schedule",
     (s, d) => {
-      val cand = docs(s, d).select(
+      val cand = Tables.read(s, d, "documents").select(
         col("doc_id"),
         concat(lit("h"), pmod(col("doc_id"), lit(37L)).cast("string"),
           lit(".example.com")).as("host"),
@@ -5441,7 +5443,7 @@ object PipelineQueries {
         StructField("v", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
       val rates = Array(8000, 16000, 44100)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val ts = (1000L * ((id % 3) + 1)).toInt
@@ -5539,7 +5541,7 @@ object PipelineQueries {
         .otherwise(
           concat(lit("<?xml version=\"1.0\"?>\n<urlset>"), trap,
             array_join(urlEntries, ""), lit("\n</urlset>")))
-      docs(s, d).select(did,
+      Tables.read(s, d, "documents").select(did,
           graft.ops.UrlOps.sitemapKind(xml).as("kind"),
           graft.ops.UrlOps.sitemapEntries(xml).as("__es"))
         .select(col("doc_id"), col("kind"),
@@ -5614,7 +5616,7 @@ object PipelineQueries {
     def dir(s: SparkSession, sfDir: String): String =
       BuildOnce.dir("link_warc", sfDir) { out =>
         val did = col("doc_id")
-        docs(s, sfDir).select(
+        Tables.read(s, sfDir, "documents").select(
             concat(lit("urn:link:"), did.cast("string")).as("record_id"),
             lit("response").as("warc_type"),
             linkFixtureBase(did).as("target_uri"),
@@ -5660,7 +5662,7 @@ object PipelineQueries {
       // the cluster even when the input is one small file (single-file
       // scan = ONE partition; the Dedup.minHashSignatures spread, same
       // rationale — the exchange carries one long per row)
-      docs(s, d).select(did)
+      Tables.read(s, d, "documents").select(did)
         .repartition(s.sparkContext.defaultParallelism)
         .select(did, base.as("__base"),
           graft.ops.HtmlExtract.extractLinks(html).as("__ls"))
@@ -5726,7 +5728,7 @@ object PipelineQueries {
       // small file (single-file scan = ONE partition; the
       // Dedup.minHashSignatures spread, same rationale — the exchange
       // carries one long per row, the fixture builds after it)
-      val pages = docs(s, d).select(did)
+      val pages = Tables.read(s, d, "documents").select(did)
         .repartition(s.sparkContext.defaultParallelism)
         .select(did, linkFixtureBase(did).as("url"),
         linkFixtureHtml(did).as("html"))
@@ -5853,7 +5855,7 @@ object PipelineQueries {
       val hct = when(kind === 2, lit("text/html; charset=KOI8-R"))
         .when(kind === 3, lit("text/html"))
         .otherwise(lit(null).cast("string"))
-      docs(s, d).select(did,
+      Tables.read(s, d, "documents").select(did,
         graft.ops.HtmlExtract.sniffCharset(payload, hct).as("charset"))
     },
     Some("""SELECT doc_id,
@@ -5886,7 +5888,7 @@ object PipelineQueries {
       // the cluster even when the input is one small file (single-file
       // scan = ONE partition; the Dedup.minHashSignatures spread, same
       // rationale — the exchange carries one long per row)
-      val withBytes = docs(s, d).select(col("doc_id"))
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
         .mapPartitions { rows =>
         rows.map { r =>
@@ -5987,7 +5989,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("a", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val sr = Array(44100, 48000, 96000, 22050)((id % 4).toInt)
@@ -6071,7 +6073,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("img", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val w = 640 + (id % 13).toInt * 16
@@ -6161,7 +6163,7 @@ object PipelineQueries {
         val isRev = id % 3 === 0 && id > 0
         val rid = concat(lit("rec-"), lpad(id.cast("string"), 8, "0"))
         val refC = when(c % 3 =!= 0, c).otherwise(c + 40)
-        docs(s, sfDir).select(
+        Tables.read(s, sfDir, "documents").select(
             rid.as("record_id"),
             when(isRev, lit("revisit")).otherwise(lit("response"))
               .as("warc_type"),
@@ -6253,7 +6255,7 @@ object PipelineQueries {
     import graft.sources.WarcIo
     def dir(s: SparkSession, sfDir: String): String =
       BuildOnce.dir("warc_rvstream", sfDir) { out =>
-        docs(s, sfDir).select(col("doc_id"))
+        Tables.read(s, sfDir, "documents").select(col("doc_id"))
           .repartition(2, pmod(col("doc_id"), lit(2L)))
           .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
             if (it.hasNext) {
@@ -6303,7 +6305,7 @@ object PipelineQueries {
     def textOf(id: Long): String = s"payload-$id-" + "x" * (id % 50).toInt
     def dir(s: SparkSession, sfDir: String): String =
       BuildOnce.dir("warc_http", sfDir) { out =>
-        val rows = docs(s, sfDir).select(col("doc_id"))
+        val rows = Tables.read(s, sfDir, "documents").select(col("doc_id"))
           .repartition(4, pmod(col("doc_id"), lit(4L)))
         rows.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
           if (it.hasNext) {
@@ -6424,7 +6426,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("a", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val codec = if (id % 2 == 0) "opus" else "vorbis"
@@ -6504,7 +6506,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("doc", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val base = graft.ops.Pdf.build(
@@ -6592,7 +6594,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("z", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           def b(x: String) = x.getBytes("UTF-8")
@@ -6684,7 +6686,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("a", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val version = if (id % 2 == 0) 4 else 3
@@ -6764,7 +6766,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("c", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val bytes: Array[Byte] = (id % 9) match {
@@ -6859,7 +6861,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("t", StringType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withText = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withText = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val vtt = id % 2 == 0
@@ -6985,7 +6987,7 @@ object PipelineQueries {
       // cluster even when the input is one small file (single-file scan
       // = ONE partition; the Dedup.minHashSignatures spread, same
       // rationale — the exchange carries one long per row)
-      docs(s, d).select(did)
+      Tables.read(s, d, "documents").select(did)
         .repartition(s.sparkContext.defaultParallelism)
         .select(did,
           graft.ops.Feed.feedKind(xml).as("kind"),
@@ -7037,7 +7039,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("img", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val (depth, color) = (id % 4) match {
@@ -7147,7 +7149,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("doc", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           def b(x: String) = x.getBytes("UTF-8")
@@ -7232,7 +7234,7 @@ object PipelineQueries {
       // over the cluster even when the input is one small file
       // (single-file scan = ONE partition; the Dedup.minHashSignatures
       // spread, same rationale — the exchange carries one long per row)
-      val withBytes = docs(s, d).select(col("doc_id"))
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
         .mapPartitions { rows =>
         rows.map { r =>
@@ -7315,7 +7317,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("img", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val frames = (1 + id % 6).toInt
@@ -7399,7 +7401,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("shard", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val shards = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val shards = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val members = (0 to (id % 3).toInt).flatMap { i =>
@@ -7486,7 +7488,7 @@ object PipelineQueries {
         .otherwise(metaBody)
       val hct = when(kind === 0, lit("text/html; charset=windows-1252"))
         .otherwise(lit(null).cast("string"))
-      docs(s, d).select(did,
+      Tables.read(s, d, "documents").select(did,
           graft.ops.HtmlExtract.sniffCharset(payload, hct).as("charset"),
           graft.ops.HtmlExtract.decodePayload(payload, hct).as("html"))
         .select(did, col("charset"),
@@ -7528,7 +7530,7 @@ object PipelineQueries {
       val longKey = concat(lit("K" * 110), did.cast("string"))
       val key = when(pmod(did, lit(5L)) === 0, longKey)
         .otherwise(concat(lit("s"), lpad(did.cast("string"), 8, "0")))
-      val base = docs(s, d).select(did, key.as("key"))
+      val base = Tables.read(s, d, "documents").select(did, key.as("key"))
       val rows = base.select(col("key"), lit("txt").as("ext"),
           concat(lit("t"), did.cast("string")).cast("binary").as("payload"))
         .unionAll(base.select(col("key"), lit("json").as("ext"),
@@ -7590,7 +7592,7 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("v", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = docs(s, d).select(col("doc_id")).mapPartitions { rows =>
+      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
           val ts = (1000L * (id % 3 + 1)).toInt
@@ -7722,7 +7724,7 @@ object PipelineQueries {
     (s, d) => {
       val outDir = java.nio.file.Files.createTempDirectory("wds_lkp").toString
       val did = col("doc_id")
-      val base = docs(s, d).select(did,
+      val base = Tables.read(s, d, "documents").select(did,
         concat(lit("s"), lpad(did.cast("string"), 8, "0")).as("key"))
       val rows = base.select(col("key"), lit("txt").as("ext"),
           concat(lit("t"), did.cast("string")).cast("binary").as("payload"))
@@ -7735,7 +7737,7 @@ object PipelineQueries {
               .cast("binary").as("payload")))
       rows.write.format("wds").mode("overwrite")
         .option("path", outDir).option("targetShardBytes", "1048576").save()
-      val wanted = docs(s, d).select(did)
+      val wanted = Tables.read(s, d, "documents").select(did)
         .filter(pmod(did, lit(97L)) === 0)
         .select(concat(lit("s"), lpad(did.cast("string"), 8, "0")).as("key"))
       val hits = graft.sources.WdsRandomAccess.idx(s, outDir)
@@ -7810,7 +7812,7 @@ object PipelineQueries {
         .when(kind === 3, lit("text/html; charset=koi8-r"))
         .when(kind === 4, lit("text/html; charset=x-klingon"))
         .otherwise(lit(null).cast("string"))
-      docs(s, d).select(did,
+      Tables.read(s, d, "documents").select(did,
           graft.ops.HtmlExtract.sniffCharset(payload, hct).as("charset"),
           graft.ops.HtmlExtract.decodedOk(payload, hct)
             .cast("long").as("decoded_ok"),
@@ -7863,7 +7865,7 @@ object PipelineQueries {
       val longKey = concat(lit("F" * 120), lpad(did.cast("string"), 8, "0"))
       val key = when(pmod(did, lit(50L)) === 3, longKey)
         .otherwise(concat(lit("s"), lpad(did.cast("string"), 8, "0")))
-      val base = docs(s, d).select(did, key.as("key"),
+      val base = Tables.read(s, d, "documents").select(did, key.as("key"),
         pmod(did, lit(4L)).as("shard_no"))
       val rows = base.select(col("shard_no"), col("key"), lit("txt").as("ext"),
           concat(lit("t"), did.cast("string")).cast("binary").as("payload"))
@@ -7909,7 +7911,7 @@ object PipelineQueries {
         .option("splitTargetBytes", "32768").load(outDir)
         .select(col("key"), col("ext"), col("size"),
           md5(col("payload")).as("payload_md5"))
-      val wanted = docs(s, d).filter(pmod(did, lit(61L)) === 0)
+      val wanted = Tables.read(s, d, "documents").filter(pmod(did, lit(61L)) === 0)
         .select(when(pmod(did, lit(50L)) === 3, longKey)
           .otherwise(concat(lit("s"), lpad(did.cast("string"), 8, "0")))
           .as("key"))
@@ -7971,7 +7973,7 @@ object PipelineQueries {
       // epoch-accretion shape (keys interleave across generations, so
       // pre-compaction a key's members can sit in different shards)
       (0L until 6L).foreach { g =>
-        val base = docs(s, d).filter(pmod(did, lit(6L)) === g)
+        val base = Tables.read(s, d, "documents").filter(pmod(did, lit(6L)) === g)
           .select(did, concat(lit("c"), lpad(did.cast("string"), 8, "0"))
             .as("key"))
         base.select(col("key"), lit("txt").as("ext"),
@@ -8098,7 +8100,7 @@ object PipelineQueries {
       val recoverable = !ok || !hasLabel
       val finalLabel = when(!recoverable, sniffed)
         .otherwise(coalesce(detected.getField("label"), lit("unknown")))
-      docs(s, d).select(did,
+      Tables.read(s, d, "documents").select(did,
           finalLabel.as("charset"),
           (recoverable && detected.getField("label").isNotNull)
             .cast("long").as("recovered"),
@@ -8161,7 +8163,7 @@ object PipelineQueries {
       val longKey = concat(lit("H" * 120), lpad(did.cast("string"), 8, "0"))
       val key = when(pmod(did, lit(50L)) === 3, longKey)
         .otherwise(concat(lit("z"), lpad(did.cast("string"), 8, "0")))
-      val base = docs(s, d).select(did, key.as("key"),
+      val base = Tables.read(s, d, "documents").select(did, key.as("key"),
         pmod(did, lit(4L)).as("shard_no"))
       val rows = base.select(col("shard_no"), col("key"), lit("txt").as("ext"),
           concat(lit("t"), did.cast("string")).cast("binary").as("payload"))
@@ -8205,7 +8207,7 @@ object PipelineQueries {
         .option("splitTargetBytes", "32768").load(outDir)
         .select(col("key"), col("ext"), col("size"),
           md5(col("payload")).as("payload_md5"))
-      val wanted = docs(s, d).filter(pmod(did, lit(61L)) === 0)
+      val wanted = Tables.read(s, d, "documents").filter(pmod(did, lit(61L)) === 0)
         .select(when(pmod(did, lit(50L)) === 3, longKey)
           .otherwise(concat(lit("z"), lpad(did.cast("string"), 8, "0")))
           .as("key"))
@@ -8265,7 +8267,7 @@ object PipelineQueries {
       val outDir = java.nio.file.Files.createTempDirectory("wds_selcomp").toString
       val did = col("doc_id")
       // kept generation: all even docs, one huge roll target
-      val big = docs(s, d).filter(pmod(did, lit(2L)) === 0)
+      val big = Tables.read(s, d, "documents").filter(pmod(did, lit(2L)) === 0)
         .select(did, concat(lit("B"), lpad(did.cast("string"), 8, "0")).as("key"))
       big.select(col("key"), lit("txt").as("ext"),
           concat(lit("t"), did.cast("string")).cast("binary").as("payload"))
@@ -8283,7 +8285,7 @@ object PipelineQueries {
       // 8k+3, 8k+5, 8k+7 all carry key c<k> with per-generation exts,
       // so one sample's members scatter over four small shards
       Seq(1L, 3L, 5L, 7L).foreach { g =>
-        docs(s, d).filter(pmod(did, lit(8L)) === g)
+        Tables.read(s, d, "documents").filter(pmod(did, lit(8L)) === g)
           .select(
             concat(lit("c"), lpad(floor(did / 8).cast("string"), 8, "0")).as("key"),
             concat(lit("t"), lit(g).cast("string")).as("ext"),

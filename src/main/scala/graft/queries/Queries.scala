@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.runtime.Tables
 
 /** One driver-contract query: a Spark DataFrame program plus (when the
   * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle run by
@@ -24,15 +25,6 @@ final case class QueryDef(
   */
 object Queries {
 
-  private[queries] def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // events.parquet has shipped ts under two physical types across
-    // driver rounds; nanosAsLong covers the TIMESTAMP(NANOS) variant and
-    // EventTs.toNanos normalizes whichever one arrives to bigint nanos.
-    if (name == "events") s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events") EventTs.toNanos(df) else df
-  }
-
   /** Money as integer cents: sum(double) differs in last-ulp between
     * engines; sum(bigint) is exact in both. Oracle side casts the sum
     * back to BIGINT because DuckDB promotes sum(BIGINT) to HUGEINT.
@@ -45,7 +37,7 @@ object Queries {
   val q01_agg_pricing = QueryDef(
     "q01_agg_pricing",
     (s, d) => {
-      t(s, d, "lineitem")
+      Tables.read(s, d, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
           count(lit(1)).as("cnt"),
@@ -67,10 +59,10 @@ object Queries {
   val q02_join_regions = QueryDef(
     "q02_join_regions",
     (s, d) => {
-      val orders = t(s, d, "orders")
-      val customer = broadcast(t(s, d, "customer"))
-      val nation = broadcast(t(s, d, "nation"))
-      val region = broadcast(t(s, d, "region"))
+      val orders = Tables.read(s, d, "orders")
+      val customer = broadcast(Tables.read(s, d, "customer"))
+      val nation = broadcast(Tables.read(s, d, "nation"))
+      val region = broadcast(Tables.read(s, d, "region"))
       orders
         .join(customer, col("o_custkey") === col("c_custkey"))
         .join(nation, col("c_nationkey") === col("n_nationkey"))
@@ -95,7 +87,7 @@ object Queries {
   val q03_topk_orders = QueryDef(
     "q03_topk_orders",
     (s, d) =>
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_cents"))
         .orderBy(col("price_cents").desc, col("o_orderkey"))
         .limit(20),
@@ -115,7 +107,7 @@ object Queries {
     (s, d) => {
       val w = Window.partitionBy("user_id").orderBy("event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "events")
+      Tables.events(s, d)
         .select(col("user_id"), col("event_id"),
           sum(cents(col("value"))).over(w).as("cum_cents"))
     },
@@ -133,7 +125,7 @@ object Queries {
     "q05_change_flags",
     (s, d) => {
       val w = Window.partitionBy("user_id").orderBy("event_id")
-      t(s, d, "events")
+      Tables.events(s, d)
         .select(col("user_id"), col("event_type"),
           lag("event_type", 1).over(w).as("prev_type"))
         .groupBy("user_id")
@@ -159,7 +151,7 @@ object Queries {
     "q06_sessionize",
     (s, d) => {
       val w = Window.partitionBy("user_id").orderBy("event_id")
-      t(s, d, "events")
+      Tables.events(s, d)
         .select(col("user_id"), col("ts"), lag("ts", 1).over(w).as("prev_ts"))
         .select(col("user_id"),
           when(col("prev_ts").isNull ||
@@ -186,7 +178,7 @@ object Queries {
     "q16_row_ids",
     (s, d) => {
       val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           row_number().over(w).cast("long").as("seq_id"))
     },
@@ -203,7 +195,7 @@ object Queries {
     (s, d) => {
       val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           (col("o_orderkey") % 60 + 1).as("gap_s"))
         .select(col("o_custkey"), col("o_orderkey"),
@@ -223,7 +215,7 @@ object Queries {
   val q07_explode_seq = QueryDef(
     "q07_explode_seq",
     (s, d) =>
-      t(s, d, "part")
+      Tables.read(s, d, "part")
         .select(col("p_partkey"),
           explode(sequence(lit(1L), lit(1L) + col("p_partkey") % 5)).as("i")),
     Some("""SELECT p_partkey, unnest(generate_series(1, 1 + p_partkey % 5)) AS i FROM part"""),
@@ -235,7 +227,7 @@ object Queries {
   val q08_struct_flatten = QueryDef(
     "q08_struct_flatten",
     (s, d) =>
-      t(s, d, "customer")
+      Tables.read(s, d, "customer")
         .select(struct(col("c_name"), col("c_mktsegment")).as("s"), col("c_custkey"))
         .select(col("c_custkey"), col("s.c_name"), col("s.c_mktsegment")),
     Some("SELECT c_custkey, c_name, c_mktsegment FROM customer"),
@@ -248,7 +240,7 @@ object Queries {
   val q09_phone_format = QueryDef(
     "q09_phone_format",
     (s, d) =>
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .select(col("o_orderkey"),
           format_string("%03d-%03d-%04d",
             col("o_orderkey") % 1000,
@@ -265,7 +257,7 @@ object Queries {
     */
   val q10_drop_fields = QueryDef(
     "q10_drop_fields",
-    (s, d) => t(s, d, "customer").drop("c_acctbal", "c_mktsegment"),
+    (s, d) => Tables.read(s, d, "customer").drop("c_acctbal", "c_mktsegment"),
     Some("SELECT c_custkey, c_name, c_nationkey FROM customer"),
   )
 
@@ -275,7 +267,7 @@ object Queries {
   val q11_array_flatten = QueryDef(
     "q11_array_flatten",
     (s, d) =>
-      t(s, d, "part")
+      Tables.read(s, d, "part")
         .select(col("p_partkey"),
           array_join(
             flatten(array(
@@ -294,8 +286,8 @@ object Queries {
   val q12_correlator_fanout = QueryDef(
     "q12_correlator_fanout",
     (s, d) => {
-      val orders = t(s, d, "orders")
-      val customer = broadcast(t(s, d, "customer"))
+      val orders = Tables.read(s, d, "orders")
+      val customer = broadcast(Tables.read(s, d, "customer"))
       orders
         .select(col("o_orderkey"), col("o_custkey"),
           explode(sequence(lit(1L), lit(1L) + col("o_orderkey") % 3)).as("corr_idx"))
@@ -315,7 +307,7 @@ object Queries {
   val q13_group_collect = QueryDef(
     "q13_group_collect",
     (s, d) =>
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .groupBy("o_custkey")
         .agg(
           count(lit(1)).as("n_orders"),
@@ -331,8 +323,8 @@ object Queries {
   val q14_distinct_dims = QueryDef(
     "q14_distinct_dims",
     (s, d) =>
-      t(s, d, "customer")
-        .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
+      Tables.read(s, d, "customer")
+        .join(broadcast(Tables.read(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
         .select("c_mktsegment", "n_name")
         .distinct(),
     Some("""SELECT DISTINCT c_mktsegment, n_name
@@ -342,9 +334,9 @@ object Queries {
   val q15_set_ops = QueryDef(
     "q15_set_ops",
     (s, d) => {
-      val auto = t(s, d, "customer")
+      val auto = Tables.read(s, d, "customer")
         .filter(col("c_mktsegment") === "AUTOMOBILE").select(col("c_custkey").as("k"))
-      val withOrders = t(s, d, "orders").select(col("o_custkey").as("k")).distinct()
+      val withOrders = Tables.read(s, d, "orders").select(col("o_custkey").as("k")).distinct()
       auto.intersect(withOrders)
         .union(auto.except(withOrders))
         .distinct()
@@ -364,7 +356,7 @@ object Queries {
   val q18_date_buckets = QueryDef(
     "q18_date_buckets",
     (s, d) =>
-      t(s, d, "lineitem")
+      Tables.read(s, d, "lineitem")
         .select(year(col("l_shipdate")).as("y"), month(col("l_shipdate")).as("m"))
         .groupBy("y", "m")
         .agg(count(lit(1)).as("cnt")),
@@ -381,7 +373,7 @@ object Queries {
       // pre-reduce the key before the Knuth multiply: a raw orderkey *
       // 2654435761 overflows Long (ANSI error) once orderkeys pass ~3.5e9
       val key = ((col("o_orderkey") % 100000L) * 2654435761L) % 4294967296L
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .select(col("o_orderkey"),
           format_string("%d.%d.%d.%d",
             floor(key / 16777216L).cast("long") % 256,
@@ -403,7 +395,7 @@ object Queries {
     "q35_ntile",
     (s, d) => {
       val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           ntile(4).over(w).cast("long").as("nt"))
     },
@@ -416,7 +408,7 @@ object Queries {
   val q36_pivot_status = QueryDef(
     "q36_pivot_status",
     (s, d) =>
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .groupBy("o_custkey")
         .agg(
           sum(when(col("o_orderstatus") === "F", 1).otherwise(0)).as("f"),
@@ -433,8 +425,8 @@ object Queries {
   val q37_semi_anti = QueryDef(
     "q37_semi_anti",
     (s, d) => {
-      val customer = t(s, d, "customer")
-      val orders = t(s, d, "orders")
+      val customer = Tables.read(s, d, "customer")
+      val orders = Tables.read(s, d, "orders")
       val semi = customer.join(orders, col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), lit(1L).as("has_orders"))
       val anti = customer.join(orders, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -451,7 +443,7 @@ object Queries {
   val q38_date_arith = QueryDef(
     "q38_date_arith",
     (s, d) =>
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .select(col("o_orderkey"),
           date_add(col("o_orderdate").cast("date"), 30).as("d30"),
           datediff(lit(java.sql.Date.valueOf("2024-01-01")),
@@ -466,7 +458,7 @@ object Queries {
   val q39_string_funcs = QueryDef(
     "q39_string_funcs",
     (s, d) =>
-      t(s, d, "part")
+      Tables.read(s, d, "part")
         .select(col("p_partkey"),
           upper(substring(col("p_name"), 1, 5)).as("u"),
           translate(col("p_brand"), "#", "-").as("tr"),
@@ -485,7 +477,7 @@ object Queries {
     "q40_argmax",
     (s, d) => {
       val ord = cents(col("o_totalprice")) * 10000000L + col("o_orderkey")
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .groupBy("o_custkey")
         .agg(max_by(col("o_orderkey"), ord).as("top_order"),
           min_by(col("o_orderkey"), ord).as("bottom_order"))
@@ -503,7 +495,7 @@ object Queries {
     "q42_percent_rank",
     (s, d) => {
       val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           floor(percent_rank().over(w) * 1000).cast("long").as("pr"))
     },
@@ -521,7 +513,7 @@ object Queries {
     (s, d) => {
       val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
         .rangeBetween(-1000L, Window.currentRow)
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           sum(cents(col("o_totalprice"))).over(w).as("mv"))
     },
@@ -539,7 +531,7 @@ object Queries {
     "q44_lead_cume",
     (s, d) => {
       val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-      t(s, d, "orders")
+      Tables.read(s, d, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           coalesce(lead("o_orderkey", 1).over(w), lit(-1L)).as("nxt"),
           floor(cume_dist().over(w) * 1000).cast("long").as("cd"))

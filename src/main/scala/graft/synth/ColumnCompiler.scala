@@ -185,7 +185,7 @@ object ColumnCompiler {
     // codegen — measured 2-4× slower than the interpreter at 2M rows).
     // Both lowerings draw the identical keyed hash stream, so they
     // generate the same data.
-    def native(c: Ctx, kind: String, sA: Long, sB: Long = 0L, p1: Double = 0.0,
+    def native(c: Ctx, kind: String, sA: Long, sB: Long, p1: Double = 0.0,
         p2: Double = 0.0, p3: Double = 0.0, fm: String = ""): Column =
       call_function("synth_series", lit(kind), col("id"), lit(n),
         lit(sA), lit(sB), lit(p1), lit(p2), lit(p3), lit(fm))

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Tables
 
 /** Scale-curve experiment for the ANN family: replicate the sf0.1
   * embedding corpus m× (each replica deterministically rotated by a
@@ -30,9 +31,8 @@ object AnnScaleBench {
     val spark = graft.runtime.LocalSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val base = Tables.read(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val baseN = base.count()
 
     def corpusAt(m: Int): DataFrame =
       (0 until m).map { r =>

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.runtime.Tables
 
 /** Scale-curve experiment for the crawl-curation CAPSTONE (q145 —
   * VERDICT r9 item 7): grow the crawled corpus m× (each replica under
@@ -22,7 +23,7 @@ object CrawlScaleBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.runtime.LocalSession(cpus)
 
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = Tables.read(spark, sfDir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
 
     def crawled(m: Int) = (0 until m).map { r =>

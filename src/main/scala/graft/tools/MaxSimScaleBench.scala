@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.runtime.Tables
 
 /** Scale-curve experiment for late-interaction reranking (q143's
   * maxSim): hold the CANDIDATE set fixed and grow the doc-token corpus
@@ -21,7 +22,7 @@ object MaxSimScaleBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.runtime.LocalSession(cpus)
 
-    val nDocs0 = spark.read.parquet(s"$sfDir/documents.parquet").count()
+    val nDocs0 = Tables.read(spark, sfDir, "documents").count()
 
     def vec(key: org.apache.spark.sql.Column) =
       array((0 until 4).map(j =>

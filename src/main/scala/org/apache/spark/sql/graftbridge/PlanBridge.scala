@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
@@ -9,8 +10,9 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
   * `Dataset.ofRows` is `private[sql]`, so this object lives under the
   * `org.apache.spark.sql` package — the established pattern for Spark
   * extension libraries that add logical operators (connectors and
-  * join-extension libraries ship the same shim). Nothing else reaches
-  * into Spark internals this way.
+  * join-extension libraries ship the same shim). The only other
+  * internal it reaches is the `private[spark]` listener-bus drain
+  * ([[drainListeners]]).
   */
 object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -25,4 +27,9 @@ object PlanBridge {
   /** The catalyst Expression behind a Column (inverse of [[column]]). */
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** Blocks until every event posted so far has reached the listeners,
+    * so a listener's counts cover the jobs that already started.
+    */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -7,18 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SessionGuardSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[java.io.File] = {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"expected source tree at ${root.getAbsolutePath}")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
-    walk(root)
-  }
-
-  private def text(f: java.io.File): String =
-    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+  import MainSources.{files => mainSources, text}
 
   test("SparkSession.builder appears only in LocalSession and XxhStringRef") {
     // XxhStringRef is the plain-Spark xxhash64 reference DuckXxHash replays
