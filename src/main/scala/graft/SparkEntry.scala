@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{PipelineQueries, Queries, QueryDef}
-import graft.runtime.{BuildOnce, Tables}
+import graft.runtime.{BuildOnce, Staging, Tables}
 import scala.util.chaining._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -72,10 +72,11 @@ object SynthQueries {
     * On exit, success or failure, the scope restores the previous
     * partition count and checkpoint manager so batch queries keep the
     * session defaults, drops every `_sink_` memory-sink view, and
-    * deletes every dir the body staged through `dir`. A rig whose result reads a staged dir (a
-    * parquet sink, a `foreachBatch` output) must therefore return it
-    * [[materialized]]; memory-sink tables already hold their rows in the
-    * driver.
+    * releases every [[graft.runtime.Staging]] dir the body staged
+    * through `dir` (the keys that start with `<rig>_`). A rig whose
+    * result reads a staged dir (a parquet sink, a `foreachBatch` output)
+    * must therefore return it [[materialized]]; memory-sink tables
+    * already hold their rows in the driver.
     */
   private def streamScoped(s: SparkSession, rig: String)(
       f: StreamScope => DataFrame): DataFrame = {
@@ -100,20 +101,16 @@ object SynthQueries {
       s.catalog.listTables().collect().foreach { t =>
         if (t.name.contains("_sink_")) s.catalog.dropTempView(t.name)
       }
-      scope.staged.foreach(StreamFiles.deleteTree)
+      Staging.release(_.startsWith(s"${rig}_"))
     }
   }
 
   /** What a [[streamScoped]] body stages and drains through. */
   private final class StreamScope(s: SparkSession, rig: String) {
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-
-    /** A fresh temp dir `<rig>_<name>...`, deleted when the scope exits. */
-    def dir(name: String): java.nio.file.Path = {
-      val p = java.nio.file.Files.createTempDirectory(s"${rig}_$name")
-      staged += p
-      p
-    }
+    /** A fresh [[Staging]] dir `<rig>_<name>...`, released when the scope
+      * exits.
+      */
+    def dir(name: String): java.nio.file.Path = Staging.dir(s"${rig}_$name")
 
     /** A fresh memory-sink name; the `_sink_` infix is what the scope
       * drops on exit.
@@ -861,7 +858,7 @@ object SynthQueries {
     // The skewed pick must visibly favor the first row.
     QueryDef("g83_lookup_hist",
       (s, _) => {
-        val f = java.nio.file.Files.createTempDirectory("g83").resolve("tiers.csv")
+        val f = Staging.dir("g83").resolve("tiers.csv")
         java.nio.file.Files.writeString(f,
           "tier,code\ngold,1\nsilver,2\nbronze,3\n")
         Synth.dataFrame(s,
@@ -2114,7 +2111,7 @@ object SynthQueries {
         import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
         val docsDf = Tables.read(s, d, "documents")
           .select(col("doc_id"), col("lang"), col("text"))
-        val dir = java.nio.file.Files.createTempDirectory("g105_shards").toString
+        val dir = Staging.dir("g105_shards").toString
         docsDf.write.format("graft-shards").mode("append")
           .option("path", dir).save()
         val manifest = new String(java.nio.file.Files.readAllBytes(
@@ -3821,7 +3818,7 @@ object SynthQueries {
           """[{"name": "i", "class": "id"},
               {"name": "ip", "class": "ipv4"},
               {"name": "n", "class": "int", "min": 0, "max": 1000}]""", 5000)
-        val dir = java.nio.file.Files.createTempDirectory("g112_avro").toString
+        val dir = Staging.dir("g112_avro").toString
         graft.api.Processors.writeAvro(df, dir)
         graft.sources.AvroIo.readAvro(s, dir)
       },

@@ -33,14 +33,20 @@ object Ivf {
   private[ops] def readVectors(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(vectorsDir(path))
 
+  /** The metadata tables' schemas: [[writeCentroids]] and
+    * [[writeCodebooks]] write them, so their readers infer nothing.
+    */
+  private val centroidSchema = StructType(Seq(StructField("cluster", IntegerType),
+    StructField("centroid", ArrayType(DoubleType))))
+  private val codebookSchema = StructType(Seq(StructField("s", IntegerType),
+    StructField("c", IntegerType), StructField("w", ArrayType(DoubleType))))
+
   /** The centroid metadata table (nlist rows — constant size). */
   private[ops] def writeCentroids(spark: SparkSession,
       centroids: Array[Array[Double]], path: String): Unit = {
-    val schema = StructType(Seq(StructField("cluster", IntegerType),
-      StructField("centroid", ArrayType(DoubleType))))
     val rows: java.util.List[Row] = java.util.Arrays.asList(
       centroids.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }: _*)
-    spark.createDataFrame(rows, schema).repartition(1)
+    spark.createDataFrame(rows, centroidSchema).repartition(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
   }
 
@@ -49,7 +55,7 @@ object Ivf {
     * this is index-metadata loading, not a collect-in-the-hot-path.
     */
   private[ops] def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] =
-    spark.read.parquet(s"$path/centroids")
+    spark.read.schema(centroidSchema).parquet(s"$path/centroids")
       .orderBy("cluster").collect().map(_.getSeq[Double](1).toArray)
 
   /** The PQ codebook table: one (s, c, w) row per subspace codeword. */
@@ -65,7 +71,7 @@ object Ivf {
   /** Codebooks[m][k][d/m] back from [[writeCodebooks]] (m·k rows). */
   private[ops] def readCodebooks(spark: SparkSession,
       path: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$path/codebooks").collect()
+    val rows = spark.read.schema(codebookSchema).parquet(s"$path/codebooks").collect()
     val m = rows.map(_.getInt(0)).max + 1
     val k = rows.map(_.getInt(1)).max + 1
     val codebooks = Array.ofDim[Array[Double]](m, k)

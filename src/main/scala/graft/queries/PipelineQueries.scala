@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.runtime.{BuildOnce, Tables}
+import graft.runtime.{BuildOnce, Staging, Tables}
 
 /** Training-data pipeline operators over the `documents` and `embeddings`
   * tables: deduplication, text analysis, similarity search. Written
@@ -3313,7 +3313,7 @@ object PipelineQueries {
     "q124_schema_evolution",
     (s, d) => {
       val base = Tables.read(s, d, "customer")
-      val dir = java.nio.file.Files.createTempDirectory("q124_evo").toString
+      val dir = Staging.dir("q124_evo").toString
       base.filter(col("c_custkey") % 2 === 0)
         .select(col("c_custkey"), col("c_mktsegment"))
         .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -3435,7 +3435,7 @@ object PipelineQueries {
       val tricky = concat(col("c_name"), lit(", \"x\"\n tail"))
       val src = Tables.read(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), tricky.as("payload"))
-      val dir = java.nio.file.Files.createTempDirectory("q127_csv").toString
+      val dir = Staging.dir("q127_csv").toString
       src.write.mode("overwrite").option("header", "true").csv(dir)
       val schema = StructType(Seq(StructField("c_custkey", LongType),
         StructField("c_mktsegment", StringType), StructField("payload", StringType)))
@@ -5380,7 +5380,7 @@ object PipelineQueries {
     "q158_wet_roundtrip",
     (s, d) => {
       val src = WarcFixture.dir(s, d)
-      val wetDir = java.nio.file.Files.createTempDirectory("wet_out").toString
+      val wetDir = Staging.dir("wet_out").toString
       val pages = s.read.format("warc").load(src)
         .filter(col("warc_type") === "response" && col("http_status") === 200)
         .select(col("record_id"), col("target_uri"), col("warc_date"),
@@ -7525,7 +7525,7 @@ object PipelineQueries {
   val q167_wds_roundtrip = QueryDef(
     "q167_wds_roundtrip",
     (s, d) => {
-      val outDir = java.nio.file.Files.createTempDirectory("wds_rt").toString
+      val outDir = Staging.dir("wds_rt").toString
       val did = col("doc_id")
       val longKey = concat(lit("K" * 110), did.cast("string"))
       val key = when(pmod(did, lit(5L)) === 0, longKey)
@@ -7667,7 +7667,7 @@ object PipelineQueries {
     "q169_warc_to_wds",
     (s, d) => {
       val warcDir = WarcFixture.dir(s, d)
-      val outDir = java.nio.file.Files.createTempDirectory("wds_pack").toString
+      val outDir = Staging.dir("wds_pack").toString
       val pages = s.read.format("warc")
         .option("cdxTargetBytes", "16384").load(warcDir)
         .filter(col("warc_type") === "response" && col("http_status") === 200)
@@ -7722,7 +7722,7 @@ object PipelineQueries {
   val q170_wds_lookup = QueryDef(
     "q170_wds_lookup",
     (s, d) => {
-      val outDir = java.nio.file.Files.createTempDirectory("wds_lkp").toString
+      val outDir = Staging.dir("wds_lkp").toString
       val did = col("doc_id")
       val base = Tables.read(s, d, "documents").select(did,
         concat(lit("s"), lpad(did.cast("string"), 8, "0")).as("key"))
@@ -7860,7 +7860,7 @@ object PipelineQueries {
   val q172_wds_backfill = QueryDef(
     "q172_wds_backfill",
     (s, d) => {
-      val outDir = java.nio.file.Files.createTempDirectory("wds_foreign").toString
+      val outDir = Staging.dir("wds_foreign").toString
       val did = col("doc_id")
       val longKey = concat(lit("F" * 120), lpad(did.cast("string"), 8, "0"))
       val key = when(pmod(did, lit(50L)) === 3, longKey)
@@ -7967,7 +7967,7 @@ object PipelineQueries {
   val q173_wds_compact = QueryDef(
     "q173_wds_compact",
     (s, d) => {
-      val outDir = java.nio.file.Files.createTempDirectory("wds_compact").toString
+      val outDir = Staging.dir("wds_compact").toString
       val did = col("doc_id")
       // 6 append generations of small shards — the streaming sink's
       // epoch-accretion shape (keys interleave across generations, so
@@ -8157,8 +8157,8 @@ object PipelineQueries {
   val q175_wds_transcode = QueryDef(
     "q175_wds_transcode",
     (s, d) => {
-      val gzDir = java.nio.file.Files.createTempDirectory("wds_gzsrc").toString
-      val outDir = java.nio.file.Files.createTempDirectory("wds_gzout").toString
+      val gzDir = Staging.dir("wds_gzsrc").toString
+      val outDir = Staging.dir("wds_gzout").toString
       val did = col("doc_id")
       val longKey = concat(lit("H" * 120), lpad(did.cast("string"), 8, "0"))
       val key = when(pmod(did, lit(50L)) === 3, longKey)
@@ -8264,7 +8264,7 @@ object PipelineQueries {
   val q174_wds_compact_select = QueryDef(
     "q174_wds_compact_select",
     (s, d) => {
-      val outDir = java.nio.file.Files.createTempDirectory("wds_selcomp").toString
+      val outDir = Staging.dir("wds_selcomp").toString
       val did = col("doc_id")
       // kept generation: all even docs, one huge roll target
       val big = Tables.read(s, d, "documents").filter(pmod(did, lit(2L)) === 0)

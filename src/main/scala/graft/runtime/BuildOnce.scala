@@ -1,6 +1,7 @@
 package graft.runtime
 
 import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
 /** JVM-wide build-once memo for values that are expensive to build and
   * cheap to serve: ANN index directories, driver-side fits (k-means
@@ -28,9 +29,11 @@ object BuildOnce {
 
   private val cells = new ConcurrentHashMap[String, Cell]()
 
+  private def key(name: String, sfDir: String): String = s"$name|$sfDir"
+
   private def once[T <: AnyRef](name: String, sfDir: String)(build: => T)(
       suffix: T => String): T =
-    cells.computeIfAbsent(s"$name|$sfDir", _ => new Cell).get {
+    cells.computeIfAbsent(key(name, sfDir), _ => new Cell).get {
       val t0 = System.nanoTime()
       val r = build
       System.err.println(
@@ -42,39 +45,34 @@ object BuildOnce {
   def apply[T <: AnyRef](name: String, sfDir: String)(build: => T): T =
     once(name, sfDir)(build)(_ => "")
 
-  /** Every dir [[dir]] created and no [[clear]] has deleted yet. */
-  private val dirs = ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-
-  /** Deletes what [[clear]] did not, when the JVM exits. */
-  private lazy val deleteOnExit: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteDirs()))
-
-  private def deleteDirs(): Unit = dirs.forEach { d =>
-    graft.streaming.StreamFiles.deleteTree(d)
-    dirs.remove(d)
-  }
-
-  /** A fresh temp directory (prefix `name`) filled by `write`, once per
-    * (name, sfDir); returns its path. The dir lives until [[clear]] or
-    * the end of the JVM, whichever comes first.
+  /** A fresh [[Staging]] dir (prefix `name`) filled by `write`, once per
+    * (name, sfDir); returns its path. The dir lives until [[clear]]
+    * releases it from [[Staging]] or the JVM exits (Staging's shutdown
+    * hook), whichever comes first.
     */
   def dir(name: String, sfDir: String)(write: String => Unit): String =
     once(name, sfDir) {
-      deleteOnExit
-      val d = java.nio.file.Files.createTempDirectory(name)
-      dirs.add(d)
-      write(d.toString)
-      d.toString
+      val d = Staging.dir(stagingKey(key(name, sfDir))).toString
+      write(d)
+      d
     }(d => s" -> $d")
 
+  /** The [[Staging]] key of cell `key`: its name plus a digest of its
+    * sfDir, so the same name built for two sfDirs stages two dirs.
+    */
+  private def stagingKey(key: String): String =
+    key.takeWhile(_ != '|') + "_" + Integer.toHexString(key.hashCode)
+
   /** Forget every memoized value, so the next call of each key rebuilds
-    * it, and delete the dirs [[dir]] built. The parity harness calls
-    * this between passes: without it, a pass under a new master would
-    * serve what the previous master built, and a topology-dependent bug
-    * in a build's write path could never surface.
+    * it, and release the [[Staging]] dirs [[dir]] built (no other staged
+    * dir). The parity harness calls this between passes: without it, a
+    * pass under a new master would serve what the previous master built,
+    * and a topology-dependent bug in a build's write path could never
+    * surface.
     */
   def clear(): Unit = {
+    val built = cells.keySet.asScala.map(stagingKey).toSet
     cells.clear()
-    deleteDirs()
+    Staging.release(built)
   }
 }

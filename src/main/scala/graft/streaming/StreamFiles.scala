@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import graft.runtime.Staging
 
 /** Shared file-stream plumbing for the bounded streaming replays: the
   * one-parquet-part-per-micro-batch writer and its helpers lived as
@@ -20,16 +21,15 @@ object StreamFiles {
   }
 
   /** Materialize `df` into `streamDir` as a single parquet part named
-    * `sub.parquet` (one file = one maxFilesPerTrigger micro-batch),
-    * deleting the _SUCCESS/.crc staging leftovers.
+    * `sub.parquet` (one file = one maxFilesPerTrigger micro-batch). The
+    * write goes through a [[Staging]] scratch dir, released with its
+    * _SUCCESS/.crc leftovers when the write returns or throws.
     */
   def writeOne(df: DataFrame, streamDir: java.nio.file.Path,
-      sub: String): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft_$sub")
+      sub: String): Unit = scratch(s"graft_$sub") { tmp =>
     df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
     val part = firstParquet(tmp)
     java.nio.file.Files.move(part, streamDir.resolve(s"$sub.parquet"))
-    deleteTree(tmp)
   }
 
   /** Materialize SEVERAL same-schema split files in ONE Spark job:
@@ -54,39 +54,32 @@ object StreamFiles {
     } else {
       import org.apache.spark.sql.functions.{col, lit}
       val t0 = System.currentTimeMillis() - dfs.size - 1L
-      val tmp = java.nio.file.Files.createTempDirectory("graft_many")
-      val tagged = dfs.map { case (sub, df) =>
-        df.withColumn("__sub", lit(sub))
-      }.reduce(_ unionByName _)
-      // deterministic row order inside each part: a hash repartition
-      // interleaves upstream tasks nondeterministically (writeOne's
-      // round-robin repartition(1) was implicitly sorted by
-      // sortBeforeRepartition), so impose a total order per file
-      val cols = tagged.columns.toSeq.map(col)
-      tagged.repartition(col("__sub")).sortWithinPartitions(cols: _*)
-        .write.mode("overwrite").partitionBy("__sub").parquet(tmp.toString)
-      dfs.zipWithIndex.foreach { case ((sub, _), i) =>
-        val target = streamDir.resolve(s"$sub.parquet")
-        java.nio.file.Files.move(firstParquet(tmp.resolve(s"__sub=$sub")),
-          target)
-        java.nio.file.Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(t0 + i))
+      scratch("graft_many") { tmp =>
+        val tagged = dfs.map { case (sub, df) =>
+          df.withColumn("__sub", lit(sub))
+        }.reduce(_ unionByName _)
+        // deterministic row order inside each part: a hash repartition
+        // interleaves upstream tasks nondeterministically (writeOne's
+        // round-robin repartition(1) was implicitly sorted by
+        // sortBeforeRepartition), so impose a total order per file
+        val cols = tagged.columns.toSeq.map(col)
+        tagged.repartition(col("__sub")).sortWithinPartitions(cols: _*)
+          .write.mode("overwrite").partitionBy("__sub").parquet(tmp.toString)
+        dfs.zipWithIndex.foreach { case ((sub, _), i) =>
+          val target = streamDir.resolve(s"$sub.parquet")
+          java.nio.file.Files.move(firstParquet(tmp.resolve(s"__sub=$sub")),
+            target)
+          java.nio.file.Files.setLastModifiedTime(target,
+            java.nio.file.attribute.FileTime.fromMillis(t0 + i))
+        }
       }
-      deleteTree(tmp)
     }
 
-  /** Recursive delete, best-effort (replays create tmp trees per run;
-    * unbounded leftovers would grow /tmp by a checkpoint tree per
-    * invocation).
+  /** Runs `f` on a fresh [[Staging]] dir under `key` and releases the dir
+    * when `f` returns or throws.
     */
-  def deleteTree(root: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path}
-    if (Files.exists(root)) {
-      val all = Files.walk(root)
-      try all.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => try { Files.deleteIfExists(p); () }
-          catch { case _: Exception => () })
-      finally all.close()
-    }
+  private def scratch(key: String)(f: java.nio.file.Path => Unit): Unit = {
+    val tmp = Staging.dir(key)
+    try f(tmp) finally Staging.release(_ == key)
   }
 }

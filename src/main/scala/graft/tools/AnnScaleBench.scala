@@ -68,7 +68,7 @@ object AnnScaleBench {
       }
 
       // quantized IVF disk index: only probed directories are opened
-      val dirQ = java.nio.file.Files.createTempDirectory(s"annq_$m").toString
+      val dirQ = graft.runtime.Staging.dir(s"annq_$m").toString
       val centroids = graft.ops.Similarity.fitCentroids(corpus, "embedding", nlist)
       val (_, tQBuild) = time {
         graft.ops.Quantization.writeQuantizedIvfIndex(
@@ -99,7 +99,7 @@ object AnnScaleBench {
         .count()
 
       // IVF-PQ: same pruning, ~40x smaller rows
-      val dirP = java.nio.file.Files.createTempDirectory(s"annpq_$m").toString
+      val dirP = graft.runtime.Staging.dir(s"annpq_$m").toString
       val cbs = graft.ops.Pq.fitCodebooks(corpus, "embedding", 8, 64)
       val (_, tPBuild) = time {
         graft.ops.Pq.writePqIvfIndex(corpus, "vec_id", "embedding", dirP, centroids, cbs)
@@ -120,6 +120,7 @@ object AnnScaleBench {
           s""""pq_build_s":${f"$tPBuild%.2f"},"pq_serve_s":${f"$tPServe%.2f"},""" +
           s""""int8_index_bytes":$bytesFloat,"pq_index_bytes":$bytesPq}""")
       corpus.unpersist()
+      graft.runtime.Staging.release(Set(s"annq_$m", s"annpq_$m"))
     }
     spark.stop()
   }

@@ -50,7 +50,7 @@ object BandedIndexScaleBench {
     val bandBits = 64 / nBands
     val all = spark.range(0, n).select(col("id"),
       (col("id") * 1000L).as("ts"), xxhash64(lit("sig"), col("id")).as("sig"))
-    val streamDir = java.nio.file.Files.createTempDirectory(s"bisb_$n")
+    val streamDir = graft.runtime.Staging.dir(s"bisb_$n")
     // batches must be ordinal-monotone for the windowed processor's
     // physical eviction contract: split by id RANGE, not residue
     Seq(0, 1, 2).foreach { i =>
@@ -103,6 +103,6 @@ object BandedIndexScaleBench {
       f""""band_occupancy":$occupancy%.2f,"state_keys":$stateRows,""" +
       f""""state_entries_bound":$entriesBound,""" +
       f""""wall_s":$wall%.2f,"arrivals_per_s":${n / wall}%.0f}""")
-    graft.streaming.StreamFiles.deleteTree(streamDir)
+    graft.runtime.Staging.release(_ == s"bisb_$n")
   }
 }

@@ -159,7 +159,7 @@ class BandedIndexSpec extends AnyFunSuite {
           .as("dup_of"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       spark.catalog.dropTempView(name)
-      graft.streaming.StreamFiles.deleteTree(streamDir)
+      graft.runtime.Staging.deleteTree(streamDir)
       got
     }
     try {

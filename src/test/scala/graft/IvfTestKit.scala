@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.Assertions._
 
-import graft.streaming.StreamFiles
+import graft.runtime.Staging
 
 /** Shared checks for the IVF disk-index specs. */
 object IvfTestKit extends AdaptiveSparkPlanHelper {
@@ -24,7 +24,7 @@ object IvfTestKit extends AdaptiveSparkPlanHelper {
       val d = Files.createTempDirectory(prefix)
       made += d
       d.toString
-    } finally made.foreach(StreamFiles.deleteTree)
+    } finally made.foreach(Staging.deleteTree)
   }
 
   /** Asserts that the probe restriction reaches the scan of

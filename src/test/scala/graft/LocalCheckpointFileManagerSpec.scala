@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{LocalCheckpointFileManager, StreamFiles}
+import graft.runtime.Staging
+import graft.streaming.LocalCheckpointFileManager
 
 /** The fork-free checkpoint manager commits the same files, sidecars
   * and modes as Spark's default manager, keeps its overwrite and cancel
@@ -23,7 +24,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
 
   private def withTempDir(f: JPath => Unit): Unit = {
     val d = Files.createTempDirectory("cfm_spec")
-    try f(d) finally StreamFiles.deleteTree(d)
+    try f(d) finally Staging.deleteTree(d)
   }
 
   private def manager(dir: JPath, conf: Configuration = new Configuration())

@@ -3,8 +3,7 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
-import graft.runtime.{BuildOnce, Tables}
-import graft.streaming.StreamFiles
+import graft.runtime.{BuildOnce, Staging, Tables}
 import graft.tools.ParityHarness.digest
 
 /** [[graft.runtime.Tables]] is the one reader of the sf tables: it reads
@@ -23,7 +22,7 @@ class TablesSpec extends AnyFunSuite {
 
   private def withTempDir(body: String => Unit): Unit = {
     val dir = Files.createTempDirectory("tables_spec")
-    try body(dir.toString) finally StreamFiles.deleteTree(dir)
+    try body(dir.toString) finally Staging.deleteTree(dir)
   }
 
   test("every sf table reads as a plain read.parquet does") {
