@@ -38,13 +38,21 @@ object SynthQueries {
   import graft.queries.EventTs
   import graft.streaming.{LocalCheckpointFileManager, StreamFiles}
   import org.apache.spark.sql.functions.{base64, col, to_json}
-  import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+    StreamingQueryProgress, Trigger}
   import org.apache.spark.sql.types.{ArrayType, BinaryType, LongType, MapType,
     StructType}
 
   /** Scope for one bounded streaming replay (`rig` is its query tag,
-    * e.g. "g55"): the body gets a [[StreamScope]] for its staging dirs
-    * and memory sinks.
+    * e.g. "g55"): the body gets a [[StreamScope]] for its staging dirs,
+    * conf pins and query runs.
+    *
+    * Conf pins: the scope applies its own two pins, then the rig's
+    * `confs` pairs in order (a later pair wins), and on exit, success or
+    * failure, restores every key to its previous value, or unsets it if
+    * it had none. [[StreamScope.withConf]] narrows a pin to part of the
+    * body through the same save/restore loop.
     *
     * Shuffle partitions are pinned to 8 inside the scope: stateful
     * operators clone one state-store instance per shuffle partition and
@@ -69,27 +77,27 @@ object SynthQueries {
     * SST uploads and fixture writes, outside the manager), 0.2 CPU-s.
     * Other schemes keep Spark's default manager.
     *
-    * On exit, success or failure, the scope restores the previous
-    * partition count and checkpoint manager so batch queries keep the
-    * session defaults, drops every `_sink_` memory-sink view, and
+    * Run step: every query the body starts runs under
+    * Trigger.AvailableNow through [[StreamScope.run]], which starts and
+    * awaits it: [[StreamScope.drain]] into a memory sink,
+    * [[StreamScope.incarnation]] into a parquet file sink (one
+    * incarnation per call over a shared checkpoint), or `run` itself for
+    * a rig's own writer (g114's `foreachBatch`, g134's `wds` sink).
+    *
+    * On exit the scope also drops every `_sink_` memory-sink view and
     * releases every [[graft.runtime.Staging]] dir the body staged
     * through `dir` (the keys that start with `<rig>_`). A rig whose
     * result reads a staged dir (a parquet sink, a `foreachBatch` output)
     * must therefore return it [[materialized]]; memory-sink tables
     * already hold their rows in the driver.
     */
-  private def streamScoped(s: SparkSession, rig: String)(
-      f: StreamScope => DataFrame): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    val fmKey = LocalCheckpointFileManager.ConfKey
-    val oldFm = s.conf.getOption(fmKey)
+  private def streamScoped(s: SparkSession, rig: String,
+      confs: (String, String)*)(f: StreamScope => DataFrame): DataFrame = {
     val scope = new StreamScope(s, rig)
-    s.conf.set(key, "8")
-    s.conf.set(fmKey, classOf[LocalCheckpointFileManager].getName)
-    try f(scope) finally {
-      s.conf.set(key, old)
-      oldFm.fold(s.conf.unset(fmKey))(s.conf.set(fmKey, _))
+    val pins = Seq("spark.sql.shuffle.partitions" -> "8",
+      LocalCheckpointFileManager.ConfKey ->
+        classOf[LocalCheckpointFileManager].getName) ++ confs
+    try scope.withConf(pins: _*)(f(scope)) finally {
       // Memory-sink hygiene: every streaming replay registers a fresh
       // uuid-named memory sink holding its full result in driver memory,
       // and nothing ever dropped them — N bench reps retained N result
@@ -105,7 +113,25 @@ object SynthQueries {
     }
   }
 
-  /** What a [[streamScoped]] body stages and drains through. */
+  /** The RocksDB state-store pins a [[streamScoped]] rig passes as its
+    * `confs`. Changelog checkpointing: commit appends a delta instead of
+    * uploading a full RocksDB snapshot per store per micro-batch — the
+    * production setting for frequent-commit stateful queries, and the
+    * same restart semantics (g133/g135 prove checkpoint recovery under
+    * it; state content is unchanged either way). Without it every
+    * bounded replay pays a snapshot upload per partition per batch.
+    */
+  private val RocksDb = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
+  /** Disables the trailing no-data micro-batch (see g116's phase 1). */
+  private val NoDataBatchesOff =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
+  /** What a [[streamScoped]] body stages, pins and runs through. */
   private final class StreamScope(s: SparkSession, rig: String) {
     /** A fresh [[Staging]] dir `<rig>_<name>...`, released when the scope
       * exits.
@@ -115,26 +141,56 @@ object SynthQueries {
     /** A fresh memory-sink name; the `_sink_` infix is what the scope
       * drops on exit.
       */
-    def sinkName: String =
+    private def sinkName: String =
       s"${rig}_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
 
-    /** Runs `df` to completion into a fresh memory sink under
-      * Trigger.AvailableNow and returns the sink table. `minBatches`
-      * pins how many micro-batches read input (the multi-batch rigs'
-      * cross-batch proofs); `check` sees the finished query's progress.
+    /** `body` with each `(key, value)` pin set in order; afterwards every
+      * key is restored to its previous value, or unset if it had none.
+      */
+    def withConf[A](pins: (String, String)*)(body: => A): A = {
+      val olds = pins.map { case (k, _) => k -> s.conf.getOption(k) }
+      pins.foreach { case (k, v) => s.conf.set(k, v) }
+      try body finally olds.reverse.foreach { case (k, old) =>
+        old.fold(s.conf.unset(k))(s.conf.set(k, _))
+      }
+    }
+
+    /** Starts `w` under Trigger.AvailableNow and awaits it: the one run
+      * step of every query a rig starts. Returns the finished query.
+      */
+    def run(w: DataStreamWriter[Row]): StreamingQuery = {
+      val q = w.trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    }
+
+    /** Runs `df` to completion into a fresh memory sink and returns the
+      * sink table. `minBatches` pins how many micro-batches read input
+      * (the multi-batch rigs' cross-batch proofs); `check` sees the
+      * finished query's progress.
       */
     def drain(df: DataFrame, mode: String, minBatches: Int = 0,
         check: Array[StreamingQueryProgress] => Unit = _ => ()): DataFrame = {
       val name = sinkName
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val q = run(df.writeStream.format("memory").queryName(name)
+        .outputMode(mode))
       val batches = q.recentProgress.count(_.numInputRows > 0)
       require(batches >= minBatches,
         s"expected >= $minBatches micro-batches with input, got $batches")
       check(q.recentProgress)
       s.table(name)
     }
+
+    /** One incarnation of `df` into a parquet append file sink at
+      * `outDir`, checkpointed at `ckptDir`: a later call on the same
+      * dirs is a real restart that resumes from the checkpoint. Returns
+      * the input rows this incarnation read (the restart proofs'
+      * resume-not-reprocess count).
+      */
+    def incarnation(df: DataFrame, outDir: String, ckptDir: String): Long =
+      run(df.writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckptDir).outputMode("append"))
+        .recentProgress.map(_.numInputRows).sum
 
     /** events.parquet as a bounded file stream: the raw table (read
       * through [[Tables.read]]) and the staged stream with `ts` normalized
@@ -208,29 +264,6 @@ object SynthQueries {
       case (p, len) if p.endsWith(".warc") || p.endsWith(".warc.gz") => len
     }.maxOption.getOrElse(0L)
     math.max(65536L, maxSeg / s.sparkContext.defaultParallelism)
-  }
-
-  /** Scope a streaming replay to the RocksDB state-store provider,
-    * restoring the session's previous provider afterwards.
-    */
-  private def withRocksDb(s: SparkSession)(f: => DataFrame): DataFrame = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    // changelog checkpointing: commit appends a delta instead of
-    // uploading a full RocksDB snapshot per store per micro-batch — the
-    // production setting for frequent-commit stateful queries, and the
-    // same restart semantics (g133/g135 prove checkpoint recovery under
-    // it; state content is unchanged either way). Without it every
-    // bounded replay pays a snapshot upload per partition per batch.
-    val clogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val olds = Seq(provKey, clogKey).map(k => k -> s.conf.getOption(k))
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set(clogKey, "true")
-    try f finally olds.foreach {
-      case (k, Some(p)) => s.conf.set(k, p)
-      case (k, None)    => s.conf.unset(k)
-    }
   }
 
   /** The multi-batch transformWithState event split (g111/g116): the
@@ -1468,21 +1501,21 @@ object SynthQueries {
           "a" -> q.filter(col("vec_id") % 100 === 0),
           "b" -> q.filter(col("vec_id") % 100 =!= 0)), streamDir)
         val outDir = st.dir("out").toString
-        val sq = s.readStream.schema(q.schema)
+        // the schema every batch wrote, read back without inference
+        var served: StructType = null
+        st.run(s.readStream.schema(q.schema)
           .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
           .writeStream
           .foreachBatch { (batch: DataFrame, bid: Long) =>
-            graft.ops.Quantization.hashIvfTopKFromIndex(dir, batch,
+            val out = graft.ops.Quantization.hashIvfTopKFromIndex(dir, batch,
               "vec_id", "embedding", 10, numClusters = 8, nProbe = 2)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
+            served = out.schema
+            out.write.mode("overwrite").parquet(s"$outDir/batch=$bid")
+          })
         // `batch=N` subdirs surface as a discovered partition column;
         // drop it — the oracle sees the union of batches, not the split.
         // Materialized: the scope deletes outDir on return.
-        materialized(s.read.parquet(outDir).drop("batch"))
+        materialized(s.read.schema(served).parquet(outDir).drop("batch"))
       },
       Some(HashIvfOracle.sql)),
 
@@ -2006,7 +2039,7 @@ object SynthQueries {
     // user's flush timer; its own timer sits past the final watermark,
     // so it self-excludes.
     QueryDef("g102_stream_tws_profile",
-      (s, d) => streamScoped(s, "g102")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g102", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.{expr, timestamp_micros}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
@@ -2022,7 +2055,7 @@ object SynthQueries {
             implicitly[org.apache.spark.sql.Encoder[(Long, String, Long)]])
           .toDF("user_id", "event_type", "n")
         st.drain(profiles, "append").filter(col("user_id") >= 0)
-      }),
+      },
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         FROM events GROUP BY user_id, event_type""")),
 
@@ -2075,26 +2108,19 @@ object SynthQueries {
         import org.apache.spark.sql.functions.{count, expr, lit,
           timestamp_micros, unix_timestamp, window}
         val sinkDir = st.dir("sink").toString
-        val ckptDir = st.dir("ckpt").toString
-        val q = st.events(d, Some(36000L))._2
+        val counts = st.events(d, Some(36000L))._2
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"),
             col("event_type"), col("n"))
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", ckptDir)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        st.incarnation(counts, sinkDir, st.dir("ckpt").toString)
         // read back through the _spark_metadata manifest; the sentinel's
         // own window never flushed, so only real buckets are on disk.
         // Materialized: the scope deletes sinkDir on return.
-        materialized(
-          s.read.parquet(sinkDir).filter(col("event_type") =!= "sentinel"))
+        materialized(s.read.schema(counts.schema).parquet(sinkDir)
+          .filter(col("event_type") =!= "sentinel"))
       },
       Some("""SELECT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT)
           AS bucket_s, event_type, count(*) AS n
@@ -2135,7 +2161,7 @@ object SynthQueries {
     // state is O(K) per user at any stream length — flushed ranked by
     // an event-time timer. Same sentinel/RocksDB scaffolding as g102.
     QueryDef("g106_stream_tws_latestk",
-      (s, d) => streamScoped(s, "g106")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g106", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.{expr, timestamp_micros}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
@@ -2151,7 +2177,7 @@ object SynthQueries {
             implicitly[org.apache.spark.sql.Encoder[(Long, Long, Long, Long)]])
           .toDF("user_id", "rnk", "event_id", "ts_ms")
         st.drain(latest, "append").filter(col("user_id") >= 0)
-      }),
+      },
       Some("""SELECT user_id, CAST(rnk AS BIGINT) AS rnk, event_id,
           CAST(epoch_ns(ts) // 1000000 AS BIGINT) AS ts_ms
         FROM (SELECT user_id, event_id, ts, row_number() OVER
@@ -2204,14 +2230,14 @@ object SynthQueries {
     // batch-2 remainder — and the per-(user, type) counts split into
     // two rows, so the batch GROUP BY oracle hash-catches the defect.
     QueryDef("g111_stream_tws_multibatch",
-      (s, d) => streamScoped(s, "g111")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g111", RocksDb: _*) { st =>
         val streamDir = st.dir("events")
         // four single-file triggers, processed in write order (thirds +
         // sentinel — see eventThirdFiles for why thirds)
         StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
         st.drain(typeCountStream(s, streamDir, Tables.read(s, d, "events").schema), "append",
           minBatches = 4).filter(col("user_id") >= 0)
-      }),
+      },
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         FROM events GROUP BY user_id, event_type""")),
 
@@ -2231,23 +2257,13 @@ object SynthQueries {
     // ONLY the two new files, so a silent full-reprocess cannot pass
     // even if it were numerically idempotent.
     QueryDef("g116_stream_restart_recovery",
-      (s, d) => streamScoped(s, "g116")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g116", RocksDb: _*) { st =>
         val evRaw = Tables.read(s, d, "events")
         val streamDir = st.dir("events")
         val ckptDir = st.dir("ckpt").toString
         val outDir = st.dir("out").toString
         val files = eventThirdFiles(s, d)
-        def runIncarnation(): Long = {
-          val q = typeCountStream(s, streamDir, evRaw.schema)
-            .writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ckptDir)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          q.recentProgress.map(_.numInputRows).sum
-        }
+        val counts = typeCountStream(s, streamDir, evRaw.schema)
         // phase 1: thirds 0 and 1 only — run to completion, stop cleanly.
         // No-data micro-batches are disabled for THIS incarnation: the
         // trailing no-data batch AvailableNow otherwise runs would
@@ -2256,25 +2272,24 @@ object SynthQueries {
         // emitting partial profiles at what is semantically a deploy
         // stop, not a quiet user. Phase 2 re-enables them so the
         // sentinel's trailing batch performs the final flush.
-        val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-        val oldNoData = s.conf.get(noDataKey)
         StreamFiles.writeMany(files.take(2), streamDir)
-        s.conf.set(noDataKey, "false")
-        val rows1 = try runIncarnation() finally s.conf.set(noDataKey, oldNoData)
+        val rows1 = st.withConf(NoDataBatchesOff)(
+          st.incarnation(counts, outDir, ckptDir))
         require(rows1 > 0L, "phase 1 processed no rows")
         // phase 2: the last third + sentinel land; a NEW query resumes
         // from the checkpoint
         val tailRows = files(2)._2.count() + 1L
         StreamFiles.writeMany(files.drop(2), streamDir)
-        val rows2 = runIncarnation()
+        val rows2 = st.incarnation(counts, outDir, ckptDir)
         require(rows2 == tailRows,
           s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
             s"expected exactly the new files' $tailRows")
         // the report is (user, type)-dimension-sized by design —
         // materialized, because the scope deletes the three staged trees
         // (split files, RocksDB checkpoint, sink) on return
-        materialized(s.read.parquet(outDir).filter(col("user_id") >= 0))
-      }),
+        materialized(s.read.schema(counts.schema).parquet(outDir)
+          .filter(col("user_id") >= 0))
+      },
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         FROM events GROUP BY user_id, event_type""")),
 
@@ -2366,7 +2381,7 @@ object SynthQueries {
     // algebraic form the processor folds incrementally). Runs on
     // RocksDB state across four watermark-advancing micro-batches.
     QueryDef("g118_stream_cusum",
-      (s, d) => streamScoped(s, "g118")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g118", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.{expr, lit, max, min, round,
           sum, timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -2406,7 +2421,7 @@ object SynthQueries {
             "max_sn", "alarm_n_idx", "alarm_n_ts")
         st.drain(scored, "append", minBatches = 4)
           .filter(col("event_type") =!= "sentinel")
-      }),
+      },
       Some(cusumOracleSql)),
 
     // CHECKPOINT-RESTART leg for the CUSUM family (VERDICT r9 item 6):
@@ -2421,7 +2436,7 @@ object SynthQueries {
     // (prefix sum + running min/max) is associative-resumable across a
     // REAL query restart, not just CusumSpec's batch-split unit test.
     QueryDef("g125_stream_cusum_restart",
-      (s, d) => streamScoped(s, "g125")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g125", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.{expr, lit, min => fmin,
           max => fmax, round, sum, timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -2440,51 +2455,39 @@ object SynthQueries {
         val ckptDir = st.dir("ckpt").toString
         val outDir = st.dir("out").toString
         val files = eventThirdFiles(s, d)
-        def runIncarnation(): Long = {
-          val scored = EventTs.toNanos(
-            s.readStream.schema(evRaw.schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(streamDir.toString))
-            .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-            .withWatermark("event_time", "1 hour")
-            .select(col("event_type"), col("ts").as("ts_ns"),
-              col("event_id").cast("long").as("eid"),
-              (round(col("value") * 1000000).cast("long") +
-                when(col("ts") > t2, lit(300000000L)).otherwise(lit(0L)))
-                .as("v_micro"))
-            .as[(String, Long, Long, Long)]
-            .groupByKey(_._1)
-            .transformWithState(
-              new graft.streaming.CusumProcessor(target, 50000000000L),
-              TimeMode.EventTime(), OutputMode.Append(),
-              implicitly[org.apache.spark.sql.Encoder[
-                (String, Long, Long, Long, Long, Long, Long, Long)]])
-            .toDF("event_type", "n", "max_s", "alarm_idx", "alarm_ts",
-              "max_sn", "alarm_n_idx", "alarm_n_ts")
-          val q = scored.writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ckptDir)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          q.recentProgress.map(_.numInputRows).sum
-        }
-        val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-        val oldNoData = s.conf.get(noDataKey)
+        val scored = EventTs.toNanos(
+          s.readStream.schema(evRaw.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(streamDir.toString))
+          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+          .withWatermark("event_time", "1 hour")
+          .select(col("event_type"), col("ts").as("ts_ns"),
+            col("event_id").cast("long").as("eid"),
+            (round(col("value") * 1000000).cast("long") +
+              when(col("ts") > t2, lit(300000000L)).otherwise(lit(0L)))
+              .as("v_micro"))
+          .as[(String, Long, Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(
+            new graft.streaming.CusumProcessor(target, 50000000000L),
+            TimeMode.EventTime(), OutputMode.Append(),
+            implicitly[org.apache.spark.sql.Encoder[
+              (String, Long, Long, Long, Long, Long, Long, Long)]])
+          .toDF("event_type", "n", "max_s", "alarm_idx", "alarm_ts",
+            "max_sn", "alarm_n_idx", "alarm_n_ts")
         StreamFiles.writeMany(files.take(2), streamDir)
-        s.conf.set(noDataKey, "false")
-        val rows1 = try runIncarnation() finally s.conf.set(noDataKey, oldNoData)
+        val rows1 = st.withConf(NoDataBatchesOff)(
+          st.incarnation(scored, outDir, ckptDir))
         require(rows1 > 0L, "phase 1 processed no rows")
         val tailRows = files(2)._2.count() + 1L
         StreamFiles.writeMany(files.drop(2), streamDir)
-        val rows2 = runIncarnation()
+        val rows2 = st.incarnation(scored, outDir, ckptDir)
         require(rows2 == tailRows,
           s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
             s"expected exactly the new files' $tailRows")
-        materialized(s.read.parquet(outDir)
+        materialized(s.read.schema(scored.schema).parquet(outDir)
           .filter(col("event_type") =!= "sentinel"))
-      }),
+      },
       Some(cusumOracleSql)),
 
     // ADAPTIVE-BASELINE two-sided CUSUM: no upstream reference pass —
@@ -2498,7 +2501,7 @@ object SynthQueries {
     // nonnegative in this feed, so DuckDB's floor-div // equals the
     // processor's Math.floorDiv on the reference sum.
     QueryDef("g123_stream_cusum_adaptive",
-      (s, d) => streamScoped(s, "g123")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g123", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.{expr, lit, max, min, round,
           timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -2536,7 +2539,7 @@ object SynthQueries {
         val negAlarms = out.filter(col("alarm_n_idx") >= 0).count()
         require(negAlarms > 0, "the rig must exercise the downward alarm")
         out
-      }),
+      },
       Some("""WITH mm AS (SELECT min(epoch_ns(ts)) AS mn, max(epoch_ns(ts)) AS mx
             FROM events),
           e AS (SELECT event_type, epoch_ns(ts) AS tsn, event_id,
@@ -2599,7 +2602,7 @@ object SynthQueries {
     // bit, and the first-seen attribution (min id per signature — the
     // id-ordered splits make arrival order the id order) in SQL.
     QueryDef("g119_stream_image_dedup",
-      (s, d) => streamScoped(s, "g119")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g119", RocksDb: _*) { st =>
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.functions.lit
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -2648,7 +2651,7 @@ object SynthQueries {
             implicitly[org.apache.spark.sql.Encoder[(Long, Long, Long)]])
           .toDF("id", "dhash", "dup_of")
         st.drain(hashed, "append", minBatches = 3)
-      }),
+      },
       Some {
         graft.queries.PipelineQueries.dhashOracleChain(
           """SELECT CAST(doc_id AS BIGINT) AS base_id,
@@ -2772,7 +2775,7 @@ object SynthQueries {
     // every hash bit, every band key, each bucket's min-id survivor,
     // and the verify-and-merge rule in SQL.
     QueryDef("g122_stream_banded_dedup",
-      (s, d) => streamScoped(s, "g122")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g122", RocksDb: _*) { st =>
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.functions.{coalesce, explode, lit,
           min => fmin, when}
@@ -2834,7 +2837,7 @@ object SynthQueries {
         st.drain(decided, "append", minBatches = 3).groupBy("id")
           .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
             .as("dup_of"))
-      }),
+      },
       Some {
         import graft.queries.DuckXxHash._
         val ch = graft.queries.PipelineQueries.dhashOracleChain(
@@ -2878,7 +2881,7 @@ object SynthQueries {
     // re-arrives later with 1-3 bits flipped, and the oracle replays
     // min-verifying-earlier-member over ALL bucket members in SQL.
     QueryDef("g124_stream_banded_index",
-      (s, d) => streamScoped(s, "g124")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g124", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.{coalesce, explode, expr,
           lit, min => fmin, pmod, when, xxhash64}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -2927,7 +2930,7 @@ object SynthQueries {
         st.drain(decided, "append", minBatches = 3).groupBy("id")
           .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
             .as("dup_of"))
-      }),
+      },
       SynthQueries.bandedIndexOracle),
 
     // CHECKPOINT-RESTART leg for the streaming near-dup INDEX: the
@@ -2942,7 +2945,7 @@ object SynthQueries {
     // watermark/sentinel machinery: the processor runs TimeMode.None
     // and emits per arrival.
     QueryDef("g126_stream_index_restart",
-      (s, d) => streamScoped(s, "g126")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g126", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.{coalesce, explode, expr, lit,
           min => fmin, pmod, when, xxhash64}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -2969,50 +2972,40 @@ object SynthQueries {
         val outDir = st.dir("out").toString
         val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
           .collect()(0).getLong(0) / 2
-        def runIncarnation(): Long = {
-          val banded = s.readStream.schema(fixture.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(streamDir.toString)
-            .select(col("id"), col("ts"), col("sig"),
-              explode(graft.ops.Dedup.streamBandKeys(col("sig"), maxHamming))
-                .as("bkey"))
-            .select(col("bkey"), col("ts"), col("id"), col("sig"))
-            .as[(Long, Long, Long, Long)]
-          val q = banded.groupByKey(_._1)
-            .mapValues(r => (r._2, r._3, r._4))
-            .transformWithState(
-              new graft.streaming.BandedIndexProcessor(maxHamming),
-              TimeMode.None(), OutputMode.Append(),
-              implicitly[org.apache.spark.sql.Encoder[(Long, Long)]])
-            .toDF("id", "cand")
-            .writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ckptDir)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          q.recentProgress.map(_.numInputRows).sum
-        }
+        val cands = s.readStream.schema(fixture.schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(streamDir.toString)
+          .select(col("id"), col("ts"), col("sig"),
+            explode(graft.ops.Dedup.streamBandKeys(col("sig"), maxHamming))
+              .as("bkey"))
+          .select(col("bkey"), col("ts"), col("id"), col("sig"))
+          .as[(Long, Long, Long, Long)]
+          .groupByKey(_._1)
+          .mapValues(r => (r._2, r._3, r._4))
+          .transformWithState(
+            new graft.streaming.BandedIndexProcessor(maxHamming),
+            TimeMode.None(), OutputMode.Append(),
+            implicitly[org.apache.spark.sql.Encoder[(Long, Long)]])
+          .toDF("id", "cand")
         // phase 1: the base corpus only (two id-ordered files)
         StreamFiles.writeMany(
           Seq("a_low" -> fixture.filter(col("id") <= half),
             "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L)),
           streamDir)
-        val rows1 = runIncarnation()
+        val rows1 = st.incarnation(cands, outDir, ckptDir)
         require(rows1 > 0L, "phase 1 processed no rows")
         // phase 2: the twins land; a NEW query resumes from the checkpoint
         val twinRows = fixture.filter(col("id") >= 10000000L).count()
         StreamFiles.writeOne(fixture.filter(col("id") >= 10000000L), streamDir,
           "c_dups")
-        val rows2 = runIncarnation()
+        val rows2 = st.incarnation(cands, outDir, ckptDir)
         require(rows2 == twinRows,
           s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
             s"expected exactly the twins' $twinRows")
-        materialized(s.read.parquet(outDir).groupBy("id")
+        materialized(s.read.schema(cands.schema).parquet(outDir).groupBy("id")
           .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
             .as("dup_of")))
-      }),
+      },
       // the SAME oracle as g124: a restarted index must attribute
       // identically to the uninterrupted run
       SynthQueries.bandedIndexOracle),
@@ -3051,8 +3044,7 @@ object SynthQueries {
     QueryDef("g130_stream_discovery",
       (s, d) => streamScoped(s, "g130") { st =>
         val dir = graft.queries.PipelineQueries.LinkWarcFixture.dir(s, d)
-        val name = st.sinkName
-        val q = s.readStream.format("warc")
+        st.drain(s.readStream.format("warc")
           .option("filesPerBatch", "1")
           // intra-segment parallelism via the CDX sidecars (see
           // warcCdxTarget): without it each micro-batch's whole
@@ -3070,11 +3062,7 @@ object SynthQueries {
               graft.ops.HtmlExtract.extractLinks(col("html"))).as("href"))
           .select(graft.ops.UrlOps.canonicalizeUrl(
             graft.ops.UrlOps.resolveUrl(col("url"), col("href"))).as("curl"))
-          .dropDuplicates("curl")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(name)
+          .dropDuplicates("curl"), "append")
       },
       Some(s"""SELECT DISTINCT ${graft.queries.PipelineQueries.linkCandidateSql}
           AS curl
@@ -3092,7 +3080,7 @@ object SynthQueries {
     // fetch_at_s = (rank-1) * delay — the prefix-sum the carried state
     // must equal over the FULL sequence.
     QueryDef("g131_stream_frontier",
-      (s, d) => streamScoped(s, "g131")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g131", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.{concat, lit, max => fmax, pmod}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
@@ -3124,40 +3112,28 @@ object SynthQueries {
         val streamDir = st.dir("cand")
         val ckptDir = st.dir("ckpt").toString
         val outDir = st.dir("out").toString
-        def runIncarnation(): Long = {
-          val scheduled = s.readStream.schema(cand.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(streamDir.toString)
-            .as[(String, Long, Long, Long)]
-            .groupByKey(_._1)
-            .transformWithState(new graft.streaming.FrontierProcessor,
-              TimeMode.None(), OutputMode.Append(),
-              implicitly[org.apache.spark.sql.Encoder[
-                (Long, String, Long, Long)]])
-            .toDF("id", "host", "seq", "fetch_at_s")
-          val q = scheduled.writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ckptDir)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          q.recentProgress.map(_.numInputRows).sum
-        }
-        val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-        val oldNoData = s.conf.get(noDataKey)
+        val scheduled = s.readStream.schema(cand.schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(streamDir.toString)
+          .as[(String, Long, Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(new graft.streaming.FrontierProcessor,
+            TimeMode.None(), OutputMode.Append(),
+            implicitly[org.apache.spark.sql.Encoder[
+              (Long, String, Long, Long)]])
+          .toDF("id", "host", "seq", "fetch_at_s")
         StreamFiles.writeMany(files.take(2), streamDir)
-        s.conf.set(noDataKey, "false")
-        val rows1 = try runIncarnation() finally s.conf.set(noDataKey, oldNoData)
+        val rows1 = st.withConf(NoDataBatchesOff)(
+          st.incarnation(scheduled, outDir, ckptDir))
         require(rows1 > 0L, "phase 1 processed no rows")
         val tailRows = files(2)._2.count()
         StreamFiles.writeOne(files(2)._2, streamDir, files(2)._1)
-        val rows2 = runIncarnation()
+        val rows2 = st.incarnation(scheduled, outDir, ckptDir)
         require(rows2 == tailRows,
           s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
             s"expected exactly the new file's $tailRows")
-        materialized(s.read.parquet(outDir))
-      }),
+        materialized(s.read.schema(scheduled.schema).parquet(outDir))
+      },
       Some("""WITH c AS (SELECT doc_id,
             (doc_id % 7) % 4 + 1 + (doc_id // 7) % 3 AS delay_s
           FROM documents WHERE doc_id % 11 <> 0)
@@ -3203,16 +3179,11 @@ object SynthQueries {
             .option("path", outDir).option("targetShardBytes", "8388608").save()
         }
         gen(0); gen(1)
-        val name = st.sinkName
-        val q = s.readStream.format("wds")
+        st.drain(s.readStream.format("wds")
           .option("manifestOnly", "true").option("filesPerBatch", "2")
           .option("splitTargetBytes", "4194304")
           .load(outDir)
-          .select(col("key"), col("ext"), col("size"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(name)
+          .select(col("key"), col("ext"), col("size")), "append")
       },
       Some("""SELECT 'w' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS key,
           'txt' AS ext,
@@ -3243,7 +3214,14 @@ object SynthQueries {
     // suffices, the bounded/windowed variants (BandedFirstSeen /
     // BandedWindowIndex, g124/g126/g128) are the capped alternatives.
     QueryDef("g133_stream_crawl_loop",
-      (s, d) => streamScoped(s, "g133")(st => withRocksDb(s) {
+      // TWO stateful operators x state partitions x batches x two
+      // incarnations = the store-commit count; 4 partitions (and the
+      // RocksDb pins' changelog checkpointing: append a delta, not a full
+      // RocksDB snapshot, per commit) keep this rig's fixed cost bounded
+      // while testing exactly the same semantics. No-data batches are
+      // off, so neither incarnation runs a trailing empty batch.
+      (s, d) => streamScoped(s, "g133", RocksDb ++ Seq(NoDataBatchesOff,
+          "spark.sql.shuffle.partitions" -> "4"): _*) { st =>
         import org.apache.spark.sql.functions.{ascii, broadcast, concat,
           explode, lit, pmod, substring, xxhash64}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -3300,78 +3278,53 @@ object SynthQueries {
         val delayDim = materialized(delayDf)
         val ckptDir = st.dir("ckpt").toString
         val outDir = st.dir("out").toString
-        def runIncarnation(): Long = {
-          val scheduled = s.readStream.format("warc")
-            .option("manifestOnly", "true").option("filesPerBatch", "1")
-            // intra-segment parallelism via the CDX sidecars (see
-            // warcCdxTarget): without it each micro-batch's extract
-            // pipeline is one task
-            .option("cdxTargetBytes", warcCdxTarget(warcDir, s).toString)
-            .load(warcDir)
-            .filter(col("http_status") === 200)
-            .select(col("target_uri").as("url"),
-              graft.ops.HtmlExtract.decodePayload(col("payload"),
-                col("http_content_type")).as("html"))
-            .select(col("url"),
-              explode(graft.ops.HtmlExtract.extractLinks(col("html"))).as("href"))
-            .select(graft.ops.UrlOps.canonicalizeUrl(
-              graft.ops.UrlOps.resolveUrl(col("url"), col("href"))).as("curl"))
-            .dropDuplicates("curl") // exactly-once candidates, state #1
-            .join(broadcast(delayDim),
-              graft.ops.UrlOps.canonicalHost(col("curl")) === delayDim("host"))
-            .select(col("host"), xxhash64(col("curl")).as("ord"),
-              xxhash64(col("curl")).as("id"), col("delay_s"))
-            .as[(String, Long, Long, Long)]
-            .groupByKey(_._1)
-            .transformWithState(new graft.streaming.FrontierProcessor,
-              TimeMode.None(), OutputMode.Append(),
-              implicitly[org.apache.spark.sql.Encoder[
-                (Long, String, Long, Long)]]) // state #2, same query
-            .toDF("id", "host", "seq", "fetch_at_s")
-          // default trigger + processAllAvailable + stop: a REAL
-          // restart against the same checkpoint (the AvailableNow
-          // wrapper snapshots this custom source's offsets before the
-          // checkpoint seeds them, so it cannot drive the resume leg)
-          val q = scheduled.writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ckptDir)
-            .outputMode("append")
-            .start()
-          try q.processAllAvailable() finally q.stop()
-          q.recentProgress.map(_.numInputRows).sum
-        }
-        val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-        // TWO stateful operators x state partitions x batches x two
-        // incarnations = the store-commit count; 4 partitions and
-        // changelog checkpointing (append a delta, not a full RocksDB
-        // snapshot, per commit) keep this rig's fixed cost bounded
-        // while testing exactly the same semantics
-        val partsKey = "spark.sql.shuffle.partitions"
-        val clogKey =
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        val olds = Seq(noDataKey, partsKey, clogKey).map(k =>
-          k -> s.conf.getOption(k))
-        s.conf.set(noDataKey, "false")
-        s.conf.set(partsKey, "4")
-        s.conf.set(clogKey, "true")
-        def restore(): Unit = olds.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None)    => s.conf.unset(k)
-        }
-        val rows1 = try runIncarnation() catch { case t: Throwable =>
-          restore(); throw t }
+        // each incarnation is a REAL restart against the same checkpoint:
+        // the warc source implements SupportsTriggerAvailableNow, so the
+        // run ends at the segments listed when it starts and resumes from
+        // the checkpoint-seeded cursor (Spark's wrapper for other sources
+        // would snapshot one filesPerBatch-capped offset instead). A def:
+        // each incarnation sizes its CDX cuts over the segments present
+        // when it starts.
+        def scheduled = s.readStream.format("warc")
+          .option("manifestOnly", "true").option("filesPerBatch", "1")
+          // intra-segment parallelism via the CDX sidecars (see
+          // warcCdxTarget): without it each micro-batch's extract
+          // pipeline is one task
+          .option("cdxTargetBytes", warcCdxTarget(warcDir, s).toString)
+          .load(warcDir)
+          .filter(col("http_status") === 200)
+          .select(col("target_uri").as("url"),
+            graft.ops.HtmlExtract.decodePayload(col("payload"),
+              col("http_content_type")).as("html"))
+          .select(col("url"),
+            explode(graft.ops.HtmlExtract.extractLinks(col("html"))).as("href"))
+          .select(graft.ops.UrlOps.canonicalizeUrl(
+            graft.ops.UrlOps.resolveUrl(col("url"), col("href"))).as("curl"))
+          .dropDuplicates("curl") // exactly-once candidates, state #1
+          .join(broadcast(delayDim),
+            graft.ops.UrlOps.canonicalHost(col("curl")) === delayDim("host"))
+          .select(col("host"), xxhash64(col("curl")).as("ord"),
+            xxhash64(col("curl")).as("id"), col("delay_s"))
+          .as[(String, Long, Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(new graft.streaming.FrontierProcessor,
+            TimeMode.None(), OutputMode.Append(),
+            implicitly[org.apache.spark.sql.Encoder[
+              (Long, String, Long, Long)]]) // state #2, same query
+          .toDF("id", "host", "seq", "fetch_at_s")
+        val rows1 = st.incarnation(scheduled, outDir, ckptDir)
         require(rows1 > 0L, "phase 1 processed no rows")
         val tailRows = writeGen(2)
-        val rows2 = try runIncarnation() finally restore()
+        val rows2 = st.incarnation(scheduled, outDir, ckptDir)
         require(rows2 == tailRows,
           s"restart must resume, not reprocess: phase 2 read $rows2 source " +
             s"rows, expected exactly generation 2's $tailRows")
-        val res = s.read.parquet(outDir)
+        val res = s.read.schema(scheduled.schema).parquet(outDir)
           .join(candBatch.select(col("curl"), xxhash64(col("curl")).as("id")),
             Seq("id"))
           .select(col("curl"), col("host"), col("seq"), col("fetch_at_s"))
         materialized(res)
-      }),
+      },
       Some {
         import graft.queries.DuckXxHash._
         val ch = chain("l",
@@ -3430,34 +3383,33 @@ object SynthQueries {
               col("text").cast("binary").as("payload"))
             .coalesce(1)
             .write.format("warc").mode("append").option("path", warcDir).save()
-        def runIncarnation(): Unit = {
-          val q = s.readStream.format("warc")
-            .option("manifestOnly", "true").option("filesPerBatch", "1")
-            // intra-segment parallelism via the CDX sidecars (see
-            // warcCdxTarget)
-            .option("cdxTargetBytes", warcCdxTarget(warcDir, s).toString)
-            .load(warcDir)
-            .filter(col("http_status") === 200)
-            .select(md5(col("target_uri")).as("key"), col("target_uri"),
-              col("payload"))
-            .select(col("key"),
-              explode(array(
-                struct(lit("txt").as("ext"), col("payload").as("payload")),
-                struct(lit("url").as("ext"),
-                  col("target_uri").cast("binary").as("payload"))))
-                .as("m"))
-            .select(col("key"), col("m.ext").as("ext"),
-              col("m.payload").as("payload"))
-            .writeStream.format("wds")
-            .option("path", outDir).option("checkpointLocation", ckptDir)
-            .option("targetShardBytes", "1048576")
-            .outputMode("append").start()
-          try q.processAllAvailable() finally q.stop()
-        }
+        // one incarnation per call over one checkpoint; each sizes its CDX
+        // cuts over the segments present when it starts
+        def repack(): Unit = st.run(s.readStream.format("warc")
+          .option("manifestOnly", "true").option("filesPerBatch", "1")
+          // intra-segment parallelism via the CDX sidecars (see
+          // warcCdxTarget)
+          .option("cdxTargetBytes", warcCdxTarget(warcDir, s).toString)
+          .load(warcDir)
+          .filter(col("http_status") === 200)
+          .select(md5(col("target_uri")).as("key"), col("target_uri"),
+            col("payload"))
+          .select(col("key"),
+            explode(array(
+              struct(lit("txt").as("ext"), col("payload").as("payload")),
+              struct(lit("url").as("ext"),
+                col("target_uri").cast("binary").as("payload"))))
+              .as("m"))
+          .select(col("key"), col("m.ext").as("ext"),
+            col("m.payload").as("payload"))
+          .writeStream.format("wds")
+          .option("path", outDir).option("checkpointLocation", ckptDir)
+          .option("targetShardBytes", "1048576")
+          .outputMode("append"))
         writeGen(0)
-        runIncarnation()
+        repack()
         writeGen(1) // lands after a REAL stop: the restart must resume
-        runIncarnation()
+        repack()
         val back = s.read.format("wds").option("manifestOnly", "true")
           .load(outDir)
         val spread = back.groupBy("key")
@@ -3495,7 +3447,9 @@ object SynthQueries {
     // scheduled (require-pinned per turn) — the feedback edge is load-
     // bearing, not decorative.
     QueryDef("g135_stream_crawl_feedback",
-      (s, d) => streamScoped(s, "g135")(st => withRocksDb(s) {
+      // the g133 pins: 4 state partitions, no trailing no-data batches
+      (s, d) => streamScoped(s, "g135", RocksDb ++ Seq(NoDataBatchesOff,
+          "spark.sql.shuffle.partitions" -> "4"): _*) { st =>
         import org.apache.spark.sql.functions.{array, ascii, broadcast,
           concat, explode, lit, md5, pmod, substring, when, xxhash64}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -3562,45 +3516,42 @@ object SynthQueries {
         val (t0, h0) = linkPage(urlOf(0, col("i")),
           Seq(urlOf(1, col("i") * 2), urlOf(1, col("i") * 2 + 1)))
         val gen0 = writePages(seeds.select(t0.as("target_uri"), h0.as("html")))
-        def runIncarnation(): Long = {
-          val scheduled = s.readStream.format("warc")
-            .option("manifestOnly", "true").option("filesPerBatch", "1")
-            // intra-segment parallelism via the CDX sidecars (see
-            // warcCdxTarget)
-            .option("cdxTargetBytes", warcCdxTarget(warcDir, s).toString)
-            .load(warcDir)
-            .filter(col("http_status") === 200)
-            .select(col("target_uri").as("url"),
-              graft.ops.HtmlExtract.decodePayload(col("payload"),
-                col("http_content_type")).as("html"))
-            .select(col("url"),
-              explode(graft.ops.HtmlExtract.extractLinks(col("html"))).as("href"))
-            .select(graft.ops.UrlOps.canonicalizeUrl(
-              graft.ops.UrlOps.resolveUrl(col("url"), col("href"))).as("curl"))
-            .dropDuplicates("curl")
-            .join(broadcast(delayDim),
-              graft.ops.UrlOps.canonicalHost(col("curl")) === delayDim("host"))
-            .select(col("host"), xxhash64(col("curl")).as("ord"),
-              xxhash64(col("curl")).as("id"), col("delay_s"))
-            .as[(String, Long, Long, Long)]
-            .groupByKey(_._1)
-            .transformWithState(new graft.streaming.FrontierProcessor,
-              TimeMode.None(), OutputMode.Append(),
-              implicitly[org.apache.spark.sql.Encoder[
-                (Long, String, Long, Long)]])
-            .toDF("id", "host", "seq", "fetch_at_s")
-          val q = scheduled.writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ckptDir)
-            .outputMode("append")
-            .start()
-          try q.processAllAvailable() finally q.stop()
-          q.recentProgress.map(_.numInputRows).sum
-        }
+        // a def: each turn sizes its CDX cuts over the segments present
+        // when it starts
+        def scheduled = s.readStream.format("warc")
+          .option("manifestOnly", "true").option("filesPerBatch", "1")
+          // intra-segment parallelism via the CDX sidecars (see
+          // warcCdxTarget)
+          .option("cdxTargetBytes", warcCdxTarget(warcDir, s).toString)
+          .load(warcDir)
+          .filter(col("http_status") === 200)
+          .select(col("target_uri").as("url"),
+            graft.ops.HtmlExtract.decodePayload(col("payload"),
+              col("http_content_type")).as("html"))
+          .select(col("url"),
+            explode(graft.ops.HtmlExtract.extractLinks(col("html"))).as("href"))
+          .select(graft.ops.UrlOps.canonicalizeUrl(
+            graft.ops.UrlOps.resolveUrl(col("url"), col("href"))).as("curl"))
+          .dropDuplicates("curl")
+          .join(broadcast(delayDim),
+            graft.ops.UrlOps.canonicalHost(col("curl")) === delayDim("host"))
+          .select(col("host"), xxhash64(col("curl")).as("ord"),
+            xxhash64(col("curl")).as("id"), col("delay_s"))
+          .as[(String, Long, Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(new graft.streaming.FrontierProcessor,
+            TimeMode.None(), OutputMode.Append(),
+            implicitly[org.apache.spark.sql.Encoder[
+              (Long, String, Long, Long)]])
+          .toDF("id", "host", "seq", "fetch_at_s")
+        def turn(): Long = st.incarnation(scheduled, outDir, ckptDir)
+        // what the frontier has scheduled so far, read back with the
+        // schema the sink wrote
+        def out = s.read.schema(scheduled.schema).parquet(outDir)
         // the FEEDBACK edge: fetch exactly what the frontier scheduled
         // this turn, emit the next WARC generation into the same dir
         def fetchTurn(depth: Long): Long = {
-          val sched = s.read.parquet(outDir).select(col("id")).distinct()
+          val sched = out.select(col("id")).distinct()
             .join(broadcast(uni), Seq("id"))
             .filter(col("depth") === depth)
           val n = sched.count()
@@ -3617,41 +3568,26 @@ object SynthQueries {
                 lit("<html><body>leaf</body></html>").as("html"))
           writePages(pages)
         }
-        val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-        val partsKey = "spark.sql.shuffle.partitions"
-        val clogKey =
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        val olds = Seq(noDataKey, partsKey, clogKey).map(k =>
-          k -> s.conf.getOption(k))
-        s.conf.set(noDataKey, "false")
-        s.conf.set(partsKey, "4")
-        s.conf.set(clogKey, "true")
-        def restore(): Unit = olds.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None)    => s.conf.unset(k)
-        }
-        try {
-          val rows1 = runIncarnation() // turn 1: discover+schedule d1
-          require(rows1 == gen0, s"turn 1 read $rows1 pages, expected $gen0")
-          val fetched1 = fetchTurn(1L) // feedback: fetch what was scheduled
-          val rows2 = runIncarnation() // turn 2: resume, discover d2
-          require(rows2 == fetched1,
-            s"restart must resume, not reprocess: turn 2 read $rows2, " +
-              s"expected exactly generation 1's $fetched1")
-          val fetched2 = fetchTurn(2L)
-          val rows3 = runIncarnation() // turn 3: leaves drain the loop
-          require(rows3 == fetched2,
-            s"turn 3 read $rows3 source rows, expected $fetched2")
-          val total = s.read.parquet(outDir).select(col("id")).distinct().count()
-          require(total == dcount(1L) + dcount(2L),
-            s"loop did not drain cleanly: $total scheduled vs " +
-              s"${dcount(1L) + dcount(2L)} candidates")
-        } finally restore()
-        val res = s.read.parquet(outDir)
+        val rows1 = turn() // turn 1: discover+schedule d1
+        require(rows1 == gen0, s"turn 1 read $rows1 pages, expected $gen0")
+        val fetched1 = fetchTurn(1L) // feedback: fetch what was scheduled
+        val rows2 = turn() // turn 2: resume, discover d2
+        require(rows2 == fetched1,
+          s"restart must resume, not reprocess: turn 2 read $rows2, " +
+            s"expected exactly generation 1's $fetched1")
+        val fetched2 = fetchTurn(2L)
+        val rows3 = turn() // turn 3: leaves drain the loop
+        require(rows3 == fetched2,
+          s"turn 3 read $rows3 source rows, expected $fetched2")
+        val total = out.select(col("id")).distinct().count()
+        require(total == dcount(1L) + dcount(2L),
+          s"loop did not drain cleanly: $total scheduled vs " +
+            s"${dcount(1L) + dcount(2L)} candidates")
+        val res = out
           .join(uni.select(col("curl"), col("id")), Seq("id"))
           .select(col("curl"), col("host"), col("seq"), col("fetch_at_s"))
         materialized(res)
-      }),
+      },
       Some {
         import graft.queries.DuckXxHash._
         val ch = chain("l",
@@ -3689,13 +3625,12 @@ object SynthQueries {
     // because each digest has exactly one original, so the resolved
     // set replays as a plain relational join.
     QueryDef("g136_stream_revisit",
-      (s, d) => streamScoped(s, "g136")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g136", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.md5
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
         val dir = graft.queries.PipelineQueries.RevisitStreamFixture.dir(s, d)
-        val name = st.sinkName
-        val q = s.readStream.format("warc")
+        st.drain(s.readStream.format("warc")
           .option("filesPerBatch", "1")
           .load(dir)
           .select(col("payload_digest"), col("warc_type"),
@@ -3708,12 +3643,8 @@ object SynthQueries {
               (String, String, Array[Byte])]])
           .toDF("record_id", "revisit_of", "payload")
           .select(col("record_id"), col("revisit_of"),
-            md5(col("payload")).as("payload_md5"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(name)
-      }),
+            md5(col("payload")).as("payload_md5")), "append")
+      },
       Some("""WITH d AS (SELECT doc_id AS id FROM documents),
         refs AS (SELECT id,
             CASE WHEN id % 5 = 2 THEN id - 1 ELSE id + 3 END AS ref
@@ -3732,17 +3663,12 @@ object SynthQueries {
       (s, d) => streamScoped(s, "g129") { st =>
         import org.apache.spark.sql.functions.md5
         val warcDir = graft.queries.PipelineQueries.WarcSinkFixture.dir(s, d)
-        val name = st.sinkName
-        val q = s.readStream.format("warc")
+        st.drain(s.readStream.format("warc")
           .option("filesPerBatch", "1")
           .load(warcDir)
           .filter(col("http_status") === 200)
           .select(col("record_id"), col("target_uri"),
-            md5(col("payload")).as("payload_md5"), col("payload_len"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(name)
+            md5(col("payload")).as("payload_md5"), col("payload_len")), "append")
       },
       Some("""SELECT 'urn:graft:' || CAST(doc_id AS VARCHAR) AS record_id,
           'https://w' || CAST(doc_id % 5 AS VARCHAR) || '.example.com/d/' ||
@@ -3752,7 +3678,7 @@ object SynthQueries {
         FROM documents WHERE doc_id % 9 <> 0 AND doc_id % 7 <> 0""")),
 
     QueryDef("g128_stream_index_window",
-      (s, d) => streamScoped(s, "g128")(st => withRocksDb(s) {
+      (s, d) => streamScoped(s, "g128", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.{coalesce, explode, expr, lit,
           min => fmin, pmod, when, xxhash64, max => fmax}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -3803,7 +3729,7 @@ object SynthQueries {
         st.drain(decided, "append", minBatches = 3).groupBy("id")
           .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
             .as("dup_of"))
-      }),
+      },
       SynthQueries.bandedWindowOracle),
 
     // Avro record-writer breadth with a FULL bit oracle: fast-path

@@ -273,13 +273,18 @@ object Quantization {
   }
 
   /** Drop the index's tombstoned rows (broadcast anti-join against the
-    * [[deleteFromHashIvfIndex]] set); identity when nothing was deleted.
+    * [[deleteFromHashIvfIndex]] set); identity when nothing was deleted,
+    * which an existence check on the Hadoop FileSystem tells without a
+    * read of the missing dir.
     */
-  private def live(spark: SparkSession, path: String): DataFrame => DataFrame =
-    try {
-      val tomb = spark.read.parquet(s"$path/tombstones").distinct()
+  private def live(spark: SparkSession, path: String): DataFrame => DataFrame = {
+    val tombDir = s"$path/tombstones"
+    if (!graft.sources.ArchiveFs.exists(tombDir)) identity
+    else {
+      val tomb = spark.read.parquet(tombDir).distinct()
       _.join(broadcast(tomb), tomb.columns.toSeq, "left_anti")
-    } catch { case _: org.apache.spark.sql.AnalysisException => identity }
+    }
+  }
 
   /** Serve from a [[writeHashIvfIndex]] index: probe the nProbe best
     * pseudo-centroids per query (exact integer ranking,

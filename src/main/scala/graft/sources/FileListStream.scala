@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
+  ReadLimit, SupportsTriggerAvailableNow}
 
 /** Shared micro-batch machinery for archive-directory ingestion (WARC
   * segments, WebDataset tar shards): offsets are positions in a
@@ -12,9 +13,18 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
   * reordering of ingested history fails loudly instead of silently
   * skewing replay). Subclasses supply the listing and the per-file
   * partition planning.
+  *
+  * Trigger.AvailableNow drives the stream itself: the run's end is the
+  * listing length when the query starts, reached in batches of at most
+  * `filesPerBatch` files from the checkpoint-seeded cursor. Spark's
+  * wrapper for sources without [[SupportsTriggerAvailableNow]] would
+  * instead snapshot the end through the capped, stateful
+  * `latestOffset()`, so a run would read one batch's worth of files and
+  * stop.
   */
 abstract class FileListMicroBatchStream(filesPerBatch: Int,
-    metadataPath: String = null) extends MicroBatchStream {
+    metadataPath: String = null)
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
   require(filesPerBatch >= 1, s"filesPerBatch must be >= 1: $filesPerBatch")
 
   /** The current stable-ordered file list (empty = nothing yet). */
@@ -71,15 +81,29 @@ abstract class FileListMicroBatchStream(filesPerBatch: Int,
 
   override def initialOffset(): Offset = FileListOffset(0L, "")
 
+  // the listing length when an AvailableNow run started; None under
+  // any other trigger
+  private var runEnd: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    runEnd = Some(current().length.toLong)
+
   override def latestOffset(): Offset = {
     val fs = current()
     validate(fs, latestOff) // committed history must survive verbatim
-    val n = math.min(fs.length.toLong, latestOff.n + filesPerBatch)
+    val end = runEnd.fold(fs.length.toLong)(math.min(fs.length.toLong, _))
+    val n = math.min(end, latestOff.n + filesPerBatch)
     val next = offsetAt(fs, n)
     if (next.n > latestOff.n) writeCursor(next)
     latestOff = next
     latestOff
   }
+
+  /** The engine's admission-controlled entry point: the same capped
+    * advance as `latestOffset()`, whatever `limit` the trigger asks for.
+    */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    latestOffset()
 
   override def deserializeOffset(json: String): Offset = {
     val i = json.indexOf('\t')

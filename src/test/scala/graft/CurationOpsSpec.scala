@@ -209,4 +209,17 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(got("a") == ((100L, 50L, 90L, 99L)))
     assert(got("b") == ((1L, 42L, 42L, 42L)))
   }
+
+  test("qualitySignals length and token columns equal q25's at sf0.001") {
+    val d = "/root/testdata/sf0.001"
+    val cols = Seq("doc_id", "len_chars", "n_tokens", "avg_token_len_milli")
+    val q25 = graft.queries.PipelineQueries.q25_quality_score.fn(spark, d)
+    val got = TextAnalysis.qualitySignals(
+      graft.runtime.Tables.read(spark, d, "documents"), "text")
+      .select(cols.map(col): _*)
+    assert(q25.columns.toSeq == cols)
+    assert(got.count() == q25.count() && got.count() > 0)
+    assert(got.exceptAll(q25).isEmpty && q25.exceptAll(got).isEmpty,
+      "qualitySignals diverged from q25's inline columns")
+  }
 }

@@ -13,6 +13,16 @@ class ProcessorsSpec extends AnyFunSuite {
   import spark.implicits._
   private def orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
 
+  test("toJsonLines rows parse back with from_json to the source rows") {
+    val src = orders
+    val lines = Processors.toJsonLines(src)
+    assert(lines.columns.toSeq == Seq("json"))
+    val back = lines.select(from_json(col("json"), src.schema).as("r")).select("r.*")
+    assert(back.count() == src.count())
+    assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty,
+      "a JSON line did not parse back to its source row")
+  }
+
   test("correlator embeds 1..k sampled records per input row") {
     val out = Processors.correlate(orders.limit(100),
       """[{"name": "device", "class": "uuid"}]""", "corr", maxFanOut = 4)

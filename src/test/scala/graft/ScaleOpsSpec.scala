@@ -557,6 +557,54 @@ class ScaleOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("hash-IVF serve reads tombstones only when the index has them") {
+    IvfTestKit.withTempDirs { tmp =>
+      import graft.ops.Quantization
+      import org.apache.logging.log4j.{Level, LogManager}
+      import org.apache.logging.log4j.core.{LogEvent, Logger}
+      import org.apache.logging.log4j.core.appender.AbstractAppender
+      import org.apache.logging.log4j.core.config.Property
+      val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      val queries = df.filter(col("vec_id") % 50 === 0)
+      val dir = tmp("hivf_tomb")
+      Quantization.writeHashIvfIndex(df, "vec_id", "embedding", dir, 8)
+      def serve() = Quantization.hashIvfTopKFromIndex(
+        dir, queries, "vec_id", "embedding", 10, numClusters = 8, nProbe = 2)
+      // a read of the missing dir logs FileStreamSink's metadata-probe
+      // WARN (a FileNotFoundException naming the path) before it fails
+      val mentions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val probe = new AbstractAppender("tombstone-probe", null, null, true,
+          Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit = {
+          val text = e.getMessage.getFormattedMessage +
+            Option(e.getThrown).fold("")(_.toString)
+          if (text.contains("tombstones")) mentions.add(text)
+        }
+      }
+      val sinkLog = LogManager.getLogger(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
+        .asInstanceOf[Logger]
+      val oldLevel = sinkLog.getLevel
+      probe.start()
+      sinkLog.addAppender(probe)
+      sinkLog.setLevel(Level.WARN)
+      val fresh = try serve() finally {
+        sinkLog.removeAppender(probe)
+        sinkLog.setLevel(oldLevel)
+        probe.stop()
+      }
+      assert(mentions.isEmpty,
+        s"serving an index without deletes touched its tombstones: $mentions")
+      assert(fresh.filter(col("neighbor") % 5 === 1).count() > 0)
+      Quantization.deleteFromHashIvfIndex(dir,
+        df.filter(col("vec_id") % 5 === 1).select("vec_id"))
+      val after = serve()
+      assert(after.count() > 0)
+      assert(after.filter(col("neighbor") % 5 === 1).count() === 0,
+        "a deleted id was served")
+    }
+  }
+
   test("jl projection: bit-exact vs local XXH64 replay, planted near-pairs stay near") {
     import graft.ops.Quantization
     import org.apache.spark.sql.catalyst.expressions.XXH64

@@ -2,10 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the streaming-rig fold from growing back: the events symlink
-  * and the AvailableNow memory-sink drain each live in one helper of
-  * `SynthQueries` (SparkEntry.scala), and nanosAsLong is set in one
-  * place in all of `src/main` (graft.runtime.Tables).
+/** Keeps the streaming-rig fold from growing back. In `SynthQueries`
+  * (SparkEntry.scala) the events symlink, the memory-sink drain, the
+  * parquet file-sink incarnation and the conf save/restore loop each
+  * live in one helper of `streamScoped`/`StreamScope`, and every rig
+  * runs under the scope's one AvailableNow run step, so no
+  * `processAllAvailable` is left. nanosAsLong is set in one place in
+  * all of `src/main` (graft.runtime.Tables).
   */
 class StreamRigGuardSpec extends AnyFunSuite {
 
@@ -35,9 +38,29 @@ class StreamRigGuardSpec extends AnyFunSuite {
   }
 
   test("memory sinks go through the one drain") {
-    // the drain plus the four processAllAvailable rigs (g129, g130, g132,
-    // g136), whose custom sources the AvailableNow wrapper cannot drive
     val n = occurrences("""format("memory")""")
-    assert(n <= 5, s"$n memory-sink sites; drain through StreamScope.drain")
+    assert(n <= 1, s"$n memory-sink sites; drain through StreamScope.drain")
+  }
+
+  test("every rig runs under the scope's AvailableNow run step") {
+    val n = occurrences("processAllAvailable()")
+    assert(n == 0, s"$n processAllAvailable sites; run through StreamScope.run")
+  }
+
+  test("checkpointed sinks go through the one incarnation") {
+    // StreamScope.incarnation plus g134's wds sink
+    val n = occurrences("\"checkpointLocation\"")
+    assert(n <= 2, s"$n checkpointLocation sites; use StreamScope.incarnation")
+  }
+
+  test("RocksDB pins are streamScoped pairs") {
+    assert(occurrences("def withRocksDb") == 0,
+      "pass the RocksDb pins to streamScoped instead")
+  }
+
+  test("conf pins go through the scope's one save/restore loop") {
+    // the loop's set and its restore
+    val n = occurrences("conf.set(")
+    assert(n <= 2, s"$n conf.set sites; pin through streamScoped or StreamScope.withConf")
   }
 }

@@ -8,9 +8,12 @@ class WarcStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkSessionFixture.spark
   import spark.implicits._
 
-  /** n segment files named to sort in write order, k records each. */
-  private def writeSegments(dir: String, n: Int, perFile: Int): Unit = {
-    for (f <- 0 until n) {
+  /** n segment files named to sort in write order, k records each;
+    * numbering starts at segment `from`.
+    */
+  private def writeSegments(dir: String, n: Int, perFile: Int,
+      from: Int = 0): Unit = {
+    for (f <- from until from + n) {
       val fos = new WarcIo.CountingOutputStream(
         new java.io.FileOutputStream(f"$dir/seg-$f%03d.warc.gz"))
       val cdx = new java.lang.StringBuilder()
@@ -105,6 +108,37 @@ class WarcStreamSpec extends AnyFunSuite {
     } finally {
       q.stop()
       spark.catalog.dropTempView(name)
+    }
+  }
+
+  test("AvailableNow incarnations over one checkpoint: all present files, then only new ones") {
+    import org.apache.spark.sql.streaming.Trigger
+    IvfTestKit.withTempDirs { tmp =>
+      val dir = tmp("warcstream_an")
+      val ckpt = tmp("warcstream_an_ckpt")
+      val out = tmp("warcstream_an_out")
+      // one incarnation: the input rows of each micro-batch that read any
+      def incarnation(): Seq[Long] = {
+        val q = spark.readStream.format("warc").option("filesPerBatch", "2")
+          .load(dir).select("record_id")
+          .writeStream.format("parquet")
+          .option("path", out).option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+      }
+      def ids(): Seq[String] =
+        spark.read.parquet(out).as[String].collect().sorted.toSeq
+      writeSegments(dir, 3, 4)
+      val first = incarnation()
+      assert(first.sum === 12L, s"first incarnation read $first of 3 files x 4")
+      assert(first.forall(_ <= 8L), s"a batch read more than 2 files: $first")
+      assert(ids() === (0 until 12).map(i => s"urn:s:$i").sorted)
+      writeSegments(dir, 3, 4, from = 3) // land after the first stopped
+      val second = incarnation()
+      assert(second.sum === 12L, s"second incarnation read $second, not the 3 new files")
+      assert(second.forall(_ <= 8L), s"a batch read more than 2 files: $second")
+      assert(ids() === (0 until 24).map(i => s"urn:s:$i").sorted)
     }
   }
 }
