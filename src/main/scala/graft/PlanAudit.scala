@@ -26,8 +26,8 @@ object PlanAudit {
   // self-joins all carry equi-keys (band/sig) beside the a < b filter, so
   // they must plan as hash or sort-merge joins. NOTE the audit sees the
   // bucket join directly only for g47 (simHashPairs returns the lazy
-  // plan); g46/g48 localCheckpoint their results, so their audited plan
-  // is a checkpoint scan — their join shape is pinned by the
+  // plan); g46/g48 end in a Barrier.cut, so their audited plan is a
+  // checkpoint scan — their join shape is pinned by the
   // bucket-self-join plan test in OpsSpec instead.
   private val nestedLoopAllowed = Set(
     "q27_ann_cosine_topk", // deliberate: broadcast query side vs all vectors

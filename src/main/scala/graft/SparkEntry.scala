@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{PipelineQueries, Queries, QueryDef}
-import graft.runtime.{BuildOnce, Staging, Tables}
+import graft.runtime.{Barrier, BuildOnce, Staging, Tables}
 import scala.util.chaining._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -3252,22 +3252,18 @@ object SynthQueries {
         // materialized once: the candidate map is reused by the final
         // id -> curl join, and the delay dim feeds a STREAM-STATIC
         // join, where an unmaterialized static side would re-derive
-        // this whole extract pipeline EVERY micro-batch
-        val candBatch = Tables.read(s, d, "documents")
-          .select(col("doc_id").cast("long").as("doc_id"))
-          // spread the HTML render + link extraction over the cluster:
-          // a single-file scan is ONE partition (one parquet row group
-          // at bench SFs), which serialized this 2 s pipeline on one
-          // core (the Dedup.minHashSignatures spread, same rationale)
-          .repartition(s.sparkContext.defaultParallelism)
+        // this whole extract pipeline EVERY micro-batch. The spread
+        // carries the HTML render + link extraction (this 2 s pipeline
+        // ran on one core unspread).
+        val candBatch = Barrier.cut(Barrier.spread(Tables.read(s, d, "documents")
+          .select(col("doc_id").cast("long").as("doc_id")))
           .select(graft.queries.PipelineQueries.linkFixtureBase(did).as("__base"),
             graft.ops.HtmlExtract.extractLinks(
               graft.queries.PipelineQueries.linkFixtureHtml(did)).as("__ls"))
           .select(col("__base"), explode(col("__ls")).as("href"))
           .select(graft.ops.UrlOps.canonicalizeUrl(
             graft.ops.UrlOps.resolveUrl(col("__base"), col("href"))).as("curl"))
-          .distinct()
-          .localCheckpoint(true)
+          .distinct())
         val delayDf = candBatch
           .select(graft.ops.UrlOps.canonicalHost(col("curl")).as("host"))
           .distinct()

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Connected components over a near-duplicate pair list — the step that
   * turns (a, b) similarity edges into dedup decisions: every document
@@ -26,61 +27,56 @@ object Clusters {
     * Returns (id, cluster) for every id that appears in any edge;
     * cluster = min id of its connected component.
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val edges = pairs.select(col("a").cast("long"), col("b").cast("long"))
-      .union(pairs.select(col("b").cast("long").as("a"), col("a").cast("long").as("b")))
-      .distinct()
-      .persist()
-    var labels = edges.select(col("a").as("id"))
-      .distinct()
-      .withColumn("cluster", col("id"))
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
+    Barrier.scoped { scope =>
+      val edges = scope.persist(pairs.select(col("a").cast("long"), col("b").cast("long"))
+        .union(pairs.select(col("b").cast("long").as("a"), col("a").cast("long").as("b")))
+        .distinct())
       // each round references `labels` three times (neighbor join, the
       // left join, and the pointer-jump self-join), so lineage would grow
-      // EXPONENTIALLY in round count without truncation — localCheckpoint
-      // resets the plan to a leaf every round. Executor-local storage: a
-      // lost executor fails the query where persist(DISK_ONLY) would
-      // recover — acceptable for an iterative loop that simply re-runs.
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      // each node's new label = min(own, min over neighbors' labels).
-      // The joined frame carries both old and new labels, so the
-      // convergence count comes from the SAME materialized frame as the
-      // label update — one aggregate action per round, not an extra
-      // next-vs-labels join re-shuffling the full label table.
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "b").withColumnRenamed("cluster", "nc"), "b")
-        .groupBy(col("a").as("id"))
-        .agg(min("nc").as("neighbor_min"))
-      val stepped = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"), col("cluster").as("old"),
-          least(col("cluster"), coalesce(col("neighbor_min"), col("cluster")))
-            .as("cluster"))
-      // pointer jump: follow the adopted label one hop (labels are node
-      // ids, so every label resolves in `stepped` itself). The left join
-      // always matches; coalesce only guards the self-label row shape.
-      val joined = stepped
-        .join(stepped.select(col("id").as("__pid"), col("cluster").as("__pc")),
-          stepped("cluster") === col("__pid"), "left")
-        .select(col("id"), col("old"),
-          least(col("cluster"), coalesce(col("__pc"), col("cluster"))).as("cluster"))
-        .localCheckpoint(true)
-      val changed = joined.filter(col("cluster") < col("old")).count()
-      labels = joined.select(col("id"), col("cluster"))
-      converged = changed == 0
-      iter += 1
+      // EXPONENTIALLY in round count without truncation — the cut resets
+      // the plan to a leaf every round
+      var labels = Barrier.cut(edges.select(col("a").as("id"))
+        .distinct()
+        .withColumn("cluster", col("id")))
+      var iter = 0
+      var converged = false
+      while (iter < maxIters && !converged) {
+        // each node's new label = min(own, min over neighbors' labels).
+        // The joined frame carries both old and new labels, so the
+        // convergence count comes from the SAME materialized frame as the
+        // label update — one aggregate action per round, not an extra
+        // next-vs-labels join re-shuffling the full label table.
+        val neighborMin = edges
+          .join(labels.withColumnRenamed("id", "b").withColumnRenamed("cluster", "nc"), "b")
+          .groupBy(col("a").as("id"))
+          .agg(min("nc").as("neighbor_min"))
+        val stepped = labels.join(neighborMin, Seq("id"), "left")
+          .select(col("id"), col("cluster").as("old"),
+            least(col("cluster"), coalesce(col("neighbor_min"), col("cluster")))
+              .as("cluster"))
+        // pointer jump: follow the adopted label one hop (labels are node
+        // ids, so every label resolves in `stepped` itself). The left join
+        // always matches; coalesce only guards the self-label row shape.
+        val joined = Barrier.cut(stepped
+          .join(stepped.select(col("id").as("__pid"), col("cluster").as("__pc")),
+            stepped("cluster") === col("__pid"), "left")
+          .select(col("id"), col("old"),
+            least(col("cluster"), coalesce(col("__pc"), col("cluster"))).as("cluster")))
+        val changed = joined.filter(col("cluster") < col("old")).count()
+        labels = joined.select(col("id"), col("cluster"))
+        converged = changed == 0
+        iter += 1
+      }
+      // silent non-convergence would return SPLIT clusters (multiple
+      // "canonical" survivors per true duplicate class) — fail loudly
+      if (!converged) {
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIters rounds " +
+            "(graph diameter too large — raise maxIters)")
+      }
+      labels
     }
-    edges.unpersist()
-    // silent non-convergence would return SPLIT clusters (multiple
-    // "canonical" survivors per true duplicate class) — fail loudly
-    if (!converged) {
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds " +
-          "(graph diameter too large — raise maxIters)")
-    }
-    labels
-  }
 
   /** Full near-dup dedup decision: run LSH, cluster the verified pairs,
     * and return every doc with its cluster and a keep flag (the minimum

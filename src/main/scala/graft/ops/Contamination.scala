@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Benchmark decontamination: flag training documents that share word
   * n-grams with an evaluation/benchmark set — the standard guard
@@ -24,26 +25,21 @@ object Contamination {
   def ngramHits(corpus: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, n: Int = 8): DataFrame = {
     require(n >= 1, s"n must be positive: $n")
-    // persist barriers: see Dedup.shinglesFromTokens — without them the
-    // optimizer re-inlines the split into every lambda element_at
-    val cTok = corpus
-      .select(col(idCol).as("__id"), split(lower(col(textCol)), " ").as("__w"))
-      .persist()
-    val bTok = bench
-      .select(split(lower(col(textCol)), " ").as("__w"))
-      .persist()
-    // shinglesFromTokens is per-doc distinct, so (id, shingle) rows are
-    // unique and count(*) below counts distinct shared shingles
-    val cSh = cTok.select(col("__id"),
-      explode(Dedup.shinglesFromTokens(col("__w"), n)).as("__sh"))
-    val bSh = bTok.select(explode(Dedup.shinglesFromTokens(col("__w"), n)).as("__sh"))
-      .distinct()
-    val out = cSh.join(broadcast(bSh), "__sh")
-      .groupBy("__id").agg(count(lit(1)).as("n_hits"))
-      .select(col("__id").as(idCol), col("n_hits"))
-      .localCheckpoint(true)
-    cTok.unpersist()
-    bTok.unpersist()
-    out
+    Barrier.scoped { scope =>
+      // persist barriers keep the split out of every shingle lambda
+      val cTok = scope.persist(corpus
+        .select(col(idCol).as("__id"), split(lower(col(textCol)), " ").as("__w")))
+      val bTok = scope.persist(bench
+        .select(split(lower(col(textCol)), " ").as("__w")))
+      // shinglesFromTokens is per-doc distinct, so (id, shingle) rows are
+      // unique and count(*) below counts distinct shared shingles
+      val cSh = cTok.select(col("__id"),
+        explode(Dedup.shinglesFromTokens(col("__w"), n)).as("__sh"))
+      val bSh = bTok.select(explode(Dedup.shinglesFromTokens(col("__w"), n)).as("__sh"))
+        .distinct()
+      Barrier.cut(cSh.join(broadcast(bSh), "__sh")
+        .groupBy("__id").agg(count(lit(1)).as("n_hits"))
+        .select(col("__id").as(idCol), col("n_hits")))
+    }
   }
 }

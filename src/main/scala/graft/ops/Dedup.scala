@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.runtime.Barrier
 
 /** Deduplication operators for training-data pipelines, each written for
   * the 100 TB shape:
@@ -205,77 +206,61 @@ object Dedup {
         require(numHashes % bands == 0, "bands must divide numHashes")
         (bands, numHashes / bands)
       } else chooseBanding(numHashes, threshold)
-    // the signature compute is heavy per row: spread it over the cluster
-    // even when the input is one small file (a single-file scan is ONE
-    // partition, serializing everything downstream)
-    val spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    // persist() is a CollapseProject barrier: without it the optimizer
-    // inlines the split back into every lambda element_at (no CSE inside
-    // lambdas) and the shingle stage goes quadratic in text length
-    val tokens = spread
-      .select(col(idCol).as("__id"), split(lower(trim(col(textCol))), "\\s+").as("__w"))
-      .persist()
-    // native sketch expressions when GraftExtensions is registered: the
-    // per-row k×|shingles| minhash loop runs as one codegen'd primitive
-    // loop instead of k interpreted transform/array_min lambdas. Both
-    // lowerings produce identical signatures (same xxhash64 folds).
-    val native = df.sparkSession.catalog.functionExists("minhash_sigs")
-    val withSh = tokens
-      .select(col("__id"), shinglesFromTokens(col("__w"), shingleWords).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .withColumn("__hs",
-        if (native) call_function("hash64_array", col("__sh"))
-        else transform(col("__sh"), s => xxhash64(s)))
-      .persist()
-    // minhash_j = min over pre-hashed shingles of remix(hash, salt_j)
-    val signed =
-      if (native)
-        withSh.select(col("__id"),
-          call_function("minhash_sigs", col("__hs"), lit(numHashes)).as("__ms"))
-      else {
-        val sigs = (0 until numHashes).map(j =>
-          array_min(transform(col("__hs"), h => xxhash64(h, lit(j)))).as(s"__m$j"))
-        withSh.select((col("__id") +: sigs): _*)
+    Barrier.scoped { scope =>
+      // the signature compute is heavy per row; the token persist keeps
+      // the split out of every shingle lambda (see Barrier)
+      val tokens = scope.persist(Barrier.spread(df)
+        .select(col(idCol).as("__id"), split(lower(trim(col(textCol))), "\\s+").as("__w")))
+      // native sketch expressions when GraftExtensions is registered: the
+      // per-row k×|shingles| minhash loop runs as one codegen'd primitive
+      // loop instead of k interpreted transform/array_min lambdas. Both
+      // lowerings produce identical signatures (same xxhash64 folds).
+      val native = df.sparkSession.catalog.functionExists("minhash_sigs")
+      val withSh = scope.persist(tokens
+        .select(col("__id"), shinglesFromTokens(col("__w"), shingleWords).as("__sh"))
+        .filter(size(col("__sh")) > 0)
+        .withColumn("__hs",
+          if (native) call_function("hash64_array", col("__sh"))
+          else transform(col("__sh"), s => xxhash64(s))))
+      // minhash_j = min over pre-hashed shingles of remix(hash, salt_j)
+      val signed =
+        if (native)
+          withSh.select(col("__id"),
+            call_function("minhash_sigs", col("__hs"), lit(numHashes)).as("__ms"))
+        else {
+          val sigs = (0 until numHashes).map(j =>
+            array_min(transform(col("__hs"), h => xxhash64(h, lit(j)))).as(s"__m$j"))
+          withSh.select((col("__id") +: sigs): _*)
+        }
+      def sigAt(j: Int): Column =
+        if (native) element_at(col("__ms"), j + 1) else col(s"__m$j")
+      val bandKeys = (0 until nBands).map { b =>
+        val slice = (0 until rowsPerBand).map(r => sigAt(b * rowsPerBand + r))
+        struct(lit(b).as("band"), xxhash64(slice: _*).as("sig"))
       }
-    def sigAt(j: Int): Column =
-      if (native) element_at(col("__ms"), j + 1) else col(s"__m$j")
-    val bandKeys = (0 until nBands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => sigAt(b * rowsPerBand + r))
-      struct(lit(b).as("band"), xxhash64(slice: _*).as("sig"))
+      val buckets = scope.persist(signed
+        .select(col("__id"), explode(array(bandKeys: _*)).as("__bk"))
+        .select(col("__id"), col("__bk.band"), col("__bk.sig")))
+      val candidates = buckets.as("x")
+        .join(buckets.as("y"),
+          col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
+            col("x.__id") < col("y.__id"))
+        .select(col("x.__id").as("a"), col("y.__id").as("b"))
+        .dropDuplicates("a", "b")
+      // verify on the hashed shingle sets (8-byte longs): same Jaccard as
+      // the string sets up to hash collisions (~2^-64 per pair), and the
+      // intersect runs on primitive comparisons instead of string equality
+      val shMap = withSh.select(col("__id"), col("__hs"))
+      val result = candidates
+        .join(shMap.select(col("__id").as("a"), col("__hs").as("sha")), "a")
+        .join(shMap.select(col("__id").as("b"), col("__hs").as("shb")), "b")
+        .withColumn("__common", size(array_intersect(col("sha"), col("shb"))))
+        .withColumn("jaccard",
+          col("__common") / (size(col("sha")) + size(col("shb")) - col("__common")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("a"), col("b"), col("jaccard"))
+      Barrier.cut(result)
     }
-    val buckets = signed
-      .select(col("__id"), explode(array(bandKeys: _*)).as("__bk"))
-      .select(col("__id"), col("__bk.band"), col("__bk.sig"))
-      .persist()
-    val candidates = buckets.as("x")
-      .join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-          col("x.__id") < col("y.__id"))
-      .select(col("x.__id").as("a"), col("y.__id").as("b"))
-      .dropDuplicates("a", "b")
-    // verify on the hashed shingle sets (8-byte longs): same Jaccard as
-    // the string sets up to hash collisions (~2^-64 per pair), and the
-    // intersect runs on primitive comparisons instead of string equality
-    val shMap = withSh.select(col("__id"), col("__hs"))
-    val result = candidates
-      .join(shMap.select(col("__id").as("a"), col("__hs").as("sha")), "a")
-      .join(shMap.select(col("__id").as("b"), col("__hs").as("shb")), "b")
-      .withColumn("__common", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("jaccard",
-        col("__common") / (size(col("sha")) + size(col("shb")) - col("__common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
-    // the intermediates above are cached barriers (CollapseProject would
-    // re-inline the split into lambda bodies — measured 4x slower without
-    // them). Materialize the small pair result eagerly and free them, so
-    // repeated calls don't pin dead cache in executor storage.
-    // (executor-local, non-replicated — see exactShinglePairs for the
-    // cluster-loss tradeoff and the reliable-checkpoint alternative)
-    val out = result.localCheckpoint(true)
-    tokens.unpersist()
-    withSh.unpersist()
-    buckets.unpersist()
-    out
   }
 
   /** Default document-frequency cap for [[exactShinglePairs]] posting
@@ -310,48 +295,33 @@ object Dedup {
       shingleWords: Int = 3, minCommon: Int = 2,
       maxDf: Int = DefaultMaxShingleDf): DataFrame = {
     require(maxDf >= 2, s"maxDf $maxDf < 2 would drop every pair-capable shingle")
-    // persist() barrier: without it CollapseProject inlines the split into
-    // every lambda element_at (no CSE inside lambdas) and the shingle
-    // stage re-splits the text per element — measured quadratic in doc
-    // length. The repartition spreads the shingle hashing over the
-    // cluster even when the input is one small file (single-file scan =
-    // ONE partition; see minHashSignatures above for the same spread).
-    val tokens = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("__id"), split(lower(col(textCol)), " ").as("__w"))
-      .persist()
-    val sh = tokens
-      .select(col("__id"), explode(shinglesFromTokens(col("__w"), shingleWords)).as("__sh"))
-    // df cap: one full-partition window count keyed by shingle — the
-    // self-join below shuffles on the same key, so EnsureRequirements
-    // reuses this exchange instead of adding one
-    val capped = sh
-      .withColumn("__df", count(lit(1)).over(Window.partitionBy("__sh")))
-      .filter(col("__df") <= maxDf)
-      .select(col("__id"), col("__sh"))
-    val sizes = capped.groupBy("__id").agg(count(lit(1)).as("__n"))
-    val pairs = capped.as("x")
-      .join(capped.as("y"),
-        col("x.__sh") === col("y.__sh") && col("x.__id") < col("y.__id"))
-      .groupBy(col("x.__id").as("a"), col("y.__id").as("b"))
-      .agg(count(lit(1)).as("common"))
-      .filter(col("common") >= minCommon)
-    val result = pairs
-      .join(sizes.select(col("__id").as("a"), col("__n").as("na")), "a")
-      .join(sizes.select(col("__id").as("b"), col("__n").as("nb")), "b")
-      .select(col("a"), col("b"), col("common"), col("na"), col("nb"))
-    // localCheckpoint(eager): materializes the small pair set so the
-    // token cache (a correctness barrier, see above) can be freed without
-    // the plan re-splitting on a later action. TRADEOFF: checkpoint
-    // blocks live in executor-local (non-replicated) block-manager
-    // storage — on a multi-executor cluster a lost executor fails the
-    // query instead of recomputing. Acceptable for a short-lived pair
-    // set; for long-lived results on a real cluster set
-    // spark.checkpoint.dir and use .checkpoint(true) (reliable storage)
-    // instead.
-    val out = result.localCheckpoint(true)
-    tokens.unpersist()
-    out
+    Barrier.scoped { scope =>
+      // spread shingle hashing; the token persist keeps the split out of
+      // every shingle lambda (see Barrier)
+      val tokens = scope.persist(Barrier.spread(df)
+        .select(col(idCol).as("__id"), split(lower(col(textCol)), " ").as("__w")))
+      val sh = tokens
+        .select(col("__id"), explode(shinglesFromTokens(col("__w"), shingleWords)).as("__sh"))
+      // df cap: one full-partition window count keyed by shingle — the
+      // self-join below shuffles on the same key, so EnsureRequirements
+      // reuses this exchange instead of adding one
+      val capped = sh
+        .withColumn("__df", count(lit(1)).over(Window.partitionBy("__sh")))
+        .filter(col("__df") <= maxDf)
+        .select(col("__id"), col("__sh"))
+      val sizes = capped.groupBy("__id").agg(count(lit(1)).as("__n"))
+      val pairs = capped.as("x")
+        .join(capped.as("y"),
+          col("x.__sh") === col("y.__sh") && col("x.__id") < col("y.__id"))
+        .groupBy(col("x.__id").as("a"), col("y.__id").as("b"))
+        .agg(count(lit(1)).as("common"))
+        .filter(col("common") >= minCommon)
+      val result = pairs
+        .join(sizes.select(col("__id").as("a"), col("__n").as("na")), "a")
+        .join(sizes.select(col("__id").as("b"), col("__n").as("nb")), "b")
+        .select(col("a"), col("b"), col("common"), col("na"), col("nb"))
+      Barrier.cut(result)
+    }
   }
 
   /** 64-bit SimHash of the token stream: bit k of the signature is the
@@ -392,7 +362,7 @@ object Dedup {
     */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
-    val sig = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    val sig = Barrier.spread(df)
       .select(col(idCol).as("__id"),
         simhashCol(textCol,
           native = df.sparkSession.catalog.functionExists("simhash64")).as("__sig"))
@@ -479,51 +449,48 @@ object Dedup {
     require(nTables >= 1, s"nTables $nTables must be positive")
     val v = col("__v")
     val native = df.sparkSession.catalog.functionExists("srp_sig")
-    val base = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("__id"),
-        col(vecCol).cast("array<double>").as("__v"))
-      .persist()
-    // sign bit (t, j): dot(v, h_tj) where h_tj[i] = ±1 from hash(seed, t, j, i).
-    // Native srp_sig (one codegen'd nBits×dim loop) when GraftExtensions
-    // is registered; the interpreted per-bit aggregate/zip_with chain
-    // otherwise — identical signatures either way.
-    def tableSig(t: Int): Column =
-      if (native) call_function("srp_sig", v, lit(seed), lit(t), lit(nBits))
-      else (0 until nBits).map { j =>
-        val dot = aggregate(
-          zip_with(v, sequence(lit(0), size(v) - 1), (x, i) =>
-            when(xxhash64(lit(seed), lit(t), lit(j), i).bitwiseAND(lit(1L)) === 1L, x)
-              .otherwise(-x)),
-          lit(0d), (a, x) => a + x)
-        when(dot >= 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
-      }.reduce((a, b) => a.bitwiseOR(b))
-    // buckets carry only (id, table, sig): vectors stay out of the
-    // nTables-way fan-out and the self-join shuffle
-    val buckets = base.select(col("__id"), explode(array((0 until nTables).map(t =>
-        struct(lit(t).as("t"), tableSig(t).as("sig"))): _*)).as("__bk"))
-      .select(col("__id"), col("__bk.t").as("__t"), col("__bk.sig").as("__sig"))
-      .persist()
-    val candidates = buckets.as("x")
-      .join(buckets.as("y"),
-        col("x.__t") === col("y.__t") && col("x.__sig") === col("y.__sig") &&
-          col("x.__id") < col("y.__id"))
-      .select(col("x.__id").as("a"), col("y.__id").as("b"))
-      .dropDuplicates("a", "b") // the any-table union: verify each pair ONCE
-    val vecs = base.select(col("__id"), col("__v"))
-    val joined = candidates
-      .join(vecs.select(col("__id").as("a"), col("__v").as("__va")), "a")
-      .join(vecs.select(col("__id").as("b"), col("__v").as("__vb")), "b")
-    // Similarity.cosine: native fused cosine_sim when available, HOF
-    // otherwise; maps zero-norm NaN to -1 (NaN >= threshold is TRUE in
-    // Spark's ordering — they would pair with everything)
-    val result = joined
-      .withColumn("cosine", Similarity.cosine(joined, col("__va"), col("__vb")))
-      .filter(col("cosine") >= threshold)
-      .select(col("a"), col("b"), col("cosine"))
-    // executor-local checkpoint — see exactShinglePairs for the tradeoff
-    val out = result.localCheckpoint(true)
-    base.unpersist()
-    buckets.unpersist()
-    out
+    Barrier.scoped { scope =>
+      val base = scope.persist(Barrier.spread(df)
+        .select(col(idCol).as("__id"),
+          col(vecCol).cast("array<double>").as("__v")))
+      // sign bit (t, j): dot(v, h_tj) where h_tj[i] = ±1 from hash(seed, t, j, i).
+      // Native srp_sig (one codegen'd nBits×dim loop) when GraftExtensions
+      // is registered; the interpreted per-bit aggregate/zip_with chain
+      // otherwise — identical signatures either way.
+      def tableSig(t: Int): Column =
+        if (native) call_function("srp_sig", v, lit(seed), lit(t), lit(nBits))
+        else (0 until nBits).map { j =>
+          val dot = aggregate(
+            zip_with(v, sequence(lit(0), size(v) - 1), (x, i) =>
+              when(xxhash64(lit(seed), lit(t), lit(j), i).bitwiseAND(lit(1L)) === 1L, x)
+                .otherwise(-x)),
+            lit(0d), (a, x) => a + x)
+          when(dot >= 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
+        }.reduce((a, b) => a.bitwiseOR(b))
+      // buckets carry only (id, table, sig): vectors stay out of the
+      // nTables-way fan-out and the self-join shuffle
+      val buckets = scope.persist(base
+        .select(col("__id"), explode(array((0 until nTables).map(t =>
+          struct(lit(t).as("t"), tableSig(t).as("sig"))): _*)).as("__bk"))
+        .select(col("__id"), col("__bk.t").as("__t"), col("__bk.sig").as("__sig")))
+      val candidates = buckets.as("x")
+        .join(buckets.as("y"),
+          col("x.__t") === col("y.__t") && col("x.__sig") === col("y.__sig") &&
+            col("x.__id") < col("y.__id"))
+        .select(col("x.__id").as("a"), col("y.__id").as("b"))
+        .dropDuplicates("a", "b") // the any-table union: verify each pair ONCE
+      val vecs = base.select(col("__id"), col("__v"))
+      val joined = candidates
+        .join(vecs.select(col("__id").as("a"), col("__v").as("__va")), "a")
+        .join(vecs.select(col("__id").as("b"), col("__v").as("__vb")), "b")
+      // Similarity.cosine: native fused cosine_sim when available, HOF
+      // otherwise; maps zero-norm NaN to -1 (NaN >= threshold is TRUE in
+      // Spark's ordering — they would pair with everything)
+      val result = joined
+        .withColumn("cosine", Similarity.cosine(joined, col("__va"), col("__vb")))
+        .filter(col("cosine") >= threshold)
+        .select(col("a"), col("b"), col("cosine"))
+      Barrier.cut(result)
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Exact substring deduplication: remove every token span of >= L
   * tokens whose text occurs more than once in the corpus (at any
@@ -86,100 +87,92 @@ object ExactSubstrDedup {
       bloomMinDup: Long = BloomAutoThreshold): DataFrame = {
     require(minTokens >= 2, s"minTokens must be >= 2: $minTokens")
     val l = minTokens
-    // persist barrier: one tokenization shared by the gram explode and
-    // the final kept-text projection (see SpanDedup.spanDedupReport).
-    // The repartition spreads the per-token md5 gram hashing and the
-    // cleaned-text rebuild over the cluster even when the input is one
-    // small file — a single-file scan is ONE partition (one parquet row
-    // group at bench SFs), serializing ~2/3 of this operator's CPU on
-    // one core (measured: two >1 s single-task stages at sf0.1). Same
-    // rationale and shape as Dedup.minHashSignatures' spread.
-    val tokens = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("doc_id"),
-        split(coalesce(col(textCol), lit("")), " ").as("__ws"))
-      .persist()
-    val occ = tokens
-      .select(col("doc_id"), gramFps(col("__ws"), l).as("__fps"))
-      .select(col("doc_id"), posexplode(col("__fps")).as(Seq("__pos", "fp")))
-      .select(col("doc_id"), (col("__pos") + 1).as("i"), col("fp"))
-    // the gram census is a map-side-combinable COUNT: its shuffle
-    // carries (fp, partial count) per distinct gram per partition,
-    // never positions
-    val dupFps = occ.groupBy("fp").agg(count(lit(1)).as("__cnt"))
-      .filter(col("__cnt") >= 2).select("fp").persist()
-    val nDup = dupFps.count()
-    // position-shuffle cut (r12 verdict ask #5): the join on fp used to
-    // ship EVERY (doc_id, i, fp) position (~28 B/token) even though a
-    // natural corpus's grams are overwhelmingly unique. A Bloom filter
-    // over the DUPLICATED grams (small by construction) prunes the
-    // position stream MAP-SIDE, so unique grams never enter the join
-    // shuffle; the exact join then re-verifies the ~1% false positives.
-    // Sized ~12 bits/dup-gram, capped at 16 Mbit (2 MB plan literal) —
-    // past the cap the fpr degrades gracefully and the exact join
-    // still keeps the answer right.
-    val dupStarts =
-      if (!bloomPrune || (nDup > 0 && nDup < bloomMinDup))
-        // small dup side (or A/B baseline): the join broadcasts, the
-        // position stream never shuffles — a Bloom would be overhead
-        occ.join(dupFps, "fp")
-          .groupBy("doc_id").agg(array_sort(collect_list(col("i"))).as("__xs"))
-      else if (nDup == 0)
-        // no duplicated gram anywhere in the corpus: ship nothing
-        occ.filter(lit(false))
-          .groupBy("doc_id").agg(array_sort(collect_list(col("i"))).as("__xs"))
-      else {
-        val mBits = {
-          val want = math.min(nDup * 12L, 1L << 24)
-          math.max(64L, (want + 63) / 64 * 64).toInt
+    Barrier.scoped { scope =>
+      // persist barrier: one tokenization shared by the gram explode and
+      // the final kept-text projection (see SpanDedup.spanDedupReport).
+      // The spread carries the per-token md5 gram hashing and the
+      // cleaned-text rebuild, ~2/3 of this operator's CPU.
+      val tokens = scope.persist(Barrier.spread(df)
+        .select(col(idCol).as("doc_id"),
+          split(coalesce(col(textCol), lit("")), " ").as("__ws")))
+      val occ = tokens
+        .select(col("doc_id"), gramFps(col("__ws"), l).as("__fps"))
+        .select(col("doc_id"), posexplode(col("__fps")).as(Seq("__pos", "fp")))
+        .select(col("doc_id"), (col("__pos") + 1).as("i"), col("fp"))
+      // the gram census is a map-side-combinable COUNT: its shuffle
+      // carries (fp, partial count) per distinct gram per partition,
+      // never positions
+      val dupFps = scope.persist(occ.groupBy("fp").agg(count(lit(1)).as("__cnt"))
+        .filter(col("__cnt") >= 2).select("fp"))
+      val nDup = dupFps.count()
+      // position-shuffle cut (r12 verdict ask #5): the join on fp used to
+      // ship EVERY (doc_id, i, fp) position (~28 B/token) even though a
+      // natural corpus's grams are overwhelmingly unique. A Bloom filter
+      // over the DUPLICATED grams (small by construction) prunes the
+      // position stream MAP-SIDE, so unique grams never enter the join
+      // shuffle; the exact join then re-verifies the ~1% false positives.
+      // Sized ~12 bits/dup-gram, capped at 16 Mbit (2 MB plan literal) —
+      // past the cap the fpr degrades gracefully and the exact join
+      // still keeps the answer right.
+      val dupStarts =
+        if (!bloomPrune || (nDup > 0 && nDup < bloomMinDup))
+          // small dup side (or A/B baseline): the join broadcasts, the
+          // position stream never shuffles — a Bloom would be overhead
+          occ.join(dupFps, "fp")
+            .groupBy("doc_id").agg(array_sort(collect_list(col("i"))).as("__xs"))
+        else if (nDup == 0)
+          // no duplicated gram anywhere in the corpus: ship nothing
+          occ.filter(lit(false))
+            .groupBy("doc_id").agg(array_sort(collect_list(col("i"))).as("__xs"))
+        else {
+          val mBits = {
+            val want = math.min(nDup * 12L, 1L << 24)
+            math.max(64L, (want + 63) / 64 * 64).toInt
+          }
+          val k = math.max(1, math.min(8,
+            math.round(0.7 * mBits / nDup.toDouble).toInt))
+          val bits = Bloom.buildBits(dupFps, "fp", mBits, k)
+          // sorted duplicate start positions per doc; (doc, i) is unique
+          // so no distinct needed. Array size is bounded by the doc.
+          Bloom.prune(occ, "fp", bits, mBits, k).join(dupFps, "fp")
+            .groupBy("doc_id").agg(array_sort(collect_list(col("i"))).as("__xs"))
         }
-        val k = math.max(1, math.min(8,
-          math.round(0.7 * mBits / nDup.toDouble).toInt))
-        val bits = Bloom.buildBits(dupFps, "fp", mBits, k)
-        // sorted duplicate start positions per doc; (doc, i) is unique
-        // so no distinct needed. Array size is bounded by the doc.
-        Bloom.prune(occ, "fp", bits, mBits, k).join(dupFps, "fp")
-          .groupBy("doc_id").agg(array_sort(collect_list(col("i"))).as("__xs"))
-      }
 
-    val ws = col("__ws")
-    val xs = coalesce(col("__xs"), array().cast("array<int>"))
-    val k = size(xs)
-    // sequence(1, 0) DESCENDS in Spark — guard the no-duplicates case
-    val idxs = when(k >= 1, sequence(lit(1), k))
-      .otherwise(array().cast("array<int>"))
-    // runs of overlapping coverage: starts x1 < x2 produce one merged
-    // interval iff x2 <= x1 + L (their [x, x+L-1] windows touch); ends
-    // are monotone in the sorted starts, so run j spans
-    // [xs(startIdx_j), xs(endIdx_j) + L - 1]. Neighbor peeks use the
-    // 0-based get() (null out of range) — element_at throws under ANSI.
-    val runStartIdx = filter(idxs, j =>
-      (j === 1) || (element_at(xs, j) > get(xs, j - 2) + l))
-    val runEndIdx = filter(idxs, j =>
-      (j === k) || (get(xs, j) > element_at(xs, j) + l))
-    val intervals = zip_with(runStartIdx, runEndIdx, (a, b) =>
-      struct(element_at(xs, a).as("s"), (element_at(xs, b) + (l - 1)).as("e")))
-    // gaps between the merged intervals (plus the flanks) are the kept
-    // segments; materialize __iv as an attribute first so the gap and
-    // stat projections share one interval computation
-    val out = tokens.join(dupStarts, Seq("doc_id"), "left")
-      .select(col("doc_id"), ws, intervals.as("__iv"))
-      .select(col("doc_id"), ws,
-        col("__iv"),
-        concat(array(lit(1)), transform(col("__iv"), iv => iv.getField("e") + 1)).as("__gs"),
-        concat(transform(col("__iv"), iv => iv.getField("s") - 1), array(size(ws))).as("__ge"))
-      .select(col("doc_id"),
-        size(ws).cast("long").as("n_tokens"),
-        aggregate(col("__iv"), lit(0),
-          (acc, iv) => acc + iv.getField("e") - iv.getField("s") + 1)
-          .cast("long").as("n_dropped"),
-        size(col("__iv")).cast("long").as("n_dup_spans"),
-        md5(array_join(flatten(zip_with(col("__gs"), col("__ge"), (a, b) =>
-          when(b >= a, slice(ws, a, b - a + 1))
-            .otherwise(array().cast("array<string>")))), " ")).as("clean_md5"))
-    val checkpointed = out.localCheckpoint(true)
-    tokens.unpersist()
-    dupFps.unpersist()
-    checkpointed
+      val ws = col("__ws")
+      val xs = coalesce(col("__xs"), array().cast("array<int>"))
+      val k = size(xs)
+      // sequence(1, 0) DESCENDS in Spark — guard the no-duplicates case
+      val idxs = when(k >= 1, sequence(lit(1), k))
+        .otherwise(array().cast("array<int>"))
+      // runs of overlapping coverage: starts x1 < x2 produce one merged
+      // interval iff x2 <= x1 + L (their [x, x+L-1] windows touch); ends
+      // are monotone in the sorted starts, so run j spans
+      // [xs(startIdx_j), xs(endIdx_j) + L - 1]. Neighbor peeks use the
+      // 0-based get() (null out of range) — element_at throws under ANSI.
+      val runStartIdx = filter(idxs, j =>
+        (j === 1) || (element_at(xs, j) > get(xs, j - 2) + l))
+      val runEndIdx = filter(idxs, j =>
+        (j === k) || (get(xs, j) > element_at(xs, j) + l))
+      val intervals = zip_with(runStartIdx, runEndIdx, (a, b) =>
+        struct(element_at(xs, a).as("s"), (element_at(xs, b) + (l - 1)).as("e")))
+      // gaps between the merged intervals (plus the flanks) are the kept
+      // segments; materialize __iv as an attribute first so the gap and
+      // stat projections share one interval computation
+      Barrier.cut(tokens.join(dupStarts, Seq("doc_id"), "left")
+        .select(col("doc_id"), ws, intervals.as("__iv"))
+        .select(col("doc_id"), ws,
+          col("__iv"),
+          concat(array(lit(1)), transform(col("__iv"), iv => iv.getField("e") + 1)).as("__gs"),
+          concat(transform(col("__iv"), iv => iv.getField("s") - 1), array(size(ws))).as("__ge"))
+        .select(col("doc_id"),
+          size(ws).cast("long").as("n_tokens"),
+          aggregate(col("__iv"), lit(0),
+            (acc, iv) => acc + iv.getField("e") - iv.getField("s") + 1)
+            .cast("long").as("n_dropped"),
+          size(col("__iv")).cast("long").as("n_dup_spans"),
+          md5(array_join(flatten(zip_with(col("__gs"), col("__ge"), (a, b) =>
+            when(b >= a, slice(ws, a, b - a + 1))
+              .otherwise(array().cast("array<string>")))), " ")).as("clean_md5")))
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.runtime.Barrier
 
 /** Iterative link analysis over an edge list — the graph-analytics
   * complement to the connected-components labeler (ops/Clusters): where
@@ -42,25 +43,24 @@ object Graph {
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     import org.apache.spark.sql.expressions.Window
-    val und = edges.select(col("a"), col("b"))
-      .union(edges.select(col("b").as("a"), col("a").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = und.select(col("a").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-    val w = Window.partitionBy("id").orderBy(col("c").desc, col("label"))
-    for (_ <- 1 to iters) {
-      labels = und
-        .join(labels.select(col("id").as("b"), col("label")), "b")
-        .select(col("a").as("id"), col("label"))
-        .groupBy("id", "label").agg(count(lit(1)).as("c"))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("id"), col("label"))
+    Barrier.scoped { scope =>
+      val und = scope.persist(edges.select(col("a"), col("b"))
+        .union(edges.select(col("b").as("a"), col("a").as("b"))),
+        StorageLevel.MEMORY_AND_DISK)
+      var labels = und.select(col("a").as("id")).distinct()
+        .select(col("id"), col("id").as("label"))
+      val w = Window.partitionBy("id").orderBy(col("c").desc, col("label"))
+      for (_ <- 1 to iters) {
+        labels = und
+          .join(labels.select(col("id").as("b"), col("label")), "b")
+          .select(col("a").as("id"), col("label"))
+          .groupBy("id", "label").agg(count(lit(1)).as("c"))
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1)
+          .select(col("id"), col("label"))
+      }
+      Barrier.cut(labels.select(col("id").as("node_id"), col("label").as("community")))
     }
-    val out = labels.select(col("id").as("node_id"), col("label").as("community"))
-      .localCheckpoint(true)
-    und.unpersist()
-    out
   }
 
   /** Deterministic integer PageRank. `edges` must have (src: long,

@@ -5,6 +5,7 @@ import java.awt.image.BufferedImage
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.runtime.Barrier
 
 /** Perceptual image deduplication via difference hash (dHash).
   *
@@ -328,14 +329,12 @@ object ImageDedup {
     */
   def dHashPairs(df: DataFrame, idCol: String, binCol: String,
       maxHamming: Int = 0): DataFrame = {
-    // localCheckpoint: the banding self-join references the hashed frame
-    // twice — without the barrier every PNG decodes twice. Signatures
-    // are 16 bytes/row, so the checkpoint is id-space-sized, not
-    // payload-sized.
-    val hashed = dHash(df, binCol)
+    // cut: the banding self-join references the hashed frame twice —
+    // without the barrier every PNG decodes twice. Signatures are 16
+    // bytes/row, so the checkpoint is id-space-sized, not payload-sized.
+    val hashed = Barrier.cut(dHash(df, binCol)
       .filter(col(s"${binCol}_dhash").isNotNull)
-      .select(col(idCol), col(s"${binCol}_dhash"))
-      .localCheckpoint(true)
+      .select(col(idCol), col(s"${binCol}_dhash")))
     Dedup.bandedHammingPairs(hashed, idCol, s"${binCol}_dhash", maxHamming)
   }
 }

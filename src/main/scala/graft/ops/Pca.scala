@@ -2,13 +2,14 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Principal component analysis over an embedding column, built the way
   * it scales to 100 TB: the fit's distributed passes are aggregations
   * (the d×d Gram matrix, the column sums) whose map-side combinable sums
   * shuffle partitions × d rows regardless of corpus size; the Gram pass
-  * first spreads the input over `defaultParallelism` partitions with one
-  * round-robin exchange, which moves each vector once. The O(d³)
+  * first spreads the input with [[graft.runtime.Barrier.spread]] (one
+  * round-robin exchange, which moves each vector once). The O(d³)
   * eigensolve runs driver-side on the d×d result (d = 64 here; bounded
   * by the embedding width, never the corpus), and the projection is a
   * scan-side broadcast dot product.
@@ -43,14 +44,11 @@ object Pca {
     val dim = df.select(size(col(vecCol))).head().getInt(0)
     // stage the quantized vector as an attribute: lambdas reference it
     // twice and Catalyst does not CSE inside lambda bodies — inline, the
-    // cast+round tree would re-run per product row (the q68 lesson)
-    // the repartition spreads the O(d²) per-row outer products over the
-    // cluster even when the input is one small file (single-file scan =
-    // ONE partition; the Dedup.minHashSignatures spread, same rationale
-    // — 4096 multiplies/row dwarf the vector-bytes exchange, and the
-    // partial aggregation still combines map-side after it)
-    val rows = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    // cast+round tree would re-run per product row (the q68 lesson).
+    // The spread carries the O(d²) per-row outer products (4096
+    // multiplies/row dwarf the vector-bytes exchange, and the partial
+    // aggregation still combines map-side after it).
+    val rows = Barrier.spread(df)
       .select(transform(col(vecCol).cast("array<double>"),
         x => round(x * 1000000d).cast("long")).as("__qv"))
       .select(posexplode(transform(col("__qv"),

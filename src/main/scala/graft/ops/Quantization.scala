@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Scalar int8 quantization of embedding columns — the standard memory
   * lever for ANN at 100 TB: a float32 corpus shrinks 4× (plus one scale
@@ -323,9 +324,8 @@ object Quantization {
     * materialized — each sign is re-derived from the hash on both use
     * and replay, so the projection is a codegen'd expression: no UDF, no
     * broadcast, and bit-exact in any engine with the same hash (the q74
-    * oracle). It runs after one round-robin exchange that spreads the
-    * input over `defaultParallelism` partitions; there is no other
-    * shuffle.
+    * oracle). It runs after one [[graft.runtime.Barrier.spread]] (a
+    * round-robin exchange); there is no other shuffle.
     *
     * Why it matters at 100 TB: clustering / dedup / ANN prefilters on
     * the 8-dim projection touch 8× fewer bytes than the 64-dim corpus,
@@ -348,12 +348,9 @@ object Quantization {
           x * (lit(1L) - lit(2L) * xxhash64(lit(j.toLong), i).bitwiseAND(lit(1L)))),
         lit(0L), (acc, z) => acc + z)
     }: _*)
-    // the repartition spreads the per-(row, j, i) xxhash64 sign-chain
-    // evaluation over the cluster even when the input is one small file
-    // (single-file scan = ONE partition; the Dedup.minHashSignatures
-    // spread, same rationale — the per-row hash work dwarfs the
-    // vector-bytes exchange)
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    // the spread carries the per-(row, j, i) xxhash64 sign chain, whose
+    // per-row hash work dwarfs the vector-bytes exchange
+    Barrier.spread(df)
       .select(col(idCol), posexplode(projections).as(Seq("__j", "proj")))
       .select(col(idCol), col("__j").cast("long").as("j"), col("proj"))
   }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.runtime.Barrier
 
 /** Sparse (BM25-family) retrieval and dense/sparse rank fusion — the
   * query-side surface of a training-data / RAG pipeline over the same
@@ -39,42 +40,41 @@ object Retrieval {
       queries: DataFrame): DataFrame = {
     val tokens = df.select(col(idCol).as("__doc"),
       explode(split(lower(col(textCol)), " ")).as("__t"))
-    val tf = tokens.groupBy("__doc", "__t").agg(count(lit(1)).as("__tf")).persist()
-    val dl = tf.groupBy("__doc").agg(sum("__tf").as("__dl"))
-    // BOUNDED collect: one row, two corpus scalars (N, sum dl) — inlined
-    // as literals; a constant-key broadcast join would fold to a nested
-    // loop (same tradeoff as Sampling's quantile cuts)
-    val r = dl.agg(count(lit(1)).as("n"), sum("__dl").as("s")).collect()(0)
-    val (n, sumDl) = (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    require(n > 0, "empty corpus")
-    val avgdl = sumDl.toDouble / n.toDouble // IEEE division, replayed as
-    // CAST(sum AS DOUBLE)/CAST(count AS DOUBLE) in the oracle
-    val q = broadcast(queries.select(col("qid"), col("term").as("__t")))
-    // df census AFTER a semi-join on the query terms: counting first
-    // would aggregate the ENTIRE vocabulary (billions of distinct grams
-    // at 100 TB) and then discard all but the handful of query terms —
-    // the semi-join prunes tf map-side, so the census shuffle carries
-    // only query-term partial counts. Same (__t, __df) rows: the census
-    // per term is over all docs either way.
-    val dfq = broadcast(
-      tf.join(broadcast(queries.select(col("term").as("__t")).distinct()),
-          Seq("__t"), "left_semi")
-        .groupBy("__t").agg(count(lit(1)).as("__df")))
-    val scored = tf.join(q, "__t").join(dfq, "__t").join(dl, "__doc")
-    val idf = (lit(n.toDouble) - col("__df").cast("double") + lit(0.5)) /
-      (col("__df").cast("double") + lit(0.5))
-    val sat = (col("__tf").cast("double") * lit(2.2)) /
-      (col("__tf").cast("double") +
-        lit(1.2) * (lit(0.25) + lit(0.75) * (col("__dl").cast("double") / lit(avgdl))))
-    val contrib = floor(lit(1000000.0) * (idf * sat)).cast("long")
-    val out = scored
-      .select(col("qid"), col("__doc"), contrib.as("__c"))
-      .groupBy("qid", "__doc")
-      .agg(sum("__c").as("score_micro"))
-      .select(col("qid"), col("__doc").as(idCol), col("score_micro"))
-      .localCheckpoint(true) // free the tf barrier once scored
-    tf.unpersist()
-    out
+    Barrier.scoped { scope =>
+      val tf = scope.persist(tokens.groupBy("__doc", "__t").agg(count(lit(1)).as("__tf")))
+      val dl = tf.groupBy("__doc").agg(sum("__tf").as("__dl"))
+      // BOUNDED collect: one row, two corpus scalars (N, sum dl) — inlined
+      // as literals; a constant-key broadcast join would fold to a nested
+      // loop (same tradeoff as Sampling's quantile cuts)
+      val r = dl.agg(count(lit(1)).as("n"), sum("__dl").as("s")).collect()(0)
+      val (n, sumDl) = (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      require(n > 0, "empty corpus")
+      val avgdl = sumDl.toDouble / n.toDouble // IEEE division, replayed as
+      // CAST(sum AS DOUBLE)/CAST(count AS DOUBLE) in the oracle
+      val q = broadcast(queries.select(col("qid"), col("term").as("__t")))
+      // df census AFTER a semi-join on the query terms: counting first
+      // would aggregate the ENTIRE vocabulary (billions of distinct grams
+      // at 100 TB) and then discard all but the handful of query terms —
+      // the semi-join prunes tf map-side, so the census shuffle carries
+      // only query-term partial counts. Same (__t, __df) rows: the census
+      // per term is over all docs either way.
+      val dfq = broadcast(
+        tf.join(broadcast(queries.select(col("term").as("__t")).distinct()),
+            Seq("__t"), "left_semi")
+          .groupBy("__t").agg(count(lit(1)).as("__df")))
+      val scored = tf.join(q, "__t").join(dfq, "__t").join(dl, "__doc")
+      val idf = (lit(n.toDouble) - col("__df").cast("double") + lit(0.5)) /
+        (col("__df").cast("double") + lit(0.5))
+      val sat = (col("__tf").cast("double") * lit(2.2)) /
+        (col("__tf").cast("double") +
+          lit(1.2) * (lit(0.25) + lit(0.75) * (col("__dl").cast("double") / lit(avgdl))))
+      val contrib = floor(lit(1000000.0) * (idf * sat)).cast("long")
+      Barrier.cut(scored
+        .select(col("qid"), col("__doc"), contrib.as("__c"))
+        .groupBy("qid", "__doc")
+        .agg(sum("__c").as("score_micro"))
+        .select(col("qid"), col("__doc").as(idCol), col("score_micro")))
+    }
   }
 
   /** Per-query rank (1-based) by (ord desc, id asc) — bounded-heap

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Deterministic corpus sampling for training-data curation.
   *
@@ -290,41 +291,38 @@ object Sampling {
       targetBytes: Long, nBuckets: Int = 256): DataFrame = {
     require(targetBytes >= 1, s"targetBytes must be positive: $targetBytes")
     require(nBuckets >= 1, s"nBuckets must be positive: $nBuckets")
-    // persist: phase 1 (totals collect) and phase 2 (the returned window
-    // plan) both consume this frame — without the barrier an expensive
-    // upstream lineage would be recomputed twice (the SemanticDedup
-    // persist convention)
-    val bucketed = df
-      .withColumn("__bytes", bytesCol.cast("long"))
-      .withColumn("__b", pmod(col(idCol).cast("long"), lit(nBuckets.toLong)).cast("int"))
-      .persist()
-    // phase 1: BOUNDED collect — nBuckets totals, never corpus rows. The
-    // same job counts null ids/bytes: a null id has no bucket and a null
-    // size breaks the cumulative line, so both are hard errors HERE
-    // rather than silent NULL shards downstream.
-    val agg = bucketed.groupBy("__b").agg(sum("__bytes").as("t"),
-      sum(when(col("__bytes").isNull, 1L).otherwise(0L)).as("nulls"))
-      .collect()
-    val badBytes = agg.map(_.getLong(2)).sum
-    val nullIds = agg.filter(_.isNullAt(0))
-    require(badBytes == 0, s"byteBalancedShards: $badBytes rows with null " +
-      "bytes (coalesce the size column first)")
-    require(nullIds.isEmpty, s"byteBalancedShards: rows with null $idCol")
-    val totals = agg.map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until nBuckets)
-      .scanLeft(0L)((acc, b) => acc + totals.getOrElse(b, 0L)).init
-    // phase 2: within-bucket exclusive prefix + the bucket's offset
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__b").orderBy(col(idCol))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val out = bucketed
-      .withColumn("__cum",
-        sum(col("__bytes")).over(w) - col("__bytes") +
-          element_at(array(offsets.map(lit): _*), col("__b") + 1))
-      .withColumn("shard", expr(s"__cum div ${targetBytes}L"))
-      .select(col(idCol), col("__bytes").as("bytes"), col("shard"))
-      .localCheckpoint(true) // cuts lineage off `bucketed`, so it can be
-    bucketed.unpersist()     // released NOW instead of leaking for the JVM
-    out                      // lifetime (SemanticDedup convention)
+    Barrier.scoped { scope =>
+      // persist: phase 1 (totals collect) and phase 2 (the window plan)
+      // both consume this frame — without the barrier an expensive
+      // upstream lineage would be recomputed twice
+      val bucketed = scope.persist(df
+        .withColumn("__bytes", bytesCol.cast("long"))
+        .withColumn("__b", pmod(col(idCol).cast("long"), lit(nBuckets.toLong)).cast("int")))
+      // phase 1: BOUNDED collect — nBuckets totals, never corpus rows. The
+      // same job counts null ids/bytes: a null id has no bucket and a null
+      // size breaks the cumulative line, so both are hard errors HERE
+      // rather than silent NULL shards downstream.
+      val agg = bucketed.groupBy("__b").agg(sum("__bytes").as("t"),
+        sum(when(col("__bytes").isNull, 1L).otherwise(0L)).as("nulls"))
+        .collect()
+      val badBytes = agg.map(_.getLong(2)).sum
+      val nullIds = agg.filter(_.isNullAt(0))
+      require(badBytes == 0, s"byteBalancedShards: $badBytes rows with null " +
+        "bytes (coalesce the size column first)")
+      require(nullIds.isEmpty, s"byteBalancedShards: rows with null $idCol")
+      val totals = agg.map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val offsets = (0 until nBuckets)
+        .scanLeft(0L)((acc, b) => acc + totals.getOrElse(b, 0L)).init
+      // phase 2: within-bucket exclusive prefix + the bucket's offset
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("__b").orderBy(col(idCol))
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+      Barrier.cut(bucketed
+        .withColumn("__cum",
+          sum(col("__bytes")).over(w) - col("__bytes") +
+            element_at(array(offsets.map(lit): _*), col("__b") + 1))
+        .withColumn("shard", expr(s"__cum div ${targetBytes}L"))
+        .select(col(idCol), col("__bytes").as("bytes"), col("shard")))
+    }
   }
 }

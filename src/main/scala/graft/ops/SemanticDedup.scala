@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Semantic (embedding-space) deduplication, SemDeDup-style (Abbas et
   * al. 2023, arXiv:2303.09540): cluster the corpus, then look for
@@ -31,15 +32,11 @@ object SemanticDedup {
   def hashClusterAssign(
       vectors: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame =
     // CORPUS-side assignment: spread the k-centroid scoring (k × dim
-    // multiply-adds per row) over the cluster even when the input is
-    // one small file — a single-file scan is ONE partition (the
-    // Dedup.minHashSignatures spread). hashClusterProbes stays
-    // unspread: its caller, the hash-IVF serve on the Ivf core, passes
+    // multiply-adds per row). hashClusterProbes stays unspread: its
+    // caller, the hash-IVF serve on the Ivf core, passes
     // dimension-sized QUERY batches where an extra exchange (per serve
     // micro-batch) would cost more than it parallelizes.
-    scoredTopN(
-      vectors.repartition(vectors.sparkSession.sparkContext.defaultParallelism),
-      idCol, vecCol, k, 1)
+    scoredTopN(Barrier.spread(vectors), idCol, vecCol, k, 1)
       .select(col(idCol), col("c").as("cluster"), col("score"))
 
   /** The nProbe best pseudo-centroids per vector — the deterministic
@@ -55,31 +52,30 @@ object SemanticDedup {
 
   /** Shared top-N of the exact-integer pseudo-centroid scores, ranked
     * (score desc, c asc) — one scan, k score rows per vector, pruned to
-    * N before the executor-local checkpoint barrier.
+    * N before the [[Barrier.cut]].
     */
   private def scoredTopN(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int, topN: Int): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(topN >= 1 && topN <= k, s"topN must be in [1, $k]: $topN")
-    val vq = vectors
-      .select(col(idCol), transform(col(vecCol).cast("array<double>"),
-        x => round(x * 1000000).cast("long")).as("vq"))
-      .persist() // barrier: keep vq an attribute (no per-cluster re-transform)
-    val scored = vq
-      .select(col(idCol), col("vq"),
-        explode(sequence(lit(0L), lit(k - 1L))).as("c"))
-      .withColumn("score",
-        aggregate(sequence(lit(1), size(col("vq"))), lit(0L),
-          (acc, i) => acc + element_at(col("vq"), i) *
-            (pmod(xxhash64(col("c"), i.cast("long")), lit(2001L)) - 1000L)))
-    val w = Window.partitionBy(idCol).orderBy(col("score").desc, col("c"))
-    val out = scored
-      .select(col(idCol), col("c"), col("score"),
-        row_number().over(w).as("rn"))
-      .filter(col("rn") <= topN)
-      .localCheckpoint(true) // executor-local; see Dedup.exactShinglePairs
-    vq.unpersist()
-    out
+    Barrier.scoped { scope =>
+      // barrier: keep vq an attribute (no per-cluster re-transform)
+      val vq = scope.persist(vectors
+        .select(col(idCol), transform(col(vecCol).cast("array<double>"),
+          x => round(x * 1000000).cast("long")).as("vq")))
+      val scored = vq
+        .select(col(idCol), col("vq"),
+          explode(sequence(lit(0L), lit(k - 1L))).as("c"))
+        .withColumn("score",
+          aggregate(sequence(lit(1), size(col("vq"))), lit(0L),
+            (acc, i) => acc + element_at(col("vq"), i) *
+              (pmod(xxhash64(col("c"), i.cast("long")), lit(2001L)) - 1000L)))
+      val w = Window.partitionBy(idCol).orderBy(col("score").desc, col("c"))
+      Barrier.cut(scored
+        .select(col(idCol), col("c"), col("score"),
+          row_number().over(w).as("rn"))
+        .filter(col("rn") <= topN))
+    }
   }
 
   /** Integer pair score with cosine ≈ score / (127² · 10¹²): the int8

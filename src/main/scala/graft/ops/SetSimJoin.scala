@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Exact threshold set-similarity self-join with prefix filtering — the
   * AllPairs/PPJoin family (Bayardo et al., WWW'07; Xiao et al., WWW'08).
@@ -49,65 +50,55 @@ object SetSimJoin {
       tauPpm: Long, shingleWords: Int = 3): DataFrame = {
     require(tauPpm >= 1 && tauPpm <= 1000000L,
       s"tauPpm must be in [1, 1000000]: $tauPpm")
-    // distinct shingles per doc = set semantics; persist barrier keeps
-    // the split from re-running inside the shingle lambda (no CSE inside
-    // lambda bodies — the repo-wide staging rule). The repartition
-    // spreads the shingle hashing over the cluster even when the input
-    // is one small file (single-file scan = ONE partition; the
-    // Dedup.minHashSignatures spread, same rationale).
-    val tokens = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("__id"), split(lower(col(textCol)), " ").as("__w"))
-      .persist()
-    val postings = tokens
-      .select(col("__id"),
-        explode(array_distinct(Dedup.shinglesFromTokens(col("__w"), shingleWords)))
-          .as("__sh"))
-    // global rarity order: df per shingle (map-side combinable), joined
-    // back to postings on the same key — EnsureRequirements reuses the
-    // groupBy exchange for the join side
-    val dfs = postings.groupBy("__sh").agg(count(lit(1)).as("__df"))
-    val ranked = postings.join(dfs, "__sh")
-    // per-doc element list sorted rarest-first: (df, shingle) struct sort
-    // gives a deterministic total order; both the prefix and the full
-    // set ride in one array so verification needs no second pass
-    val arrs = ranked
-      .groupBy("__id")
-      .agg(sort_array(collect_list(struct(col("__df"), col("__sh")))).as("__arr"))
-      .select(col("__id"), col("__arr").getField("__sh").as("__set"),
-        size(col("__arr")).as("__sz"))
-      .persist()
-    // prefix length p = sz - ceil(tau*sz) + 1, integer-exact ceil
-    val prefixLen = (col("__sz") - ceilPpm(col("__sz"), tauPpm) + lit(1)).cast("int")
-    val prefix = arrs.select(col("__id"), col("__sz"),
-      posexplode(slice(col("__set"), lit(1), prefixLen)).as(Seq("__p0", "__sh")))
-      .select(col("__id"), col("__sz"), (col("__p0") + 1).as("__pos"), col("__sh"))
-    val lenOk = lit(tauPpm) * greatest(col("x.__sz"), col("y.__sz")) <=
-      lit(1000000L) * least(col("x.__sz"), col("y.__sz"))
-    val candidates = prefix.as("x")
-      .join(prefix.as("y"),
-        col("x.__sh") === col("y.__sh") && col("x.__id") < col("y.__id") && lenOk
-          && positionalOk(tauPpm))
-      .select(col("x.__id").as("a"), col("y.__id").as("b"))
-      .distinct()
-    // exact verification: two id equi-joins pull the full sorted sets
-    val verified = candidates
-      .join(arrs.select(col("__id").as("a"), col("__set").as("__sa"),
-        col("__sz").as("__na")), "a")
-      .join(arrs.select(col("__id").as("b"), col("__set").as("__sb"),
-        col("__sz").as("__nb")), "b")
-    val inter = size(array_intersect(col("__sa"), col("__sb"))).cast("long")
-    val out = verified
-      .select(col("a"), col("b"), inter.as("inter_sz"),
-        (col("__na") + col("__nb") - inter).cast("long").as("union_sz"))
-      .filter(col("inter_sz") * lit(1000000L) >= lit(tauPpm) * col("union_sz"))
-      .withColumn("jaccard_ppm",
-        floor(col("inter_sz") * lit(1000000L) / col("union_sz")).cast("long"))
-      .localCheckpoint(true) // frees both persist barriers; see
-    // exactShinglePairs for the executor-loss tradeoff note
-    tokens.unpersist()
-    arrs.unpersist()
-    out
+    Barrier.scoped { scope =>
+      // distinct shingles per doc = set semantics; the persist barrier
+      // keeps the split from re-running inside the shingle lambda
+      val tokens = scope.persist(Barrier.spread(df)
+        .select(col(idCol).as("__id"), split(lower(col(textCol)), " ").as("__w")))
+      val postings = tokens
+        .select(col("__id"),
+          explode(array_distinct(Dedup.shinglesFromTokens(col("__w"), shingleWords)))
+            .as("__sh"))
+      // global rarity order: df per shingle (map-side combinable), joined
+      // back to postings on the same key — EnsureRequirements reuses the
+      // groupBy exchange for the join side
+      val dfs = postings.groupBy("__sh").agg(count(lit(1)).as("__df"))
+      val ranked = postings.join(dfs, "__sh")
+      // per-doc element list sorted rarest-first: (df, shingle) struct sort
+      // gives a deterministic total order; both the prefix and the full
+      // set ride in one array so verification needs no second pass
+      val arrs = scope.persist(ranked
+        .groupBy("__id")
+        .agg(sort_array(collect_list(struct(col("__df"), col("__sh")))).as("__arr"))
+        .select(col("__id"), col("__arr").getField("__sh").as("__set"),
+          size(col("__arr")).as("__sz")))
+      // prefix length p = sz - ceil(tau*sz) + 1, integer-exact ceil
+      val prefixLen = (col("__sz") - ceilPpm(col("__sz"), tauPpm) + lit(1)).cast("int")
+      val prefix = arrs.select(col("__id"), col("__sz"),
+        posexplode(slice(col("__set"), lit(1), prefixLen)).as(Seq("__p0", "__sh")))
+        .select(col("__id"), col("__sz"), (col("__p0") + 1).as("__pos"), col("__sh"))
+      val lenOk = lit(tauPpm) * greatest(col("x.__sz"), col("y.__sz")) <=
+        lit(1000000L) * least(col("x.__sz"), col("y.__sz"))
+      val candidates = prefix.as("x")
+        .join(prefix.as("y"),
+          col("x.__sh") === col("y.__sh") && col("x.__id") < col("y.__id") && lenOk
+            && positionalOk(tauPpm))
+        .select(col("x.__id").as("a"), col("y.__id").as("b"))
+        .distinct()
+      // exact verification: two id equi-joins pull the full sorted sets
+      val verified = candidates
+        .join(arrs.select(col("__id").as("a"), col("__set").as("__sa"),
+          col("__sz").as("__na")), "a")
+        .join(arrs.select(col("__id").as("b"), col("__set").as("__sb"),
+          col("__sz").as("__nb")), "b")
+      val inter = size(array_intersect(col("__sa"), col("__sb"))).cast("long")
+      Barrier.cut(verified
+        .select(col("a"), col("b"), inter.as("inter_sz"),
+          (col("__na") + col("__nb") - inter).cast("long").as("union_sz"))
+        .filter(col("inter_sz") * lit(1000000L) >= lit(tauPpm) * col("union_sz"))
+        .withColumn("jaccard_ppm",
+          floor(col("inter_sz") * lit(1000000L) / col("union_sz")).cast("long")))
+    }
   }
 
   /** Candidate pairs only (before exact verification) — exposed so tests
@@ -116,35 +107,33 @@ object SetSimJoin {
     * jaccardJoin configuration) against the full inverted-index count.
     */
   def candidateCount(df: DataFrame, idCol: String, textCol: String,
-      tauPpm: Long, shingleWords: Int = 3, positional: Boolean = true): Long = {
-    val tokens = df
-      .select(col(idCol).as("__id"), split(lower(col(textCol)), " ").as("__w"))
-      .persist()
-    val postings = tokens
-      .select(col("__id"),
-        explode(array_distinct(Dedup.shinglesFromTokens(col("__w"), shingleWords)))
-          .as("__sh"))
-    val dfs = postings.groupBy("__sh").agg(count(lit(1)).as("__df"))
-    val arrs = postings.join(dfs, "__sh")
-      .groupBy("__id")
-      .agg(sort_array(collect_list(struct(col("__df"), col("__sh")))).as("__arr"))
-      .select(col("__id"), col("__arr").getField("__sh").as("__set"),
-        size(col("__arr")).as("__sz"))
-    val prefixLen = (col("__sz") - ceilPpm(col("__sz"), tauPpm) + lit(1)).cast("int")
-    val prefix = arrs.select(col("__id"), col("__sz"),
-      posexplode(slice(col("__set"), lit(1), prefixLen)).as(Seq("__p0", "__sh")))
-      .select(col("__id"), col("__sz"), (col("__p0") + 1).as("__pos"), col("__sh"))
-    val lenOk = lit(tauPpm) * greatest(col("x.__sz"), col("y.__sz")) <=
-      lit(1000000L) * least(col("x.__sz"), col("y.__sz"))
-    val posOk = if (positional) positionalOk(tauPpm) else lit(true)
-    val n = prefix.as("x")
-      .join(prefix.as("y"),
-        col("x.__sh") === col("y.__sh") && col("x.__id") < col("y.__id") && lenOk
-          && posOk)
-      .select(col("x.__id"), col("y.__id")).distinct().count()
-    tokens.unpersist()
-    n
-  }
+      tauPpm: Long, shingleWords: Int = 3, positional: Boolean = true): Long =
+    Barrier.scoped { scope =>
+      val tokens = scope.persist(df
+        .select(col(idCol).as("__id"), split(lower(col(textCol)), " ").as("__w")))
+      val postings = tokens
+        .select(col("__id"),
+          explode(array_distinct(Dedup.shinglesFromTokens(col("__w"), shingleWords)))
+            .as("__sh"))
+      val dfs = postings.groupBy("__sh").agg(count(lit(1)).as("__df"))
+      val arrs = postings.join(dfs, "__sh")
+        .groupBy("__id")
+        .agg(sort_array(collect_list(struct(col("__df"), col("__sh")))).as("__arr"))
+        .select(col("__id"), col("__arr").getField("__sh").as("__set"),
+          size(col("__arr")).as("__sz"))
+      val prefixLen = (col("__sz") - ceilPpm(col("__sz"), tauPpm) + lit(1)).cast("int")
+      val prefix = arrs.select(col("__id"), col("__sz"),
+        posexplode(slice(col("__set"), lit(1), prefixLen)).as(Seq("__p0", "__sh")))
+        .select(col("__id"), col("__sz"), (col("__p0") + 1).as("__pos"), col("__sh"))
+      val lenOk = lit(tauPpm) * greatest(col("x.__sz"), col("y.__sz")) <=
+        lit(1000000L) * least(col("x.__sz"), col("y.__sz"))
+      val posOk = if (positional) positionalOk(tauPpm) else lit(true)
+      prefix.as("x")
+        .join(prefix.as("y"),
+          col("x.__sh") === col("y.__sh") && col("x.__id") < col("y.__id") && lenOk
+            && posOk)
+        .select(col("x.__id"), col("y.__id")).distinct().count()
+    }
 
   /** ceil(sz * tauPpm / 1e6) in exact integer math. */
   private def ceilPpm(sz: Column, tauPpm: Long): Column =

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Span-level (sub-document) deduplication: the C4/RefinedWeb move of
   * removing REPEATED SPANS from otherwise-distinct documents, which
@@ -64,51 +65,46 @@ object SpanDedup {
   def spanDedupReport(df: DataFrame, idCol: String, textCol: String,
       tileWords: Int = 10): DataFrame = {
     require(tileWords >= 1, s"tileWords must be positive: $tileWords")
-    // persist() barrier: keeps CollapseProject from inlining the split
-    // back into the tile lambda (re-tokenizing per tile) and shares ONE
-    // tokenization across the tile explode and the tail projection
-    val tokens = df
-      .select(col(idCol).as("doc_id"),
-        split(coalesce(col(textCol), lit("")), " ").as("__ws"))
-      .persist()
-    val occ = tokens
-      .select(col("doc_id"), tilesFromTokens(col("__ws"), tileWords).as("__tiles"))
-      .select(col("doc_id"), posexplode(col("__tiles")).as(Seq("__pos", "tile")))
-      .select(col("doc_id"), (col("__pos") + 1).cast("long").as("idx"), col("tile"))
-    val census = occ.groupBy("tile").agg(
-      count(lit(1)).as("__cnt"),
-      min(struct(col("doc_id"), col("idx"))).as("__first"))
-    val joined = occ.join(census, "tile")
-    val stats = joined.groupBy("doc_id").agg(
-      count(lit(1)).as("n_tiles"),
-      sum((col("__cnt") > 1).cast("long")).as("n_dup_tiles"))
-    val kept = joined.filter(col("__cnt") === 1 ||
-        (col("doc_id") === col("__first.doc_id") && col("idx") === col("__first.idx")))
-      .groupBy("doc_id")
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("idx"), col("tile")))),
-          x => x.getField("tile")), " ").as("__kept"))
-    val ws = col("__ws")
-    val tailStart = floor(size(ws) / tileWords).cast("int") * tileWords + 1
-    val base = tokens.select(col("doc_id"),
-      when(size(ws) >= tailStart,
-        array_join(slice(ws, tailStart, size(ws) - tailStart + 1), " "))
-        .otherwise(lit("")).as("__tail"))
-    val result = base
-      .join(stats, Seq("doc_id"), "left")
-      .join(kept, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tiles"), lit(0L)).as("n_tiles"),
-        coalesce(col("n_dup_tiles"), lit(0L)).as("n_dup_tiles"),
-        // concat_ws skips NULLs (not empty strings) — nullify empties so
-        // a missing part never leaves a stray separator space
-        md5(concat_ws(" ",
-          when(length(col("__kept")) > 0, col("__kept")),
-          when(length(col("__tail")) > 0, col("__tail")))).as("clean_md5"))
-    // eager executor-local checkpoint frees the token cache (see
-    // Dedup.exactShinglePairs for the cluster-loss tradeoff note)
-    val out = result.localCheckpoint(true)
-    tokens.unpersist()
-    out
+    Barrier.scoped { scope =>
+      // persist barrier: keeps the split out of the tile lambda and shares
+      // ONE tokenization across the tile explode and the tail projection
+      val tokens = scope.persist(df
+        .select(col(idCol).as("doc_id"),
+          split(coalesce(col(textCol), lit("")), " ").as("__ws")))
+      val occ = tokens
+        .select(col("doc_id"), tilesFromTokens(col("__ws"), tileWords).as("__tiles"))
+        .select(col("doc_id"), posexplode(col("__tiles")).as(Seq("__pos", "tile")))
+        .select(col("doc_id"), (col("__pos") + 1).cast("long").as("idx"), col("tile"))
+      val census = occ.groupBy("tile").agg(
+        count(lit(1)).as("__cnt"),
+        min(struct(col("doc_id"), col("idx"))).as("__first"))
+      val joined = occ.join(census, "tile")
+      val stats = joined.groupBy("doc_id").agg(
+        count(lit(1)).as("n_tiles"),
+        sum((col("__cnt") > 1).cast("long")).as("n_dup_tiles"))
+      val kept = joined.filter(col("__cnt") === 1 ||
+          (col("doc_id") === col("__first.doc_id") && col("idx") === col("__first.idx")))
+        .groupBy("doc_id")
+        .agg(array_join(
+          transform(array_sort(collect_list(struct(col("idx"), col("tile")))),
+            x => x.getField("tile")), " ").as("__kept"))
+      val ws = col("__ws")
+      val tailStart = floor(size(ws) / tileWords).cast("int") * tileWords + 1
+      val base = tokens.select(col("doc_id"),
+        when(size(ws) >= tailStart,
+          array_join(slice(ws, tailStart, size(ws) - tailStart + 1), " "))
+          .otherwise(lit("")).as("__tail"))
+      Barrier.cut(base
+        .join(stats, Seq("doc_id"), "left")
+        .join(kept, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("n_tiles"), lit(0L)).as("n_tiles"),
+          coalesce(col("n_dup_tiles"), lit(0L)).as("n_dup_tiles"),
+          // concat_ws skips NULLs (not empty strings) — nullify empties so
+          // a missing part never leaves a stray separator space
+          md5(concat_ws(" ",
+            when(length(col("__kept")) > 0, col("__kept")),
+            when(length(col("__tail")) > 0, col("__tail")))).as("clean_md5")))
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Text-analysis operators for training-data pipelines: token counting,
   * language ID, quality scoring, fingerprinting. All pure column
@@ -117,37 +118,30 @@ object TextAnalysis {
     * otherwise inline the split into every lambda element, re-splitting
     * the text per bigram — see Dedup.shinglesFromTokens).
     */
-  def repetitionSignals(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // the repartition spreads the tokenize/bigram hashing over the
-    // cluster even when the input is one small file (single-file scan =
-    // ONE partition; the Dedup.minHashSignatures spread, same rationale)
-    val tokens = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("__id"), split(col(textCol), " ").as("__w"))
-      .persist()
-    val base = tokens.select(col("__id"),
-      size(col("__w")).cast("long").as("n_tokens"),
-      size(array_distinct(col("__w"))).cast("long").as("n_distinct"))
-    val bigrams = tokens.select(col("__id"),
-      explode(when(size(col("__w")) >= 2,
-        transform(sequence(lit(1), size(col("__w")) - 1),
-          i => concat_ws(" ", element_at(col("__w"), i), element_at(col("__w"), i + 1))))
-        .otherwise(array().cast("array<string>"))).as("__bg"))
-    val top = bigrams.groupBy("__id", "__bg").agg(count(lit(1)).as("__c"))
-      .groupBy("__id").agg(max("__c").as("__top"))
-    val out = base.join(top, Seq("__id"), "left")
-      .select(col("__id").as(idCol),
-        col("n_tokens"), col("n_distinct"),
-        floor(col("n_distinct") * 1000000L / greatest(col("n_tokens"), lit(1L)))
-          .cast("long").as("ttr_ppm"),
-        coalesce(col("__top"), lit(0L)).cast("long").as("top_bigram_n"),
-        when(col("n_tokens") >= 2,
-          floor(coalesce(col("__top"), lit(0L)) * 1000000L / (col("n_tokens") - 1)))
-          .otherwise(lit(0L)).cast("long").as("top_bigram_ppm"))
-      .localCheckpoint(true)
-    tokens.unpersist()
-    out
-  }
+  def repetitionSignals(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    Barrier.scoped { scope =>
+      val tokens = scope.persist(Barrier.spread(df)
+        .select(col(idCol).as("__id"), split(col(textCol), " ").as("__w")))
+      val base = tokens.select(col("__id"),
+        size(col("__w")).cast("long").as("n_tokens"),
+        size(array_distinct(col("__w"))).cast("long").as("n_distinct"))
+      val bigrams = tokens.select(col("__id"),
+        explode(when(size(col("__w")) >= 2,
+          transform(sequence(lit(1), size(col("__w")) - 1),
+            i => concat_ws(" ", element_at(col("__w"), i), element_at(col("__w"), i + 1))))
+          .otherwise(array().cast("array<string>"))).as("__bg"))
+      val top = bigrams.groupBy("__id", "__bg").agg(count(lit(1)).as("__c"))
+        .groupBy("__id").agg(max("__c").as("__top"))
+      Barrier.cut(base.join(top, Seq("__id"), "left")
+        .select(col("__id").as(idCol),
+          col("n_tokens"), col("n_distinct"),
+          floor(col("n_distinct") * 1000000L / greatest(col("n_tokens"), lit(1L)))
+            .cast("long").as("ttr_ppm"),
+          coalesce(col("__top"), lit(0L)).cast("long").as("top_bigram_n"),
+          when(col("n_tokens") >= 2,
+            floor(coalesce(col("__top"), lit(0L)) * 1000000L / (col("n_tokens") - 1)))
+            .otherwise(lit(0L)).cast("long").as("top_bigram_ppm")))
+    }
 
   // --------------------------------------------------------- PII scrubbing
 
@@ -266,11 +260,7 @@ object TextAnalysis {
     */
   def invertedIndex(df: DataFrame, idCol: String, textCol: String,
       maxDf: Long = 0L): DataFrame = {
-    // the repartition spreads the tokenize/posting build over the
-    // cluster even when the input is one small file (single-file scan =
-    // ONE partition; the Dedup.minHashSignatures spread, same rationale)
-    val postings = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    val postings = Barrier.spread(df)
       .select(col(idCol).as("__doc"),
       posexplode(filter(split(lower(col(textCol)), "\\s+"), t => length(t) > 0))
         .as(Seq("__pos", "term")))
@@ -460,11 +450,7 @@ object TextAnalysis {
     // chunk — quadratic in document length (the SpanDedup trap).
     // CollapseProject cannot re-inline __toks: split() is non-cheap and
     // the consumer references it twice (size + slice).
-    // The repartition spreads the chunk slicing/concat over the cluster
-    // even when the input is one small file (single-file scan = ONE
-    // partition; the Dedup.minHashSignatures spread, same rationale).
-    val tokens = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    val tokens = Barrier.spread(df)
       .select(col(idCol).as("__id"), split(col(textCol), " ").as("__toks"))
     // ceil(size / chunkTokens) in exact double range (token counts << 2^53)
     val nChunks = ((size(col("__toks")) + lit(chunkTokens - 1)) / lit(chunkTokens)).cast("int")

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Barrier
 
 /** Winnowing document sketches (Schleimer, Wilkerson, Aiken: "Winnowing:
   * Local Algorithms for Document Fingerprinting", SIGMOD 2003 — the MOSS
@@ -35,39 +36,32 @@ object Winnowing {
   def fingerprints(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, window: Int = 4): DataFrame = {
     require(k >= 1 && window >= 1, s"k=$k and window=$window must be positive")
-    // spread the per-token hashing over the cluster even when the input
-    // is one small file (single-file scan = ONE partition; the
-    // Dedup.minHashSignatures spread, same rationale)
-    val toks = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("doc_id"),
-        split(lower(coalesce(col(textCol), lit(""))), " ").as("__ws"))
-      .persist()
-    // full k-grams only: positions 1..n-k+1 (docs shorter than k words
-    // emit nothing — the when() guard, sequence() would DESCEND on an
-    // empty range)
-    val m = size(col("__ws")) - (k - 1)
-    val grams = toks
-      .filter(m >= 1)
-      .select(col("doc_id"),
-        transform(sequence(lit(1), m), i =>
-          md5(array_join(slice(col("__ws"), i, lit(k)), " "))).as("__gh"))
-      .persist() // barrier: keep the gram-hash array an attribute
-    // one window per start position 1..g-window+1; short docs
-    // (g < window) keep the single clipped window at position 1
-    // (slice() clips at the array end, so the last windows of a long
-    // doc and the only window of a short one share one expression)
-    val g = size(col("__gh"))
-    val out = grams
-      .select(col("doc_id"),
-        explode(transform(
-          sequence(lit(1), greatest(g - (window - 1), lit(1))),
-          p => array_min(slice(col("__gh"), p, lit(window))))).as("fp"))
-      .select(col("doc_id"), col("fp"))
-      .distinct()
-      .localCheckpoint(true) // free both persist barriers below
-    toks.unpersist()
-    grams.unpersist()
-    out
+    Barrier.scoped { scope =>
+      val toks = scope.persist(Barrier.spread(df)
+        .select(col(idCol).as("doc_id"),
+          split(lower(coalesce(col(textCol), lit(""))), " ").as("__ws")))
+      // full k-grams only: positions 1..n-k+1 (docs shorter than k words
+      // emit nothing — the when() guard, sequence() would DESCEND on an
+      // empty range)
+      val m = size(col("__ws")) - (k - 1)
+      // barrier: keep the gram-hash array an attribute
+      val grams = scope.persist(toks
+        .filter(m >= 1)
+        .select(col("doc_id"),
+          transform(sequence(lit(1), m), i =>
+            md5(array_join(slice(col("__ws"), i, lit(k)), " "))).as("__gh")))
+      // one window per start position 1..g-window+1; short docs
+      // (g < window) keep the single clipped window at position 1
+      // (slice() clips at the array end, so the last windows of a long
+      // doc and the only window of a short one share one expression)
+      val g = size(col("__gh"))
+      Barrier.cut(grams
+        .select(col("doc_id"),
+          explode(transform(
+            sequence(lit(1), greatest(g - (window - 1), lit(1))),
+            p => array_min(slice(col("__gh"), p, lit(window))))).as("fp"))
+        .select(col("doc_id"), col("fp"))
+        .distinct())
+    }
   }
 }

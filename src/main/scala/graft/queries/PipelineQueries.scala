@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.runtime.{BuildOnce, Staging, Tables}
+import graft.runtime.{Barrier, BuildOnce, Staging, Tables}
 
 /** Training-data pipeline operators over the `documents` and `embeddings`
   * tables: deduplication, text analysis, similarity search. Written
@@ -382,12 +382,8 @@ object PipelineQueries {
     QueryDef(
       "q64_quality_sampling",
       (s, d) => {
-        // the repartition spreads the per-token lexicon scoring over
-        // the cluster even when the input is one small file
-        // (single-file scan = ONE partition; the
-        // Dedup.minHashSignatures spread, same rationale)
-        val scored = Tables.read(s, d, "documents")
-          .repartition(s.sparkContext.defaultParallelism)
+        // spread the per-token lexicon scoring
+        val scored = Barrier.spread(Tables.read(s, d, "documents"))
           .select(col("doc_id"),
           graft.ops.TextAnalysis.unigramScore(coalesce(col("text"), lit("")))
             .as("s"))
@@ -854,7 +850,7 @@ object PipelineQueries {
   val q57_neardup_triangles = QueryDef(
     "q57_neardup_triangles",
     (s, d) => {
-      // already localCheckpointed by exactShinglePairs — safe to reuse
+      // already cut by exactShinglePairs — safe to reuse
       // three ways without re-running the shingle join
       val pairs = graft.ops.Dedup.exactShinglePairs(Tables.read(s, d, "documents"),
         "doc_id", "text")
@@ -1158,12 +1154,8 @@ object PipelineQueries {
     "q67_quantize_int8",
     (s, d) => {
       val v = col("embedding").cast("array<double>")
-      // the repartition spreads the per-component rounding over the
-      // cluster even when the input is one small file (single-file scan
-      // = ONE partition; the Dedup.minHashSignatures spread, same
-      // rationale)
-      Tables.read(s, d, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
+      // spread the per-component rounding
+      Barrier.spread(Tables.read(s, d, "embeddings"))
         .select(col("vec_id"),
           posexplode(graft.ops.Quantization.int8Codes(v)).as(Seq("i", "q")))
         .select(col("vec_id"), col("i").cast("int").as("i"), col("q"))
@@ -3981,13 +3973,12 @@ object PipelineQueries {
             graft.ops.ImageDedup.hashCorpusPng(r.getLong(0), r.getInt(2)))
         }
       }
-      // localCheckpoint: the banding self-join + the hash join-back
-      // reference `hashed` THREE times — without the barrier the plan
-      // re-encodes and re-decodes every PNG per reference (measured
-      // 3.2 s -> the decode once). Signatures are 16 bytes/row.
-      val hashed = graft.ops.ImageDedup.dHash(withPng, "png")
-        .select(col("id"), col("png_dhash").as("dhash"))
-        .localCheckpoint(true)
+      // cut: the banding self-join + the hash join-back reference
+      // `hashed` THREE times — without the barrier the plan re-encodes
+      // and re-decodes every PNG per reference (measured 3.2 s -> the
+      // decode once). Signatures are 16 bytes/row.
+      val hashed = Barrier.cut(graft.ops.ImageDedup.dHash(withPng, "png")
+        .select(col("id"), col("png_dhash").as("dhash")))
       graft.ops.Dedup.bandedHammingPairs(hashed, "id", "dhash", maxHamming = 0)
         .join(hashed.withColumnRenamed("id", "a"), "a")
         .select(col("a"), col("b"), col("dhash"))
@@ -4263,13 +4254,11 @@ object PipelineQueries {
     (s, d) => {
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-      // the repartition spreads the payload encode + decode probe over
-      // the cluster even when the input is one small file (single-file
-      // scan = ONE partition; the Dedup.minHashSignatures spread, same
-      // rationale — the exchange carries two longs per row)
-      val rig = Tables.read(s, d, "documents").select(col("doc_id").cast("long").as("base_id"),
-        pmod(xxhash64(col("doc_id").cast("long")), lit(8L)).cast("int").as("kind"))
-        .repartition(s.sparkContext.defaultParallelism)
+      // spread the payload encode + decode probe (the exchange carries
+      // two longs per row)
+      val rig = Barrier.spread(Tables.read(s, d, "documents")
+        .select(col("doc_id").cast("long").as("base_id"),
+          pmod(xxhash64(col("doc_id").cast("long")), lit(8L)).cast("int").as("kind")))
       val outSchema = StructType(Seq(StructField("base_id", LongType),
         StructField("img", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
@@ -4590,11 +4579,8 @@ object PipelineQueries {
         lit("<html><head><title>Doc "), did, lit("</title>"), robots,
         canonLink, lit("</head><body><!-- hdr --><p>"), col("text"),
         lit("</p></body></html>"))
-      // the repartition spreads the page build + tag-strip extraction
-      // over the cluster even when the input is one small file
-      // (single-file scan = ONE partition; the Dedup.minHashSignatures
-      // spread, same rationale)
-      val paged = crawled.repartition(s.sparkContext.defaultParallelism)
+      // spread the page build + tag-strip extraction
+      val paged = Barrier.spread(crawled)
         .select(col("doc_id"), messyUrlCol.as("url"),
         html.as("html"))
         .select(col("doc_id"), col("url"),
@@ -5045,12 +5031,9 @@ object PipelineQueries {
         .when(variant === 2, when(oversize, k2big).otherwise(k2small))
         .otherwise(lit(""))
       val agent = lit("GraftBot/1.0")
-      // the repartition spreads the robots build + parse (585k-char
-      // files on every 64th doc) over the cluster even when the input
-      // is one small file (single-file scan = ONE partition; the
-      // Dedup.minHashSignatures spread, same rationale)
-      Tables.read(s, d, "documents").select(col("doc_id"))
-        .repartition(s.sparkContext.defaultParallelism)
+      // spread the robots build + parse (585k-char files on every 64th
+      // doc)
+      Barrier.spread(Tables.read(s, d, "documents").select(col("doc_id")))
         .select(col("doc_id"),
         call_function("robots_allowed", rules, agent, lit("/private/x"))
           .cast("int").as("allowed_p"),
@@ -5104,13 +5087,10 @@ object PipelineQueries {
       // every 4th document: 72 pinned macroblocks per image is already
       // exhaustive; the full corpus only multiplied encode/decode wall
       // time (5.6 s -> ~1.4 s at sf0.1)
-      // the repartition spreads the VP8 encode + pure-Scala decode over
-      // the cluster even when the input is one small file (single-file
-      // scan = ONE partition; the Dedup.minHashSignatures spread, same
-      // rationale — the exchange carries one long per row)
-      val rig = Tables.read(s, d, "documents").filter(col("doc_id") % 4 === 0)
-        .select(col("doc_id").cast("long").as("base_id"))
-        .repartition(s.sparkContext.defaultParallelism)
+      // spread the VP8 encode + pure-Scala decode (the exchange carries
+      // one long per row)
+      val rig = Barrier.spread(Tables.read(s, d, "documents").filter(col("doc_id") % 4 === 0)
+        .select(col("doc_id").cast("long").as("base_id")))
       val outSchema = StructType(Seq(StructField("doc_id", LongType),
         StructField("c", LongType), StructField("r", LongType),
         StructField("luma", LongType)))
@@ -5658,12 +5638,9 @@ object PipelineQueries {
       val did = col("doc_id")
       val base = linkFixtureBase(did)
       val html = linkFixtureHtml(did)
-      // the repartition spreads the HTML render + link extraction over
-      // the cluster even when the input is one small file (single-file
-      // scan = ONE partition; the Dedup.minHashSignatures spread, same
-      // rationale — the exchange carries one long per row)
-      Tables.read(s, d, "documents").select(did)
-        .repartition(s.sparkContext.defaultParallelism)
+      // spread the HTML render + link extraction (the exchange carries
+      // one long per row)
+      Barrier.spread(Tables.read(s, d, "documents").select(did))
         .select(did, base.as("__base"),
           graft.ops.HtmlExtract.extractLinks(html).as("__ls"))
         .select(col("doc_id"), col("__base"),
@@ -5723,13 +5700,10 @@ object PipelineQueries {
     "q162_discovery_loop",
     (s, d) => {
       val did = col("doc_id")
-      // the repartition spreads the HTML render + link extraction +
-      // canonicalization over the cluster even when the input is one
-      // small file (single-file scan = ONE partition; the
-      // Dedup.minHashSignatures spread, same rationale — the exchange
-      // carries one long per row, the fixture builds after it)
-      val pages = Tables.read(s, d, "documents").select(did)
-        .repartition(s.sparkContext.defaultParallelism)
+      // spread the HTML render + link extraction + canonicalization
+      // (the exchange carries one long per row, the fixture builds
+      // after it)
+      val pages = Barrier.spread(Tables.read(s, d, "documents").select(did))
         .select(did, linkFixtureBase(did).as("url"),
         linkFixtureHtml(did).as("html"))
       // staged projections: `resolved` materializes as an attribute so
@@ -5749,15 +5723,14 @@ object PipelineQueries {
         .select(graft.ops.UrlOps.canonicalizeUrl(col("url")).as("curl"))
         .distinct()
       val fresh = cand.join(seen, Seq("curl"), "left_anti")
-      // checkpoint BEFORE the robots filter: predicate pushdown would
+      // cut BEFORE the robots filter: predicate pushdown would
       // otherwise substitute the filter through every projection layer,
       // re-inlining the canonicalize/resolve trees into the predicate
       // (measured 6.6 s vs 1.1 s at sf0.1 for this one stage) — and the
       // materialized set also feeds three downstream consumers once
-      val disc = fresh.groupBy("curl")
+      val disc = Barrier.cut(fresh.groupBy("curl")
         .agg(min(did * 8 + col("idx")).as("disc_id"))
-        .withColumn("host", graft.ops.UrlOps.canonicalHost(col("curl")))
-        .localCheckpoint(true)
+        .withColumn("host", graft.ops.UrlOps.canonicalHost(col("curl"))))
       val hostDigit = regexp_extract(col("host"), "^h([0-9]+)\\.", 1)
       val isH = hostDigit =!= ""
       val rules = when(isH, concat(
@@ -5884,12 +5857,9 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("a", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      // the repartition spreads the MP3 frame build + header walk over
-      // the cluster even when the input is one small file (single-file
-      // scan = ONE partition; the Dedup.minHashSignatures spread, same
-      // rationale — the exchange carries one long per row)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id"))
-        .repartition(s.sparkContext.defaultParallelism)
+      // spread the MP3 frame build + header walk (the exchange carries
+      // one long per row)
+      val withBytes = Barrier.spread(Tables.read(s, d, "documents").select(col("doc_id")))
         .mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
@@ -6983,12 +6953,9 @@ object PipelineQueries {
           concat(lit("<?xml version=\"1.0\"?>\n<feed " +
             "xmlns=\"http://www.w3.org/2005/Atom\">"), trap,
             array_join(atomEntries, ""), lit("\n</feed>")))
-      // the repartition spreads the feed XML build + parse over the
-      // cluster even when the input is one small file (single-file scan
-      // = ONE partition; the Dedup.minHashSignatures spread, same
-      // rationale — the exchange carries one long per row)
-      Tables.read(s, d, "documents").select(did)
-        .repartition(s.sparkContext.defaultParallelism)
+      // spread the feed XML build + parse (the exchange carries one
+      // long per row)
+      Barrier.spread(Tables.read(s, d, "documents").select(did))
         .select(did,
           graft.ops.Feed.feedKind(xml).as("kind"),
           graft.ops.Feed.feedEntries(xml).as("__es"))
@@ -7230,12 +7197,9 @@ object PipelineQueries {
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("doc", BinaryType)))
       implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      // the repartition spreads the EPUB zip build + chapter extraction
-      // over the cluster even when the input is one small file
-      // (single-file scan = ONE partition; the Dedup.minHashSignatures
-      // spread, same rationale — the exchange carries one long per row)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id"))
-        .repartition(s.sparkContext.defaultParallelism)
+      // spread the EPUB zip build + chapter extraction (the exchange
+      // carries one long per row)
+      val withBytes = Barrier.spread(Tables.read(s, d, "documents").select(col("doc_id")))
         .mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)

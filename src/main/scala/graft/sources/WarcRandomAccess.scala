@@ -38,11 +38,13 @@ object WarcRandomAccess {
   /** The CDX sidecars under `dir` as a DataFrame
     * (segment, offset, length, target_uri). Minimal 2-column sidecars
     * (offset, length only) surface a null uri; `-` (a record with no
-    * WARC-Target-URI) likewise.
+    * WARC-Target-URI) likewise. The sidecars are read as `dir` with a
+    * name filter, not through a glob path: Spark's sink-metadata probe
+    * would stat the literal glob and log its FileNotFoundException.
     */
   def cdx(spark: SparkSession, dir: String): DataFrame = {
     val parts = split(col("value"), "\t")
-    spark.read.format("text").load(s"$dir/*.cdx")
+    spark.read.format("text").option("pathGlobFilter", "*.cdx").load(dir)
       .select(input_file_name().as("__f"), col("value"))
       .filter(!col("value").startsWith("#") && length(col("value")) > 0)
       .select(

@@ -34,11 +34,12 @@ object WdsRandomAccess {
   }
 
   /** The idx sidecars under `dir` as a DataFrame
-    * (shard, offset, key).
+    * (shard, offset, key), read with a name filter rather than a glob
+    * path (see [[WarcRandomAccess.cdx]]).
     */
   def idx(spark: SparkSession, dir: String): DataFrame = {
     val parts = split(col("value"), "\t")
-    spark.read.format("text").load(s"$dir/*.idx")
+    spark.read.format("text").option("pathGlobFilter", "*.idx").load(dir)
       .select(input_file_name().as("__f"), col("value"))
       .filter(!col("value").startsWith("#") && length(col("value")) > 0)
       .select(

@@ -1,0 +1,49 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps the materialization fold from growing back: outside
+  * `graft/tools`, every spread, eager cut and scoped persist of
+  * `src/main` goes through `graft.runtime.Barrier`. Two persists stay
+  * plain because the lazy frame each returns still reads them:
+  * `Graph.pageRank` (3) and `Collocations.pmiBigrams` (1).
+  */
+class BarrierGuardSpec extends AnyFunSuite {
+
+  private lazy val sources: Seq[(String, String)] = MainSources.files
+    .filterNot(_.getPath.contains("/graft/tools/"))
+    .map(f => f.getName -> MainSources.text(f))
+
+  /** (total, per-file counts) of `pattern` over `sources`. */
+  private def count(pattern: String,
+      in: Seq[(String, String)] = sources): (Int, Seq[String]) = {
+    val sites = in.map { case (f, t) => f -> pattern.r.findAllMatchIn(t).size }
+      .filter(_._2 > 0)
+    (sites.map(_._2).sum, sites.map { case (f, k) => s"$f x$k" })
+  }
+
+  private def quoted(s: String) = java.util.regex.Pattern.quote(s)
+
+  test("one eager cut") {
+    val (n, sites) = count(quoted("localCheckpoint("))
+    assert(n <= 1, s"$n localCheckpoint sites (${sites.mkString(", ")}); cut through Barrier.cut")
+  }
+
+  test("one unpersist") {
+    val (n, sites) = count(quoted(".unpersist("))
+    assert(n <= 1, s"$n unpersist sites (${sites.mkString(", ")}); persist through Barrier.scoped")
+  }
+
+  test("one defaultParallelism spread") {
+    val (n, sites) = count("""repartition\(\s*[\w.]*defaultParallelism""")
+    assert(n <= 1, s"$n defaultParallelism spreads (${sites.mkString(", ")}); spread through Barrier.spread")
+  }
+
+  test("plain persists only in Graph.pageRank and Collocations.pmiBigrams") {
+    // a scope's persist is released by the scope; any other is plain
+    val plain = """(?<!scope)\.persist\("""
+    val (n, sites) = count(plain, sources.filterNot(_._1 == "Barrier.scala"))
+    assert(sites.toSet == Set("Graph.scala x3", "Collocations.scala x1"),
+      s"$n plain persists (${sites.mkString(", ")}); persist through Barrier.scoped")
+  }
+}

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,38 +20,40 @@ class FrontierProcessorSpec extends AnyFunSuite {
     */
   private def schedule(batches: Seq[Seq[(String, Long, Long, Long)]])
       : Map[Long, (String, Long, Long)] = {
-    val streamDir = java.nio.file.Files.createTempDirectory("frontier_spec")
-    val schema = batches.head.toDF("host", "ord", "id", "delay_s").schema
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      graft.streaming.StreamFiles.writeOne(
-        rows.toDF("host", "ord", "id", "delay_s"), streamDir, f"b$i%03d")
-    }
-    val name = "frontier_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-      .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.FrontierProcessor,
-        TimeMode.None(), OutputMode.Append(),
-        implicitly[org.apache.spark.sql.Encoder[(Long, String, Long, Long)]])
-      .toDF("id", "host", "seq", "fetch_at_s")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally {
-      oldProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None    => spark.conf.unset(provKey)
+    TempDirs.withTempDirs { tmp =>
+      val streamDir = java.nio.file.Paths.get(tmp("frontier_spec"))
+      val schema = batches.head.toDF("host", "ord", "id", "delay_s").schema
+      batches.zipWithIndex.foreach { case (rows, i) =>
+        graft.streaming.StreamFiles.writeOne(
+          rows.toDF("host", "ord", "id", "delay_s"), streamDir, f"b$i%03d")
       }
+      val name = "frontier_" + java.util.UUID.randomUUID.toString.replace("-", "")
+      val provKey = "spark.sql.streaming.stateStore.providerClass"
+      val oldProv = spark.conf.getOption(provKey)
+      spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
+        "state.RocksDBStateStoreProvider")
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
+        .as[(String, Long, Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new graft.streaming.FrontierProcessor,
+          TimeMode.None(), OutputMode.Append(),
+          implicitly[org.apache.spark.sql.Encoder[(Long, String, Long, Long)]])
+        .toDF("id", "host", "seq", "fetch_at_s")
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally {
+        oldProv match {
+          case Some(p) => spark.conf.set(provKey, p)
+          case None    => spark.conf.unset(provKey)
+        }
+      }
+      val got = spark.table(name)
+        .as[(Long, String, Long, Long)].collect()
+        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+      spark.catalog.dropTempView(name)
+      got
     }
-    val got = spark.table(name)
-      .as[(Long, String, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    spark.catalog.dropTempView(name)
-    got
   }
 
   test("a delay change mid-crawl respaces LATER fetches only") {

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.ops.Frontier
 
 class FrontierSpec extends AnyFunSuite {
@@ -44,15 +43,17 @@ class FrontierSpec extends AnyFunSuite {
   }
 
   test("rewrite also fires when candidates come from parquet (nullable schema)") {
-    val dir = java.nio.file.Files.createTempDirectory("frontier").toString
-    candidates(500).write.mode("overwrite").parquet(dir)
-    val cand = spark.read.parquet(dir)
-    val delays = Seq(("h0", 1L)).toDF("host", "crawl_delay_s")
-    val out = Frontier.schedule(cand, "id", "host", "score", delays, 2)
-    val optimized = out.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("topk_agg"), optimized)
-    assert(!optimized.contains("Window"), optimized)
-    assert(out.count() == 8) // 4 hosts x 2
+    TempDirs.withTempDirs { tmp =>
+      val dir = tmp("frontier")
+      candidates(500).write.mode("overwrite").parquet(dir)
+      val cand = spark.read.parquet(dir)
+      val delays = Seq(("h0", 1L)).toDF("host", "crawl_delay_s")
+      val out = Frontier.schedule(cand, "id", "host", "score", delays, 2)
+      val optimized = out.queryExecution.optimizedPlan.toString
+      assert(optimized.contains("topk_agg"), optimized)
+      assert(!optimized.contains("Window"), optimized)
+      assert(out.count() == 8) // 4 hosts x 2
+    }
   }
 
   test("null scores rank last, never crash") {

@@ -6,8 +6,8 @@ import graft.sources.Http
 class HttpSpec extends AnyFunSuite {
   private val ascii = java.nio.charset.StandardCharsets.US_ASCII
 
-  private def chunked(s: String, sz: Int = 5, ext: String = "",
-      trailers: String = ""): Array[Byte] = {
+  private def chunked(s: String, sz: Int, ext: String,
+      trailers: String): Array[Byte] = {
     val b = s.getBytes(ascii)
     val out = new StringBuilder()
     var i = 0

@@ -1,31 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Path}
-
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{DynamicPruning, IsNotNull}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.Assertions._
 
-import graft.runtime.Staging
-
 /** Shared checks for the IVF disk-index specs. */
 object IvfTestKit extends AdaptiveSparkPlanHelper {
-
-  /** Runs `body` with a temp-dir factory (prefix => dir) and deletes every
-    * dir it made when `body` returns or throws.
-    */
-  def withTempDirs[A](body: (String => String) => A): A = {
-    val made = ArrayBuffer[Path]()
-    try body { prefix =>
-      val d = Files.createTempDirectory(prefix)
-      made += d
-      d.toString
-    } finally made.foreach(Staging.deleteTree)
-  }
 
   /** Asserts that the probe restriction reaches the scan of
     * `<indexDir>/vectors` in `served`'s executed plan (through AQE): the

@@ -324,6 +324,18 @@ class OpsSpec extends AnyFunSuite {
     out.unpersist()
   }
 
+  test("byteBalancedShards: a null-bytes row fails and leaves nothing cached") {
+    import graft.ops.Sampling
+    val df = Seq((1L, Some("abc")), (2L, None)).toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      Sampling.byteBalancedShards(df, "doc_id", octet_length(col("text")), 10L)
+    }
+    assert(e.getMessage.contains("1 rows with null bytes"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"cached RDDs left behind: $leaked")
+  }
+
   test("winnowing: identical docs share sketches, shared runs guarantee a common fp") {
     import graft.ops.Winnowing
     val a = (1 to 30).map(i => s"w$i").mkString(" ")
@@ -519,7 +531,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("disk IVF index: partition-pruned probes match the in-memory path") {
-    IvfTestKit.withTempDirs { tmp =>
+    TempDirs.withTempDirs { tmp =>
       val dir = tmp("ivf_index")
       val centroids = Similarity.fitCentroids(embs, "embedding", 16)
       Similarity.writeIvfIndex(embs, "vec_id", "embedding", dir, centroids)

@@ -73,21 +73,23 @@ class ProcessorsSpec extends AnyFunSuite {
   }
 
   test("lookup file sampler reads csv/json dimension rows") {
-    val dir = java.nio.file.Files.createTempDirectory("lookup").toFile
-    val csv = new java.io.File(dir, "dim.csv")
-    java.nio.file.Files.writeString(csv.toPath, "code,label\nA,alpha\nB,beta\nC,gamma\n")
-    val df = Synth.dataFrame(spark,
-      s"""[{"name": "d", "class": "lookup", "file": "${csv.getAbsolutePath}"}]""", 50)
-    val rows = df.select("d.code", "d.label").collect()
-    assert(rows.length == 50)
-    val valid = Map("A" -> "alpha", "B" -> "beta", "C" -> "gamma")
-    rows.foreach(r => assert(valid(r.getString(0)) == r.getString(1)))
-    // header-only file fails with a named error
-    val empty = new java.io.File(dir, "empty.csv")
-    java.nio.file.Files.writeString(empty.toPath, "code,label\n")
-    val e = intercept[IllegalArgumentException](Synth.dataFrame(spark,
-      s"""[{"name": "d", "class": "lookup", "file": "${empty.getAbsolutePath}"}]""", 1))
-    assert(e.getMessage.contains("no data rows"))
+    TempDirs.withTempDirs { tmp =>
+      val dir = new java.io.File(tmp("lookup"))
+      val csv = new java.io.File(dir, "dim.csv")
+      java.nio.file.Files.writeString(csv.toPath, "code,label\nA,alpha\nB,beta\nC,gamma\n")
+      val df = Synth.dataFrame(spark,
+        s"""[{"name": "d", "class": "lookup", "file": "${csv.getAbsolutePath}"}]""", 50)
+      val rows = df.select("d.code", "d.label").collect()
+      assert(rows.length == 50)
+      val valid = Map("A" -> "alpha", "B" -> "beta", "C" -> "gamma")
+      rows.foreach(r => assert(valid(r.getString(0)) == r.getString(1)))
+      // header-only file fails with a named error
+      val empty = new java.io.File(dir, "empty.csv")
+      java.nio.file.Files.writeString(empty.toPath, "code,label\n")
+      val e = intercept[IllegalArgumentException](Synth.dataFrame(spark,
+        s"""[{"name": "d", "class": "lookup", "file": "${empty.getAbsolutePath}"}]""", 1))
+      assert(e.getMessage.contains("no data rows"))
+    }
   }
 
   test("lookup resolves a bundled classpath resource (FileSampler setResource parity)") {
@@ -106,7 +108,6 @@ class ProcessorsSpec extends AnyFunSuite {
   }
 
   test("delimited quote modes match the reference's printDelimited conventions") {
-    import org.apache.spark.sql.functions.lit
     val df = Seq((7L, "plain", "has,comma and\\slash")).toDF("n", "a", "b")
     def render(quote: String, sep: String = ","): String =
       Processors.toDelimited(df, sep, quote).collect()(0).getString(0)
@@ -125,68 +126,74 @@ class ProcessorsSpec extends AnyFunSuite {
   }
 
   test("avro round-trip preserves nullable, array, binary, and float columns") {
-    import graft.sources.AvroIo
-    val df = Seq(
-      (1L, Some("a"), Seq(1.5f, -2.5f), Array[Byte](1, 2, 3), Some(0.25)),
-      (2L, None, Seq.empty[Float], Array.empty[Byte], None),
-    ).toDF("id", "s", "fs", "bin", "d")
-    val dir = java.nio.file.Files.createTempDirectory("avro_rt").toString
-    AvroIo.writeAvro(df, dir)
-    val back = AvroIo.readAvro(spark, dir)
-    assert(back.schema.map(f => (f.name, f.dataType)) ==
-      df.schema.map(f => (f.name, f.dataType)))
-    val got = back.collect().sortBy(_.getLong(0)).map { r =>
-      (r.getLong(0), Option(r.getString(1)), r.getSeq[Float](2),
-        r.getAs[Array[Byte]](3).toSeq, if (r.isNullAt(4)) None else Some(r.getDouble(4)))
-    }.toSeq
-    assert(got == Seq(
-      (1L, Some("a"), Seq(1.5f, -2.5f), Seq[Byte](1, 2, 3), Some(0.25)),
-      (2L, None, Seq.empty[Float], Seq.empty[Byte], None)))
-    // unsupported nested type rejects with a named error
-    val nested = Seq((1L, (2L, "x"))).toDF("id", "st")
-    val e = intercept[IllegalArgumentException](AvroIo.writeAvro(nested, dir))
-    assert(e.getMessage.contains("unsupported"))
+    TempDirs.withTempDirs { tmp =>
+      import graft.sources.AvroIo
+      val df = Seq(
+        (1L, Some("a"), Seq(1.5f, -2.5f), Array[Byte](1, 2, 3), Some(0.25)),
+        (2L, None, Seq.empty[Float], Array.empty[Byte], None),
+      ).toDF("id", "s", "fs", "bin", "d")
+      val dir = tmp("avro_rt")
+      AvroIo.writeAvro(df, dir)
+      val back = AvroIo.readAvro(spark, dir)
+      assert(back.schema.map(f => (f.name, f.dataType)) ==
+        df.schema.map(f => (f.name, f.dataType)))
+      val got = back.collect().sortBy(_.getLong(0)).map { r =>
+        (r.getLong(0), Option(r.getString(1)), r.getSeq[Float](2),
+          r.getAs[Array[Byte]](3).toSeq, if (r.isNullAt(4)) None else Some(r.getDouble(4)))
+      }.toSeq
+      assert(got == Seq(
+        (1L, Some("a"), Seq(1.5f, -2.5f), Seq[Byte](1, 2, 3), Some(0.25)),
+        (2L, None, Seq.empty[Float], Seq.empty[Byte], None)))
+      // unsupported nested type rejects with a named error
+      val nested = Seq((1L, (2L, "x"))).toDF("id", "st")
+      val e = intercept[IllegalArgumentException](AvroIo.writeAvro(nested, dir))
+      assert(e.getMessage.contains("unsupported"))
+    }
   }
 
   test("avro rewrite clears stale parts; null array elements and bad names handled") {
-    import graft.sources.AvroIo
-    val dir = java.nio.file.Files.createTempDirectory("avro_rw").toString
-    // 4 partitions, then rewrite with 1: readAvro must see ONLY the new data
-    AvroIo.writeAvro(
-      spark.range(100).selectExpr("id", "id * 2 AS v").repartition(4), dir)
-    AvroIo.writeAvro(
-      spark.range(10).selectExpr("id", "id * 3 AS v").repartition(1), dir)
-    val back = AvroIo.readAvro(spark, dir)
-    assert(back.count() == 10L, "stale part files survived the rewrite")
-    assert(back.selectExpr("max(v)").collect()(0).getLong(0) == 27L)
-    // a legal Spark array with a null element round-trips (union items)
-    val dir2 = java.nio.file.Files.createTempDirectory("avro_nullelem").toString
-    val withNulls = Seq((1L, Seq[java.lang.Double](1.0, null, 3.0)))
-      .toDF("id", "xs")
-    AvroIo.writeAvro(withNulls, dir2)
-    val b2 = AvroIo.readAvro(spark, dir2).collect()(0)
-    assert(b2.getSeq[Any](1) == Seq(1.0, null, 3.0))
-    // hyphenated column names reject at schema build with the name cited
-    val bad = spark.range(1).selectExpr("id AS `device-id`")
-    val e2 = intercept[IllegalArgumentException](AvroIo.writeAvro(bad, dir2))
-    assert(e2.getMessage.contains("device-id"))
+    TempDirs.withTempDirs { tmp =>
+      import graft.sources.AvroIo
+      val dir = tmp("avro_rw")
+      // 4 partitions, then rewrite with 1: readAvro must see ONLY the new data
+      AvroIo.writeAvro(
+        spark.range(100).selectExpr("id", "id * 2 AS v").repartition(4), dir)
+      AvroIo.writeAvro(
+        spark.range(10).selectExpr("id", "id * 3 AS v").repartition(1), dir)
+      val back = AvroIo.readAvro(spark, dir)
+      assert(back.count() == 10L, "stale part files survived the rewrite")
+      assert(back.selectExpr("max(v)").collect()(0).getLong(0) == 27L)
+      // a legal Spark array with a null element round-trips (union items)
+      val dir2 = tmp("avro_nullelem")
+      val withNulls = Seq((1L, Seq[java.lang.Double](1.0, null, 3.0)))
+        .toDF("id", "xs")
+      AvroIo.writeAvro(withNulls, dir2)
+      val b2 = AvroIo.readAvro(spark, dir2).collect()(0)
+      assert(b2.getSeq[Any](1) == Seq(1.0, null, 3.0))
+      // hyphenated column names reject at schema build with the name cited
+      val bad = spark.range(1).selectExpr("id AS `device-id`")
+      val e2 = intercept[IllegalArgumentException](AvroIo.writeAvro(bad, dir2))
+      assert(e2.getMessage.contains("device-id"))
+    }
   }
 
   test("shard sink append merges the manifest across generations") {
-    val dir = java.nio.file.Files.createTempDirectory("shard_append").toString
-    spark.range(10).selectExpr("id", "cast(id as string) AS text").repartition(2)
-      .write.format("graft-shards").mode("append").option("path", dir).save()
-    spark.range(10, 15).selectExpr("id", "cast(id as string) AS text").repartition(1)
-      .write.format("graft-shards").mode("append").option("path", dir).save()
-    val manifest = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_MANIFEST.json")), "UTF-8")
-    val names = "\"shard\":\"([^\"]+)\"".r.findAllMatchIn(manifest).map(_.group(1)).toSeq
-    val rows = "\"rows\":(\\d+)".r.findAllMatchIn(manifest).map(_.group(1).toLong).sum
-    assert(names.size == 3 && names.distinct.size == 3, s"manifest: $names")
-    assert(rows == 15L)
-    val back = spark.read.schema("id LONG, text STRING")
-      .json(names.map(n => s"$dir/$n"): _*)
-    assert(back.count() == 15L)
+    TempDirs.withTempDirs { tmp =>
+      val dir = tmp("shard_append")
+      spark.range(10).selectExpr("id", "cast(id as string) AS text").repartition(2)
+        .write.format("graft-shards").mode("append").option("path", dir).save()
+      spark.range(10, 15).selectExpr("id", "cast(id as string) AS text").repartition(1)
+        .write.format("graft-shards").mode("append").option("path", dir).save()
+      val manifest = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "_MANIFEST.json")), "UTF-8")
+      val names = "\"shard\":\"([^\"]+)\"".r.findAllMatchIn(manifest).map(_.group(1)).toSeq
+      val rows = "\"rows\":(\\d+)".r.findAllMatchIn(manifest).map(_.group(1).toLong).sum
+      assert(names.size == 3 && names.distinct.size == 3, s"manifest: $names")
+      assert(rows == 15L)
+      val back = spark.read.schema("id LONG, text STRING")
+        .json(names.map(n => s"$dir/$n"): _*)
+      assert(back.count() == 15L)
+    }
   }
 
   test("schema registry compiles named schemas (DataGenerator analog)") {

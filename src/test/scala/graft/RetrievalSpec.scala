@@ -34,6 +34,18 @@ class RetrievalSpec extends AnyFunSuite {
     assert(rare(1L) > common(2L))
   }
 
+  test("bm25: an empty corpus fails and leaves nothing cached") {
+    val empty = corpus.filter(lit(false))
+    val q = Seq((9L, "rare")).toDF("qid", "term")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.bm25(empty, "doc_id", "text", q)
+    }
+    assert(e.getMessage.contains("empty corpus"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"cached RDDs left behind: $leaked")
+  }
+
   test("bm25: tf saturates — tripled tf less than triples the score") {
     val s = scores(Seq("common"))
     // doc 0: tf=3, doc 2: tf=1, similar dl (4 tokens each)

@@ -434,7 +434,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("quantized IVF disk index: pruned scan, recall vs exact, integer scores match q68 kernel") {
-    IvfTestKit.withTempDirs { tmp =>
+    TempDirs.withTempDirs { tmp =>
       import graft.ops.{Quantization, Similarity}
       val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       val queries = df.filter(col("vec_id") % 50 === 0)
@@ -466,7 +466,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("hash-IVF disk index: pruned scan, probe-1 is the assigned cluster, scores replay the int8 kernel") {
-    IvfTestKit.withTempDirs { tmp =>
+    TempDirs.withTempDirs { tmp =>
       import graft.ops.{Quantization, SemanticDedup}
       val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       val queries = df.filter(col("vec_id") % 50 === 0)
@@ -495,7 +495,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("hash-IVF append: build-then-append serves identically to build-on-union") {
-    IvfTestKit.withTempDirs { tmp =>
+    TempDirs.withTempDirs { tmp =>
       import graft.ops.Quantization
       val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       val queries = df.filter(col("vec_id") % 50 === 0)
@@ -558,12 +558,8 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("hash-IVF serve reads tombstones only when the index has them") {
-    IvfTestKit.withTempDirs { tmp =>
+    TempDirs.withTempDirs { tmp =>
       import graft.ops.Quantization
-      import org.apache.logging.log4j.{Level, LogManager}
-      import org.apache.logging.log4j.core.{LogEvent, Logger}
-      import org.apache.logging.log4j.core.appender.AbstractAppender
-      import org.apache.logging.log4j.core.config.Property
       val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       val queries = df.filter(col("vec_id") % 50 === 0)
       val dir = tmp("hivf_tomb")
@@ -572,27 +568,8 @@ class ScaleOpsSpec extends AnyFunSuite {
         dir, queries, "vec_id", "embedding", 10, numClusters = 8, nProbe = 2)
       // a read of the missing dir logs FileStreamSink's metadata-probe
       // WARN (a FileNotFoundException naming the path) before it fails
-      val mentions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val probe = new AbstractAppender("tombstone-probe", null, null, true,
-          Property.EMPTY_ARRAY) {
-        override def append(e: LogEvent): Unit = {
-          val text = e.getMessage.getFormattedMessage +
-            Option(e.getThrown).fold("")(_.toString)
-          if (text.contains("tombstones")) mentions.add(text)
-        }
-      }
-      val sinkLog = LogManager.getLogger(
-        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
-        .asInstanceOf[Logger]
-      val oldLevel = sinkLog.getLevel
-      probe.start()
-      sinkLog.addAppender(probe)
-      sinkLog.setLevel(Level.WARN)
-      val fresh = try serve() finally {
-        sinkLog.removeAppender(probe)
-        sinkLog.setLevel(oldLevel)
-        probe.stop()
-      }
+      val (fresh, events) = LogProbe.capture(LogProbe.FileStreamSink)(serve())
+      val mentions = events.filter(_.contains("tombstones"))
       assert(mentions.isEmpty,
         s"serving an index without deletes touched its tombstones: $mentions")
       assert(fresh.filter(col("neighbor") % 5 === 1).count() > 0)
@@ -684,7 +661,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("ivf-pq disk index: pruned scan, scores identical to the adc kernel, recall holds") {
-    IvfTestKit.withTempDirs { tmp =>
+    TempDirs.withTempDirs { tmp =>
       import graft.ops.{Pq, Similarity}
       val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       val queries = df.filter(col("vec_id") % 50 === 0)
@@ -907,7 +884,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("residual ivf-pq: wins on clustered data, pruned plan, deterministic") {
-    IvfTestKit.withTempDirs { tmp =>
+    TempDirs.withTempDirs { tmp =>
       import graft.ops.{Pq, Similarity}
       import spark.implicits._
       // planted structure — the residual premise: 8 true centers, points

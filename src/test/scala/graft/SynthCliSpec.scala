@@ -20,17 +20,19 @@ class SynthCliSpec extends AnyFunSuite {
         {"name": "x", "class": "double", "min": 0, "max": 1}]"""
 
   private def cli(format: String, quote: String): (Seq[String], Seq[String]) = {
-    val dir = Files.createTempDirectory("synth_cli")
-    val schemaFile = dir.resolve("schema.json")
-    Files.writeString(schemaFile, schema)
-    val out = dir.resolve("out").toString
-    SynthCli.run(spark, Array("-schema", schemaFile.toString, "-count", "300",
-      "-output", out, "-format", format, "-quote", quote, "-seed", "7"))
-    val sep = if (format == "csv") "," else "\t"
-    val written = spark.read.text(out).collect().map(_.getString(0)).toSeq.sorted
-    val rendered = Processors.toDelimited(Synth.dataFrame(spark, schema, 300, 7L), sep, quote)
-      .collect().map(_.getString(0)).toSeq.sorted
-    (written, rendered)
+    TempDirs.withTempDirs { tmp =>
+      val dir = java.nio.file.Paths.get(tmp("synth_cli"))
+      val schemaFile = dir.resolve("schema.json")
+      Files.writeString(schemaFile, schema)
+      val out = dir.resolve("out").toString
+      SynthCli.run(spark, Array("-schema", schemaFile.toString, "-count", "300",
+        "-output", out, "-format", format, "-quote", quote, "-seed", "7"))
+      val sep = if (format == "csv") "," else "\t"
+      val written = spark.read.text(out).collect().map(_.getString(0)).toSeq.sorted
+      val rendered = Processors.toDelimited(Synth.dataFrame(spark, schema, 300, 7L), sep, quote)
+        .collect().map(_.getString(0)).toSeq.sorted
+      (written, rendered)
+    }
   }
 
   test("-format csv -quote DOUBLE_QUOTE writes the rendered lines, no header") {

@@ -77,76 +77,80 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("warc DSv2: reads a mixed directory, prunes columns, pushes the type filter") {
-    val dir = java.nio.file.Files.createTempDirectory("warcspec").toString
-    val f1 = new FileOutputStream(s"$dir/a.warc.gz")
-    try {
-      WarcIo.writeRecordGzip(f1, "response", "urn:uuid:r1", "2025-01-01T00:00:01Z",
-        "http://a.com/1", "application/http;msgtype=response",
-        http(200, "OK", "text/html", "alpha body"))
-      WarcIo.writeRecordGzip(f1, "request", "urn:uuid:q1", "2025-01-01T00:00:01Z",
-        "http://a.com/1", "application/http;msgtype=request",
-        "GET /1 HTTP/1.1\r\n\r\n".getBytes(US_ASCII))
-    } finally f1.close()
-    val f2 = new FileOutputStream(s"$dir/b.warc")
-    try WarcIo.writeRecord(f2, "response", "urn:uuid:r2", "2025-01-01T00:00:02Z",
-      "http://b.com/2", "application/http;msgtype=response",
-      http(404, "Not Found", "text/plain", "gone"))
-    finally f2.close()
+    TempDirs.withTempDirs { tmp =>
+      val dir = tmp("warcspec")
+      val f1 = new FileOutputStream(s"$dir/a.warc.gz")
+      try {
+        WarcIo.writeRecordGzip(f1, "response", "urn:uuid:r1", "2025-01-01T00:00:01Z",
+          "http://a.com/1", "application/http;msgtype=response",
+          http(200, "OK", "text/html", "alpha body"))
+        WarcIo.writeRecordGzip(f1, "request", "urn:uuid:q1", "2025-01-01T00:00:01Z",
+          "http://a.com/1", "application/http;msgtype=request",
+          "GET /1 HTTP/1.1\r\n\r\n".getBytes(US_ASCII))
+      } finally f1.close()
+      val f2 = new FileOutputStream(s"$dir/b.warc")
+      try WarcIo.writeRecord(f2, "response", "urn:uuid:r2", "2025-01-01T00:00:02Z",
+        "http://b.com/2", "application/http;msgtype=response",
+        http(404, "Not Found", "text/plain", "gone"))
+      finally f2.close()
 
-    val df = spark.read.format("warc").load(dir)
-    assert(df.count() == 3)
-    val got = df.select("record_id", "warc_type", "http_status", "payload_len")
-      .collect().map(r => (r.getString(0), r.getString(1),
-        if (r.isNullAt(2)) -1 else r.getInt(2), r.getLong(3))).toSet
-    assert(got == Set(("urn:uuid:r1", "response", 200, 10L),
-      ("urn:uuid:q1", "request", -1, 19L),
-      ("urn:uuid:r2", "response", 404, 4L)))
-    // payload bytes round the full trip through the scan
-    val body = df.filter(col("record_id") === "urn:uuid:r1")
-      .select(col("payload").cast("string")).collect().head.getString(0)
-    assert(body == "alpha body")
-    // column pruning reaches the scan: ReadSchema narrows
-    val pruned = df.select("warc_type")
-    val scanLine = pruned.queryExecution.executedPlan.toString
-    assert(scanLine.contains("warc_type") && !scanLine.contains("payload,"),
-      scanLine)
-    // the warc_type filter is consumed at the framer (pushed, and rows
-    // of other types never materialize)
-    val resp = df.filter(col("warc_type") === "response")
-    assert(resp.queryExecution.executedPlan.toString.contains("warc_type=response"),
-      resp.queryExecution.executedPlan.toString)
-    assert(resp.count() == 2)
-    // one partition per file
-    assert(df.rdd.getNumPartitions == 2)
+      val df = spark.read.format("warc").load(dir)
+      assert(df.count() == 3)
+      val got = df.select("record_id", "warc_type", "http_status", "payload_len")
+        .collect().map(r => (r.getString(0), r.getString(1),
+          if (r.isNullAt(2)) -1 else r.getInt(2), r.getLong(3))).toSet
+      assert(got == Set(("urn:uuid:r1", "response", 200, 10L),
+        ("urn:uuid:q1", "request", -1, 19L),
+        ("urn:uuid:r2", "response", 404, 4L)))
+      // payload bytes round the full trip through the scan
+      val body = df.filter(col("record_id") === "urn:uuid:r1")
+        .select(col("payload").cast("string")).collect().head.getString(0)
+      assert(body == "alpha body")
+      // column pruning reaches the scan: ReadSchema narrows
+      val pruned = df.select("warc_type")
+      val scanLine = pruned.queryExecution.executedPlan.toString
+      assert(scanLine.contains("warc_type") && !scanLine.contains("payload,"),
+        scanLine)
+      // the warc_type filter is consumed at the framer (pushed, and rows
+      // of other types never materialize)
+      val resp = df.filter(col("warc_type") === "response")
+      assert(resp.queryExecution.executedPlan.toString.contains("warc_type=response"),
+        resp.queryExecution.executedPlan.toString)
+      assert(resp.count() == 2)
+      // one partition per file
+      assert(df.rdd.getNumPartitions == 2)
+    }
   }
 
   test("CDX sidecar splits a gz-member file into range scans; record set identical") {
-    val dir = java.nio.file.Files.createTempDirectory("warccdx").toString
-    val fos = new WarcIo.CountingOutputStream(
-      new FileOutputStream(s"$dir/seg.warc.gz"))
-    val cdx = new java.lang.StringBuilder()
-    for (i <- 0 until 40) {
-      val off = fos.count
-      WarcIo.writeRecordGzip(fos, "response", s"urn:uuid:r$i",
-        "2025-01-01T00:00:01Z", s"http://a.com/$i",
-        "application/http;msgtype=response",
-        http(200, "OK", "text/html", s"body $i " + ("x" * 200)))
-      cdx.append(off).append('\t').append(fos.count - off).append('\n')
+    TempDirs.withTempDirs { tmp =>
+      val dir = tmp("warccdx")
+      val fos = new WarcIo.CountingOutputStream(
+        new FileOutputStream(s"$dir/seg.warc.gz"))
+      val cdx = new java.lang.StringBuilder()
+      for (i <- 0 until 40) {
+        val off = fos.count
+        WarcIo.writeRecordGzip(fos, "response", s"urn:uuid:r$i",
+          "2025-01-01T00:00:01Z", s"http://a.com/$i",
+          "application/http;msgtype=response",
+          http(200, "OK", "text/html", s"body $i " + ("x" * 200)))
+        cdx.append(off).append('\t').append(fos.count - off).append('\n')
+      }
+      fos.close()
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/seg.warc.gz.cdx"), cdx.toString)
+      val whole = spark.read.format("warc").load(dir)
+      // default 64 MB target: one split for this tiny file
+      assert(whole.rdd.getNumPartitions == 1)
+      val split = spark.read.format("warc")
+        .option("cdxTargetBytes", "600").load(dir)
+      assert(split.rdd.getNumPartitions > 4,
+        s"expected many range scans, got ${split.rdd.getNumPartitions}")
+      def recs(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("record_id"), col("payload_len")).collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSet
+      assert(recs(split) == recs(whole) && recs(whole).size == 40,
+        "split read must see exactly the whole-file record set")
     }
-    fos.close()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/seg.warc.gz.cdx"), cdx.toString)
-    val whole = spark.read.format("warc").load(dir)
-    // default 64 MB target: one split for this tiny file
-    assert(whole.rdd.getNumPartitions == 1)
-    val split = spark.read.format("warc")
-      .option("cdxTargetBytes", "600").load(dir)
-    assert(split.rdd.getNumPartitions > 4,
-      s"expected many range scans, got ${split.rdd.getNumPartitions}")
-    def recs(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("record_id"), col("payload_len")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(recs(split) == recs(whole) && recs(whole).size == 40,
-      "split read must see exactly the whole-file record set")
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.sources.WarcIo
 
 class WarcStreamSpec extends AnyFunSuite {
@@ -50,70 +49,76 @@ class WarcStreamSpec extends AnyFunSuite {
   }
 
   test("micro-batch ingestion is batch-layout independent and actually batches") {
-    val dir = java.nio.file.Files.createTempDirectory("warcstream1").toString
-    writeSegments(dir, 6, 5)
-    val (one, batchesOne) = runStream(dir, 1)
-    val (all, batchesAll) = runStream(dir, 100)
-    assert(one.length == 30 && one == all)
-    assert(batchesOne == 6, s"expected 6 single-file batches, got $batchesOne")
-    assert(batchesAll == 1)
+    TempDirs.withTempDirs { tmp =>
+      val dir = tmp("warcstream1")
+      writeSegments(dir, 6, 5)
+      val (one, batchesOne) = runStream(dir, 1)
+      val (all, batchesAll) = runStream(dir, 100)
+      assert(one.length == 30 && one == all)
+      assert(batchesOne == 6, s"expected 6 single-file batches, got $batchesOne")
+      assert(batchesAll == 1)
+    }
   }
 
   test("new segments appearing mid-stream are picked up in later batches") {
-    val dir = java.nio.file.Files.createTempDirectory("warcstream2").toString
-    writeSegments(dir, 2, 3)
-    val name = "warc_stream_grow_" + java.util.UUID.randomUUID.toString.take(8)
-    val q = spark.readStream.format("warc").option("filesPerBatch", "1")
-      .load(dir).select("record_id")
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table(name).count() == 6)
-      // a third segment lands (sorts after — the archive convention)
-      val fos = new WarcIo.CountingOutputStream(
-        new java.io.FileOutputStream(s"$dir/seg-900.warc.gz"))
-      try WarcIo.writeRecordGzip(fos, "resource", "urn:s:late",
-        "2026-03-01T00:00:00Z", "https://x.example.com/late",
-        "text/plain", "late".getBytes("UTF-8"))
-      finally fos.close()
-      q.processAllAvailable()
-      assert(spark.table(name).count() == 7)
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(name)
+    TempDirs.withTempDirs { tmp =>
+      val dir = tmp("warcstream2")
+      writeSegments(dir, 2, 3)
+      val name = "warc_stream_grow_" + java.util.UUID.randomUUID.toString.take(8)
+      val q = spark.readStream.format("warc").option("filesPerBatch", "1")
+        .load(dir).select("record_id")
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(spark.table(name).count() == 6)
+        // a third segment lands (sorts after — the archive convention)
+        val fos = new WarcIo.CountingOutputStream(
+          new java.io.FileOutputStream(s"$dir/seg-900.warc.gz"))
+        try WarcIo.writeRecordGzip(fos, "resource", "urn:s:late",
+          "2026-03-01T00:00:00Z", "https://x.example.com/late",
+          "text/plain", "late".getBytes("UTF-8"))
+        finally fos.close()
+        q.processAllAvailable()
+        assert(spark.table(name).count() == 7)
+      } finally {
+        q.stop()
+        spark.catalog.dropTempView(name)
+      }
     }
   }
 
   test("a segment sorting into committed history fails loudly, not silently") {
-    val dir = java.nio.file.Files.createTempDirectory("warcstream3").toString
-    writeSegments(dir, 3, 2)
-    val name = "warc_stream_mut_" + java.util.UUID.randomUUID.toString.take(8)
-    val q = spark.readStream.format("warc").option("filesPerBatch", "10")
-      .load(dir).select("record_id")
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table(name).count() == 6)
-      // a file that sorts BEFORE the ingested prefix shifts every index
-      val fos = new java.io.FileOutputStream(s"$dir/aaa-000.warc.gz")
+    TempDirs.withTempDirs { tmp =>
+      val dir = tmp("warcstream3")
+      writeSegments(dir, 3, 2)
+      val name = "warc_stream_mut_" + java.util.UUID.randomUUID.toString.take(8)
+      val q = spark.readStream.format("warc").option("filesPerBatch", "10")
+        .load(dir).select("record_id")
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
       try {
-        val gz = new java.util.zip.GZIPOutputStream(fos)
-        WarcIo.writeRecord(gz, "resource", "urn:s:bad", "2026-03-01T00:00:00Z",
-          null, "text/plain", "bad".getBytes("UTF-8"))
-        gz.finish()
-      } finally fos.close()
-      val e = intercept[Exception] { q.processAllAvailable() }
-      assert(Option(e.getMessage).getOrElse("").contains("mutated") ||
-        e.getCause != null)
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(name)
+        q.processAllAvailable()
+        assert(spark.table(name).count() == 6)
+        // a file that sorts BEFORE the ingested prefix shifts every index
+        val fos = new java.io.FileOutputStream(s"$dir/aaa-000.warc.gz")
+        try {
+          val gz = new java.util.zip.GZIPOutputStream(fos)
+          WarcIo.writeRecord(gz, "resource", "urn:s:bad", "2026-03-01T00:00:00Z",
+            null, "text/plain", "bad".getBytes("UTF-8"))
+          gz.finish()
+        } finally fos.close()
+        val e = intercept[Exception] { q.processAllAvailable() }
+        assert(Option(e.getMessage).getOrElse("").contains("mutated") ||
+          e.getCause != null)
+      } finally {
+        q.stop()
+        spark.catalog.dropTempView(name)
+      }
     }
   }
 
   test("AvailableNow incarnations over one checkpoint: all present files, then only new ones") {
     import org.apache.spark.sql.streaming.Trigger
-    IvfTestKit.withTempDirs { tmp =>
+    TempDirs.withTempDirs { tmp =>
       val dir = tmp("warcstream_an")
       val ckpt = tmp("warcstream_an_ckpt")
       val out = tmp("warcstream_an_out")
