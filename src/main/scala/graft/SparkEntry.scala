@@ -2140,13 +2140,10 @@ object SynthQueries {
         val dir = Staging.dir("g105_shards").toString
         docsDf.write.format("graft-shards").mode("append")
           .option("path", dir).save()
-        val manifest = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(dir, "_MANIFEST.json")), "UTF-8")
-        val shards = "\"shard\":\"([^\"]+)\"".r
-          .findAllMatchIn(manifest).map(_.group(1)).toSeq
+        val shards = graft.sources.Archive.manifestFiles(dir, graft.sources.ShardSink.Layout)
         val schema = StructType(Seq(StructField("doc_id", LongType),
           StructField("lang", StringType), StructField("text", StringType)))
-        s.read.schema(schema).json(shards.map(n => s"$dir/$n"): _*)
+        s.read.schema(schema).json(shards: _*)
           .groupBy("lang")
           .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_sum"),
             sum(length(col("text")).cast("long")).as("chars"))
@@ -3025,7 +3022,7 @@ object SynthQueries {
     // raises the cutoff past the early base ordinals.
     // Streaming WARC ingestion: the crawl-loop front door. The sink
     // fixture's 4 segments arrive one per micro-batch (filesPerBatch=1
-    // over the WarcMicroBatchStream's file-count offsets), statuses
+    // over the FileListMicroBatchStream's file-count offsets), statuses
     // gate in-stream, and the memory sink accumulates exactly the
     // batch read's rows — the oracle is the same source-table
     // reconstruction q155 uses, restricted to 200-status responses.

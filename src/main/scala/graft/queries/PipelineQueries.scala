@@ -7852,11 +7852,8 @@ object PipelineQueries {
           if (it.hasNext) {
             // uuid temp + atomic swap so overlapping task attempts
             // (fault-parity kill-retry) never interleave one file
-            val tmp = graft.sources.ArchiveFs.child(outDir,
-              f".foreign-$pid%03d." + java.util.UUID.randomUUID.toString.take(8))
-            val out = new java.io.BufferedOutputStream(
-              graft.sources.ArchiveFs.create(tmp), 1 << 16)
-            try {
+            graft.sources.ArchiveFs.publish(
+                graft.sources.ArchiveFs.child(outDir, f"foreign-$pid%03d.tar")) { out =>
               it.foreach { r =>
                 val name = r.getString(1) + "." + r.getString(2)
                 graft.sources.TarIo.writeMember(out, name,
@@ -7864,9 +7861,7 @@ object PipelineQueries {
                 n += 1
               }
               graft.sources.TarIo.writeTrailer(out)
-            } finally out.close()
-            graft.sources.ArchiveFs.renameOverwrite(tmp,
-              graft.sources.ArchiveFs.child(outDir, f"foreign-$pid%03d.tar"))
+            }
           }
           Iterator.single(Row(n))
         }.agg(sum("n")).collect()
@@ -8146,11 +8141,9 @@ object PipelineQueries {
           val pid = org.apache.spark.TaskContext.getPartitionId()
           var n = 0L
           if (it.hasNext) {
-            val tmp = graft.sources.ArchiveFs.child(gzDir,
-              f".gzsrc-$pid%03d." + java.util.UUID.randomUUID.toString.take(8))
-            val out = new java.util.zip.GZIPOutputStream(
-              graft.sources.ArchiveFs.create(tmp), 1 << 16)
-            try {
+            graft.sources.ArchiveFs.publish(
+                graft.sources.ArchiveFs.child(gzDir, f"gzsrc-$pid%03d.tar.gz")) { raw =>
+              val out = new java.util.zip.GZIPOutputStream(raw, 1 << 16)
               it.foreach { r =>
                 val name = r.getString(1) + "." + r.getString(2)
                 graft.sources.TarIo.writeMember(out, name,
@@ -8158,9 +8151,8 @@ object PipelineQueries {
                 n += 1
               }
               graft.sources.TarIo.writeTrailer(out)
-            } finally out.close()
-            graft.sources.ArchiveFs.renameOverwrite(tmp,
-              graft.sources.ArchiveFs.child(gzDir, f"gzsrc-$pid%03d.tar.gz"))
+              out.close()
+            }
           }
           Iterator.single(Row(n))
         }.agg(sum("n")).collect()

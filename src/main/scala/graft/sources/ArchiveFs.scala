@@ -402,36 +402,51 @@ object ArchiveFs {
       }
     }.sortBy(_._1)
 
+  /** Publish `dst` complete-or-absent: `write` fills a hidden temp
+    * sibling (`.<name>.tmp-<uuid8>`, buffered, closed after `write`
+    * returns), which is then renamed onto `dst` — replacing it when
+    * `overwrite`, else failing if it exists. Local/HDFS `create()` makes
+    * a file visible EMPTY before its bytes land; the rename does not (on
+    * S3A it copies a COMPLETE object). Every temp-then-rename of the
+    * archive layer goes through here: manifests, sidecars, the stream
+    * cursor and order pin, transcoded shards. A failed publish deletes
+    * its temp.
+    */
+  def publish[A](dst: String, overwrite: Boolean = true)(write: OutputStream => A): A = {
+    val p = path(dst)
+    val tmp = new Path(p.getParent,
+      s".${p.getName}.tmp-${java.util.UUID.randomUUID.toString.take(8)}").toString
+    try {
+      val out = new java.io.BufferedOutputStream(create(tmp, overwrite = true), 1 << 16)
+      val a = try write(out) finally out.close()
+      if (overwrite) renameOverwrite(tmp, dst) else rename(tmp, dst)
+      a
+    } catch { case e: Throwable => delete(tmp); throw e }
+  }
+
+  def publishBytes(dst: String, bytes: Array[Byte], overwrite: Boolean = true): Unit =
+    publish(dst, overwrite)(_.write(bytes))
+
   /** Publish a new manifest generation. Call under [[withLock]].
     *
     * Object-store-safe visibility: the authoritative copy is an
-    * IMMUTABLE numbered file `_MANIFEST-<gen>.json` written with
-    * create-no-overwrite — on S3A a single atomic PUT, so a reader
-    * listing the directory always finds a COMPLETE newest generation;
-    * there is no moment where "the manifest" does not exist (the
-    * renameOverwrite swap degrades to copy+delete on object stores,
-    * leaving exactly that window). The legacy `_MANIFEST.json` is still
-    * mirrored (rename-swapped) for humans and external tooling, but
-    * [[readManifest]] never depends on it when a numbered generation
-    * exists. The last 3 generations are retained so a reader that
-    * listed just before a publish can still open its pick.
+    * IMMUTABLE numbered file `_MANIFEST-<gen>.json` published with
+    * rename-no-overwrite — a reader listing the directory always finds
+    * a COMPLETE newest generation; there is no moment where "the
+    * manifest" does not exist (the renameOverwrite swap degrades to
+    * copy+delete on object stores, leaving exactly that window). The
+    * legacy `_MANIFEST.json` is still mirrored (rename-swapped) for
+    * humans and external tooling, but [[readManifest]] never depends on
+    * it when a numbered generation exists. The last 3 generations are
+    * retained so a reader that listed just before a publish can still
+    * open its pick.
     */
   def publishManifest(dir: String, json: String): Unit = {
     val gens = manifestGens(dir)
     val next = gens.lastOption.map(_._1 + 1).getOrElse(1L)
     val bytes = json.getBytes("UTF-8")
-    // temp + rename-no-overwrite, NOT a direct create: local/HDFS
-    // create() makes the file visible EMPTY before the bytes land, and
-    // a concurrent reader picking the newest generation would read a
-    // torn manifest; the rename publishes it complete-or-absent (on
-    // S3A the Hadoop rename is a copy of a COMPLETE object — same
-    // visibility guarantee, no empty window)
-    val gTmp = child(dir, f"._MANIFEST-$next%012d.tmp")
-    writeBytes(gTmp, bytes, overwrite = true)
-    rename(gTmp, child(dir, f"_MANIFEST-$next%012d.json"))
-    val tmp = child(dir, f"._MANIFEST.$next.tmp")
-    writeBytes(tmp, bytes, overwrite = true)
-    renameOverwrite(tmp, child(dir, "_MANIFEST.json"))
+    publishBytes(child(dir, f"_MANIFEST-$next%012d.json"), bytes, overwrite = false)
+    publishBytes(child(dir, "_MANIFEST.json"), bytes)
     gens.dropRight(2).foreach { case (_, p) => delete(p) } // keep 3 incl. next
   }
 

@@ -11,8 +11,22 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
   * committed prefix validated against every fresh listing (the file
   * at n-1 must still be the one the offset named, so deletion or
   * reordering of ingested history fails loudly instead of silently
-  * skewing replay). Subclasses supply the listing and the per-file
-  * partition planning.
+  * skewing replay). Files are listed and split by [[Archive]]; an
+  * empty or missing dir is "nothing yet".
+  *
+  * Listing order: manifest (append) order under `manifestOnly`, else
+  * name order — new files must sort after ingested ones. With
+  * `pinOrder` (the `wds` source) a dir that has a manifest is read in
+  * manifest order even without `manifestOnly`: the sink's own
+  * `part-<random gen>-NNNNN` names sort a second generation before the
+  * first about half the time, which would fail the prefix validation.
+  * That choice is PINNED per stream, persisted under the checkpoint at
+  * the first nonempty observation: a foreign dir that gains a manifest
+  * MID-STREAM (someone runs the sink into it), or whose listing order
+  * differs from manifest append order, must not flip modes — the
+  * committed prefix would fail validation and the stream could never
+  * resume without a new checkpoint. An EMPTY dir defers the decision
+  * (nothing committed yet, so switching is still free).
   *
   * Trigger.AvailableNow drives the stream itself: the run's end is the
   * listing length when the query starts, reached in batches of at most
@@ -22,16 +36,39 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
   * `latestOffset()`, so a run would read one batch's worth of files and
   * stop.
   */
-abstract class FileListMicroBatchStream(filesPerBatch: Int,
-    metadataPath: String = null)
+final class FileListMicroBatchStream(path: String, layout: Archive.Layout,
+    targetBytes: Long, filesPerBatch: Int, manifestOnly: Boolean,
+    metadataPath: String, pinOrder: Boolean, readers: () => PartitionReaderFactory)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   require(filesPerBatch >= 1, s"filesPerBatch must be >= 1: $filesPerBatch")
 
-  /** The current stable-ordered file list (empty = nothing yet). */
-  protected def current(): Vector[String]
+  @volatile private var pinned: Option[Boolean] = None // true = manifest order
 
-  /** Scan partitions for one listed file. */
-  protected def partitionsFor(file: String): Seq[InputPartition]
+  /** Manifest order (true) or name order (false); None defers. */
+  private def manifestOrder(): Option[Boolean] =
+    if (manifestOnly) Some(true)
+    else if (!pinOrder) Some(false)
+    else pinned.orElse {
+      val pin = Option(metadataPath).map(m => ArchiveFs.child(m, "graft-wds-order"))
+      val fromDisk = pin.filter(ArchiveFs.exists)
+        .map(p => ArchiveFs.readString(p).trim == "manifest")
+      val decided = fromDisk.orElse {
+        if (ArchiveFs.hasManifest(path)) Some(true)
+        else if (Archive.listed(Archive.listFiles(path, layout)).nonEmpty) Some(false)
+        else None // nothing yet: defer the pin
+      }
+      if (fromDisk.isEmpty) for (m <- decided; p <- pin)
+        ArchiveFs.publishBytes(p, (if (m) "manifest" else "listing").getBytes("UTF-8"))
+      pinned = decided
+      decided
+    }
+
+  /** The current stable-ordered file list (empty = nothing yet). */
+  private def current(): Vector[String] = manifestOrder() match {
+    case Some(true)  => Archive.listed(Archive.manifestFiles(path, layout))
+    case Some(false) => Archive.listed(Archive.listFiles(path, layout))
+    case None        => Vector.empty
+  }
 
   // the last offset this stream ADVANCED to, with its remembered
   // last-file name — latestOffset validates THIS against each fresh
@@ -60,12 +97,8 @@ abstract class FileListMicroBatchStream(filesPerBatch: Int,
       case None => FileListOffset(0L, "")
     }
 
-  private def writeCursor(o: FileListOffset): Unit = cursorFile.foreach { f =>
-    ArchiveFs.mkdirs(metadataPath)
-    val tmp = f + ".tmp-" + java.util.UUID.randomUUID.toString.take(8)
-    ArchiveFs.writeBytes(tmp, o.json().getBytes("UTF-8"), overwrite = true)
-    ArchiveFs.renameOverwrite(tmp, f)
-  }
+  private def writeCursor(o: FileListOffset): Unit =
+    cursorFile.foreach(ArchiveFs.publishBytes(_, o.json().getBytes("UTF-8")))
 
   private def offsetAt(fs: Vector[String], n: Long): FileListOffset =
     FileListOffset(n, if (n == 0) "" else fs((n - 1).toInt))
@@ -124,10 +157,10 @@ abstract class FileListMicroBatchStream(filesPerBatch: Int,
     val fs = current()
     validate(fs, s)
     validate(fs, e)
-    fs.slice(s.n.toInt, e.n.toInt).flatMap(partitionsFor).toArray
+    fs.slice(s.n.toInt, e.n.toInt).flatMap(Archive.splits(_, layout, targetBytes)).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory
+  override def createReaderFactory(): PartitionReaderFactory = readers()
 }
 
 /** Count of ingested files plus the name of the last one — the name

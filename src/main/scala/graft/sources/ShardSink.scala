@@ -6,8 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability,
   TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory,
-  LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -18,22 +17,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `synth()` table function, injected expressions/rules/strategies)
   * with the write half of the V2 API.
   *
-  * Commit protocol (the part that makes it exactly-once):
-  *   - each task writes its rows to `path/_tmp/<uuid>.jsonl` and
-  *     reports the temp name + row count in its commit message;
-  *     speculative/retried attempts write DIFFERENT uuids and only the
-  *     committed attempt's message reaches the driver;
-  *   - the driver's BatchWrite.commit renames committed temp files to
-  *     generation-unique `shard-<gen>-NNNNN.jsonl` names, then swaps in
-  *     `_MANIFEST.json` (temp file + ATOMIC_MOVE) listing every shard
-  *     with its row count — readers that go through the manifest never
-  *     observe a partial write, and a crash mid-commit leaves the
-  *     previous generation complete and readable;
-  *   - abort() deletes the temp directory, leaving the destination
-  *     untouched.
-  *
-  * Rows are serialized with Spark's own JacksonGenerator, so output
-  * matches `to_json` semantics exactly. Usage:
+  * Layout and commit protocol are [[Archive]]'s: task temps under
+  * `_tmp/<gen>/`, driver-published `shard-<gen>-NNNNN.jsonl` files and
+  * a `{"shard":..,"rows":..}` manifest; `mode("overwrite")` replaces the
+  * previous shard set. Rows are serialized with Spark's own
+  * JacksonGenerator, so output matches `to_json` semantics exactly.
+  * Usage:
   * {{{ df.write.format("graft-shards").option("path", dir).save() }}}
   */
 final class ShardSink extends TableProvider with DataSourceRegister {
@@ -46,6 +35,10 @@ final class ShardSink extends TableProvider with DataSourceRegister {
     new ShardTable(schema, new CaseInsensitiveStringMap(properties))
 }
 
+object ShardSink {
+  val Layout: Archive.Layout = Archive.Layout("shard", "shard", "rows", Seq(".jsonl"))
+}
+
 final class ShardTable(schema: StructType, opts: CaseInsensitiveStringMap)
     extends Table with SupportsWrite {
   override def name(): String = s"graft-shards(${opts.get("path")})"
@@ -56,142 +49,30 @@ final class ShardTable(schema: StructType, opts: CaseInsensitiveStringMap)
     val path = Option(opts.get("path")).orElse(Option(info.options.get("path")))
       .getOrElse(throw new IllegalArgumentException(
         "graft-shards sink requires a 'path' option"))
-    new ShardWriteBuilder(path, info.schema())
+    new ArchiveWriteBuilder(path, ShardSink.Layout, ShardWriter.at(info.schema().json))
   }
 }
 
-/** TRUNCATE (mode("overwrite")) replaces the previous shard set: new
-  * shards are published under generation-unique names first, the
-  * manifest swap (ATOMIC_MOVE) is the atomic point, and only then are
-  * the no-longer-referenced old shard files deleted — a crash at any
-  * step leaves exactly one complete generation on disk.
-  *
-  * Filesystem: all IO goes through [[ArchiveFs]] (the Hadoop
-  * FileSystem API), so `path` may be local, hdfs://, or s3a:// —
-  * renames are atomic on HDFS/POSIX and degrade to copy+delete on
-  * object stores (the same caveat as Spark's own v1 committers,
-  * documented on [[ArchiveFs]]). The protocol shape (uuid temps ->
-  * driver-published manifest) is storage-agnostic.
-  */
-final class ShardWriteBuilder(path: String, schema: StructType)
-    extends WriteBuilder
-    with org.apache.spark.sql.connector.write.SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new ShardBatchWrite(path, schema, doTruncate)
-  }
-}
-
-final case class ShardCommit(tmpName: String, rows: Long) extends WriterCommitMessage
-
-/** IO through [[ArchiveFs]] (Hadoop FileSystem) and the same
-  * concurrency hardening as [[WarcBatchWrite]]: a driver-minted
-  * generation id namespaces task temps (`_tmp/<gen>/`), and the
-  * manifest read-modify-write runs under `_MANIFEST.lock`, so
-  * concurrent append jobs serialize instead of clobbering each other.
-  */
-final class ShardBatchWrite(path: String, schema: StructType,
-    truncate: Boolean = false) extends BatchWrite {
-  // generation-unique names: the previous shard set AND the manifest
-  // pointing at it stay fully intact and readable until the manifest
-  // swap below. A crash anywhere before the swap leaves the OLD
-  // dataset complete; a crash after it leaves the NEW one — never a
-  // mixed, partial, or empty state.
-  private val gen = java.util.UUID.randomUUID.toString.take(8)
-  private def tmpDir = ArchiveFs.child(ArchiveFs.child(path, "_tmp"), gen)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new ShardWriterFactory(tmpDir, schema.json, ArchiveFs.carrier())
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    ArchiveFs.mkdirs(path)
-    val committed = messages.collect { case ShardCommit(tmp, rows) => (tmp, rows) }
-      .filter(_._2 > 0).sortBy(_._1)
-    val entries = committed.zipWithIndex.map { case ((tmp, rows), i) =>
-      val name = f"shard-$gen-$i%05d.jsonl"
-      ArchiveFs.rename(ArchiveFs.child(tmpDir, tmp), ArchiveFs.child(path, name))
-      (name, rows)
-    }
-    // empty-task temp files (0 rows) just get cleaned with the tmp dir
-    // append mode keeps the previous generation's entries; truncate
-    // (mode("overwrite")) replaces them
-    val entryRe = """\{"shard":"([^"]+)","rows":(\d+)\}""".r
-    ArchiveFs.withLock(ArchiveFs.child(path, "_MANIFEST.lock")) {
-      val prev: Seq[String] =
-        if (!truncate)
-          ArchiveFs.readManifest(path)
-            .map(m => entryRe.findAllMatchIn(m).map(_.matched).toSeq)
-            .getOrElse(Seq.empty)
-        else Seq.empty
-      val manifest =
-        (prev ++ entries.map { case (n, r) => s"""{"shard":"$n","rows":$r}""" })
-          .mkString("[", ",", "]")
-      // the atomic publish point: immutable numbered generation +
-      // legacy mirror (see ArchiveFs.publishManifest)
-      ArchiveFs.publishManifest(path, manifest)
-    }
-    // only AFTER the swap: drop shard files the new manifest no longer
-    // references (previous generations under truncate)
-    if (truncate) {
-      val keep = entries.map(_._1).toSet
-      ArchiveFs.list(path).foreach { p =>
-        val n = ArchiveFs.name(p)
-        if (n.startsWith("shard-") && n.endsWith(".jsonl") && !keep(n))
-          ArchiveFs.delete(p)
-      }
-    }
-    deleteTmp()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = deleteTmp()
-
-  private def deleteTmp(): Unit = {
-    ArchiveFs.delete(tmpDir, recursive = true)
-    ArchiveFs.deleteIfEmptyDir(ArchiveFs.child(path, "_tmp"))
-  }
-}
-
-final class ShardWriterFactory(tmpDir: String, schemaJson: String,
-    confSer: SerializableHadoopConf) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    confSer.install() // driver conf -> executor tasks
-    new ShardWriter(tmpDir, schemaJson)
-  }
-}
-
-/** One temp JSONL file per task attempt; the uuid name makes retried /
-  * speculative attempts collision-free, and only the winning attempt's
-  * commit message is published by the driver.
-  */
+/** One temp JSONL part per task attempt. */
 final class ShardWriter(tmpDir: String, schemaJson: String)
-    extends DataWriter[InternalRow] {
+    extends ArchiveWriter(tmpDir, ShardSink.Layout, ".jsonl") {
   private val st = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
     .asInstanceOf[StructType]
-  private val tmpName = java.util.UUID.randomUUID.toString + ".jsonl"
-  ArchiveFs.mkdirs(tmpDir)
-  private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-    ArchiveFs.create(ArchiveFs.child(tmpDir, tmpName)), "UTF-8"))
+  openPart()
   private val gen = new org.apache.spark.sql.catalyst.json.JacksonGenerator(
-    st, out, new org.apache.spark.sql.catalyst.json.JSONOptions(
-      Map.empty[String, String], "UTC"))
-  private var rows = 0L
+    st, new java.io.OutputStreamWriter(out, "UTF-8"),
+    new org.apache.spark.sql.catalyst.json.JSONOptions(Map.empty[String, String], "UTC"))
 
   override def write(record: InternalRow): Unit = {
     gen.write(record)
     gen.writeLineEnding()
-    rows += 1
+    units += 1
   }
 
-  override def commit(): WriterCommitMessage = {
-    gen.close()
-    ShardCommit(tmpName, rows)
-  }
+  override protected def finish(): Unit = { gen.close(); closePart() }
+}
 
-  override def abort(): Unit = {
-    gen.close()
-    ArchiveFs.delete(ArchiveFs.child(tmpDir, tmpName))
-  }
-
-  override def close(): Unit = ()
+object ShardWriter {
+  def at(schemaJson: String): String => DataWriter[InternalRow] =
+    dir => new ShardWriter(dir, schemaJson)
 }

@@ -89,57 +89,25 @@ object TarDataSource {
     else (base.substring(0, dot), base.substring(dot + 1))
   }
 
-  def isShard(n: String): Boolean = n.endsWith(".tar") || n.endsWith(".tar.gz")
+  val Layout: Archive.Layout = Archive.Layout("part", "shard", "samples",
+    Seq(".tar", ".tar.gz"), ".idx")
 
-  /** Shard files under `path` (or `path` itself), name-sorted. */
-  def listFiles(path: String): Seq[String] = {
-    val out =
-      if (ArchiveFs.isDirectory(path))
-        ArchiveFs.list(path).filter(f => isShard(ArchiveFs.name(f))).toVector
-      else Vector(path)
-    require(out.nonEmpty, s"no .tar / .tar.gz shards under $path")
-    out.sorted
-  }
-
-  /** Shards named by `_MANIFEST.json` ([[WdsBatchWrite]]'s atomic
-    * publish point), in manifest = append order.
-    */
-  def manifestFiles(path: String): Seq[String] = {
-    val m = ArchiveFs.readManifest(path)
-    require(m.nonEmpty,
-      s"manifest read requested but no manifest under $path")
-    """"shard":"([^"]+)"""".r.findAllMatchIn(m.get)
-      .map(mm => ArchiveFs.child(path, mm.group(1))).toVector
-  }
+  /** Shards named by the manifest, in manifest = append order. */
+  def manifestFiles(path: String): Seq[String] = Archive.manifestFiles(path, Layout)
 
   /** Default ranged-split target — same rationale as the WARC CDX cut. */
   val TargetSplitBytes: Long = 64L * 1024 * 1024
+
+  /** WebDataset's conventional shard size band is 100 MB-1 GB; the
+    * default sits low enough that local tests exercise rolling.
+    */
+  val DefaultTargetShardBytes: Long = 256L * 1024 * 1024
 
   /** Ascending SAMPLE start offsets from `<shard>.idx` (the sink's
     * sidecar: `offset<TAB>key` per sample, comments ignored). None
     * when no sidecar exists — foreign shards read whole-file.
     */
-  def idxOffsets(file: String): Option[Array[Long]] = {
-    val idx = file + ".idx"
-    if (!ArchiveFs.exists(idx)) return None
-    Some(ArchiveFs.readString(idx).linesIterator
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map(_.split("\t")(0).toLong).toArray.sorted)
-  }
-
-  /** Scan partitions for one shard: ranged splits cut at SAMPLE
-    * boundaries when the index sidecar exists (so `groupBy(shard,
-    * key)` sample assembly stays intra-partition), else the whole
-    * file. Gzipped shards are never split (the stream is not
-    * seekable).
-    */
-  def partitionsFor(f: String, targetBytes: Long): Seq[InputPartition] =
-    if (!f.endsWith(".gz")) idxOffsets(f) match {
-      case Some(offs) if offs.nonEmpty =>
-        ArrayOfCuts.build(offs, ArchiveFs.length(f), targetBytes)
-          .map { case (s, e) => TarInputPartition(f, s, e): InputPartition }
-      case _ => Seq(TarInputPartition(f, 0L, Long.MaxValue))
-    } else Seq(TarInputPartition(f, 0L, Long.MaxValue))
+  def idxOffsets(file: String): Option[Array[Long]] = Archive.offsets(file, Layout)
 }
 
 final class TarTable(path: String, tableSchema: StructType = TarDataSource.Schema)
@@ -168,13 +136,14 @@ final class TarTable(path: String, tableSchema: StructType = TarDataSource.Schem
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     val target = Option(info.options.get("targetShardBytes")).map(_.toLong)
-      .getOrElse(WdsBatchWrite.DefaultTargetShardBytes)
+      .getOrElse(TarDataSource.DefaultTargetShardBytes)
     // selective compaction: an append whose commit atomically swaps the
     // named shards out of the manifest (and off disk) as the new
-    // generation's entries swap in — see WdsBatchWrite
+    // generation's entries swap in — see Archive.Replace
     val replace = Option(info.options.get("replaceShards"))
       .map(_.split(",").toSet.filter(_.nonEmpty)).getOrElse(Set.empty[String])
-    new WdsWriteBuilder(path, info.schema(), target, info.queryId(), replace)
+    new ArchiveWriteBuilder(path, TarDataSource.Layout,
+      WdsWriter.at(info.schema().json, target), replace, info.queryId(), Some("key"))
   }
 }
 
@@ -213,13 +182,6 @@ final class TarScanBuilder(path: String, filesPerBatch: Int, manifestOnly: Boole
       targetBytes, shards)
 }
 
-/** One scan task: the byte range [start, end) of `file` — the whole
-  * file (end = Long.MaxValue) or a run of whole SAMPLES cut at index
-  * offsets.
-  */
-final case class TarInputPartition(file: String, start: Long, end: Long)
-    extends InputPartition
-
 final class TarScan(path: String, required: StructType,
     extFilter: Option[Set[String]], filesPerBatch: Int, manifestOnly: Boolean,
     targetBytes: Long = TarDataSource.TargetSplitBytes,
@@ -234,89 +196,17 @@ final class TarScan(path: String, required: StructType,
   override def planInputPartitions(): Array[InputPartition] =
     (shards match {
       case Some(names) => names.map(n => ArchiveFs.child(path, n))
-      case None =>
-        if (manifestOnly) TarDataSource.manifestFiles(path)
-        else TarDataSource.listFiles(path)
-    }).flatMap(f => TarDataSource.partitionsFor(f, targetBytes)).toArray
+      case None => Archive.files(path, TarDataSource.Layout, manifestOnly)
+    }).flatMap(Archive.splits(_, TarDataSource.Layout, targetBytes)).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TarReaderFactory(required, extFilter, ArchiveFs.carrier())
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new TarMicroBatchStream(path, required, extFilter, filesPerBatch,
-      manifestOnly, targetBytes, checkpointLocation)
-}
-
-final class TarMicroBatchStream(path: String, required: StructType,
-    extFilter: Option[Set[String]], filesPerBatch: Int, manifestOnly: Boolean,
-    targetBytes: Long = TarDataSource.TargetSplitBytes,
-    checkpointLocation: String = null)
-    extends FileListMicroBatchStream(filesPerBatch, checkpointLocation) {
-  // Directory mode prefers manifest order when _MANIFEST.json exists:
-  // the stream's offsets pin a committed PREFIX, so the listing must
-  // only ever grow at the tail — true of the manifest (append order by
-  // construction) but NOT of a name-sorted listing of the sink's own
-  // shards (part-<random gen>-NNNNN.tar: a second append generation
-  // sorts before the first about half the time and the stream fails
-  // its prefix validation). Plain name-sorted directory mode remains
-  // for foreign corpora, which must add files in ascending name order.
-  //
-  // The choice is PINNED per stream, persisted under the checkpoint at
-  // the first nonempty observation: a foreign dir that gains a manifest
-  // MID-STREAM (someone runs the sink into it), or whose listing order
-  // differs from manifest append order, must not flip modes — the
-  // committed prefix would fail validation and the stream could never
-  // resume without a new checkpoint. An EMPTY dir defers the decision
-  // (nothing committed yet, so switching is still free).
-  private val orderPin: Option[String] =
-    Option(checkpointLocation).map(m => ArchiveFs.child(m, "graft-wds-order"))
-  @volatile private var orderMode: Option[Boolean] = None // true = manifest
-  private def useManifest(): Option[Boolean] = orderMode.orElse {
-    val fromDisk = orderPin
-      .filter(ArchiveFs.exists)
-      .map(p => ArchiveFs.readString(p).trim == "manifest")
-    val decided = fromDisk.orElse {
-      if (ArchiveFs.hasManifest(path)) Some(true)
-      else {
-        val any =
-          try TarDataSource.listFiles(path).nonEmpty
-          catch { case _: IllegalArgumentException => false }
-        if (any) Some(false) else None // nothing yet: defer the pin
-      }
-    }
-    if (fromDisk.isEmpty) decided.foreach { m =>
-      orderPin.foreach { p =>
-        ArchiveFs.mkdirs(checkpointLocation)
-        val tmp = p + ".tmp-" + java.util.UUID.randomUUID.toString.take(8)
-        ArchiveFs.writeBytes(tmp,
-          (if (m) "manifest" else "listing").getBytes("UTF-8"), overwrite = true)
-        ArchiveFs.renameOverwrite(tmp, p)
-      }
-    }
-    orderMode = decided
-    decided
-  }
-
-  override protected def current(): Vector[String] =
-    if (manifestOnly)
-      try TarDataSource.manifestFiles(path).toVector
-      catch { case _: IllegalArgumentException => Vector.empty }
-    else useManifest() match {
-      case Some(true) =>
-        try TarDataSource.manifestFiles(path).toVector
-        catch { case _: IllegalArgumentException => Vector.empty }
-      case Some(false) =>
-        try TarDataSource.listFiles(path).toVector
-        catch { case _: IllegalArgumentException => Vector.empty }
-      case None => Vector.empty
-    }
-
-  override protected def partitionsFor(f: String): Seq[InputPartition] =
-    TarDataSource.partitionsFor(f, targetBytes)
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TarReaderFactory(required, extFilter, ArchiveFs.carrier())
+    new FileListMicroBatchStream(path, TarDataSource.Layout, targetBytes,
+      filesPerBatch, manifestOnly, checkpointLocation, pinOrder = true,
+      () => new TarReaderFactory(required, extFilter, ArchiveFs.carrier()))
 }
 
 final class TarReaderFactory(required: StructType, extFilter: Option[Set[String]],
@@ -326,16 +216,12 @@ final class TarReaderFactory(required: StructType, extFilter: Option[Set[String]
     // ship the driver session's Hadoop conf (s3a credentials etc.) to
     // executors that have no SparkSession of their own
     confSer.install()
-    val p = partition.asInstanceOf[TarInputPartition]
+    val p = partition.asInstanceOf[ArchiveSplit]
     val file = p.file
     new PartitionReader[InternalRow] {
-      // ranged split: positioned open at a sample boundary; the range
-      // ends at the next split's first header, where the framer's
-      // clean-EOF rule stops the walk
-      private val raw = ArchiveFs.open(file, p.start)
-      private val bounded: java.io.InputStream =
-        if (p.end == Long.MaxValue) raw
-        else new WarcDataSource.BoundedInputStream(raw, p.end - p.start)
+      // a ranged split opens at a sample boundary and ends at the next
+      // split's first header, where the framer's clean-EOF rule stops
+      private val bounded = Archive.open(p)
       private val in: java.io.InputStream =
         if (file.endsWith(".gz"))
           new java.util.zip.GZIPInputStream(bounded, 1 << 16)

@@ -69,34 +69,17 @@ object WarcDataSource {
     */
   val TargetSplitBytes: Long = 64L * 1024 * 1024
 
+  val Layout: Archive.Layout = Archive.Layout("part", "segment", "records",
+    Seq(".warc", ".warc.gz"), ".cdx", memberGzip = true)
+
   /** Ascending record offsets from `<file>.cdx` (graft's minimal CDX:
     * `offset<TAB>length` per record; comment lines ignored). None when
-    * no sidecar exists. Reads through [[ArchiveFs]], so sidecars on
-    * hdfs://s3a:// split exactly like local ones.
+    * no sidecar exists.
     */
-  def cdxOffsets(file: String): Option[Array[Long]] = {
-    val cdx = file + ".cdx"
-    if (!ArchiveFs.exists(cdx)) return None
-    Some(ArchiveFs.readString(cdx).linesIterator
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map(_.split("\t")(0).toLong).toArray.sorted)
-  }
+  def cdxOffsets(file: String): Option[Array[Long]] = Archive.offsets(file, Layout)
 
-  /** Reads at most `limit` bytes from `in`. */
-  final class BoundedInputStream(in: java.io.InputStream, limit: Long)
-      extends java.io.InputStream {
-    private var left = limit
-    override def read(): Int =
-      if (left <= 0) -1
-      else { val b = in.read(); if (b >= 0) left -= 1; b }
-    override def read(buf: Array[Byte], off: Int, len: Int): Int = {
-      if (left <= 0) return -1
-      val k = in.read(buf, off, math.min(len.toLong, left).toInt)
-      if (k > 0) left -= k
-      k
-    }
-    override def close(): Unit = in.close()
-  }
+  /** WARC segment files under `path` (or `path` itself), name-sorted. */
+  def listFiles(path: String): Seq[String] = Archive.listFiles(path, Layout)
 
   val Schema: StructType = StructType(Seq(
     StructField("record_id", StringType),
@@ -113,34 +96,6 @@ object WarcDataSource {
     StructField("warc_profile", StringType),   // WARC-Profile (revisit)
     StructField("payload_decoded", BooleanType), // TE/CE honesty flag
     StructField("truncated", StringType))) // WARC-Truncated reason
-
-  /** Segment files named by `_MANIFEST.json` (the [[WarcSink]] commit
-    * protocol's atomic publish point), in manifest = APPEND order. A
-    * manifest-driven read never observes a partial commit, and — since
-    * manifest order is generation order — never depends on how segment
-    * NAMES sort, unlike the directory-listing path.
-    */
-  def manifestFiles(path: String): Seq[String] = {
-    val m = ArchiveFs.readManifest(path)
-    require(m.nonEmpty,
-      s"manifest read requested but no manifest under $path")
-    """"segment":"([^"]+)"""".r.findAllMatchIn(m.get)
-      .map(mm => ArchiveFs.child(path, mm.group(1))).toVector
-  }
-
-  /** WARC segment files under `path` (or `path` itself), sorted for a
-    * deterministic partition order.
-    */
-  def listFiles(path: String): Seq[String] = {
-    def isWarc(n: String): Boolean =
-      n.endsWith(".warc") || n.endsWith(".warc.gz")
-    val out =
-      if (ArchiveFs.isDirectory(path))
-        ArchiveFs.list(path).filter(f => isWarc(ArchiveFs.name(f))).toVector
-      else Vector(path)
-    require(out.nonEmpty, s"no .warc / .warc.gz files under $path")
-    out.sorted
-  }
 }
 
 final class WarcTable(path: String, targetBytes: Long,
@@ -162,7 +117,8 @@ final class WarcTable(path: String, targetBytes: Long,
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     val gz = Option(info.options.get("compression")).forall(_ != "none")
-    new WarcWriteBuilder(path, info.schema(), gz)
+    new ArchiveWriteBuilder(path, WarcDataSource.Layout,
+      WarcWriter.at(info.schema().json, gz))
   }
 }
 
@@ -191,13 +147,6 @@ final class WarcScanBuilder(path: String, targetBytes: Long,
       manifestOnly)
 }
 
-/** One scan task: the byte range [start, end) of `file` — the whole
-  * file when no CDX sidecar exists, else a run of whole gzip members /
-  * records cut at CDX offsets.
-  */
-final case class WarcInputPartition(file: String, start: Long, end: Long)
-    extends InputPartition
-
 final class WarcScan(path: String, required: StructType,
     typeFilter: Option[String], targetBytes: Long,
     filesPerBatch: Int = 1, manifestOnly: Boolean = false) extends Scan with Batch {
@@ -205,8 +154,9 @@ final class WarcScan(path: String, required: StructType,
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new WarcMicroBatchStream(path, required, typeFilter, targetBytes,
-      filesPerBatch, manifestOnly, checkpointLocation)
+    new FileListMicroBatchStream(path, WarcDataSource.Layout, targetBytes,
+      filesPerBatch, manifestOnly, checkpointLocation, pinOrder = false,
+      () => new WarcReaderFactory(required, typeFilter, ArchiveFs.carrier()))
   override def description(): String =
     s"WarcScan($path, cols=${required.fieldNames.mkString(",")}" +
       typeFilter.map(t => s", warc_type=$t").getOrElse("") + ")"
@@ -222,37 +172,11 @@ final class WarcScan(path: String, required: StructType,
     * No sidecar → one partition for the whole file.
     */
   override def planInputPartitions(): Array[InputPartition] =
-    (if (manifestOnly) WarcDataSource.manifestFiles(path)
-     else WarcDataSource.listFiles(path)).flatMap { f =>
-      WarcDataSource.cdxOffsets(f) match {
-        case Some(offs) if offs.nonEmpty =>
-          val size = ArchiveFs.length(f)
-          val cuts = ArrayOfCuts.build(offs, size, targetBytes)
-          cuts.map { case (s, e) => WarcInputPartition(f, s, e): InputPartition }
-        case _ =>
-          Seq(WarcInputPartition(f, 0L, Long.MaxValue): InputPartition)
-      }
-    }.toArray
+    Archive.files(path, WarcDataSource.Layout, manifestOnly)
+      .flatMap(Archive.splits(_, WarcDataSource.Layout, targetBytes)).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new WarcReaderFactory(required, typeFilter, ArchiveFs.carrier())
-}
-
-/** Greedy record-boundary splitter: walk the ascending offsets and cut
-  * a new range whenever the current one passes `target` bytes.
-  */
-private[sources] object ArrayOfCuts {
-  def build(offsets: Array[Long], fileSize: Long, target: Long): Seq[(Long, Long)] = {
-    val cuts = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var start = 0L
-    var i = 1
-    while (i < offsets.length) {
-      if (offsets(i) - start >= target) { cuts += ((start, offsets(i))); start = offsets(i) }
-      i += 1
-    }
-    cuts += ((start, fileSize))
-    cuts.toSeq
-  }
 }
 
 final class WarcReaderFactory(required: StructType, typeFilter: Option[String],
@@ -262,20 +186,14 @@ final class WarcReaderFactory(required: StructType, typeFilter: Option[String],
     // ship the driver session's Hadoop conf (s3a credentials etc.) to
     // executors that have no SparkSession of their own
     confSer.install()
-    val p = partition.asInstanceOf[WarcInputPartition]
-    val file = p.file
+    val p = partition.asInstanceOf[ArchiveSplit]
     new PartitionReader[InternalRow] {
-      // range scan: a positioned Hadoop-FS open at the split start —
-      // CDX cuts sit on record/member boundaries, so the range is a
-      // self-contained WARC stream (on hdfs/s3a this is a ranged read,
-      // not a skip loop)
-      private val in = ArchiveFs.open(file, p.start)
-      private val bounded: java.io.InputStream =
-        if (p.end == Long.MaxValue) in
-        else new WarcDataSource.BoundedInputStream(in, p.end - p.start)
+      // CDX cuts sit on record/member boundaries: the range is a
+      // self-contained WARC stream
+      private val in = Archive.open(p)
       private val wantPayload =
         required.fieldNames.contains("payload")
-      private val base = WarcIo.records(bounded, file.endsWith(".gz"), wantPayload)
+      private val base = WarcIo.records(in, p.file.endsWith(".gz"), wantPayload)
       private val it = typeFilter match {
         case Some(t) => base.filter(_.warcType == t)
         case None    => base
@@ -319,43 +237,4 @@ final class WarcReaderFactory(required: StructType, typeFilter: Option[String],
       override def close(): Unit = in.close()
     }
   }
-}
-
-/** Micro-batch WARC ingestion: the crawl-loop shape where segment
-  * files land in a directory as the crawler rolls them, and the
-  * pipeline (extract -> gate -> dedup index) consumes them
-  * incrementally. Offset/validation machinery lives in
-  * [[FileListMicroBatchStream]] (shared with the `wds` tar source);
-  * this class supplies the segment listing — directory mode sorts by
-  * NAME (new segments must sort after ingested ones), manifest mode
-  * uses APPEND order so generation names are free to sort anywhere —
-  * and the per-file CDX-cut planning, so intra-file parallelism
-  * survives streaming.
-  */
-final class WarcMicroBatchStream(path: String, required: StructType,
-    typeFilter: Option[String], targetBytes: Long, filesPerBatch: Int,
-    manifestOnly: Boolean = false, checkpointLocation: String = null)
-    extends FileListMicroBatchStream(filesPerBatch, checkpointLocation) {
-
-  /** Segment list; an empty/missing dir is just "nothing yet". */
-  override protected def current(): Vector[String] =
-    if (manifestOnly)
-      try WarcDataSource.manifestFiles(path).toVector
-      catch { case _: IllegalArgumentException => Vector.empty }
-    else
-      try WarcDataSource.listFiles(path).toVector
-      catch { case _: IllegalArgumentException => Vector.empty }
-
-  override protected def partitionsFor(f: String): Seq[InputPartition] =
-    WarcDataSource.cdxOffsets(f) match {
-      case Some(offs) if offs.nonEmpty =>
-        val size = ArchiveFs.length(f)
-        ArrayOfCuts.build(offs, size, targetBytes)
-          .map { case (a, b) => WarcInputPartition(f, a, b): InputPartition }
-      case _ =>
-        Seq(WarcInputPartition(f, 0L, Long.MaxValue): InputPartition)
-    }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required, typeFilter, ArchiveFs.carrier())
 }

@@ -3,8 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory,
-  PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.DataWriter
 import org.apache.spark.sql.types.StructType
 
 /** WRITE half of the `warc` DataSource V2 connector: curation output
@@ -31,110 +30,14 @@ import org.apache.spark.sql.types.StructType
   * uri column is what CDX point lookup joins on. URIs containing tabs
   * or newlines would corrupt the sidecar; RFC 3986 URIs cannot.
   *
-  * Commit protocol (same shape as [[ShardSink]]): task attempts write
-  * uuid-named temps under `path/_tmp/<gen>/` (invisible to the reader's
-  * `listFiles`, which only scans the top level), the driver renames
-  * winners to generation-unique `part-<gen>-NNNNN.warc.gz` (+ `.cdx`)
-  * and then atomically swaps `_MANIFEST.json`. Readers going through
-  * the manifest never see a partial commit; convention-bound readers
-  * that just list `*.warc.gz` see only fully-written, renamed segments
-  * (a crash mid-commit can expose a complete subset to those readers —
-  * the same contract as Hadoop's v2 file committer, stated not hidden).
+  * Layout and commit protocol are [[Archive]]'s: each task writes one
+  * part (`part-<gen>-NNNNN.warc.gz`, or `.warc` with
+  * `option("compression", "none")`) and its `.cdx`, and the manifest
+  * lists `{"segment":..,"records":..}` entries.
   */
-final class WarcWriteBuilder(path: String, schema: StructType, gzipped: Boolean)
-    extends WriteBuilder
-    with org.apache.spark.sql.connector.write.SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new WarcBatchWrite(path, schema, gzipped, doTruncate)
-  }
-}
-
-final case class WarcCommit(tmpName: String, records: Long) extends WriterCommitMessage
-
-/** All byte IO through [[ArchiveFs]] (Hadoop FileSystem), so the sink
-  * writes `file:`/`hdfs://`/`s3a://` destinations alike. Concurrency
-  * hardening (r11 advice): each write job owns a generation id minted
-  * driver-side at plan time; task temps live under `_tmp/<gen>/` (so
-  * a concurrent job's commit/abort can never delete this job's
-  * in-flight temps), and the manifest read-modify-write runs under an
-  * exclusive `_MANIFEST.lock` ([[ArchiveFs.withLock]]) so two
-  * concurrent appends to the same path serialize instead of last-
-  * writer-wins dropping entries.
-  */
-final class WarcBatchWrite(path: String, schema: StructType, gzipped: Boolean,
-    truncate: Boolean) extends BatchWrite {
-  private val gen = java.util.UUID.randomUUID.toString.take(8)
-  private def tmpDir = ArchiveFs.child(ArchiveFs.child(path, "_tmp"), gen)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new WarcWriterFactory(tmpDir, schema.json, gzipped, ArchiveFs.carrier())
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    ArchiveFs.mkdirs(path)
-    val committed = messages.collect { case WarcCommit(tmp, n) => (tmp, n) }
-      .filter(_._2 > 0).sortBy(_._1)
-    val ext = if (gzipped) ".warc.gz" else ".warc"
-    val entries = committed.zipWithIndex.map { case ((tmp, n), i) =>
-      val name = f"part-$gen-$i%05d$ext"
-      ArchiveFs.rename(ArchiveFs.child(tmpDir, tmp), ArchiveFs.child(path, name))
-      ArchiveFs.rename(ArchiveFs.child(tmpDir, tmp + ".cdx"),
-        ArchiveFs.child(path, name + ".cdx"))
-      (name, n)
-    }
-    val entryRe = """\{"segment":"([^"]+)","records":(\d+)\}""".r
-    ArchiveFs.withLock(ArchiveFs.child(path, "_MANIFEST.lock")) {
-      val prev: Seq[String] =
-        if (!truncate)
-          ArchiveFs.readManifest(path)
-            .map(m => entryRe.findAllMatchIn(m).map(_.matched).toSeq)
-            .getOrElse(Seq.empty)
-        else Seq.empty
-      val manifest =
-        (prev ++ entries.map { case (n, r) => s"""{"segment":"$n","records":$r}""" })
-          .mkString("[", ",", "]")
-      // immutable numbered generation + legacy mirror: no visibility
-      // window on object stores (see ArchiveFs.publishManifest)
-      ArchiveFs.publishManifest(path, manifest)
-    }
-    if (truncate) {
-      val keep = entries.map(_._1).toSet
-      ArchiveFs.list(path).foreach { p =>
-        val n = ArchiveFs.name(p)
-        val base = n.stripSuffix(".cdx")
-        if (n.startsWith("part-") && (base.endsWith(".warc") || base.endsWith(".warc.gz"))
-            && !keep(base))
-          ArchiveFs.delete(p)
-      }
-    }
-    deleteTmp()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = deleteTmp()
-
-  // only THIS job's generation dir — a concurrent writer's temps survive;
-  // the shared _tmp parent goes only once it is empty
-  private def deleteTmp(): Unit = {
-    ArchiveFs.delete(tmpDir, recursive = true)
-    ArchiveFs.deleteIfEmptyDir(ArchiveFs.child(path, "_tmp"))
-  }
-}
-
-final class WarcWriterFactory(tmpDir: String, schemaJson: String, gzipped: Boolean,
-    confSer: SerializableHadoopConf) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    confSer.install() // driver conf -> executor tasks
-    new WarcWriter(tmpDir, schemaJson, gzipped)
-  }
-}
-
-/** One temp segment + CDX sidecar per task attempt, under the write
-  * job's own `_tmp/<gen>/` namespace.
-  */
-final class WarcWriter(tmpDirPath: String, schemaJson: String, gzipped: Boolean)
-    extends DataWriter[InternalRow] {
+final class WarcWriter(tmpDir: String, schemaJson: String, gzipped: Boolean)
+    extends ArchiveWriter(tmpDir, WarcDataSource.Layout,
+      if (gzipped) ".warc.gz" else ".warc") {
   private val st = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
     .asInstanceOf[StructType]
   // fieldIndex throws naming the missing column — the schema contract
@@ -155,13 +58,8 @@ final class WarcWriter(tmpDirPath: String, schemaJson: String, gzipped: Boolean)
   private val oProfile = optIdx("warc_profile")
   private val oTrunc = optIdx("truncated")
 
-  private val tmpName = java.util.UUID.randomUUID.toString +
-    (if (gzipped) ".warc.gz" else ".warc")
-  ArchiveFs.mkdirs(tmpDirPath)
-  private val out = new WarcIo.CountingOutputStream(new java.io.BufferedOutputStream(
-    ArchiveFs.create(ArchiveFs.child(tmpDirPath, tmpName)), 1 << 16))
+  openPart()
   private val cdx = new java.lang.StringBuilder("#graft-cdx offset\tlength\turi\n")
-  private var records = 0L
 
   override def write(row: InternalRow): Unit = {
     require(!row.isNullAt(oId) && !row.isNullAt(oType) && !row.isNullAt(oDate) &&
@@ -212,26 +110,16 @@ final class WarcWriter(tmpDirPath: String, schemaJson: String, gzipped: Boolean)
         uri, ct, block, extra)
     cdx.append(off).append('\t').append(out.count - off).append('\t')
       .append(if (uri == null) "-" else uri).append('\n')
-    records += 1
+    units += 1
   }
 
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    ArchiveFs.writeBytes(ArchiveFs.child(tmpDirPath, tmpName + ".cdx"),
-      cdx.toString.getBytes("UTF-8"))
-    WarcCommit(tmpName, records)
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    ArchiveFs.delete(ArchiveFs.child(tmpDirPath, tmpName))
-    ArchiveFs.delete(ArchiveFs.child(tmpDirPath, tmpName + ".cdx"))
-  }
-
-  override def close(): Unit = ()
+  override protected def finish(): Unit = closePart(cdx.toString.getBytes("UTF-8"))
 }
 
 object WarcWriter {
+  def at(schemaJson: String, gzipped: Boolean): String => DataWriter[InternalRow] =
+    dir => new WarcWriter(dir, schemaJson, gzipped)
+
   /** RFC 9110 reason phrases for the codes a crawl corpus actually
     * carries; anything else writes an empty reason.
     */

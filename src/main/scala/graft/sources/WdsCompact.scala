@@ -40,8 +40,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object WdsCompact {
 
-  private val EntryRe = """\{"shard":"([^"]+)","samples":(\d+)\}""".r
-
   /** Compact every manifest shard smaller than `maxShardBytes` into
     * fresh `targetShardBytes`-sized shards, in place. Returns one row
     * per pre-compaction shard: (shard, bytes, action) with action
@@ -49,12 +47,12 @@ object WdsCompact {
     * shards are fragmented.
     */
   def run(spark: SparkSession, dir: String, maxShardBytes: Long,
-      targetShardBytes: Long = WdsBatchWrite.DefaultTargetShardBytes): DataFrame = {
+      targetShardBytes: Long = TarDataSource.DefaultTargetShardBytes): DataFrame = {
     import spark.implicits._
-    val manifest = ArchiveFs.readManifest(dir)
+    val manifest = Archive.entries(dir, TarDataSource.Layout)
     require(manifest.nonEmpty,
       s"selective compaction needs a manifest-managed corpus: $dir")
-    val entries = EntryRe.findAllMatchIn(manifest.get).map(_.group(1)).toVector
+    val entries = manifest.get.map(_._1)
     val sizes = ArchiveFs.listWithLen(dir)
       .map { case (p, len) => (ArchiveFs.name(p), len) }.toMap
     val planned = entries.map { n =>

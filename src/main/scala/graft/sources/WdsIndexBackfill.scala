@@ -19,8 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale shape: one task per shard (Spark distributes the shard list);
   * a shard's cost is a header-stride read of its bytes — `in.skip`
-  * over payloads, no allocation. Sidecars publish via temp + rename
-  * (complete-or-absent, same contract as the manifest protocol).
+  * over payloads, no allocation. Sidecars publish complete-or-absent
+  * ([[ArchiveFs.publish]]).
   * Gzipped shards are skipped: a `.tar.gz` stream is not seekable, so
   * offsets could never be used.
   */
@@ -31,26 +31,10 @@ object WdsIndexBackfill {
     * Returns the sample count.
     */
   private[sources] def backfillOne(f: String, overwrite: Boolean): Long = {
-    val idxPath = f + ".idx"
     val in = new java.io.BufferedInputStream(ArchiveFs.open(f), 1 << 16)
-    val sb = new java.lang.StringBuilder("#graft-wds-idx offset\tkey\n")
-    var samples = 0L
-    var prevKey: String = null
-    try TarIo.memberStarts(in).foreach { case (off, name) =>
-      val key = TarDataSource.splitKeyExt(name)._1
-      if (key != prevKey) {
-        sb.append(off).append('\t').append(key).append('\n')
-        samples += 1
-        prevKey = key
-      }
-    } finally in.close()
-    // temp + rename: a concurrent reader sees the sidecar
-    // complete-or-absent, never half-written
-    val tmp = f + ".idx.tmp-" + java.util.UUID.randomUUID.toString.take(8)
-    ArchiveFs.writeBytes(tmp, sb.toString.getBytes("UTF-8"), overwrite = true)
-    if (overwrite) ArchiveFs.renameOverwrite(tmp, idxPath)
-    else ArchiveFs.rename(tmp, idxPath)
-    samples
+    val idx = try Archive.indexTar(in) finally in.close()
+    ArchiveFs.publishBytes(f + ".idx", idx.bytes, overwrite)
+    idx.samples
   }
 
   /** Backfill `dir` (or a single shard path); returns one row per
@@ -60,7 +44,7 @@ object WdsIndexBackfill {
   def run(spark: SparkSession, dir: String,
       overwrite: Boolean = false): DataFrame = {
     import spark.implicits._
-    val shards = TarDataSource.listFiles(dir)
+    val shards = Archive.listFiles(dir, TarDataSource.Layout)
     val confSer = ArchiveFs.carrier()
     val slots = math.max(1, math.min(shards.size,
       spark.sparkContext.defaultParallelism))

@@ -25,75 +25,30 @@ object WdsRandomAccess {
   final case class Fetched(shard: String, key: String, ext: String,
       name: String, size: Long, payload: Array[Byte])
 
-  /** Shields the per-shard seekable stream from a nested reader's
-    * close — the stream is reused across that shard's lookups.
-    */
-  private final class NonClosingInputStream(in: java.io.InputStream)
-      extends java.io.FilterInputStream(in) {
-    override def close(): Unit = ()
-  }
-
-  /** The idx sidecars under `dir` as a DataFrame
-    * (shard, offset, key), read with a name filter rather than a glob
-    * path (see [[WarcRandomAccess.cdx]]).
-    */
-  def idx(spark: SparkSession, dir: String): DataFrame = {
-    val parts = split(col("value"), "\t")
-    spark.read.format("text").option("pathGlobFilter", "*.idx").load(dir)
-      .select(input_file_name().as("__f"), col("value"))
-      .filter(!col("value").startsWith("#") && length(col("value")) > 0)
-      .select(
-        // input_file_name() yields file:///abs/path — strip the scheme
-        regexp_replace(col("__f"), "^file:(//)?", "").as("__p"),
-        parts.as("__parts"))
-      .select(
-        regexp_replace(col("__p"), "\\.idx$", "").as("shard"),
-        element_at(col("__parts"), 1).cast("long").as("offset"),
-        element_at(col("__parts"), 2).as("key"))
-  }
+  /** The idx sidecars under `dir` as a DataFrame (shard, offset, key). */
+  def idx(spark: SparkSession, dir: String): DataFrame =
+    Archive.sidecarTable(spark, dir, ".idx").select(
+      col("file").as("shard"),
+      element_at(col("fields"), 1).cast("long").as("offset"),
+      element_at(col("fields"), 2).as("key"))
 
   /** Fetch exactly the samples named by `lookups` (shard, offset,
-    * key): one positioned open per (shard, offset), members consumed
-    * WHILE their sample key matches — contiguity bounds the walk to
-    * the sample itself. A `mapPartitions` by design (the documented
-    * last resort: point IO against an archive byte layout has no
-    * declarative form); everything around it stays Catalyst-shaped.
+    * key) through [[Archive.seekEach]]: members are consumed WHILE
+    * their sample key matches — contiguity bounds the walk to the
+    * sample itself.
     */
   def fetch(lookups: DataFrame): DataFrame = {
-    val spark = lookups.sparkSession
-    import spark.implicits._
-    val ds = lookups
-      .select(col("shard").cast("string"), col("offset").cast("long"),
-        col("key").cast("string"))
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("offset"))
-      .as[(String, Long, String)]
-    ds.mapPartitions { it =>
-      var file: String = null
-      var ch: org.apache.hadoop.fs.FSDataInputStream = null
-      def closeCh(): Unit = {
-        if (ch != null) { ch.close(); ch = null; file = null }
-      }
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => closeCh()))
-      it.flatMap { case (f, off, key) =>
-        if (f != file) {
-          closeCh()
-          ch = ArchiveFs.open(f)
-          file = f
-        }
-        ch.seek(off)
-        // fresh buffer after every seek (a reused one would serve
-        // stale read-ahead); the underlying stream stays open
-        val in = new java.io.BufferedInputStream(
-          new NonClosingInputStream(ch), 1 << 16)
-        val ms = TarIo.members(in)
-          .takeWhile(m => TarDataSource.splitKeyExt(m.name)._1 == key).toVector
-        require(ms.nonEmpty, s"no sample '$key' at $f:$off")
-        ms.map { m =>
-          val (k, e) = TarDataSource.splitKeyExt(m.name)
-          Fetched(f, k, e, m.name, m.size, m.payload)
-        }
+    import lookups.sparkSession.implicits._
+    Archive.seekEach[String, Fetched](lookups.select(col("shard").cast("string"),
+      col("offset").cast("long"), col("key").cast("string"))) { (f, off, in, key) =>
+      // a fresh buffer after every seek (a reused one would serve stale
+      // read-ahead)
+      val ms = TarIo.members(new java.io.BufferedInputStream(in, 1 << 16))
+        .takeWhile(m => TarDataSource.splitKeyExt(m.name)._1 == key).toVector
+      require(ms.nonEmpty, s"no sample '$key' at $f:$off")
+      ms.map { m =>
+        val (k, e) = TarDataSource.splitKeyExt(m.name)
+        Fetched(f, k, e, m.name, m.size, m.payload)
       }
     }.toDF()
   }

@@ -1,11 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory,
-  PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder,
-  WriterCommitMessage}
+import org.apache.spark.sql.connector.write.DataWriter
 import org.apache.spark.sql.types.StructType
 
 /** WRITE half of the `wds` connector: re-sharding/packing curation
@@ -23,11 +19,10 @@ import org.apache.spark.sql.types.StructType
   * The two WebDataset invariants the sink GUARANTEES rather than
   * hopes for:
   *   - **sample contiguity** — all extensions of a key land in ONE
-  *     shard, adjacent: the Write declares
-  *     [[RequiresDistributionAndOrdering]] (clustered + sorted by
-  *     `key`), so Spark itself inserts the shuffle/sort — the
-  *     Spark-first form of the guarantee, no writer-side re-sort, no
-  *     trust in caller discipline;
+  *     shard, adjacent: the Write requires clustering and sorting by
+  *     `key` ([[ArchiveWriteBuilder]]'s `clusterBy`), so Spark itself
+  *     inserts the shuffle/sort — no writer-side re-sort, no trust in
+  *     caller discipline;
   *   - **size-targeted shard rolling** — a writer rolls to a new tar
   *     only at a sample BOUNDARY once the current shard passes
   *     `targetShardBytes`, so shards land near the target without
@@ -36,294 +31,47 @@ import org.apache.spark.sql.types.StructType
   * Long keys write GNU `L` long-name members ([[TarIo.writeMember]]),
   * and the reader applies them — >100-char sample keys round-trip.
   *
-  * Commit protocol: the [[ShardSink]]/[[WarcSink]] exactly-once shape
-  * — uuid temps under `_tmp/<gen>/`, driver renames winners to
-  * `part-<gen>-NNNNN.tar`, `_MANIFEST.json` swap under the manifest
-  * lock. Task memory is one buffered sample, never a shard.
-  */
-final class WdsWriteBuilder(path: String, schema: StructType, targetBytes: Long,
-    queryId: String = "", replace: Set[String] = Set.empty) extends WriteBuilder
-    with org.apache.spark.sql.connector.write.SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write with RequiresDistributionAndOrdering {
-    override def toBatch: BatchWrite =
-      new WdsBatchWrite(path, schema, targetBytes, doTruncate, replace)
-    override def toStreaming
-        : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-      new WdsStreamingWrite(path, schema, targetBytes, queryId)
-    // all rows of a key to one task, adjacent within it — Spark plans
-    // the shuffle+sort, the writer only observes key boundaries
-    override def requiredDistribution(): Distribution =
-      Distributions.clustered(Array(Expressions.column("key")))
-    override def requiredOrdering(): Array[SortOrder] =
-      Array(Expressions.sort(Expressions.column("key"), SortDirection.ASCENDING))
-  }
-}
-
-/** STREAMING half of the `wds` sink — continuous repacking:
-  * `df.writeStream.format("wds").option("path", dir)` appends one
-  * shard generation per micro-batch EPOCH, exactly once.
+  * Layout and commit protocol are [[Archive]]'s: `part-<gen>-NNNNN.tar`
+  * shards, each with its `.idx` sample-offset sidecar, and
+  * `{"shard":..,"samples":..}` manifest entries. Task memory is one
+  * buffered sample, never a shard.
   *
-  * Exactly-once shape: the generation name is derived from
-  * (queryId, epochId) — deterministic across driver restarts — and the
-  * commit is IDEMPOTENT: under the manifest lock, an epoch whose
-  * shards are already in the manifest (a restarted driver re-running
-  * its last epoch) cleans its temp files and returns without renaming
-  * or republishing, so replayed epochs can never double samples. A
-  * driver killed INSIDE the commit — after some renames, before the
-  * manifest publish — leaves final-name orphans for an unpublished
-  * generation; the replay deletes them before renaming (they can only
-  * be this query's own crashed attempt, and they were never reader-
-  * visible), so the restart commits instead of wedging on the
-  * destination-exists rename guard.
-  * Within an epoch the batch sink's contract holds unchanged: the
-  * required clustered+sorted-by-key distribution gives sample
-  * contiguity inside the epoch's shards, uuid temps under
-  * `_tmp/<qid>-e<epoch>/` mean task retries never collide, and the
-  * manifest publish is the numbered-generation protocol. Sample
-  * contiguity is per EPOCH — a key recurring in later epochs starts a
-  * new sample in that epoch's shards (continuous packing; a global
-  * repack is the batch sink's job downstream).
+  * Streaming (`df.writeStream.format("wds")`) appends one generation
+  * per micro-batch epoch, exactly once, in [[Archive.Epoch]] mode.
+  * Sample contiguity is then per EPOCH — a key recurring in later
+  * epochs starts a new sample in that epoch's shards (continuous
+  * packing; a global repack is the batch sink's job downstream).
   */
-final class WdsStreamingWrite(path: String, schema: StructType,
-    targetBytes: Long, queryId: String)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  // the FULL sanitized queryId, not a truncated prefix: two streaming
-  // queries writing the same directory must never alias generations
-  // (a shared prefix would make each treat the other's epochs as its
-  // own already-committed replays and silently drop shards); directory
-  // entries can afford the length
-  private val qid =
-    (if (queryId == null || queryId.isEmpty) "wdsq" else queryId)
-      .replaceAll("[^A-Za-z0-9]", "")
-  private def genOf(epochId: Long) = s"$qid-e$epochId"
-  private def tmpDirOf(epochId: Long) =
-    ArchiveFs.child(ArchiveFs.child(path, "_tmp"), genOf(epochId))
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new WdsStreamingWriterFactory(ArchiveFs.child(path, "_tmp"), qid,
-      schema.json, targetBytes, ArchiveFs.carrier())
-
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    ArchiveFs.mkdirs(path)
-    val gen = genOf(epochId)
-    val tmpDir = tmpDirOf(epochId)
-    val committed = messages.collect { case WdsCommit(shards) => shards }
-      .flatten.filter(_._2 > 0).sortBy(_._1)
-    val entryRe = """\{"shard":"([^"]+)","samples":(\d+)\}""".r
-    ArchiveFs.withLock(ArchiveFs.child(path, "_MANIFEST.lock")) {
-      val prev: Seq[String] = ArchiveFs.readManifest(path)
-        .map(m => entryRe.findAllMatchIn(m).map(_.matched).toSeq)
-        .getOrElse(Seq.empty)
-      // idempotent replay: this (query, epoch) already published
-      if (!prev.exists(_.contains(s""""shard":"part-$gen-"""))) {
-        // crash-window recovery: a driver killed between the first
-        // rename below and publishManifest leaves final-name orphans
-        // for an UNPUBLISHED generation. Because the generation name is
-        // (queryId, epochId)-deterministic, any part-<gen>-* file here
-        // can only be this query's own crashed attempt — delete them so
-        // the replay's fresh temps take the names (never adopt: mixing
-        // a partial old attempt with a new one could interleave two
-        // renders of the epoch). Unpublished shards were never visible
-        // to the manifest-order reader, so this deletes no live data.
-        ArchiveFs.list(path).foreach { p =>
-          if (ArchiveFs.name(p).startsWith(s"part-$gen-")) ArchiveFs.delete(p)
-        }
-        val entries = committed.zipWithIndex.map { case ((tmp, n), i) =>
-          val name = f"part-$gen-$i%05d.tar"
-          ArchiveFs.rename(ArchiveFs.child(tmpDir, tmp),
-            ArchiveFs.child(path, name))
-          ArchiveFs.rename(ArchiveFs.child(tmpDir, tmp + ".idx"),
-            ArchiveFs.child(path, name + ".idx"))
-          (name, n)
-        }
-        if (entries.nonEmpty) {
-          val manifest = (prev ++ entries.map { case (n, s) =>
-            s"""{"shard":"$n","samples":$s}""" }).mkString("[", ",", "]")
-          ArchiveFs.publishManifest(path, manifest)
-        }
-      }
-    }
-    deleteTmp(epochId)
-  }
-
-  override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = deleteTmp(epochId)
-
-  private def deleteTmp(epochId: Long): Unit = {
-    ArchiveFs.delete(tmpDirOf(epochId), recursive = true)
-    ArchiveFs.deleteIfEmptyDir(ArchiveFs.child(path, "_tmp"))
-  }
-}
-
-final class WdsStreamingWriterFactory(tmpRoot: String, qid: String,
-    schemaJson: String, targetBytes: Long, confSer: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = {
-    confSer.install() // driver conf -> executor tasks
-    new WdsWriter(ArchiveFs.child(tmpRoot, s"$qid-e$epochId"), schemaJson,
-      targetBytes)
-  }
-}
-
-final case class WdsCommit(shards: Seq[(String, Long)]) extends WriterCommitMessage
-
-object WdsBatchWrite {
-  /** WebDataset's conventional shard size band is 100 MB-1 GB; the
-    * default sits low enough that local tests exercise rolling.
-    */
-  val DefaultTargetShardBytes: Long = 256L * 1024 * 1024
-}
-
-/** Batch commit modes: plain APPEND (prev manifest entries kept),
-  * TRUNCATE (full in-place rewrite: prev discarded, stale part files
-  * swept after the publish — q173's compaction), and REPLACE (selective
-  * compaction, [[WdsCompact]]): an append whose commit drops the named
-  * shards from the manifest as the new generation's entries land —
-  * one atomic manifest swap, so a manifest-order reader sees the
-  * fragmented shards OR their compacted replacement, never both —
-  * and deletes their files after the publish. A crash between the
-  * publish and the deletes leaves unreferenced files on disk
-  * (invisible to manifest-order readers; the same residual as
-  * truncate's sweep), never a torn or doubled corpus.
-  */
-final class WdsBatchWrite(path: String, schema: StructType, targetBytes: Long,
-    truncate: Boolean, replace: Set[String] = Set.empty) extends BatchWrite {
-  private val gen = java.util.UUID.randomUUID.toString.take(8)
-  private def tmpDir = ArchiveFs.child(ArchiveFs.child(path, "_tmp"), gen)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new WdsWriterFactory(tmpDir, schema.json, targetBytes, ArchiveFs.carrier())
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    ArchiveFs.mkdirs(path)
-    val committed = messages.collect { case WdsCommit(shards) => shards }
-      .flatten.filter(_._2 > 0).sortBy(_._1)
-    val entries = committed.zipWithIndex.map { case ((tmp, n), i) =>
-      val name = f"part-$gen-$i%05d.tar"
-      ArchiveFs.rename(ArchiveFs.child(tmpDir, tmp), ArchiveFs.child(path, name))
-      ArchiveFs.rename(ArchiveFs.child(tmpDir, tmp + ".idx"),
-        ArchiveFs.child(path, name + ".idx"))
-      (name, n)
-    }
-    val entryRe = """\{"shard":"([^"]+)","samples":(\d+)\}""".r
-    ArchiveFs.withLock(ArchiveFs.child(path, "_MANIFEST.lock")) {
-      val prev: Seq[String] =
-        if (!truncate)
-          ArchiveFs.readManifest(path)
-            .map(m => entryRe.findAllMatchIn(m).map(_.matched).toSeq)
-            // replaced shards leave the manifest in the SAME swap that
-            // publishes their compacted replacement (entries appended
-            // concurrently by other writers are untouched — they are
-            // not in `replace`)
-            .map(_.filterNot(e => replace.exists(r =>
-              e.contains(s""""shard":"$r""""))))
-            .getOrElse(Seq.empty)
-        else Seq.empty
-      val manifest =
-        (prev ++ entries.map { case (n, s) => s"""{"shard":"$n","samples":$s}""" })
-          .mkString("[", ",", "]")
-      // immutable numbered generation + legacy mirror: no visibility
-      // window on object stores (see ArchiveFs.publishManifest)
-      ArchiveFs.publishManifest(path, manifest)
-    }
-    if (truncate) {
-      val keep = entries.map(_._1).toSet
-      ArchiveFs.list(path).foreach { p =>
-        val n = ArchiveFs.name(p)
-        val base = n.stripSuffix(".idx")
-        if (n.startsWith("part-") && base.endsWith(".tar") && !keep(base))
-          ArchiveFs.delete(p)
-      }
-    }
-    // replaced (compacted-away) shards leave the directory only AFTER
-    // the manifest stopped referencing them
-    replace.foreach { r =>
-      ArchiveFs.delete(ArchiveFs.child(path, r))
-      ArchiveFs.delete(ArchiveFs.child(path, r + ".idx"))
-    }
-    deleteTmp()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = deleteTmp()
-
-  private def deleteTmp(): Unit = {
-    ArchiveFs.delete(tmpDir, recursive = true)
-    ArchiveFs.deleteIfEmptyDir(ArchiveFs.child(path, "_tmp"))
-  }
-}
-
-final class WdsWriterFactory(tmpDir: String, schemaJson: String, targetBytes: Long,
-    confSer: SerializableHadoopConf) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    confSer.install() // driver conf -> executor tasks
-    new WdsWriter(tmpDir, schemaJson, targetBytes)
-  }
-}
-
-/** Rolls uuid-named temp tars at sample boundaries. Rows arrive
-  * key-sorted (the Write's required ordering); the writer buffers ONE
-  * sample's members, flushes the buffer whole when the key changes,
-  * and rolls the shard first if it has passed the target — so a
-  * sample never straddles two shards and memory stays O(one sample).
-  */
-final class WdsWriter(tmpDirPath: String, schemaJson: String, targetBytes: Long)
-    extends DataWriter[InternalRow] {
+final class WdsWriter(tmpDir: String, schemaJson: String, targetBytes: Long)
+    extends ArchiveWriter(tmpDir, TarDataSource.Layout, ".tar") {
   private val st = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
     .asInstanceOf[StructType]
   private val oKey = st.fieldIndex("key")
   private val oExt = st.fieldIndex("ext")
   private val oPayload = st.fieldIndex("payload")
 
-  ArchiveFs.mkdirs(tmpDirPath)
-  private val done = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-  private var out: java.io.OutputStream = _
-  private var tmpName: String = _
-  private var shardBytes = 0L
-  private var shardSamples = 0L
   private var curKey: String = null
   private val sample = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
-  // sample-offset index sidecar (`<shard>.idx`): one line per sample at
-  // its first member's byte offset — the CDX move applied to tar, so
-  // the READER can cut a shard into ranged splits at sample boundaries
-  // (intra-shard parallelism; tar alone has no index)
-  private var idx: java.lang.StringBuilder = _
+  // the open shard's `.idx`: one line per sample at its first member's
+  // byte offset — the CDX move applied to tar, so the READER can cut a
+  // shard into ranged splits at sample boundaries
+  private var idx: Archive.SampleIndex = _
 
-  private def openShard(): Unit = {
-    tmpName = java.util.UUID.randomUUID.toString + ".tar"
-    out = new java.io.BufferedOutputStream(
-      ArchiveFs.create(ArchiveFs.child(tmpDirPath, tmpName)), 1 << 16)
-    idx = new java.lang.StringBuilder("#graft-wds-idx offset\tkey\n")
-    shardBytes = 0L
-    shardSamples = 0L
+  private def closeShard(): Unit = if (out != null) {
+    TarIo.writeTrailer(out)
+    closePart(idx.bytes)
   }
 
-  private def closeShard(): Unit = {
-    if (out != null) {
-      TarIo.writeTrailer(out)
-      out.close()
-      ArchiveFs.writeBytes(ArchiveFs.child(tmpDirPath, tmpName + ".idx"),
-        idx.toString.getBytes("UTF-8"))
-      done += ((tmpName, shardSamples))
-      out = null
-    }
-  }
-
-  private def flushSample(): Unit = {
-    if (sample.nonEmpty) {
-      if (out == null) openShard()
-      else if (shardBytes >= targetBytes) { closeShard(); openShard() }
-      idx.append(shardBytes).append('\t').append(curKey).append('\n')
-      sample.foreach { case (name, payload) =>
-        shardBytes += TarIo.writeMember(out, name, payload)
-      }
-      shardSamples += 1
-      sample.clear()
-    }
+  // buffers ONE sample's members (rows arrive key-sorted), flushes the
+  // buffer whole when the key changes, and rolls the shard first if it
+  // has passed the target — a sample never straddles two shards
+  private def flushSample(): Unit = if (sample.nonEmpty) {
+    if (out != null && out.count >= targetBytes) closeShard()
+    if (out == null) { openPart(); idx = new Archive.SampleIndex }
+    idx.add(out.count, curKey)
+    sample.foreach { case (name, payload) => TarIo.writeMember(out, name, payload) }
+    units += 1
+    sample.clear()
   }
 
   override def write(row: InternalRow): Unit = {
@@ -336,23 +84,18 @@ final class WdsWriter(tmpDirPath: String, schemaJson: String, targetBytes: Long)
     sample += ((name, row.getBinary(oPayload).clone()))
   }
 
-  override def commit(): WriterCommitMessage = {
-    flushSample()
-    closeShard()
-    WdsCommit(done.toSeq)
-  }
-
-  override def abort(): Unit = {
-    if (out != null) out.close()
-    if (tmpName != null) {
-      ArchiveFs.delete(ArchiveFs.child(tmpDirPath, tmpName))
-      ArchiveFs.delete(ArchiveFs.child(tmpDirPath, tmpName + ".idx"))
-    }
-    done.foreach { case (n, _) =>
-      ArchiveFs.delete(ArchiveFs.child(tmpDirPath, n))
-      ArchiveFs.delete(ArchiveFs.child(tmpDirPath, n + ".idx"))
-    }
-  }
-
-  override def close(): Unit = ()
+  override protected def finish(): Unit = { flushSample(); closeShard() }
 }
+
+object WdsWriter {
+  def at(schemaJson: String, targetBytes: Long): String => DataWriter[InternalRow] =
+    dir => new WdsWriter(dir, schemaJson, targetBytes)
+}
+
+/** The `wds` streaming write by name: what [[ArchiveWriteBuilder]]
+  * plans for `writeStream.format("wds")` — [[Archive.Epoch]] mode,
+  * generations named by the query id.
+  */
+final class WdsStreamingWrite(path: String, schema: StructType, targetBytes: Long,
+    queryId: String) extends ArchiveWrite(path, TarDataSource.Layout,
+      WdsWriter.at(schema.json, targetBytes), Archive.Epoch, Archive.streamGen(queryId))

@@ -13,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * — every header oddity the original carries survives bit-for-bit)
   * while the SAME pass walks [[TarIo.memberStarts]] through a tee to
   * build the sample-offset sidecar, so the output is immediately
-  * ranged-splittable and point-lookable. Both files publish via temp +
-  * rename (complete-or-absent, the manifest-protocol contract).
+  * ranged-splittable and point-lookable. Both files publish
+  * complete-or-absent ([[ArchiveFs.publish]]).
   *
   * Scale shape: one task per shard (Spark distributes the list); cost
   * is one decompression pass per shard, memory one buffer. `outDir`
@@ -67,7 +67,7 @@ object WdsTranscode {
     require(dir != outDir || deleteSource,
       "same-dir transcode needs deleteSource=true: x.tar.gz and x.tar " +
         "would otherwise both be listed and double every sample")
-    val shards = TarDataSource.listFiles(dir).filter(_.endsWith(".tar.gz"))
+    val shards = Archive.listFiles(dir, TarDataSource.Layout).filter(_.endsWith(".tar.gz"))
     val confSer = ArchiveFs.carrier()
     val slots = math.max(1, math.min(shards.size,
       spark.sparkContext.defaultParallelism))
@@ -86,38 +86,22 @@ object WdsTranscode {
           else -1L
         (f, outPath, repaired, repaired >= 0)
       } else {
-        val tag = java.util.UUID.randomUUID.toString.take(8)
-        val tmp = outPath + ".transcode-" + tag
-        val gunzip = new java.util.zip.GZIPInputStream(ArchiveFs.open(f), 1 << 16)
-        val out = new java.io.BufferedOutputStream(ArchiveFs.create(tmp), 1 << 16)
-        val sb = new java.lang.StringBuilder("#graft-wds-idx offset\tkey\n")
-        var samples = 0L
-        try {
-          val tee = new TeeInputStream(gunzip, out)
-          var prevKey: String = null
-          TarIo.memberStarts(tee).foreach { case (off, name) =>
-            val key = TarDataSource.splitKeyExt(name)._1
-            if (key != prevKey) {
-              sb.append(off).append('\t').append(key).append('\n')
-              samples += 1
-              prevKey = key
-            }
-          }
-          // the walk stops at the first trailer block / clean EOF; the
-          // rest of the archive (second zero block, padding) copies
-          // verbatim so the output is byte-equal to the gunzipped input
-          val buf = new Array[Byte](8192)
-          var k = tee.read(buf, 0, buf.length)
-          while (k >= 0) { k = tee.read(buf, 0, buf.length) }
-        } finally { out.close(); gunzip.close() }
-        // temp + rename both files: complete-or-absent, never torn
-        ArchiveFs.rename(tmp, outPath)
-        val idxTmp = outPath + ".idx.tmp-" + tag
-        ArchiveFs.writeBytes(idxTmp, sb.toString.getBytes("UTF-8"),
-          overwrite = true)
-        ArchiveFs.rename(idxTmp, outPath + ".idx")
+        val idx = ArchiveFs.publish(outPath, overwrite = false) { out =>
+          val gunzip = new java.util.zip.GZIPInputStream(ArchiveFs.open(f), 1 << 16)
+          try {
+            val tee = new TeeInputStream(gunzip, out)
+            val idx = Archive.indexTar(tee)
+            // the walk stops at the first trailer block / clean EOF; the
+            // rest of the archive (second zero block, padding) copies
+            // verbatim so the output is byte-equal to the gunzipped input
+            val buf = new Array[Byte](8192)
+            while (tee.read(buf, 0, buf.length) >= 0) ()
+            idx
+          } finally gunzip.close()
+        }
+        ArchiveFs.publishBytes(outPath + ".idx", idx.bytes, overwrite = false)
         if (deleteSource) ArchiveFs.delete(f)
-        (f, outPath, samples, true)
+        (f, outPath, idx.samples, true)
       }
     }.toDF("shard", "out_shard", "samples", "wrote")
   }
