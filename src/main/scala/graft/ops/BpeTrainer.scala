@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.PerRow
 
 /** Distributed BPE merge learning (Sennrich et al., ACL 2016) — the
   * tokenizer-FITTING half of the pipeline (ops/TextAnalysis only
@@ -145,32 +146,25 @@ object BpeTrainer {
   }
 
   /** Tokenize a text column with a learned merge list: per word, apply
-    * every merge in rank order. Scan-side via a typed mapPartitions
-    * seam (the merge list broadcasts with the closure); appends
-    * `bpe_tokens` (array<string>) and `n_bpe_tokens`.
+    * every merge in rank order (the merge list ships with the closure).
+    * Appends `bpe_tokens` (array<string>, empty for null text) and
+    * `n_bpe_tokens`.
     */
   def applyMerges(df: DataFrame, textCol: String,
       merges: Seq[(Int, String, String, Long)]): DataFrame = {
     val ordered = merges.sortBy(_._1).map(m => (m._2, m._3))
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
-    val outSchema = StructType(df.schema.fields ++ Seq(
+    import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField}
+    PerRow.appendAll[String](df, textCol, Seq(
       StructField("bpe_tokens", ArrayType(StringType, containsNull = false)),
-      StructField("n_bpe_tokens", LongType)))
-    val txtIdx = df.schema.fieldIndex(textCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { row =>
-        val text = row.getString(txtIdx)
-        val toks =
-          if (text == null) Seq.empty[String]
-          else text.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq.flatMap { w =>
-            var s: Seq[String] = w.map(_.toString) :+ Eow
-            ordered.foreach { case (l, r) => s = mergeOnce(s, l, r) }
-            s
-          }
-        Row.fromSeq(row.toSeq ++ Seq(toks, toks.length.toLong))
-      }
+      StructField("n_bpe_tokens", LongType))) { text =>
+      val toks =
+        if (text == null) Seq.empty[String]
+        else text.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq.flatMap { w =>
+          var s: Seq[String] = w.map(_.toString) :+ Eow
+          ordered.foreach { case (l, r) => s = mergeOnce(s, l, r) }
+          s
+        }
+      Seq(toks, toks.length.toLong)
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** Content triage — the first operator a mixed crawl column meets:
   * sniff the magic, dispatch to the right metadata walk, and emit one
@@ -126,19 +127,15 @@ object ContentRouter {
     StructField("qty2", LongType),
     StructField("label", StringType)))
 
-  /** Appends `${binCol}_route` (struct, never null — `bin` is a
-    * kind) — the [[Mpeg.audioMeta]] mapPartitions seam.
+  /** Appends `${binCol}_route` (struct, null for a null payload and
+    * never null otherwise — `bin` is a kind).
     */
-  def routeMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_route", routeType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val (kind, q1, q2, label) = route(r.getAs[Array[Byte]](binIdx))
-        Row.fromSeq(r.toSeq :+ Row(kind, q1, q2, label))
+  def routeMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_route", routeType)) { b =>
+      if (b == null) null
+      else {
+        val (kind, q1, q2, label) = route(b)
+        Row(kind, q1, q2, label)
       }
     }
-  }
 }

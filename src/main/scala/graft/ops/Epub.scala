@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** EPUB chapter extraction — books are the densest long-form text a
   * training corpus gets, and an EPUB is a ZIP with a published map to
@@ -76,23 +77,10 @@ object Epub {
     StructField("n_chapters", IntegerType),
     StructField("text", StringType))) // chapters joined with \n
 
-  /** Appends `${binCol}_epub` (struct, null when not an epub) — the
-    * [[Mpeg.audioMeta]] seam.
-    */
-  def bookMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_epub", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parse(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(b) => Row(b.title, b.creator, b.language,
-            b.chapters.length, b.chapters.mkString("\n"))
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_epub` (struct, null when not an epub). */
+  def bookMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_epub", metaType)) { b =>
+      parse(b).map(x => Row(x.title, x.creator, x.language,
+        x.chapters.length, x.chapters.mkString("\n"))).orNull
     }
-  }
 }

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** JPEG EXIF metadata — the image sibling of the audio metadata walks
   * ([[Mp4]]/[[Mpeg]]/[[Flac]]): what a curation pipeline needs from a
@@ -299,25 +300,12 @@ object Exif {
     StructField("n_ifd0", IntegerType),
     StructField("n_gps", IntegerType)))
 
-  /** Appends `${binCol}_exif` (struct, null when not a JPEG) — the
-    * [[Mpeg.audioMeta]] mapPartitions seam.
-    */
-  def imageMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_exif", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        def n(i: Int): Any = if (i >= 0) i else null
-        val m = parseMeta(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(x) => Row(n(x.sofW), n(x.sofH), x.byteOrder,
-            n(x.orientation), x.make, x.model, x.dtOrig, n(x.pixelW),
-            n(x.pixelH), n(x.iso), x.hasGps, n(x.nIfd0), n(x.nGps))
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_exif` (struct, null when not a JPEG). */
+  def imageMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_exif", metaType)) { b =>
+      def n(i: Int): Any = if (i >= 0) i else null
+      parseMeta(b).map(x => Row(n(x.sofW), n(x.sofH), x.byteOrder,
+        n(x.orientation), x.make, x.model, x.dtOrig, n(x.pixelW),
+        n(x.pixelH), n(x.iso), x.hasGps, n(x.nIfd0), n(x.nGps))).orNull
     }
-  }
 }

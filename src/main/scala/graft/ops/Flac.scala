@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** FLAC STREAMINFO metadata — the lossless sibling of [[Mpeg]]: the
   * last common audio container ([[Multimodal.decodeWav]] PCM,
@@ -182,25 +183,12 @@ object Flac {
     StructField("padding_bytes", IntegerType),
     StructField("n_comments", IntegerType))) // null when no VORBIS_COMMENT
 
-  /** Appends `${binCol}_flac` (struct, null when unparseable) — the
-    * [[Mpeg.audioMeta]] mapPartitions seam.
-    */
-  def audioMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_flac", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parseMeta(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(x) => Row(x.sampleRate, x.channels, x.bitsPerSample,
-            x.totalSamples, if (x.durationMs >= 0) x.durationMs else null,
-            x.minBlockSize, x.maxBlockSize, x.nBlocks, x.paddingBytes,
-            if (x.nComments >= 0) x.nComments else null)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_flac` (struct, null when unparseable). */
+  def audioMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_flac", metaType)) { b =>
+      parseMeta(b).map(x => Row(x.sampleRate, x.channels, x.bitsPerSample,
+        x.totalSamples, if (x.durationMs >= 0) x.durationMs else null,
+        x.minBlockSize, x.maxBlockSize, x.nBlocks, x.paddingBytes,
+        if (x.nComments >= 0) x.nComments else null)).orNull
     }
-  }
 }

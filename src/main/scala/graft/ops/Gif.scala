@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** GIF structure metadata — the last of the legacy web-image trio
   * ([[Png]], [[Exif]]/JPEG) to get a walk: what routing needs from a
@@ -150,25 +151,11 @@ object Gif {
     StructField("has_comment", BooleanType),
     StructField("complete", BooleanType)))
 
-  /** Appends `${binCol}_gif` (struct, null when not a GIF) — the
-    * [[Mpeg.audioMeta]] seam.
-    */
-  def imageMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_gif", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parseMeta(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(x) => Row(x.width, x.height, x.gctColors, x.nFrames,
-            x.animated, x.totalDelayMs,
-            if (x.loopCount >= 0) x.loopCount else null,
-            x.hasComment, x.complete)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_gif` (struct, null when not a GIF). */
+  def imageMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_gif", metaType)) { b =>
+      parseMeta(b).map(x => Row(x.width, x.height, x.gctColors, x.nFrames,
+        x.animated, x.totalDelayMs, if (x.loopCount >= 0) x.loopCount else null,
+        x.hasComment, x.complete)).orNull
     }
-  }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** ID3v2 text frames — the provenance layer [[Mpeg]] skips by size:
   * the MP3 walk reads the tag's syncsafe length to find the audio;
@@ -166,23 +167,10 @@ object Id3 {
     StructField("year", StringType),
     StructField("n_frames", IntegerType)))
 
-  /** Appends `${binCol}_id3` (struct, null when untagged) — the
-    * [[Mpeg.audioMeta]] mapPartitions seam.
-    */
-  def tagMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_id3", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parseMeta(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(x) => Row(x.version, x.tagBytes, x.title, x.artist,
-            x.album, x.year, x.nFrames)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_id3` (struct, null when untagged). */
+  def tagMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_id3", metaType)) { b =>
+      parseMeta(b).map(x => Row(x.version, x.tagBytes, x.title, x.artist,
+        x.album, x.year, x.nFrames)).orNull
     }
-  }
 }

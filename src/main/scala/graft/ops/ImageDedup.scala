@@ -2,10 +2,10 @@ package graft.ops
 
 import java.awt.image.BufferedImage
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import graft.runtime.Barrier
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField}
+import graft.runtime.{Barrier, PerRow}
 
 /** Perceptual image deduplication via difference hash (dHash).
   *
@@ -18,7 +18,7 @@ import graft.runtime.Barrier
   * served at different quality settings.
   *
   * Scale shape: hashing is an embarrassingly parallel decode scan
-  * (the [[Multimodal.decodeFeatures]] mapPartitions seam — no shuffle);
+  * (appended through [[graft.runtime.PerRow]] — no shuffle);
   * pair finding reuses the SimHash pigeonhole banding
   * ([[Dedup.bandedHammingPairs]]), so candidates come from band-equal
   * bucket joins, never an all-pairs product — the same plan that holds
@@ -181,30 +181,19 @@ object ImageDedup {
     }
   }
 
-  /** Decode + hash a binary image column behind the same typed
-    * mapPartitions seam as [[Multimodal.decodeFeatures]]: appends
-    * `<binCol>_dhash` (LongType; null when the payload isn't a readable
-    * image, so corrupt assets degrade to a filterable column, never a
-    * task failure). No shuffle — a pure scan stage.
+  /** Decode + hash a binary image column: appends `<binCol>_dhash`
+    * (LongType; null when the payload isn't a readable image, so
+    * corrupt assets degrade to a filterable column, never a task
+    * failure). No shuffle — a pure scan stage.
     */
-  def dHash(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_dhash", LongType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        val hash: Any =
-          if (bytes == null) null
-          else try {
-            val img = decodeImage(bytes)
-            if (img == null) null else Long.box(dHashBits(img))
-          } catch { case _: Exception => null }
-        Row.fromSeq(r.toSeq :+ hash)
-      }
+  def dHash(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_dhash", LongType)) { bytes =>
+      if (bytes == null) null
+      else try {
+        val img = decodeImage(bytes)
+        if (img == null) null else Long.box(dHashBits(img))
+      } catch { case _: Exception => null }
     }
-  }
 
   /** Container format of a binary payload by MAGIC BYTES — a native
     * expression (binary substring compares), no decode, no UDF. The
@@ -237,25 +226,17 @@ object ImageDedup {
     * gap (VERDICT r8 item 4 / missing #1).
     */
   def decodeCoverage(df: DataFrame, binCol: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
     val hashed = dHash(df, binCol)
     // r10 dims-known probe: a decodable payload has dims by definition;
     // for the rest, a well-formed WebP container/frame header carries
     // dimensions WITHOUT any pixel decode (VP8 keyframe header, VP8L
     // signature, VP8X canvas) — the lossy-WebP share reports real dims
     // even though its pixels stay undecodable here
-    val outSchema = StructType(hashed.schema.fields :+
-      StructField("__dims", BooleanType, nullable = false))
     val binIdx = hashed.schema.fieldIndex(binCol)
     val hashIdx = hashed.schema.fieldIndex(s"${binCol}_dhash")
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    hashed.mapPartitions { rows =>
-      rows.map { r =>
-        val dims = !r.isNullAt(hashIdx) ||
-          WebpLossless.headerDimensions(r.getAs[Array[Byte]](binIdx)).isDefined
-        Row.fromSeq(r.toSeq :+ dims)
-      }
+    PerRow.appendFromRow(hashed, Seq(StructField("__dims", BooleanType, nullable = false))) { r =>
+      Seq(!r.isNullAt(hashIdx) ||
+        WebpLossless.headerDimensions(r.getAs[Array[Byte]](binIdx)).isDefined)
     }
       .select(imageFormat(col(binCol)).as("format"),
         col(s"${binCol}_dhash").isNotNull.as("__dec"), col("__dims"))

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** ISO-BMFF (MP4, ISO 14496-12) METADATA parse — the video half of
   * the multimodal story. Payload decode of video codecs is out of
@@ -510,27 +511,12 @@ object Mp4 {
     StructField("frag_duration_ms", LongType),
     StructField("sidx_duration_ms", LongType)))
 
-  /** Appends `${binCol}_mp4` (struct, null when unparseable) — the
-    * same mapPartitions seam as [[Multimodal.decodeFeatures]]: per-row
-    * byte-level parsing has no declarative form, and everything around
-    * it (gates, rollups) stays Catalyst-shaped.
-    */
-  def videoMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_mp4", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parseMeta(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(x) => Row(x.durationMs, x.timescale, x.nTracks, x.nVideo,
-            x.nAudio, x.videoCodec, x.width, x.height, x.audioCodec,
-            x.audioChannels, x.audioRate, x.nFragments, x.fragDurationMs,
-            x.sidxDurationMs)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_mp4` (struct, null when unparseable). */
+  def videoMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_mp4", metaType)) { b =>
+      parseMeta(b).map(x => Row(x.durationMs, x.timescale, x.nTracks, x.nVideo,
+        x.nAudio, x.videoCodec, x.width, x.height, x.audioCodec,
+        x.audioChannels, x.audioRate, x.nFragments, x.fragDurationMs,
+        x.sidxDurationMs)).orNull
     }
-  }
 }

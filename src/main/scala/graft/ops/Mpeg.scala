@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** MPEG audio (MP3) frame-header metadata — the audio sibling of
   * [[Mp4]]: what a curation pipeline needs from an `.mp3` column
@@ -234,25 +235,12 @@ object Mpeg {
     StructField("duration_ms", LongType),
     StructField("id3_bytes", IntegerType)))
 
-  /** Appends `${binCol}_mp3` (struct, null when unparseable) — the
-    * [[Multimodal.decodeFeatures]] mapPartitions seam.
-    */
-  def audioMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_mp3", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parseMeta(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(x) => Row(x.nFrames, x.sampleRate, x.bitrateKbps,
-            x.avgBitrateKbps, x.vbr,
-            if (x.declaredFrames >= 0) x.declaredFrames else null,
-            x.channels, x.durationMs, x.id3Bytes)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_mp3` (struct, null when unparseable). */
+  def audioMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_mp3", metaType)) { b =>
+      parseMeta(b).map(x => Row(x.nFrames, x.sampleRate, x.bitrateKbps,
+        x.avgBitrateKbps, x.vbr,
+        if (x.declaredFrames >= 0) x.declaredFrames else null,
+        x.channels, x.durationMs, x.id3Bytes)).orNull
     }
-  }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** Multimodal column plumbing: images/audio/video ride as opaque
   * `binary` columns with a typed metadata struct; decode / feature
@@ -14,10 +15,7 @@ import org.apache.spark.sql.types._
   * can't read (and audio/video codecs, which this container lacks) fall
   * back to `decodeStub`, a clearly marked deterministic fake with the
   * same signature — a real codec swaps in without touching plumbing.
-  * The decode seam is a typed `Dataset.mapPartitions` (the JVM analog of
-  * the Python API's `mapInPandas`: one iterator per partition, so codec
-  * setup amortizes per task, and rows stay in Tungsten via the Row
-  * encoder instead of round-tripping through the RDD API).
+  * Decodes append their fields through [[graft.runtime.PerRow]].
   */
 object Multimodal {
 
@@ -120,40 +118,30 @@ object Multimodal {
     StructField("channels", IntegerType),
     StructField("features", ArrayType(FloatType, containsNull = false))))
 
-  /** Decode + feature-extract a binary asset column, batched per
-    * partition via a typed Dataset.mapPartitions (no RDD round-trip —
-    * the Row encoder keeps rows in Tungsten). Real ImageIO decode for
-    * image payloads; the deterministic stub for everything else.
+  /** Decode + feature-extract a binary asset column: appends
+    * `<binCol>_decoded` (struct, never null — a null payload decodes as
+    * empty bytes). Real ImageIO decode for image payloads; the
+    * deterministic stub for everything else.
     */
-  def decodeFeatures(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_decoded", decodedType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      // per-task codec setup would happen HERE (ImageIO is stateless)
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        val safe = if (bytes == null) Array.emptyByteArray else bytes
-        val decoded = decodeImage(safe) match {
-          case Some((w, h, c, f)) => Row(w, h, c, f.toSeq)
-          case None =>
-            // r10: lossy WebP (and any other well-formed WebP outside
-            // the VP8L pixel decoder) still yields REAL dimensions from
-            // the container/frame header — dims filled, channels and
-            // features null, so downstream sees honest partial
-            // metadata instead of the stub's fake
-            WebpLossless.headerDimensions(safe) match {
-              case Some((w, h)) => Row(w, h, null, null)
-              case None =>
-                val (w, h, c, f) = decodeStub(safe)
-                Row(w, h, c, f.toSeq)
-            }
-        }
-        Row.fromSeq(r.toSeq :+ decoded)
+  def decodeFeatures(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_decoded", decodedType)) { bytes =>
+      val safe = if (bytes == null) Array.emptyByteArray else bytes
+      decodeImage(safe) match {
+        case Some((w, h, c, f)) => Row(w, h, c, f.toSeq)
+        case None =>
+          // r10: lossy WebP (and any other well-formed WebP outside
+          // the VP8L pixel decoder) still yields REAL dimensions from
+          // the container/frame header — dims filled, channels and
+          // features null, so downstream sees honest partial
+          // metadata instead of the stub's fake
+          WebpLossless.headerDimensions(safe) match {
+            case Some((w, h)) => Row(w, h, null, null)
+            case None =>
+              val (w, h, c, f) = decodeStub(safe)
+              Row(w, h, c, f.toSeq)
+          }
       }
     }
-  }
 
   /** Video frame sampling plumbing: one row per sampled frame index at
     * `fps`-spaced offsets (the decode of each frame is the same stub
@@ -173,8 +161,7 @@ object Multimodal {
     df.withColumn("resize_target",
       struct(lit(width).as("width"), lit(height).as("height")))
 
-  /** REAL image resize behind the same typed mapPartitions seam as
-    * [[decodeFeatures]]: ImageIO decode → bilinear Graphics2D scale →
+  /** REAL image resize: ImageIO decode → bilinear Graphics2D scale →
     * PNG re-encode, one offscreen buffer per row, pure JDK (headless-
     * safe — no display connection for offscreen rasters). Appends
     * `<binCol>_resized` (binary; null for undecodable/non-image
@@ -185,33 +172,24 @@ object Multimodal {
     */
   def resizeImages(df: DataFrame, binCol: String, width: Int, height: Int): DataFrame = {
     require(width >= 1 && height >= 1, s"target must be positive: ${width}x$height")
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_resized", BinaryType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        val resized: Array[Byte] =
-          if (bytes == null) null
-          else try {
-            val img = ImageDedup.decodeImage(bytes) // ImageIO, then VP8L
-            if (img == null) null
-            else {
-              val out = new java.awt.image.BufferedImage(width, height,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              val g = out.createGraphics()
-              g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(img, 0, 0, width, height, null)
-              g.dispose()
-              val bos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(out, "png", bos)
-              bos.toByteArray
-            }
-          } catch { case _: Exception => null }
-        Row.fromSeq(r.toSeq :+ resized)
-      }
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_resized", BinaryType)) { bytes =>
+      if (bytes == null) null
+      else try {
+        val img = ImageDedup.decodeImage(bytes) // ImageIO, then VP8L
+        if (img == null) null
+        else {
+          val out = new java.awt.image.BufferedImage(width, height,
+            java.awt.image.BufferedImage.TYPE_INT_RGB)
+          val g = out.createGraphics()
+          g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+          g.drawImage(img, 0, 0, width, height, null)
+          g.dispose()
+          val bos = new java.io.ByteArrayOutputStream()
+          javax.imageio.ImageIO.write(out, "png", bos)
+          bos.toByteArray
+        }
+      } catch { case _: Exception => null }
     }
   }
 
@@ -293,30 +271,22 @@ object Multimodal {
     }
   }
 
-  /** Audio feature extraction behind the same typed mapPartitions seam
-    * as [[decodeFeatures]]: appends sample_rate / channels / n_samples /
-    * duration_ms / peak / amp_sum_sq (all integer — engine-portable),
-    * null row on undecodable payloads. Embarrassingly parallel scan
-    * stage, no shuffle.
+  /** Audio feature extraction: appends sample_rate / channels /
+    * n_samples / duration_ms / peak / amp_sum_sq (all integer —
+    * engine-portable), all null on undecodable payloads. Embarrassingly
+    * parallel scan stage, no shuffle.
     */
-  def audioFeatures(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ Seq(
+  def audioFeatures(df: DataFrame, binCol: String): DataFrame =
+    PerRow.appendAll[Array[Byte]](df, binCol, Seq(
       StructField("sample_rate", IntegerType), StructField("channels", IntegerType),
       StructField("n_samples", LongType), StructField("duration_ms", LongType),
-      StructField("peak", LongType), StructField("amp_sum_sq", LongType)))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        decodeWav(bytes) match {
-          case Some((rate, ch, n, peak, sumSq)) =>
-            // Seq[Any]: a plain Seq literal would numerically widen the
-            // Ints to Long and break the Row encoder's INT fields
-            Row.fromSeq(r.toSeq ++ Seq[Any](rate, ch, n, n * 1000L / rate, peak, sumSq))
-          case None => Row.fromSeq(r.toSeq ++ Seq(null, null, null, null, null, null))
-        }
+      StructField("peak", LongType), StructField("amp_sum_sq", LongType))) { bytes =>
+      decodeWav(bytes) match {
+        case Some((rate, ch, n, peak, sumSq)) =>
+          // Seq[Any]: a plain Seq literal would numerically widen the
+          // Ints to Long and break the Row encoder's INT fields
+          Seq[Any](rate, ch, n, n * 1000L / rate, peak, sumSq)
+        case None => Seq(null, null, null, null, null, null)
       }
     }
-  }
 }

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** Ogg container metadata (Opus / Vorbis) — with [[Mpeg]] (MP3),
   * [[Mp4]] (AAC-in-MP4), and [[Flac]], this closes the set of audio
@@ -239,26 +240,13 @@ object Ogg {
     StructField("serial", LongType),
     StructField("complete", BooleanType)))
 
-  /** Appends `${binCol}_ogg` (struct, null when unparseable) — the
-    * [[Mpeg.audioMeta]] mapPartitions seam.
-    */
-  def audioMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_ogg", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        def n(i: Int): Any = if (i >= 0) i else null
-        val m = parseMeta(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(x) => Row(x.codec, x.channels, x.sampleRate,
-            n(x.preSkip), x.nPages, x.granuleLast,
-            if (x.durationMs >= 0) x.durationMs else null,
-            x.serial, x.complete)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_ogg` (struct, null when unparseable). */
+  def audioMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_ogg", metaType)) { b =>
+      def n(i: Int): Any = if (i >= 0) i else null
+      parseMeta(b).map(x => Row(x.codec, x.channels, x.sampleRate,
+        n(x.preSkip), x.nPages, x.granuleLast,
+        if (x.durationMs >= 0) x.durationMs else null,
+        x.serial, x.complete)).orNull
     }
-  }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** OOXML text extraction — the step that turns the [[Zip]] walk's
   * "this is a docx/xlsx" routing into TRAINING TEXT. Both formats
@@ -86,26 +87,16 @@ object Ooxml {
     StructField("text", StringType))) // units joined with \n
 
   /** Appends `${binCol}_ooxml` (struct, null when not OOXML or the
-    * text member is unreadable) — the [[Mpeg.audioMeta]] seam.
+    * text member is unreadable).
     */
-  def textMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_ooxml", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        val kind = Zip.parseMeta(bytes).map(_.kind)
-        val m = kind match {
-          case Some("docx") => docxParagraphs(bytes)
-            .map(ps => Row("docx", ps.length, ps.mkString("\n"))).orNull
-          case Some("xlsx") => xlsxStrings(bytes)
-            .map(ss => Row("xlsx", ss.length, ss.mkString("\n"))).orNull
-          case _ => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
+  def textMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_ooxml", metaType)) { b =>
+      Zip.parseMeta(b).map(_.kind) match {
+        case Some("docx") => docxParagraphs(b)
+          .map(ps => Row("docx", ps.length, ps.mkString("\n"))).orNull
+        case Some("xlsx") => xlsxStrings(b)
+          .map(ss => Row("xlsx", ss.length, ss.mkString("\n"))).orNull
+        case _ => null
       }
     }
-  }
 }

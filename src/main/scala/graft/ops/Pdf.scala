@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** PDF document metadata — after HTML, the single most common
   * document format a web crawl yields for training data, and the one
@@ -632,27 +633,14 @@ object Pdf {
     StructField("author", StringType),
     StructField("producer", StringType)))
 
-  /** Appends `${binCol}_pdf` (struct, null when not a PDF) — the
-    * [[Mpeg.audioMeta]] mapPartitions seam.
-    */
-  def docMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_pdf", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        def n(i: Int): Any = if (i >= 0) i else null
-        val m = parseMeta(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(x) => Row(x.version, n(x.nPages), n(x.nObjects),
-            x.xrefKind,
-            // no parsed xref -> encryption UNKNOWN, not false
-            if (x.xrefKind == null) null else x.encrypted,
-            x.title, x.author, x.producer)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_pdf` (struct, null when not a PDF). */
+  def docMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_pdf", metaType)) { b =>
+      def n(i: Int): Any = if (i >= 0) i else null
+      parseMeta(b).map(x => Row(x.version, n(x.nPages), n(x.nObjects),
+        x.xrefKind,
+        // no parsed xref -> encryption UNKNOWN, not false
+        if (x.xrefKind == null) null else x.encrypted,
+        x.title, x.author, x.producer)).orNull
     }
-  }
 }

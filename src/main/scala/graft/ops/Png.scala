@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** PNG chunk metadata — what the pixel path ([[Multimodal]]'s ImageIO
   * decode) cannot see: PNG carries PROVENANCE in its text chunks, and
@@ -219,25 +220,12 @@ object Png {
     StructField("ai_generated", BooleanType),
     StructField("complete", BooleanType)))
 
-  /** Appends `${binCol}_png` (struct, null when not a PNG) — the
-    * [[Mpeg.audioMeta]] mapPartitions seam.
-    */
-  def imageMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_png", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        def n(i: Int): Any = if (i >= 0) i else null
-        val m = parseMeta(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(x) => Row(x.width, x.height, x.bitDepth, x.colorType,
-            x.interlaced, x.nChunks, x.animated, n(x.nFrames), n(x.dpiX),
-            x.hasExif, x.textKeys, x.textValues, x.aiGenerated, x.complete)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_png` (struct, null when not a PNG). */
+  def imageMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_png", metaType)) { b =>
+      def n(i: Int): Any = if (i >= 0) i else null
+      parseMeta(b).map(x => Row(x.width, x.height, x.bitDepth, x.colorType,
+        x.interlaced, x.nChunks, x.animated, n(x.nFrames), n(x.dpiX),
+        x.hasExif, x.textKeys, x.textValues, x.aiGenerated, x.complete)).orNull
     }
-  }
 }

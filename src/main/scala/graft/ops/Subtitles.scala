@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** Subtitle cues (SRT + WebVTT) — the TEXT of a video corpus: for
   * video training data the transcript arrives as `.srt`/`.vtt`
@@ -120,22 +121,11 @@ object Subtitles {
   /** Appends `${strCol}_subs` (struct, null when not subtitles) over
     * a STRING column — transcripts are text sidecars, not binaries.
     */
-  def cueMeta(df: DataFrame, strCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${strCol}_subs", metaType))
-    val idx = df.schema.fieldIndex(strCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parse(r.getAs[String](idx)) match {
-          case Some(x) => Row(x.kind, x.nCues,
-            if (x.firstStartMs >= 0) x.firstStartMs else null,
-            if (x.lastEndMs >= 0) x.lastEndMs else null,
-            x.speechMs, x.textMd5, x.textChars)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  def cueMeta(df: DataFrame, strCol: String): DataFrame =
+    PerRow.append[String](df, strCol, StructField(s"${strCol}_subs", metaType)) { s =>
+      parse(s).map(x => Row(x.kind, x.nCues,
+        if (x.firstStartMs >= 0) x.firstStartMs else null,
+        if (x.lastEndMs >= 0) x.lastEndMs else null,
+        x.speechMs, x.textMd5, x.textChars)).orNull
     }
-  }
 }

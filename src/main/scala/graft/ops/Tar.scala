@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** POSIX ustar (tar) archive enumeration — the container the
   * WebDataset convention ships multimodal training corpora in: many
@@ -62,23 +63,14 @@ object Tar {
     StructField("size", LongType),
     StructField("payload", BinaryType))))
 
-  /** Appends `${binCol}_entries` (array of member structs) — the
-    * mapPartitions archive seam; a malformed archive fails the task
-    * loudly rather than yielding a silently partial sample set.
+  /** Appends `${binCol}_entries` (array of member structs, null for a
+    * null payload); a malformed archive fails the task loudly rather
+    * than yielding a silently partial sample set.
     */
-  def tarEntries(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_entries", entryType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val es = entries(r.getAs[Array[Byte]](binIdx))
-          .map(e => Row(e.name, e.size, e.payload))
-        Row.fromSeq(r.toSeq :+ es)
-      }
+  def tarEntries(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_entries", entryType)) { b =>
+      if (b == null) null else entries(b).map(e => Row(e.name, e.size, e.payload))
     }
-  }
 
   /** WebDataset sample key: the member basename before the FIRST dot
     * (directory part stripped) — `train/000123.seg.json` groups under

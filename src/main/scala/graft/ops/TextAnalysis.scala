@@ -365,7 +365,8 @@ object TextAnalysis {
     * far below natural language). Emits (idCol, n_bytes, n_deflate,
     * ratio_ppm = deflate·1e6/raw; empty docs report 1e6).
     *
-    * Runs behind a typed mapPartitions seam (the Multimodal pattern):
+    * Runs in a typed mapPartitions of its own (not
+    * [[graft.runtime.PerRow]], which keeps no per-partition state):
     * one Deflater instance per partition, reset per row — allocation-
     * free in steady state, embarrassingly parallel, no shuffle. Level
     * is pinned so the signal is deterministic and partitioning-

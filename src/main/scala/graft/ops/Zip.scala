@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.runtime.PerRow
 
 /** ZIP container metadata — the envelope of the modern document
   * corpus: DOCX/XLSX/PPTX (OOXML), EPUB, and JAR are all ZIP files,
@@ -227,23 +228,10 @@ object Zip {
     StructField("zip64", BooleanType),
     StructField("mimetype", StringType))) // epub self-declaration
 
-  /** Appends `${binCol}_zip` (struct, null when not a ZIP) — the
-    * [[Mpeg.audioMeta]] mapPartitions seam.
-    */
-  def containerMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(s"${binCol}_zip", metaType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val m = parseMeta(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(x) => Row(x.nEntries, x.totalUncomp, x.kind,
-            x.encrypted, x.zip64, x.mimetype)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
+  /** Appends `${binCol}_zip` (struct, null when not a ZIP). */
+  def containerMeta(df: DataFrame, binCol: String): DataFrame =
+    PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_zip", metaType)) { b =>
+      parseMeta(b).map(x => Row(x.nEntries, x.totalUncomp, x.kind,
+        x.encrypted, x.zip64, x.mimetype)).orNull
     }
-  }
 }

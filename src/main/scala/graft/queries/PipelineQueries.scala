@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.runtime.{Barrier, BuildOnce, Staging, Tables}
+import org.apache.spark.sql.types.{BinaryType, DataType, StructField}
+import graft.runtime.{Barrier, BuildOnce, PerRow, Staging, Tables}
 
 /** Training-data pipeline operators over the `documents` and `embeddings`
   * tables: deduplication, text analysis, similarity search. Written
@@ -12,6 +13,17 @@ import graft.runtime.{Barrier, BuildOnce, Staging, Tables}
   * all-pairs), and ANN broadcasts the small query side.
   */
 object PipelineQueries {
+
+  /** The documents' ids: the one column a media-format fixture builds from. */
+  private def docIds(s: SparkSession, d: String): DataFrame =
+    Tables.read(s, d, "documents").select(col("doc_id"))
+
+  /** `ids` plus a `name` payload built from each `doc_id`: the fixture
+    * rig of the media-format queries.
+    */
+  private def payloads(ids: DataFrame, name: String, t: DataType = BinaryType)(
+      build: Long => Any): DataFrame =
+    PerRow.append[Long](ids, "doc_id", StructField(name, t))(build)
 
   // ------------------------------------------------------------------ dedup
 
@@ -2943,20 +2955,11 @@ object PipelineQueries {
   val q114_audio_features = QueryDef(
     "q114_audio_features",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-      val base = Tables.read(s, d, "documents").select(col("doc_id"))
-      val outSchema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("payload", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      val withWav = base.mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val n = (400 + id % 800).toInt
-          val samples = Array.tabulate(n)(i =>
-            (((id * 7919L + i * 104729L) % 65536L) - 32768L).toShort)
-          Row(id, graft.ops.Multimodal.wavBytes(samples, 16000, 1))
-        }
+      val withWav = payloads(docIds(s, d), "payload") { id =>
+        val n = (400 + id % 800).toInt
+        val samples = Array.tabulate(n)(i =>
+          (((id * 7919L + i * 104729L) % 65536L) - 32768L).toShort)
+        graft.ops.Multimodal.wavBytes(samples, 16000, 1)
       }
       graft.ops.Multimodal.audioFeatures(withWav, "payload")
         .select(col("doc_id"), col("sample_rate"), col("channels"),
@@ -5416,31 +5419,22 @@ object PipelineQueries {
   val q159_mp4_meta = QueryDef(
     "q159_mp4_meta",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("v", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
       val rates = Array(8000, 16000, 44100)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val ts = (1000L * ((id % 3) + 1)).toInt
-          val dur = 90000L + id * 7
-          val audio = graft.ops.Mp4.Track("soun", 48000, dur, "mp4a",
-            channels = ((id % 3) + 1).toInt, sampleRate = rates((id % 3).toInt))
-          val tracks =
-            if (id % 2 == 0)
-              Seq(graft.ops.Mp4.Track("vide", 30000, dur, "avc1",
-                width = (320 + (id % 16) * 16).toInt,
-                height = (240 + (id % 8) * 16).toInt), audio)
-            else Seq(audio)
-          val full = graft.ops.Mp4.build(ts, dur, tracks,
-            version1 = id % 5 == 0, largeMoov = id % 11 == 0,
-            freeBox = id % 3 == 0)
-          Row(id, if (id % 7 == 0) full.take(40) else full)
-        }
+      val withBytes = payloads(docIds(s, d), "v") { id =>
+        val ts = (1000L * ((id % 3) + 1)).toInt
+        val dur = 90000L + id * 7
+        val audio = graft.ops.Mp4.Track("soun", 48000, dur, "mp4a",
+          channels = ((id % 3) + 1).toInt, sampleRate = rates((id % 3).toInt))
+        val tracks =
+          if (id % 2 == 0)
+            Seq(graft.ops.Mp4.Track("vide", 30000, dur, "avc1",
+              width = (320 + (id % 16) * 16).toInt,
+              height = (240 + (id % 8) * 16).toInt), audio)
+          else Seq(audio)
+        val full = graft.ops.Mp4.build(ts, dur, tracks,
+          version1 = id % 5 == 0, largeMoov = id % 11 == 0,
+          freeBox = id % 3 == 0)
+        if (id % 7 == 0) full.take(40) else full
       }
       graft.ops.Mp4.videoMeta(withBytes, "v")
         .select(col("doc_id"), col("v_mp4.duration_ms").as("duration_ms"),
@@ -5851,37 +5845,27 @@ object PipelineQueries {
   val q164_mp3_meta = QueryDef(
     "q164_mp3_meta",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("a", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
       // spread the MP3 frame build + header walk (the exchange carries
       // one long per row)
-      val withBytes = Barrier.spread(Tables.read(s, d, "documents").select(col("doc_id")))
-        .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val nf = (10 + id % 23).toInt
-          val srIdx = (id % 3).toInt
-          val brIdx = (id % 5 + 8).toInt
-          val stereo = id % 2 == 0
-          // kinds by id % 6 (1/3/5 are odd, so they never collide with
-          // the % 4 == 0 id3 branch): 1 = Xing-tagged VBR (per-frame
-          // rates vary), 3 = VBRI-tagged VBR, 5 = Info-tagged CBR,
-          // else plain untagged CBR
-          def vbrIdxs = (0 until nf).map(i => ((id + i) % 5 + 8).toInt)
-          val full = (id % 6) match {
-            case 1 => graft.ops.Mpeg.buildTagged(vbrIdxs, srIdx, stereo, "xing")
-            case 3 => graft.ops.Mpeg.buildTagged(vbrIdxs, srIdx, stereo, "vbri")
-            case 5 => graft.ops.Mpeg.buildTagged(Seq.fill(nf)(brIdx), srIdx,
-              stereo, "info")
-            case _ => graft.ops.Mpeg.build(nf, srIdx, brIdx, stereo,
-              id3Size = if (id % 4 == 0) (100 + id % 50).toInt else -1)
-          }
-          Row(id, if (id % 11 == 0) full.take(3) else full)
+      val withBytes = payloads(Barrier.spread(docIds(s, d)), "a") { id =>
+        val nf = (10 + id % 23).toInt
+        val srIdx = (id % 3).toInt
+        val brIdx = (id % 5 + 8).toInt
+        val stereo = id % 2 == 0
+        // kinds by id % 6 (1/3/5 are odd, so they never collide with
+        // the % 4 == 0 id3 branch): 1 = Xing-tagged VBR (per-frame
+        // rates vary), 3 = VBRI-tagged VBR, 5 = Info-tagged CBR,
+        // else plain untagged CBR
+        def vbrIdxs = (0 until nf).map(i => ((id + i) % 5 + 8).toInt)
+        val full = (id % 6) match {
+          case 1 => graft.ops.Mpeg.buildTagged(vbrIdxs, srIdx, stereo, "xing")
+          case 3 => graft.ops.Mpeg.buildTagged(vbrIdxs, srIdx, stereo, "vbri")
+          case 5 => graft.ops.Mpeg.buildTagged(Seq.fill(nf)(brIdx), srIdx,
+            stereo, "info")
+          case _ => graft.ops.Mpeg.build(nf, srIdx, brIdx, stereo,
+            id3Size = if (id % 4 == 0) (100 + id % 50).toInt else -1)
         }
+        if (id % 11 == 0) full.take(3) else full
       }
       graft.ops.Mpeg.audioMeta(withBytes, "a")
         .select(col("doc_id"), col("a_mp3.n_frames").as("n_frames"),
@@ -5953,29 +5937,20 @@ object PipelineQueries {
   val q177_flac_meta = QueryDef(
     "q177_flac_meta",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("a", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val sr = Array(44100, 48000, 96000, 22050)((id % 4).toInt)
-          val ch = (id % 3 + 1).toInt
-          val bps = Array(16, 24, 8)((id % 3).toInt)
-          val total = if (id % 17 == 0) 0L else 1000L + (id * 37) % 100000
-          val blk = if (id % 2 == 0) 4096 else 1024
-          val comments =
-            if (id % 3 == 0) (0 until (1 + id % 4).toInt).map(i =>
-              (s"k$i", s"v${(id + i) % 7}"))
-            else Seq.empty
-          val pad = if (id % 5 == 0) (256 + id % 100).toInt else -1
-          val full = graft.ops.Flac.build(sr, ch, bps, total, blk,
-            comments, pad)
-          Row(id, if (id % 13 == 0) full.take(10) else full)
-        }
+      val withBytes = payloads(docIds(s, d), "a") { id =>
+        val sr = Array(44100, 48000, 96000, 22050)((id % 4).toInt)
+        val ch = (id % 3 + 1).toInt
+        val bps = Array(16, 24, 8)((id % 3).toInt)
+        val total = if (id % 17 == 0) 0L else 1000L + (id * 37) % 100000
+        val blk = if (id % 2 == 0) 4096 else 1024
+        val comments =
+          if (id % 3 == 0) (0 until (1 + id % 4).toInt).map(i =>
+            (s"k$i", s"v${(id + i) % 7}"))
+          else Seq.empty
+        val pad = if (id % 5 == 0) (256 + id % 100).toInt else -1
+        val full = graft.ops.Flac.build(sr, ch, bps, total, blk,
+          comments, pad)
+        if (id % 13 == 0) full.take(10) else full
       }
       graft.ops.Flac.audioMeta(withBytes, "a")
         .select(col("doc_id"),
@@ -6037,29 +6012,20 @@ object PipelineQueries {
   val q178_exif_meta = QueryDef(
     "q178_exif_meta",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("img", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val w = 640 + (id % 13).toInt * 16
-          val h = 480 + (id % 7).toInt * 16
-          val model =
-            if (id % 4 == 0) "M" + (id % 10) else "Model" + (id % 7)
-          val full = graft.ops.Exif.build(w, h,
-            orientation = (id % 8 + 1).toInt,
-            make = "Make" + (id % 5), model = model,
-            dtOrig = f"2020:01:${id % 27 + 1}%02d 03:04:05",
-            pixelW = w + 1000, pixelH = h + 1000,
-            iso = (100 * (1 + id % 8)).toInt,
-            gps = id % 3 == 0, littleEndian = id % 2 == 0,
-            noExif = id % 7 == 0, fillByte = id % 6 == 0)
-          Row(id, if (id % 11 == 0) full.take(3) else full)
-        }
+      val withBytes = payloads(docIds(s, d), "img") { id =>
+        val w = 640 + (id % 13).toInt * 16
+        val h = 480 + (id % 7).toInt * 16
+        val model =
+          if (id % 4 == 0) "M" + (id % 10) else "Model" + (id % 7)
+        val full = graft.ops.Exif.build(w, h,
+          orientation = (id % 8 + 1).toInt,
+          make = "Make" + (id % 5), model = model,
+          dtOrig = f"2020:01:${id % 27 + 1}%02d 03:04:05",
+          pixelW = w + 1000, pixelH = h + 1000,
+          iso = (100 * (1 + id % 8)).toInt,
+          gps = id % 3 == 0, littleEndian = id % 2 == 0,
+          noExif = id % 7 == 0, fillByte = id % 6 == 0)
+        if (id % 11 == 0) full.take(3) else full
       }
       graft.ops.Exif.imageMeta(withBytes, "img")
         .select(col("doc_id"),
@@ -6390,27 +6356,17 @@ object PipelineQueries {
   val q181_ogg_meta = QueryDef(
     "q181_ogg_meta",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("a", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val codec = if (id % 2 == 0) "opus" else "vorbis"
-          val rate = Array(48000, 44100, 16000, 11025)((id % 4).toInt)
-          val full = graft.ops.Ogg.build(codec,
-            channels = (id % 3 + 1).toInt, sampleRate = rate,
-            preSkip = (312 + id % 100).toInt, serial = 7 + id,
-            dataPages = (3 + id % 9).toInt,
-            granulePerPage = 960L * (1 + id % 4))
-          Row(id,
-            if (id % 13 == 0) full.take(3)
-            else if (id % 10 == 0) full.dropRight(5)
-            else full)
-        }
+      val withBytes = payloads(docIds(s, d), "a") { id =>
+        val codec = if (id % 2 == 0) "opus" else "vorbis"
+        val rate = Array(48000, 44100, 16000, 11025)((id % 4).toInt)
+        val full = graft.ops.Ogg.build(codec,
+          channels = (id % 3 + 1).toInt, sampleRate = rate,
+          preSkip = (312 + id % 100).toInt, serial = 7 + id,
+          dataPages = (3 + id % 9).toInt,
+          granulePerPage = 960L * (1 + id % 4))
+        if (id % 13 == 0) full.take(3)
+        else if (id % 10 == 0) full.dropRight(5)
+        else full
       }
       graft.ops.Ogg.audioMeta(withBytes, "a")
         .select(col("doc_id"),
@@ -6470,37 +6426,26 @@ object PipelineQueries {
   val q182_pdf_meta = QueryDef(
     "q182_pdf_meta",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("doc", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val base = graft.ops.Pdf.build(
-            version = "1." + (4 + id % 4),
-            nPages = (1 + id % 12).toInt,
-            title = "T" + id, author = "A" + (id % 9),
-            producer = "graft " + (id % 3),
-            xrefStream = id % 2 == 1, predictor = id % 4 == 3,
-            encrypted = id % 7 == 0, hexTitle = id % 5 == 0)
-          // every id % 3 == 2: a save-in-place update replaces /Info —
-          // the /Prev chain must surface the NEW strings over the old
-          // bytes (appenders write classic tables even on stream bases)
-          val full =
-            if (id % 3 == 2) graft.ops.Pdf.buildIncremental(base, "U" + id)
-            else base
-          val bytes =
-            if (id % 13 == 0) full.take(2)
-            else if (id % 11 == 0) {
-              val str = new String(full, "ISO-8859-1")
-              (str.substring(0, str.lastIndexOf("startxref")) +
-                "startxref\n999999999\n%%EOF\n").getBytes("ISO-8859-1")
-            } else full
-          Row(id, bytes)
-        }
+      val withBytes = payloads(docIds(s, d), "doc") { id =>
+        val base = graft.ops.Pdf.build(
+          version = "1." + (4 + id % 4),
+          nPages = (1 + id % 12).toInt,
+          title = "T" + id, author = "A" + (id % 9),
+          producer = "graft " + (id % 3),
+          xrefStream = id % 2 == 1, predictor = id % 4 == 3,
+          encrypted = id % 7 == 0, hexTitle = id % 5 == 0)
+        // every id % 3 == 2: a save-in-place update replaces /Info —
+        // the /Prev chain must surface the NEW strings over the old
+        // bytes (appenders write classic tables even on stream bases)
+        val full =
+          if (id % 3 == 2) graft.ops.Pdf.buildIncremental(base, "U" + id)
+          else base
+        if (id % 13 == 0) full.take(2)
+        else if (id % 11 == 0) {
+          val str = new String(full, "ISO-8859-1")
+          (str.substring(0, str.lastIndexOf("startxref")) +
+            "startxref\n999999999\n%%EOF\n").getBytes("ISO-8859-1")
+        } else full
       }
       graft.ops.Pdf.docMeta(withBytes, "doc")
         .select(col("doc_id"),
@@ -6558,40 +6503,31 @@ object PipelineQueries {
   val q183_zip_meta = QueryDef(
     "q183_zip_meta",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("z", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          def b(x: String) = x.getBytes("UTF-8")
-          val members: Seq[(String, Array[Byte], Int, Boolean)] =
-            (id % 5) match {
-              case 0 => (0 until (2 + id % 4).toInt).map(i =>
-                (s"e$i.txt", b(s"c$i-$id" + "y" * (id % 20).toInt), 8, false))
-              case 1 => Seq(
-                ("mimetype", b("application/epub+zip"), 0, false),
-                ("META-INF/container.xml", b(s"<container id=$id/>"), 8,
-                  false),
-                ("OEBPS/ch1.xhtml", b(s"<html>$id</html>"), 8, false))
-              case 2 => Seq(
-                ("[Content_Types].xml", b(s"""<Types id="$id"/>"""), 8,
-                  false),
-                ("word/document.xml", b(s"<w:doc>$id</w:doc>"), 8, false))
-              case 3 => Seq(
-                ("META-INF/MANIFEST.MF",
-                  b(s"Manifest-Version: 1.0\nBuilt-By: $id\n"), 8, false),
-                ("com/x/A.class", b(s"CAFEBABE$id"), 0, false))
-              case _ => Seq(
-                ("data.bin", b(s"d-$id"), 8, false),
-                ("secret.bin", b(s"s-$id"), 0, true))
-            }
-          val full = graft.ops.Zip.build(members, forceZip64 = id % 9 == 0)
-          Row(id, if (id % 13 == 0) full.take(4) else full)
-        }
+      val withBytes = payloads(docIds(s, d), "z") { id =>
+        def b(x: String) = x.getBytes("UTF-8")
+        val members: Seq[(String, Array[Byte], Int, Boolean)] =
+          (id % 5) match {
+            case 0 => (0 until (2 + id % 4).toInt).map(i =>
+              (s"e$i.txt", b(s"c$i-$id" + "y" * (id % 20).toInt), 8, false))
+            case 1 => Seq(
+              ("mimetype", b("application/epub+zip"), 0, false),
+              ("META-INF/container.xml", b(s"<container id=$id/>"), 8,
+                false),
+              ("OEBPS/ch1.xhtml", b(s"<html>$id</html>"), 8, false))
+            case 2 => Seq(
+              ("[Content_Types].xml", b(s"""<Types id="$id"/>"""), 8,
+                false),
+              ("word/document.xml", b(s"<w:doc>$id</w:doc>"), 8, false))
+            case 3 => Seq(
+              ("META-INF/MANIFEST.MF",
+                b(s"Manifest-Version: 1.0\nBuilt-By: $id\n"), 8, false),
+              ("com/x/A.class", b(s"CAFEBABE$id"), 0, false))
+            case _ => Seq(
+              ("data.bin", b(s"d-$id"), 8, false),
+              ("secret.bin", b(s"s-$id"), 0, true))
+          }
+        val full = graft.ops.Zip.build(members, forceZip64 = id % 9 == 0)
+        if (id % 13 == 0) full.take(4) else full
       }
       graft.ops.Zip.containerMeta(withBytes, "z")
         .select(col("doc_id"),
@@ -6650,27 +6586,17 @@ object PipelineQueries {
   val q184_id3_tags = QueryDef(
     "q184_id3_tags",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("a", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val version = if (id % 2 == 0) 4 else 3
-          val encId = if (version == 3) (id % 3).toInt else (id % 4).toInt
-          val full = graft.ops.Id3.build(version,
-            title = s"Song é$id", artist = "Artist" + (id % 7),
-            album = "Album" + (id % 5), year = (1970 + id % 50).toString,
-            enc = encId, audio = Array.fill[Byte]((id % 10).toInt)(0x55),
-            padding = (id % 30).toInt)
-          Row(id,
-            if (id % 13 == 0) full.take(6)
-            else if (id % 11 == 0) Array.fill[Byte](32)(0x55)
-            else full)
-        }
+      val withBytes = payloads(docIds(s, d), "a") { id =>
+        val version = if (id % 2 == 0) 4 else 3
+        val encId = if (version == 3) (id % 3).toInt else (id % 4).toInt
+        val full = graft.ops.Id3.build(version,
+          title = s"Song é$id", artist = "Artist" + (id % 7),
+          album = "Album" + (id % 5), year = (1970 + id % 50).toString,
+          enc = encId, audio = Array.fill[Byte]((id % 10).toInt)(0x55),
+          padding = (id % 30).toInt)
+        if (id % 13 == 0) full.take(6)
+        else if (id % 11 == 0) Array.fill[Byte](32)(0x55)
+        else full
       }
       graft.ops.Id3.tagMeta(withBytes, "a")
         .select(col("doc_id"),
@@ -6730,38 +6656,28 @@ object PipelineQueries {
   val q185_content_route = QueryDef(
     "q185_content_route",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("c", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val bytes: Array[Byte] = (id % 9) match {
-            case 0 => graft.ops.Exif.build(640 + (id % 5).toInt * 8, 480,
-              orientation = 1, make = "Make" + (id % 5), model = "M",
-              dtOrig = "2020:01:01 00:00:00", pixelW = 9, pixelH = 9,
-              iso = 100, gps = false, littleEndian = true)
-            case 1 => graft.ops.Pdf.build("1.7", (1 + id % 6).toInt,
-              "T", "A", "P" + (id % 3))
-            case 2 => graft.ops.Zip.build((0 until (1 + id % 3).toInt).map(
-              i => (s"e$i.txt", s"z$i-$id".getBytes("UTF-8"), 8, false)))
-            case 3 => graft.ops.Id3.build(4, "T" + id, "A", "B", "2000",
-              enc = 0, audio = graft.ops.Mpeg.build((10 + id % 5).toInt,
-                samplerateIdx = 0, bitrateIdx = 9))
-            case 4 => graft.ops.Flac.build(44100, 2, 16,
-              44100L * (1 + id % 4))
-            case 5 => graft.ops.Ogg.build("opus", (id % 2 + 1).toInt,
-              48000, preSkip = 0, serial = 1L,
-              dataPages = (2 + id % 3).toInt, granulePerPage = 960L)
-            case 6 => graft.ops.Png.build(100 + (id % 7).toInt, 50,
-              texts = if (id % 2 == 0) Seq("parameters" -> "p") else Nil)
-            case 7 => graft.ops.Gif.build(80, 60, (1 + id % 4).toInt)
-            case _ => s"text-$id é".getBytes("UTF-8")
-          }
-          Row(id, bytes)
+      val withBytes = payloads(docIds(s, d), "c") { id =>
+        (id % 9) match {
+          case 0 => graft.ops.Exif.build(640 + (id % 5).toInt * 8, 480,
+            orientation = 1, make = "Make" + (id % 5), model = "M",
+            dtOrig = "2020:01:01 00:00:00", pixelW = 9, pixelH = 9,
+            iso = 100, gps = false, littleEndian = true)
+          case 1 => graft.ops.Pdf.build("1.7", (1 + id % 6).toInt,
+            "T", "A", "P" + (id % 3))
+          case 2 => graft.ops.Zip.build((0 until (1 + id % 3).toInt).map(
+            i => (s"e$i.txt", s"z$i-$id".getBytes("UTF-8"), 8, false)))
+          case 3 => graft.ops.Id3.build(4, "T" + id, "A", "B", "2000",
+            enc = 0, audio = graft.ops.Mpeg.build((10 + id % 5).toInt,
+              samplerateIdx = 0, bitrateIdx = 9))
+          case 4 => graft.ops.Flac.build(44100, 2, 16,
+            44100L * (1 + id % 4))
+          case 5 => graft.ops.Ogg.build("opus", (id % 2 + 1).toInt,
+            48000, preSkip = 0, serial = 1L,
+            dataPages = (2 + id % 3).toInt, granulePerPage = 960L)
+          case 6 => graft.ops.Png.build(100 + (id % 7).toInt, 50,
+            texts = if (id % 2 == 0) Seq("parameters" -> "p") else Nil)
+          case 7 => graft.ops.Gif.build(80, 60, (1 + id % 4).toInt)
+          case _ => s"text-$id é".getBytes("UTF-8")
         }
       }
       graft.ops.ContentRouter.routeMeta(withBytes, "c")
@@ -6825,39 +6741,29 @@ object PipelineQueries {
   val q186_subtitles = QueryDef(
     "q186_subtitles",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{LongType, StringType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("t", StringType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withText = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val vtt = id % 2 == 0
-          val n = (2 + id % 6).toInt
-          def stamp(ms: Long, sep: String): String = {
-            val h = ms / 3600000; val m = ms / 60000 % 60
-            val sec = ms / 1000 % 60; val f = ms % 1000
-            f"$h%02d:$m%02d:$sec%02d$sep$f%03d"
-          }
-          val sep = if (vtt) "." else ","
-          val sb = new StringBuilder()
-          if (vtt) sb.append("WEBVTT - graft\nKind: captions\n\n")
-            .append("NOTE\nsynthetic fixture\n\n")
-          (0 until n).foreach { i =>
-            val a = 4000L * i + id % 1000
-            val b = a + 1500 + (i % 3) * 500
-            if (vtt) sb.append(s"c$i\n")
-            else sb.append(s"${i + 1}\n")
-            sb.append(stamp(a, sep)).append(" --> ").append(stamp(b, sep))
-            if (vtt) sb.append(" align:start")
-            sb.append('\n')
-            sb.append(s"w$i <i>x$i</i>\n\n")
-          }
-          Row(id,
-            if (id % 13 == 0) "not subtitles\nat all" else sb.toString)
+      val withText = payloads(docIds(s, d), "t", org.apache.spark.sql.types.StringType) { id =>
+        val vtt = id % 2 == 0
+        val n = (2 + id % 6).toInt
+        def stamp(ms: Long, sep: String): String = {
+          val h = ms / 3600000; val m = ms / 60000 % 60
+          val sec = ms / 1000 % 60; val f = ms % 1000
+          f"$h%02d:$m%02d:$sec%02d$sep$f%03d"
         }
+        val sep = if (vtt) "." else ","
+        val sb = new StringBuilder()
+        if (vtt) sb.append("WEBVTT - graft\nKind: captions\n\n")
+          .append("NOTE\nsynthetic fixture\n\n")
+        (0 until n).foreach { i =>
+          val a = 4000L * i + id % 1000
+          val b = a + 1500 + (i % 3) * 500
+          if (vtt) sb.append(s"c$i\n")
+          else sb.append(s"${i + 1}\n")
+          sb.append(stamp(a, sep)).append(" --> ").append(stamp(b, sep))
+          if (vtt) sb.append(" align:start")
+          sb.append('\n')
+          sb.append(s"w$i <i>x$i</i>\n\n")
+        }
+        if (id % 13 == 0) "not subtitles\nat all" else sb.toString
       }
       graft.ops.Subtitles.cueMeta(withText, "t")
         .select(col("doc_id"),
@@ -7000,35 +6906,25 @@ object PipelineQueries {
   val q188_png_meta = QueryDef(
     "q188_png_meta",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("img", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val (depth, color) = (id % 4) match {
-            case 1 => (16, 2); case 3 => (8, 3); case _ => (8, 6)
-          }
-          val texts =
-            (if (id % 2 == 0) Seq("Software" -> s"graft ${id % 4}")
-             else Seq.empty) ++
-            (if (id % 9 == 0) Seq("parameters" -> s"prompt p$id")
-             else Seq.empty)
-          val full = graft.ops.Png.build(
-            width = 64 + (id % 50).toInt * 4, height = 64 + (id % 30).toInt * 4,
-            bitDepth = depth, colorType = color, interlaced = id % 6 == 0,
-            dpi = if (id % 3 == 0) Array(72, 96, 150, 300)((id % 4).toInt)
-              else -1,
-            animFrames = if (id % 7 == 0) (2 + id % 5).toInt else -1,
-            exif = id % 5 == 0, texts = texts, itxt = id % 8 == 0)
-          Row(id,
-            if (id % 13 == 0) full.take(10)
-            else if (id % 11 == 0) full.dropRight(5)
-            else full)
+      val withBytes = payloads(docIds(s, d), "img") { id =>
+        val (depth, color) = (id % 4) match {
+          case 1 => (16, 2); case 3 => (8, 3); case _ => (8, 6)
         }
+        val texts =
+          (if (id % 2 == 0) Seq("Software" -> s"graft ${id % 4}")
+           else Seq.empty) ++
+          (if (id % 9 == 0) Seq("parameters" -> s"prompt p$id")
+           else Seq.empty)
+        val full = graft.ops.Png.build(
+          width = 64 + (id % 50).toInt * 4, height = 64 + (id % 30).toInt * 4,
+          bitDepth = depth, colorType = color, interlaced = id % 6 == 0,
+          dpi = if (id % 3 == 0) Array(72, 96, 150, 300)((id % 4).toInt)
+            else -1,
+          animFrames = if (id % 7 == 0) (2 + id % 5).toInt else -1,
+          exif = id % 5 == 0, texts = texts, itxt = id % 8 == 0)
+        if (id % 13 == 0) full.take(10)
+        else if (id % 11 == 0) full.dropRight(5)
+        else full
       }
       graft.ops.Png.imageMeta(withBytes, "img")
         .select(col("doc_id"),
@@ -7110,43 +7006,32 @@ object PipelineQueries {
   val q189_ooxml_text = QueryDef(
     "q189_ooxml_text",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("doc", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          def b(x: String) = x.getBytes("UTF-8")
-          val n = (1 + id % 4).toInt
-          val bytes: Array[Byte] =
-            if (id % 13 == 0) b("just text, no archive")
-            else if (id % 2 == 1) {
-              val body = (0 until n).map { i =>
-                "<w:p><w:r><w:t>P" + i + "-a&amp;b</w:t></w:r>" +
-                  (if (i % 2 == 1) "<w:r><w:tab/></w:r>" else "") +
-                  "<w:r><w:t xml:space=\"preserve\">&lt;e" + id +
-                  "&gt;</w:t></w:r></w:p>"
-              }.mkString
-              graft.ops.Zip.build(Seq(
-                ("[Content_Types].xml", b("<Types/>"), 8, false),
-                ("word/document.xml", b("<?xml version=\"1.0\"?>" +
-                  s"<w:document><w:body>$body</w:body></w:document>"), 8,
-                  false)))
-            } else {
-              val sis = (0 until n).map { i =>
-                if (i % 3 == 2)
-                  "<si><r><t>v" + i + "</t></r><r><t xml:space=" +
-                    "\"preserve\"> &amp; w</t></r></si>"
-                else "<si><t>v" + i + " &amp; w</t></si>"
-              }.mkString
-              graft.ops.Zip.build(Seq(
-                ("[Content_Types].xml", b("<Types/>"), 8, false),
-                ("xl/sharedStrings.xml", b(s"<sst>$sis</sst>"), 8, false)))
-            }
-          Row(id, bytes)
+      val withBytes = payloads(docIds(s, d), "doc") { id =>
+        def b(x: String) = x.getBytes("UTF-8")
+        val n = (1 + id % 4).toInt
+        if (id % 13 == 0) b("just text, no archive")
+        else if (id % 2 == 1) {
+          val body = (0 until n).map { i =>
+            "<w:p><w:r><w:t>P" + i + "-a&amp;b</w:t></w:r>" +
+              (if (i % 2 == 1) "<w:r><w:tab/></w:r>" else "") +
+              "<w:r><w:t xml:space=\"preserve\">&lt;e" + id +
+              "&gt;</w:t></w:r></w:p>"
+          }.mkString
+          graft.ops.Zip.build(Seq(
+            ("[Content_Types].xml", b("<Types/>"), 8, false),
+            ("word/document.xml", b("<?xml version=\"1.0\"?>" +
+              s"<w:document><w:body>$body</w:body></w:document>"), 8,
+              false)))
+        } else {
+          val sis = (0 until n).map { i =>
+            if (i % 3 == 2)
+              "<si><r><t>v" + i + "</t></r><r><t xml:space=" +
+                "\"preserve\"> &amp; w</t></r></si>"
+            else "<si><t>v" + i + " &amp; w</t></si>"
+          }.mkString
+          graft.ops.Zip.build(Seq(
+            ("[Content_Types].xml", b("<Types/>"), 8, false),
+            ("xl/sharedStrings.xml", b(s"<sst>$sis</sst>"), 8, false)))
         }
       }
       graft.ops.Ooxml.textMeta(withBytes, "doc")
@@ -7191,44 +7076,34 @@ object PipelineQueries {
   val q190_epub_text = QueryDef(
     "q190_epub_text",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("doc", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
       // spread the EPUB zip build + chapter extraction (the exchange
       // carries one long per row)
-      val withBytes = Barrier.spread(Tables.read(s, d, "documents").select(col("doc_id")))
-        .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          def b(x: String) = x.getBytes("UTF-8")
-          val n = (1 + id % 3).toInt
-          val order =
-            if (id % 4 == 0) (0 until n).reverse else 0 until n
-          val items = (0 until n).map(i =>
-            s"""<item id="c$i" href="c$i.xhtml" """ +
-              """media-type="application/xhtml+xml"/>""").mkString
-          val spine = order.map(i => s"""<itemref idref="c$i"/>""").mkString
-          val opf = """<?xml version="1.0"?><package><metadata>""" +
-            s"<dc:title>Book $id</dc:title>" +
-            s"<dc:creator>Author ${id % 5}</dc:creator>" +
-            "<dc:language>" + Seq("en", "fr", "de")((id % 3).toInt) +
-            "</dc:language></metadata>" +
-            s"<manifest>$items</manifest><spine>$spine</spine></package>"
-          val chapters = (0 until n).map(i =>
-            (s"OEBPS/c$i.xhtml", b("<html><head><title>h</title></head>" +
-              s"<body><h1>Ch $i</h1>\n<p>Text &amp; $id-$i.</p>\n" +
-              "</body></html>"), 8, false))
-          val full = graft.ops.Zip.build(Seq(
-            ("mimetype", b("application/epub+zip"), 0, false),
-            ("META-INF/container.xml", b("<container><rootfiles>" +
-              """<rootfile full-path="OEBPS/content.opf"/>""" +
-              "</rootfiles></container>"), 8, false),
-            ("OEBPS/content.opf", b(opf), 8, false)) ++ chapters)
-          Row(id, if (id % 13 == 0) b(s"plain text $id") else full)
-        }
+      val withBytes = payloads(Barrier.spread(docIds(s, d)), "doc") { id =>
+        def b(x: String) = x.getBytes("UTF-8")
+        val n = (1 + id % 3).toInt
+        val order =
+          if (id % 4 == 0) (0 until n).reverse else 0 until n
+        val items = (0 until n).map(i =>
+          s"""<item id="c$i" href="c$i.xhtml" """ +
+            """media-type="application/xhtml+xml"/>""").mkString
+        val spine = order.map(i => s"""<itemref idref="c$i"/>""").mkString
+        val opf = """<?xml version="1.0"?><package><metadata>""" +
+          s"<dc:title>Book $id</dc:title>" +
+          s"<dc:creator>Author ${id % 5}</dc:creator>" +
+          "<dc:language>" + Seq("en", "fr", "de")((id % 3).toInt) +
+          "</dc:language></metadata>" +
+          s"<manifest>$items</manifest><spine>$spine</spine></package>"
+        val chapters = (0 until n).map(i =>
+          (s"OEBPS/c$i.xhtml", b("<html><head><title>h</title></head>" +
+            s"<body><h1>Ch $i</h1>\n<p>Text &amp; $id-$i.</p>\n" +
+            "</body></html>"), 8, false))
+        val full = graft.ops.Zip.build(Seq(
+          ("mimetype", b("application/epub+zip"), 0, false),
+          ("META-INF/container.xml", b("<container><rootfiles>" +
+            """<rootfile full-path="OEBPS/content.opf"/>""" +
+            "</rootfiles></container>"), 8, false),
+          ("OEBPS/content.opf", b(opf), 8, false)) ++ chapters)
+        if (id % 13 == 0) b(s"plain text $id") else full
       }
       graft.ops.Epub.bookMeta(withBytes, "doc")
         .select(col("doc_id"),
@@ -7275,31 +7150,21 @@ object PipelineQueries {
   val q191_gif_meta = QueryDef(
     "q191_gif_meta",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("img", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val frames = (1 + id % 6).toInt
-          val delays =
-            if (id % 3 == 0) (0 until frames).map(i => (5 + (id + i) % 20).toInt)
-            else Seq.empty[Int]
-          val full = graft.ops.Gif.build(
-            width = 32 + (id % 40).toInt * 8,
-            height = 32 + (id % 25).toInt * 8,
-            frames = frames, delaysCs = delays,
-            loop = if (id % 4 == 0) (id % 7).toInt else -1,
-            gctSize = (id % 7).toInt,
-            comment = if (id % 5 == 0) "c" + id else null)
-          Row(id,
-            if (id % 13 == 0) full.take(4)
-            else if (id % 11 == 0) full.dropRight(8)
-            else full)
-        }
+      val withBytes = payloads(docIds(s, d), "img") { id =>
+        val frames = (1 + id % 6).toInt
+        val delays =
+          if (id % 3 == 0) (0 until frames).map(i => (5 + (id + i) % 20).toInt)
+          else Seq.empty[Int]
+        val full = graft.ops.Gif.build(
+          width = 32 + (id % 40).toInt * 8,
+          height = 32 + (id % 25).toInt * 8,
+          frames = frames, delaysCs = delays,
+          loop = if (id % 4 == 0) (id % 7).toInt else -1,
+          gctSize = (id % 7).toInt,
+          comment = if (id % 5 == 0) "c" + id else null)
+        if (id % 13 == 0) full.take(4)
+        else if (id % 11 == 0) full.dropRight(8)
+        else full
       }
       graft.ops.Gif.imageMeta(withBytes, "img")
         .select(col("doc_id"),
@@ -7359,30 +7224,21 @@ object PipelineQueries {
   val q165_webdataset = QueryDef(
     "q165_webdataset",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("shard", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val shards = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val members = (0 to (id % 3).toInt).flatMap { i =>
-            val base = Seq(
-              (s"sh/s$i.txt", s"t$id-$i".getBytes("UTF-8")),
-              (s"sh/s$i.json", s"""{"i":$i}""".getBytes("UTF-8")))
-            if (i % 2 == 0)
-              base :+ ((s"sh/s$i.cls", s"c${(id + i) % 10}".getBytes("UTF-8")))
-            else base
-          } ++ Seq(
-            // a >100-char sample key: forces a GNU L long-name member
-            // through the builder and the framer's override handling
-            // (r11 What's wrong #5) — a truncating reader emits a
-            // 100-char key here and breaks the hash
-            (s"sh/${"L" * 110}$id.txt", s"L$id".getBytes("UTF-8")))
-          Row(id, graft.ops.Tar.build(members))
-        }
+      val shards = payloads(docIds(s, d), "shard") { id =>
+        val members = (0 to (id % 3).toInt).flatMap { i =>
+          val base = Seq(
+            (s"sh/s$i.txt", s"t$id-$i".getBytes("UTF-8")),
+            (s"sh/s$i.json", s"""{"i":$i}""".getBytes("UTF-8")))
+          if (i % 2 == 0)
+            base :+ ((s"sh/s$i.cls", s"c${(id + i) % 10}".getBytes("UTF-8")))
+          else base
+        } ++ Seq(
+          // a >100-char sample key: forces a GNU L long-name member
+          // through the builder and the framer's override handling
+          // (r11 What's wrong #5) — a truncating reader emits a
+          // 100-char key here and breaks the hash
+          (s"sh/${"L" * 110}$id.txt", s"L$id".getBytes("UTF-8")))
+        graft.ops.Tar.build(members)
       }
       graft.ops.Tar.tarEntries(shards, "shard")
         .select(col("doc_id"), explode(col("shard_entries")).as("e"))
@@ -7550,40 +7406,31 @@ object PipelineQueries {
   val q168_fmp4_meta = QueryDef(
     "q168_fmp4_meta",
     (s, d) => {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-        StructType}
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("v", BinaryType)))
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val withBytes = Tables.read(s, d, "documents").select(col("doc_id")).mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val ts = (1000L * (id % 3 + 1)).toInt
-          val nf = (2 + id % 4).toInt
-          val nsamp = (5 + id % 7).toInt
-          val dur = (id % 3 match {
-            case 0 => 30 + id % 10
-            case 1 => 40 + id % 10
-            case _ => 50 + id % 10
-          }).toInt
-          val vid = graft.ops.Mp4.Track("vide", ts, 0L, "avc1",
-            width = 640, height = 360)
-          val frags = (0 until nf).map { _ =>
-            id % 3 match {
-              case 0 => graft.ops.Mp4.FragRun(1, nsamp, sampleDurTs = Some(dur))
-              case 1 => graft.ops.Mp4.FragRun(1, nsamp, tfhdDefaultTs = Some(dur))
-              case _ => graft.ops.Mp4.FragRun(1, nsamp) // trex carries it
-            }
+      val withBytes = payloads(docIds(s, d), "v") { id =>
+        val ts = (1000L * (id % 3 + 1)).toInt
+        val nf = (2 + id % 4).toInt
+        val nsamp = (5 + id % 7).toInt
+        val dur = (id % 3 match {
+          case 0 => 30 + id % 10
+          case 1 => 40 + id % 10
+          case _ => 50 + id % 10
+        }).toInt
+        val vid = graft.ops.Mp4.Track("vide", ts, 0L, "avc1",
+          width = 640, height = 360)
+        val frags = (0 until nf).map { _ =>
+          id % 3 match {
+            case 0 => graft.ops.Mp4.FragRun(1, nsamp, sampleDurTs = Some(dur))
+            case 1 => graft.ops.Mp4.FragRun(1, nsamp, tfhdDefaultTs = Some(dur))
+            case _ => graft.ops.Mp4.FragRun(1, nsamp) // trex carries it
           }
-          val sidx = if (id % 2 == 0)
-            Some((1000, Seq.fill(nf)((100 + id % 50).toInt))) else None
-          val full = graft.ops.Mp4.buildFragmented(1000, Seq(vid),
-            Map(1 -> (50 + id % 10).toInt), frags, sidx)
-          // cut INSIDE the final mdat box (length/2 can land exactly on
-          // a box boundary and parse cleanly — doc 403 did at sf0.01)
-          Row(id, if (id % 13 == 0) full.take(full.length - 5) else full)
         }
+        val sidx = if (id % 2 == 0)
+          Some((1000, Seq.fill(nf)((100 + id % 50).toInt))) else None
+        val full = graft.ops.Mp4.buildFragmented(1000, Seq(vid),
+          Map(1 -> (50 + id % 10).toInt), frags, sidx)
+        // cut INSIDE the final mdat box (length/2 can land exactly on
+        // a box boundary and parse cleanly — doc 403 did at sf0.01)
+        if (id % 13 == 0) full.take(full.length - 5) else full
       }
       graft.ops.Mp4.videoMeta(withBytes, "v")
         .select(col("doc_id"),

@@ -11,18 +11,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ArchiveGuardSpec extends AnyFunSuite {
 
-  private lazy val sources: Seq[(String, String)] = MainSources.files
-    .filterNot(_.getPath.contains("/graft/tools/"))
-    .map(f => f.getName -> MainSources.text(f))
-
-  private lazy val outsideFs = sources.filterNot(_._1 == "ArchiveFs.scala")
+  private lazy val outsideFs =
+    MainSources.outsideTools.filterNot(_.getName == "ArchiveFs.scala")
 
   private def capped(what: String, pattern: String, cap: Int,
-      in: Seq[(String, String)] = sources): Unit = {
-    val sites = in.map { case (f, t) => f -> pattern.r.findAllMatchIn(t).size }
-      .filter(_._2 > 0)
+      in: Seq[java.io.File] = MainSources.outsideTools): Unit = {
+    val sites = MainSources.sites(pattern.r, in)
     val n = sites.map(_._2).sum
-    assert(n <= cap, s"$n $what sites (${sites.map { case (f, k) => s"$f x$k" }
+    assert(n <= cap, s"$n $what sites (${MainSources.labels(sites)
       .mkString(", ")}); at most $cap, in graft.sources.Archive")
   }
 

@@ -10,16 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BarrierGuardSpec extends AnyFunSuite {
 
-  private lazy val sources: Seq[(String, String)] = MainSources.files
-    .filterNot(_.getPath.contains("/graft/tools/"))
-    .map(f => f.getName -> MainSources.text(f))
-
-  /** (total, per-file counts) of `pattern` over `sources`. */
+  /** (total, per-file counts) of `pattern` outside `graft/tools`. */
   private def count(pattern: String,
-      in: Seq[(String, String)] = sources): (Int, Seq[String]) = {
-    val sites = in.map { case (f, t) => f -> pattern.r.findAllMatchIn(t).size }
-      .filter(_._2 > 0)
-    (sites.map(_._2).sum, sites.map { case (f, k) => s"$f x$k" })
+      in: Seq[java.io.File] = MainSources.outsideTools): (Int, Seq[String]) = {
+    val sites = MainSources.sites(pattern.r, in)
+    (sites.map(_._2).sum, MainSources.labels(sites))
   }
 
   private def quoted(s: String) = java.util.regex.Pattern.quote(s)
@@ -42,7 +37,7 @@ class BarrierGuardSpec extends AnyFunSuite {
   test("plain persists only in Graph.pageRank and Collocations.pmiBigrams") {
     // a scope's persist is released by the scope; any other is plain
     val plain = """(?<!scope)\.persist\("""
-    val (n, sites) = count(plain, sources.filterNot(_._1 == "Barrier.scala"))
+    val (n, sites) = count(plain, MainSources.outsideTools.filterNot(_.getName == "Barrier.scala"))
     assert(sites.toSet == Set("Graph.scala x3", "Collocations.scala x1"),
       s"$n plain persists (${sites.mkString(", ")}); persist through Barrier.scoped")
   }

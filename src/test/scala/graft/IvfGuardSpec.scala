@@ -7,12 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IvfGuardSpec extends AnyFunSuite {
 
-  private lazy val sources: String =
-    Seq("Similarity", "Quantization", "Pq", "Ivf").map { name =>
-      val f = new java.io.File(s"src/main/scala/graft/ops/$name.scala")
-      assert(f.isFile, s"expected source file at ${f.getAbsolutePath}")
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    }.mkString("\n")
+  private lazy val sources: String = Seq("Similarity", "Quantization", "Pq", "Ivf")
+    .map(name => MainSources.source(s"graft/ops/$name.scala")).mkString("\n")
 
   private def occurrences(needle: String): Int =
     java.util.regex.Pattern.quote(needle).r.findAllMatchIn(sources).size

@@ -64,10 +64,8 @@ class StagingSpec extends AnyFunSuite {
 
   test("src/main creates temp dirs and files only in Staging") {
     val needle = "createTemp(Directory|File)".r
-    val sites = MainSources.files.filter(_.getName != "Staging.scala")
-      .map(f => f.getPath -> needle.findAllMatchIn(MainSources.text(f)).size)
-      .filter(_._2 > 0)
-    assert(sites.isEmpty, s"temp dirs made outside Staging: ${sites
-      .map { case (f, k) => s"$f x$k" }.mkString(", ")}; stage through graft.runtime.Staging.dir")
+    val sites = MainSources.sites(needle, MainSources.files.filter(_.getName != "Staging.scala"))
+    assert(sites.isEmpty, s"temp dirs made outside Staging: ${MainSources
+      .labels(sites, _.getPath).mkString(", ")}; stage through graft.runtime.Staging.dir")
   }
 }

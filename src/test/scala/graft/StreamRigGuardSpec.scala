@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamRigGuardSpec extends AnyFunSuite {
 
-  private lazy val sparkEntry: String = {
-    val f = new java.io.File("src/main/scala/graft/SparkEntry.scala")
-    assert(f.isFile, s"expected source file at ${f.getAbsolutePath}")
-    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-  }
+  private lazy val sparkEntry: String = MainSources.source("graft/SparkEntry.scala")
 
   private def occurrences(needle: String): Int =
     java.util.regex.Pattern.quote(needle).r.findAllMatchIn(sparkEntry).size
@@ -29,11 +25,9 @@ class StreamRigGuardSpec extends AnyFunSuite {
   test("nanosAsLong is set in one place") {
     // the key as a string literal: a conf set, not a doc mention
     val needle = java.util.regex.Pattern.quote("\"spark.sql.legacy.parquet.nanosAsLong\"").r
-    val sites = MainSources.files
-      .map(f => f.getName -> needle.findAllMatchIn(MainSources.text(f)).size)
-      .filter(_._2 > 0)
+    val sites = MainSources.sites(needle, MainSources.files)
     val n = sites.map(_._2).sum
-    assert(n <= 1, s"$n nanosAsLong sites (${sites.map { case (f, k) => s"$f x$k" }
+    assert(n <= 1, s"$n nanosAsLong sites (${MainSources.labels(sites)
       .mkString(", ")}); read sf tables through graft.runtime.Tables")
   }
 
