@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{PipelineQueries, Queries, QueryDef}
 import graft.runtime.{Barrier, BuildOnce, Staging, Tables}
-import scala.util.chaining._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -73,8 +72,11 @@ object SynthQueries {
     * the ~40 ms WAL/offset/commit floor of every micro-batch: one 10-s
     * `stream_ingest` bench run (g122 on RocksDB state) started 2,437
     * `readlink` and 874 `chmod` processes, 2.5 CPU-s of children. With
-    * the pin the same run starts no `readlink` and 190 `chmod` (RocksDB
-    * SST uploads and fixture writes, outside the manager), 0.2 CPU-s.
+    * the pin and the build-once fixtures (below) the same run starts no
+    * JVM `readlink`, 141 `chmod` (RocksDB SST uploads and the bench's
+    * own result writes) and 140 `rm -rf` (RocksDB state dirs), all
+    * outside the manager: 286 helper processes (seed 11, 4-core VM),
+    * where rewriting g122's fixture every replay made 335.
     * Other schemes keep Spark's default manager.
     *
     * Run step: every query the body starts runs under
@@ -84,12 +86,23 @@ object SynthQueries {
     * incarnation per call over a shared checkpoint), or `run` itself for
     * a rig's own writer (g114's `foreachBatch`, g134's `wds` sink).
     *
-    * On exit the scope also drops every `_sink_` memory-sink view and
-    * releases every [[graft.runtime.Staging]] dir the body staged
-    * through `dir` (the keys that start with `<rig>_`). A rig whose
+    * On exit the scope drops the memory-sink views its `drain` calls
+    * registered and releases the [[graft.runtime.Staging]] dirs the body
+    * staged through `dir`: exactly those keys, no others. A rig whose
     * result reads a staged dir (a parquet sink, a `foreachBatch` output)
     * must therefore return it [[materialized]]; memory-sink tables
     * already hold their rows in the driver.
+    *
+    * Fixtures: a rig's stream input that is fully staged before its
+    * first query starts and never grows during the run (split files, the
+    * events symlink and sentinel) is a [[StreamScope.fixture]]: built
+    * once per (rig, name, sf dir) through [[BuildOnce.dir]], so a warm
+    * replay runs only its stream. The scope never releases a fixture;
+    * [[BuildOnce.clear]] or the JVM's exit does. A restart rig (g116,
+    * g125, g126, g131, g133-g135) adds files between its incarnations, so
+    * its input is not a fixture: a fixture grown by one replay would hand
+    * the next replay's first incarnation every file at once. Sinks and
+    * checkpoints are never fixtures either: they are written by the run.
     */
   private def streamScoped(s: SparkSession, rig: String,
       confs: (String, String)*)(f: StreamScope => DataFrame): DataFrame = {
@@ -97,20 +110,7 @@ object SynthQueries {
     val pins = Seq("spark.sql.shuffle.partitions" -> "8",
       LocalCheckpointFileManager.ConfKey ->
         classOf[LocalCheckpointFileManager].getName) ++ confs
-    try scope.withConf(pins: _*)(f(scope)) finally {
-      // Memory-sink hygiene: every streaming replay registers a fresh
-      // uuid-named memory sink holding its full result in driver memory,
-      // and nothing ever dropped them — N bench reps retained N result
-      // sets plus temp-view entries for the rest of the JVM (one
-      // plausible mechanism behind r6's uniform suite-context slowdown).
-      // Dropping the view here is safe: the DataFrame returned by
-      // s.table(name) is already analyzed, so its plan keeps the sink's
-      // data alive exactly until the caller drops the DataFrame.
-      s.catalog.listTables().collect().foreach { t =>
-        if (t.name.contains("_sink_")) s.catalog.dropTempView(t.name)
-      }
-      Staging.release(_.startsWith(s"${rig}_"))
-    }
+    try scope.withConf(pins: _*)(f(scope)) finally scope.close()
   }
 
   /** The RocksDB state-store pins a [[streamScoped]] rig passes as its
@@ -133,16 +133,52 @@ object SynthQueries {
 
   /** What a [[streamScoped]] body stages, pins and runs through. */
   private final class StreamScope(s: SparkSession, rig: String) {
+    /** The [[Staging]] keys `dir` staged. */
+    private val staged = scala.collection.mutable.Set.empty[String]
+
+    /** The memory-sink views `drain` registered. */
+    private val sinks = scala.collection.mutable.Buffer.empty[String]
+
     /** A fresh [[Staging]] dir `<rig>_<name>...`, released when the scope
       * exits.
       */
-    def dir(name: String): java.nio.file.Path = Staging.dir(s"${rig}_$name")
+    def dir(name: String): java.nio.file.Path = {
+      val key = s"${rig}_$name"
+      staged += key
+      Staging.dir(key)
+    }
 
-    /** A fresh memory-sink name; the `_sink_` infix is what the scope
-      * drops on exit.
+    /** The dir of the read-only stream input `name`, which `write` fills
+      * once per (rig, name, sf dir `d`) through [[BuildOnce.dir]]: a warm
+      * replay streams the dir the first replay built. The scope never
+      * releases it (see [[streamScoped]] for what may be a fixture).
       */
-    private def sinkName: String =
-      s"${rig}_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    def fixture(name: String, d: String)(write: java.nio.file.Path => Unit)
+        : java.nio.file.Path =
+      java.nio.file.Paths.get(BuildOnce.dir(s"${rig}_$name", d) { dir =>
+        write(java.nio.file.Paths.get(dir))
+      })
+
+    /** A [[fixture]] of same-schema split files, one micro-batch each in
+      * `files` order ([[StreamFiles.writeMany]]). `files` is evaluated
+      * only when the fixture is built, so the driver collects it needs
+      * run once per sf dir too.
+      */
+    def fixtureFiles(name: String, d: String)(
+        files: => Seq[(String, DataFrame)]): java.nio.file.Path =
+      fixture(name, d)(StreamFiles.writeMany(files, _))
+
+    /** Drops the memory-sink views and releases the staged dirs. Memory-
+      * sink hygiene: each replay registers a uuid-named sink holding its
+      * full result in driver memory, which N bench reps would otherwise
+      * retain N times. Dropping the view is safe: the frame `drain`
+      * returned is already analyzed, so its plan keeps the sink's data
+      * alive until the caller drops the frame.
+      */
+    def close(): Unit = {
+      sinks.foreach(s.catalog.dropTempView)
+      Staging.release(staged)
+    }
 
     /** `body` with each `(key, value)` pin set in order; afterwards every
       * key is restored to its previous value, or unset if it had none.
@@ -171,7 +207,8 @@ object SynthQueries {
       */
     def drain(df: DataFrame, mode: String, minBatches: Int = 0,
         check: Array[StreamingQueryProgress] => Unit = _ => ()): DataFrame = {
-      val name = sinkName
+      val name = s"${rig}_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
+      sinks += name
       val q = run(df.writeStream.format("memory").queryName(name)
         .outputMode(mode))
       val batches = q.recentProgress.count(_.numInputRows > 0)
@@ -196,24 +233,23 @@ object SynthQueries {
       * through [[Tables.read]]) and the staged stream with `ts` normalized
       * to BIGINT nanos. The file-stream source only accepts directories
       * (it anchors its listing at a basePath directory), so the single
-      * file is exposed through a symlink in a staged dir. With
+      * file is exposed through a symlink in a [[fixture]] dir. With
       * `sentinelS`, a [[sentinelRow]] that many seconds past the last
       * event is staged beside it as `z_sentinel.parquet`; its watermark
       * advance lets the trailing no-data micro-batch flush every real
-      * window, session or timer.
+      * window, session or timer. Each `sentinelS` is its own fixture.
       */
     def events(d: String, sentinelS: Option[Long] = None)
         : (DataFrame, DataFrame) = {
-      import org.apache.spark.sql.functions.max
       val evRaw = Tables.read(s, d, "events")
-      val streamDir = dir("events")
-      java.nio.file.Files.createSymbolicLink(
-        streamDir.resolve("a_events.parquet"),
-        java.nio.file.Paths.get(s"$d/events.parquet"))
-      sentinelS.foreach { secs =>
-        val maxNs = EventTs.toNanos(evRaw).agg(max("ts")).collect()(0).getLong(0)
-        StreamFiles.writeOne(sentinelRow(evRaw, maxNs + secs * 1000000000L),
-          streamDir, "z_sentinel")
+      val name = "events" + sentinelS.fold("")(secs => s"_z$secs")
+      val streamDir = fixture(name, d) { dir =>
+        java.nio.file.Files.createSymbolicLink(dir.resolve("a_events.parquet"),
+          java.nio.file.Paths.get(s"$d/events.parquet"))
+        sentinelS.foreach { secs =>
+          StreamFiles.writeOne(sentinelRow(evRaw,
+            eventsTsRange(s, d)._2 + secs * 1000000000L), dir, "z_sentinel")
+        }
       }
       (evRaw, EventTs.toNanos(
         s.readStream.schema(evRaw.schema).parquet(streamDir.toString)))
@@ -266,6 +302,30 @@ object SynthQueries {
     math.max(65536L, maxSeg / s.sparkContext.defaultParallelism)
   }
 
+  /** The events table's first and last `ts` (BIGINT nanos), collected
+    * once per sf dir: the split points and sentinels of the event rigs.
+    */
+  private def eventsTsRange(s: SparkSession, d: String): (Long, Long) =
+    BuildOnce("events_ts_range", d) {
+      import org.apache.spark.sql.functions.{max, min}
+      val r = Tables.events(s, d).agg(min("ts"), max("ts")).collect()(0)
+      (r.getLong(0), r.getLong(1))
+    }
+
+  /** The CUSUM target of g118/g125: the mean `value` of the events in
+    * the first half of the time range, in micro-units, collected once
+    * per sf dir.
+    */
+  private def cusumTarget(s: SparkSession, d: String): Long =
+    BuildOnce[java.lang.Long]("cusum_target", d) {
+      import org.apache.spark.sql.functions.{count, expr, lit, round, sum}
+      val (minNs, maxNs) = eventsTsRange(s, d)
+      Tables.events(s, d).filter(col("ts") <= (minNs + maxNs) / 2)
+        .agg(sum(round(col("value") * 1000000).cast("long")).as("sv"),
+          count(lit(1)).as("nv"))
+        .select(expr("sv div nv")).collect()(0).getLong(0)
+    }.longValue
+
   /** The multi-batch transformWithState event split (g111/g116): the
     * events table cut into three TIME-thirds plus a far-future sentinel
     * row (advances the final watermark so every key's last timer fires;
@@ -278,11 +338,9 @@ object SynthQueries {
     */
   private def eventThirdFiles(s: SparkSession, d: String)
       : Seq[(String, DataFrame)] = {
-    import org.apache.spark.sql.functions.{lit, max, min, unix_micros}
+    import org.apache.spark.sql.functions.{lit, unix_micros}
     val evRaw = Tables.read(s, d, "events")
-    val ev = EventTs.toNanos(evRaw)
-    val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
-      .toSeq.map(_.asInstanceOf[Long]).toArray
+    val (minNs, maxNs) = eventsTsRange(s, d)
     // split the RAW rows by their normalized-ns timestamp (the raw ts
     // type varies by testdata generation — see EventTs)
     val tsNs = evRaw.schema("ts").dataType match {
@@ -1496,10 +1554,9 @@ object SynthQueries {
           graft.ops.Quantization.writeHashIvfIndex(vecs, "vec_id", "embedding", dir, 8)
         }
         val q = vecs.filter(col("vec_id") % 50 === 0)
-        val streamDir = st.dir("queries")
-        StreamFiles.writeMany(Seq(
+        val streamDir = st.fixtureFiles("queries", d)(Seq(
           "a" -> q.filter(col("vec_id") % 100 === 0),
-          "b" -> q.filter(col("vec_id") % 100 =!= 0)), streamDir)
+          "b" -> q.filter(col("vec_id") % 100 =!= 0)))
         val outDir = st.dir("out").toString
         // the schema every batch wrote, read back without inference
         var served: StructType = null
@@ -2194,17 +2251,15 @@ object SynthQueries {
         import org.apache.spark.sql.functions.{count, expr, lit, timestamp_micros,
           unix_timestamp, window}
         val evRaw = Tables.read(s, d, "events")
-        val streamDir = st.dir("events")
         // two halves by event id parity — both halves span the whole
         // timeline, so most windows receive rows from BOTH batches
-        evRaw.filter(col("event_id") % 2 === 0).repartition(1)
-          .write.parquet(streamDir.resolve("h0").toString)
-        evRaw.filter(col("event_id") % 2 === 1).repartition(1)
-          .write.parquet(streamDir.resolve("h1").toString)
+        val streamDir = st.fixtureFiles("events", d)(Seq(
+          "h0" -> evRaw.filter(col("event_id") % 2 === 0),
+          "h1" -> evRaw.filter(col("event_id") % 2 === 1)))
         val counts = EventTs.toNanos(
           s.readStream.schema(evRaw.schema)
             .option("maxFilesPerTrigger", "1")
-            .parquet(streamDir.toString + "/h*"))
+            .parquet(streamDir.toString))
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "1 hour")
           .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
@@ -2228,10 +2283,9 @@ object SynthQueries {
     // two rows, so the batch GROUP BY oracle hash-catches the defect.
     QueryDef("g111_stream_tws_multibatch",
       (s, d) => streamScoped(s, "g111", RocksDb: _*) { st =>
-        val streamDir = st.dir("events")
         // four single-file triggers, processed in write order (thirds +
         // sentinel — see eventThirdFiles for why thirds)
-        StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
+        val streamDir = st.fixtureFiles("events", d)(eventThirdFiles(s, d))
         st.drain(typeCountStream(s, streamDir, Tables.read(s, d, "events").schema), "append",
           minBatches = 4).filter(col("user_id") >= 0)
       },
@@ -2305,11 +2359,10 @@ object SynthQueries {
     QueryDef("g117_stream_drift",
       (s, d) => streamScoped(s, "g117") { st =>
         import org.apache.spark.sql.functions.{abs, broadcast, coalesce,
-          count, expr, lit, max, min, timestamp_micros, unix_timestamp, window}
+          count, expr, lit, timestamp_micros, unix_timestamp, window}
         val evRaw = Tables.read(s, d, "events")
         val ev = EventTs.toNanos(evRaw)
-        val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
-          .toSeq.map(_.asInstanceOf[Long]).toArray
+        val (minNs, maxNs) = eventsTsRange(s, d)
         val midNs = (minNs + maxNs) / 2
         val spanS = (midNs - minNs) / 1000000000L
         // reference-period hourly rate per type, in milli-events/hour
@@ -2318,8 +2371,7 @@ object SynthQueries {
           .groupBy("event_type").agg(count(lit(1)).as("nb"))
           .select(col("event_type"),
             expr(s"nb * 3600000L div ${spanS}L").as("expected_milli"))
-        val streamDir = st.dir("events")
-        StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
+        val streamDir = st.fixtureFiles("events", d)(eventThirdFiles(s, d))
         val windowed = EventTs.toNanos(
           s.readStream.schema(evRaw.schema)
             .option("maxFilesPerTrigger", "1")
@@ -2379,23 +2431,15 @@ object SynthQueries {
     // RocksDB state across four watermark-advancing micro-batches.
     QueryDef("g118_stream_cusum",
       (s, d) => streamScoped(s, "g118", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{expr, lit, max, min, round,
-          sum, timestamp_micros, when}
+        import org.apache.spark.sql.functions.{expr, lit, round,
+          timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
         val evRaw = Tables.read(s, d, "events")
-        val ev = EventTs.toNanos(evRaw)
-        val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
-          .toSeq.map(_.asInstanceOf[Long]).toArray
-        val midNs = (minNs + maxNs) / 2
+        val (minNs, maxNs) = eventsTsRange(s, d)
         val t2 = minNs + 2L * (maxNs - minNs) / 3
-        // reference-period mean in micro-units — the CUSUM target
-        val target = ev.filter(col("ts") <= midNs)
-          .agg(sum(round(col("value") * 1000000).cast("long")).as("sv"),
-            org.apache.spark.sql.functions.count(lit(1)).as("nv"))
-          .select(expr("sv div nv")).collect()(0).getLong(0)
-        val streamDir = st.dir("events")
-        StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
+        val target = cusumTarget(s, d)
+        val streamDir = st.fixtureFiles("events", d)(eventThirdFiles(s, d))
         val scored = EventTs.toNanos(
           s.readStream.schema(evRaw.schema)
             .option("maxFilesPerTrigger", "1")
@@ -2434,20 +2478,14 @@ object SynthQueries {
     // REAL query restart, not just CusumSpec's batch-split unit test.
     QueryDef("g125_stream_cusum_restart",
       (s, d) => streamScoped(s, "g125", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{expr, lit, min => fmin,
-          max => fmax, round, sum, timestamp_micros, when}
+        import org.apache.spark.sql.functions.{expr, lit, round,
+          timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
         val evRaw = Tables.read(s, d, "events")
-        val ev = EventTs.toNanos(evRaw)
-        val Array(minNs, maxNs) = ev.agg(fmin("ts"), fmax("ts")).collect()(0)
-          .toSeq.map(_.asInstanceOf[Long]).toArray
-        val midNs = (minNs + maxNs) / 2
+        val (minNs, maxNs) = eventsTsRange(s, d)
         val t2 = minNs + 2L * (maxNs - minNs) / 3
-        val target = ev.filter(col("ts") <= midNs)
-          .agg(sum(round(col("value") * 1000000).cast("long")).as("sv"),
-            org.apache.spark.sql.functions.count(lit(1)).as("nv"))
-          .select(expr("sv div nv")).collect()(0).getLong(0)
+        val target = cusumTarget(s, d)
         val streamDir = st.dir("events")
         val ckptDir = st.dir("ckpt").toString
         val outDir = st.dir("out").toString
@@ -2499,17 +2537,14 @@ object SynthQueries {
     // processor's Math.floorDiv on the reference sum.
     QueryDef("g123_stream_cusum_adaptive",
       (s, d) => streamScoped(s, "g123", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{expr, lit, max, min, round,
+        import org.apache.spark.sql.functions.{expr, lit, round,
           timestamp_micros, when}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
         val evRaw = Tables.read(s, d, "events")
-        val ev = EventTs.toNanos(evRaw)
-        val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
-          .toSeq.map(_.asInstanceOf[Long]).toArray
+        val (minNs, maxNs) = eventsTsRange(s, d)
         val t2 = minNs + 2L * (maxNs - minNs) / 3
-        val streamDir = st.dir("events")
-        StreamFiles.writeMany(eventThirdFiles(s, d), streamDir)
+        val streamDir = st.fixtureFiles("events", d)(eventThirdFiles(s, d))
         val scored = EventTs.toNanos(
           s.readStream.schema(evRaw.schema)
             .option("maxFilesPerTrigger", "1")
@@ -2628,14 +2663,14 @@ object SynthQueries {
         }
         // three id-ordered files: both duplicate generations arrive
         // AFTER their originals, so first-seen attribution is decidable
-        val streamDir = st.dir("imgs")
-        val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
-          .collect()(0).getLong(0) / 2
-        Seq(
-          "a_low" -> fixture.filter(col("id") <= half),
-          "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
-          "c_dups" -> fixture.filter(col("id") >= 10000000L)
-        ).pipe(fs => StreamFiles.writeMany(fs, streamDir))
+        val streamDir = st.fixtureFiles("imgs", d) {
+          val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
+            .collect()(0).getLong(0) / 2
+          Seq(
+            "a_low" -> fixture.filter(col("id") <= half),
+            "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
+            "c_dups" -> fixture.filter(col("id") >= 10000000L))
+        }
         val hashed = graft.ops.ImageDedup.dHash(
           s.readStream.schema(fixture.schema)
             .option("maxFilesPerTrigger", "1")
@@ -2687,26 +2722,26 @@ object SynthQueries {
     // trailing-hour windows stay unflushed exactly as in production.
     QueryDef("g120_stream_late_data",
       (s, d) => streamScoped(s, "g120") { st =>
-        import org.apache.spark.sql.functions.{count, expr, lit, max, min,
-          pmod, timestamp_micros, unix_timestamp, window, xxhash64}
+        import org.apache.spark.sql.functions.{count, expr, lit, pmod,
+          timestamp_micros, unix_timestamp, window, xxhash64}
         val ev = Tables.events(s, d)
-        val Array(minNs, maxNs) = ev.agg(min("ts"), max("ts")).collect()(0)
-          .toSeq.map(_.asInstanceOf[Long]).toArray
-        val t1 = minNs + (maxNs - minNs) / 3
-        val t2 = minNs + 2L * (maxNs - minNs) / 3
-        val tagged = ev
-          .withColumn("__disp", (pmod(xxhash64(col("event_id")), lit(20L)) === 0L)
-            .cast("int"))
-          .withColumn("__file",
-            (org.apache.spark.sql.functions.when(col("ts") <= t1, 1)
-              .when(col("ts") <= t2, 2).otherwise(3)) + col("__disp") * 2)
-        val streamDir = st.dir("events")
-        StreamFiles.writeMany((1 to 5).map { k =>
-          s"${('a' + k - 1).toChar}_f$k" -> tagged.filter(col("__file") === k)
-            .drop("__disp", "__file")
-        }, streamDir)
+        val streamDir = st.fixtureFiles("events", d) {
+          val (minNs, maxNs) = eventsTsRange(s, d)
+          val t1 = minNs + (maxNs - minNs) / 3
+          val t2 = minNs + 2L * (maxNs - minNs) / 3
+          val tagged = ev
+            .withColumn("__disp", (pmod(xxhash64(col("event_id")), lit(20L)) === 0L)
+              .cast("int"))
+            .withColumn("__file",
+              (org.apache.spark.sql.functions.when(col("ts") <= t1, 1)
+                .when(col("ts") <= t2, 2).otherwise(3)) + col("__disp") * 2)
+          (1 to 5).map { k =>
+            s"${('a' + k - 1).toChar}_f$k" -> tagged.filter(col("__file") === k)
+              .drop("__disp", "__file")
+          }
+        }
         val counts = s.readStream
-          .schema(tagged.drop("__disp", "__file").schema)
+          .schema(ev.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(streamDir.toString)
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
@@ -2801,14 +2836,14 @@ object SynthQueries {
               .hashCorpusPng(r.getLong(0), r.getInt(2), r.getInt(3)))
           }
         }
-        val streamDir = st.dir("imgs")
-        val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
-          .collect()(0).getLong(0) / 2
-        Seq(
-          "a_low" -> fixture.filter(col("id") <= half),
-          "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
-          "c_dups" -> fixture.filter(col("id") >= 10000000L)
-        ).pipe(fs => StreamFiles.writeMany(fs, streamDir))
+        val streamDir = st.fixtureFiles("imgs", d) {
+          val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
+            .collect()(0).getLong(0) / 2
+          Seq(
+            "a_low" -> fixture.filter(col("id") <= half),
+            "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
+            "c_dups" -> fixture.filter(col("id") >= 10000000L))
+        }
         val hashed = graft.ops.ImageDedup.dHash(
           s.readStream.schema(fixture.schema)
             .option("maxFilesPerTrigger", "1")
@@ -2900,14 +2935,14 @@ object SynthQueries {
             xxhash64(col("base_id")).bitwiseXOR(col("fl")).as("sig"))
         val fixture = base.unionByName(twins)
           .select(col("id"), (col("id") * 1000000L).as("ts"), col("sig"))
-        val streamDir = st.dir("sigs")
-        val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
-          .collect()(0).getLong(0) / 2
-        Seq(
-          "a_low" -> fixture.filter(col("id") <= half),
-          "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
-          "c_dups" -> fixture.filter(col("id") >= 10000000L)
-        ).pipe(fs => StreamFiles.writeMany(fs, streamDir))
+        val streamDir = st.fixtureFiles("sigs", d) {
+          val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
+            .collect()(0).getLong(0) / 2
+          Seq(
+            "a_low" -> fixture.filter(col("id") <= half),
+            "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
+            "c_dups" -> fixture.filter(col("id") >= 10000000L))
+        }
         val banded = s.readStream.schema(fixture.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(streamDir.toString)
@@ -3678,32 +3713,35 @@ object SynthQueries {
         import s.implicits._
         val maxHamming = 3
         val windowOrd = 500L
-        val ids = Tables.read(s, d, "documents")
-          .select(col("doc_id").cast("long").as("base_id"))
-        val maxId = ids.agg(fmax("base_id")).collect()(0).getLong(0)
-        val base = ids.select(col("base_id").as("id"),
-          col("base_id").as("ord"), xxhash64(col("base_id")).as("sig"))
-        val h = pmod(col("base_id"), lit(3L)) + 1L
-        val twins = ids.filter(col("base_id") % 8 === 0)
-          .withColumn("a", pmod(col("base_id") * 7, lit(64L)))
-          .withColumn("fl", expr("shiftleft(1L, CAST(a AS INT))")
-            .bitwiseOR(when(h >= 2L,
-              expr("shiftleft(1L, CAST((a + 21) % 64 AS INT))")).otherwise(lit(0L)))
-            .bitwiseOR(when(h >= 3L,
-              expr("shiftleft(1L, CAST((a + 43) % 64 AS INT))")).otherwise(lit(0L))))
-          .select((col("base_id") + 10000000L).as("id"),
-            (lit(maxId + 1L) + pmod(col("base_id"), lit(256L)) * 2L).as("ord"),
-            xxhash64(col("base_id")).bitwiseXOR(col("fl")).as("sig"))
-        val fixture = base.unionByName(twins)
-          .select(col("id"), col("ord"), col("sig"))
-        val streamDir = st.dir("sigs")
-        val half = maxId / 2
-        Seq(
-          "a_low" -> fixture.filter(col("id") <= half),
-          "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
-          "c_dups" -> fixture.filter(col("id") >= 10000000L)
-        ).pipe(fs => StreamFiles.writeMany(fs, streamDir))
-        val banded = s.readStream.schema(fixture.schema)
+        val streamDir = st.fixtureFiles("sigs", d) {
+          val ids = Tables.read(s, d, "documents")
+            .select(col("doc_id").cast("long").as("base_id"))
+          val maxId = ids.agg(fmax("base_id")).collect()(0).getLong(0)
+          val base = ids.select(col("base_id").as("id"),
+            col("base_id").as("ord"), xxhash64(col("base_id")).as("sig"))
+          val h = pmod(col("base_id"), lit(3L)) + 1L
+          val twins = ids.filter(col("base_id") % 8 === 0)
+            .withColumn("a", pmod(col("base_id") * 7, lit(64L)))
+            .withColumn("fl", expr("shiftleft(1L, CAST(a AS INT))")
+              .bitwiseOR(when(h >= 2L,
+                expr("shiftleft(1L, CAST((a + 21) % 64 AS INT))")).otherwise(lit(0L)))
+              .bitwiseOR(when(h >= 3L,
+                expr("shiftleft(1L, CAST((a + 43) % 64 AS INT))")).otherwise(lit(0L))))
+            .select((col("base_id") + 10000000L).as("id"),
+              (lit(maxId + 1L) + pmod(col("base_id"), lit(256L)) * 2L).as("ord"),
+              xxhash64(col("base_id")).bitwiseXOR(col("fl")).as("sig"))
+          val fixture = base.unionByName(twins)
+            .select(col("id"), col("ord"), col("sig"))
+          val half = maxId / 2
+          Seq(
+            "a_low" -> fixture.filter(col("id") <= half),
+            "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
+            "c_dups" -> fixture.filter(col("id") >= 10000000L))
+        }
+        // the fixture's columns; a file stream reads every column nullable
+        val sigSchema = StructType(Seq("id", "ord", "sig")
+          .map(org.apache.spark.sql.types.StructField(_, LongType)))
+        val banded = s.readStream.schema(sigSchema)
           .option("maxFilesPerTrigger", "1")
           .parquet(streamDir.toString)
           .select(col("id"), col("ord"), col("sig"),

@@ -5,7 +5,9 @@ import scala.jdk.CollectionConverters._
 
 /** JVM-wide build-once memo for values that are expensive to build and
   * cheap to serve: ANN index directories, driver-side fits (k-means
-  * centroids, PQ codebooks) and the WARC fixture corpora. Build and
+  * centroids, PQ codebooks), the WARC fixture corpora, the streaming
+  * rigs' read-only inputs and the per-sf-dir values they are cut by
+  * (the events time range). Build and
   * serve are different operations with different cost models — an index
   * is built once and served many times — so a bench rep that rebuilt per
   * invocation would time the wrong thing. Each build prints one
@@ -56,6 +58,12 @@ object BuildOnce {
       write(d)
       d
     }(d => s" -> $d")
+
+  /** The live dirs [[dir]] built: a streaming rig's fixtures, indexes,
+    * WARC corpora.
+    */
+  def dirs: Set[java.nio.file.Path] =
+    cells.keySet.asScala.flatMap(k => Staging.liveDir(stagingKey(k))).toSet
 
   /** The [[Staging]] key of cell `key`: its name plus a digest of its
     * sfDir, so the same name built for two sfDirs stages two dirs.

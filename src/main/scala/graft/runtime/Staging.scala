@@ -38,6 +38,9 @@ object Staging {
     d
   }
 
+  /** The live dir of `key`, if it has one. */
+  def liveDir(key: String): Option[Path] = Option(live.get(key))
+
   /** Deletes now the live dir of every key that `keys` accepts. */
   def release(keys: String => Boolean): Unit =
     live.forEach { (k, d) => if (keys(k) && live.remove(k, d)) deleteTree(d) }

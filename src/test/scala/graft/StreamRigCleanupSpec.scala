@@ -1,12 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.runtime.Staging
+import graft.runtime.{BuildOnce, Staging}
 import graft.tools.ParityHarness.digest
 
 /** Streaming rigs stage their inputs, checkpoints and sinks under
   * `java.io.tmpdir`; the scope they run in must delete all of it when
   * the rig returns, and the rig's result must still be readable after.
+  * A rig's read-only input is a build-once fixture instead: it stays
+  * until `BuildOnce.clear()`, and a second call adds none.
   * A batch query that returns a lazy read of its staged dir keeps one
   * dir per staging key: building it again replaces the previous one.
   */
@@ -44,12 +46,24 @@ class StreamRigCleanupSpec extends AnyFunSuite {
     // as the JVM by design; build it before taking the snapshot
     SparkEntry.queries("g110_ann_hash_ivf")(spark, sf).collect()
     val before = rigEntries()
-    rigs.foreach { name =>
+    def runRigs(): Unit = rigs.foreach { name =>
       val rows = SparkEntry.queries(name)(spark, sf).collect()
       assert(rows.nonEmpty, s"$name returned no rows")
     }
-    val added = rigEntries() -- before
+    runRigs()
+    // the first call may add only the rigs' build-once fixtures
+    val fixtures = BuildOnce.dirs.map(_.getFileName.toString)
+    val added = rigEntries() -- before -- fixtures
     assert(added.isEmpty, s"left in java.io.tmpdir: ${added.toSeq.sorted.mkString(", ")}")
+    val afterFirst = rigEntries()
+    runRigs()
+    val addedAgain = rigEntries() -- afterFirst
+    assert(addedAgain.isEmpty,
+      s"a second call left: ${addedAgain.toSeq.sorted.mkString(", ")}")
+    BuildOnce.clear()
+    val leftAfterClear = rigEntries() -- before
+    assert(leftAfterClear.isEmpty,
+      s"left after BuildOnce.clear(): ${leftAfterClear.toSeq.sorted.mkString(", ")}")
   }
 
   test("batch queries keep one staged dir per key until released") {

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * parquet file-sink incarnation and the conf save/restore loop each
   * live in one helper of `streamScoped`/`StreamScope`, and every rig
   * runs under the scope's one AvailableNow run step, so no
-  * `processAllAvailable` is left. nanosAsLong is set in one place in
+  * `processAllAvailable` is left. A read-only stream input is written
+  * once per sf dir through `StreamScope.fixtureFiles`; only the restart
+  * rigs write their files per replay. nanosAsLong is set in one place in
   * all of `src/main` (graft.runtime.Tables).
   */
 class StreamRigGuardSpec extends AnyFunSuite {
@@ -20,6 +22,14 @@ class StreamRigGuardSpec extends AnyFunSuite {
   test("events are staged through one symlink helper") {
     val n = occurrences("createSymbolicLink")
     assert(n <= 1, s"$n createSymbolicLink sites; stage events through StreamScope.events")
+  }
+
+  test("read-only stream inputs are build-once fixtures") {
+    // the restart rigs' 8 per-incarnation writes, plus the scope's
+    // fixtureFiles and events sentinel
+    val n = "StreamFiles\\.write(Many|One)\\(".r.findAllMatchIn(sparkEntry).size
+    assert(n <= 10, s"$n StreamFiles.write sites; stage a read-only input " +
+      "through StreamScope.fixtureFiles")
   }
 
   test("nanosAsLong is set in one place") {
