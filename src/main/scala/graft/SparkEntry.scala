@@ -53,15 +53,23 @@ object SynthQueries {
     * it had none. [[StreamScope.withConf]] narrows a pin to part of the
     * body through the same save/restore loop.
     *
-    * Shuffle partitions are pinned to 8 inside the scope: stateful
-    * operators clone one state-store instance per shuffle partition and
-    * commit each of them every micro-batch, so the session's
-    * one-partition-per-core default (32 on the bench host) pays that
-    * many store commits per batch for kilobyte-scale state — measured
-    * at 32 partitions as 3x the whole query time on the interval joins.
-    * 8 is right for a single-JVM replay; on a real cluster the stateful
-    * shuffle should track executor count instead (set before the query
-    * first starts — state partitioning is fixed at the first run).
+    * State width: the scope pins the shuffle partition count, which is
+    * the number of state stores each stateful operator keeps, to the
+    * session's task slots, `min(stateCap, defaultParallelism)`. A store
+    * is loaded, committed and synced every micro-batch at a fixed cost
+    * that does not depend on its kilobytes of state, so the stateful
+    * stage should run in one wave of tasks. On a 4-core host, g122's
+    * warm first batch (sf0.01) committed 8 stores in two waves in
+    * 505-582 ms (summed over stores) and 4 stores in one wave in 265-328
+    * ms. The cap (8 unless a rig passes its own) bounds the store count
+    * on a wide host: at 32 partitions the commits were measured as 3x
+    * the whole query time on the interval joins. g133 and g135 cap at 4:
+    * they run two stateful operators across several incarnations, so
+    * each batch pays twice the stores.
+    * The width is fixed when a checkpoint first runs; every replay, and
+    * every restart rig's set of incarnations, starts a fresh checkpoint,
+    * so a replay on another host never meets a checkpoint of another
+    * width.
     *
     * Checkpoints are committed through
     * [[graft.streaming.LocalCheckpointFileManager]], pinned inside the
@@ -72,11 +80,11 @@ object SynthQueries {
     * the ~40 ms WAL/offset/commit floor of every micro-batch: one 10-s
     * `stream_ingest` bench run (g122 on RocksDB state) started 2,437
     * `readlink` and 874 `chmod` processes, 2.5 CPU-s of children. With
-    * the pin and the build-once fixtures (below) the same run starts no
-    * JVM `readlink`, 141 `chmod` (RocksDB SST uploads and the bench's
-    * own result writes) and 140 `rm -rf` (RocksDB state dirs), all
-    * outside the manager: 286 helper processes (seed 11, 4-core VM),
-    * where rewriting g122's fixture every replay made 335.
+    * the pin, the build-once fixtures (below) and the state width
+    * (above) the same run starts no JVM `readlink`, 74 `chmod` (RocksDB
+    * SST uploads and the bench's own result writes) and 72 `rm -rf`
+    * (RocksDB state dirs), all outside the manager: 151 helper processes
+    * (seed 11, 4-core VM), where 8 stores per stateful operator made 263.
     * Other schemes keep Spark's default manager.
     *
     * Run step: every query the body starts runs under
@@ -105,9 +113,15 @@ object SynthQueries {
     * checkpoints are never fixtures either: they are written by the run.
     */
   private def streamScoped(s: SparkSession, rig: String,
+      confs: (String, String)*)(f: StreamScope => DataFrame): DataFrame =
+    streamScoped(s, rig, 8, confs: _*)(f)
+
+  /** [[streamScoped]] with the state width capped at `stateCap`. */
+  private def streamScoped(s: SparkSession, rig: String, stateCap: Int,
       confs: (String, String)*)(f: StreamScope => DataFrame): DataFrame = {
     val scope = new StreamScope(s, rig)
-    val pins = Seq("spark.sql.shuffle.partitions" -> "8",
+    val width = math.min(stateCap, s.sparkContext.defaultParallelism)
+    val pins = Seq("spark.sql.shuffle.partitions" -> width.toString,
       LocalCheckpointFileManager.ConfKey ->
         classOf[LocalCheckpointFileManager].getName) ++ confs
     try scope.withConf(pins: _*)(f(scope)) finally scope.close()
@@ -3247,13 +3261,14 @@ object SynthQueries {
     // BandedWindowIndex, g124/g126/g128) are the capped alternatives.
     QueryDef("g133_stream_crawl_loop",
       // TWO stateful operators x state partitions x batches x two
-      // incarnations = the store-commit count; 4 partitions (and the
-      // RocksDb pins' changelog checkpointing: append a delta, not a full
-      // RocksDB snapshot, per commit) keep this rig's fixed cost bounded
-      // while testing exactly the same semantics. No-data batches are
-      // off, so neither incarnation runs a trailing empty batch.
-      (s, d) => streamScoped(s, "g133", RocksDb ++ Seq(NoDataBatchesOff,
-          "spark.sql.shuffle.partitions" -> "4"): _*) { st =>
+      // incarnations = the store-commit count; a state width capped at 4
+      // (and the RocksDb pins' changelog checkpointing: append a delta,
+      // not a full RocksDB snapshot, per commit) keeps this rig's fixed
+      // cost bounded while testing exactly the same semantics. No-data
+      // batches are off, so neither incarnation runs a trailing empty
+      // batch.
+      (s, d) => streamScoped(s, "g133", 4,
+          RocksDb :+ NoDataBatchesOff: _*) { st =>
         import org.apache.spark.sql.functions.{ascii, broadcast, concat,
           explode, lit, pmod, substring, xxhash64}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -3475,9 +3490,10 @@ object SynthQueries {
     // scheduled (require-pinned per turn) — the feedback edge is load-
     // bearing, not decorative.
     QueryDef("g135_stream_crawl_feedback",
-      // the g133 pins: 4 state partitions, no trailing no-data batches
-      (s, d) => streamScoped(s, "g135", RocksDb ++ Seq(NoDataBatchesOff,
-          "spark.sql.shuffle.partitions" -> "4"): _*) { st =>
+      // the g133 scope: state width capped at 4, no trailing no-data
+      // batches
+      (s, d) => streamScoped(s, "g135", 4,
+          RocksDb :+ NoDataBatchesOff: _*) { st =>
         import org.apache.spark.sql.functions.{array, ascii, broadcast,
           concat, explode, lit, md5, pmod, substring, when, xxhash64}
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}

@@ -24,7 +24,12 @@ package graft.tools
   *   - `smallsplits`: `spark.sql.files.maxPartitionBytes=1m` and
   *     `openCostInBytes=0` — parquet scans split into many more input
   *     partitions, stressing every mapPartitions seam and scan-order
-  *     assumption.
+  *     assumption;
+  *   - `slots3`: `local[3]`, no conf changes — a streaming rig's scope
+  *     sizes its state stores to the session's task slots, and pins that
+  *     width over any shuffle count (`shuffle7`'s included), so this is
+  *     the pass that varies a rig's state partitioning: 3 here against
+  *     the baseline's 8 (4 for the crawl loops g133 and g135).
   *
   * Usage: `graft.tools.ConfParityCheck [sfDir] [q1,q2,...|all]`
   * Prints one JSON line; exits 1 on any digest mismatch.
@@ -36,15 +41,16 @@ object ConfParityCheck {
     val names = ParityHarness.resolveNames(
       args.lift(1).orElse(Some("all")), Seq.empty)
     val passes = Seq(
-      "baseline" -> Map.empty[String, String],
-      "shuffle7" -> Map(
+      ("baseline", "local[32]", Map.empty[String, String]),
+      ("shuffle7", "local[32]", Map(
         "spark.sql.shuffle.partitions" -> "7",
-        "spark.sql.adaptive.enabled" -> "false"),
-      "smallsplits" -> Map(
+        "spark.sql.adaptive.enabled" -> "false")),
+      ("smallsplits", "local[32]", Map(
         "spark.sql.files.maxPartitionBytes" -> "1m",
-        "spark.sql.files.openCostInBytes" -> "0"))
-      .map { case (label, confs) =>
-        label -> ParityHarness.runPass("local[32]", confs, sfDir, names)
+        "spark.sql.files.openCostInBytes" -> "0")),
+      ("slots3", "local[3]", Map.empty[String, String]))
+      .map { case (label, master, confs) =>
+        label -> ParityHarness.runPass(master, confs, sfDir, names)
       }
     if (ParityHarness.report("conf_parity", sfDir, names, passes) > 0)
       sys.exit(1)

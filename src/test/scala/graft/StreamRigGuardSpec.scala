@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * runs under the scope's one AvailableNow run step, so no
   * `processAllAvailable` is left. A read-only stream input is written
   * once per sf dir through `StreamScope.fixtureFiles`; only the restart
-  * rigs write their files per replay. nanosAsLong is set in one place in
-  * all of `src/main` (graft.runtime.Tables).
+  * rigs write their files per replay. The scope's state width is the
+  * only shuffle-partition pin. nanosAsLong is set in one place in all of
+  * `src/main` (graft.runtime.Tables).
   */
 class StreamRigGuardSpec extends AnyFunSuite {
 
@@ -60,6 +61,12 @@ class StreamRigGuardSpec extends AnyFunSuite {
   test("RocksDB pins are streamScoped pairs") {
     assert(occurrences("def withRocksDb") == 0,
       "pass the RocksDb pins to streamScoped instead")
+  }
+
+  test("the state width is the scope's one shuffle-partition pin") {
+    // the key as a string literal: a pin, not a doc mention
+    val n = occurrences("\"spark.sql.shuffle.partitions\"")
+    assert(n <= 1, s"$n shuffle-partition pins; pass a state cap to streamScoped")
   }
 
   test("conf pins go through the scope's one save/restore loop") {
