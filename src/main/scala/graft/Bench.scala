@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.tools.ParityHarness.jsonString
 
 /** Ambient-load probe for the bench (r13 verdict ask #5: the host
   * carries intermittent EXTERNAL load, and artifacts need the evidence
@@ -173,17 +174,12 @@ object Bench {
     val streamResults = runFamily("streaming", streamQs)
     val results = batchResults ++ streamResults
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     // millisecond precision: sub-ms digits are pure noise and double the
     // line length, and the driver's tail capture has a byte budget — r4's
     // artifact lost half the per-query map to it
     def fmt(d: Double): String = f"$d%.3f"
-    val qs = results.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => s"${jsonString(k)}:${fmt(v)}" }.mkString("{", ",", "}")
+    val errs = errors.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // family totals (r11, VERDICT r10 item 2): streaming rigs are
     // wall-heavy by design (checkpoint restarts, state stores) and their
@@ -200,10 +196,10 @@ object Bench {
     // host without re-benching
     val noisy = loadSamples.filter(_._3 > LoadProbe.NoisyExtCores).map(_._1)
     val loadJson = loadSamples.map { case (l, w, e, la) =>
-      s"""{"pass":${jstr(l)},"wall_s":${fmt(w)},"ext_cores":${fmt(e)},"loadavg":${fmt(la)}}"""
+      s"""{"pass":${jsonString(l)},"wall_s":${fmt(w)},"ext_cores":${fmt(e)},"loadavg":${fmt(la)}}"""
     }.mkString("[", ",", "]")
     println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","batch_s":${fmt(batchTotal)},"streaming_s":${fmt(streamTotal)},"reps":$reps,"loadavg_start":${fmt(loadavgStart)},"noisy_passes":${noisy.map(jstr).mkString("[", ",", "]")},"load":$loadJson,"queries":$qs,"errors":$errs,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","batch_s":${fmt(batchTotal)},"streaming_s":${fmt(streamTotal)},"reps":$reps,"loadavg_start":${fmt(loadavgStart)},"noisy_passes":${noisy.map(jsonString).mkString("[", ",", "]")},"load":$loadJson,"queries":$qs,"errors":$errs,"sf":"$sfDir"}""")
     // ADDITIONALLY emit the queries map as <=2 KB chunk lines (r14
     // verdict ask #2): the one-line total above exceeds the driver's
     // tail-capture byte budget at 291 queries and truncates mid-object,
@@ -211,7 +207,7 @@ object Bench {
     // complete JSON object on its own line; the existing contract lines
     // (the total line above, the summary line below) are unchanged.
     locally {
-      val entries = results.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }
+      val entries = results.map { case (k, v) => s"${jsonString(k)}:${fmt(v)}" }
       val chunks = scala.collection.mutable.ArrayBuffer[Seq[String]]()
       var cur = scala.collection.mutable.ArrayBuffer[String]()
       var curLen = 0
@@ -230,7 +226,7 @@ object Bench {
     // compact summary LAST so any tail-window truncation of the long line
     // above still leaves the total and the queries that matter most
     val slowest = results.sortBy(-_._2).take(10)
-      .map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}:${fmt(v)}" }.mkString("{", ",", "}")
     println(
       s"""{"metric":"summary","total_s":${fmt(total)},"batch_s":${fmt(batchTotal)},"streaming_s":${fmt(streamTotal)},"n_batch":${batchResults.size},"n_streaming":${streamResults.size},"n_queries":${results.size},"n_errors":${errors.size},"n_noisy_passes":${noisy.size},"slowest":$slowest}""")
     spark.stop()

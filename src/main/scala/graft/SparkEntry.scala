@@ -37,9 +37,9 @@ object SynthQueries {
   import graft.queries.EventTs
   import graft.streaming.{LocalCheckpointFileManager, StreamFiles}
   import org.apache.spark.sql.functions.{base64, col, to_json}
-  import org.apache.spark.sql.Row
-  import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
-    StreamingQueryProgress, Trigger}
+  import org.apache.spark.sql.{Column, Row}
+  import org.apache.spark.sql.streaming.{DataStreamWriter, StatefulProcessor,
+    StreamingQuery, StreamingQueryProgress, Trigger}
   import org.apache.spark.sql.types.{ArrayType, BinaryType, LongType, MapType,
     StructType}
 
@@ -111,6 +111,20 @@ object SynthQueries {
     * its input is not a fixture: a fixture grown by one replay would hand
     * the next replay's first incarnation every file at once. Sinks and
     * checkpoints are never fixtures either: they are written by the run.
+    *
+    * Building blocks: each pipeline several rigs share has one
+    * definition, which owns its one policy: [[StreamScope.splitFiles]]
+    * (one split file per micro-batch); [[eventTime]] (the one-hour
+    * watermark delay) under [[hourlyTypeCounts]], [[typeCountStream]]
+    * and [[cusumStream]] (the CUSUM alarm threshold) over
+    * [[StreamScope.eventThirds]]; [[twinSignatures]], [[pngCorpus]] and
+    * [[idSplits]] (the dedup fixtures, duplicates last);
+    * [[bandedIndex]] (the band keys, their Hamming radius and the
+    * min-candidate merge); [[StreamScope.warcSegments]] (the CDX cut),
+    * [[discoveredLinks]], [[crawlDelays]], [[crawlSchedule]] and
+    * [[frontier]] (the crawl loop) and [[warcResponse]] (the record the
+    * crawl fixtures write); [[StreamScope.restart]] with [[landSplits]]
+    * (the restart leg and its resume-not-reprocess proof).
     */
   private def streamScoped(s: SparkSession, rig: String,
       confs: (String, String)*)(f: StreamScope => DataFrame): DataFrame =
@@ -145,7 +159,11 @@ object SynthQueries {
   private val NoDataBatchesOff =
     "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
 
-  /** What a [[streamScoped]] body stages, pins and runs through. */
+  /** What a [[streamScoped]] body stages, pins and runs through: staged
+    * dirs and fixtures, conf pins, the run step and its three sinks
+    * (`drain`, `incarnation`, `restart`), and the stream sources the rigs
+    * share (`events`, `eventThirds`, `splitFiles`, `warcSegments`).
+    */
   private final class StreamScope(s: SparkSession, rig: String) {
     /** The [[Staging]] keys `dir` staged. */
     private val staged = scala.collection.mutable.Set.empty[String]
@@ -242,6 +260,69 @@ object SynthQueries {
       run(df.writeStream.format("parquet").option("path", outDir)
         .option("checkpointLocation", ckptDir).outputMode("append"))
         .recentProgress.map(_.numInputRows).sum
+
+    /** The restart leg of the checkpoint-restart rigs (g116, g125,
+      * g126, g131, g133, g135): `df` run as one [[incarnation]] per
+      * phase over one checkpoint and one parquet sink, both staged here,
+      * so every incarnation after the first is a real restart. Each
+      * phase first runs its [[Land]] action, then its incarnation, which
+      * must read exactly the rows the action landed (a restart resumes
+      * from the checkpoint, it does not reprocess), or at least one row
+      * when the action does not know the count. `phase1Pins` hold for
+      * the first incarnation only (g116's [[NoDataBatchesOff]]). `df` is
+      * evaluated per incarnation (g133 and g135 size their CDX cuts at
+      * each start). Returns `result` of the sink read back,
+      * [[materialized]]: the scope deletes the sink on return. The leg
+      * starts no job but the lands', the incarnations' and the result's.
+      */
+    def restart(df: => DataFrame, phase1Pins: (String, String)*)(
+        phases: Land*)(result: DataFrame => DataFrame = identity): DataFrame = {
+      val ckptDir = dir("ckpt").toString
+      val outDir = dir("out").toString
+      def sink = s.read.schema(df.schema).parquet(outDir)
+      phases.zipWithIndex.foreach { case (land, i) =>
+        val landed = land(sink)
+        val pins = if (i == 0) phase1Pins else Nil
+        val rows = withConf(pins: _*)(incarnation(df, outDir, ckptDir))
+        landed match {
+          case None => require(rows > 0L, s"phase ${i + 1} processed no rows")
+          case Some(n) => require(rows == n, s"phase ${i + 1} read $rows " +
+            s"rows, expected exactly the $n it landed" +
+            (if (i > 0) ": a restart must resume, not reprocess" else ""))
+        }
+      }
+      materialized(result(sink))
+    }
+
+    /** `dir`'s split files as a file stream, one file per micro-batch in
+      * name order: the read of every split-file rig. `ts` keeps the
+      * files' type; a caller that needs nanos applies
+      * [[EventTs.toNanos]].
+      */
+    def splitFiles(schema: StructType, dir: java.nio.file.Path): DataFrame =
+      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(dir.toString)
+
+    /** The events table cut into time-thirds plus a sentinel
+      * ([[eventThirdFiles]]) as a [[fixtureFiles]] split stream, `ts` in
+      * nanos (g111, g117, g118, g123).
+      */
+    def eventThirds(d: String): DataFrame = {
+      val streamDir = fixtureFiles("events", d)(eventThirdFiles(s, d))
+      EventTs.toNanos(splitFiles(Tables.read(s, d, "events").schema, streamDir))
+    }
+
+    /** The WARC dir `dir` as a stream, one segment per micro-batch, each
+      * segment cut at record boundaries through its CDX sidecar
+      * ([[warcCdxTarget]], sized over the segments present now) so a
+      * batch's per-record pipeline is not one task. `manifestOnly`
+      * streams only the segments the sink committed, in commit order.
+      */
+    def warcSegments(dir: String, manifestOnly: Boolean): DataFrame =
+      s.readStream.format("warc")
+        .option("manifestOnly", manifestOnly.toString).option("filesPerBatch", "1")
+        .option("cdxTargetBytes", warcCdxTarget(dir, s).toString)
+        .load(dir)
 
     /** events.parquet as a bounded file stream: the raw table (read
       * through [[Tables.read]]) and the staged stream with `ts` normalized
@@ -370,23 +451,43 @@ object SynthQueries {
       "d_sentinel" -> sentinelRow(evRaw, maxNs + 36000L * 1000000000L))
   }
 
-  /** The per-user event-type count stream over a split directory: file
-    * source (one file per trigger) -> watermarked event time ->
-    * TypeCountProcessor (transformWithState, event-time timers, MapState
-    * counts under the one-live-timer contract). Sink wiring is the
-    * caller's.
+  /** The event-time prefix of every rig that watermarks its events
+    * stream directly: `event_time` is `ts` (BIGINT nanos) truncated to
+    * micros by an integer `div` (a double division would lose micros
+    * above 2^53), and the watermark trails the latest event by one hour.
+    * The per-side watermarks of the interval joins (g81, g99, g100) and
+    * g57's sessionizer keep their own shape.
     */
-  private def typeCountStream(s: SparkSession, streamDir: java.nio.file.Path,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  private def eventTime(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{expr, timestamp_micros}
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    import s.implicits._
-    graft.queries.EventTs.toNanos(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString))
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+    events.withColumn("event_time", timestamp_micros(expr("ts div 1000")))
       .withWatermark("event_time", "1 hour")
+  }
+
+  /** The per-hour event counts by type over `events` (`ts` in nanos):
+    * [[eventTime]]'s one-hour tumbling windows as (bucket_s, event_type,
+    * n).
+    */
+  private def hourlyTypeCounts(events: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{count, lit, unix_timestamp, window}
+    eventTime(events)
+      .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(unix_timestamp(col("window.start")).as("bucket_s"),
+        col("event_type"), col("n"))
+  }
+
+  /** The per-user event-type count stream over `events` (`ts` in
+    * nanos): [[eventTime]] -> TypeCountProcessor (transformWithState,
+    * event-time timers, MapState counts under the one-live-timer
+    * contract). Sink wiring is the caller's.
+    */
+  private def typeCountStream(events: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.expr
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    val s = events.sparkSession
+    import s.implicits._
+    eventTime(events)
       .select(col("user_id").cast("long").as("uid"),
         expr("ts div 1000000").as("ts_ms"), col("event_type"))
       .as[(Long, Long, String)]
@@ -396,6 +497,241 @@ object SynthQueries {
         implicitly[org.apache.spark.sql.Encoder[(Long, String, Long)]])
       .toDF("user_id", "event_type", "n")
   }
+
+  /** The CUSUM-scored stream of g118, g123 and g125 over the events
+    * thirds `events` (`ts` in nanos): each value in micro-units, plus
+    * the planted mean `shift` in the final time-third, scored per event
+    * type by a CusumProcessor (alarm threshold 50 units) with `target`
+    * and `refWindow`.
+    */
+  private def cusumStream(s: SparkSession, d: String, events: DataFrame,
+      shift: Long, target: Long, refWindow: Long = 0L): DataFrame = {
+    import org.apache.spark.sql.functions.{lit, round, when}
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    import s.implicits._
+    val (minNs, maxNs) = eventsTsRange(s, d)
+    val t2 = minNs + 2L * (maxNs - minNs) / 3
+    eventTime(events)
+      .select(col("event_type"), col("ts").as("ts_ns"),
+        col("event_id").cast("long").as("eid"),
+        (round(col("value") * 1000000).cast("long") +
+          when(col("ts") > t2, lit(shift)).otherwise(lit(0L)))
+          .as("v_micro"))
+      .as[(String, Long, Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(
+        new graft.streaming.CusumProcessor(target, 50000000000L, refWindow),
+        TimeMode.EventTime(), OutputMode.Append(),
+        implicitly[org.apache.spark.sql.Encoder[
+          (String, Long, Long, Long, Long, Long, Long, Long)]])
+      .toDF("event_type", "n", "max_s", "alarm_idx", "alarm_ts",
+        "max_sn", "alarm_n_idx", "alarm_n_ts")
+  }
+
+  /** The document ids as `base_id` (bigint): the seed of the dedup
+    * rigs' fixtures.
+    */
+  private def docIds(s: SparkSession, d: String): DataFrame =
+    Tables.read(s, d, "documents").select(col("doc_id").cast("long").as("base_id"))
+
+  /** The largest of `ids`' `base_id`, collected. */
+  private def maxBaseId(ids: DataFrame): Long =
+    ids.agg(org.apache.spark.sql.functions.max("base_id")).collect()(0).getLong(0)
+
+  /** The image-dedup rigs' PNG corpus (g119, g122): each id's gray PNG
+    * (ImageDedup.hashCorpusPng) at `id = base_id`, plus one duplicate
+    * generation per `(every, offset, shift, edits)`: every `every`th id
+    * again at `base_id + offset`, brightness-shifted by `shift` with
+    * `edits` rows content-edited. `ts` is `id` seconds. Columns: id, ts,
+    * png.
+    */
+  private def pngCorpus(ids: DataFrame, dups: Seq[(Int, Long, Int, Int)]): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.types.{BinaryType, StructField}
+    val rig = dups.foldLeft(ids.select(col("base_id"), col("base_id").as("id"),
+        lit(0).as("shift"), lit(0).as("edits"))) {
+      case (df, (every, offset, shift, edits)) =>
+        df.unionAll(ids.filter(col("base_id") % every === 0)
+          .select(col("base_id"), (col("base_id") + offset).as("id"),
+            lit(shift).as("shift"), lit(edits).as("edits")))
+    }
+    implicit val enc: org.apache.spark.sql.Encoder[Row] =
+      org.apache.spark.sql.Encoders.row(StructType(Seq(StructField("id", LongType),
+        StructField("ts", LongType), StructField("png", BinaryType))))
+    rig.mapPartitions(_.map { r =>
+      val id = r.getLong(1)
+      Row(id, id * 1000000000L, graft.ops.ImageDedup
+        .hashCorpusPng(r.getLong(0), r.getInt(2), r.getInt(3)))
+    })
+  }
+
+  /** The id-ordered split of the dedup rigs' fixtures (g119, g122,
+    * g124, g126, g128): the base ids up to `half`, the other base ids,
+    * then every planted duplicate (ids from 10^7), so each duplicate
+    * arrives after its original.
+    */
+  private def idSplits(fixture: DataFrame, half: Long): Seq[(String, DataFrame)] =
+    Seq("a_low" -> fixture.filter(col("id") <= half),
+      "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
+      "c_dups" -> fixture.filter(col("id") >= 10000000L))
+
+  /** The Hamming radius of the banded-index rigs: their band keys and
+    * their processors' verify step.
+    */
+  private val BandHamming = 3
+
+  /** The twin-signature corpus of the banded-index rigs (g124, g126,
+    * g128): each document id's xxhash64 at `id = base_id`, and every 8th
+    * id again at `base_id + 10^7` with 1-3 bits flipped (bit a = 7 *
+    * base_id mod 64, then a + 21 and a + 43, by base_id mod 3). The
+    * order column `ord` is `baseOrd` or `twinOrd` of `base_id`.
+    * Columns: id, ord, sig.
+    */
+  private def twinSignatures(ids: DataFrame, ord: String,
+      baseOrd: Column => Column, twinOrd: Column => Column): DataFrame = {
+    import org.apache.spark.sql.functions.{expr, lit, pmod, when, xxhash64}
+    val bid = col("base_id")
+    val h = pmod(bid, lit(3L)) + 1L
+    val twins = ids.filter(bid % 8 === 0)
+      .withColumn("a", pmod(bid * 7, lit(64L)))
+      .withColumn("fl", expr("shiftleft(1L, CAST(a AS INT))")
+        .bitwiseOR(when(h >= 2L,
+          expr("shiftleft(1L, CAST((a + 21) % 64 AS INT))")).otherwise(lit(0L)))
+        .bitwiseOR(when(h >= 3L,
+          expr("shiftleft(1L, CAST((a + 43) % 64 AS INT))")).otherwise(lit(0L))))
+      .select((bid + 10000000L).as("id"), twinOrd(bid).as(ord),
+        xxhash64(bid).bitwiseXOR(col("fl")).as("sig"))
+    ids.select(bid.as("id"), baseOrd(bid).as(ord), xxhash64(bid).as("sig"))
+      .unionByName(twins)
+  }
+
+  /** The banded near-dup step of g122, g124, g126 and g128: each (id,
+    * `ord`, sig) arrival explodes to its pigeonhole band keys
+    * ([[graft.ops.Dedup.streamBandKeys]], the layout the oracles and
+    * specs share), `processor` decides per band bucket in `ord` order
+    * and emits (id, cand) per band, `sink` runs the stream, and the
+    * per-band emissions merge to the min matched candidate, else -1.
+    */
+  private def bandedIndex(sigs: DataFrame, ord: String,
+      processor: StatefulProcessor[Long, (Long, Long, Long), (Long, Long)])(
+      sink: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, explode, lit,
+      min => fmin, when}
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    val s = sigs.sparkSession
+    import s.implicits._
+    val decided = sigs.select(col("id"), col(ord), col("sig"),
+        explode(graft.ops.Dedup.streamBandKeys(col("sig"), BandHamming))
+          .as("bkey"))
+      .select(col("bkey"), col(ord), col("id"), col("sig"))
+      .as[(Long, Long, Long, Long)]
+      .groupByKey(_._1)
+      .mapValues(r => (r._2, r._3, r._4))
+      .transformWithState(processor, TimeMode.None(), OutputMode.Append(),
+        implicitly[org.apache.spark.sql.Encoder[(Long, Long)]])
+      .toDF("id", "cand")
+    sink(decided).groupBy("id")
+      .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
+        .as("dup_of"))
+  }
+
+  /** The columns of one WARC response record, as the crawl fixtures
+    * (g133-g135, [[graft.queries.PipelineQueries.LinkWarcFixture]])
+    * write them through the `warc` sink.
+    */
+  private[graft] def warcResponse(recordId: Column, targetUri: Column,
+      httpStatus: Column, httpContentType: String, payload: Column): Seq[Column] = {
+    import org.apache.spark.sql.functions.lit
+    Seq(recordId.as("record_id"), lit("response").as("warc_type"),
+      targetUri.as("target_uri"), lit("2026-01-01T00:00:00Z").as("warc_date"),
+      lit("application/http;msgtype=response").as("content_type"),
+      httpStatus.as("http_status"), lit(httpContentType).as("http_content_type"),
+      payload.cast("binary").as("payload"))
+  }
+
+  /** Crawl discovery over a WARC stream (g130, g133, g135): the
+    * 200-status responses, each payload sniff-decoded to HTML, its links
+    * extracted, resolved against the page URL and canonicalized: one
+    * `curl` row per link.
+    */
+  private def discoveredLinks(warc: DataFrame): DataFrame = {
+    import graft.ops.{HtmlExtract, UrlOps}
+    warc.filter(col("http_status") === 200)
+      // the sniff-decode chain, streaming too: byte-identical on the
+      // UTF-8 fixtures, an honest transcode on a real crawl
+      .select(col("target_uri").as("url"),
+        HtmlExtract.decodePayload(col("payload"), col("http_content_type"))
+          .as("html"))
+      .select(col("url"), org.apache.spark.sql.functions.explode(
+        HtmlExtract.extractLinks(col("html"))).as("href"))
+      .select(UrlOps.canonicalizeUrl(UrlOps.resolveUrl(col("url"), col("href")))
+        .as("curl"))
+  }
+
+  /** The robots crawl-delay dimension of `curls`' hosts (1-3 s by the
+    * host's second character) as an O(hosts) literal frame, so each
+    * micro-batch's broadcast of it costs nothing to recompute.
+    */
+  private def crawlDelays(curls: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{ascii, lit, pmod, substring}
+    materialized(curls
+      .select(graft.ops.UrlOps.canonicalHost(col("curl")).as("host"))
+      .distinct()
+      .withColumn("delay_s",
+        (pmod(ascii(substring(col("host"), 2, 1)), lit(3)) + 1).cast("long")))
+  }
+
+  /** The per-host politeness schedule (g131, g133, g135): the
+    * FrontierProcessor over (host, ord, id, delay_s) candidates keyed by
+    * host, which carries each host's next free slot across micro-batches
+    * and restarts. Columns: id, host, seq, fetch_at_s.
+    */
+  private def frontier(cands: DataFrame): DataFrame = {
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    val s = cands.sparkSession
+    import s.implicits._
+    cands.as[(String, Long, Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new graft.streaming.FrontierProcessor,
+        TimeMode.None(), OutputMode.Append(),
+        implicitly[org.apache.spark.sql.Encoder[(Long, String, Long, Long)]])
+      .toDF("id", "host", "seq", "fetch_at_s")
+  }
+
+  /** The crawl loop's scheduling half (g133, g135): each discovered
+    * `curl` once (the crawl's seen-set, stateful operator #1), joined
+    * broadcast-static to its host's delay in `delays`
+    * ([[crawlDelays]]), then [[frontier]] (stateful operator #2) in
+    * xxhash64(curl) order.
+    */
+  private def crawlSchedule(curls: DataFrame, delays: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, xxhash64}
+    frontier(curls.dropDuplicates("curl")
+      .join(broadcast(delays),
+        graft.ops.UrlOps.canonicalHost(col("curl")) === delays("host"))
+      .select(col("host"), xxhash64(col("curl")).as("ord"),
+        xxhash64(col("curl")).as("id"), col("delay_s")))
+  }
+
+  /** One phase of a [[StreamScope.restart]] leg: it lands input, given
+    * the sink's rows so far, and returns the rows it landed when it
+    * knows them.
+    */
+  private type Land = (=> DataFrame) => Option[Long]
+
+  /** The two phases of a split-file restart leg: phase 1 lands the
+    * first two of `files` in `dir`; phase 2 lands the rest, which hold
+    * the third file's rows plus `sentinelRows` (the one-row sentinel
+    * file after the event thirds).
+    */
+  private def landSplits(dir: java.nio.file.Path, files: Seq[(String, DataFrame)],
+      sentinelRows: Long = 0L): Seq[Land] = Seq(
+    _ => { StreamFiles.writeMany(files.take(2), dir); None },
+    _ => {
+      val rows = files(2)._2.count() + sentinelRows
+      StreamFiles.writeMany(files.drop(2), dir)
+      Some(rows)
+    })
 
   /** The driver's checker canonicalizes results through pandas
     * `sort_values`, which crashes on struct/array/map cells (unhashable
@@ -1574,9 +1910,7 @@ object SynthQueries {
         val outDir = st.dir("out").toString
         // the schema every batch wrote, read back without inference
         var served: StructType = null
-        st.run(s.readStream.schema(q.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-          .writeStream
+        st.run(st.splitFiles(q.schema, streamDir).writeStream
           .foreachBatch { (batch: DataFrame, bid: Long) =>
             val out = graft.ops.Quantization.hashIvfTopKFromIndex(dir, batch,
               "vec_id", "embedding", 10, numClusters = 8, nProbe = 2)
@@ -1703,18 +2037,7 @@ object SynthQueries {
     // live source would use — only the trigger bounds it.
     QueryDef("g55_stream_counts",
       (s, d) => streamScoped(s, "g55") { st =>
-        import org.apache.spark.sql.functions.{count, expr, lit, timestamp_micros,
-          unix_timestamp, window}
-        // ts is bigint NANOS; integer `div` keeps precision (a double
-        // division would lose micros above 2^53)
-        val counts = st.events(d)._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
-          .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(unix_timestamp(col("window.start")).as("bucket_s"),
-            col("event_type"), col("n"))
-        st.drain(counts, "complete")
+        st.drain(hourlyTypeCounts(st.events(d)._2), "complete")
       },
       Some("""SELECT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT) AS bucket_s,
         event_type, count(*) AS n FROM events GROUP BY 1, 2""")),
@@ -1762,11 +2085,9 @@ object SynthQueries {
     // (cnt desc, item asc).
     QueryDef("g88_stream_freq",
       (s, d) => streamScoped(s, "g88") { st =>
-        import org.apache.spark.sql.functions.{call_function, expr, lit,
-          posexplode, timestamp_micros, unix_timestamp, window}
-        val freq = st.events(d)._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
+        import org.apache.spark.sql.functions.{call_function, lit, posexplode,
+          unix_timestamp, window}
+        val freq = eventTime(st.events(d)._2)
           .groupBy(window(col("event_time"), "1 hour"))
           .agg(call_function("freq_sketch", col("event_type"), lit(32)).as("freq"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"),
@@ -1798,12 +2119,10 @@ object SynthQueries {
     // rounds — floor() pins them to the same integer).
     QueryDef("g92_stream_quantiles",
       (s, d) => streamScoped(s, "g92") { st =>
-        import org.apache.spark.sql.functions.{call_function, ceil, expr, floor,
-          lit, timestamp_micros, unix_timestamp, window}
-        val sketches = st.events(d)._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+        import org.apache.spark.sql.functions.{call_function, ceil, floor, lit,
+          unix_timestamp, window}
+        val sketches = eventTime(st.events(d)._2)
           .withColumn("v_us", floor(col("value") * lit(1000000d)).cast("long"))
-          .withWatermark("event_time", "1 hour")
           .groupBy(window(col("event_time"), "1 hour"))
           .agg(call_function("quantile_sketch", col("v_us"), lit(256)).as("qs"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"), col("qs"))
@@ -1837,11 +2156,9 @@ object SynthQueries {
     // DuckDB's batch count(DISTINCT) per bucket.
     QueryDef("g93_stream_distinct",
       (s, d) => streamScoped(s, "g93") { st =>
-        import org.apache.spark.sql.functions.{call_function, expr, lit,
-          timestamp_micros, unix_timestamp, window, xxhash64}
-        val distinct = st.events(d)._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
+        import org.apache.spark.sql.functions.{call_function, lit,
+          unix_timestamp, window, xxhash64}
+        val distinct = eventTime(st.events(d)._2)
           .groupBy(window(col("event_time"), "1 hour"))
           .agg(call_function("kmv_sketch", xxhash64(col("user_id")), lit(256)).as("kmv"))
           .select(unix_timestamp(col("window.start")).as("bucket_s"),
@@ -1896,11 +2213,9 @@ object SynthQueries {
     // bit-for-bit regardless of cardinality.
     QueryDef("g96_stream_hll",
       (s, d) => streamScoped(s, "g96") { st =>
-        import org.apache.spark.sql.functions.{call_function, expr, lit,
-          posexplode, timestamp_micros, unix_timestamp, window, xxhash64}
-        val sketches = st.events(d)._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
+        import org.apache.spark.sql.functions.{call_function, lit, posexplode,
+          unix_timestamp, window, xxhash64}
+        val sketches = eventTime(st.events(d)._2)
           .groupBy(window(col("event_time"), "1 hour"))
           .agg(call_function("hll_sketch",
             xxhash64(col("user_id")), lit(6)).as("hll"))
@@ -1947,17 +2262,15 @@ object SynthQueries {
     // identical batch join+GROUP BY in DuckDB.
     QueryDef("g97_stream_enrich",
       (s, d) => streamScoped(s, "g97") { st =>
-        import org.apache.spark.sql.functions.{broadcast, count, expr, lit,
-          pmod, timestamp_micros, unix_timestamp, window}
+        import org.apache.spark.sql.functions.{broadcast, count, lit, pmod,
+          unix_timestamp, window}
         val (evRaw, stream) = st.events(d)
         // static dimension: user -> cohort (derived batch-side)
         val dim = broadcast(
           EventTs.toNanos(evRaw)
             .select(col("user_id")).distinct()
             .withColumn("cohort", pmod(col("user_id"), lit(7L))))
-        val counts = stream
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
+        val counts = eventTime(stream)
           .join(dim, "user_id") // stream-static: static side broadcast
           .groupBy(window(col("event_time"), "1 hour"), col("cohort"))
           .agg(count(lit(1)).as("n"))
@@ -1978,10 +2291,8 @@ object SynthQueries {
     // the oracle is DuckDB's batch DISTINCT.
     QueryDef("g98_stream_dedup",
       (s, d) => streamScoped(s, "g98") { st =>
-        import org.apache.spark.sql.functions.{expr, timestamp_micros}
-        val keys = st.events(d)._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
+        import org.apache.spark.sql.functions.expr
+        val keys = eventTime(st.events(d)._2)
           // dedup key: (user, type, hour bucket) — duplicates exist
           // because users repeat event types within an hour
           .withColumn("bucket_s", expr("ts div 3600000000000 * 3600"))
@@ -2082,11 +2393,9 @@ object SynthQueries {
     // final watermark, so append mode never emits it — self-excluding.
     QueryDef("g101_stream_dedup_counts",
       (s, d) => streamScoped(s, "g101") { st =>
-        import org.apache.spark.sql.functions.{count, expr, lit,
-          timestamp_micros, unix_timestamp, window}
-        val counts = st.events(d, Some(36000L))._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
+        import org.apache.spark.sql.functions.{count, expr, lit, unix_timestamp,
+          window}
+        val counts = eventTime(st.events(d, Some(36000L))._2)
           .withColumn("bucket_s", expr("ts div 3600000000000 * 3600"))
           .dropDuplicatesWithinWatermark("user_id", "event_type", "bucket_s")
           .groupBy(window(col("event_time"), "1 hour"))
@@ -2111,21 +2420,8 @@ object SynthQueries {
     // so it self-excludes.
     QueryDef("g102_stream_tws_profile",
       (s, d) => streamScoped(s, "g102", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{expr, timestamp_micros}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import s.implicits._
-        val profiles = st.events(d, Some(36000L))._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
-          .select(col("user_id").cast("long").as("uid"),
-            expr("ts div 1000000").as("ts_ms"), col("event_type"))
-          .as[(Long, Long, String)]
-          .groupByKey(_._1)
-          .transformWithState(new graft.streaming.TypeCountProcessor,
-            TimeMode.EventTime(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[(Long, String, Long)]])
-          .toDF("user_id", "event_type", "n")
-        st.drain(profiles, "append").filter(col("user_id") >= 0)
+        st.drain(typeCountStream(st.events(d, Some(36000L))._2), "append")
+          .filter(col("user_id") >= 0)
       },
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         FROM events GROUP BY user_id, event_type""")),
@@ -2141,11 +2437,9 @@ object SynthQueries {
     // event + gap.
     QueryDef("g103_stream_session_window",
       (s, d) => streamScoped(s, "g103") { st =>
-        import org.apache.spark.sql.functions.{count, expr, lit,
-          session_window, timestamp_micros, unix_timestamp}
-        val sessions = st.events(d, Some(36000L))._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
+        import org.apache.spark.sql.functions.{count, lit, session_window,
+          unix_timestamp}
+        val sessions = eventTime(st.events(d, Some(36000L))._2)
           .groupBy(col("user_id"), session_window(col("event_time"), "30 minutes"))
           .agg(count(lit(1)).as("n_events"))
           .select(col("user_id"),
@@ -2176,16 +2470,8 @@ object SynthQueries {
     // protocol delivered every finalized window exactly once.
     QueryDef("g104_stream_file_sink",
       (s, d) => streamScoped(s, "g104") { st =>
-        import org.apache.spark.sql.functions.{count, expr, lit,
-          timestamp_micros, unix_timestamp, window}
         val sinkDir = st.dir("sink").toString
-        val counts = st.events(d, Some(36000L))._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
-          .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(unix_timestamp(col("window.start")).as("bucket_s"),
-            col("event_type"), col("n"))
+        val counts = hourlyTypeCounts(st.events(d, Some(36000L))._2)
         st.incarnation(counts, sinkDir, st.dir("ckpt").toString)
         // read back through the _spark_metadata manifest; the sentinel's
         // own window never flushed, so only real buckets are on disk.
@@ -2230,12 +2516,10 @@ object SynthQueries {
     // an event-time timer. Same sentinel/RocksDB scaffolding as g102.
     QueryDef("g106_stream_tws_latestk",
       (s, d) => streamScoped(s, "g106", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{expr, timestamp_micros}
+        import org.apache.spark.sql.functions.expr
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        val latest = st.events(d, Some(36000L))._2
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
+        val latest = eventTime(st.events(d, Some(36000L))._2)
           .select(col("user_id").cast("long").as("uid"),
             expr("ts div 1000000").as("ts_ms"), col("event_id").cast("long"))
           .as[(Long, Long, Long)]
@@ -2262,24 +2546,13 @@ object SynthQueries {
     // has to be exact for the hash to survive.
     QueryDef("g108_stream_multibatch",
       (s, d) => streamScoped(s, "g108") { st =>
-        import org.apache.spark.sql.functions.{count, expr, lit, timestamp_micros,
-          unix_timestamp, window}
         val evRaw = Tables.read(s, d, "events")
         // two halves by event id parity — both halves span the whole
         // timeline, so most windows receive rows from BOTH batches
         val streamDir = st.fixtureFiles("events", d)(Seq(
           "h0" -> evRaw.filter(col("event_id") % 2 === 0),
           "h1" -> evRaw.filter(col("event_id") % 2 === 1)))
-        val counts = EventTs.toNanos(
-          s.readStream.schema(evRaw.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(streamDir.toString))
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
-          .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(unix_timestamp(col("window.start")).as("bucket_s"),
-            col("event_type"), col("n"))
+        val counts = hourlyTypeCounts(EventTs.toNanos(st.splitFiles(evRaw.schema, streamDir)))
         st.drain(counts, "complete", minBatches = 2)
       },
       Some("""SELECT CAST(epoch_ns(ts) // 3600000000000 * 3600 AS BIGINT)
@@ -2299,9 +2572,8 @@ object SynthQueries {
       (s, d) => streamScoped(s, "g111", RocksDb: _*) { st =>
         // four single-file triggers, processed in write order (thirds +
         // sentinel — see eventThirdFiles for why thirds)
-        val streamDir = st.fixtureFiles("events", d)(eventThirdFiles(s, d))
-        st.drain(typeCountStream(s, streamDir, Tables.read(s, d, "events").schema), "append",
-          minBatches = 4).filter(col("user_id") >= 0)
+        st.drain(typeCountStream(st.eventThirds(d)), "append", minBatches = 4)
+          .filter(col("user_id") >= 0)
       },
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         FROM events GROUP BY user_id, event_type""")),
@@ -2323,37 +2595,21 @@ object SynthQueries {
     // even if it were numerically idempotent.
     QueryDef("g116_stream_restart_recovery",
       (s, d) => streamScoped(s, "g116", RocksDb: _*) { st =>
-        val evRaw = Tables.read(s, d, "events")
         val streamDir = st.dir("events")
-        val ckptDir = st.dir("ckpt").toString
-        val outDir = st.dir("out").toString
-        val files = eventThirdFiles(s, d)
-        val counts = typeCountStream(s, streamDir, evRaw.schema)
+        val counts = typeCountStream(EventTs.toNanos(
+          st.splitFiles(Tables.read(s, d, "events").schema, streamDir)))
         // phase 1: thirds 0 and 1 only — run to completion, stop cleanly.
         // No-data micro-batches are disabled for THIS incarnation: the
         // trailing no-data batch AvailableNow otherwise runs would
         // advance the watermark past the last data batch and fire the
         // go-quiet timers of every key inactive in its final hour —
         // emitting partial profiles at what is semantically a deploy
-        // stop, not a quiet user. Phase 2 re-enables them so the
+        // stop, not a quiet user. Phase 2 (the last third + sentinel, a
+        // NEW query resuming from the checkpoint) re-enables them so the
         // sentinel's trailing batch performs the final flush.
-        StreamFiles.writeMany(files.take(2), streamDir)
-        val rows1 = st.withConf(NoDataBatchesOff)(
-          st.incarnation(counts, outDir, ckptDir))
-        require(rows1 > 0L, "phase 1 processed no rows")
-        // phase 2: the last third + sentinel land; a NEW query resumes
-        // from the checkpoint
-        val tailRows = files(2)._2.count() + 1L
-        StreamFiles.writeMany(files.drop(2), streamDir)
-        val rows2 = st.incarnation(counts, outDir, ckptDir)
-        require(rows2 == tailRows,
-          s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
-            s"expected exactly the new files' $tailRows")
-        // the report is (user, type)-dimension-sized by design —
-        // materialized, because the scope deletes the three staged trees
-        // (split files, RocksDB checkpoint, sink) on return
-        materialized(s.read.schema(counts.schema).parquet(outDir)
-          .filter(col("user_id") >= 0))
+        st.restart(counts, NoDataBatchesOff)(
+          landSplits(streamDir, eventThirdFiles(s, d), sentinelRows = 1L): _*)(
+          _.filter(col("user_id") >= 0))
       },
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         FROM events GROUP BY user_id, event_type""")),
@@ -2373,9 +2629,8 @@ object SynthQueries {
     QueryDef("g117_stream_drift",
       (s, d) => streamScoped(s, "g117") { st =>
         import org.apache.spark.sql.functions.{abs, broadcast, coalesce,
-          count, expr, lit, timestamp_micros, unix_timestamp, window}
-        val evRaw = Tables.read(s, d, "events")
-        val ev = EventTs.toNanos(evRaw)
+          count, expr, lit}
+        val ev = Tables.events(s, d)
         val (minNs, maxNs) = eventsTsRange(s, d)
         val midNs = (minNs + maxNs) / 2
         val spanS = (midNs - minNs) / 1000000000L
@@ -2385,24 +2640,14 @@ object SynthQueries {
           .groupBy("event_type").agg(count(lit(1)).as("nb"))
           .select(col("event_type"),
             expr(s"nb * 3600000L div ${spanS}L").as("expected_milli"))
-        val streamDir = st.fixtureFiles("events", d)(eventThirdFiles(s, d))
-        val windowed = EventTs.toNanos(
-          s.readStream.schema(evRaw.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(streamDir.toString))
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
-          // the sentinel row MUST flow through here: a pre-agg filter on
-          // event_type gets pushed down into the parquet source scan
-          // (measured: the sentinel batch reports numInputRows=0), so the
-          // watermark node never sees the far-future row, the watermark
-          // stalls at the data's end, and the final windows never flush.
-          // Its phantom window stays in state unfired and is filtered at
-          // the sink instead — the g111 pattern.
-          .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(unix_timestamp(col("window.start")).as("bucket_s"),
-            col("event_type"), col("n"))
+        // the sentinel row MUST flow through the counts: a pre-agg
+        // filter on event_type gets pushed down into the parquet source
+        // scan (measured: the sentinel batch reports numInputRows=0), so
+        // the watermark node never sees the far-future row, the watermark
+        // stalls at the data's end, and the final windows never flush.
+        // Its phantom window stays in state unfired and is filtered at
+        // the sink instead — the g111 pattern.
+        val windowed = hourlyTypeCounts(st.eventThirds(d))
           .join(broadcast(baseline), Seq("event_type"), "left")
           .select(col("bucket_s"), col("event_type"), col("n"),
             coalesce(col("expected_milli"), lit(0L)).as("expected_milli"),
@@ -2445,35 +2690,8 @@ object SynthQueries {
     // RocksDB state across four watermark-advancing micro-batches.
     QueryDef("g118_stream_cusum",
       (s, d) => streamScoped(s, "g118", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{expr, lit, round,
-          timestamp_micros, when}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import s.implicits._
-        val evRaw = Tables.read(s, d, "events")
-        val (minNs, maxNs) = eventsTsRange(s, d)
-        val t2 = minNs + 2L * (maxNs - minNs) / 3
-        val target = cusumTarget(s, d)
-        val streamDir = st.fixtureFiles("events", d)(eventThirdFiles(s, d))
-        val scored = EventTs.toNanos(
-          s.readStream.schema(evRaw.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(streamDir.toString))
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
-          .select(col("event_type"), col("ts").as("ts_ns"),
-            col("event_id").cast("long").as("eid"),
-            (round(col("value") * 1000000).cast("long") +
-              when(col("ts") > t2, lit(300000000L)).otherwise(lit(0L)))
-              .as("v_micro"))
-          .as[(String, Long, Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(
-            new graft.streaming.CusumProcessor(target, 50000000000L),
-            TimeMode.EventTime(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[
-              (String, Long, Long, Long, Long, Long, Long, Long)]])
-          .toDF("event_type", "n", "max_s", "alarm_idx", "alarm_ts",
-            "max_sn", "alarm_n_idx", "alarm_n_ts")
+        val scored = cusumStream(s, d, st.eventThirds(d), 300000000L,
+          cusumTarget(s, d))
         st.drain(scored, "append", minBatches = 4)
           .filter(col("event_type") =!= "sentinel")
       },
@@ -2492,50 +2710,13 @@ object SynthQueries {
     // REAL query restart, not just CusumSpec's batch-split unit test.
     QueryDef("g125_stream_cusum_restart",
       (s, d) => streamScoped(s, "g125", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{expr, lit, round,
-          timestamp_micros, when}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import s.implicits._
-        val evRaw = Tables.read(s, d, "events")
-        val (minNs, maxNs) = eventsTsRange(s, d)
-        val t2 = minNs + 2L * (maxNs - minNs) / 3
-        val target = cusumTarget(s, d)
         val streamDir = st.dir("events")
-        val ckptDir = st.dir("ckpt").toString
-        val outDir = st.dir("out").toString
-        val files = eventThirdFiles(s, d)
-        val scored = EventTs.toNanos(
-          s.readStream.schema(evRaw.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(streamDir.toString))
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
-          .select(col("event_type"), col("ts").as("ts_ns"),
-            col("event_id").cast("long").as("eid"),
-            (round(col("value") * 1000000).cast("long") +
-              when(col("ts") > t2, lit(300000000L)).otherwise(lit(0L)))
-              .as("v_micro"))
-          .as[(String, Long, Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(
-            new graft.streaming.CusumProcessor(target, 50000000000L),
-            TimeMode.EventTime(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[
-              (String, Long, Long, Long, Long, Long, Long, Long)]])
-          .toDF("event_type", "n", "max_s", "alarm_idx", "alarm_ts",
-            "max_sn", "alarm_n_idx", "alarm_n_ts")
-        StreamFiles.writeMany(files.take(2), streamDir)
-        val rows1 = st.withConf(NoDataBatchesOff)(
-          st.incarnation(scored, outDir, ckptDir))
-        require(rows1 > 0L, "phase 1 processed no rows")
-        val tailRows = files(2)._2.count() + 1L
-        StreamFiles.writeMany(files.drop(2), streamDir)
-        val rows2 = st.incarnation(scored, outDir, ckptDir)
-        require(rows2 == tailRows,
-          s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
-            s"expected exactly the new files' $tailRows")
-        materialized(s.read.schema(scored.schema).parquet(outDir)
-          .filter(col("event_type") =!= "sentinel"))
+        val scored = cusumStream(s, d, EventTs.toNanos(
+          st.splitFiles(Tables.read(s, d, "events").schema, streamDir)),
+          300000000L, cusumTarget(s, d))
+        st.restart(scored, NoDataBatchesOff)(
+          landSplits(streamDir, eventThirdFiles(s, d), sentinelRows = 1L): _*)(
+          _.filter(col("event_type") =!= "sentinel"))
       },
       Some(cusumOracleSql)),
 
@@ -2551,35 +2732,8 @@ object SynthQueries {
     // processor's Math.floorDiv on the reference sum.
     QueryDef("g123_stream_cusum_adaptive",
       (s, d) => streamScoped(s, "g123", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{expr, lit, round,
-          timestamp_micros, when}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import s.implicits._
-        val evRaw = Tables.read(s, d, "events")
-        val (minNs, maxNs) = eventsTsRange(s, d)
-        val t2 = minNs + 2L * (maxNs - minNs) / 3
-        val streamDir = st.fixtureFiles("events", d)(eventThirdFiles(s, d))
-        val scored = EventTs.toNanos(
-          s.readStream.schema(evRaw.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(streamDir.toString))
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
-          .select(col("event_type"), col("ts").as("ts_ns"),
-            col("event_id").cast("long").as("eid"),
-            (round(col("value") * 1000000).cast("long") -
-              when(col("ts") > t2, lit(300000000L)).otherwise(lit(0L)))
-              .as("v_micro"))
-          .as[(String, Long, Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(
-            new graft.streaming.CusumProcessor(0L, 50000000000L,
-              refWindow = 200L),
-            TimeMode.EventTime(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[
-              (String, Long, Long, Long, Long, Long, Long, Long)]])
-          .toDF("event_type", "n", "max_s", "alarm_idx", "alarm_ts",
-            "max_sn", "alarm_n_idx", "alarm_n_ts")
+        val scored = cusumStream(s, d, st.eventThirds(d), -300000000L, 0L,
+          refWindow = 200L)
         val out = st.drain(scored, "append", minBatches = 4)
           .filter(col("event_type") =!= "sentinel")
         val negAlarms = out.filter(col("alarm_n_idx") >= 0).count()
@@ -2649,46 +2803,17 @@ object SynthQueries {
     // id-ordered splits make arrival order the id order) in SQL.
     QueryDef("g119_stream_image_dedup",
       (s, d) => streamScoped(s, "g119", RocksDb: _*) { st =>
-        import org.apache.spark.sql.Row
-        import org.apache.spark.sql.functions.lit
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import org.apache.spark.sql.types.{BinaryType, LongType, StructField,
-          StructType}
         import s.implicits._
-        val ids = Tables.read(s, d, "documents")
-          .select(col("doc_id").cast("long").as("base_id"))
-        val rig = ids
-          .select(col("base_id"), col("base_id").as("id"), lit(0).as("shift"))
-          .unionAll(ids.filter(col("base_id") % 10 === 0)
-            .select(col("base_id"), (col("base_id") + 10000000L).as("id"),
-              lit(3).as("shift")))
-          .unionAll(ids.filter(col("base_id") % 20 === 0)
-            .select(col("base_id"), (col("base_id") + 20000000L).as("id"),
-              lit(6).as("shift")))
-        val outSchema = StructType(Seq(StructField("id", LongType),
-          StructField("ts", LongType), StructField("png", BinaryType)))
-        implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-        val fixture = rig.mapPartitions { rows =>
-          rows.map { r =>
-            val id = r.getLong(1)
-            Row(id, id * 1000000000L,
-              graft.ops.ImageDedup.hashCorpusPng(r.getLong(0), r.getInt(2)))
-          }
-        }
+        val ids = docIds(s, d)
+        val fixture = pngCorpus(ids, Seq((10, 10000000L, 3, 0),
+          (20, 20000000L, 6, 0)))
         // three id-ordered files: both duplicate generations arrive
         // AFTER their originals, so first-seen attribution is decidable
-        val streamDir = st.fixtureFiles("imgs", d) {
-          val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
-            .collect()(0).getLong(0) / 2
-          Seq(
-            "a_low" -> fixture.filter(col("id") <= half),
-            "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
-            "c_dups" -> fixture.filter(col("id") >= 10000000L))
-        }
+        val streamDir = st.fixtureFiles("imgs", d)(
+          idSplits(fixture, maxBaseId(ids) / 2))
         val hashed = graft.ops.ImageDedup.dHash(
-          s.readStream.schema(fixture.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(streamDir.toString), "png")
+          st.splitFiles(fixture.schema, streamDir), "png")
           .select(col("png_dhash").as("key"), col("ts"), col("id"))
           .as[(Long, Long, Long)]
           .groupByKey(_._1)
@@ -2736,8 +2861,7 @@ object SynthQueries {
     // trailing-hour windows stay unflushed exactly as in production.
     QueryDef("g120_stream_late_data",
       (s, d) => streamScoped(s, "g120") { st =>
-        import org.apache.spark.sql.functions.{count, expr, lit, pmod,
-          timestamp_micros, unix_timestamp, window, xxhash64}
+        import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
         val ev = Tables.events(s, d)
         val streamDir = st.fixtureFiles("events", d) {
           val (minNs, maxNs) = eventsTsRange(s, d)
@@ -2754,16 +2878,7 @@ object SynthQueries {
               .drop("__disp", "__file")
           }
         }
-        val counts = s.readStream
-          .schema(ev.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(streamDir.toString)
-          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-          .withWatermark("event_time", "1 hour")
-          .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(unix_timestamp(col("window.start")).as("bucket_s"),
-            col("event_type"), col("n"))
+        val counts = hourlyTypeCounts(st.splitFiles(ev.schema, streamDir))
         st.drain(counts, "append", minBatches = 5, check = progress => {
           val dropped = progress
             .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
@@ -2822,67 +2937,18 @@ object SynthQueries {
     // and the verify-and-merge rule in SQL.
     QueryDef("g122_stream_banded_dedup",
       (s, d) => streamScoped(s, "g122", RocksDb: _*) { st =>
-        import org.apache.spark.sql.Row
-        import org.apache.spark.sql.functions.{coalesce, explode, lit,
-          min => fmin, when}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
-        import s.implicits._
-        val maxHamming = 3
-        val ids = Tables.read(s, d, "documents")
-          .select(col("doc_id").cast("long").as("base_id"))
-        val rig = ids
-          .select(col("base_id"), col("base_id").as("id"),
-            lit(0).as("shift"), lit(0).as("edits"))
-          .unionAll(ids.filter(col("base_id") % 10 === 0)
-            .select(col("base_id"), (col("base_id") + 10000000L).as("id"),
-              lit(0).as("shift"), lit(2).as("edits")))
-          .unionAll(ids.filter(col("base_id") % 20 === 0)
-            .select(col("base_id"), (col("base_id") + 20000000L).as("id"),
-              lit(3).as("shift"), lit(3).as("edits")))
-        val outSchema = StructType(Seq(StructField("id", LongType),
-          StructField("ts", LongType), StructField("png", BinaryType)))
-        implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-        val fixture = rig.mapPartitions { rows =>
-          rows.map { r =>
-            val id = r.getLong(1)
-            Row(id, id * 1000000000L, graft.ops.ImageDedup
-              .hashCorpusPng(r.getLong(0), r.getInt(2), r.getInt(3)))
-          }
-        }
-        val streamDir = st.fixtureFiles("imgs", d) {
-          val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
-            .collect()(0).getLong(0) / 2
-          Seq(
-            "a_low" -> fixture.filter(col("id") <= half),
-            "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
-            "c_dups" -> fixture.filter(col("id") >= 10000000L))
-        }
+        val ids = docIds(s, d)
+        val fixture = pngCorpus(ids, Seq((10, 10000000L, 0, 2),
+          (20, 20000000L, 3, 3)))
+        val streamDir = st.fixtureFiles("imgs", d)(
+          idSplits(fixture, maxBaseId(ids) / 2))
         val hashed = graft.ops.ImageDedup.dHash(
-          s.readStream.schema(fixture.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(streamDir.toString), "png")
+          st.splitFiles(fixture.schema, streamDir), "png")
           .select(col("id"), col("ts"), col("png_dhash").as("sig"))
-        // the batch banding, in-stream: one row per (arrival, band),
-        // keyed by the composite layout (Dedup.streamBandKeys — the
-        // ONE definition the oracles, benches and specs share)
-        val banded = hashed.select(col("id"), col("ts"), col("sig"),
-          explode(graft.ops.Dedup.streamBandKeys(col("sig"), maxHamming))
-            .as("bkey"))
-          .select(col("bkey"), col("ts"), col("id"), col("sig"))
-          .as[(Long, Long, Long, Long)]
-        val decided = banded
-          .groupByKey(_._1)
-          .mapValues(r => (r._2, r._3, r._4))
-          .transformWithState(
-            new graft.streaming.BandedFirstSeenProcessor(maxHamming),
-            TimeMode.None(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[(Long, Long)]])
-          .toDF("id", "cand")
-        // merge the per-band emissions: min matched survivor, else -1
-        st.drain(decided, "append", minBatches = 3).groupBy("id")
-          .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
-            .as("dup_of"))
+        // the batch banding, in-stream: one row per (arrival, band)
+        bandedIndex(hashed, "ts",
+          new graft.streaming.BandedFirstSeenProcessor(BandHamming))(
+          st.drain(_, "append", minBatches = 3))
       },
       Some {
         import graft.queries.DuckXxHash._
@@ -2928,54 +2994,14 @@ object SynthQueries {
     // min-verifying-earlier-member over ALL bucket members in SQL.
     QueryDef("g124_stream_banded_index",
       (s, d) => streamScoped(s, "g124", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{coalesce, explode, expr,
-          lit, min => fmin, pmod, when, xxhash64}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import s.implicits._
-        val maxHamming = 3
-        val ids = Tables.read(s, d, "documents")
-          .select(col("doc_id").cast("long").as("base_id"))
-        val base = ids.select(col("base_id").as("id"),
-          xxhash64(col("base_id")).as("sig"))
-        val h = pmod(col("base_id"), lit(3L)) + 1L
-        val twins = ids.filter(col("base_id") % 8 === 0)
-          .withColumn("a", pmod(col("base_id") * 7, lit(64L)))
-          .withColumn("fl", expr("shiftleft(1L, CAST(a AS INT))")
-            .bitwiseOR(when(h >= 2L,
-              expr("shiftleft(1L, CAST((a + 21) % 64 AS INT))")).otherwise(lit(0L)))
-            .bitwiseOR(when(h >= 3L,
-              expr("shiftleft(1L, CAST((a + 43) % 64 AS INT))")).otherwise(lit(0L))))
-          .select((col("base_id") + 10000000L).as("id"),
-            xxhash64(col("base_id")).bitwiseXOR(col("fl")).as("sig"))
-        val fixture = base.unionByName(twins)
-          .select(col("id"), (col("id") * 1000000L).as("ts"), col("sig"))
-        val streamDir = st.fixtureFiles("sigs", d) {
-          val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
-            .collect()(0).getLong(0) / 2
-          Seq(
-            "a_low" -> fixture.filter(col("id") <= half),
-            "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
-            "c_dups" -> fixture.filter(col("id") >= 10000000L))
-        }
-        val banded = s.readStream.schema(fixture.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(streamDir.toString)
-          .select(col("id"), col("ts"), col("sig"),
-            explode(graft.ops.Dedup.streamBandKeys(col("sig"), maxHamming))
-              .as("bkey"))
-          .select(col("bkey"), col("ts"), col("id"), col("sig"))
-          .as[(Long, Long, Long, Long)]
-        val decided = banded
-          .groupByKey(_._1)
-          .mapValues(r => (r._2, r._3, r._4))
-          .transformWithState(
-            new graft.streaming.BandedIndexProcessor(maxHamming),
-            TimeMode.None(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[(Long, Long)]])
-          .toDF("id", "cand")
-        st.drain(decided, "append", minBatches = 3).groupBy("id")
-          .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
-            .as("dup_of"))
+        val ids = docIds(s, d)
+        val fixture = twinSignatures(ids, "ts", _ * 1000000L,
+          b => (b + 10000000L) * 1000000L)
+        val streamDir = st.fixtureFiles("sigs", d)(
+          idSplits(fixture, maxBaseId(ids) / 2))
+        bandedIndex(st.splitFiles(fixture.schema, streamDir), "ts",
+          new graft.streaming.BandedIndexProcessor(BandHamming))(
+          st.drain(_, "append", minBatches = 3))
       },
       SynthQueries.bandedIndexOracle),
 
@@ -2992,91 +3018,21 @@ object SynthQueries {
     // and emits per arrival.
     QueryDef("g126_stream_index_restart",
       (s, d) => streamScoped(s, "g126", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{coalesce, explode, expr, lit,
-          min => fmin, pmod, when, xxhash64}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import s.implicits._
-        val maxHamming = 3
-        val ids = Tables.read(s, d, "documents")
-          .select(col("doc_id").cast("long").as("base_id"))
-        val base = ids.select(col("base_id").as("id"),
-          xxhash64(col("base_id")).as("sig"))
-        val h = pmod(col("base_id"), lit(3L)) + 1L
-        val twins = ids.filter(col("base_id") % 8 === 0)
-          .withColumn("a", pmod(col("base_id") * 7, lit(64L)))
-          .withColumn("fl", expr("shiftleft(1L, CAST(a AS INT))")
-            .bitwiseOR(when(h >= 2L,
-              expr("shiftleft(1L, CAST((a + 21) % 64 AS INT))")).otherwise(lit(0L)))
-            .bitwiseOR(when(h >= 3L,
-              expr("shiftleft(1L, CAST((a + 43) % 64 AS INT))")).otherwise(lit(0L))))
-          .select((col("base_id") + 10000000L).as("id"),
-            xxhash64(col("base_id")).bitwiseXOR(col("fl")).as("sig"))
-        val fixture = base.unionByName(twins)
-          .select(col("id"), (col("id") * 1000000L).as("ts"), col("sig"))
+        val ids = docIds(s, d)
+        val fixture = twinSignatures(ids, "ts", _ * 1000000L,
+          b => (b + 10000000L) * 1000000L)
         val streamDir = st.dir("sigs")
-        val ckptDir = st.dir("ckpt").toString
-        val outDir = st.dir("out").toString
-        val half = ids.agg(org.apache.spark.sql.functions.max("base_id"))
-          .collect()(0).getLong(0) / 2
-        val cands = s.readStream.schema(fixture.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(streamDir.toString)
-          .select(col("id"), col("ts"), col("sig"),
-            explode(graft.ops.Dedup.streamBandKeys(col("sig"), maxHamming))
-              .as("bkey"))
-          .select(col("bkey"), col("ts"), col("id"), col("sig"))
-          .as[(Long, Long, Long, Long)]
-          .groupByKey(_._1)
-          .mapValues(r => (r._2, r._3, r._4))
-          .transformWithState(
-            new graft.streaming.BandedIndexProcessor(maxHamming),
-            TimeMode.None(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[(Long, Long)]])
-          .toDF("id", "cand")
-        // phase 1: the base corpus only (two id-ordered files)
-        StreamFiles.writeMany(
-          Seq("a_low" -> fixture.filter(col("id") <= half),
-            "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L)),
-          streamDir)
-        val rows1 = st.incarnation(cands, outDir, ckptDir)
-        require(rows1 > 0L, "phase 1 processed no rows")
-        // phase 2: the twins land; a NEW query resumes from the checkpoint
-        val twinRows = fixture.filter(col("id") >= 10000000L).count()
-        StreamFiles.writeOne(fixture.filter(col("id") >= 10000000L), streamDir,
-          "c_dups")
-        val rows2 = st.incarnation(cands, outDir, ckptDir)
-        require(rows2 == twinRows,
-          s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
-            s"expected exactly the twins' $twinRows")
-        materialized(s.read.schema(cands.schema).parquet(outDir).groupBy("id")
-          .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
-            .as("dup_of")))
+        // phase 1: the base corpus only (two id-ordered files); phase 2:
+        // the twins land and a NEW query resumes from the checkpoint
+        val files = idSplits(fixture, maxBaseId(ids) / 2)
+        bandedIndex(st.splitFiles(fixture.schema, streamDir), "ts",
+          new graft.streaming.BandedIndexProcessor(BandHamming))(
+          decided => st.restart(decided)(landSplits(streamDir, files): _*)())
       },
       // the SAME oracle as g124: a restarted index must attribute
       // identically to the uninterrupted run
       SynthQueries.bandedIndexOracle),
 
-    // BOUNDED-WINDOW near-dup index (r11, VERDICT r10 item 6 — the
-    // eviction story): the g124 twin rig through
-    // BandedWindowIndexProcessor with windowOrd = 500 over
-    // DATA-carried ordinals (base docs at ord = id, twins at
-    // maxId + 1 + 2·(bid % 256), so twin-pair separations straddle the
-    // window — including one pair at EXACTLY the boundary). A
-    // wall-clock TTL could never be oracled (output would depend on
-    // scheduling); the event-ordinal window replays exactly: the
-    // oracle is the g124 replay plus the window predicate, so both
-    // planted expiry (pairs beyond 500 attribute to -1) and boundary
-    // inclusion are hash-checked. State is bounded by one window of
-    // arrivals per bucket; physical eviction runs when the twins batch
-    // raises the cutoff past the early base ordinals.
-    // Streaming WARC ingestion: the crawl-loop front door. The sink
-    // fixture's 4 segments arrive one per micro-batch (filesPerBatch=1
-    // over the FileListMicroBatchStream's file-count offsets), statuses
-    // gate in-stream, and the memory sink accumulates exactly the
-    // batch read's rows — the oracle is the same source-table
-    // reconstruction q155 uses, restricted to 200-status responses.
-    // Batch-layout independence and the mutated-prefix failure mode
-    // are spec-pinned (WarcStreamSpec).
     // STREAMING crawl discovery: WARC pages arrive one segment per
     // micro-batch, links extract + resolve + canonicalize in-stream,
     // and a stateful dropDuplicates emits each candidate URL exactly
@@ -3090,24 +3046,7 @@ object SynthQueries {
     QueryDef("g130_stream_discovery",
       (s, d) => streamScoped(s, "g130") { st =>
         val dir = graft.queries.PipelineQueries.LinkWarcFixture.dir(s, d)
-        st.drain(s.readStream.format("warc")
-          .option("filesPerBatch", "1")
-          // intra-segment parallelism via the CDX sidecars (see
-          // warcCdxTarget): without it each micro-batch's whole
-          // extract pipeline is one task
-          .option("cdxTargetBytes", warcCdxTarget(dir, s).toString)
-          .load(dir)
-          .filter(col("http_status") === 200)
-          // the sniff-decode chain, streaming too — byte-identical on
-          // this UTF-8 fixture, honest transcode on a real crawl
-          .select(col("target_uri").as("url"),
-            graft.ops.HtmlExtract.decodePayload(col("payload"),
-              col("http_content_type")).as("html"))
-          .select(col("url"),
-            org.apache.spark.sql.functions.explode(
-              graft.ops.HtmlExtract.extractLinks(col("html"))).as("href"))
-          .select(graft.ops.UrlOps.canonicalizeUrl(
-            graft.ops.UrlOps.resolveUrl(col("url"), col("href"))).as("curl"))
+        st.drain(discoveredLinks(st.warcSegments(dir, manifestOnly = false))
           .dropDuplicates("curl"), "append")
       },
       Some(s"""SELECT DISTINCT ${graft.queries.PipelineQueries.linkCandidateSql}
@@ -3128,8 +3067,6 @@ object SynthQueries {
     QueryDef("g131_stream_frontier",
       (s, d) => streamScoped(s, "g131", RocksDb: _*) { st =>
         import org.apache.spark.sql.functions.{concat, lit, max => fmax, pmod}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import s.implicits._
         val cand = Tables.read(s, d, "documents")
           .select(col("doc_id").cast("long").as("doc_id"))
           .filter(pmod(col("doc_id"), lit(11L)) =!= 0) // robots-gated out
@@ -3156,29 +3093,8 @@ object SynthQueries {
           "b_second" -> cand.filter(col("id") > t1 && col("id") <= t2),
           "c_third" -> cand.filter(col("id") > t2))
         val streamDir = st.dir("cand")
-        val ckptDir = st.dir("ckpt").toString
-        val outDir = st.dir("out").toString
-        val scheduled = s.readStream.schema(cand.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(streamDir.toString)
-          .as[(String, Long, Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(new graft.streaming.FrontierProcessor,
-            TimeMode.None(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[
-              (Long, String, Long, Long)]])
-          .toDF("id", "host", "seq", "fetch_at_s")
-        StreamFiles.writeMany(files.take(2), streamDir)
-        val rows1 = st.withConf(NoDataBatchesOff)(
-          st.incarnation(scheduled, outDir, ckptDir))
-        require(rows1 > 0L, "phase 1 processed no rows")
-        val tailRows = files(2)._2.count()
-        StreamFiles.writeOne(files(2)._2, streamDir, files(2)._1)
-        val rows2 = st.incarnation(scheduled, outDir, ckptDir)
-        require(rows2 == tailRows,
-          s"restart must resume, not reprocess: phase 2 read $rows2 rows, " +
-            s"expected exactly the new file's $tailRows")
-        materialized(s.read.schema(scheduled.schema).parquet(outDir))
+        st.restart(frontier(st.splitFiles(cand.schema, streamDir)), NoDataBatchesOff)(
+          landSplits(streamDir, files): _*)()
       },
       Some("""WITH c AS (SELECT doc_id,
             (doc_id % 7) % 4 + 1 + (doc_id // 7) % 3 AS delay_s
@@ -3269,31 +3185,20 @@ object SynthQueries {
       // batch.
       (s, d) => streamScoped(s, "g133", 4,
           RocksDb :+ NoDataBatchesOff: _*) { st =>
-        import org.apache.spark.sql.functions.{ascii, broadcast, concat,
-          explode, lit, pmod, substring, xxhash64}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import s.implicits._
+        import org.apache.spark.sql.functions.{concat, explode, lit, pmod, xxhash64}
         val warcDir = st.dir("warc").toString
         val did = col("doc_id")
         def writeGen(g: Long): Long = {
           val pages = Tables.read(s, d, "documents")
             .select(col("doc_id").cast("long").as("doc_id"))
             .filter(pmod(did, lit(3L)) === g)
-          pages.select(
-              concat(lit("urn:loop:"), did.cast("string")).as("record_id"),
-              lit("response").as("warc_type"),
-              graft.queries.PipelineQueries.linkFixtureBase(did).as("target_uri"),
-              lit("2026-01-01T00:00:00Z").as("warc_date"),
-              lit("application/http;msgtype=response").as("content_type"),
-              lit(200).as("http_status"),
-              lit("text/html").as("http_content_type"),
-              graft.queries.PipelineQueries.linkFixtureHtml(did)
-                .cast("binary").as("payload"))
+          pages.select(warcResponse(concat(lit("urn:loop:"), did.cast("string")),
+              graft.queries.PipelineQueries.linkFixtureBase(did), lit(200),
+              "text/html", graft.queries.PipelineQueries.linkFixtureHtml(did)): _*)
             .coalesce(1) // one segment per generation: manifest order IS batch order
             .write.format("warc").mode("append").option("path", warcDir).save()
           pages.count()
         }
-        writeGen(0); writeGen(1)
         // the robots/crawl-delay dimension: per-host politeness the
         // upstream join supplies (broadcast-size, static to the stream)
         // materialized once: the candidate map is reused by the final
@@ -3311,62 +3216,20 @@ object SynthQueries {
           .select(graft.ops.UrlOps.canonicalizeUrl(
             graft.ops.UrlOps.resolveUrl(col("__base"), col("href"))).as("curl"))
           .distinct())
-        val delayDf = candBatch
-          .select(graft.ops.UrlOps.canonicalHost(col("curl")).as("host"))
-          .distinct()
-          .withColumn("delay_s",
-            (pmod(ascii(substring(col("host"), 2, 1)), lit(3)) + 1).cast("long"))
-        // O(hosts) rows — pin them as a literal frame so each
-        // micro-batch's broadcast costs nothing to recompute
-        val delayDim = materialized(delayDf)
-        val ckptDir = st.dir("ckpt").toString
-        val outDir = st.dir("out").toString
+        val delays = crawlDelays(candBatch)
         // each incarnation is a REAL restart against the same checkpoint:
         // the warc source implements SupportsTriggerAvailableNow, so the
         // run ends at the segments listed when it starts and resumes from
         // the checkpoint-seeded cursor (Spark's wrapper for other sources
-        // would snapshot one filesPerBatch-capped offset instead). A def:
-        // each incarnation sizes its CDX cuts over the segments present
-        // when it starts.
-        def scheduled = s.readStream.format("warc")
-          .option("manifestOnly", "true").option("filesPerBatch", "1")
-          // intra-segment parallelism via the CDX sidecars (see
-          // warcCdxTarget): without it each micro-batch's extract
-          // pipeline is one task
-          .option("cdxTargetBytes", warcCdxTarget(warcDir, s).toString)
-          .load(warcDir)
-          .filter(col("http_status") === 200)
-          .select(col("target_uri").as("url"),
-            graft.ops.HtmlExtract.decodePayload(col("payload"),
-              col("http_content_type")).as("html"))
-          .select(col("url"),
-            explode(graft.ops.HtmlExtract.extractLinks(col("html"))).as("href"))
-          .select(graft.ops.UrlOps.canonicalizeUrl(
-            graft.ops.UrlOps.resolveUrl(col("url"), col("href"))).as("curl"))
-          .dropDuplicates("curl") // exactly-once candidates, state #1
-          .join(broadcast(delayDim),
-            graft.ops.UrlOps.canonicalHost(col("curl")) === delayDim("host"))
-          .select(col("host"), xxhash64(col("curl")).as("ord"),
-            xxhash64(col("curl")).as("id"), col("delay_s"))
-          .as[(String, Long, Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(new graft.streaming.FrontierProcessor,
-            TimeMode.None(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[
-              (Long, String, Long, Long)]]) // state #2, same query
-          .toDF("id", "host", "seq", "fetch_at_s")
-        val rows1 = st.incarnation(scheduled, outDir, ckptDir)
-        require(rows1 > 0L, "phase 1 processed no rows")
-        val tailRows = writeGen(2)
-        val rows2 = st.incarnation(scheduled, outDir, ckptDir)
-        require(rows2 == tailRows,
-          s"restart must resume, not reprocess: phase 2 read $rows2 source " +
-            s"rows, expected exactly generation 2's $tailRows")
-        val res = s.read.schema(scheduled.schema).parquet(outDir)
-          .join(candBatch.select(col("curl"), xxhash64(col("curl")).as("id")),
+        // would snapshot one filesPerBatch-capped offset instead). Phase 1
+        // streams generations 0 and 1, phase 2 generation 2.
+        st.restart(crawlSchedule(discoveredLinks(
+          st.warcSegments(warcDir, manifestOnly = true)), delays))(
+          _ => { writeGen(0); writeGen(1); None },
+          _ => Some(writeGen(2)))(
+          _.join(candBatch.select(col("curl"), xxhash64(col("curl")).as("id")),
             Seq("id"))
-          .select(col("curl"), col("host"), col("seq"), col("fetch_at_s"))
-        materialized(res)
+            .select(col("curl"), col("host"), col("seq"), col("fetch_at_s")))
       },
       Some {
         import graft.queries.DuckXxHash._
@@ -3413,27 +3276,16 @@ object SynthQueries {
           Tables.read(s, d, "documents")
             .select(col("doc_id").cast("long").as("doc_id"), col("text"))
             .filter(pmod(did, lit(2L)) === g)
-            .select(
-              concat(lit("urn:repack:"), did.cast("string")).as("record_id"),
-              lit("response").as("warc_type"),
+            .select(warcResponse(concat(lit("urn:repack:"), did.cast("string")),
               concat(lit("https://w"), pmod(did, lit(5L)).cast("string"),
-                lit(".example.com/d/"), did.cast("string")).as("target_uri"),
-              lit("2026-01-01T00:00:00Z").as("warc_date"),
-              lit("application/http;msgtype=response").as("content_type"),
-              when(pmod(did, lit(9L)) === 0, lit(404)).otherwise(lit(200))
-                .as("http_status"),
-              lit("text/plain; charset=utf-8").as("http_content_type"),
-              col("text").cast("binary").as("payload"))
+                lit(".example.com/d/"), did.cast("string")),
+              when(pmod(did, lit(9L)) === 0, lit(404)).otherwise(lit(200)),
+              "text/plain; charset=utf-8", col("text")): _*)
             .coalesce(1)
             .write.format("warc").mode("append").option("path", warcDir).save()
         // one incarnation per call over one checkpoint; each sizes its CDX
         // cuts over the segments present when it starts
-        def repack(): Unit = st.run(s.readStream.format("warc")
-          .option("manifestOnly", "true").option("filesPerBatch", "1")
-          // intra-segment parallelism via the CDX sidecars (see
-          // warcCdxTarget)
-          .option("cdxTargetBytes", warcCdxTarget(warcDir, s).toString)
-          .load(warcDir)
+        def repack(): Unit = st.run(st.warcSegments(warcDir, manifestOnly = true)
           .filter(col("http_status") === 200)
           .select(md5(col("target_uri")).as("key"), col("target_uri"),
             col("payload"))
@@ -3451,7 +3303,7 @@ object SynthQueries {
           .outputMode("append"))
         writeGen(0)
         repack()
-        writeGen(1) // lands after a REAL stop: the restart must resume
+        writeGen(1) // lands after a REAL stop: the second run resumes
         repack()
         val back = s.read.format("wds").option("manifestOnly", "true")
           .load(outDir)
@@ -3494,13 +3346,10 @@ object SynthQueries {
       // batches
       (s, d) => streamScoped(s, "g135", 4,
           RocksDb :+ NoDataBatchesOff: _*) { st =>
-        import org.apache.spark.sql.functions.{array, ascii, broadcast,
-          concat, explode, lit, md5, pmod, substring, when, xxhash64}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+        import org.apache.spark.sql.functions.{array, broadcast, concat, explode,
+          lit, md5, pmod, when, xxhash64}
         import s.implicits._
         val warcDir = st.dir("warc").toString
-        val ckptDir = st.dir("ckpt").toString
-        val outDir = st.dir("out").toString
         val did = col("doc_id")
         def urlOf(dep: Int, j: org.apache.spark.sql.Column) =
           concat(lit("https://h"), pmod(j, lit(5L)).cast("string"),
@@ -3526,12 +3375,7 @@ object SynthQueries {
         val dcount = uni.groupBy("depth").count().as[(Long, Long)]
           .collect().toMap
         // per-host politeness dim, O(hosts) literal (the g133 shape)
-        val delayDf = uni
-          .select(graft.ops.UrlOps.canonicalHost(col("curl")).as("host"))
-          .distinct()
-          .withColumn("delay_s",
-            (pmod(ascii(substring(col("host"), 2, 1)), lit(3)) + 1).cast("long"))
-        val delayDim = materialized(delayDf)
+        val delays = crawlDelays(uni)
         def linkPage(target: org.apache.spark.sql.Column,
             hrefs: Seq[org.apache.spark.sql.Column]) = {
           val body =
@@ -3543,58 +3387,23 @@ object SynthQueries {
         }
         def writePages(pages: org.apache.spark.sql.DataFrame): Long = {
           pages
-            .select(
-              concat(lit("urn:fb:"), md5(col("target_uri"))).as("record_id"),
-              lit("response").as("warc_type"), col("target_uri"),
-              lit("2026-01-01T00:00:00Z").as("warc_date"),
-              lit("application/http;msgtype=response").as("content_type"),
-              lit(200).as("http_status"),
-              lit("text/html").as("http_content_type"),
-              col("html").cast("binary").as("payload"))
+            .select(warcResponse(concat(lit("urn:fb:"), md5(col("target_uri"))),
+              col("target_uri"), lit(200), "text/html", col("html")): _*)
             .coalesce(1) // one segment per generation: manifest order IS batch order
             .write.format("warc").mode("append").option("path", warcDir).save()
           pages.count()
         }
         // generation 0: seed pages, fetched out-of-band (the crawl's
         // entry point), each linking its two d1 children
-        val (t0, h0) = linkPage(urlOf(0, col("i")),
-          Seq(urlOf(1, col("i") * 2), urlOf(1, col("i") * 2 + 1)))
-        val gen0 = writePages(seeds.select(t0.as("target_uri"), h0.as("html")))
-        // a def: each turn sizes its CDX cuts over the segments present
-        // when it starts
-        def scheduled = s.readStream.format("warc")
-          .option("manifestOnly", "true").option("filesPerBatch", "1")
-          // intra-segment parallelism via the CDX sidecars (see
-          // warcCdxTarget)
-          .option("cdxTargetBytes", warcCdxTarget(warcDir, s).toString)
-          .load(warcDir)
-          .filter(col("http_status") === 200)
-          .select(col("target_uri").as("url"),
-            graft.ops.HtmlExtract.decodePayload(col("payload"),
-              col("http_content_type")).as("html"))
-          .select(col("url"),
-            explode(graft.ops.HtmlExtract.extractLinks(col("html"))).as("href"))
-          .select(graft.ops.UrlOps.canonicalizeUrl(
-            graft.ops.UrlOps.resolveUrl(col("url"), col("href"))).as("curl"))
-          .dropDuplicates("curl")
-          .join(broadcast(delayDim),
-            graft.ops.UrlOps.canonicalHost(col("curl")) === delayDim("host"))
-          .select(col("host"), xxhash64(col("curl")).as("ord"),
-            xxhash64(col("curl")).as("id"), col("delay_s"))
-          .as[(String, Long, Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(new graft.streaming.FrontierProcessor,
-            TimeMode.None(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[
-              (Long, String, Long, Long)]])
-          .toDF("id", "host", "seq", "fetch_at_s")
-        def turn(): Long = st.incarnation(scheduled, outDir, ckptDir)
-        // what the frontier has scheduled so far, read back with the
-        // schema the sink wrote
-        def out = s.read.schema(scheduled.schema).parquet(outDir)
+        def seedTurn(): Long = {
+          val (t0, h0) = linkPage(urlOf(0, col("i")),
+            Seq(urlOf(1, col("i") * 2), urlOf(1, col("i") * 2 + 1)))
+          writePages(seeds.select(t0.as("target_uri"), h0.as("html")))
+        }
         // the FEEDBACK edge: fetch exactly what the frontier scheduled
-        // this turn, emit the next WARC generation into the same dir
-        def fetchTurn(depth: Long): Long = {
+        // (`out`, the sink so far) this turn, emit the next WARC
+        // generation into the same dir
+        def fetchTurn(out: DataFrame, depth: Long): Long = {
           val sched = out.select(col("id")).distinct()
             .join(broadcast(uni), Seq("id"))
             .filter(col("depth") === depth)
@@ -3612,25 +3421,21 @@ object SynthQueries {
                 lit("<html><body>leaf</body></html>").as("html"))
           writePages(pages)
         }
-        val rows1 = turn() // turn 1: discover+schedule d1
-        require(rows1 == gen0, s"turn 1 read $rows1 pages, expected $gen0")
-        val fetched1 = fetchTurn(1L) // feedback: fetch what was scheduled
-        val rows2 = turn() // turn 2: resume, discover d2
-        require(rows2 == fetched1,
-          s"restart must resume, not reprocess: turn 2 read $rows2, " +
-            s"expected exactly generation 1's $fetched1")
-        val fetched2 = fetchTurn(2L)
-        val rows3 = turn() // turn 3: leaves drain the loop
-        require(rows3 == fetched2,
-          s"turn 3 read $rows3 source rows, expected $fetched2")
-        val total = out.select(col("id")).distinct().count()
-        require(total == dcount(1L) + dcount(2L),
-          s"loop did not drain cleanly: $total scheduled vs " +
-            s"${dcount(1L) + dcount(2L)} candidates")
-        val res = out
-          .join(uni.select(col("curl"), col("id")), Seq("id"))
-          .select(col("curl"), col("host"), col("seq"), col("fetch_at_s"))
-        materialized(res)
+        // each turn is one incarnation over the same checkpoint and
+        // sizes its CDX cuts over the segments present when it starts;
+        // each must read exactly the generation its turn landed
+        st.restart(crawlSchedule(discoveredLinks(
+          st.warcSegments(warcDir, manifestOnly = true)), delays))(
+          _ => Some(seedTurn()), // turn 1: discover+schedule d1
+          out => Some(fetchTurn(out, 1L)), // turn 2: resume, discover d2
+          out => Some(fetchTurn(out, 2L))) { out => // turn 3: leaves drain
+          val total = out.select(col("id")).distinct().count()
+          require(total == dcount(1L) + dcount(2L),
+            s"loop did not drain cleanly: $total scheduled vs " +
+              s"${dcount(1L) + dcount(2L)} candidates")
+          out.join(uni.select(col("curl"), col("id")), Seq("id"))
+            .select(col("curl"), col("host"), col("seq"), col("fetch_at_s"))
+        }
       },
       Some {
         import graft.queries.DuckXxHash._
@@ -3703,6 +3508,14 @@ object SynthQueries {
           md5('rvbody-' || CAST(ref AS VARCHAR))
         FROM refs JOIN d o ON refs.ref = o.id""")),
 
+    // Streaming WARC ingestion: the crawl-loop front door. The sink
+    // fixture's 4 segments arrive one per micro-batch (filesPerBatch=1
+    // over the FileListMicroBatchStream's file-count offsets), statuses
+    // gate in-stream, and the memory sink accumulates exactly the
+    // batch read's rows — the oracle is the same source-table
+    // reconstruction q155 uses, restricted to 200-status responses.
+    // Batch-layout independence and the mutated-prefix failure mode
+    // are spec-pinned (WarcStreamSpec).
     QueryDef("g129_stream_warc_ingest",
       (s, d) => streamScoped(s, "g129") { st =>
         import org.apache.spark.sql.functions.md5
@@ -3721,61 +3534,34 @@ object SynthQueries {
           CAST(strlen(text) AS BIGINT) AS payload_len
         FROM documents WHERE doc_id % 9 <> 0 AND doc_id % 7 <> 0""")),
 
+    // BOUNDED-WINDOW near-dup index (r11, VERDICT r10 item 6 — the
+    // eviction story): the g124 twin rig through
+    // BandedWindowIndexProcessor with windowOrd = 500 over
+    // DATA-carried ordinals (base docs at ord = id, twins at
+    // maxId + 1 + 2·(bid % 256), so twin-pair separations straddle the
+    // window — including one pair at EXACTLY the boundary). A
+    // wall-clock TTL could never be oracled (output would depend on
+    // scheduling); the event-ordinal window replays exactly: the
+    // oracle is the g124 replay plus the window predicate, so both
+    // planted expiry (pairs beyond 500 attribute to -1) and boundary
+    // inclusion are hash-checked. State is bounded by one window of
+    // arrivals per bucket; physical eviction runs when the twins batch
+    // raises the cutoff past the early base ordinals.
     QueryDef("g128_stream_index_window",
       (s, d) => streamScoped(s, "g128", RocksDb: _*) { st =>
-        import org.apache.spark.sql.functions.{coalesce, explode, expr, lit,
-          min => fmin, pmod, when, xxhash64, max => fmax}
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        import s.implicits._
-        val maxHamming = 3
-        val windowOrd = 500L
+        import org.apache.spark.sql.functions.{lit, pmod}
         val streamDir = st.fixtureFiles("sigs", d) {
-          val ids = Tables.read(s, d, "documents")
-            .select(col("doc_id").cast("long").as("base_id"))
-          val maxId = ids.agg(fmax("base_id")).collect()(0).getLong(0)
-          val base = ids.select(col("base_id").as("id"),
-            col("base_id").as("ord"), xxhash64(col("base_id")).as("sig"))
-          val h = pmod(col("base_id"), lit(3L)) + 1L
-          val twins = ids.filter(col("base_id") % 8 === 0)
-            .withColumn("a", pmod(col("base_id") * 7, lit(64L)))
-            .withColumn("fl", expr("shiftleft(1L, CAST(a AS INT))")
-              .bitwiseOR(when(h >= 2L,
-                expr("shiftleft(1L, CAST((a + 21) % 64 AS INT))")).otherwise(lit(0L)))
-              .bitwiseOR(when(h >= 3L,
-                expr("shiftleft(1L, CAST((a + 43) % 64 AS INT))")).otherwise(lit(0L))))
-            .select((col("base_id") + 10000000L).as("id"),
-              (lit(maxId + 1L) + pmod(col("base_id"), lit(256L)) * 2L).as("ord"),
-              xxhash64(col("base_id")).bitwiseXOR(col("fl")).as("sig"))
-          val fixture = base.unionByName(twins)
-            .select(col("id"), col("ord"), col("sig"))
-          val half = maxId / 2
-          Seq(
-            "a_low" -> fixture.filter(col("id") <= half),
-            "b_high" -> fixture.filter(col("id") > half && col("id") < 10000000L),
-            "c_dups" -> fixture.filter(col("id") >= 10000000L))
+          val ids = docIds(s, d)
+          val maxId = maxBaseId(ids)
+          idSplits(twinSignatures(ids, "ord", identity,
+            b => lit(maxId + 1L) + pmod(b, lit(256L)) * 2L), maxId / 2)
         }
         // the fixture's columns; a file stream reads every column nullable
         val sigSchema = StructType(Seq("id", "ord", "sig")
           .map(org.apache.spark.sql.types.StructField(_, LongType)))
-        val banded = s.readStream.schema(sigSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(streamDir.toString)
-          .select(col("id"), col("ord"), col("sig"),
-            explode(graft.ops.Dedup.streamBandKeys(col("sig"), maxHamming))
-              .as("bkey"))
-          .select(col("bkey"), col("ord"), col("id"), col("sig"))
-          .as[(Long, Long, Long, Long)]
-        val decided = banded
-          .groupByKey(_._1)
-          .mapValues(r => (r._2, r._3, r._4))
-          .transformWithState(
-            new graft.streaming.BandedWindowIndexProcessor(maxHamming, windowOrd),
-            TimeMode.None(), OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[(Long, Long)]])
-          .toDF("id", "cand")
-        st.drain(decided, "append", minBatches = 3).groupBy("id")
-          .agg(coalesce(fmin(when(col("cand") >= 0, col("cand"))), lit(-1L))
-            .as("dup_of"))
+        bandedIndex(st.splitFiles(sigSchema, streamDir), "ord",
+          new graft.streaming.BandedWindowIndexProcessor(BandHamming, windowOrd = 500L))(
+          st.drain(_, "append", minBatches = 3))
       },
       SynthQueries.bandedWindowOracle),
 

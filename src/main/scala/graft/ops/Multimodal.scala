@@ -119,14 +119,14 @@ object Multimodal {
     StructField("features", ArrayType(FloatType, containsNull = false))))
 
   /** Decode + feature-extract a binary asset column: appends
-    * `<binCol>_decoded` (struct, never null — a null payload decodes as
-    * empty bytes). Real ImageIO decode for image payloads; the
+    * `<binCol>_decoded` (struct; null for a null payload, like every
+    * other seam). Real ImageIO decode for image payloads; the
     * deterministic stub for everything else.
     */
   def decodeFeatures(df: DataFrame, binCol: String): DataFrame =
     PerRow.append[Array[Byte]](df, binCol, StructField(s"${binCol}_decoded", decodedType)) { bytes =>
-      val safe = if (bytes == null) Array.emptyByteArray else bytes
-      decodeImage(safe) match {
+      if (bytes == null) null
+      else decodeImage(bytes) match {
         case Some((w, h, c, f)) => Row(w, h, c, f.toSeq)
         case None =>
           // r10: lossy WebP (and any other well-formed WebP outside
@@ -134,10 +134,10 @@ object Multimodal {
           // the container/frame header — dims filled, channels and
           // features null, so downstream sees honest partial
           // metadata instead of the stub's fake
-          WebpLossless.headerDimensions(safe) match {
+          WebpLossless.headerDimensions(bytes) match {
             case Some((w, h)) => Row(w, h, null, null)
             case None =>
-              val (w, h, c, f) = decodeStub(safe)
+              val (w, h, c, f) = decodeStub(bytes)
               Row(w, h, c, f.toSeq)
           }
       }

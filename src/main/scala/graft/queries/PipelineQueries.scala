@@ -5590,15 +5590,9 @@ object PipelineQueries {
     def dir(s: SparkSession, sfDir: String): String =
       BuildOnce.dir("link_warc", sfDir) { out =>
         val did = col("doc_id")
-        Tables.read(s, sfDir, "documents").select(
-            concat(lit("urn:link:"), did.cast("string")).as("record_id"),
-            lit("response").as("warc_type"),
-            linkFixtureBase(did).as("target_uri"),
-            lit("2026-01-01T00:00:00Z").as("warc_date"),
-            lit("application/http;msgtype=response").as("content_type"),
-            lit(200).as("http_status"),
-            lit("text/html").as("http_content_type"),
-            linkFixtureHtml(did).cast("binary").as("payload"))
+        Tables.read(s, sfDir, "documents").select(graft.SynthQueries.warcResponse(
+            concat(lit("urn:link:"), did.cast("string")), linkFixtureBase(did),
+            lit(200), "text/html", linkFixtureHtml(did)): _*)
           .repartition(4, pmod(did, lit(4L)))
           .write.format("warc").mode("append").option("path", out).save()
       }

@@ -30,23 +30,12 @@ object CapturePins {
     pinned.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       println(s"""    "$name" ->""")
-      println(s"""      "${escape(renderSql(df))}",""")
+      println(s"""      ${ParityHarness.jsonString(renderSql(df))},""")
     }
     println("    // --- END GENERATED ---")
     spark.stop()
     sys.exit(0)
   }
-
-  private def escape(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
 
   /** A DuckDB constant query reproducing `df`'s rows verbatim. */
   def renderSql(df: DataFrame): String = {

@@ -115,8 +115,11 @@ object ParityHarness {
     }
   }
 
-  /** JSON string escaping for error cells: backslash, quote, and all
-    * control characters (exception messages are routinely multi-line).
+  /** `s` as a JSON string literal: backslash, quote and every control
+    * character escaped (exception messages are routinely multi-line,
+    * and a tab or CR in an oracle's SQL would break a JSON reader). The
+    * one escaper of the parity reports, Bench's lines, Verify's
+    * oracle_sql.json and CapturePins' generated source.
     */
   def jsonString(s: String): String = {
     val b = new StringBuilder("\"")

@@ -14,9 +14,10 @@ import graft.ops._
   * 1e9+7 over the one-row frame, captured with the per-seam
   * `mapPartitions` copies that `graft.runtime.PerRow` replaced. Those
   * copies failed the task on a null payload in `Tar.tarEntries` and
-  * `ContentRouter.routeMeta`; both now append null, like every other
-  * seam. A `Fails` pin is a payload the seam rejects loudly (a
-  * malformed tar).
+  * `ContentRouter.routeMeta`, and `Multimodal.decodeFeatures` gave it
+  * the stub's made-up dims and features; all three now append null,
+  * like every other seam. A `Fails` pin is a payload the seam rejects
+  * loudly (a malformed tar).
   */
 class PerRowSeamSpec extends AnyFunSuite {
   private lazy val spark = SparkSessionFixture.spark
@@ -173,7 +174,7 @@ class PerRowSeamSpec extends AnyFunSuite {
     Seam("Multimodal.decodeFeatures", ImageDedup.hashCorpusPng(5L, 0),
       Multimodal.decodeFeatures(_, "p"),
       "p_decoded:struct<width:int,height:int,channels:int,features:array<float!>>",
-      Seq(Some(918578517L), Some(481737372L), Some(559503697L), Some(299110344L))),
+      Seq(Some(918578517L), Some(481737372L), Some(559503697L), AllNull)),
     Seam("Multimodal.resizeImages", ImageDedup.hashCorpusPng(5L, 0),
       Multimodal.resizeImages(_, "p", 4, 3),
       "p_resized:binary",

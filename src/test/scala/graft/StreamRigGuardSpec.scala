@@ -10,8 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `processAllAvailable` is left. A read-only stream input is written
   * once per sf dir through `StreamScope.fixtureFiles`; only the restart
   * rigs write their files per replay. The scope's state width is the
-  * only shuffle-partition pin. nanosAsLong is set in one place in all of
-  * `src/main` (graft.runtime.Tables).
+  * only shuffle-partition pin. The rigs' shared pipelines (the split-file
+  * reader, the event-time prefix, the CUSUM, banded-index and crawl
+  * steps, the restart leg, the WARC response record) each have one
+  * definition. nanosAsLong is set in one place in all of `src/main`
+  * (graft.runtime.Tables).
   */
 class StreamRigGuardSpec extends AnyFunSuite {
 
@@ -26,11 +29,27 @@ class StreamRigGuardSpec extends AnyFunSuite {
   }
 
   test("read-only stream inputs are build-once fixtures") {
-    // the restart rigs' 8 per-incarnation writes, plus the scope's
-    // fixtureFiles and events sentinel
+    // the scope's fixtureFiles and events sentinel, plus landSplits' two
+    // phases of the split-file restart legs
     val n = "StreamFiles\\.write(Many|One)\\(".r.findAllMatchIn(sparkEntry).size
-    assert(n <= 10, s"$n StreamFiles.write sites; stage a read-only input " +
-      "through StreamScope.fixtureFiles")
+    assert(n <= 4, s"$n StreamFiles.write sites; stage a read-only input " +
+      "through StreamScope.fixtureFiles, a restart rig's through landSplits")
+  }
+
+  // each repeated rig building block and the one helper that owns it
+  Seq(
+    "option(\"maxFilesPerTrigger\"" -> "StreamScope.splitFiles",
+    "withWatermark(\"event_time\", \"1 hour\")" -> "eventTime",
+    "streamBandKeys(" -> "bandedIndex",
+    "new graft.streaming.CusumProcessor(" -> "cusumStream",
+    "new graft.streaming.FrontierProcessor" -> "frontier",
+    "restart must resume" -> "StreamScope.restart",
+    "lit(\"application/http;msgtype=response\")" -> "warcResponse"
+  ).foreach { case (needle, helper) =>
+    test(s"one site of $needle") {
+      val n = occurrences(needle)
+      assert(n <= 1, s"$n sites of $needle; use $helper")
+    }
   }
 
   test("nanosAsLong is set in one place") {
